@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Blocks until every listener event posted so far has been delivered, so
+  * listener-side counters are complete when a measured phase is read.
+  * Lives in Spark's package because the listener bus is `private[spark]`.
+  */
+object BusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
