@@ -4,9 +4,10 @@ import scala.collection.mutable
 
 object Bench {
 
-  /** The hot subset benchmarked at sf1 (10x the driver's sf0.1): the
-    * round-4 heaviest queries plus the full dedup family — the regime
-    * where plans, not scheduling, dominate the wall clock.
+  /** The sf1 (10x) subset: the heaviest plans at sf0.1 plus the full
+    * dedup family — the regime where plans, not scheduling, dominate the
+    * wall clock, and where each query's cost must stay about linear one
+    * decade up.
     */
   val HotQueries: Seq[String] = Seq(
     "q1_pricing", "q3_shipping", "q_top_customers", "q_asof",
@@ -15,45 +16,21 @@ object Bench {
     "q_minhash_sigs", "q_simhash_pairs", "q_containment", "q_cross_dedup",
     "q_line_dedup", "q_dup_stats", "q_source_sim", "q_leakage", "q_novelty",
     "q_semdedup", "q_pagerank", "q_ann_topk", "q_ann_ivf_kmeans",
-    // round-5 additions to the shingle/graph families
     "q_cdc_chunks", "q_winnow", "q_kcore",
-    // round-6 additions: the wedge join (Adamic-Adar) and the sample-
-    // bounded LSH audit (whose cost must stay FLAT as the corpus grows)
     "q_adamic", "q_lsh_tuning",
-    // round-8: RAKE phrase stats, BM25 batch retrieval, the iterative
-    // link-analysis pair. round-9: q_lof (brute all-pairs, 208.5 s at
-    // sf1 — n² by contract) is REPLACED by q_lof_scalable, the
-    // multi-probe candidate path a 100 TB pipeline actually runs; the
-    // brute definition stays oracle-checked at sf0.01 in Verify.
     "q_lof_scalable", "q_rake", "q_bm25_retrieve", "q_hits", "q_ppr",
-    // round-8 batch D-G corpus-scale plans: the NB token join
-    // (corpus x model), the row-local Mahalanobis projection (should
-    // scale ~linearly in vectors), and the fixed-step Newton Cox whose
-    // per-iteration cost must stay FLAT once the subject frame is built
     "q_nb", "q_mahalanobis", "q_cox",
-    // round-9: the round-8 statistical fleet's heaviest at sf0.1, never
-    // before measured at sf1 — the iterative fits (IPF raking,
-    // Bradley-Terry, Markov attribution), the two-pass LSH recall
-    // estimate, and the (now single-scan, pinned) isotropy report
     "q_rake_weights", "q_bradley_terry", "q_markov_attr",
     "q_capture_recapture", "q_isotropy",
-    // round-9 batch O-R heavies: 4-hop BFS over the word graph
-    // (frontier-join scaling), the double-lead sequence motifs, the
-    // positional BM25 rerank, and the bucketed embedding drift
     "q_khop", "q_seq_patterns", "q_bm25_prox", "q_embed_drift",
-    // round-10: the five heaviest of the 34 new operators at sf0.1 —
-    // the corpus-melt bootstrap (×16), the full-corpus langId
-    // confusion, the BM25-backed ERR, the feature melt MI screen, and
-    // the digit-run Luhn scan; each must stay ~linear one decade up
     "q_boot_median", "q_cls_metrics", "q_err", "q_mi", "q_luhn")
 
-  /** The 100x (sf10) subset: the heaviest plans from the sf1 section —
-    * where quadratic failure modes (bucket skew, pair explosion) would
-    * finally show. Kept small because each query runs on ~1.7 GB.
-    * LIST ORDER IS EXECUTION ORDER, cheapest-first by the round-11
-    * measurements: if the time budget runs out mid-section, the skipped
-    * tail is the expensive queries that already carry multi-round
-    * history, not the cheap ones that would otherwise never get a number.
+  /** The sf10 (100x) subset: the heaviest plans of the sf1 section, where
+    * quadratic failure modes (bucket skew, pair explosion) would finally
+    * show. Kept small because each query reads ~1.7 GB.
+    * LIST ORDER IS EXECUTION ORDER, cheapest first: if the time budget
+    * runs out mid-section, the skipped tail is the expensive queries, not
+    * the cheap ones that would otherwise never get a number.
     */
   val Sf10Queries: Seq[String] = Seq(
     "q1_pricing", "q_minhash_sigs", "q_dedup_exact", "q_cross_dedup",
@@ -64,25 +41,15 @@ object Bench {
     "q_curation", "q_containment", "q_dedup_cluster", "q_lof_scalable",
     "q_dedup_jaccard")
 
-  /** The 1000x (sf100, 5M documents) subset — the SCALE-PATH dedup
-    * operators plus four non-dedup representatives (round-10 verdict
-    * item 3). Exact shingle-jaccard/containment are NOT here by
-    * measurement, not oversight: at 5M docs thousands of shingles sit
-    * just under the df=1000 drop-cap, each contributing up to
-    * C(1000,2) candidate pairs — a multi-hundred-GB shuffle that
-    * exceeds single-node spill capacity (measured: >90 GB before ENOSPC).
-    * That blow-up is exactly why the documented 100 TB architecture
-    * hands this regime to banded MinHash (cluster-sized buckets,
-    * oversized buckets dropped whole): the section measures the
-    * operators a real pipeline would actually run at this scale.
-    * q_lof_scalable is NOT here by arithmetic: self-kNN is
-    * (nBits+1)·n^1.5 pairs under the sizing rule — at 2M vectors that is
-    * ~3×10^10 scored pairs (≈ a TB-scale shuffle), distributable across
-    * a cluster but past this node's disk exactly like exact
-    * shingle-jaccard; its one-decade-further measurement runs in the
-    * sf10 section instead. Rows-only — no oracle at this size; the
-    * df-cap-bind evidence comes from [[graft.CapBindProbe]].
-    * LIST ORDER IS EXECUTION ORDER, cheapest-first (see Sf10Queries).
+  /** The sf100 (1000x, 5M documents) subset: the operators a real
+    * pipeline runs at this scale — the scale-path dedup operators plus
+    * four non-dedup representatives. Exact shingle-jaccard/containment
+    * and q_lof_scalable are left out because their candidate-pair
+    * shuffles exceed one node's disk at this size (measured: >90 GB
+    * before ENOSPC for shingle-jaccard); banded MinHash is the path for
+    * this regime. Rows-only — no oracle at this size; the df-cap-bind
+    * evidence comes from [[graft.CapBindProbe]].
+    * LIST ORDER IS EXECUTION ORDER, cheapest first (see Sf10Queries).
     */
   val Sf100Queries: Seq[String] = Seq(
     "q_line_dedup", "q_url_dedup", "q_cross_dedup", "q_simhash_pairs",

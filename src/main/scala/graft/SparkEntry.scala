@@ -1,18 +1,14 @@
 package graft
 
-import graft.ann.{Embeddings, KMeans, Similarity}
-import graft.dedup.Dedup
-import graft.meds.{Meds, MedsPipeline}
-import graft.operators._
-import graft.pipeline.{Curation, Influence, Labels, Packing, Sampling, Selection, Splits}
-import graft.sources.Tables
-import graft.text.{Bm25, Chunker, Collocations, InvertedIndex, TextFunctions, Tfidf, WordVocab}
+import graft.catalog._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Driver contract: one `queries` entry per implemented operator from
-  * SURVEY.md §2, and for each one an ANSI-SQL oracle (DuckDB dialect) the
-  * driver hash-compares against on the same parquet tables.
+/** The query catalog: one [[QueryDef]] per implemented operator from
+  * SURVEY.md §2. Each definition carries its Spark builder and, next to
+  * it, the ANSI-SQL oracle (DuckDB dialect) whose result on the same
+  * parquet tables the builder's output is hash-compared with. Definitions
+  * live in one object per operator family under `graft/catalog/`; this
+  * object only indexes them.
   *
   * Verification conventions (SURVEY.md §5):
   *   - every aggregate / computed column is aliased identically on both
@@ -26,11593 +22,28 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  // ---------------------------------------------------------------- inputs
+  /** Every family's definitions, one entry per family object. */
+  val families: Seq[Seq[QueryDef]] = Seq(
+    MedsQueries.all,
+    DedupQueries.all,
+    AnnQueries.all,
+    TextQueries.all,
+    CurationQueries.all,
+    RelationalQueries.all,
+    TemporalQueries.all,
+    QualityQueries.all,
+    StatsQueries.all,
+    GraphQueries.all)
 
-  private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
+  val all: Seq[QueryDef] = families.flatten
 
-  /** events viewed as a MEDS measurement table. */
-  private def meds(s: SparkSession, dir: String): DataFrame = Meds.fromEvents(ev(s, dir))
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map(q => q.name -> q.build).toMap
 
-  /** Same, with event_id retained for row-unique verification output. */
-  private def medsE(s: SparkSession, dir: String): DataFrame =
-    ev(s, dir).select(
-      col("event_id"),
-      col("user_id").cast("long").as("patient_id"),
-      col("ts").as("time"),
-      col("event_type").as("code"),
-      col("value").cast("double").as("numeric_value")
-    )
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.documents(s, dir)
-
-  /** Word-adjacency edge table over the documents corpus (consecutive
-    * token pairs) — the shared input of the graph family
-    * (q_pagerank / q_triangles / q_clustering_coef / q_kcore).
-    */
-  private def wordAdjacencyEdges(s: SparkSession, dir: String): DataFrame = {
-    val toks = docs(s, dir)
-      .select(TextFunctions.wordTokens(col("text")).as("ts"))
-      .filter(size(col("ts")) >= 2)
-    toks.select(explode(zip_with(
-      slice(col("ts"), lit(1), size(col("ts")) - 1),
-      slice(col("ts"), lit(2), size(col("ts")) - 1),
-      (a, b) => struct(a.as("src"), b.as("dst")))).as("e"))
-      .select(col("e.src"), col("e.dst"))
-  }
-  private def emb(s: SparkSession, dir: String): DataFrame = Tables.embeddings(s, dir)
-
-  /** Fixed stride-permutation rotation for q_opq_encode: output dim j
-    * reads input dim 37·j mod 64 (37 ⊥ 64 ⇒ a permutation, hence
-    * orthonormal). y = x·R with R(i)(j) = 1 iff i = 37j mod 64 — the
-    * matrix is SQL-replicable as pure list indexing, unlike a learned
-    * Procrustes rotation, so the apply/encode path gets a hash oracle.
-    */
-  private val stridePerm64: IndexedSeq[IndexedSeq[Double]] =
-    IndexedSeq.tabulate(64, 64)((i, j) => if (i == (37 * j) % 64) 1.0 else 0.0)
-
-  private def timeUs(c: String = "time"): org.apache.spark.sql.Column =
-    unix_micros(col(c)).as("time_us")
-
-  // ------------------------------------------------------- shared SQL text
-
-  /** The nine code-metadata aggregations (DuckDB dialect), matching
-    * [[CodeMetadata.aggregations]] alias-for-alias.
-    */
-  private val P = "value IS NOT NULL AND NOT isnan(value)"
-  private val aggColsSql: String =
-    s"""count(DISTINCT user_id) AS "code/n_patients",
-       |count(*) AS "code/n_occurrences",
-       |count(DISTINCT CASE WHEN $P THEN user_id END) AS "values/n_patients",
-       |count(CASE WHEN $P THEN 1 END) AS "values/n_occurrences",
-       |count(CASE WHEN $P AND round(value)=value THEN 1 END) AS "values/n_ints",
-       |CAST(coalesce(sum(CASE WHEN $P THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS "values/sum",
-       |CAST(coalesce(sum(CASE WHEN $P THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS "values/sum_sqd",
-       |min(CASE WHEN $P THEN value END) AS "values/min",
-       |max(CASE WHEN $P THEN value END) AS "values/max"""".stripMargin
-
-  /** Per-code mean/std CTEs (m, st) shared by occlude/normalize oracles. */
-  private val statsCtes: String =
-    s"""m AS (SELECT event_type AS code,
-       |  count(CASE WHEN $P THEN 1 END) AS n,
-       |  CAST(coalesce(sum(CASE WHEN $P THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s,
-       |  CAST(coalesce(sum(CASE WHEN $P THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2
-       | FROM events GROUP BY 1),
-       |st AS (SELECT code, s/n AS mean, sqrt(greatest(s2/n - (s/n)*(s/n), 0)) AS std FROM m)""".stripMargin
-
-  /** Distinct (id, md5-derived shingle hash) 5-gram table over documents
-    * (tk, sh0, shh CTEs) — matches [[Dedup.shingleHashTable]].
-    */
-  private val shingleCtes: String =
-    s"""tk AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-       |sh0 AS (SELECT id, unnest(CASE WHEN len(toks)>=5 THEN list_transform(range(1, len(toks)-3), i -> array_to_string(toks[i:i+4],' ')) ELSE [] END) AS shingle FROM tk),
-       |shh AS (SELECT DISTINCT id, ${h32("shingle")} AS sh FROM sh0)""".stripMargin
-
-  /** Recursive transitive closure of the 0.5-jaccard pair graph with a
-    * final `clusters(id, cluster_id)` CTE — shared by the clustering and
-    * survivor-policy oracles.
-    */
-  private val closureCtes: String =
-    s"""$shingleCtes,
-       |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-       |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-       |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2),
-       |p AS (SELECT ia, ib FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
-       |      WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.5),
-       |e AS (SELECT ia AS src, ib AS dst FROM p UNION SELECT ib, ia FROM p),
-       |reach AS (SELECT src AS id, src AS r FROM e UNION SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-       |clusters AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
-
-  /** Bernoulli-NB train+score CTEs ending in
-    * `scored(id, label, class, log_post, posterior)` — matches
-    * [[graft.text.NaiveBayes.bernoulliNb]] on the length-bucket label;
-    * shared by the q_nb and q_label_noise oracles.
-    */
-  private val nbScoredCtes: String =
-    """base AS (SELECT doc_id AS id, CASE WHEN n_chars >= 300 THEN 'long' ELSE 'short' END AS label,
-      |    list_distinct(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS ws FROM documents),
-      |pres AS (SELECT id, label, unnest(ws) AS w FROM base),
-      |cls AS (SELECT label, count(*) AS nc FROM base GROUP BY 1),
-      |tot AS (SELECT count(*) AS n FROM base),
-      |voc AS (SELECT DISTINCT w FROM pres),
-      |wcn AS (SELECT w, label, count(*) AS dw FROM pres GROUP BY 1, 2),
-      |grid AS (SELECT voc.w, cls.label AS class, cls.nc, coalesce(wcn.dw, 0) AS dw
-      |  FROM voc CROSS JOIN cls LEFT JOIN wcn ON wcn.w = voc.w AND wcn.label = cls.label),
-      |pp AS (SELECT w, class,
-      |    (CAST(dw AS DOUBLE) + CAST(1 AS DOUBLE)) / (CAST(nc AS DOUBLE) + CAST(2 AS DOUBLE)) AS p FROM grid),
-      |model AS (SELECT w, class,
-      |    floor((ln(p) - ln(CAST(1 AS DOUBLE) - p)) * 1000000 + 0.5) / 1000000 AS wt,
-      |    floor(ln(CAST(1 AS DOUBLE) - p) * 1000000 + 0.5) / 1000000 AS l1p FROM pp),
-      |cc AS (SELECT class, CAST(sum(CAST(l1p AS DECIMAL(38,6))) AS DOUBLE) AS s FROM model GROUP BY 1),
-      |cconst AS (SELECT cc.class, s + ln(CAST(nc AS DOUBLE) / CAST(n AS DOUBLE)) AS cst
-      |  FROM cc JOIN cls ON cc.class = cls.label, tot),
-      |dc AS (SELECT p.id, p.label, m.class, CAST(sum(CAST(m.wt AS DECIMAL(38,6))) AS DOUBLE) AS mm
-      |  FROM pres p JOIN model m ON p.w = m.w GROUP BY 1, 2, 3),
-      |lp AS (SELECT id, label, dc.class, floor((cst + mm) * 1000000 + 0.5) / 1000000 AS log_post
-      |  FROM dc JOIN cconst ON dc.class = cconst.class),
-      |sm AS (SELECT *, max(log_post) OVER (PARTITION BY id) AS mx FROM lp),
-      |e AS (SELECT *, floor(exp(log_post - mx) * 1000000 + 0.5) / 1000000 AS ee FROM sm),
-      |dn AS (SELECT *, CAST(sum(CAST(ee AS DECIMAL(38,6))) OVER (PARTITION BY id) AS DOUBLE) AS den FROM e),
-      |scored AS (SELECT id, label, class, log_post, floor(ee / den * 1000000 + 0.5) / 1000000 AS posterior FROM dn)""".stripMargin
-
-  /** Cox oracle: KM-style spans + per-day event stats + `iters` staged
-    * Newton CTEs — mirrors [[graft.operators.Survival.coxPh]] on the
-    * [[coxSubjects]] frame. Emits CTEs ending in `ui$iters` (u, i, ll
-    * evaluated AT the final beta) and `b$iters` (the final beta).
-    */
-  private def coxCtes(iters: Int): String = {
-    def r6(e: String) = graft.functions.Portable.r6Sql(e)
-    def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-    val head =
-      s"""sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
-         |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
-         |    max(epoch_us(ts)) AS tl,
-         |    ${r6(s"${dsum("value")} / CAST(count(*) AS DOUBLE)")} AS x
-         |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-         |subj AS (SELECT CAST(floor(CAST(coalesce(te, tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-         |    te IS NOT NULL AS obs, x FROM sp),
-         |evd AS (SELECT t_day, count(CASE WHEN obs THEN 1 END) AS d,
-         |    coalesce(${dsum("CASE WHEN obs THEN x END")}, 0.0) AS sx FROM subj GROUP BY 1),
-         |b0 AS (SELECT CAST(0.0 AS DOUBLE) AS beta)""".stripMargin
-    // step k: day totals at b{k} -> reverse-cumulative risk sums ->
-    // one-row (u, i, ll); the Newton update to b{k+1} is emitted
-    // separately so the LAST step can evaluate AT the final beta
-    def eval(k: Int): String = {
-      val rev = "ORDER BY t_day ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
-      s"""w$k AS (SELECT s.t_day, ${r6("exp(b.beta * s.x)")} AS w, s.x AS x FROM subj s, b$k b),
-         |day$k AS (SELECT t_day, ${dsum("w")} AS w0, ${dsum(r6("w * x"))} AS w1,
-         |    ${dsum(r6("w * x * x"))} AS w2 FROM w$k GROUP BY 1),
-         |rs$k AS (SELECT dy.t_day, e.d, e.sx,
-         |    CAST(sum(CAST(dy.w0 AS DECIMAL(38,6))) OVER ($rev) AS DOUBLE) AS s0,
-         |    CAST(sum(CAST(dy.w1 AS DECIMAL(38,6))) OVER ($rev) AS DOUBLE) AS s1,
-         |    CAST(sum(CAST(dy.w2 AS DECIMAL(38,6))) OVER ($rev) AS DOUBLE) AS s2
-         |  FROM day$k dy JOIN evd e USING (t_day)),
-         |ui$k AS (SELECT
-         |    coalesce(${dsum(r6("sx - CAST(d AS DOUBLE) * s1 / s0"))}, 0.0) AS u,
-         |    coalesce(${dsum(r6("CAST(d AS DOUBLE) * (s2 / s0 - (s1 / s0) * (s1 / s0))"))}, 0.0) AS i,
-         |    coalesce(${dsum(r6("b.beta * sx - CAST(d AS DOUBLE) * ln(s0)"))}, 0.0) AS ll
-         |  FROM rs$k CROSS JOIN b$k b WHERE d > 0)""".stripMargin
-    }
-    def update(k: Int): String =
-      s"""b${k + 1} AS (SELECT CASE WHEN ui.i > 0 THEN ${r6("b.beta + ui.u / ui.i")}
-         |    ELSE b.beta END AS beta FROM ui$k ui, b$k b)""".stripMargin
-    val steps = (0 until iters).flatMap(k => Seq(eval(k), update(k)))
-    (head +: steps :+ eval(iters)).mkString(",\n")
-  }
-
-  /** Logistic-GD oracle: [[logitDocs]] features + `iters` staged
-    * gradient steps (lr 0.5) on label `yExpr` — mirrors
-    * [[graft.operators.Logistic.fitGd]]. Emits CTEs ending in
-    * `cb$iters` (c0/c1/c2) and the scoring pass `p$iters`
-    * (id, source, n_chars, y, x1, x2, p).
-    */
-  /** [[logitDocs]] as oracle CTEs ending in `ld(id, source, n_chars,
-    * y, x1, x2)` — shared by the logistic-GD oracles and q_stump.
-    */
-  private def logitDocsCtes(yExpr: String): String = {
-    def r6(e: String) = graft.functions.Portable.r6Sql(e)
-    s"""lw AS (SELECT *, len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nw
-       |  FROM documents),
-       |ld AS (SELECT doc_id AS id, source, n_chars, CAST(($yExpr) AS INT) AS y,
-       |    ${r6("CAST(nw AS DOUBLE) / 100.0")} AS x1,
-       |    CASE WHEN nw > 0 THEN ${r6("CAST(n_chars AS DOUBLE) / (CAST(nw AS DOUBLE) * 10.0)")}
-       |      ELSE 0.0 END AS x2
-       |  FROM lw)""".stripMargin
-  }
-
-  private def logitCtes(yExpr: String, iters: Int): String = {
-    def r6(e: String) = graft.functions.Portable.r6Sql(e)
-    def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-    val head =
-      s"""${logitDocsCtes(yExpr)},
-         |cb0 AS (SELECT CAST(0.0 AS DOUBLE) AS c0, CAST(0.0 AS DOUBLE) AS c1, CAST(0.0 AS DOUBLE) AS c2)""".stripMargin
-    def score(k: Int): String =
-      s"""p$k AS (SELECT id, source, n_chars, y, x1, x2,
-         |    ${r6("1.0 / (1.0 + exp(-(b.c0 * 1.0 + b.c1 * x1 + b.c2 * x2)))")} AS p
-         |  FROM ld, cb$k b)""".stripMargin
-    def step(k: Int): String =
-      s"""${score(k)},
-         |g$k AS (SELECT count(*) AS n, ${dsum(r6("(p - CAST(y AS DOUBLE)) * 1.0"))} AS g0,
-         |    ${dsum(r6("(p - CAST(y AS DOUBLE)) * x1"))} AS g1,
-         |    ${dsum(r6("(p - CAST(y AS DOUBLE)) * x2"))} AS g2 FROM p$k),
-         |cb${k + 1} AS (SELECT ${r6("b.c0 - 0.5 * g.g0 / CAST(g.n AS DOUBLE)")} AS c0,
-         |    ${r6("b.c1 - 0.5 * g.g1 / CAST(g.n AS DOUBLE)")} AS c1,
-         |    ${r6("b.c2 - 0.5 * g.g2 / CAST(g.n AS DOUBLE)")} AS c2
-         |  FROM g$k g, cb$k b)""".stripMargin
-    (head +: (0 until iters).map(step) :+ score(iters)).mkString(",\n")
-  }
-
-  /** The classical-decomposition CTE chain (hourly buckets → 2×12 MA
-    * trend → phase means → centered seasonal, mirrors
-    * [[Seasonal.decomposeBuckets]] at period 24) — shared by the
-    * q_decompose and q_season_strength oracles. Exposes CTEs `de`
-    * (event_type, bk, phase, v, trend, detr) and `se` (event_type,
-    * phase, seasonal).
-    */
-  private val decomposeCtesSql: String =
-    """b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS DOUBLE) AS v
-      |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-      |t AS (SELECT event_type, bk, v,
-      |        (epoch_us(bk) // 3600000000) % 24 AS phase,
-      |        lag(v, 12) OVER w AS l, lead(v, 12) OVER w AS r,
-      |        sum(v) OVER (PARTITION BY event_type ORDER BY bk
-      |          ROWS BETWEEN 11 PRECEDING AND 11 FOLLOWING) AS si,
-      |        count(v) OVER (PARTITION BY event_type ORDER BY bk
-      |          ROWS BETWEEN 11 PRECEDING AND 11 FOLLOWING) AS ci
-      |      FROM b WINDOW w AS (PARTITION BY event_type ORDER BY bk)),
-      |dd AS (SELECT event_type, bk, phase, v,
-      |        CASE WHEN l IS NOT NULL AND r IS NOT NULL AND ci = 23
-      |          THEN ((l + r) * 0.5 + si) / 24.0 END AS trend
-      |      FROM t),
-      |de AS (SELECT *, v - trend AS detr FROM dd),
-      |pm AS (SELECT event_type, phase,
-      |        CASE WHEN count(detr) > 0 THEN
-      |          CAST(sum(CAST(floor(detr * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-      |            / CAST(count(detr) AS DOUBLE) END AS sp
-      |      FROM de GROUP BY 1, 2),
-      |ctr AS (SELECT event_type,
-      |        CASE WHEN count(sp) > 0 THEN
-      |          CAST(sum(CAST(floor(sp * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-      |            / CAST(count(sp) AS DOUBLE) END AS c
-      |      FROM pm GROUP BY 1),
-      |se AS (SELECT pm.event_type, phase, sp - c AS seasonal FROM pm JOIN ctr USING (event_type))""".stripMargin
-
-  /** Universal-hash minhash aggregate list (matches [[Dedup.minhashSignatures]]). */
-  private def minhashAggSql(k: Int, alias: Int => String): String =
-    (0 until k).map { j =>
-      val (a, b) = Dedup.MinhashParams(j)
-      s"min((sh*$a + $b) % ${Dedup.MinhashPrime}) AS ${alias(j)}"
-    }.mkString(", ")
-
-  /** md5-derived 32-bit hash (matches [[TextFunctions.md5Hash32]]). */
-  private def h32(expr: String): String =
-    s"CAST(concat('0x', substr(md5($expr),1,8)) AS BIGINT)"
-
-  /** Strict left-to-right 64-dim dot product (matches [[Similarity.dot]]). */
-  private def dotSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> CAST($a[i] AS DOUBLE)*CAST($b[i] AS DOUBLE))), (x,y) -> x+y)"
-
-  /** Strict left-to-right squared-L2 distance (matches [[KMeans.sqDist]]). */
-  private def sqDistSql(a: String, b: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> (CAST($a[i] AS DOUBLE)-CAST($b[i] AS DOUBLE))*(CAST($a[i] AS DOUBLE)-CAST($b[i] AS DOUBLE)))), (x,y) -> x+y)"
-
-  /** [[sqDistSql]] over the first `n` elements (PQ sub-vector blocks). */
-  private def sqDistSqlN(a: String, b: String, n: Int): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,${n + 1}), i -> (CAST($a[i] AS DOUBLE)-CAST($b[i] AS DOUBLE))*(CAST($a[i] AS DOUBLE)-CAST($b[i] AS DOUBLE)))), (x,y) -> x+y)"
-
-  /** Hash-seeded k=8 init centroids (matches [[KMeans.initCentroids]]). */
-  private val kmeansInitCte: String =
-    s"""c0 AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS BIGINT) AS cid, embedding
-       |  FROM (SELECT vec_id, embedding, ${h32("concat('graft','|',CAST(vec_id AS VARCHAR))")} AS h
-       |        FROM embeddings ORDER BY h, vec_id LIMIT 8))""".stripMargin
-
-  /** [[kmeansInitCte]] with q_semdedup's corpus-scaled k (~250 vectors
-    * per cluster, floor 8) — identical to LIMIT 8 at the driver's oracle
-    * scales, and keeps the oracle contract valid on scaled bench data.
-    */
-  private val kmeansInitScaledCte: String =
-    s"""c0 AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS BIGINT) AS cid, embedding
-       |  FROM (SELECT vec_id, embedding, ${h32("concat('graft','|',CAST(vec_id AS VARCHAR))")} AS h
-       |        FROM embeddings ORDER BY h, vec_id
-       |        LIMIT greatest(8, (SELECT count(*) FROM embeddings) // 250)))""".stripMargin
-
-  private def cosSql(a: String, b: String): String =
-    s"${dotSql(a, b)}/(sqrt(${dotSql(a, a)})*sqrt(${dotSql(b, b)}))"
-
-  /** Prefix-truncated dot/cosine over the first `n` dims (matches the
-    * sliced-vector path of [[graft.ann.Embeddings.truncationFidelity]]).
-    */
-  private def dotSqlN(a: String, b: String, n: Int): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,${n + 1}), i -> CAST($a[i] AS DOUBLE)*CAST($b[i] AS DOUBLE))), (x,y) -> x+y)"
-  private def cosSqlN(a: String, b: String, n: Int): String =
-    s"${dotSqlN(a, b, n)}/(sqrt(${dotSqlN(a, a, n)})*sqrt(${dotSqlN(b, b, n)}))"
-
-  /** Sign-bit cell over the first 8 dims (matches [[Similarity.signBitCell]]). */
-  private val cellSql: String =
-    (0 until 8).map(d => s"(CASE WHEN embedding[${d + 1}]>0 THEN ${1L << d} ELSE 0 END)").mkString("+")
-
-  /** Sign-bit cell over the first `n` dims of `col` (matches
-    * [[Similarity.signBitCell]] with nBits = n).
-    */
-  private def cellSqlN(c: String, n: Int): String =
-    (0 until n).map(d => s"(CASE WHEN $c[${d + 1}]>0 THEN ${1L << d} ELSE 0 END)").mkString("+")
-
-  /** The LOF k=5 tail over a `d(id, nb, dist)` candidate-distance CTE —
-    * kNN rank, k-distance, reachability, lrd, lof (mirrors
-    * [[graft.ann.Lof.lofFromScored]]); shared by the exact q_lof oracle
-    * (all-pairs `d`) and the q_lof_scalable oracle (probe-cell `d`).
-    */
-  private val lofTailSql: String =
-    """r AS (SELECT id, nb, dist, row_number() OVER (PARTITION BY id ORDER BY dist, nb) AS rk FROM d),
-      |knn AS (SELECT id, nb, dist FROM r WHERE rk <= 5),
-      |kd AS (SELECT id, max(dist) AS kdist FROM knn GROUP BY 1),
-      |reach AS (SELECT knn.id, knn.nb, greatest(kd.kdist, knn.dist) AS rd
-      |  FROM knn JOIN kd ON kd.id = knn.nb),
-      |lrd0 AS (SELECT id,
-      |    CAST(sum(CAST(floor(rd * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-      |      / CAST(count(*) AS DOUBLE) AS mr
-      |  FROM reach GROUP BY 1),
-      |lr AS (SELECT id, CASE WHEN mr > 0 THEN CAST(1 AS DOUBLE) / mr END AS lrd FROM lrd0),
-      |lf0 AS (SELECT knn.id, l2.lrd AS lrd_nb, l1.lrd AS lrd
-      |  FROM knn JOIN lr l2 ON l2.id = knn.nb JOIN lr l1 ON l1.id = knn.id),
-      |lf AS (SELECT id, max(lrd) AS lrd,
-      |    CASE WHEN count(*) = count(lrd_nb / lrd) THEN
-      |      CAST(sum(CAST(floor(lrd_nb / lrd * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-      |        / CAST(count(lrd_nb / lrd) AS DOUBLE) END AS lofraw
-      |  FROM lf0 GROUP BY 1)
-      |SELECT lf.id AS vec_id,
-      |  floor(kd.kdist * 1000000 + 0.5) / 1000000 AS k_dist,
-      |  floor(lf.lrd * 1000000 + 0.5) / 1000000 AS lrd,
-      |  CASE WHEN lf.lrd IS NOT NULL THEN floor(lofraw * 1000000 + 0.5) / 1000000 END AS lof
-      |FROM lf JOIN kd ON kd.id = lf.id""".stripMargin
-
-  /** The lang-ID detection SELECT (doc_id, lang_pred), DuckDB dialect —
-    * shared by the q_lang_id oracle and the q_kappa agreement oracle
-    * (which nests it as a CTE body; DuckDB accepts WITH inside a CTE).
-    */
-  private def langIdSelectSql: String = {
-    val langs = TextFunctions.Stopwords.map(_._1)
-    val hitCols = langs
-      .map(l => s"len(list_filter(toks, x -> list_contains(${stopwordSqlLists(l)}, x))) AS h_$l")
-      .mkString(", ")
-    val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
-    val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
-    s"""WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-       |h AS (SELECT doc_id, $hitCols FROM t)
-       |SELECT doc_id, CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang_pred FROM h""".stripMargin
-  }
-
-  private val stopwordSqlLists: Map[String, String] =
-    TextFunctions.Stopwords.toMap.map { case (l, ws) => l -> ws.map(w => s"'$w'").mkString("[", ",", "]") }
-
-  // ---------------------------------------------------------------- driver
+  val oracleSql: Map[String, String] =
+    all.flatMap(q => q.oracleSql.map(q.name -> _)).toMap
 
   /** Flagship: full code-metadata aggregation on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_agg_code_metadata")(spark, "/root/testdata/sf0.001")
-
-  /** Reference-shaped declarative stage list (configs/preprocess.yaml
-    * structure) reproducing exactly what q_meds_pipeline composes in code;
-    * checked in as configs/preprocess_example.yaml for users.
-    */
-  private val MedsPipelineYaml: String =
-    """stages:
-      |  - filter_patients
-      |  - add_time_derived_measurements
-      |  - fit_outlier_detection
-      |  - occlude_outliers
-      |  - fit_normalization
-      |  - fit_vocabulary_indices
-      |  - normalization
-      |stage_configs:
-      |  filter_patients:
-      |    min_measurements_per_patient: 60
-      |  add_time_derived_measurements:
-      |    age:
-      |      DOB_code: null            # unset the MEDS_BIRTH default -> first-event anchor
-      |      age_unit: "yrs"
-      |    time_of_day:
-      |      time_of_day_code: "time_of_day"
-      |  occlude_outliers:
-      |    stddev_cutoff: 3.0
-      |    drop_is_inlier: true
-      |""".stripMargin
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -------------------------------------------- MEDS core (SURVEY §2 1-20)
-    "q_agg_code_metadata" -> ((s, dir) => CodeMetadata.aggregate(meds(s, dir))),
-
-    // the reference's explicit cross-shard REDUCE: aggregate two
-    // patient-disjoint shards separately, then merge the partials — must
-    // hash-match a direct whole-table aggregation (same oracle SQL).
-    "q_agg_merge" -> { (s, dir) =>
-      val m = meds(s, dir)
-      val shards = Seq(
-        m.filter(pmod(col("patient_id"), lit(2)) === 0),
-        m.filter(pmod(col("patient_id"), lit(2)) === 1))
-      CodeMetadata.mergePartials(shards.map(CodeMetadata.aggregate(_)))
-    },
-
-    "q_agg_all_codes" -> ((s, dir) =>
-      CodeMetadata.aggregate(meds(s, dir), summarizeOverAllCodes = true)),
-
-    "q_filter_measurements" -> { (s, dir) =>
-      val df = medsE(s, dir)
-      val meta = CodeMetadata.aggregate(meds(s, dir))
-      Filters
-        .filterMeasurements(df, meta, minPatientsPerCode = Some(100), minOccurrencesPerCode = Some(2000))
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"), col("numeric_value"))
-    },
-
-    "q_filter_patients_meas" -> ((s, dir) =>
-      Filters
-        .filterPatientsByNumMeasurements(medsE(s, dir), 60)
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"), col("numeric_value"))),
-
-    "q_filter_patients_events" -> ((s, dir) =>
-      Filters
-        .filterPatientsByNumEvents(medsE(s, dir), 60)
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"), col("numeric_value"))),
-
-    "q_add_age" -> ((s, dir) =>
-      TimeDerived
-        .ageEvents(meds(s, dir), TimeDerived.dobFromFirstEvent, "AGE", "years")
-        .select(col("patient_id"), timeUs(), col("code"), graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))),
-
-    "q_time_of_day" -> ((s, dir) =>
-      TimeDerived
-        .timeOfDayEvents(meds(s, dir))
-        .select(col("patient_id"), timeUs(), col("code"))),
-
-    "q_time_derived_stage" -> { (s, dir) =>
-      import TimeDerived.{AgeConfig, TimeOfDayConfig}
-      // "yrs" exercises normalizeTimeUnit alias resolution
-      TimeDerived
-        .addTimeDerivedMeasurements(
-          meds(s, dir),
-          Seq(AgeConfig(TimeDerived.dobFromFirstEvent, "AGE", "yrs"), TimeOfDayConfig()))
-        .select(
-          col("patient_id"), timeUs(), col("code"),
-          when(col("code") === "AGE", graft.functions.Portable.r6(col("numeric_value")))
-            .otherwise(col("numeric_value")).as("numeric_value"))
-    },
-
-    "q_meds_pipeline" -> { (s, dir) =>
-      import TimeDerived.{AgeConfig, TimeOfDayConfig}
-      MedsPipeline
-        .run(meds(s, dir), MedsPipeline.Config(
-          minMeasurementsPerPatient = Some(60),
-          timeDerived = Seq(AgeConfig(TimeDerived.dobFromFirstEvent, "AGE", "yrs"), TimeOfDayConfig()),
-          stddevCutoff = Some(3.0)))
-        .data
-        .select(col("patient_id"), timeUs(), col("code"),
-          graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))
-    },
-
-    // the SAME pipeline as q_meds_pipeline, but composed from a declarative
-    // reference-shaped YAML stage list through ConfigPipeline instead of
-    // Scala — proves the config interface reproduces the code-composed
-    // (oracle-verified) result bit-for-bit
-    "q_pipeline_config" -> { (s, dir) =>
-      graft.meds.ConfigPipeline
-        .run(meds(s, dir), MedsPipelineYaml)
-        .data
-        .select(col("patient_id"), timeUs(), col("code"),
-          graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))
-    },
-
-    "q_occlude_outliers" -> { (s, dir) =>
-      val meta = CodeMetadata.aggregate(meds(s, dir))
-      Outliers
-        .occludeOutliers(medsE(s, dir), meta, stddevCutoff = 1.5)
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"),
-          col("numeric_value"), col("numeric_value/is_inlier"))
-    },
-
-    "q_winsorize" -> ((s, dir) =>
-      Outliers
-        .winsorize(medsE(s, dir), lowerQ = 0.05, upperQ = 0.95, exact = true)
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"),
-          graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))),
-
-    "q_normalize" -> { (s, dir) =>
-      val meta = Vocabulary.lexicographicIndices(CodeMetadata.aggregate(meds(s, dir)))
-      Normalize
-        .normalize(meds(s, dir), meta)
-        .select(col("patient_id"), timeUs(), col("code"), graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))
-    },
-
-    "q_fit_vocab" -> ((s, dir) =>
-      Vocabulary
-        .lexicographicIndices(CodeMetadata.aggregate(meds(s, dir)))
-        .select(col("code"), col("code/vocab_index"))),
-
-    "q_fit_vocab_scalable" -> ((s, dir) =>
-      Vocabulary
-        .lexicographicIndicesScalable(CodeMetadata.aggregate(meds(s, dir)))
-        .select(col("code"), col("code/vocab_index"))),
-
-    "q_reorder_measurements" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val patterns = Seq("^signup$", "^purchase$", "^error$")
-      // Coarsen events to days so (patient, time) groups hold >1 measurement.
-      val df = medsE(s, dir).withColumn("time", date_trunc("day", col("time")))
-      val w = Window.partitionBy("patient_id", "time")
-        .orderBy(col("__code_order_idx"), col("code"), col("event_id"))
-      df.withColumn("__code_order_idx", Reorder.codeOrderIdx(patterns))
-        .withColumn("order_in_event", row_number().over(w).cast("long"))
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"), col("order_in_event"))
-    },
-
-    "q_tokenize_schema" -> ((s, dir) =>
-      Tokenize
-        .schemaExploded(meds(s, dir))
-        .select(col("patient_id"), unix_micros(col("start_time")).as("start_time_us"),
-          col("event_idx").cast("long").as("event_idx"), timeUs())),
-
-    "q_tokenize_seqs" -> ((s, dir) =>
-      Tokenize
-        .seqsExploded(meds(s, dir))
-        .select(col("patient_id"), timeUs(), col("n_measurements"), col("codes"),
-          graft.functions.Portable.r6(col("time_delta_days")).as("time_delta_days"))),
-
-    // Tensorization (§2 #14, the reference's convert_to_NRT) against the
-    // DuckDB oracle — codes are vocab-indexed (1-based lexicographic, 0
-    // reserved for padding per fit_vocabulary_indices.py:120), run
-    // through the REAL seqOfPatientEvents → toDense pipeline, then the
-    // dense+mask tensors explode back to one scalar row per
-    // (patient, event-slot, measurement-slot) so every padded cell,
-    // mask bit, truncation boundary and the leading-NaN time delta is
-    // hash-compared. Valid because the synthetic events have no
-    // (user, ts, event_type) ties at oracle scales (measured), so the
-    // struct sort orders are total in both engines; null values no
-    // longer matter either way — the oracle's list sort keys carry
-    // NULLS FIRST to match Spark's null-first struct ordering
-    // (round-12 ADVICE).
-    "q_tensorize" -> { (s, dir) =>
-      val m = meds(s, dir)
-      val vocab = Vocabulary
-        .lexicographicIndices(CodeMetadata.aggregate(m))
-        .select(col("code"), col("code/vocab_index"))
-      val indexed = m.join(vocab, Seq("code"))
-        .select(col("patient_id"), col("time"),
-          col("code/vocab_index").as("code"), col("numeric_value"))
-      val dense = graft.operators.Tensorize.toDense(
-        Tokenize.seqOfPatientEvents(indexed),
-        maxEvents = 8, maxMeasurementsPerEvent = 4)
-      dense
-        .select(col("patient_id"), col("n_events").cast("long").as("n_events"),
-          posexplode(arrays_zip(
-            col("time_delta_days"), col("event_mask"), col("code"),
-            col("code_mask"), col("numeric_value"), col("numeric_value_mask")))
-            .as(Seq("e", "z")))
-        .select(col("patient_id"), col("n_events"), col("e").cast("long").as("e"),
-          col("z.time_delta_days").as("__tdd"), col("z.event_mask").as("event_mask"),
-          posexplode(arrays_zip(
-            col("z.code"), col("z.code_mask"), col("z.numeric_value"),
-            col("z.numeric_value_mask"))).as(Seq("i", "w")))
-        .select(col("patient_id"), col("n_events"), col("e"),
-          col("i").cast("long").as("i"),
-          graft.functions.Portable.r6(col("__tdd")).as("time_delta_days"),
-          col("event_mask"),
-          col("w.code").as("code"), col("w.code_mask").as("code_mask"),
-          graft.functions.Portable.r6(col("w.numeric_value")).as("numeric_value"),
-          col("w.numeric_value_mask").as("numeric_value_mask"))
-    },
-
-    "q_shard_assign" -> ((s, dir) =>
-      Shard.splitByModulo(meds(s, dir), Seq("train" -> 8, "tuning" -> 1, "held_out" -> 1), 4)),
-
-    "q_convert_events" -> { (s, dir) =>
-      import Extract._
-      extractEvent(
-        ev(s, dir),
-        EventConfig(
-          patientId = "user_id",
-          time = Some("ts"),
-          code = Seq(CodeLit("EVENT"), CodeCol("event_type")),
-          numericValue = Some("value"),
-          extraCols = Map("event_id" -> "event_id")
-        )
-      ).select(col("event_id"), col("patient_id"), timeUs(), col("code"), col("numeric_value"))
-    },
-
-    // String timestamps in two different formats, parsed via the config's
-    // format list (reference in_format coalesce), plus text_value /
-    // categorical_value output columns.
-    "q_convert_multifmt" -> { (s, dir) =>
-      import Extract._
-      val raw = ev(s, dir).withColumn(
-        "ts_str",
-        when(col("event_id") % 2 === 0, date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS"))
-          .otherwise(date_format(col("ts"), "MM/dd/yyyy HH:mm:ss.SSSSSS"))
-      )
-      extractEvent(
-        raw,
-        EventConfig(
-          patientId = "user_id",
-          time = Some("ts_str"),
-          code = Seq(CodeLit("EVENT"), CodeCol("event_type")),
-          numericValue = Some("value"),
-          timeFormat = Some(Seq("yyyy-MM-dd HH:mm:ss.SSSSSS", "MM/dd/yyyy HH:mm:ss.SSSSSS")),
-          textValue = Some("props"),
-          categoricalValue = Some("event_type"),
-          extraCols = Map("event_id" -> "event_id")
-        )
-      ).select(col("event_id"), col("patient_id"), timeUs(), col("code"),
-        col("text_value"), col("categorical_value"), col("numeric_value"))
-    },
-
-    "q_merge_sort" -> { (s, dir) =>
-      val m = meds(s, dir)
-      val p1 = m.filter(col("code").isin("click", "view")).withColumn("channel", lit("web"))
-      val p2 = m.filter(col("code") === "purchase")
-      Extract
-        .mergeCohort(Seq(p1, p2, p2),
-          uniqueBy = Some(Seq("patient_id", "time", "code", "numeric_value", "channel")))
-        .select(col("patient_id"), timeUs(), col("code"), col("numeric_value"), col("channel"))
-    },
-
-    "q_code_metadata_join" -> { (s, dir) =>
-      import s.implicits._
-      val codes = CodeMetadata
-        .aggregate(meds(s, dir))
-        .select(col("code"), col(CodeMetadata.CodeNOccurrences).as("n_occurrences"))
-      val metadata = Seq(
-        ("click", "Click event"), ("view", "View event"),
-        ("purchase", "Purchase"), ("signup", "Signup")
-      ).toDF("code", "description")
-      Extract.attachCodeMetadata(codes, metadata)
-    },
-
-    // Two metadata sources with an overlapping code: descriptions concat
-    // with the separator, other metadata columns collect into sorted lists
-    // (emitted here as a joined string for engine-portable comparison).
-    "q_extract_metadata_multi" -> { (s, dir) =>
-      import s.implicits._
-      val codes = CodeMetadata.aggregate(meds(s, dir)).select(col("code"))
-      val m1 = Seq(("click", "Click event", 1), ("view", "View event", 2), ("purchase", "Purchase v1", 3))
-        .toDF("code", "description", "priority")
-      val m2 = Seq(("purchase", "Completed checkout"), ("signup", "Account created"))
-        .toDF("code", "description")
-      val multi = Extract.extractCodeMetadataMulti(Seq(m1, m2), descriptionSeparator = "; ")
-        .withColumn("priorities", array_join(col("priority").cast("array<string>"), ","))
-        .drop("priority")
-      Extract.attachCodeMetadata(codes, multi)
-        .select(col("code"), col("description"), col("priorities"))
-    },
-
-    "q_finalize" -> ((s, dir) =>
-      Meds
-        .finalizeData(medsE(s, dir))
-        .select(col("event_id"), col("patient_id"), timeUs(), col("code"), col("numeric_value"))),
-
-    "q_finalize_metadata" -> { (s, dir) =>
-      val meta = meds(s, dir)
-        .select(col("code")).distinct()
-        .withColumn("description", upper(col("code")))
-        .withColumn("parent_codes", concat(lit("evt//"), col("code"))) // scalar -> wrapped in list
-      Meds.finalizeMetadata(meta)
-        .select(col("code"), col("description"), try_element_at(col("parent_codes"), lit(1)).as("parent_code"))
-    },
-
-    "q_extract_dsl" -> { (s, dir) =>
-      import EventParser._
-      ev(s, dir).select(
-        col("event_id"),
-        col("user_id").cast("long").as("patient_id"),
-        unix_micros(col("ts")).as("time_us"),
-        toColumn(Str("EVENT//{event_type}")).as("code"),
-        toColumn(FirstValid(Seq(
-          Guarded(Map("event_type" -> "purchase"), Col("value")),
-          Literal(-1.0)
-        ))).as("numeric_value")
-      )
-    },
-
-    // --------------------------------------------- dedup (SURVEY §2 21-25)
-    "q_dedup_exact" -> ((s, dir) => Dedup.exact(docs(s, dir))),
-
-    "q_dup_spans" -> ((s, dir) => Dedup.duplicateSpans(docs(s, dir), w = 10)),
-
-    "q_dedup_jaccard" -> ((s, dir) =>
-      Dedup
-        .ngramJaccardPairs(docs(s, dir), threshold = 0.5, n = 5, maxDocFreq = 1000)
-        .select(col("id_a"), col("id_b"), graft.functions.Portable.r6(col("jaccard")).as("jaccard"))),
-
-    "q_dedup_cluster" -> ((s, dir) =>
-      Dedup
-        .connectedComponents(Dedup.ngramJaccardPairs(docs(s, dir), threshold = 0.5, n = 5, maxDocFreq = 1000))
-        .select(col("id"), col("label").as("cluster_id"))),
-
-    // retention policy composed on the cluster graph: survivors are the
-    // LONGEST doc per cluster, not the min-id canonical
-    "q_dedup_survivors" -> { (s, dir) =>
-      val d = docs(s, dir)
-      val clusters = Dedup.connectedComponents(
-        Dedup.ngramJaccardPairs(d, threshold = 0.5, n = 5, maxDocFreq = 1000))
-      Dedup
-        .keepBestPerCluster(
-          d.select(col("doc_id").as("id"), col("n_chars").cast("long").as("score")),
-          clusters, "score")
-        .select(col("cluster_id"), col("id"), col("score"))
-    },
-
-    // sliding-window document chunking (30-token windows, 10 overlap —
-    // sized so the corpus genuinely multi-chunks)
-    "q_chunk" -> ((s, dir) =>
-      Chunker.chunkByTokens(docs(s, dir), "doc_id", "text", chunkTokens = 30, overlapTokens = 10)),
-
-    "q_minhash_sigs" -> ((s, dir) => Dedup.minhashSignatures(docs(s, dir), numHashes = 8, n = 5)),
-
-    "q_dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashCandidatePairs(
-        Dedup.minhashSignatures(docs(s, dir), numHashes = 8, n = 5), numHashes = 8, numBands = 4)),
-
-    "q_simhash" -> ((s, dir) => Dedup.simhash(docs(s, dir), bits = 32)),
-
-    "q_simhash_pairs" -> ((s, dir) =>
-      Dedup
-        .simhashNearDupPairs(Dedup.simhash(docs(s, dir), bits = 32), bits = 32, maxHamming = 3)
-        .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))),
-
-    "q_embed_neardup" -> ((s, dir) =>
-      Similarity.embeddingNearDupPairs(emb(s, dir), threshold = 0.25)),
-
-    "q_srp_lsh" -> ((s, dir) =>
-      // 4 bands x 4 bits keeps buckets ~n/16 per band (scale-safe under
-      // the 1000 cap through 10x data). The LSH S-curve centers near
-      // cosine ~0.8; at this corpus's max pair cosine (~0.51) the output
-      // is the deterministic bucketed subset of the >=0.25 pairs — the
-      // honest LSH trade, identical in both engines.
-      graft.ann.Srp.srpLshPairs(emb(s, dir), threshold = 0.25)),
-
-    // ----------------------------------------- similarity (SURVEY §2 26-27)
-    "q_ann_topk" -> { (s, dir) =>
-      val e = emb(s, dir)
-      Similarity
-        .bruteForceTopK(e, e.filter(col("vec_id") < 8), k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"), col("cosine"))
-    },
-
-    "q_ann_ivf" -> { (s, dir) =>
-      val e = emb(s, dir)
-      Similarity
-        .bucketedTopK(e, e.filter(col("vec_id") < 8), k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"), col("cosine"))
-    },
-
-    "q_ann_multiprobe" -> { (s, dir) =>
-      val e = emb(s, dir)
-      Similarity
-        .multiProbeTopK(e, e.filter(col("vec_id") < 8), k = 5)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"), col("cosine"))
-    },
-
-    // ----------------------------------------------- text (SURVEY §2 28-31)
-    "q_lang_id" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"), TextFunctions.langId(col("text")).as("lang_pred"))),
-
-    "q_quality" -> { (s, dir) =>
-      val f = TextFunctions.qualityFeatures(col("text"))
-      docs(s, dir).select(
-        col("doc_id"),
-        f.getField("n_chars").cast("long").as("n_chars"),
-        f.getField("n_words").cast("long").as("n_words"),
-        f.getField("mean_word_len").as("mean_word_len"),
-        f.getField("punct_ratio").as("punct_ratio"),
-        f.getField("stopword_ratio").as("stopword_ratio"),
-        TextFunctions.qualityScore(col("text")).as("quality_score")
-      )
-    },
-
-    "q_gopher_rules" -> { (s, dir) =>
-      val g = TextFunctions.gopherRules(col("text"))
-      docs(s, dir).select(
-        col("doc_id"),
-        g.getField("n_words").as("n_words"),
-        g.getField("mean_word_len").as("mean_word_len"),
-        g.getField("symbol_ratio").as("symbol_ratio"),
-        g.getField("bullet_frac").as("bullet_frac"),
-        g.getField("ellipsis_frac").as("ellipsis_frac"),
-        g.getField("alpha_word_frac").as("alpha_word_frac"),
-        g.getField("n_stopwords").as("n_stopwords"),
-        g.getField("passes").as("passes")
-      )
-    },
-
-    "q_c4_rules" -> { (s, dir) =>
-      val c = TextFunctions.c4Rules(col("text"))
-      docs(s, dir).select(
-        col("doc_id"),
-        c.getField("n_lines").as("n_lines"),
-        c.getField("n_kept").as("n_kept"),
-        c.getField("kept_frac").as("kept_frac"),
-        c.getField("has_lorem").as("has_lorem"),
-        c.getField("has_brace").as("has_brace"),
-        c.getField("passes").as("passes")
-      )
-    },
-
-    "q_redact_pii" -> { (s, dir) =>
-      val r = TextFunctions.redactPii(col("text"))
-      docs(s, dir).select(
-        col("doc_id"),
-        r.getField("redacted").as("redacted"),
-        r.getField("n_redacted").as("n_redacted")
-      )
-    },
-
-    "q_mojibake" -> { (s, dir) =>
-      val a = TextFunctions.encodingArtifacts(col("text"))
-      docs(s, dir).select(
-        col("doc_id"),
-        a.getField("n_replacement").as("n_replacement"),
-        a.getField("n_ctrl").as("n_ctrl"),
-        a.getField("n_mojibake").as("n_mojibake"),
-        a.getField("artifact_frac").as("artifact_frac"),
-        a.getField("is_clean").as("is_clean")
-      )
-    },
-
-    "q_psi" -> ((s, dir) =>
-      Stats
-        .psi(ev(s, dir), Seq("event_type"), "value", isRef = col("event_id") % 2 === 0)
-        .select(col("event_type"), graft.functions.Portable.r6(col("psi")).as("psi"))),
-
-    "q_fk_audit" -> ((s, dir) =>
-      Integrity.fkAuditAll(Seq(
-        ("lineitem.orderkey", Tables.lineitem(s, dir), "l_orderkey", Tables.orders(s, dir), "o_orderkey"),
-        ("orders.custkey", Tables.orders(s, dir), "o_custkey", Tables.customer(s, dir), "c_custkey"),
-        ("customer.nationkey", Tables.customer(s, dir), "c_nationkey", Tables.nation(s, dir), "n_nationkey")
-      ))),
-
-    "q_token_count" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        TextFunctions.whitespaceTokenCount(col("text")).cast("long").as("n_ws_tokens"),
-        TextFunctions.bpeishTokenCount(col("text")).cast("long").as("n_bpeish_tokens")
-      )),
-
-    "q_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        TextFunctions.fingerprint(col("text")).as("fp"),
-        TextFunctions.rollingFingerprint(col("text")).as("rolling")
-      )),
-
-    // ----------------------------------------------- k-means IVF (learned)
-    "q_kmeans_assign" -> { (s, dir) =>
-      val e = emb(s, dir)
-      KMeans
-        .assign(e, KMeans.initCentroids(e, k = 8))
-        .select(col("vec_id"), col("cid"), graft.functions.Portable.r6(col("dist")).as("dist"))
-    },
-
-    "q_ann_ivf_kmeans" -> { (s, dir) =>
-      val e = emb(s, dir)
-      KMeans
-        .ivfTopK(e, e.filter(col("vec_id") < 8), KMeans.initCentroids(e, k = 8), k = 5, nProbe = 2)
-        .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"), col("cosine"))
-    },
-
-    // PQ encode + reconstruction against the DuckDB oracle — the
-    // init-codebook convention q_kmeans_assign established (iters = 0:
-    // the oracle pins the hash-seeded codebook + the whole encode/
-    // decode path; the Lloyd refinement loop stays ScalaTest-pinned,
-    // where its empty-cluster and convergence behavior is asserted
-    // directly). 4 blocks × 16 dims, k = 8 codes per block; recon_dist
-    // is the full-vector squared reconstruction error, r6'd.
-    "q_pq_codes" -> { (s, dir) =>
-      val e = emb(s, dir)
-      val model = graft.ann.ProductQuantizer.fit(
-        e, numBlocks = 4, k = 8, iters = 0, dim = 64)
-      e.select(col("vec_id"),
-          graft.ann.ProductQuantizer.codesColumn(model, col("embedding")).as("__codes"),
-          col("embedding"))
-        .withColumn("recon_dist", graft.functions.Portable.r6(
-          KMeans.sqDist(col("embedding").cast("array<double>"),
-            graft.ann.ProductQuantizer.decodeColumn(model, col("__codes")))))
-        .select(col("vec_id"), col("recon_dist"),
-          posexplode(col("__codes")).as(Seq("blk", "code")))
-        .select(col("vec_id"), col("blk").cast("long").as("blk"),
-          col("code").cast("long").as("code"), col("recon_dist"))
-    },
-
-    // IVF-PQ ADC search against the DuckDB oracle — the last spec-only
-    // leg of the PQ stack (round-11 verdict item 6), oracled under the
-    // q_pq_codes init-codebook convention (iters = 0 on the residual
-    // codebook, hash-seeded coarse cells): the oracle pins the whole
-    // probe → residual ADC table → summed-lookup → top-k path, while
-    // Lloyd refinement quality stays ScalaTest-pinned. 8 coarse cells,
-    // nProbe = 2, 4 blocks × 16 dims, k = 8 codes per block, top-5.
-    "q_ann_ivfpq_adc" -> { (s, dir) =>
-      val e = emb(s, dir)
-      val coarse = KMeans.initCentroids(e, k = 8)
-      val pq = graft.ann.IvfPq.fitResidualPq(
-        e, coarse, numBlocks = 4, k = 8, iters = 0, dim = 64)
-      // encode is a pure literal-centroid projection, so the codes frame
-      // keeps its cid in ONE pass over the residuals — no corpus self-join
-      // (the parquet index path gets this for free from partitionBy(cid))
-      val codes = graft.ann.IvfPq.assignResiduals(e, coarse)
-        .select(col("vec_id").as("id"),
-          graft.ann.ProductQuantizer.codesColumn(pq, col("embedding")).as("codes"),
-          col("cid"))
-      graft.ann.IvfPq
-        .searchFrames(codes, coarse, e.filter(col("vec_id") < 8), pq, kTop = 5, nProbe = 2)
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"), col("neg_adc_dist"))
-    },
-
-    // OPQ apply-side path against the DuckDB oracle — rotate-then-encode
-    // with a FIXED stride-permutation rotation (R[i][j] = 1 iff
-    // i = 37·j mod 64; permutation matrices are orthonormal, and the
-    // products are exact in float, so the rotated corpus is replicated
-    // bit-for-bit by list indexing in SQL). The oracle pins
-    // Opq.rotateColumn's literal mat-vec + the full encode/decode in
-    // rotated space under the q_pq_codes init-codebook convention
-    // (iters = 0); the Procrustes/SVD fit alternation stays
-    // ScalaTest-pinned (OpqSpec), like PQ's Lloyd loop.
-    "q_opq_encode" -> { (s, dir) =>
-      val e = emb(s, dir)
-      val rotated = e.select(col("vec_id"),
-        graft.ann.Opq.rotateColumn(col("embedding"), stridePerm64).as("y"))
-      val pq = graft.ann.ProductQuantizer.fit(
-        rotated, numBlocks = 4, k = 8, iters = 0, dim = 64, vecCol = "y")
-      rotated
-        .select(col("vec_id"),
-          graft.ann.ProductQuantizer.codesColumn(pq, col("y")).as("__codes"),
-          col("y"))
-        .withColumn("recon_dist", graft.functions.Portable.r6(
-          KMeans.sqDist(col("y"),
-            graft.ann.ProductQuantizer.decodeColumn(pq, col("__codes")))))
-        .select(col("vec_id"), col("recon_dist"),
-          posexplode(col("__codes")).as(Seq("blk", "code")))
-        .select(col("vec_id"), col("blk").cast("long").as("blk"),
-          col("code").cast("long").as("code"), col("recon_dist"))
-    },
-
-    // PCA's distributed leg against the DuckDB oracle — the one-pass
-    // count/Σx/Σxxᵀ moment accumulation (map-side VectorSum partials,
-    // d² bounded buffers) unpacked to the d×d unbiased covariance
-    // matrix as (i, j, cov) rows. This is the half of Pca.fit that
-    // scales with the corpus; the driver-side Breeze eigenproblem it
-    // feeds stays property-pinned (Round6gOpsSpec: orthonormality,
-    // variance = eigenvalue, reconstruction).
-    "q_pca_cov" -> { (s, dir) =>
-      graft.ann.Pca.covarianceFrame(emb(s, dir))
-        .select(col("i"), col("j"), graft.functions.Portable.r6(col("cov")).as("cov"))
-    },
-
-    // ------------------------------- pipeline: sample / select / pack / score
-    "q_sample_det" -> ((s, dir) =>
-      Sampling
-        .deterministicSample(docs(s, dir), "doc_id", frac = 0.3, seed = "s42")
-        .select(col("doc_id"), col("lang"))),
-
-    "q_sample_n" -> ((s, dir) =>
-      Sampling
-        .deterministicSampleN(docs(s, dir), "doc_id", n = 100, seed = "s42")
-        .select(col("doc_id"), col("lang"))),
-
-    "q_sample_strat" -> ((s, dir) =>
-      Sampling
-        .stratifiedSample(docs(s, dir), "doc_id", "lang",
-          fracs = Map("en" -> 0.1, "de" -> 1.0), defaultFrac = 0.5, seed = "s42")
-        .select(col("doc_id"), col("lang"))),
-
-    "q_topk_per_group" -> ((s, dir) =>
-      Selection
-        .topKPerGroup(docs(s, dir), Seq("lang", "source"), "n_chars", k = 3, tieBreakCol = "doc_id")
-        .select(col("lang"), col("source"), col("doc_id"), col("n_chars"), col("rank"))),
-
-    "q_tfidf" -> ((s, dir) =>
-      Tfidf
-        .tfidf(docs(s, dir))
-        .select(col("id"), col("term"), col("tf"), graft.functions.Portable.r6(col("tfidf")).as("tfidf"))),
-
-    "q_curation" -> { (s, dir) =>
-      import graft.pipeline.Curation
-      Curation
-        .curate(docs(s, dir), Curation.CurationConfig(
-          minQuality = 0.3, keepLanguages = Set("en"), dedupThreshold = 0.8,
-          shingleSize = 5, sampleFrac = 0.5, sampleSeed = "s42"))
-        .select(col("doc_id"), col("lang"))
-    },
-
-    "q_repetition" -> { (s, dir) =>
-      val r = TextFunctions.repetitionSignals(col("text"))
-      docs(s, dir).select(col("doc_id"),
-        r.getField("dup_line_frac").as("dup_line_frac"),
-        r.getField("dup_token_frac").as("dup_token_frac"))
-    },
-
-    "q_top_bigram" -> ((s, dir) =>
-      TextFunctions.topBigramFraction(docs(s, dir))),
-
-    // deflate compression ratio — no SQL-expressible oracle (DuckDB has no
-    // zlib function), so the driver records the weaker rows-only check;
-    // semantics are pinned by TextAnalysisSpec instead.
-    "q_compress" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        graft.functions.Portable.r6(TextFunctions.deflateRatio(col("text"))).as("deflate_ratio"))),
-
-    "q_pii" -> { (s, dir) =>
-      val p = TextFunctions.piiCounts(col("text"))
-      docs(s, dir).select(col("doc_id"),
-        p.getField("n_emails").as("n_emails"),
-        p.getField("n_ipv4").as("n_ipv4"),
-        p.getField("n_long_digit_runs").as("n_long_digit_runs"))
-    },
-
-    "q_unigram_lm" -> ((s, dir) =>
-      Tfidf
-        .unigramLogProb(docs(s, dir))
-        .select(col("id"), graft.functions.Portable.r6(col("mean_log_prob")).as("mean_log_prob"))),
-
-    "q_bigram_lm" -> ((s, dir) =>
-      Tfidf
-        .bigramLogProb(docs(s, dir))
-        .select(col("id"), graft.functions.Portable.r6(col("mean_log_prob")).as("mean_log_prob"))),
-
-    "q_contamination" -> { (s, dir) =>
-      val d = docs(s, dir)
-      Dedup
-        .contaminationFlags(d, d.filter(col("doc_id") < 50), n = 5, minCommon = 10)
-        .select(col("id"), col("n_common"), col("contaminated"))
-    },
-
-    "q_pack_text" -> ((s, dir) =>
-      Packing
-        .materializePacks(
-          docs(s, dir).select(col("doc_id"), col("text"),
-            TextFunctions.whitespaceTokenCount(col("text")).cast("long").as("ntok")),
-          "doc_id", "text", "ntok", budgetTokens = 2000, nShards = 8)
-        .select(col("shard"), col("bin"), col("text"), col("n_tokens"))),
-
-    "q_bm25" -> ((s, dir) =>
-      Bm25
-        .score(docs(s, dir), Seq("spark", "hash", "merge"))
-        .select(col("id"), graft.functions.Portable.r6(col("bm25")).as("bm25"))),
-
-    // batch retrieval: 3 probe queries, one corpus pass, top-10 each
-    "q_bm25_retrieve" -> ((s, dir) =>
-      Bm25
-        .retrieveTopK(
-          docs(s, dir),
-          Seq(
-            "q_joins"  -> Seq("join", "hash", "merge"),
-            "q_scan"   -> Seq("scan", "filter", "column"),
-            "q_stream" -> Seq("stream", "window", "batch")),
-          k = 10)
-        .select(col("query_id"), col("id").as("doc_id"), col("rank"), col("bm25"))),
-
-    // leakage-proof splits: every near-dup cluster rides one die roll
-    "q_split_groupaware" -> { (s, dir) =>
-      val d = docs(s, dir)
-      val clusters = Dedup
-        .connectedComponents(Dedup.ngramJaccardPairs(d, threshold = 0.5, n = 5, maxDocFreq = 1000))
-        .select(col("id"), col("label").as("cluster_id"))
-      graft.pipeline.Splits
-        .groupAwareSplit(d, clusters, Seq("train" -> 8, "val" -> 1, "test" -> 1))
-        .select(col("doc_id"), col("split"))
-    },
-
-    // MAD robust outliers; flag recomputed on the r6-rounded z so a 1-ulp
-    // percentile-interpolation difference can't flip the 3.5 boundary
-    "q_mad" -> ((s, dir) =>
-      Outliers
-        .madOutliers(ev(s, dir), Seq("event_type"), "value", k = 3.5, exact = true)
-        .withColumn("robust_z", graft.functions.Portable.r6(col("robust_z")))
-        .select(
-          col("event_id"), col("event_type"), col("robust_z"),
-          coalesce(abs(col("robust_z")) > 3.5, lit(false)).as("is_outlier"))),
-
-    // Flesch reading ease: row-local sentence/word/vowel-run counts
-    "q_readability" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"), TextFunctions.readability(col("text")).as("r"))
-        .select(col("doc_id"), col("r.n_sentences").as("n_sentences"),
-          col("r.n_words").as("n_words"), col("r.n_syllables").as("n_syllables"),
-          graft.functions.Portable.r6(col("r.flesch")).as("flesch"))),
-
-    // lexical diversity: unigram + bigram type-token ratios, row-local
-    "q_lexdiv" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"), TextFunctions.lexicalDiversity(col("text")).as("l"))
-        .select(col("doc_id"), col("l.n_tokens").as("n_tokens"),
-          col("l.n_types").as("n_types"),
-          graft.functions.Portable.r6(col("l.ttr")).as("ttr"),
-          col("l.n_bigram_types").as("n_bigram_types"),
-          graft.functions.Portable.r6(col("l.bigram_ttr")).as("bigram_ttr"))),
-
-    // winnowing (MOSS) fingerprint selection stats, row-local
-    "q_winnow" -> ((s, dir) =>
-      graft.text.Winnow.fingerprintStats(docs(s, dir), k = 5, w = 4)
-        .select(col("id").as("doc_id"), col("n_shingles"), col("n_fingerprints"),
-          graft.functions.Portable.r6(col("density")).as("density"))),
-
-    // first/last-touch attribution for purchase conversions; both
-    // windows share one (user, time, tie) exchange + sort
-    "q_attribution" -> ((s, dir) =>
-      Attribution
-        .touchAttribution(ev(s, dir), "user_id", "ts", "event_type", "event_id", "purchase")
-        .select(col("event_id"), col("user_id"),
-          col("first_touch"), col("last_touch"), col("n_prior"))),
-
-    // Welch two-sample z-test between a deterministic md5 A/B user split
-    "q_ab_test" -> { (s, dir) =>
-      val arm = TextFunctions.md5Hash32(
-        concat(lit("ab:"), col("user_id").cast("string"))) % 2 === 1
-      Stats
-        .welchTest(ev(s, dir).withColumn("__b", arm), Seq("event_type"), "value", col("__b"))
-        .select(col("event_type"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("mean_a")).as("mean_a"),
-          graft.functions.Portable.r6(col("mean_b")).as("mean_b"),
-          graft.functions.Portable.r6(col("delta")).as("delta"),
-          graft.functions.Portable.r6(col("se")).as("se"),
-          graft.functions.Portable.r6(col("z")).as("z"))
-    },
-
-    // Kaplan–Meier time-to-purchase curve (day granularity; log-survival)
-    "q_km_survival" -> ((s, dir) =>
-      Survival
-        .kaplanMeier(ev(s, dir), "user_id", "ts", "event_type", "purchase")
-        .select(col("t_day"), col("n_risk"), col("d_events"), col("c_censored"),
-          graft.functions.Portable.r6(col("log_s")).as("log_s"))),
-
-    // local clustering coefficient over the word-adjacency graph
-    // (same edge derivation as q_triangles / q_pagerank)
-    "q_clustering_coef" -> { (s, dir) =>
-      val edges = wordAdjacencyEdges(s, dir)
-      Graph.clusteringCoefficient(edges)
-        .select(col("node"), col("degree"), col("n_triangles"),
-          graft.functions.Portable.r6(col("coef")).as("coef"))
-    },
-
-    // TPC-H Q5 shape: local-supplier revenue per nation — a 6-table
-    // join: the small dims (supplier/nation/region) broadcast; the
-    // orders and customer joins are key equi-joins the fact legitimately
-    // shuffles for at scale (AQE upgrades them to broadcast when the
-    // filtered sides fit)
-    "q5_local_supplier" -> { (s, dir) =>
-      val li = Tables.lineitem(s, dir)
-      val ord = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-      val cust = Tables.customer(s, dir)
-      val supp = Tables.supplier(s, dir)
-      val nat = Tables.nation(s, dir)
-      val reg = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(cust, col("o_custkey") === col("c_custkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(graft.functions.Portable.r6(
-          col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(38,6)"))
-          .cast("double").as("revenue"))
-    },
-
-    // line-level language mixing (lines synthesized at sentence breaks —
-    // the corpus text is single-line)
-    "q_lang_mix" -> ((s, dir) =>
-      graft.text.LangMix
-        .languageMixture(
-          docs(s, dir).withColumn("text", regexp_replace(col("text"), "\\. ", ".\n")))
-        .select(col("id").as("doc_id"), col("n_lines"), col("n_langs"), col("main_lang"),
-          graft.functions.Portable.r6(col("main_frac")).as("main_frac"))),
-
-    // Holt double exponential smoothing (level + trend; contrast q_ewma)
-    "q_holt" -> ((s, dir) =>
-      Ewma.holtLast(ev(s, dir), "user_id", "ts", "value", "event_id", 0.5, 0.3)
-        .select(col("key").as("user_id"), col("n"),
-          graft.functions.Portable.r6(col("level")).as("level"),
-          graft.functions.Portable.r6(col("trend")).as("trend"),
-          graft.functions.Portable.r6(col("forecast")).as("forecast"))),
-
-    // content-defined chunking: cross-doc duplicated-block report
-    "q_cdc_chunks" -> ((s, dir) =>
-      graft.text.ContentChunks.chunkDupStats(docs(s, dir), k = 5, divisor = 8)
-        .select(col("id").as("doc_id"), col("n_chunks"), col("n_dup_chunks"),
-          graft.functions.Portable.r6(col("dup_frac")).as("dup_frac"))),
-
-    // Benford first-digit audit over event values
-    "q_benford" -> ((s, dir) =>
-      Benford.firstDigitAudit(ev(s, dir), Seq("event_type"), "value")
-        .select(col("event_type"), col("digit"), col("n"),
-          graft.functions.Portable.r6(col("obs_frac")).as("obs_frac"),
-          graft.functions.Portable.r6(col("exp_frac")).as("exp_frac"),
-          graft.functions.Portable.r6(col("chi2")).as("chi2"))),
-
-    // difference-in-differences: md5 A/B arms x mid-stream cutover
-    "q_did" -> { (s, dir) =>
-      val arm = TextFunctions.md5Hash32(
-        concat(lit("ab:"), col("user_id").cast("string"))) % 2 === 1
-      val post = col("ts") >= lit("2024-01-16 00:00:00").cast("timestamp")
-      Stats
-        .didTest(ev(s, dir).withColumn("__b", arm).withColumn("__p", post),
-          Seq("event_type"), "value", col("__b"), col("__p"))
-        .select(col("event_type"),
-          col("n_a_pre"), col("n_a_post"), col("n_b_pre"), col("n_b_post"),
-          graft.functions.Portable.r6(col("did")).as("did"),
-          graft.functions.Portable.r6(col("se")).as("se"),
-          graft.functions.Portable.r6(col("z")).as("z"))
-    },
-
-    // reciprocal-rank fusion: BM25 relevance x doc-length prior
-    "q_rrf" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val bm = Bm25
-        .retrieveTopK(
-          docs(s, dir),
-          Seq(
-            "q_joins"  -> Seq("join", "hash", "merge"),
-            "q_scan"   -> Seq("scan", "filter", "column"),
-            "q_stream" -> Seq("stream", "window", "batch")),
-          k = 50)
-        .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      // query-independent length prior; the limit bounds the rank window
-      val top = docs(s, dir)
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy(col("n_chars").desc, col("doc_id"))
-        .limit(50)
-      val prior = top
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("n_chars").desc, col("doc_id"))).cast("long"))
-        .select(explode(array(lit("q_joins"), lit("q_scan"), lit("q_stream"))).as("query_id"),
-          col("doc_id"), col("rank"))
-      graft.pipeline.Fusion.reciprocalRankFusion(Seq(bm, prior), k = 60, topK = 10)
-    },
-
-    // golden-record survivorship over the fuzzy part-name entities
-    "q_golden" -> ((s, dir) =>
-      FuzzyJoin
-        .goldenRecords(
-          Tables.part(s, dir).select(col("p_partkey"), col("p_name"), col("p_retailprice")),
-          "p_partkey", "p_name", maxDist = 4,
-          extraAggs = Seq(max(col("p_retailprice")).as("max_price")))
-        .select(col("entity_id"), col("n_members"), col("first_id"), col("canonical_name"),
-          graft.functions.Portable.r6(col("max_price")).as("max_price"))),
-
-    // bounded k-core peel over the word-adjacency graph (k=3, 3 rounds)
-    "q_kcore" -> { (s, dir) =>
-      val edges = wordAdjacencyEdges(s, dir)
-      Graph.kCorePeel(edges, k = 3, rounds = 3)
-        .select(col("node"), col("d").as("degree"))
-    },
-
-    // hopping windows: 10-minute windows sliding every 5 minutes
-    "q_hopping" -> ((s, dir) =>
-      Rolling
-        .hoppingAgg(ev(s, dir), Seq("event_type"), "ts", "value",
-          windowUs = 600000000L, slideUs = 300000000L)
-        .select(col("event_type"), col("win_start_us"), col("n"), col("sum_value"))),
-
-    // CUSUM changepoint detection per user (one shuffle + sorted fold)
-    "q_cusum" -> ((s, dir) =>
-      Changepoint.cusum(ev(s, dir), "user_id", "ts", "value", "event_id")
-        .select(col("key").as("user_id"), col("n"),
-          graft.functions.Portable.r6(col("mean")).as("mean"),
-          graft.functions.Portable.r6(col("cusum_max")).as("cusum_max"),
-          col("cusum_at"))),
-
-    // sorted-neighborhood blocking over part names (window 3, dist <= 4)
-    "q_sorted_blocking" -> ((s, dir) =>
-      FuzzyJoin.sortedNeighborPairs(Tables.part(s, dir), "p_name", maxDist = 4, windowSize = 3)),
-
-    // skip-gram co-occurrence counts (window 2, symmetric, minCount 3)
-    "q_cooc" -> ((s, dir) =>
-      graft.text.Cooccurrence.skipgramCounts(docs(s, dir), window = 2, minCount = 3)),
-
-    // deterministic T5-style span corruption stats + corrupted fingerprint
-    "q_span_corrupt" -> ((s, dir) =>
-      graft.text.SpanCorrupt.corruptionStats(docs(s, dir), spanLen = 3, rate = 8)
-        .select(col("id").as("doc_id"), col("n_tokens"), col("n_masked"),
-          col("n_spans"), col("corrupt_fp"))),
-
-    // per-source corpus data card (volume/quality/lang-mix/dup rate)
-    "q_corpus_report" -> ((s, dir) =>
-      graft.pipeline.CorpusReport.report(docs(s, dir))
-        .select(col("source"), col("n_docs"),
-          graft.functions.Portable.r6(col("mean_chars")).as("mean_chars"),
-          graft.functions.Portable.r6(col("mean_quality")).as("mean_quality"),
-          graft.functions.Portable.r6(col("lang_entropy")).as("lang_entropy"),
-          graft.functions.Portable.r6(col("dup_rate")).as("dup_rate"))),
-
-    // retrieval eval: MRR / recall@10 / nDCG@10 of BM25 against
-    // contains-all-terms relevance
-    "q_retrieval_eval" -> { (s, dir) =>
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val ranking = Bm25.retrieveTopK(docs(s, dir), qs, k = 10)
-        .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      val rel = graft.text.RetrievalEval.containsAllRelevance(docs(s, dir), qs)
-      graft.text.RetrievalEval.evaluate(ranking, rel, k = 10)
-        .select(col("query_id"), col("n_relevant"),
-          graft.functions.Portable.r6(col("mrr")).as("mrr"),
-          graft.functions.Portable.r6(col("recall_at_k")).as("recall_at_10"),
-          graft.functions.Portable.r6(col("ndcg_at_k")).as("ndcg_at_10"))
-    },
-
-    // judged-qrels (graded) variant: grade = matched-term count (1..3),
-    // graded nDCG (gain 2^g−1) + cascade ERR (R = (2^g−1)/2^3) —
-    // RetrievalEval.evaluateGraded over the same BM25 top-10 ranking
-    "q_retrieval_eval_graded" -> { (s, dir) =>
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val ranking = Bm25.retrieveTopK(docs(s, dir), qs, k = 10)
-        .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      val qrels = graft.text.RetrievalEval.gradedTermRelevance(docs(s, dir), qs)
-      graft.text.RetrievalEval.evaluateGraded(ranking, qrels, k = 10, maxGrade = 3)
-        .select(col("query_id"), col("n_judged"),
-          col("ndcg_graded_at_k").as("ndcg_graded_at_10"),
-          col("err_graded_at_k").as("err_graded_at_10"))
-    },
-
-    // RBO over the graded qrels (round-12 pull): rank-biased overlap of
-    // the BM25 top-10 against the grade-IDEAL ordering (grade desc, id —
-    // the exact ordering evaluateGraded's IDCG uses). Where nDCG asks
-    // "how much gain did the ranker collect", this asks "how much of the
-    // ideal HEAD did it reproduce, position by position" — the
-    // list-similarity complement to q_retrieval_eval_graded on the same
-    // judgments, composed entirely from existing operators.
-    "q_rbo_graded" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val d = docs(s, dir)
-      val ranking = Bm25.retrieveTopK(d, qs, k = 10)
-        .select(col("query_id"), col("id"), col("rank"))
-      val wIdeal = Window.partitionBy(col("query_id"))
-        .orderBy(col("grade").desc, col("id").asc)
-      val ideal = graft.text.RetrievalEval.gradedTermRelevance(d, qs)
-        .select(col("query_id"), col("id"), row_number().over(wIdeal).as("rank"))
-        .filter(col("rank") <= 10)
-      graft.text.RetrievalEval.rbo(ranking, ideal, "query_id", "id", "rank", k = 10, p = 0.9)
-        .select(col("query_id"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("overlap_k")).as("overlap_k"),
-          graft.functions.Portable.r6(col("rbo")).as("rbo"))
-    },
-
-    // first-10-steps event path per user (clickstream journeys)
-    "q_paths" -> ((s, dir) =>
-      Transitions.eventPaths(ev(s, dir), "user_id", "ts", "event_type", "event_id",
-        maxSteps = 10)
-        .select(col("key").as("user_id"), col("n_events"), col("path"))),
-
-    // time-weighted average of the value step function per user
-    "q_twa" -> ((s, dir) =>
-      Intervals.timeWeightedAverage(ev(s, dir), "user_id", "ts", "value", "event_id")
-        .select(col("key").as("user_id"), col("n"), col("span_s"),
-          graft.functions.Portable.r6(col("twa")).as("twa"))),
-
-    // gaps-and-islands activity coverage (5-minute activity intervals)
-    "q_coverage" -> ((s, dir) =>
-      Intervals.activityCoverage(ev(s, dir), "user_id", "ts", "event_id",
-        widthUs = 300000000L)
-        .select(col("key").as("user_id"), col("n_islands"), col("covered_us"))),
-
-    "q_pack" -> ((s, dir) =>
-      Packing
-        .packByTokenBudget(
-          docs(s, dir).select(col("doc_id"),
-            TextFunctions.whitespaceTokenCount(col("text")).cast("long").as("ntok")),
-          "doc_id", "ntok", budgetTokens = 2000, nShards = 8)
-        .select(col("doc_id"), col("ntok"), col("shard"), col("bin"))),
-
-    // ------------------------------------------------- relational headline
-    "q1_pricing" -> { (s, dir) =>
-      val li = Tables.lineitem(s, dir).filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-      // r6 in DOUBLE space before the decimal cast: the engines' native
-      // double->decimal rounding disagrees at 10^-6 boundaries, and at
-      // millions of rows those per-row diffs accumulate past one ulp of
-      // the ~1e10 totals (caught by the sf1 spot-run). floor(x*1e6+0.5)
-      // is identical IEEE arithmetic everywhere, so every row's decimal
-      // is bit-identical and the exact sums match at any scale.
-      def dec(c: org.apache.spark.sql.Column) =
-        graft.functions.Portable.r6(c).cast("decimal(38,6)")
-      li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-          sum(dec(col("l_extendedprice") * (lit(1) - col("l_discount")))).cast("double").as("sum_disc_price"),
-          sum(dec((col("l_extendedprice") * (lit(1) - col("l_discount"))) * (lit(1) + col("l_tax"))))
-            .cast("double").as("sum_charge"),
-          sum(dec(col("l_discount"))).cast("double").as("__sum_disc"),
-          count(lit(1)).as("count_order")
-        )
-        .withColumn("avg_qty", col("sum_qty") / col("count_order"))
-        .withColumn("avg_price", col("sum_base_price") / col("count_order"))
-        .withColumn("avg_disc", col("__sum_disc") / col("count_order"))
-        .drop("__sum_disc")
-    },
-
-    "q3_shipping" -> { (s, dir) =>
-      val cutoff = lit("1998-03-15").cast("timestamp")
-      val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, dir).filter(col("o_orderdate") < cutoff)
-      val l = Tables.lineitem(s, dir).filter(col("l_shipdate") > cutoff)
-      // no broadcast hint on customer: it's fact-sized at scale; the
-      // planner/AQE picks broadcast at small SF from stats on its own.
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("l_orderkey"), col("o_orderdate"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(38,6)"))
-          .cast("double").as("revenue"))
-        .select(col("l_orderkey"),
-          unix_micros(col("o_orderdate").cast("timestamp")).as("o_orderdate_us"), col("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey").asc)
-        .limit(20)
-    },
-
-    // semi/anti joins: customers with a high-priority order but no
-    // returned lineitem — broadcast LeftSemi + LeftAnti, zero fact shuffle
-    "q_cust_semi_anti" -> { (s, dir) =>
-      val cust = Tables.customer(s, dir)
-      val ord = Tables.orders(s, dir)
-      val returned = Tables.lineitem(s, dir)
-        .filter(col("l_returnflag") === "R")
-        .join(ord, col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey"))
-      val urgent = ord.filter(col("o_orderpriority") === "1-URGENT").select(col("o_custkey"))
-      cust
-        .join(urgent, cust("c_custkey") === urgent("o_custkey"), "left_semi")
-        .join(returned, cust("c_custkey") === returned("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-    },
-
-    "q_top_customers" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val rev = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(38,6)"))
-          .cast("double").as("revenue"))
-      // orderBy+limit compiles to TakeOrderedAndProject: each partition
-      // keeps its local top 10, the driver merges — no global window over
-      // the customer table. The rank window that follows only ever sees
-      // the 10 surviving rows (bounded by the limit), which is the one
-      // legitimate use of a partition-less window.
-      rev.orderBy(col("revenue").desc, col("c_custkey").asc).limit(10)
-        .withColumn("rank",
-          row_number().over(Window.orderBy(col("revenue").desc, col("c_custkey").asc)).cast("long"))
-    },
-
-    // one-pass multi-column table profile (data-validation stage)
-    "q_profile" -> ((s, dir) =>
-      Profile.profile(
-        ev(s, dir).select(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts")))),
-
-    // ------------------------------------------------ temporal operators
-    // as-of join: every event picks up the most recent purchase at or
-    // before its own time for the same user (DuckDB native ASOF LEFT JOIN
-    // oracle). Right side pre-aggregated to one row per (user, ts) so the
-    // tie winner is engine-independent.
-    "q_asof" -> { (s, dir) =>
-      val e = ev(s, dir)
-      val purchases = e
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("value"))
-      AsofJoin
-        .asof(
-          e.select(col("event_id"), col("user_id"), col("ts"), col("event_type")),
-          purchases,
-          on = Seq("user_id"), leftTimeCol = "ts", rightTimeCol = "ts",
-          rightCols = Seq("value"), rightPrefix = "purchase_")
-        .select(
-          col("event_id"), col("user_id"), unix_micros(col("ts")).as("time_us"), col("event_type"),
-          unix_micros(col("purchase_ts")).as("purchase_time_us"),
-          col("purchase_value").as("purchase_value"))
-    },
-
-    "q_sessionize" -> ((s, dir) =>
-      Sessionize
-        .sessionSummaries(ev(s, dir), "user_id", "ts", gapUs = 1800L * 1000000L, tieBreakCol = "event_id")
-        .select(col("user_id"), col("session_seq"), col("n_events"),
-          col("start_us"), col("end_us"), col("duration_us"))),
-
-    // the same sessions through Spark's built-in session_window
-    // aggregation (batch/streaming-shared plan; >= gap boundary)
-    "q_session_window" -> ((s, dir) =>
-      Sessionize
-        .sessionWindowSummaries(ev(s, dir), "user_id", "ts", gap = "30 minutes")
-        .select(col("user_id"), col("n_events"), col("start_us"), col("end_us"))),
-
-    // range join: events located inside per-user session intervals via the
-    // bin-bucketed interval join (DuckDB BETWEEN-join oracle). Sessions of
-    // one user never overlap (gap > threshold), so each event lands in
-    // exactly one interval.
-    "q_range_join" -> { (s, dir) =>
-      val e = ev(s, dir)
-      val sessions = Sessionize
-        .sessionSummaries(e, "user_id", "ts", gapUs = 1800L * 1000000L, tieBreakCol = "event_id")
-        .select(col("user_id"), col("session_seq"), col("start_us"), col("end_us"))
-      val points = e
-        .filter(col("ts").isNotNull)
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("time_us"))
-      RangeJoin
-        .intervalJoin(points, sessions, on = Seq("user_id"),
-          tCol = "time_us", startCol = "start_us", endCol = "end_us",
-          binWidth = 6L * 3600 * 1000000) // 6h bins vs ~30min-gap sessions
-        .select(col("event_id"), col("user_id"), col("time_us"), col("session_seq"))
-    },
-
-    // trailing 1-hour window features per user. RANGE frame on the
-    // microsecond value: timestamp peers share a frame in both engines,
-    // so no tie-break is needed for determinism.
-    "q_rolling" -> ((s, dir) =>
-      Rolling
-        .trailingAggregates(ev(s, dir), "user_id", "ts", "value", windowUs = 3600L * 1000000L)
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("time_us"),
-          col("n_trail"), col("sum_trail"))),
-
-    // forward-fill: carry each user's most recent value forward in
-    // (time, event_id) order.
-    "q_ffill" -> ((s, dir) =>
-      Rolling
-        .forwardFill(ev(s, dir), "user_id", "ts", "event_id", "value", "value_filled")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("time_us"),
-          col("value"), col("value_filled"))),
-
-    // --------------------------------------------- data-quality operators
-    // expectation suite over events: k rules, ONE scan. Two rules pass
-    // clean and two fire, so both count paths are exercised.
-    "q_expect" -> ((s, dir) =>
-      Validate.violations(ev(s, dir), expectRules).orderBy("rule")),
-
-    // snapshot diff vs a simulated next ingest: every 7th event deleted,
-    // values doubled for every 5th user. Fingerprints use engine-stable
-    // forms (epoch micros, 1e-6-scaled integer values).
-    "q_diff" -> { (s, dir) =>
-      val e = ev(s, dir)
-      val next = e
-        .filter(col("event_id") % 7 =!= 0)
-        .withColumn("value",
-          when(col("user_id") % 5 === 0, col("value") * 2).otherwise(col("value")))
-      Diff
-        .snapshotDiff(e, next, Seq("event_id"), diffFingerprint)
-        .select(col("event_id"), col("status"))
-    },
-
-    // fuzzy join: part-name pairs within 4 edits, token-blocked (never
-    // all-pairs); the dictionary-level linkage step of record matching.
-    "q_fuzzy" -> ((s, dir) =>
-      FuzzyJoin
-        .fuzzyPairs(Tables.part(s, dir).select(col("p_name")), "p_name", maxDist = 4)
-        .select(col("a_name"), col("b_name"), col("dist"))),
-
-    // same blocking, Jaro-Winkler scorer (native codegen'd expression,
-    // oracle = DuckDB's jaro_winkler_similarity)
-    "q_fuzzy_jw" -> ((s, dir) =>
-      FuzzyJoin
-        .fuzzyPairsJaroWinkler(Tables.part(s, dir).select(col("p_name")), "p_name",
-          minSim = 0.88)
-        .select(col("a_name"), col("b_name"),
-          graft.functions.Portable.r6(col("sim")).as("sim"))),
-
-    // resample events onto an hourly grid with gap rows + carry-forward
-    "q_resample" -> ((s, dir) =>
-      Rolling
-        .resampleLastValue(ev(s, dir), "user_id", "ts", "event_id", "value",
-          stepUs = 3600L * 1000000L)
-        .select(col("user_id"), col("bucket_us"), col("n_events"), col("value_last"))),
-
-    // per-label embedding centroids via the exact decimal path (the
-    // VectorSum native aggregate is the throughput twin, oracle-checked
-    // indirectly through q_kmeans_assign)
-    "q_embed_centroid" -> ((s, dir) =>
-      Embeddings
-        .labelCentroids(emb(s, dir), "label", "embedding")
-        .select(col("group").as("label"), col("pos"), col("centroid"))),
-
-    // bounded inverted-index postings: top-5 docs per term by tf
-    "q_postings" -> ((s, dir) =>
-      InvertedIndex
-        .postings(docs(s, dir), "doc_id", "text", k = 5, minDf = 2L, maxDf = 400L)
-        .select(col("term"), col("df"), col("doc_id"), col("tf"), col("rk"))),
-
-    // salted join must be indistinguishable from the plain join (the
-    // oracle IS the plain join) — parity proof for the skew-mitigation
-    // path
-    "q_salted" -> { (s, dir) =>
-      val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      val c = Tables.customer(s, dir)
-        .select(col("c_custkey").as("o_custkey"), col("c_name"), col("c_mktsegment"))
-      Skew
-        .saltedJoin(o, c, Seq("o_custkey"), salts = 8)
-        .select(col("o_orderkey"), col("o_custkey").as("custkey"),
-          col("c_name"), col("c_mktsegment"))
-    },
-
-    // unicode canonicalization through the native codegen'd expression;
-    // a decomposed-accent + uppercase suffix forces real normalization
-    // work on every row (the corpus itself is ASCII)
-    "q_normalize_text" -> ((s, dir) =>
-      docs(s, dir).select(
-        col("doc_id"),
-        md5(graft.functions.UnicodeNormalize.unicodeNormalize(
-          concat(col("text"), lit(normSuffix)), "NFC", caseFold = true))
-          .as("norm_hash"))),
-
-    // groupBy().pivot() with an explicit value list (no extra
-    // distinct-scan job) — long-to-wide reshaping
-    "q_pivot" -> ((s, dir) =>
-      ev(s, dir)
-        .groupBy("user_id")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count()
-        // fill ONLY the pivoted counts — an unscoped fill would also
-        // rewrite a NULL user_id group key to 0
-        .na.fill(0L, Seq("click", "error", "purchase", "signup", "view"))),
-
-    // exactly-20-per-language deterministic cap (window per group, no
-    // global sort)
-    "q_sample_pergroup" -> ((s, dir) =>
-      Sampling
-        .deterministicNPerGroup(docs(s, dir), "doc_id", "lang", n = 20, seed = "s42")
-        .select(col("doc_id"), col("lang"))),
-
-    // bigram PMI collocations over the corpus
-    "q_pmi" -> ((s, dir) =>
-      Collocations.bigramPmi(docs(s, dir), "text", minCount = 30L)),
-
-    // fixed-width value histogram per event type
-    "q_histogram" -> ((s, dir) =>
-      Profile.histogram(ev(s, dir), "value", width = 50.0, by = Seq("event_type"))),
-
-    // word-vocabulary fit: top-N words by count with deterministic ids
-    "q_vocab_words" -> ((s, dir) =>
-      WordVocab.fit(docs(s, dir), "text", maxSize = 1000, minCount = 2L)),
-
-    // corpus encoding against the fitted vocabulary (first 50 docs,
-    // exploded positions; OOV -> 0)
-    "q_encode" -> { (s, dir) =>
-      val d = docs(s, dir)
-      WordVocab
-        .encode(d.filter(col("doc_id") < 50), "doc_id", "text",
-          WordVocab.fit(d, "text", maxSize = 20, minCount = 2L))
-        .select(col("id").as("doc_id"), col("pos"), col("word_id"))
-    },
-
-    // mergeable HLL distinct-count sketches, range-asserted (round-10
-    // verdict item): the partial-merge-estimate path runs in full, and
-    // the ESTIMATE is checked against the exact distinct inside a
-    // hash-verified boolean band (|est − n| ≤ 5%·n + 2 ≈ 3σ at lgK=12,
-    // deterministic for fixed data) — estimator drift now fails the
-    // oracle instead of hiding behind a rows-only check. The raw
-    // sketch-binary merge contract stays pinned by SketchesSpec.
-    "q_hll" -> { (s, dir) =>
-      val events = ev(s, dir)
-      Sketches
-        .estimate(Sketches.distinctSketchPartials(events, Seq("event_type"), "user_id"))
-        .join(events.groupBy("event_type")
-          .agg(countDistinct(col("user_id")).as("n_distinct")), "event_type")
-        .select(col("event_type"), col("n_distinct"),
-          (abs(col("n_distinct_est") - col("n_distinct").cast("double")) <=
-            col("n_distinct").cast("double") * 0.05 + 2.0).as("est_within_band"))
-    },
-
-    // corpus-wide line dedup + reassembly; the corpus has no newlines,
-    // so multi-line docs are derived deterministically in both engines
-    // (every " table " becomes a line break)
-    "q_line_dedup" -> ((s, dir) =>
-      graft.text.LineDedup.dedupLines(
-        docs(s, dir).select(col("doc_id"),
-          replace(col("text"), lit(" table "), lit("\n")).as("text")),
-        "doc_id", "text")),
-
-    // incremental-ingest cross-corpus dedup: everything whose normalized
-    // text already appears among docs 0..99 is dropped (including those
-    // docs themselves — they match the reference verbatim)
-    "q_cross_dedup" -> { (s, dir) =>
-      val d = docs(s, dir)
-      Dedup
-        .dedupAgainst(d, d.filter(col("doc_id") < 100))
-        .select(col("doc_id"), col("lang"))
-    },
-
-    // semantic dedup: hash-seeded k=8 clusters, min-id survivor within
-    // cosine 0.25 (the corpus's near-dup band, cf. q_embed_neardup).
-    // Cap disabled explicitly: the oracle prunes EVERY cluster, and the
-    // operator's over-cap exemption would diverge once a cluster grows
-    // past the default at larger scale factors
-    "q_semdedup" -> { (s, dir) =>
-      val e = emb(s, dir)
-      // k scales with the corpus (~250 vectors/cluster, floor 8): fixed k
-      // makes in-cluster pair work QUADRATIC in data size (measured 26x at
-      // 10x data). At the oracle scales (sf0.01: 200 vecs, sf0.1: 2000)
-      // this is exactly k = 8, matching the fixed-k oracle SQL.
-      val k = math.max(8L, e.count() / 250L).toInt
-      graft.ann.SemDedup.semDedup(e, KMeans.initCentroids(e, k), threshold = 0.25,
-        maxClusterSize = Int.MaxValue)
-    },
-
-    // bloom-pre-filtered semi join; parity contract — the oracle is the
-    // PLAIN semi join, the sketch only thins the shuffle
-    "q_bloom" -> ((s, dir) =>
-      BloomJoin
-        .semiJoin(
-          Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_linenumber")),
-          Tables.orders(s, dir).filter(col("o_totalprice") > 400000).select(col("o_orderkey")),
-          "l_orderkey", "o_orderkey", expectedKeys = 100000)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"))),
-
-    // Morton z-value for two-dimensional layout clustering
-    "q_zorder" -> ((s, dir) =>
-      Tables.lineitem(s, dir).select(
-        col("l_orderkey"),
-        col("l_linenumber").cast("long").as("l_linenumber"),
-        ZOrder.interleave(col("l_partkey"), col("l_suppkey"), bits = ZOrderBits).as("zvalue"))),
-
-    // per-event-type value quartiles (deterministic ntile)
-    "q_ntile" -> ((s, dir) =>
-      Selection
-        .ntilePerGroup(
-          ev(s, dir).filter(col("value").isNotNull && !isnan(col("value"))),
-          Seq("event_type"), "value", n = 4, tieBreakCol = "event_id")
-        .select(col("event_id"), col("event_type"), col("bin"))),
-
-    // per-domain quota over URLs derived from the source column: parse
-    // host, cap at 10 docs per host deterministically
-    "q_domain_cap" -> ((s, dir) =>
-      Sampling
-        .deterministicNPerGroup(
-          docs(s, dir).withColumn("host",
-            graft.text.UrlFunctions.host(
-              concat(lit("https://"), col("source"), lit(".example.com/d/"), col("doc_id")))),
-          "doc_id", "host", n = 10, seed = "s42")
-        .select(col("doc_id"), col("host"))),
-
-    // BPE merge table (rows-only: iterative argmax is not
-    // SQL-expressible; semantics pinned by BpeSpec). 12 merges: each
-    // round is two vocab-sized jobs, and the bench corpus has 31
-    // distinct words — more rounds would measure scheduler latency,
-    // not the operator
-    "q_bpe_merges" -> ((s, dir) =>
-      graft.text.Bpe.fitMerges(docs(s, dir), numMerges = 12)),
-
-    // two-pass exact heavy hitters: MG sketch candidates + broadcast
-    // recount; oracle is the plain exact GROUP BY ... HAVING. k=4096
-    // keeps threshold*(k+1) ≈ 3.7M tokens above sf1's ~2.7M, so the
-    // loud miss-bound guard stays clear at every driver scale factor
-    "q_heavy_hitters" -> ((s, dir) =>
-      HeavyHitters.exactHeavyHitters(
-        docs(s, dir).select(explode(graft.text.TextFunctions.wordTokens(col("text"))).as("tok")),
-        "tok", k = 4096, threshold = 900L)),
-
-    // CDC log compaction: latest event per (user, type) via max-struct
-    // (one partial-aggregated shuffle, not a window over every version)
-    "q_compact" -> ((s, dir) =>
-      Compact
-        .latestPerKey(ev(s, dir), Seq("user_id", "event_type"), Seq("ts", "event_id"))
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"))),
-
-    // 3-round damped PageRank over the word-adjacency graph (parallel
-    // edges weight naturally); oracle is the same 3 rounds unrolled
-    "q_pagerank" -> { (s, dir) =>
-      PageRank.pageRank(wordAdjacencyEdges(s, dir), iters = 3)
-        .select(col("node"), graft.functions.Portable.r6(col("rank")).as("rank"))
-    },
-
-    // data mixing: target source proportions under a 60-row budget,
-    // membership a pure (seed, id) hash filter
-    "q_mixture" -> ((s, dir) =>
-      Sampling
-        .mixtureSample(docs(s, dir), "source", "doc_id", MixtureWeights,
-          totalBudget = 60, seed = "m42")
-        .select(col("doc_id"), col("source"))),
-
-    // per-code robust scaling (median/IQR) with exact R-7 percentiles;
-    // approx sketch is the 100 TB path, oracle-checked here exactly
-    "q_robust_scale" -> ((s, dir) =>
-      Outliers
-        .robustScale(medsE(s, dir), exact = true)
-        .select(col("event_id"), col("patient_id"), col("code"),
-          graft.functions.Portable.r6(col("scaled_value")).as("scaled_value"))),
-
-    // distinctive terms per language: P(term|group)/P(term) from ONE
-    // corpus pass (marginals derived from the vocab-sized count table)
-    "q_term_lift" -> ((s, dir) =>
-      graft.text.Keywords.termLift(docs(s, dir), "lang", minCount = 25L)
-        .select(col("group").as("lang"), col("term"), col("n"),
-          graft.functions.Portable.r6(col("lift")).as("lift"))),
-
-    // per-source KL divergence from the corpus unigram distribution
-    // (slice-drift signal; DECIMAL term sums for portable reduction)
-    "q_kl" -> ((s, dir) =>
-      graft.text.Keywords.groupDivergence(docs(s, dir), "source")
-        .select(col("group").as("source"), graft.functions.Portable.r6(col("kl")).as("kl"))),
-
-    // uint8 scalar quantization (first 20 vectors, exploded codes):
-    // broadcast per-dim bounds, zero corpus shuffle
-    "q_squant" -> ((s, dir) => {
-      val e = emb(s, dir)
-      Embeddings.scalarQuantize(e)
-        .filter(col("vec_id") < 20)
-        .select(col("vec_id"), col("pos"), col("code"))
-    }),
-
-    // composed training-data ASSEMBLY: mixture-sample to target source
-    // proportions → sliding-window chunking → token-budget packing, one
-    // lazy plan end-to-end (the round-4 twin of q_curation/q_meds_pipeline)
-    "q_assembly" -> { (s, dir) =>
-      val mixed = Sampling.mixtureSample(docs(s, dir), "source", "doc_id",
-        MixtureWeights, totalBudget = 120, seed = "a42")
-      val chunks = Chunker
-        .chunkByTokens(mixed, "doc_id", "text", chunkTokens = 30, overlapTokens = 10)
-        .withColumn("cid", col("doc_id") * 100 + col("chunk_seq"))
-      Packing
-        .packByTokenBudget(
-          chunks.select(col("cid"), col("doc_id"), col("chunk_seq"), col("n_tokens")),
-          "cid", "n_tokens", budgetTokens = 500, nShards = 4)
-        .select(col("doc_id"), col("chunk_seq"), col("n_tokens"), col("shard"), col("bin"))
-    },
-
-    // CDC MERGE/upsert: a derived change batch (every 10th event updated,
-    // a sparse set of brand-new keys) applied onto the event log — one
-    // key-anti-join + union, never a full-outer join of wide rows
-    "q_upsert" -> { (s, dir) =>
-      val e = ev(s, dir)
-      val updates = e.filter(col("event_id") % 10 === 0)
-        .withColumn("value", col("value") * 2)
-        .withColumn("event_type", lit("upd"))
-      val inserts = e.filter(col("event_id") % 1000 === 1)
-        .withColumn("event_id", col("event_id") + 20000000L)
-        .withColumn("event_type", lit("ins"))
-      Merge.upsert(e, updates.unionByName(inserts), Seq("event_id"))
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_type"), col("value"))
-    },
-
-    // SCD2 validity intervals per (user, type) version chain: valid_to =
-    // next version's timestamp, open interval while current
-    "q_scd2" -> ((s, dir) =>
-      Scd2
-        .history(ev(s, dir).filter(col("ts").isNotNull),
-          Seq("user_id", "event_type"), "ts", "event_id")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          unix_micros(col("valid_from")).as("valid_from_us"),
-          unix_micros(col("valid_to")).as("valid_to_us"),
-          col("is_current").cast("long").as("is_current"))),
-
-    // per-(returnflag, linestatus) Pearson correlation of quantity vs
-    // extendedprice from one scan (exact decimal moment sums)
-    "q_corr" -> ((s, dir) =>
-      Stats
-        .groupedCorrelation(Tables.lineitem(s, dir),
-          Seq("l_returnflag", "l_linestatus"), "l_quantity", "l_extendedprice")
-        .select(col("l_returnflag"), col("l_linestatus"), col("n"),
-          graft.functions.Portable.r6(col("corr")).as("corr"))),
-
-    // per-event-type value-over-time trend (OLS slope/intercept); x is
-    // days since epoch, centered to keep the double magnitudes tame
-    "q_linreg" -> ((s, dir) =>
-      Stats
-        .groupedLinReg(
-          ev(s, dir)
-            .filter(col("ts").isNotNull)
-            .withColumn("x",
-              unix_micros(col("ts")).cast("double") / lit(86400000000.0) - lit(19700.0)),
-          Seq("event_type"), "x", "value")
-        .select(col("event_type"), col("n"),
-          graft.functions.Portable.r6(col("slope")).as("slope"),
-          graft.functions.Portable.r6(col("intercept")).as("intercept"))),
-
-    // degree-ordered triangle enumeration over the word-adjacency graph
-    // (same edge table as q_pagerank); each triangle once, a < b < c
-    "q_triangles" -> { (s, dir) =>
-      val edges = wordAdjacencyEdges(s, dir)
-      Graph.triangles(edges)
-    },
-
-    // per-doc n-gram novelty: fraction of a doc's distinct shingles
-    // unique to it in the corpus (the anti-boilerplate selection signal)
-    "q_novelty" -> ((s, dir) =>
-      graft.text.Novelty.noveltyScore(docs(s, dir))
-        .select(col("id").as("doc_id"), col("n_shingles"), col("n_unique"),
-          graft.functions.Portable.r6(col("novelty")).as("novelty"))),
-
-    // ordered funnel: signup -> view (after it) -> purchase (after that);
-    // one type-filtered shuffle + a single-pass HOF fold per user
-    "q_funnel" -> ((s, dir) =>
-      Funnel
-        .funnel(ev(s, dir), "user_id", "ts", "event_type",
-          Seq("signup", "view", "purchase"))
-        .withColumnRenamed("key", "user_id")),
-
-    // weekly cohort retention triangle over the events stream
-    "q_retention" -> ((s, dir) =>
-      Retention.cohortRetention(ev(s, dir), "user_id", "ts", WeekUs)),
-
-    // deterministic weighted sample (priority sampling): 100 docs,
-    // inclusion odds proportional to n_chars; TakeOrderedAndProject
-    "q_sample_weighted" -> ((s, dir) =>
-      Sampling
-        .weightedSampleN(docs(s, dir), "doc_id", "n_chars", 100, "w42")
-        .select(col("doc_id"), col("n_chars"))),
-
-    // association rules over (user, event_type) co-occurrence
-    "q_assoc" -> ((s, dir) =>
-      Assoc.rules(ev(s, dir), "user_id", "event_type", 5L)
-        .select(col("ante"), col("cons"), col("n_both"),
-          graft.functions.Portable.r6(col("support")).as("support"),
-          graft.functions.Portable.r6(col("confidence")).as("confidence"),
-          graft.functions.Portable.r6(col("lift")).as("lift"))),
-
-    // per-doc word-distribution entropy (repetitiveness signal)
-    "q_entropy" -> ((s, dir) =>
-      graft.text.Importance.wordEntropy(docs(s, dir), "doc_id", "text")
-        .select(col("id").as("doc_id"), col("n_tokens"),
-          graft.functions.Portable.r6(col("entropy")).as("entropy"))),
-
-    // DSIR-style importance weights: target slice = lang 'en'
-    "q_dsir" -> ((s, dir) =>
-      graft.text.Importance
-        .importanceScore(docs(s, dir), "doc_id", "text", col("lang") === "en")
-        .select(col("id").as("doc_id"), col("n_tokens"),
-          graft.functions.Portable.r6(col("llr")).as("llr"))),
-
-    // per-event-type percentile rank of value (portable percent_rank)
-    "q_pct_rank" -> ((s, dir) =>
-      Stats.percentileRank(ev(s, dir), Seq("event_type"), "value")
-        .select(col("event_id"), col("event_type"), col("value"),
-          graft.functions.Portable.r6(col("pct")).as("pct"))),
-
-    // hashing-trick features: 64-dim signed hashed bag of words
-    "q_feature_hash" -> ((s, dir) =>
-      graft.text.FeatureHash.hashedFeatures(docs(s, dir), "doc_id", "text", 64)
-        .select(col("id").as("doc_id"), col("bucket"), col("w"))),
-
-    // count-min sketch (4x64) point estimates of per-user event counts
-    "q_cms" -> { (s, dir) =>
-      val sk = Sketches.countMinTable(ev(s, dir), "user_id", 4, 64)
-      Sketches.countMinEstimate(sk, ev(s, dir), "user_id", 4, 64)
-        .select(col("i").as("user_id"), col("est"))
-    },
-
-    // debounce: drop same-(user,type) repeats within 1h of the previous
-    "q_debounce" -> ((s, dir) =>
-      Debounce.debounce(ev(s, dir), Seq("user_id", "event_type"), "ts",
-          3600000000L, "event_id")
-        .select(col("event_id"), col("user_id"), timeUs("ts").as("ts_us"),
-          col("event_type"))),
-
-    // per-code mean imputation over deterministically nulled values
-    "q_impute" -> ((s, dir) =>
-      Impute
-        .meanImpute(
-          medsE(s, dir).withColumn("numeric_value",
-            when(col("event_id") % 97 === 0, lit(null)).otherwise(col("numeric_value"))),
-          Seq("code"), "numeric_value")
-        .select(col("event_id"), col("code"),
-          graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"),
-          col("numeric_value/imputed").as("imputed"))),
-
-    // per-code exact R-7 quantile summary (p25/p50/p75/p90/p99)
-    "q_quantiles" -> ((s, dir) =>
-      Profile.quantileSummary(medsE(s, dir), Seq("code"), "numeric_value", QuantilePs)
-        .select(col("code"), col("p"),
-          graft.functions.Portable.r6(col("q")).as("q"))),
-
-    // chi-square contingency: is lang independent of source?
-    "q_chi2" -> ((s, dir) =>
-      Stats.chiSquare(docs(s, dir), "lang", "source")
-        .select(col("a").as("lang"), col("b").as("source"), col("observed"),
-          graft.functions.Portable.r6(col("expected")).as("expected"),
-          graft.functions.Portable.r6(col("chi2")).as("chi2"))),
-
-    // split-leakage audit: near-dup pairs crossing a train/eval split
-    "q_leakage" -> ((s, dir) =>
-      Dedup
-        .crossSplitLeakage(
-          docs(s, dir).withColumn("split",
-            when(col("doc_id") % 10 < 8, lit("train")).otherwise(lit("eval"))),
-          "split", threshold = 0.5, n = 5)
-        .select(col("id_a"), col("id_b"), col("split_a"), col("split_b"),
-          graft.functions.Portable.r6(col("jaccard")).as("jaccard"))),
-
-    // trending: top-3 event types per day by count
-    "q_trending" -> ((s, dir) =>
-      Trending.topItemsPerBucket(ev(s, dir), "ts", "event_type", 86400000000L, 3)
-        .withColumn("rnk", col("rnk").cast("long"))),
-
-    // per-language Gini concentration of document sizes
-    "q_gini" -> ((s, dir) =>
-      Stats.gini(docs(s, dir), Seq("lang"), "n_chars")
-        .select(col("lang"), col("n"),
-          graft.functions.Portable.r6(col("gini")).as("gini"))),
-
-    // budgeted selection: biggest docs per source until 4k chars each
-    "q_budget_select" -> ((s, dir) =>
-      Selection
-        .selectUnderBudget(docs(s, dir), Seq("source"), "n_chars", "n_chars",
-          4000L, "doc_id")
-        .select(col("doc_id"), col("source"), col("n_chars"))),
-
-    // first-order event-type transition matrix (counts + cond. prob)
-    "q_transitions" -> ((s, dir) =>
-      Transitions.transitionCounts(ev(s, dir), "user_id", "ts", "event_type", "event_id")
-        .select(col("prev"), col("next"), col("n"),
-          graft.functions.Portable.r6(col("p")).as("p"))),
-
-    // per-source exact-duplication triage report
-    "q_dup_stats" -> ((s, dir) =>
-      Dedup.duplicationStats(docs(s, dir), "source")
-        .select(col("g").as("source"), col("n_docs"), col("n_dups"),
-          graft.functions.Portable.r6(col("dup_rate")).as("dup_rate"))),
-
-    // self-calibrating anomaly signal: z vs trailing 10 PRIOR events
-    "q_roll_z" -> ((s, dir) =>
-      Rolling.trailingZScore(ev(s, dir), "user_id", "ts", "value", "event_id", frame = 10)
-        .select(col("event_id"),
-          graft.functions.Portable.r6(col("z_trail")).as("z_trail"))),
-
-    // source-overlap matrix from MERGED minhash sketches (union = min)
-    "q_source_sim" -> ((s, dir) =>
-      Dedup.groupMinhashSimilarity(docs(s, dir), "source", numHashes = 16, n = 3)
-        .select(col("g_a"), col("g_b"), col("n_agree"),
-          graft.functions.Portable.r6(col("est_jaccard")).as("est_jaccard"))),
-
-    // per-user inter-arrival gap stats (burstiness profile)
-    "q_interarrival" -> ((s, dir) =>
-      Transitions.interArrivalStats(ev(s, dir), "user_id", "ts", "event_id")
-        .select(col("user_id"), col("n_gaps"),
-          graft.functions.Portable.r6(col("mean_gap_s")).as("mean_gap_s"),
-          col("max_gap_us"))),
-
-    // row-local sentence segmentation stats (zero shuffle)
-    "q_sentences" -> ((s, dir) =>
-      docs(s, dir)
-        .select(col("doc_id"), TextFunctions.sentenceStats(col("text")).as("st"))
-        .select(col("doc_id"), col("st.n_sentences").as("n_sentences"),
-          col("st.n_words").as("n_words"),
-          graft.functions.Portable.r6(col("st.avg_sentence_len")).as("avg_sentence_len"))),
-
-    // composed targeted selection: DSIR score -> target-like filter ->
-    // per-source budget fill, one lazy plan (composition twin of
-    // q_curation / q_assembly with the round-4 scoring ops)
-    "q_select_pipeline" -> ((s, dir) =>
-      Curation
-        .selectTargetLike(docs(s, dir), col("lang") === "en",
-          minLlr = 0.0, budgetPerSource = 1500L)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          graft.functions.Portable.r6(col("llr")).as("llr"))),
-
-    // Spearman rank correlation (average ranks; contrast with q_corr)
-    "q_spearman" -> ((s, dir) =>
-      Stats
-        .spearman(Tables.lineitem(s, dir),
-          Seq("l_returnflag", "l_linestatus"), "l_quantity", "l_extendedprice")
-        .select(col("l_returnflag"), col("l_linestatus"), col("n"),
-          graft.functions.Portable.r6(col("rho")).as("rho"))),
-
-    // OLAP cube over (lang, source) with grouping id
-    "q_cube" -> ((s, dir) =>
-      docs(s, dir)
-        .cube(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(col("n_chars").cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-            .cast("double").as("chars"),
-          grouping_id().as("gid"))),
-
-    // equi-depth histogram: per-language quartile bins of doc size
-    "q_eqdepth" -> ((s, dir) =>
-      Selection
-        .ntilePerGroup(docs(s, dir), Seq("lang"), "n_chars", n = 4, tieBreakCol = "doc_id")
-        .groupBy(col("lang"), col("bin"))
-        .agg(count(lit(1)).as("n"), min(col("n_chars")).as("lo"),
-          max(col("n_chars")).as("hi"))),
-
-    // entity resolution: fuzzy-link graph -> connected components
-    "q_entity" -> ((s, dir) =>
-      FuzzyJoin.resolveEntities(
-        Tables.part(s, dir).select(col("p_partkey"), col("p_name")),
-        "p_partkey", "p_name", maxDist = 4)),
-
-    // per-user EWMA of value (alpha 0.3): one key shuffle + HOF fold
-    "q_ewma" -> ((s, dir) =>
-      Ewma.ewmaLast(ev(s, dir), "user_id", "ts", "value", "event_id", 0.3)
-        .select(col("key").as("user_id"), col("n"),
-          graft.functions.Portable.r6(col("ewma")).as("ewma"))),
-
-    // asymmetric containment pairs (quote/subset detection)
-    "q_containment" -> ((s, dir) =>
-      Dedup.ngramContainmentPairs(docs(s, dir), threshold = 0.4, n = 5)
-        .select(col("id_a"), col("id_b"),
-          graft.functions.Portable.r6(col("cont_a")).as("cont_a"),
-          graft.functions.Portable.r6(col("cont_b")).as("cont_b"))),
-
-    // week-over-week active users with relative change
-    "q_wow" -> ((s, dir) =>
-      Retention.periodOverPeriod(ev(s, dir), "user_id", "ts", WeekUs)
-        .select(col("bucket"), col("n_active"), col("prev_active"),
-          graft.functions.Portable.r6(col("pct_change")).as("pct_change"))),
-
-    // Poisson bootstrap: per-type mean value with bootstrap SE (16 reps)
-    "q_bootstrap" -> ((s, dir) =>
-      Bootstrap.bootstrapMeanSE(ev(s, dir), Seq("event_type"), "value", "event_id",
-          replicas = 16, seed = "b42")
-        .select(col("event_type").as("code"), col("n"),
-          graft.functions.Portable.r6(col("mean_boot")).as("mean_boot"),
-          graft.functions.Portable.r6(col("se_boot")).as("se_boot"))),
-
-    // two-sample KS distance per event type: even- vs odd-user cohorts
-    // (distribution-level guardrail; contrast with q_ab_test's mean test)
-    "q_ks" -> ((s, dir) =>
-      Hypothesis.ksTest(ev(s, dir), Seq("event_type"), "value",
-          pmod(col("user_id"), lit(2)) === 0)
-        .select(col("event_type"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("d")).as("d"),
-          graft.functions.Portable.r6(col("ks")).as("ks"))),
-
-    // Mann-Whitney U per language: even- vs odd-doc cohorts on doc size
-    "q_mwu" -> ((s, dir) =>
-      Hypothesis.mannWhitney(docs(s, dir), Seq("lang"), "n_chars",
-          pmod(col("doc_id"), lit(2)) === 0)
-        .select(col("lang"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("u_a")).as("u_a"),
-          graft.functions.Portable.r6(col("z")).as("z"),
-          graft.functions.Portable.r6(col("delta")).as("delta"))),
-
-    // two-proportion z: long-doc rate, even- vs odd-doc cohorts per lang
-    "q_two_prop" -> ((s, dir) =>
-      Hypothesis.twoProportionZ(docs(s, dir), Seq("lang"),
-          col("n_chars") > 300, pmod(col("doc_id"), lit(2)) === 0)
-        .select(col("lang"), col("n_a"), col("n_b"), col("k_a"), col("k_b"),
-          graft.functions.Portable.r6(col("p_a")).as("p_a"),
-          graft.functions.Portable.r6(col("p_b")).as("p_b"),
-          graft.functions.Portable.r6(col("z")).as("z"))),
-
-    // per-user value autocorrelation at lags 1..3 (one key window)
-    "q_acf" -> ((s, dir) =>
-      Stats.acf(ev(s, dir), Seq("user_id"), "ts", "event_id", "value", maxLag = 3)
-        .select(col("user_id"), col("lag"), col("n"),
-          graft.functions.Portable.r6(col("acf")).as("acf"))),
-
-    // temperature-scaled (alpha = 0.5) per-source mixture weights
-    "q_temperature_mix" -> ((s, dir) =>
-      Sampling.temperatureWeights(docs(s, dir), "source", "n_chars", alpha = 0.5)
-        .select(col("source"), col("n_rows"),
-          col("size_total").cast("long").as("size_total"),
-          graft.functions.Portable.r6(col("weight")).as("weight"),
-          graft.functions.Portable.r6(col("epochs")).as("epochs"))),
-
-    // hard-negative mining: top-5 neighbors in the cosine band [0.1, 0.6)
-    "q_hard_negatives" -> { (s, dir) =>
-      val e = emb(s, dir)
-      Similarity.hardNegatives(e, e.filter(col("vec_id") < 8), k = 5, lo = 0.1, hi = 0.6)
-        .select(col("query_id"), col("neighbor_id"),
-          col("rank").cast("long").as("rank"), col("cosine"))
-    },
-
-    // Cohen's kappa per source: declared lang tag vs the lang-ID detector
-    "q_kappa" -> ((s, dir) =>
-      Stats.cohenKappa(
-          docs(s, dir).select(col("source"), col("lang"),
-            TextFunctions.langId(col("text")).as("lang_pred")),
-          Seq("source"), "lang", "lang_pred")
-        .select(col("source"), col("n"),
-          graft.functions.Portable.r6(col("po")).as("po"),
-          graft.functions.Portable.r6(col("pe")).as("pe"),
-          graft.functions.Portable.r6(col("kappa")).as("kappa"))),
-
-    // Wilson 95% interval per source for the share of English docs
-    "q_wilson" -> ((s, dir) =>
-      Stats.wilsonInterval(docs(s, dir), Seq("source"), col("lang") === "en")
-        .select(col("source"), col("n"), col("k"),
-          graft.functions.Portable.r6(col("p")).as("p"),
-          graft.functions.Portable.r6(col("lo")).as("lo"),
-          graft.functions.Portable.r6(col("hi")).as("hi"))),
-
-    // per-doc OOV rate against the fitted 1000-word vocabulary
-    "q_oov" -> { (s, dir) =>
-      val d = docs(s, dir)
-      WordVocab
-        .coverage(d, "doc_id", "text", WordVocab.fit(d, "text", maxSize = 1000, minCount = 2L))
-        .select(col("id").as("doc_id"), col("n_tokens"), col("n_oov"),
-          graft.functions.Portable.r6(col("oov_rate")).as("oov_rate"))
-    },
-
-    // ROC AUC per lang: does doc length rank ' the '-bearing docs first?
-    // (the quality-classifier separation readout; NULL for one-arm slices)
-    "q_auc" -> ((s, dir) =>
-      Evaluation.rocAuc(docs(s, dir), Seq("lang"), "n_chars",
-          col("text").contains(" the "))
-        .select(col("lang"), col("n_pos"), col("n_neg"),
-          graft.functions.Portable.r6(col("auc")).as("auc"))),
-
-    // calibration of the length-derived [0,1] score against the same
-    // label: decile reliability bins + per-lang expected calibration error
-    "q_calibration" -> ((s, dir) =>
-      Evaluation.calibration(
-          docs(s, dir).withColumn("score",
-            least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
-          Seq("lang"), "score", col("text").contains(" the "), nBins = 10)
-        .select(col("lang"), col("bin"), col("n"),
-          graft.functions.Portable.r6(col("conf")).as("conf"),
-          graft.functions.Portable.r6(col("acc")).as("acc"),
-          graft.functions.Portable.r6(col("ece")).as("ece"))),
-
-    // Kruskal-Wallis per source: did ANY language arm's doc-size
-    // distribution shift? (k-arm extension of q_mwu)
-    "q_kruskal" -> ((s, dir) =>
-      Hypothesis.kruskalWallis(docs(s, dir), Seq("source"), "lang", "n_chars")
-        .select(col("source"), col("n"), col("k_arms"),
-          graft.functions.Portable.r6(col("h")).as("h"))),
-
-    // Jensen-Shannon divergence per source vs the rest of the corpus
-    // (symmetric, bounded slice-drift signal; contrast with q_kl)
-    "q_js" -> ((s, dir) =>
-      graft.text.Keywords.jsDivergence(docs(s, dir), "source")
-        .select(col("group").as("source"),
-          graft.functions.Portable.r6(col("js")).as("js"))),
-
-    // Adamic-Adar link prediction on the word-adjacency graph
-    // (hub centers > deg 64 truncated BEFORE the wedge join)
-    "q_adamic" -> ((s, dir) =>
-      Graph.adamicAdar(wordAdjacencyEdges(s, dir), maxDegree = 64, minCommon = 2L)
-        .select(col("a"), col("b"), col("n_common"),
-          graft.functions.Portable.r6(col("score")).as("score"))),
-
-    // 2-round HITS hubs/authorities over the word-adjacency graph
-    // (weighted edges, L1-normalized half-steps; contrast with q_pagerank)
-    "q_hits" -> ((s, dir) =>
-      Hits.hits(wordAdjacencyEdges(s, dir), iters = 2)
-        .select(col("node"),
-          graft.functions.Portable.r6(col("auth")).as("auth"),
-          graft.functions.Portable.r6(col("hub")).as("hub"))),
-
-    // join-key skew audit over two candidate shuffle keys of events
-    "q_skew_audit" -> { (s, dir) =>
-      val e = ev(s, dir)
-      Skew.keySkewAudit(e, "event_type", topK = 5)
-        .unionAll(Skew.keySkewAudit(e, "user_id", topK = 5))
-        .select(col("key_col"), col("rank").cast("long").as("rank"), col("key"),
-          col("n"), graft.functions.Portable.r6(col("share")).as("share"),
-          col("n_rows"), col("n_keys"),
-          graft.functions.Portable.r6(col("skew")).as("skew"), col("salts"))
-    },
-
-    // cross-source quantile normalization of doc length onto the
-    // corpus distribution (20 reference quantiles, rank tie-break doc_id)
-    "q_qnorm" -> ((s, dir) =>
-      QuantileNormalize.quantileNormalize(docs(s, dir), "source", "doc_id", "n_chars", nBins = 20)
-        .select(col("id").as("doc_id"), col("group").as("source"), col("value"),
-          graft.functions.Portable.r6(col("pr")).as("pr"), col("bin"),
-          graft.functions.Portable.r6(col("norm")).as("norm"))),
-
-    // per-lang tokenizer fertility: subword tokens per word, bytes/token
-    "q_fertility" -> ((s, dir) =>
-      TextFunctions.fertilityStats(docs(s, dir), "lang")
-        .select(col("group").as("lang"), col("n_docs"), col("n_words"),
-          col("n_tokens"), col("n_bytes"),
-          graft.functions.Portable.r6(col("fertility")).as("fertility"),
-          graft.functions.Portable.r6(col("bytes_per_token")).as("bytes_per_token"))),
-
-    // hour-of-day seasonality per event type: peak hour/share + flatness
-    "q_seasonality" -> ((s, dir) =>
-      Seasonal.hourOfDayProfile(ev(s, dir), "event_type", "ts")
-        .select(col("key").as("event_type"), col("n"), col("peak_hour"),
-          graft.functions.Portable.r6(col("peak_share")).as("peak_share"),
-          graft.functions.Portable.r6(col("entropy_norm")).as("entropy_norm"))),
-
-    // CUPED variance-reduced A/B readout per event type: morning
-    // covariate, afternoon metric, md5-coin arms over users
-    "q_cuped" -> ((s, dir) =>
-      Stats.cuped(ev(s, dir), Seq("event_type"), "user_id", "value",
-          inPre = hour(col("ts")) < 12,
-          inA = pmod(TextFunctions.md5Hash32(
-            concat(lit("cu|"), col("user_id").cast("string"))), lit(2)) === 0)
-        .select(col("event_type"), col("n_units"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("theta")).as("theta"),
-          graft.functions.Portable.r6(col("diff_raw")).as("diff_raw"),
-          graft.functions.Portable.r6(col("diff_adj")).as("diff_adj"),
-          graft.functions.Portable.r6(col("var_reduction")).as("var_reduction"))),
-
-    // winsorized mean of value per event type ([p5, p95] band)
-    "q_wins_mean" -> ((s, dir) =>
-      Outliers.winsorizedMean(ev(s, dir), Seq("event_type"), "value",
-          pLo = 0.05, pHi = 0.95, exact = true)
-        .select(col("event_type"), col("n"),
-          graft.functions.Portable.r6(col("mean")).as("mean"),
-          graft.functions.Portable.r6(col("wins_mean")).as("wins_mean"),
-          graft.functions.Portable.r6(col("lo")).as("lo"),
-          graft.functions.Portable.r6(col("hi")).as("hi"))),
-
-    // Holt-Winters additive seasonal smoothing (period-4 slots;
-    // completes the ewma -> holt -> holt-winters family)
-    "q_hw" -> ((s, dir) =>
-      Ewma.holtWintersLast(ev(s, dir), "user_id", "ts", "value", "event_id",
-          alpha = 0.5, beta = 0.3, gamma = 0.4, period = 4)
-        .select(col("key").as("user_id"), col("n"),
-          graft.functions.Portable.r6(col("level")).as("level"),
-          graft.functions.Portable.r6(col("trend")).as("trend"),
-          graft.functions.Portable.r6(col("forecast")).as("forecast"))),
-
-    // Fano-factor burstiness of hourly volumes per event type
-    // (Poisson = 1; batch/retry storms >> 1; clocked < 1)
-    "q_fano" -> ((s, dir) =>
-      Seasonal.burstiness(ev(s, dir), "event_type", "ts")
-        .select(col("key").as("event_type"), col("n_events"), col("n_buckets"),
-          graft.functions.Portable.r6(col("mean_per_bucket")).as("mean_per_bucket"),
-          graft.functions.Portable.r6(col("fano")).as("fano"))),
-
-    // MinHash/LSH calibration audit on the deterministic 400-doc sample:
-    // per exact-Jaccard bin, sketch estimate vs band catch rate vs theory
-    "q_lsh_tuning" -> ((s, dir) =>
-      graft.dedup.LshTuning.calibrationReport(docs(s, dir), sampleN = 400)
-        .select(col("bin"), col("n_pairs"),
-          graft.functions.Portable.r6(col("mean_est")).as("mean_est"),
-          graft.functions.Portable.r6(col("catch_rate")).as("catch_rate"),
-          graft.functions.Portable.r6(col("theory")).as("theory"))),
-
-    // personalized PageRank from the s-word seed set (3 rounds):
-    // topic-neighborhood proximity, contrast the global q_pagerank.
-    // The edge frame is pinned so the seed scan reuses it, not the corpus
-    "q_ppr" -> { (s, dir) =>
-      import graft.plans.Materialize.PinOps
-      val e = wordAdjacencyEdges(s, dir).pin(true)
-      val seeds = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node")))
-        .filter(col("node").startsWith("s")).distinct()
-      PageRank.personalizedPageRank(e, seeds, iters = 3)
-        .select(col("node"), graft.functions.Portable.r6(col("rank")).as("rank"))
-    },
-
-    // Zipf slope of the top-200 term frequencies per source
-    // (naturalness audit: natural language sits near -1)
-    "q_zipf" -> ((s, dir) =>
-      graft.text.Keywords.zipfFit(docs(s, dir), "source", topN = 200)
-        .select(col("group").as("source"), col("n_terms"),
-          graft.functions.Portable.r6(col("slope")).as("slope"),
-          graft.functions.Portable.r6(col("intercept")).as("intercept"))),
-
-    // k-anonymity audit over the (lang, source, length-bucket)
-    // quasi-identifier: re-identification risk report at k = 5
-    "q_kanon" -> ((s, dir) =>
-      Integrity.kAnonymity(
-          docs(s, dir).withColumn("len_bucket", floor(col("n_chars") / 100).cast("long")),
-          Seq("lang", "source", "len_bucket"), k = 5L)
-        .select(col("k"), col("n_rows"), col("n_classes"), col("n_singletons"),
-          col("n_rows_at_risk"), col("min_class_size"),
-          graft.functions.Portable.r6(col("frac_at_risk")).as("frac_at_risk"))),
-
-    // average precision per lang (PR-curve area; contrast q_auc which
-    // saturates under class skew), ranking by length, tie-break doc_id
-    "q_ap" -> ((s, dir) =>
-      Evaluation.averagePrecision(docs(s, dir), Seq("lang"), "n_chars", "doc_id",
-          col("text").contains(" the "))
-        .select(col("lang"), col("n"), col("n_pos"),
-          graft.functions.Portable.r6(col("ap")).as("ap"))),
-
-    // markup density + strip stats over deterministically HTML-wrapped
-    // docs (doc_id % 3 == 0 gets tags, so the extraction is exercised)
-    "q_markup" -> ((s, dir) =>
-      docs(s, dir)
-        .withColumn("__t",
-          when(pmod(col("doc_id"), lit(3)) === 0,
-            concat(lit("<p class=\"x\">"), col("text"), lit("</p><a href=\"y\">l</a>")))
-            .otherwise(col("text")))
-        .select(col("doc_id"), TextFunctions.markupSignals(col("__t")).as("m"))
-        .select(col("doc_id"), col("m.n_tags").as("n_tags"),
-          col("m.n_links").as("n_links"), col("m.markup_chars").as("markup_chars"),
-          col("m.stripped_len").as("stripped_len"),
-          graft.functions.Portable.r6(col("m.text_ratio")).as("text_ratio"))),
-
-    // per-label embedding health: norm stats + mean cosine to the
-    // corpus centroid (anisotropy/collapse screen before ANN)
-    "q_embed_health" -> ((s, dir) =>
-      Embeddings.healthReport(emb(s, dir), "label", "embedding")
-        .select(col("group").cast("long").as("label"), col("n"),
-          graft.functions.Portable.r6(col("mean_norm")).as("mean_norm"),
-          graft.functions.Portable.r6(col("std_norm")).as("std_norm"),
-          graft.functions.Portable.r6(col("mean_cos")).as("mean_cos"))),
-
-    // Benjamini-Hochberg FDR over the (lang x source) long-doc-rate
-    // z-tests: which slices' deviations survive multiple testing.
-    // Arms split by an md5 coin, NOT doc_id parity — the generator's ids
-    // correlate parity with (lang, source), which would empty one arm of
-    // every cell
-    "q_bh" -> { (s, dir) =>
-      val tests = Hypothesis.twoProportionZ(docs(s, dir), Seq("lang", "source"),
-          col("n_chars") > 300,
-          pmod(TextFunctions.md5Hash32(concat(lit("bh|"), col("doc_id").cast("string"))),
-            lit(2)) === 0)
-        .select(col("lang"), col("source"),
-          graft.functions.Portable.r6(col("z")).as("z"),
-          graft.functions.Portable.r6(Hypothesis.pFromZ(col("z"))).as("p"))
-      Hypothesis.benjaminiHochberg(tests, "p", Seq("lang", "source"), alpha = 0.1)
-        .select(col("lang"), col("source"), col("z"), col("p"), col("m"),
-          col("rank"), graft.functions.Portable.r6(col("q")).as("q"), col("reject"))
-    },
-
-    // one-way ANOVA F of doc length across languages per source — the
-    // parametric complement of q_kruskal (same slicing for contrast)
-    "q_anova" -> ((s, dir) =>
-      Anova.anovaF(docs(s, dir), Seq("source"), "lang", "n_chars")
-        .select(col("source"), col("n"), col("k_arms"),
-          graft.functions.Portable.r6(col("ss_between")).as("ss_between"),
-          graft.functions.Portable.r6(col("ss_within")).as("ss_within"),
-          graft.functions.Portable.r6(col("f")).as("f"))),
-
-    // Brown-Forsythe variance-homogeneity across languages per source:
-    // "do the arms even have comparable spread" (ANOVA's precondition)
-    "q_levene" -> ((s, dir) =>
-      Anova.brownForsythe(docs(s, dir), Seq("source"), "lang", "n_chars")
-        .select(col("source"), col("n"), col("k_arms"),
-          graft.functions.Portable.r6(col("ss_between")).as("ss_between"),
-          graft.functions.Portable.r6(col("ss_within")).as("ss_within"),
-          graft.functions.Portable.r6(col("f")).as("f"))),
-
-    // two-group log-rank test on time-to-purchase, arms by md5 coin
-    // over users (the whole-curve companion to q_km_survival)
-    "q_logrank" -> ((s, dir) =>
-      Survival.logRank(ev(s, dir), "user_id", "ts", "event_type", "purchase",
-          inA = pmod(TextFunctions.md5Hash32(
-            concat(lit("lr|"), col("user_id").cast("string"))), lit(2)) === 0)
-        .select(col("n_a"), col("n_b"), col("o_a"),
-          graft.functions.Portable.r6(col("e_a")).as("e_a"),
-          graft.functions.Portable.r6(col("v")).as("v"),
-          graft.functions.Portable.r6(col("chi2")).as("chi2"))),
-
-    // Cramer's V coupling of lang and source — the effect-size summary
-    // of q_chi2's cell frame (chi-square alone grows with N)
-    "q_cramers_v" -> ((s, dir) =>
-      Stats.cramersV(docs(s, dir), "lang", "source")
-        .select(col("n_a_levels"), col("n_b_levels"), col("n"),
-          graft.functions.Portable.r6(col("chi2")).as("chi2"),
-          graft.functions.Portable.r6(col("v")).as("v"))),
-
-    // degree assortativity of the word-adjacency graph (hub-hub vs
-    // hub-leaf structural fingerprint; one row)
-    "q_assortativity" -> ((s, dir) =>
-      Graph.assortativity(wordAdjacencyEdges(s, dir))
-        .select(col("n_nodes"), col("n_edges"),
-          graft.functions.Portable.r6(col("r")).as("r"))),
-
-    // modularity audit of the first-letter labeling of the word graph
-    // (does an arbitrary coloring bind edges? Q ~ 0 says no — the
-    // operator's value is auditing REAL cluster labels the same way)
-    "q_modularity" -> { (s, dir) =>
-      val e = wordAdjacencyEdges(s, dir)
-      val labels = e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node")))
-        .distinct()
-        .withColumn("label", substring(col("node"), 1, 1))
-      Graph.modularity(e, labels)
-        .select(col("label"), col("n_nodes"), col("n_internal"),
-          graft.functions.Portable.r6(col("e_c")).as("e_c"),
-          graft.functions.Portable.r6(col("a_c")).as("a_c"),
-          graft.functions.Portable.r6(col("q_c")).as("q_c"))
-    },
-
-    // Kendall tau-b of per-user (event count vs total value) per type,
-    // on the deterministic 150-unit sample (pairwise by nature)
-    "q_kendall" -> { (s, dir) =>
-      val okv = col("value").isNotNull && !isnan(col("value"))
-      val units = ev(s, dir)
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(
-          count(lit(1)).as("n_events"),
-          coalesce(sum(when(okv, col("value").cast("decimal(38,6)"))),
-            lit(0).cast("decimal(38,6)")).cast("double").as("v"))
-      Stats.kendallTau(units, Seq("event_type"), "user_id", "n_events", "v",
-          sampleN = 150)
-        .select(col("event_type"), col("n"), col("n_pairs"),
-          col("concordant"), col("discordant"),
-          graft.functions.Portable.r6(col("tau_b")).as("tau_b"))
-    },
-
-    // Ljung-Box portmanteau "is it white noise" over the same per-user
-    // series as q_acf (lags 1..3)
-    "q_ljung_box" -> ((s, dir) =>
-      Stats.ljungBox(ev(s, dir), Seq("user_id"), "ts", "event_id", "value", maxLag = 3)
-        .select(col("user_id"), col("n_obs"), col("n_lags"),
-          graft.functions.Portable.r6(col("q")).as("q"))),
-
-    // seasonal-naive skill (MASE-style) of hourly volumes per event
-    // type at period 24: which streams have a real daily cycle
-    "q_mase" -> ((s, dir) =>
-      Seasonal.seasonalNaiveSkill(ev(s, dir), "event_type", "ts", period = 24)
-        .select(col("key").as("event_type"), col("n_buckets"),
-          graft.functions.Portable.r6(col("mae_naive")).as("mae_naive"),
-          graft.functions.Portable.r6(col("mae_seasonal")).as("mae_seasonal"),
-          graft.functions.Portable.r6(col("skill")).as("skill"))),
-
-    // CCNet-style per-language LM terciles (head/middle/tail summary)
-    "q_ccnet_buckets" -> ((s, dir) =>
-      graft.text.Tfidf.lmQualityBuckets(docs(s, dir), "lang", nBuckets = 3)
-        .select(col("group").as("lang"), col("bucket"), col("n_docs"),
-          graft.functions.Portable.r6(col("mean_lp")).as("mean_lp"),
-          graft.functions.Portable.r6(col("min_lp")).as("min_lp"),
-          graft.functions.Portable.r6(col("max_lp")).as("max_lp"))),
-
-    // per-source boilerplate-line report (top 5 lines stamped into >= 3
-    // docs; same line-ification as q_line_dedup, plus a deterministic
-    // per-source footer on every 2nd doc so the template-stamping case
-    // is actually exercised — q_markup's wrapping discipline)
-    "q_boilerplate" -> ((s, dir) =>
-      graft.text.LineDedup.boilerplateReport(
-          docs(s, dir).select(col("doc_id"), col("source"),
-            concat(
-              replace(col("text"), lit(" table "), lit("\n")),
-              when(pmod(col("doc_id"), lit(2)) === 0,
-                concat(lit("\ncopyright "), col("source"))).otherwise(lit(""))).as("text")),
-          "doc_id", "text", "source", minDocs = 3L, topK = 5)
-        .select(col("group").as("source"), col("line"), col("n_docs"), col("rank"))),
-
-    // l-diversity of source within (lang, length-bucket) classes — the
-    // homogeneity-attack complement of q_kanon
-    "q_ldiv" -> ((s, dir) =>
-      Integrity.lDiversity(
-          docs(s, dir).withColumn("len_bucket", floor(col("n_chars") / 100).cast("long")),
-          Seq("lang", "len_bucket"), "source", l = 3L)
-        .select(col("l"), col("n_rows"), col("n_classes"), col("n_classes_below_l"),
-          col("n_rows_at_risk"), col("min_diversity"),
-          graft.functions.Portable.r6(col("frac_at_risk")).as("frac_at_risk"))),
-
-    // item-item cosine over (user x event_type) interaction counts —
-    // "users who did X also did Y"
-    "q_item_cf" -> ((s, dir) =>
-      Recommend.itemCosine(ev(s, dir), "user_id", "event_type", minUsers = 2L)
-        .select(col("item_a"), col("item_b"), col("n_users"),
-          graft.functions.Portable.r6(col("cosine")).as("cosine"))),
-
-    // Local Outlier Factor (k = 5) over the embeddings — density-aware
-    // vector outlier screen
-    "q_lof" -> ((s, dir) =>
-      graft.ann.Lof.lof(emb(s, dir), k = 5)
-        .select(col("id").as("vec_id"),
-          graft.functions.Portable.r6(col("k_dist")).as("k_dist"),
-          graft.functions.Portable.r6(col("lrd")).as("lrd"),
-          graft.functions.Portable.r6(col("lof")).as("lof"))),
-
-    // LOF on the SCALE PATH: multi-probe LSH candidate blocking (a
-    // SHUFFLE cell join — ~(nBits+1)/2^nBits of all-pairs, no broadcast)
-    // feeding the same n×k-bounded LOF tail. This is the registration a
-    // 100 TB pipeline runs; q_lof above keeps the exact all-pairs
-    // definition as the oracle-checkable reference (and is the one
-    // brute-by-contract nested-loop allowance in PlanShapeSpec).
-    "q_lof_scalable" -> { (s, dir) =>
-      val e = emb(s, dir)
-      // FUSED cell-join LOF (pairs never materialize — see
-      // Lof.selfProbeLof) with the grid sized to the corpus
-      // (2^nBits ≈ √n, floor 7): identical output to the former
-      // selfProbeCandidates∘lofWithCandidates at both oracle scales
-      // (≤2k vectors ⇒ nBits=7), but holds the (nBits+1)·n^1.5 pair
-      // bound and streams it — the round-9 verdict's "would this
-      // survive one more decade" question, answered in code.
-      // sf10 first-sample spread (r10 bench: 93.5/37.1/36.0 s) is
-      // WARMUP, not sizing: SpillProbe r11 measured 102.6/48.5/31.5 s
-      // with byte-identical shuffle (0.8 GB) and sorter spill
-      // (8 GB disk / 34 GB mem) on every run while GC fell
-      // 30.9 → 16.8 → 8.4 s — the spill footprint is a constant plan
-      // property of the cell join's sorter, the spread is JIT/page-
-      // cache cold-start, so the median is the honest number and the
-      // grid needs no re-size
-      graft.ann.Lof.selfProbeLof(
-        e, k = 5, nBits = graft.ann.Lof.sizedBits(e.count()), probeRadius = 1)
-        .select(col("id").as("vec_id"),
-          graft.functions.Portable.r6(col("k_dist")).as("k_dist"),
-          graft.functions.Portable.r6(col("lrd")).as("lrd"),
-          graft.functions.Portable.r6(col("lof")).as("lof"))
-    },
-
-    // Hill tail-index of doc lengths per source over the top-50 order
-    // statistics — how heavy is the length tail a clamp must survive
-    "q_hill" -> ((s, dir) =>
-      Stats.hillTailIndex(docs(s, dir), Seq("source"), "n_chars", "doc_id", k = 50)
-        .select(col("source"), col("n"), col("x_tail"),
-          graft.functions.Portable.r6(col("alpha")).as("alpha"))),
-
-    // simplified silhouette per k-means cell: is the IVF index any good
-    "q_silhouette" -> { (s, dir) =>
-      val e = emb(s, dir)
-      graft.ann.ClusterQuality.silhouette(e, KMeans.initCentroids(e, k = 8))
-        .select(col("cid"), col("n"),
-          graft.functions.Portable.r6(col("mean_d1")).as("mean_d1"),
-          graft.functions.Portable.r6(col("mean_sil")).as("mean_sil"))
-    },
-
-    // Davies-Bouldin per k-means cell: worst scatter/separation ratio
-    "q_davies_bouldin" -> { (s, dir) =>
-      val e = emb(s, dir)
-      graft.ann.ClusterQuality.daviesBouldin(e, KMeans.initCentroids(e, k = 8))
-        .select(col("cid"), col("n"),
-          graft.functions.Portable.r6(col("s_c")).as("s_c"),
-          graft.functions.Portable.r6(col("db")).as("db"))
-    },
-
-    // Theil-Sen robust slope of value-vs-time (per day) per user series
-    "q_theil_sen" -> ((s, dir) =>
-      graft.operators.Trend.theilSen(
-          ev(s, dir).withColumn("t_days",
-            unix_micros(col("ts")).cast("double") / lit(86400000000.0)),
-          Seq("user_id"), "event_id", "t_days", "value", sampleN = 150)
-        .select(col("user_id"), col("n"), col("n_slopes"),
-          graft.functions.Portable.r6(col("slope")).as("slope"))),
-
-    // Mann-Kendall "is the drift real" companion on the same series
-    "q_mann_kendall" -> ((s, dir) =>
-      graft.operators.Trend.mannKendall(ev(s, dir), Seq("user_id"), "ts", "event_id",
-          "value", sampleN = 150)
-        .select(col("user_id"), col("n"), col("s"),
-          graft.functions.Portable.r6(col("var_s")).as("var_s"),
-          graft.functions.Portable.r6(col("z")).as("z"))),
-
-    // effective-number diversity of each event stream across users
-    "q_diversity" -> ((s, dir) =>
-      graft.operators.Diversity.indices(ev(s, dir), Seq("event_type"), "user_id")
-        .select(col("event_type"), col("n"), col("richness"),
-          graft.functions.Portable.r6(col("shannon")).as("shannon"),
-          graft.functions.Portable.r6(col("simpson")).as("simpson"),
-          graft.functions.Portable.r6(col("hill1")).as("hill1"),
-          graft.functions.Portable.r6(col("hill2")).as("hill2"))),
-
-    // RFM segmentation of customers within market segments
-    "q_rfm" -> { (s, dir) =>
-      val o = Tables.orders(s, dir)
-      val c = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"))
-      graft.operators.Rfm.rfm(o.join(c, col("o_custkey") === col("c_custkey")),
-          "c_mktsegment", "o_custkey", "o_orderdate", "o_totalprice", nBins = 5)
-        .select(col("seg"), col("entity"),
-          unix_micros(col("recency").cast("timestamp")).as("recency_us"),
-          col("frequency"), col("monetary"), col("r"), col("f"), col("m"), col("rfm"))
-    },
-
-    // Pile-style token-budget epoch allocation under the mixture weights
-    "q_epoch_alloc" -> ((s, dir) =>
-      Sampling.epochAllocation(docs(s, dir), "source", "n_chars",
-          MixtureWeights, budget = 2000000L, maxEpochs = 3.0)
-        .select(col("source"), col("n_rows"), col("tokens"),
-          graft.functions.Portable.r6(col("weight")).as("weight"),
-          graft.functions.Portable.r6(col("target_tokens")).as("target_tokens"),
-          graft.functions.Portable.r6(col("epochs")).as("epochs"),
-          graft.functions.Portable.r6(col("alloc_tokens")).as("alloc_tokens"),
-          graft.functions.Portable.r6(col("unspent")).as("unspent"))),
-
-    // URL canonicalization over synthesized messy URLs (case, userinfo,
-    // default ports, tracking params, unsorted query, fragments)
-    "q_url_canon" -> ((s, dir) => {
-      val url = concat(
-        when(col("doc_id") % 2 === 0, lit("HTTPS://user:pw@")).otherwise(lit("http://")),
-        lit("WWW."), col("source"), lit(".Example.COM"),
-        when(col("doc_id") % 2 === 0, lit(":443")).otherwise(lit(":8080")),
-        lit("/Docs/"), col("doc_id"),
-        when(col("doc_id") % 3 === 0, lit("/")).otherwise(lit("")),
-        lit("?utm_source=feed&b=2&a=1&gclid=x"),
-        when(col("doc_id") % 5 === 0, lit("&ref=tw")).otherwise(lit("&z=9")),
-        lit("#frag"))
-      docs(s, dir).select(col("doc_id"),
-        graft.text.UrlFunctions.canonicalize(url).as("canon"))
-    }),
-
-    // classical additive decomposition of hourly volumes per event type
-    "q_decompose" -> ((s, dir) =>
-      Seasonal.decompose(ev(s, dir), "event_type", "ts", period = 24)
-        .select(col("key").as("event_type"), unix_micros(col("bucket")).as("bucket_us"),
-          col("phase"), col("v"),
-          graft.functions.Portable.r6(col("trend")).as("trend"),
-          graft.functions.Portable.r6(col("seasonal")).as("seasonal"),
-          graft.functions.Portable.r6(col("residual")).as("residual"))),
-
-    // isotonic (PAVA) recalibration of a length-based quality score
-    // against the ' the ' label, per language — q_ece's companion FIX
-    "q_isotonic" -> ((s, dir) =>
-      Evaluation.isotonicCalibration(
-          docs(s, dir).withColumn("score",
-            least(lit(1.0), col("n_chars").cast("double") / 2000.0)),
-          Seq("lang"), "score", col("text").contains(" the "), nBins = 20)
-        .select(col("lang"), col("bin"), col("n"),
-          graft.functions.Portable.r6(col("conf")).as("conf"),
-          graft.functions.Portable.r6(col("acc")).as("acc"),
-          graft.functions.Portable.r6(col("iso")).as("iso"))),
-
-    // earth-mover drift of per-event-type value distributions between
-    // the even/odd event halves — q_psi's "how far did mass move" twin
-    "q_emd" -> ((s, dir) =>
-      Stats.emd1d(ev(s, dir), Seq("event_type"), "value",
-          isRef = col("event_id") % 2 === 0, nBins = 20)
-        .select(col("event_type"), col("n_ref"), col("n_cur"), col("bin_width"),
-          graft.functions.Portable.r6(col("emd")).as("emd"))),
-
-    // Fellegi-Sunter match weights over consecutive-id blocks of 64:
-    // block SIZE is fixed, so candidate pairs stay LINEAR in the corpus
-    // (a fixed block COUNT grows blocks with N and pairs with N²);
-    // data-exact u-probabilities, prior m = 0.9
-    "q_fs_weights" -> { (s, dir) =>
-      val c = Tables.customer(s, dir).select(col("c_custkey"), col("c_mktsegment"),
-        col("c_nationkey"),
-        floor(col("c_acctbal") / 1000.0).cast("long").as("bal_bucket"))
-      val ids = c.select(col("c_custkey").cast("long").as("id"))
-      val pairs = ids.as("x")
-        .join(ids.as("y"),
-          floor(col("x.id") / 64.0) === floor(col("y.id") / 64.0) &&
-            col("x.id") < col("y.id"))
-        .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-      FuzzyJoin.fellegiSunter(c, "c_custkey", pairs,
-          Seq("c_mktsegment", "c_nationkey", "bal_bucket"))
-        .select(col("id_a"), col("id_b"), col("n_agree"),
-          graft.functions.Portable.r6(col("weight")).as("weight"))
-    },
-
-    // rank-biased overlap of the length-prior vs id-prior top-10 per lang
-    "q_rbo" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val d = docs(s, dir)
-      val wA = Window.partitionBy(col("lang")).orderBy(col("n_chars").desc, col("doc_id"))
-      val wB = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      val a = d.select(col("lang"), col("doc_id"), row_number().over(wA).as("rank"))
-      val b = d.select(col("lang"), col("doc_id"), row_number().over(wB).as("rank"))
-      graft.text.RetrievalEval.rbo(a, b, "lang", "doc_id", "rank", k = 10, p = 0.9)
-        .select(col("lang"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("overlap_k")).as("overlap_k"),
-          graft.functions.Portable.r6(col("rbo")).as("rbo"))
-    },
-
-    // Theil's U both ways: does source determine language, or vice versa
-    "q_theils_u" -> { (s, dir) =>
-      val d = docs(s, dir)
-      def one(x: String, y: String, tag: String) =
-        Stats.theilsU(d, Seq.empty, x, y).withColumn("direction", lit(tag))
-      one("source", "lang", "lang_given_source")
-        .unionByName(one("lang", "source", "source_given_lang"))
-        .select(col("direction"), col("n"), col("nx"), col("ny"),
-          graft.functions.Portable.r6(col("h_y")).as("h_y"),
-          graft.functions.Portable.r6(col("h_y_given_x")).as("h_y_given_x"),
-          graft.functions.Portable.r6(col("u")).as("u"))
-    },
-
-    // leakage-safe LOO target encoding of source against doc length
-    "q_target_encode" -> ((s, dir) =>
-      graft.operators.TargetEncode.leaveOneOut(docs(s, dir), "source", "n_chars",
-          smoothing = 10.0)
-        .select(col("doc_id"), col("source"),
-          graft.functions.Portable.r6(col("enc")).as("enc"))),
-
-    // quality-score softmax sampling weights per language (T = 0.5)
-    "q_softmax" -> ((s, dir) =>
-      Stats.softmaxWeights(
-          docs(s, dir).withColumn("score", col("n_chars").cast("double") / 1000.0),
-          Seq("lang"), "doc_id", "score", temperature = 0.5)
-        .select(col("lang"), col("doc_id"),
-          graft.functions.Portable.r6(col("score")).as("score"),
-          graft.functions.Portable.r6(col("w")).as("w"))),
-
-    // canonical-URL exact dedup: the q_url_canon synthetic crawl where
-    // the SAME page appears under tracking-param/caser/port spellings
-    // collapses to one survivor per canonical key (min doc_id)
-    "q_url_dedup" -> ((s, dir) => {
-      val url = concat(
-        when(col("doc_id") % 2 === 0, lit("HTTPS://")).otherwise(lit("https://")),
-        col("source"), lit(".example.com"),
-        when(col("doc_id") % 2 === 0, lit(":443")).otherwise(lit("")),
-        lit("/page/"), (col("doc_id") / 10).cast("long"),
-        when(col("doc_id") % 3 === 0, lit("?utm_source=x")).otherwise(lit("")))
-      docs(s, dir)
-        .withColumn("canon", graft.text.UrlFunctions.canonicalize(url))
-        .groupBy(col("canon"))
-        .agg(min(col("doc_id")).as("survivor_id"), count(lit(1)).as("n_spellings"))
-    }),
-
-    // padding-minimizing length-bucketed batches of 32 per source
-    "q_length_buckets" -> ((s, dir) =>
-      Packing.lengthBucketBatches(docs(s, dir), "source", "doc_id", "n_chars",
-          batchSize = 32)
-        .select(col("by").as("source"), col("batch"), col("n"),
-          col("min_len"), col("max_len"), col("sum_len"),
-          graft.functions.Portable.r6(col("pad_frac")).as("pad_frac"))),
-
-    // Good-Turing unseen vocabulary mass + Chao1 floor per source
-    "q_unseen_mass" -> ((s, dir) =>
-      graft.operators.Diversity.unseenMass(
-          docs(s, dir).select(col("source"),
-            explode(TextFunctions.wordTokens(col("text"))).as("word")),
-          Seq("source"), "word")
-        .select(col("source"), col("n"), col("richness"), col("n1"), col("n2"),
-          graft.functions.Portable.r6(col("missing_mass")).as("missing_mass"),
-          graft.functions.Portable.r6(col("chao1")).as("chao1"))),
-
-    // clustered ratio metric: heavy-event rate per user-cohort with the
-    // delta-method CI (unit = user, x = heavy events, y = all events)
-    "q_ratio_ci" -> ((s, dir) => {
-      val units = ev(s, dir)
-        .groupBy((col("user_id") % 4).as("cohort"), col("user_id"))
-        .agg(
-          count(when(col("value") > 50.0, lit(1))).cast("double").as("x"),
-          count(lit(1)).cast("double").as("y"))
-      Stats.ratioMetricCi(units, Seq("cohort"), "x", "y")
-        .select(col("cohort"), col("n"),
-          graft.functions.Portable.r6(col("sum_x")).as("sum_x"),
-          graft.functions.Portable.r6(col("sum_y")).as("sum_y"),
-          graft.functions.Portable.r6(col("ratio")).as("ratio"),
-          graft.functions.Portable.r6(col("se")).as("se"),
-          graft.functions.Portable.r6(col("ci_lo")).as("ci_lo"),
-          graft.functions.Portable.r6(col("ci_hi")).as("ci_hi"))
-    }),
-
-    // always-valid (peeking-safe) sequential test on the event halves
-    "q_msprt" -> ((s, dir) =>
-      Stats.msprt(ev(s, dir), Seq("event_type"), "value",
-          col("event_id") % 2 === 0, tau2 = 1.0)
-        .select(col("event_type"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("theta")).as("theta"),
-          graft.functions.Portable.r6(col("v")).as("v"),
-          graft.functions.Portable.r6(col("lambda")).as("lambda"),
-          graft.functions.Portable.r6(col("p_always")).as("p_always"))),
-
-    // purchases per observed user-day, arm B vs arm A
-    "q_rate_ratio" -> ((s, dir) =>
-      Stats.rateRatio(ev(s, dir), Seq("event_type"),
-          isEvent = col("value") > 50.0, exposureCol = "value",
-          armB = col("event_id") % 2 === 0)
-        .select(col("event_type"), col("k_a"), col("k_b"),
-          graft.functions.Portable.r6(col("t_a")).as("t_a"),
-          graft.functions.Portable.r6(col("t_b")).as("t_b"),
-          graft.functions.Portable.r6(col("rate_a")).as("rate_a"),
-          graft.functions.Portable.r6(col("rate_b")).as("rate_b"),
-          graft.functions.Portable.r6(col("rate_ratio")).as("rate_ratio"),
-          graft.functions.Portable.r6(col("log_rr")).as("log_rr"),
-          graft.functions.Portable.r6(col("se_log_rr")).as("se_log_rr"))),
-
-    // standardized effect size of value between the event halves
-    "q_effect_size" -> ((s, dir) =>
-      Stats.effectSize(ev(s, dir), Seq("event_type"), "value",
-          col("event_id") % 2 === 0)
-        .select(col("event_type"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("diff")).as("diff"),
-          graft.functions.Portable.r6(col("s_pooled")).as("s_pooled"),
-          graft.functions.Portable.r6(col("d")).as("d"),
-          graft.functions.Portable.r6(col("g")).as("g"))),
-
-    // Haldane-corrected odds ratio of the long-doc outcome per lang
-    "q_odds_ratio" -> ((s, dir) =>
-      Stats.oddsRatio(docs(s, dir), Seq("lang"),
-          hit = col("n_chars") > 300, armB = col("doc_id") % 2 === 0)
-        .select(col("lang"), col("n_a"), col("n_b"), col("k_a"), col("k_b"),
-          graft.functions.Portable.r6(col("odds_ratio")).as("odds_ratio"),
-          graft.functions.Portable.r6(col("log_or")).as("log_or"),
-          graft.functions.Portable.r6(col("se_log_or")).as("se_log_or"))),
-
-    // every event stream Welch-tested against the 'view' control arm
-    "q_mvc" -> ((s, dir) =>
-      Stats.manyVsControl(ev(s, dir), "event_type", "value", controlArm = "view")
-        .select(col("arm"), col("n"), col("n_control"),
-          graft.functions.Portable.r6(col("mean")).as("mean"),
-          graft.functions.Portable.r6(col("mean_control")).as("mean_control"),
-          graft.functions.Portable.r6(col("diff")).as("diff"),
-          graft.functions.Portable.r6(col("se")).as("se"),
-          graft.functions.Portable.r6(col("z")).as("z"),
-          graft.functions.Portable.r6(col("p")).as("p"))),
-
-    // A/B health gate: is the even/odd split actually 50/50 per stream
-    "q_srm" -> ((s, dir) =>
-      Stats.sampleRatioMismatch(ev(s, dir), Seq("event_type"),
-          col("event_id") % 2 === 0, expectedB = 0.5)
-        .select(col("event_type"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("frac_b")).as("frac_b"),
-          graft.functions.Portable.r6(col("chi2")).as("chi2"))),
-
-    // distributional A/B: quantile shift of value between event halves
-    "q_qte" -> ((s, dir) =>
-      Stats.quantileShift(ev(s, dir), Seq("event_type"), "value",
-          armB = col("event_id") % 2 === 0, ps = QuantilePs)
-        .select(col("event_type"), col("p"),
-          graft.functions.Portable.r6(col("q_a")).as("q_a"),
-          graft.functions.Portable.r6(col("q_b")).as("q_b"),
-          graft.functions.Portable.r6(col("shift")).as("shift"))),
-
-    // strata-adjusted ATE across event types (Simpson-proof A/B)
-    "q_strat_ate" -> ((s, dir) =>
-      Stats.stratifiedAte(ev(s, dir), Seq("event_type"), "value",
-          col("event_id") % 2 === 0)
-        .select(col("n"), col("n_strata"), col("n_strata_incomplete"),
-          graft.functions.Portable.r6(col("ate")).as("ate"),
-          graft.functions.Portable.r6(col("se")).as("se"),
-          graft.functions.Portable.r6(col("z")).as("z"))),
-
-    // Nelson-Aalen cumulative hazard on the q_km_survival spans
-    "q_nelson_aalen" -> ((s, dir) =>
-      Survival
-        .nelsonAalen(ev(s, dir), "user_id", "ts", "event_type", "purchase")
-        .select(col("t_day"), col("n_risk"), col("d_events"), col("c_censored"),
-          graft.functions.Portable.r6(col("hazard")).as("hazard"),
-          graft.functions.Portable.r6(col("cum_hazard")).as("cum_hazard"))),
-
-    // order-free per-source content checksum (change detection)
-    "q_checksum" -> ((s, dir) =>
-      Validate.contentChecksum(docs(s, dir), Seq("source"),
-          Seq("doc_id", "text", "lang", "n_chars"))
-        .select(col("source"), col("n_rows"), col("checksum"))),
-
-    // in-document repeated-line removal (C4-family cleaning REWRITE)
-    "q_dedup_lines_doc" -> ((s, dir) =>
-      TextFunctions.withDedupedLines(docs(s, dir), col("text"), "clean")
-        .select(col("doc_id"), col("clean"),
-          col("clean_n_before").as("n_before"), col("clean_n_after").as("n_after"))),
-
-    // pre-launch A/B power: arm size needed to detect a 5% shift of
-    // value per event stream at alpha=.05 / power=.8
-    "q_power" -> ((s, dir) =>
-      Stats.powerAnalysis(ev(s, dir), Seq("event_type"), "value", relEffect = 0.05)
-        .select(col("event_type"), col("n"),
-          graft.functions.Portable.r6(col("mean")).as("mean"),
-          graft.functions.Portable.r6(col("sd")).as("sd"),
-          graft.functions.Portable.r6(col("delta")).as("delta"),
-          col("n_required"))),
-
-    // threshold operating table for the q_isotonic score/label pair
-    "q_pr_curve" -> ((s, dir) =>
-      Evaluation.prCurve(
-          docs(s, dir).withColumn("score",
-            least(lit(1.0), col("n_chars").cast("double") / 2000.0)),
-          Seq("lang"), "score", col("text").contains(" the "), nBins = 20)
-        .select(col("lang"),
-          graft.functions.Portable.r6(col("cutoff")).as("cutoff"),
-          col("n_ge"), col("tp"), col("fp"), col("fn"),
-          graft.functions.Portable.r6(col("precision")).as("precision"),
-          graft.functions.Portable.r6(col("recall")).as("recall"),
-          graft.functions.Portable.r6(col("f1")).as("f1"))),
-
-    // t-closeness audit: lang distribution skew per (source, len-bucket)
-    // class vs the global corpus, TVD threshold 0.2
-    "q_tcloseness" -> ((s, dir) =>
-      Integrity.tCloseness(
-          docs(s, dir).withColumn("len_bucket", floor(col("n_chars") / 100).cast("long")),
-          Seq("source", "len_bucket"), "lang", t = 0.2)
-        .select(col("t"), col("n_rows"), col("n_classes"), col("n_classes_above_t"),
-          col("n_rows_at_risk"), col("frac_at_risk"),
-          graft.functions.Portable.r6(col("max_distance")).as("max_distance"))),
-
-    // DFT periodogram over hourly event counts: which periods (2..26h)
-    // each stream actually carries
-    "q_periodogram" -> ((s, dir) =>
-      graft.operators.Seasonal.periodogram(ev(s, dir), "event_type", "ts",
-          minPeriod = 2, maxPeriod = 26)
-        .select(col("key").as("event_type"), col("period").cast("long").as("period"),
-          col("n_buckets"), col("power"), col("rk").cast("long").as("rk"))),
-
-    // dominant period + spectral concentration per event stream
-    "q_dominant_period" -> ((s, dir) =>
-      graft.operators.Seasonal.dominantPeriod(ev(s, dir), "event_type", "ts",
-          minPeriod = 2, maxPeriod = 26)
-        .select(col("key").as("event_type"), col("n_buckets"),
-          col("dominant_period").cast("long").as("dominant_period"),
-          col("power_share"), col("spectral_entropy"))),
-
-    // quality-vs-cost Pareto frontier over documents (cost = n_chars,
-    // quality = ' the '-density per 100 chars — non-monotone in cost)
-    "q_pareto" -> ((s, dir) => {
-      val quality = (length(col("text")) -
-        length(replace(col("text"), lit(" the "), lit("")))) / 5 *
-        lit(100.0) / col("n_chars").cast("double")
-      Selection.paretoFrontier(
-          docs(s, dir).filter(col("n_chars") > 0 && col("text").isNotNull)
-            .withColumn("quality", quality),
-          "n_chars", "quality")
-        .select(col("doc_id"), col("n_chars"),
-          graft.functions.Portable.r6(col("quality")).as("quality"))
-    }),
-
-    // Matryoshka truncation fidelity: recall@5 of prefix-d cosine
-    // search vs the full 64-dim search, d in {8, 16, 32}
-    "q_trunc_recall" -> ((s, dir) => {
-      val e = emb(s, dir)
-      graft.ann.Embeddings.truncationFidelity(e, e.filter(col("vec_id") < 8),
-          k = 5, dims = Seq(8, 16, 32))
-        .select(col("dim").cast("long").as("dim"), col("n_queries"),
-          graft.functions.Portable.r6(col("mean_recall")).as("mean_recall"),
-          col("min_recall"), col("n_corpus"),
-          col("floats_per_query").cast("long").as("floats_per_query"))
-    }),
-
-    // RAKE keyphrases: top-10 stopword-free phrases per source
-    "q_rake" -> ((s, dir) =>
-      graft.text.Keywords.rake(docs(s, dir), "source", "doc_id",
-          TextFunctions.Stopwords.flatMap(_._2).distinct, topN = 10)
-        .select(col("group").as("source"), col("phrase"), col("n_words"),
-          col("n_occurrences"), col("score"), col("rk"))),
-
-    // covariate balance (SMD table) between the event-id halves
-    "q_balance" -> ((s, dir) =>
-      Stats.covariateBalance(
-          ev(s, dir).withColumn("hr", hour(col("ts")).cast("double")),
-          Seq("value", "hr"), col("event_id") % 2 === 0)
-        .select(col("covariate"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("mean_a")).as("mean_a"),
-          graft.functions.Portable.r6(col("mean_b")).as("mean_b"),
-          graft.functions.Portable.r6(col("smd")).as("smd"),
-          graft.functions.Portable.r6(col("variance_ratio")).as("variance_ratio"))),
-
-    // composed seasonality stack: measure each event stream's dominant
-    // cycle among calendar-plausible candidates (6/8/12/24h), then
-    // decompose it AT that period — q_dominant_period and q_decompose
-    // proven to CHAIN (one fact pass, one lazy plan), not just run alone
-    "q_season_pipeline" -> ((s, dir) =>
-      graft.operators.Seasonal.decomposeAtDominant(ev(s, dir), "event_type", "ts",
-          periods = Seq(6, 8, 12, 24))
-        .select(col("key").as("event_type"), unix_micros(col("bucket")).as("bucket_us"),
-          col("phase").cast("long").as("phase"), col("period"), col("v"),
-          graft.functions.Portable.r6(col("trend")).as("trend"),
-          graft.functions.Portable.r6(col("seasonal")).as("seasonal"),
-          graft.functions.Portable.r6(col("residual")).as("residual"))),
-
-    // WOE/IV feature screen: does source/lang separate long docs
-    // (n_chars > 500) from short ones — the pre-classifier leakage check
-    "q_woe" -> ((s, dir) =>
-      graft.operators.Woe.weightOfEvidence(docs(s, dir), Seq("source", "lang"),
-        col("n_chars") > 500)),
-
-    // ε-DP count release: per-(source, lang) doc counts with
-    // deterministic seeded Laplace noise — publishable corpus stats
-    "q_dp_counts" -> ((s, dir) =>
-      Integrity.dpCounts(docs(s, dir), Seq("source", "lang"), epsilon = 1.0, seed = "dp42")),
-
-    // corpus BLEU per source: candidate = the doc with every 7th-hash
-    // token dropped (deterministic lossy rewrite), reference = the doc —
-    // the n-gram-retention eval of any clean/compress/rewrite stage
-    "q_bleu" -> ((s, dir) => {
-      val toks = TextFunctions.wordTokens(col("text"))
-      val cand = array_join(
-        filter(toks, (t, i) =>
-          TextFunctions.md5Hash32(
-            concat(col("doc_id").cast("string"), lit("|"), (i + lit(1)).cast("string"))) % 7 =!= 0),
-        " ")
-      graft.text.Bleu.corpusBleu(
-        docs(s, dir).select(col("source"), col("doc_id"), cand.as("cand"), col("text").as("ref")),
-        Seq("source"), "doc_id", "cand", "ref")
-    }),
-
-    // KMV vocabulary-overlap matrix: per-source k=256 distinct-token
-    // sketches, then pairwise union/intersection/Jaccard estimates from
-    // the sketches alone (no per-pair corpus joins)
-    "q_kmv" -> ((s, dir) => {
-      val toks = docs(s, dir)
-        .select(col("source"), explode(TextFunctions.wordTokens(col("text"))).as("tok"))
-      Sketches.kmvOverlap(Sketches.kmvDistinct(toks, Seq("source"), "tok", k = 256), "source", 256)
-        .select(col("key_a").as("src_a"), col("key_b").as("src_b"),
-          col("est_a"), col("est_b"), col("est_union"), col("est_jaccard"), col("est_intersection"))
-    }),
-
-    // Dirichlet query-likelihood retrieval — the LM twin of
-    // q_bm25_retrieve on the same probe queries
-    "q_qlm" -> ((s, dir) =>
-      graft.text.QueryLikelihood
-        .retrieveTopK(
-          docs(s, dir),
-          Seq(
-            "q_joins"  -> Seq("join", "hash", "merge"),
-            "q_scan"   -> Seq("scan", "filter", "column"),
-            "q_stream" -> Seq("stream", "window", "batch")),
-          k = 10, mu = 1000.0)
-        .select(col("query_id"), col("id").as("doc_id"), col("rank"), col("qlm"))),
-
-    // MMR diverse re-rank: top-20 cosine candidates per query, then the
-    // greedy λ=0.7 diversity selection of 5 — retrieval generates,
-    // bounded MMR re-ranks
-    "q_mmr" -> { (s, dir) =>
-      val e = emb(s, dir)
-      val cand = graft.ann.Similarity
-        .bruteForceTopK(e, e.filter(col("vec_id") < 3), k = 20)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      graft.pipeline.Selection
-        .mmrSelect(cand, e.select(col("vec_id").as("neighbor_id"), col("embedding")),
-          "query_id", "neighbor_id", "cosine", k = 5, lambda = 0.7)
-        .select(col("query_id"), col("step"), col("neighbor_id"),
-          col("cosine").as("rel"), col("max_sim"), col("mmr"))
-    },
-
-    // LPA communities over the REPEAT co-purchase graph: parts sharing
-    // an order ≥ 2 times (the single-co-occurrence edges are noise that
-    // welds a dense random blob), 3 synchronous rounds, sizes ≥ 5.
-    // Per-order pair generation is bounded by order size — the
-    // market-basket shape, never an all-pairs part join
-    "q_communities" -> { (s, dir) =>
-      val li = Tables.lineitem(s, dir).select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      // shape note (round 10): the in-bucket pair-explosion alternative
-      // (groupBy(ok) → collect_list → orderedPairs, hash-identical) was
-      // MEASURED SLOWER at sf10 — 43.2 s median vs this join's 25.4 s
-      // bench median, both zero-spill — because collect_list's partial
-      // aggregation cannot shrink the 60M-row exchange while the
-      // sort-merge join streams it; the r9 single-sample 67 s that
-      // prompted the experiment was JIT/GC noise (CommProbe: edges grow
-      // exactly 10.0× for 10× data). Keeping the faster plan.
-      // round-13 continuation (guide §2.2, CommShapeProbe shape C): the
-      // pair stream repartitions on (a, b) BEFORE the groupBy, so the
-      // count's partial aggregate runs post-exchange (EnsureRequirements
-      // elides the agg's own exchange) and the map side never builds the
-      // near-unique-key hash map whose sort fallback was the measured
-      // map-side spill (the partial agg shrank almost nothing — same
-      // ~29.5 GB shuffle either way at sf100). Measured same-host,
-      // hash-identical output: sf10 16.8/25.8 s (A) -> 12.8/21.6 s (C);
-      // sf100 784 s (A) -> 472 s (C) at probe width.
-      val edges = li.as("x")
-        .join(li.as("y"), col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
-        .select(col("x.pk").as("a"), col("y.pk").as("b"))
-        .repartition(col("a"), col("b"))
-        .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("w"))
-        .filter(col("w") >= 2)
-      Graph.communitySizes(edges, iterations = 3, minSize = 5, srcCol = "a", dstCol = "b")
-    },
-
-    // Bernoulli NB quality-classifier shape: train + score in one plan
-    // on the derived length-bucket label (word PRESENCE separates the
-    // buckets in this corpus; per-token distributions do not)
-    "q_nb" -> ((s, dir) =>
-      graft.text.NaiveBayes.bernoulliNb(
-        docs(s, dir).withColumn("bucket",
-          when(col("n_chars") >= 300, lit("long")).otherwise(lit("short"))),
-        "doc_id", "text", "bucket")
-        .select(col("doc_id"), col("label"), col("class"), col("log_post"), col("posterior"))),
-
-    // confident-learning label-noise audit over the NB posteriors —
-    // the off-diagonal of the confident joint is the estimated noise
-    "q_label_noise" -> ((s, dir) =>
-      LabelNoise.confidentJoint(
-        graft.text.NaiveBayes.bernoulliNb(
-          docs(s, dir).withColumn("bucket",
-            when(col("n_chars") >= 300, lit("long")).otherwise(lit("short"))),
-          "doc_id", "text", "bucket"),
-        "doc_id", "label", "class", "posterior")),
-
-    // Cox proportional hazards on the q_km_survival spans: does a
-    // user's mean event value shift the time-to-purchase hazard
-    // (fixed 4-step Newton, Breslow ties)
-    "q_cox" -> ((s, dir) => Survival.coxPh(coxSubjects(s, dir), "t_day", "obs", "x")),
-
-    // logistic regression by fixed-step GD on the length-bucket label —
-    // the linear-classifier counterpart to q_nb's generative model
-    "q_logreg" -> ((s, dir) => {
-      val d = logitDocs(s, dir)
-      Logistic.coefficients(
-        d, Logistic.fitGd(d, "y", Seq("x1", "x2"), iters = 5, lr = 0.5),
-        "y", Seq("x1", "x2"))
-    }),
-
-    // IPW average treatment effect: LR propensity (treatment = src0)
-    // -> clipped Hajek weighting of n_chars — the composed
-    // observational-causal shape (propensity model feeds the estimator)
-    "q_ipw" -> ((s, dir) => {
-      val d = logitDocs(s, dir).withColumn("treat", col("source") === "src0")
-      val fit = Logistic.fitGd(d, "treat", Seq("x1", "x2"), iters = 5, lr = 0.5)
-      Logistic.ipwAte(Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
-        "n_chars", "treat", "p_hat", clip = 0.05)
-    }),
-
-    // empirical-Bayes beta-binomial shrinkage of per-customer urgent-
-    // order rates (method-of-moments prior from the data)
-    "q_eb_shrink" -> ((s, dir) =>
-      Shrinkage.ebBetaBinomial(
-        Tables.orders(s, dir), "o_custkey",
-        col("o_orderpriority") === "1-URGENT")
-        .withColumnRenamed("group", "o_custkey")),
-
-    // Mondrian split-conformal calibration of the per-source n_chars
-    // predictor: finite-sample +/- bands per group, coverage audited
-    // on the held-out test band
-    "q_conformal" -> ((s, dir) =>
-      Conformal.splitConformal(docs(s, dir), "doc_id", "source", "n_chars",
-        alpha = 0.2, seed = "c42")),
-
-    // Cochran-Mantel-Haenszel: arm x high-value association controlled
-    // for event_type strata + the MH pooled odds ratio
-    "q_cmh" -> ((s, dir) => {
-      val arm = TextFunctions.md5Hash32(
-        concat(lit("cmh:"), col("user_id").cast("string"))) % 2 === 1
-      Hypothesis.cmh(ev(s, dir), Seq("event_type"), col("value") >= 10.0, arm)
-    }),
-
-    // decision-stump 1R screen: best Gini split per logitDocs feature
-    "q_stump" -> ((s, dir) =>
-      Stump.bestSplits(logitDocs(s, dir), col("y"),
-        Seq("x1" -> col("x1"), "x2" -> col("x2")), bins = 16)),
-
-    // delete-one-bucket jackknife CI for value-per-click, bucketed by
-    // user (the unit of randomization)
-    "q_jackknife" -> ((s, dir) =>
-      Jackknife.ratioCi(ev(s, dir), "user_id", col("value"),
-        when(col("event_type") === "click", lit(1.0)).otherwise(lit(0.0)),
-        buckets = 20, seed = "jk42")),
-
-    // diagonal-covariance Mahalanobis embedding outlier scores
-    "q_mahalanobis" -> ((s, dir) => Embeddings.mahalanobisDiag(emb(s, dir))),
-
-    // word2vec negative-sampling table: prob ~ count^0.75 + cumulative
-    // sampling ranges over the vocabulary rank
-    "q_sampling_table" -> ((s, dir) => WordVocab.samplingTable(docs(s, dir), "text")),
-
-    // Bradley-Terry preference strengths over head-to-head doc-length
-    // comparisons between sources (consecutive-doc tournament)
-    "q_bradley_terry" -> ((s, dir) => {
-      val d = docs(s, dir).select(col("doc_id"), col("source"), col("n_chars"))
-      val p = d.as("a")
-        .join(d.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
-        .filter(col("a.doc_id") % 2 === 0 && col("a.n_chars") =!= col("b.n_chars"))
-        .select(
-          when(col("a.n_chars") > col("b.n_chars"), col("a.source"))
-            .otherwise(col("b.source")).as("winner"),
-          when(col("a.n_chars") > col("b.n_chars"), col("b.source"))
-            .otherwise(col("a.source")).as("loser"))
-      BradleyTerry.fit(p, "winner", "loser", iters = 3)
-    }),
-
-    // Murphy decomposition of the Brier score on the q_calibration
-    // score/label pair: miscalibrated vs uninformative, separated
-    "q_brier" -> ((s, dir) =>
-      Evaluation.brierDecomposition(
-        docs(s, dir).withColumn("score",
-          least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
-        Seq("lang"), "score", col("text").contains(" the "), nBins = 10)),
-
-    // Neyman-optimal labeling-budget allocation across sources
-    "q_neyman" -> ((s, dir) =>
-      Sampling.neymanAllocation(docs(s, dir), "source", "n_chars", budget = 100L)),
-
-    // 5-fold CV of the per-source mean predictor (delete-one-block
-    // closed form: no per-fold retrain pass)
-    "q_cv" -> ((s, dir) =>
-      Splits.kFoldGroupMeanCv(docs(s, dir), "doc_id", "source", "n_chars",
-        k = 5, seed = "cv42")),
-
-    // KWIC concordance: every 'spark' occurrence with +/-3 words of
-    // context, sliced row-locally from the carried token array
-    "q_kwic" -> ((s, dir) =>
-      graft.text.Concordance.kwic(docs(s, dir), "doc_id", "text", "spark", k = 3)),
-
-    // held-out perplexity of the add-1 unigram LM (the honest version
-    // of q_unigram_lm's self-trained score)
-    "q_heldout_ppl" -> ((s, dir) =>
-      graft.text.LmEval.heldoutUnigramPerplexity(docs(s, dir), "doc_id", "text",
-        smoothing = 1.0, trainPct = 70, seed = "lm42")),
-
-    // doubly-robust AIPW ATE: LR propensity + per-arm OLS outcome
-    // models, composed in one plan (the q_ipw setting, upgraded)
-    "q_aipw" -> ((s, dir) => {
-      val d = logitDocs(s, dir).withColumn("treat", col("source") === "src0")
-      val fit = Logistic.fitGd(d, "treat", Seq("x1", "x2"), iters = 5, lr = 0.5)
-      Logistic.aipwAte(Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
-        "n_chars", "treat", "p_hat", "x1", clip = 0.05)
-    }),
-
-    // Markov removal-effect attribution over user journeys: which
-    // channel's knockout loses the most conversions
-    "q_markov_attr" -> ((s, dir) =>
-      Attribution.markovRemoval(ev(s, dir), "user_id", "ts", "event_type",
-        "event_id", "purchase", iters = 12)),
-
-    // restricted mean survival time: days-to-purchase area under the
-    // KM curve within a 20-day horizon
-    "q_rmst" -> ((s, dir) =>
-      Survival.restrictedMeanSurvival(ev(s, dir), "user_id", "ts", "event_type",
-        "purchase", horizonDays = 20L)),
-
-    // Hosmer-Lemeshow-style calibration chi-square on the
-    // q_calibration score/label pair (fixed-width-bin variant)
-    "q_hosmer" -> ((s, dir) =>
-      Evaluation.hosmerLemeshow(
-        docs(s, dir).withColumn("score",
-          least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
-        Seq("lang"), "score", col("text").contains(" the "), nBins = 10)),
-
-    // IPW weight diagnostics (Kish ESS + max-weight share) on the
-    // q_ipw propensity weights — trust-the-estimate gate
-    "q_ess" -> ((s, dir) => {
-      val d = logitDocs(s, dir).withColumn("treat", col("source") === "src0")
-      val fit = Logistic.fitGd(d, "treat", Seq("x1", "x2"), iters = 5, lr = 0.5)
-      Logistic.weightDiagnostics(
-        Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"), "treat", "p_hat", clip = 0.05)
-    }),
-
-    // placebo refutation: rerun the whole q_ipw pipeline on an md5
-    // coin-flip pseudo-treatment — a real design should land near 0
-    "q_placebo" -> ((s, dir) => {
-      val d = logitDocs(s, dir).withColumn("treat",
-        TextFunctions.md5Hash32(concat(lit("pb:"), col("doc_id").cast("string"))) % 2 === 1)
-      val fit = Logistic.fitGd(d, "treat", Seq("x1", "x2"), iters = 5, lr = 0.5)
-      Logistic.ipwAte(Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
-        "n_chars", "treat", "p_hat", clip = 0.05)
-    }),
-
-    // Aalen-Johansen competing risks: purchase vs error as competing
-    // terminal events per user, day-granularity CIFs
-    "q_cif" -> ((s, dir) =>
-      Survival.competingRisks(ev(s, dir), "user_id", "ts", "event_type",
-        "purchase", "error")),
-
-    // leave-one-source-out influence on the corpus mean doc length —
-    // which source's removal moves the corpus metric, and which way
-    "q_loo_source" -> ((s, dir) =>
-      Influence.leaveOneOutMean(docs(s, dir), "source", col("n_chars"))),
-
-    // embedding isotropy: mean pairwise cosine from the closed form
-    // (no pair ever materializes)
-    "q_isotropy" -> ((s, dir) => Embeddings.isotropy(emb(s, dir))),
-
-    // Simpson's-paradox audit: pooled vs MH-stratified rate difference
-    // across event-type strata for the md5 A/B arms
-    "q_simpson" -> ((s, dir) => {
-      val arm = TextFunctions.md5Hash32(
-        concat(lit("cmh:"), col("user_id").cast("string"))) % 2 === 1
-      Hypothesis.simpsonCheck(ev(s, dir), Seq("event_type"), col("value") >= 10.0, arm)
-    }),
-
-    // VanderWeele E-value: how much unmeasured confounding the observed
-    // arm risk ratio could absorb before vanishing
-    "q_evalue" -> ((s, dir) => {
-      val arm = TextFunctions.md5Hash32(
-        concat(lit("cmh:"), col("user_id").cast("string"))) % 2 === 1
-      Hypothesis.eValue(ev(s, dir), col("value") >= 10.0, arm)
-    }),
-
-    // two-arm RMST contrast at a 20-day horizon (the PH-free effect
-    // report; arm-partitioned KM curves, no global window)
-    "q_rmst_diff" -> ((s, dir) => {
-      val arm = TextFunctions.md5Hash32(
-        concat(lit("ab:"), col("user_id").cast("string"))) % 2 === 1
-      Survival.rmstDiff(ev(s, dir), "user_id", "ts", "event_type", "purchase",
-        arm, horizonDays = 20L)
-    }),
-
-    // journey predictability: entropy rate of the first-order chain
-    "q_entropy_rate" -> ((s, dir) =>
-      Transitions.entropyRate(ev(s, dir), "user_id", "ts", "event_type", "event_id")),
-
-    // Heaps'-law vocabulary-growth fit over id-ordered checkpoints
-    "q_heaps" -> ((s, dir) =>
-      WordVocab.heapsLaw(docs(s, dir), "doc_id", "text",
-        checkpoints = Seq(16L, 32L, 64L, 128L, 256L, 512L))),
-
-    // leakage-proof churn/conversion label engineering: obs window
-    // [Jan 10, Jan 20), horizon [Jan 20, Jan 25)
-    "q_churn_labels" -> ((s, dir) =>
-      Labels.activityLabels(ev(s, dir), "user_id", "ts", "event_type", "purchase",
-        cutoffUs = 1705708800000000L, obsDays = 10, horizonDays = 5)),
-
-    // heterogeneous effect by propensity bin on the q_ipw setting —
-    // the positivity/overlap picture behind the single ATE number
-    "q_hte" -> ((s, dir) => {
-      val d = logitDocs(s, dir).withColumn("treat", col("source") === "src0")
-      val fit = Logistic.fitGd(d, "treat", Seq("x1", "x2"), iters = 5, lr = 0.5)
-      Logistic.hteByPropensityBin(
-        Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
-        "n_chars", "treat", "p_hat", nBins = 10)
-    }),
-
-    // language-ID confusion matrix: the per-class eval of #28 against
-    // the lang column (which labels leak where)
-    "q_confusion" -> ((s, dir) =>
-      Evaluation.confusionMatrix(
-        docs(s, dir).select(col("lang"),
-          TextFunctions.langId(col("text")).as("lang_pred")),
-        "lang", "lang_pred")),
-
-    // Fleiss' kappa across three deterministic heuristic "raters" —
-    // the annotator-agreement gate on a preference/label corpus
-    "q_fleiss" -> ((s, dir) => {
-      val d = docs(s, dir)
-      def vote(c: org.apache.spark.sql.Column) =
-        when(c, lit("long")).otherwise(lit("short"))
-      val votes = d.select(col("doc_id"), vote(col("n_chars") >= 250).as("vote"))
-        .unionByName(d.select(col("doc_id"), vote(col("n_chars") >= 300).as("vote")))
-        .unionByName(d.select(col("doc_id"),
-          vote(size(TextFunctions.wordTokens(col("text"))) >= 55).as("vote")))
-      Evaluation.fleissKappa(votes, "doc_id", "vote")
-    }),
-
-    // IPF raking: weight an md5 subsample so its lang AND source
-    // marginals both match the full corpus
-    "q_rake_weights" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val sample = d.filter(TextFunctions.md5Hash32(
-        concat(lit("rk:"), col("doc_id").cast("string"))) % 10 < 3)
-      Sampling.rakeWeights(sample, d, "lang", "source", iters = 5)
-    }),
-
-    // capture-recapture dedup-recall estimate: two independent SRP
-    // passes -> Chapman estimate of the TRUE near-dup pair count
-    "q_capture_recapture" -> ((s, dir) =>
-      graft.ann.Srp.captureRecapture(emb(s, dir), threshold = 0.25,
-        seedA = "cr1", seedB = "cr2")),
-
-    // split-half reliability of the per-source mean-length metric:
-    // is the source league table signal or re-rolled dice
-    "q_split_half" -> ((s, dir) =>
-      Reliability.splitHalf(docs(s, dir), "source", "doc_id",
-        col("n_chars"), seed = "sh42")),
-
-    // cost-optimal quality-filter threshold on the q_calibration
-    // score/label pair: keep-good pays 1, keep-bad costs 2
-    "q_threshold_opt" -> ((s, dir) =>
-      Evaluation.bestThreshold(
-        docs(s, dir).withColumn("score",
-          least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
-        Seq("lang"), "score", col("text").contains(" the "),
-        benefitTp = 1.0, costFp = 2.0, nBins = 20)),
-
-    // Church-Gale term burstiness: content words clump (vmr >> 1),
-    // glue spreads (~Poisson)
-    "q_term_burstiness" -> ((s, dir) =>
-      graft.text.Keywords.termBurstiness(docs(s, dir), "doc_id", "text", minDf = 25L)),
-
-    // duplicate-influx monitor: exact-dup rate per arrival bucket of
-    // 50 docs — WHEN did duplication start, not just how much
-    "q_dup_influx" -> ((s, dir) =>
-      Dedup.duplicateInflux(docs(s, dir), "doc_id", "text", bucketWidth = 50L)),
-
-    // ------------------------------------------------ round 9 batch O
-
-    // B-cubed clustering eval: does 32-bit SimHash (as a bucket id)
-    // recover the exact-fingerprint duplicate classes — precision =
-    // bucket purity (hash collisions), recall = class cohesion
-    "q_bcubed" -> { (s, dir) =>
-      val sh = Dedup.simhash(docs(s, dir), bits = 32)
-      val gold = docs(s, dir).select(col("doc_id").as("id"),
-        TextFunctions.fingerprint(col("text")).as("fp"))
-      Evaluation.bCubed(sh.join(gold, "id"), "simhash", "fp")
-    },
-
-    // bounded-hop multi-source BFS over the word-adjacency graph from
-    // its lexicographically-first word: the blast-radius primitive
-    "q_khop" -> { (s, dir) =>
-      // DISTINCT edges, cached COLUMNAR, not pinned. BFS reachability
-      // only reads the edge SET, so the per-occurrence adjacency rows
-      // (~1B at sf100, one per consecutive token pair) collapse to the
-      // distinct word-pair graph BEFORE the cache: map-side partial
-      // aggregation absorbs the Zipfian duplicate mass in one pass, and
-      // every hop joins the collapsed frame instead of re-scanning a
-      // billion occurrence rows (the 1,000 s cumulative-GC signature at
-      // sf100 was 4 hop-scans of cached per-occurrence strings).
-      // Cached columnar rather than pinned: a localCheckpoint stores
-      // deserialized on-heap blocks — measured OOM at the bench's 48g
-      // and 1415 s of GC even at 96g — while InMemoryRelation's
-      // compressed columnar batches (dictionary-coded word pairs) hold
-      // the frame in a few GB and spill per-batch. Lineage truncation
-      // isn't needed: the hop loop pins its own frontier/visited
-      // frames, and every hop's reference to `e` is the one cached
-      // scan, so the plan stays flat.
-      val e = wordAdjacencyEdges(s, dir).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      Graph.kHopDistances(e, e.agg(min(col("src")).as("node")), maxHops = 4)
-    },
-
-    // consecutive 2/3-step event-sequence motifs with per-user support
-    "q_seq_patterns" -> ((s, dir) =>
-      Sequences.sequentialPatterns(ev(s, dir), "user_id", "ts", "event_type",
-        "event_id", minSupport = 5L)),
-
-    // user-level eps-DP mean event value per event type (clip [0, 500])
-    "q_dp_means" -> ((s, dir) =>
-      Integrity.dpMeans(ev(s, dir), Seq("event_type"), "user_id", "value",
-        lo = 0.0, hi = 500.0, epsilon = 1.0, seed = "graft-dp9")),
-
-    // Hyndman trend/seasonal strength at the daily cycle — is there a
-    // cycle worth modeling, per event type
-    "q_season_strength" -> ((s, dir) =>
-      Seasonal.strength(ev(s, dir), "event_type", "ts", period = 24)
-        .select(col("key").as("event_type"), col("n"),
-          col("f_trend"), col("f_seas"))),
-
-    // deterministic propensity matching: rank-paired ATT within the
-    // q_hte propensity bins (same GD fit)
-    "q_matched_att" -> { (s, dir) =>
-      val d = logitDocs(s, dir).withColumn("treat", col("source") === "src0")
-      val fit = Logistic.fitGd(d, "treat", Seq("x1", "x2"), iters = 5, lr = 0.5)
-      Logistic.rankMatchedAtt(
-        Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
-        "doc_id", "n_chars", "treat", "p_hat", nBins = 10)
-    },
-
-    // embedding centroid drift across arrival buckets of 100 vectors —
-    // WHEN did the embedding distribution move
-    "q_embed_drift" -> ((s, dir) =>
-      Embeddings.centroidDrift(emb(s, dir), bucketWidth = 100L)),
-
-    // ------------------------------------------------ round 9 batch P
-
-    // exact Shapley attribution over pre-conversion channel sets — the
-    // order-free axiomatic twin of q_markov_attr; disagreement between
-    // the two IS the finding
-    "q_shapley_attr" -> ((s, dir) =>
-      Attribution.shapleyAttribution(ev(s, dir), "user_id", "ts", "event_type",
-        "event_id", "purchase")),
-
-    // growth accounting: every active (user, week) is new/retained/
-    // resurrected, silences churn into the next week; quick ratio
-    "q_growth" -> ((s, dir) =>
-      Retention.growthAccounting(ev(s, dir), "user_id", "ts", WeekUs)),
-
-    // sharp regression discontinuity on the length threshold: does
-    // crossing 1000 chars jump the ' the ' rate (it should not — a
-    // placebo cutoff; effect ~ 0 is the honest read)
-    "q_rdd" -> ((s, dir) =>
-      Discontinuity.sharpRdd(
-        docs(s, dir).select(col("n_chars"),
-          col("text").contains(" the ").cast("int").as("y")),
-        "n_chars", "y", cutoff = 1000.0, bandwidth = 800.0)),
-
-    // as-of join, nearest direction: each event tagged with the CLOSEST
-    // purchase either side (ties backward) — same single exchange as
-    // q_asof's backward scan
-    "q_asof_nearest" -> { (s, dir) =>
-      val e = ev(s, dir)
-      val purchases = e
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("value"))
-      AsofJoin
-        .asof(
-          e.select(col("event_id"), col("user_id"), col("ts"), col("event_type")),
-          purchases,
-          on = Seq("user_id"), leftTimeCol = "ts", rightTimeCol = "ts",
-          rightCols = Seq("value"), direction = AsofJoin.Nearest,
-          rightPrefix = "purchase_")
-        .select(
-          col("event_id"), col("user_id"), unix_micros(col("ts")).as("time_us"), col("event_type"),
-          unix_micros(col("purchase_ts")).as("purchase_time_us"),
-          col("purchase_value").as("purchase_value"))
-    },
-
-    // BM25 + min-span proximity boost: same probe terms as q_bm25,
-    // co-occurring terms get lambda/(1+span) on top
-    "q_bm25_prox" -> ((s, dir) =>
-      Bm25.scoreWithProximity(docs(s, dir), Seq("spark", "hash", "merge"),
-        lambda = 2.0)),
-
-    // ------------------------------------------------ round 9 batch Q
-
-    // blocking-quality audit: what does q_sorted_blocking's +/-2 window
-    // lose vs the exact within-block pair set (PC), and what does it
-    // save (RR)
-    "q_blocking_eval" -> ((s, dir) =>
-      FuzzyJoin.blockingQuality(Tables.part(s, dir), "p_name",
-        maxDist = 4, windowSize = 3)),
-
-    // whole-table drift report: KS + PSI per derived numeric feature,
-    // src0 as the reference slice
-    "q_drift_report" -> { (s, dir) =>
-      val feats = docs(s, dir).select(
-        col("source"),
-        col("n_chars").cast("double").as("n_chars"),
-        size(TextFunctions.wordTokens(col("text"))).cast("double").as("n_words"),
-        size(split(col("text"), "\n")).cast("double").as("n_lines"))
-      Drift.driftReport(feats, Seq("n_chars", "n_words", "n_lines"),
-          col("source") === "src0")
-        .select(col("feature"), col("n_ref"), col("n_cur"),
-          graft.functions.Portable.r6(col("d")).as("d"),
-          graft.functions.Portable.r6(col("ks")).as("ks"),
-          graft.functions.Portable.r6(col("psi")).as("psi"))
-    },
-
-    // S-stemmer vocabulary profile: per-stem surface-form and token
-    // counts (the synthetic vocab has no plural pairs, so collapses are
-    // spec-pinned on crafted input; the query pins the stem arithmetic
-    // on real data)
-    "q_stem" -> ((s, dir) =>
-      docs(s, dir)
-        .select(explode(TextFunctions.wordTokens(col("text"))).as("term"))
-        .withColumn("stem", TextFunctions.sStem(col("term")))
-        .groupBy(col("stem"))
-        .agg(countDistinct(col("term")).as("n_forms"), count(lit(1)).as("n_tokens"))),
-
-    // template-structure clusters: same line-length-bucket skeleton,
-    // different content — what shingle dedup cannot see
-    "q_templates" -> ((s, dir) =>
-      docs(s, dir)
-        .filter(col("text").isNotNull)
-        .select(TextFunctions.structureHash(col("text")).as("structure_hash"),
-          TextFunctions.fingerprint(col("text")).as("__fp"))
-        .groupBy(col("structure_hash"))
-        .agg(count(lit(1)).as("n_docs"), countDistinct(col("__fp")).as("n_contents"))
-        .filter(col("n_docs") >= 2)),
-
-    // curriculum interleave: easy->hard per source, round-robin across
-    // sources, closed-form global position (no global sort)
-    "q_curriculum" -> ((s, dir) =>
-      Selection.curriculumInterleave(
-        docs(s, dir).select(col("doc_id"), col("source"), col("n_chars")),
-        "source", "n_chars", "doc_id")),
-
-    // ------------------------------------------------ round 9 batch R
-
-    // as-of join, forward direction: next purchase at-or-after each
-    // event (the already-implemented third direction, oracle-paired)
-    "q_asof_forward" -> { (s, dir) =>
-      val e = ev(s, dir)
-      val purchases = e
-        .filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("value")).as("value"))
-      AsofJoin
-        .asof(
-          e.select(col("event_id"), col("user_id"), col("ts"), col("event_type")),
-          purchases,
-          on = Seq("user_id"), leftTimeCol = "ts", rightTimeCol = "ts",
-          rightCols = Seq("value"), direction = AsofJoin.Forward,
-          rightPrefix = "purchase_")
-        .select(
-          col("event_id"), col("user_id"), unix_micros(col("ts")).as("time_us"), col("event_type"),
-          unix_micros(col("purchase_ts")).as("purchase_time_us"),
-          col("purchase_value").as("purchase_value"))
-    },
-
-    // language-ID confidence margin: top vs runner-up stopword hits —
-    // which q_lang_id calls deserve trust
-    "q_lang_margin" -> { (s, dir) =>
-      val withToks = docs(s, dir)
-        .withColumn("__toks", TextFunctions.wordTokens(col("text")))
-      val hits = TextFunctions.Stopwords.map { case (_, words) =>
-        TextFunctions.stopwordHits(col("__toks"), words) }
-      val sorted = sort_array(array(hits: _*), asc = false)
-      withToks.select(
-        col("doc_id"),
-        TextFunctions.langId(col("text")).as("lang_pred"),
-        element_at(sorted, 1).cast("long").as("top_hits"),
-        element_at(sorted, 2).cast("long").as("second_hits"),
-        (element_at(sorted, 1) - element_at(sorted, 2)).cast("long").as("margin"))
-    },
-
-    // one-row graph sanity sheet for the word-adjacency graph
-    "q_graph_profile" -> ((s, dir) =>
-      Graph.profile(wordAdjacencyEdges(s, dir))),
-
-    // leakage screen: single-feature AUC of each doc feature against
-    // the ' the ' label (n_words ~ doc length: the expected "proxy")
-    "q_feature_auc" -> { (s, dir) =>
-      val feats = docs(s, dir).select(
-        col("text"),
-        col("n_chars").cast("double").as("n_chars"),
-        size(TextFunctions.wordTokens(col("text"))).cast("double").as("n_words"),
-        size(split(col("text"), "\n")).cast("double").as("n_lines"))
-      Drift.featureAucScreen(feats, Seq("n_chars", "n_words", "n_lines"),
-        col("text").contains(" the "))
-    },
-
-    // rendezvous-hash rebalance audit: growing 8->10 shards should move
-    // ~(10-8)/10 of keys — the consistent-placement proof a mod-N
-    // layout fails by an order of magnitude
-    "q_rendezvous" -> ((s, dir) =>
-      Shard.rendezvousRebalanceAudit(ev(s, dir), "user_id",
-        fromShards = 8, toShards = 10, seed = "rdz")),
-
-    // RM1 pseudo-relevance expansion terms off the spark/hash/merge probe
-    "q_prf_terms" -> ((s, dir) =>
-      Bm25.expansionTerms(docs(s, dir), Seq("spark", "hash", "merge"))),
-
-    // ------------------------------------------------ round 9 batch T
-
-    // time-decay attribution (1-day half-life): the deployable recency
-    // model between last-touch and the q_markov_attr/q_shapley_attr pair
-    "q_decay_attr" -> ((s, dir) =>
-      Attribution.timeDecayAttribution(ev(s, dir), "user_id", "ts",
-        "event_type", "event_id", "purchase", halfLifeUs = 86400000000L)),
-
-    // DAU / trailing-7-day actives / stickiness per day
-    "q_dau_wau" -> ((s, dir) =>
-      Retention.rollingActives(ev(s, dir), "user_id", "ts")),
-
-    // deterministic balanced downsampling: every lang capped at the
-    // smallest lang's size by seeded hash rank
-    "q_class_balance" -> ((s, dir) =>
-      Sampling.balanceClasses(
-        docs(s, dir).select(col("doc_id"), col("lang")), "lang", "doc_id",
-        seed = "bal9")),
-
-    // qq drift: WHERE src0's length distribution sits vs the rest,
-    // probe by probe
-    "q_qq_drift" -> ((s, dir) =>
-      Drift.qqDrift(docs(s, dir), "n_chars", col("source") === "src0", QuantilePs)),
-
-    // full Pearson matrix over the doc features in ONE scan
-    "q_corr_matrix" -> { (s, dir) =>
-      val feats = docs(s, dir).select(
-        col("n_chars").cast("double").as("n_chars"),
-        size(TextFunctions.wordTokens(col("text"))).cast("double").as("n_words"),
-        size(split(col("text"), "\n")).cast("double").as("n_lines"))
-      Stats.correlationMatrix(feats, Seq("n_chars", "n_words", "n_lines"))
-    },
-
-    // Lorenz/concentration table: which length-decile of docs holds the
-    // characters — the curve behind q_gini's single number
-    "q_lorenz" -> ((s, dir) =>
-      Stats.concentrationCurve(docs(s, dir), "n_chars", nBins = 10)),
-
-    // ---- round 10 batch T: exact/paired/resampling tests ----
-
-    // Fisher's exact 2x2 per source: rare exposure (1-in-3 by id)
-    // vs containing "join" — the small-cell regime chi2 gets wrong
-    "q_fisher" -> ((s, dir) =>
-      Hypothesis.fisherExact(docs(s, dir), Seq("source"),
-        pmod(col("doc_id"), lit(3)) === 0, col("text").contains("join"))),
-
-    // McNemar paired flip test per lang: do the "join" and "merge"
-    // detectors disagree asymmetrically on the same docs
-    "q_mcnemar" -> ((s, dir) =>
-      Hypothesis.mcnemar(docs(s, dir), Seq("lang"),
-        col("text").contains("join"), col("text").contains("merge"))),
-
-    // Holm step-down over the same per-slice tests frame as q_bh —
-    // FWER where q_bh is FDR
-    "q_holm" -> { (s, dir) =>
-      val tests = Hypothesis.twoProportionZ(docs(s, dir), Seq("lang", "source"),
-          col("n_chars") > 300,
-          pmod(TextFunctions.md5Hash32(concat(lit("bh|"), col("doc_id").cast("string"))),
-            lit(2)) === 0)
-        .select(col("lang"), col("source"),
-          graft.functions.Portable.r6(col("z")).as("z"),
-          graft.functions.Portable.r6(Hypothesis.pFromZ(col("z"))).as("p"))
-      Hypothesis.holm(tests, "p", Seq("lang", "source"), alpha = 0.1)
-        .select(col("lang"), col("source"), col("z"), col("p"), col("m"),
-          col("rank"), graft.functions.Portable.r6(col("p_adj")).as("p_adj"),
-          col("reject"))
-    },
-
-    // randomization test: 19 deterministic md5 relabelings of the
-    // en-vs-rest mean n_chars difference
-    "q_rand_test" -> ((s, dir) =>
-      Hypothesis.randomizationTest(docs(s, dir), "n_chars",
-        col("lang") === "en", "doc_id", k = 19, seed = "rt")),
-
-    // ---- round 10 batch U: screens, agreement, fairness ----
-
-    // mutual-information screen: which categorical doc columns know
-    // the " the " label
-    "q_mi" -> ((s, dir) =>
-      Stats.miScreen(docs(s, dir), Seq("lang", "source"),
-        col("text").contains(" the "))),
-
-    // Kendall's W: do the 5 event types agree on the user-decile
-    // ranking by total value
-    "q_kendall_w" -> { (s, dir) =>
-      val cells = ev(s, dir).filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(col("event_type"), pmod(col("user_id"), lit(10)).as("bucket"))
-        .agg(graft.functions.Portable.r6(
-          sum(col("value").cast("decimal(38,6)")).cast("double")).as("total"))
-      Stats.kendallW(cells, "event_type", "bucket", "total")
-    },
-
-    // per-class one-vs-rest metrics of the n-gram language-ID against
-    // the true lang column
-    "q_cls_metrics" -> ((s, dir) =>
-      Evaluation.classMetrics(
-        docs(s, dir).select(col("lang"),
-          TextFunctions.langId(col("text")).as("lang_pred")),
-        "lang", "lang_pred")),
-
-    // fairness audit of a length-gate "keep" decision across langs,
-    // labeled by the " the " ground truth
-    "q_fair_audit" -> ((s, dir) =>
-      Fairness.fairnessAudit(docs(s, dir), "lang",
-        col("n_chars") > 800, col("text").contains(" the "))),
-
-    // ---- round 10 batch V: attribution/LTV/text/series ----
-
-    // U-shaped 40/20/40 attribution, same journey truncation as
-    // q_decay_attr
-    "q_position_attr" -> ((s, dir) =>
-      Attribution.positionAttribution(ev(s, dir), "user_id", "ts",
-        "event_type", "event_id", "purchase", endWeight = 0.4)),
-
-    // cohort LTV: cumulative value per cohort member by cohort age
-    "q_ltv" -> ((s, dir) =>
-      Retention.ltvCurve(ev(s, dir), "user_id", "ts", "value")),
-
-    // Yule's K repetitiveness constant per source
-    "q_yule_k" -> ((s, dir) =>
-      graft.text.Lexical.yuleK(docs(s, dir), Seq("source"))),
-
-    // Luhn-verified card-number candidates over deterministically
-    // planted digit runs (the corpus itself is digit-free)
-    "q_luhn" -> ((s, dir) =>
-      graft.text.Lexical.luhnScan(
-        docs(s, dir).withColumn("text",
-          when(pmod(col("doc_id"), lit(7)) === 0,
-            concat(col("text"), lit(" card "),
-              lpad(pmod(col("doc_id") * 2654435761L, lit(10000000000L)).cast("string"), 10, "0"),
-              lpad(pmod((col("doc_id") + 13L) * 97L, lit(100000L)).cast("string"), 5, "0")))
-            .otherwise(col("text"))))),
-
-    // ERR@10 of the BM25 ranking — the cascade-model metric next to
-    // q_retrieval_eval's nDCG
-    "q_err" -> { (s, dir) =>
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val ranking = Bm25.retrieveTopK(docs(s, dir), qs, k = 10)
-        .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      val rel = graft.text.RetrievalEval.containsAllRelevance(docs(s, dir), qs)
-      graft.text.RetrievalEval.errAtK(ranking, rel, k = 10)
-        .select(col("query_id"), col("n_relevant"), col("err_at_k").as("err_at_10"))
-    },
-
-    // SAX words: each event type's value series as an 8-letter shape
-    "q_sax" -> ((s, dir) =>
-      Trend.sax(ev(s, dir), Seq("event_type"), "ts", "event_id", "value",
-        nSegments = 8)),
-
-    // ---- round 10 batch W: causal/robust/layout/series/JSON ----
-
-    // IV Wald/LATE per lang: even-user instrument, did-purchase
-    // treatment, event value outcome
-    "q_iv_wald" -> ((s, dir) => {
-      val peru = ev(s, dir).filter(col("ts").isNotNull)
-        .groupBy(col("user_id"))
-        .agg(max(when(col("event_type") === "purchase", 1L)).as("__t"),
-          graft.functions.Portable.r6(
-            sum(coalesce(
-              when(!isnan(col("value")), col("value")), lit(0.0))
-              .cast("decimal(38,6)")).cast("double")).as("y"))
-      Causal.ivWald(peru.withColumn("g", lit("all")), Seq("g"),
-        pmod(col("user_id"), lit(2)) === 0, col("__t") === 1L, "y")
-    }),
-
-    // Cramer-von Mises: integrated squared ECDF gap of n_chars,
-    // en vs rest, per source — next to the same slice's KS
-    "q_cvm" -> ((s, dir) =>
-      Hypothesis.cvmTest(docs(s, dir), Seq("source"), "n_chars",
-        col("lang") === "en")),
-
-    // token-weighted doc-length quantiles per lang: where the TOKENS
-    // live, not where the docs are
-    "q_wquantile" -> ((s, dir) =>
-      graft.operators.Quantiles.weightedQuantiles(
-        docs(s, dir).withColumn("n_words",
-          size(TextFunctions.wordTokens(col("text"))).cast("double")),
-        Seq("lang"), "n_chars", "n_words", Seq(0.5, 0.9, 0.99))),
-
-    // trailing 5-row rolling median of event values per user
-    "q_roll_median" -> ((s, dir) =>
-      Rolling.rollingMedian(
-        ev(s, dir).withColumn("t", unix_micros(col("ts"))),
-        Seq("user_id"), "t", "event_id", "value", k = 5)
-        .select(col("user_id"), col("t"), col("v"), col("n_window"),
-          col("roll_median"))),
-
-    // Hilbert layout index over the same 2-D key as q_zorder
-    "q_hilbert" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        graft.operators.ZOrder.hilbertValue(
-          pmod(col("doc_id"), lit(1024L)),
-          pmod(col("n_chars"), lit(1024L)), bits = 10).as("h"))),
-
-    // pairwise DTW over the event types' 8-segment PAA shapes
-    "q_dtw" -> { (s, dir) =>
-      val paa = Trend.paaVectors(ev(s, dir), Seq("event_type"), "ts",
-        "event_id", "value", nSegments = 8)
-      paa.as("a").join(paa.as("b"),
-          col("a.event_type") < col("b.event_type"))
-        .select(col("a.event_type").as("type_a"),
-          col("b.event_type").as("type_b"),
-          graft.functions.Portable.r6(
-            Trend.dtwDistance(col("a.paa"), col("b.paa"))).as("dtw"))
-    },
-
-    // Krippendorff's alpha over an incomplete rating design: unit =
-    // user decile, category = an event's value tercile, every event a
-    // "rating" (raters anonymous/unequal by construction)
-    "q_kripp" -> ((s, dir) =>
-      Evaluation.krippendorffAlpha(
-        ev(s, dir).filter(col("value").isNotNull && !isnan(col("value")))
-          .withColumn("unit", pmod(col("user_id"), lit(10)))
-          .withColumn("cat",
-            when(col("value") < 40.0, "lo")
-              .when(col("value") < 70.0, "mid").otherwise("hi")),
-        Seq("event_type"), "unit", "cat")),
-
-    // negative-binomial overdispersion fit of per-user event counts
-    "q_negbin" -> ((s, dir) => {
-      val counts = ev(s, dir).groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).cast("double").as("k"))
-      Stats.negativeBinomialFit(counts, Seq("event_type"), "k")
-    }),
-
-    // log-normal fit of doc lengths per lang with implied median/p95
-    "q_lognormal" -> ((s, dir) =>
-      Stats.logNormalFit(docs(s, dir), Seq("lang"), "n_chars")),
-
-    // JSON field health of events.props' $.k per event type
-    "q_json_health" -> ((s, dir) =>
-      graft.operators.Json.fieldHealth(ev(s, dir), Seq("event_type"),
-        "props", "$.k")),
-
-    // ---- round 10 batch X: resampled order stats, JL, backtests ----
-
-    // Poisson-bootstrap band for the per-lang median doc length
-    "q_boot_median" -> ((s, dir) =>
-      Bootstrap.bootstrapMedianCI(docs(s, dir), Seq("lang"), "n_chars",
-        "doc_id", replicas = 16, seed = "bm")),
-
-    // JL projection distortion, measured on the id<40 probe pairs
-    "q_jl" -> ((s, dir) =>
-      graft.ann.RandomProjection.distortionReport(emb(s, dir),
-        k = 16, dim = 64, maxId = 40L)),
-
-    // Markov next-event backtest: fit argmax transitions on even
-    // users, score top-1 accuracy on odd users
-    "q_markov_eval" -> ((s, dir) =>
-      Transitions.markovBacktest(ev(s, dir), "user_id", "ts",
-        "event_type", "event_id", pmod(col("user_id"), lit(2)) === 0)),
-
-    // SRM sweep: per-source split-health chi2 -> p -> BH over sources
-    "q_srm_sweep" -> { (s, dir) =>
-      val tests = Stats.sampleRatioMismatch(docs(s, dir), Seq("source"),
-          pmod(TextFunctions.md5Hash32(
-            concat(lit("srm|"), col("doc_id").cast("string"))), lit(2)) === 0,
-          expectedB = 0.5)
-        .select(col("source"), col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("chi2")).as("chi2"),
-          graft.functions.Portable.r6(
-            Hypothesis.pFromZ(sqrt(col("chi2")))).as("p"))
-      Hypothesis.benjaminiHochberg(tests, "p", Seq("source"), alpha = 0.05)
-        .select(col("source"), col("n_a"), col("n_b"), col("chi2"), col("p"),
-          col("m"), col("rank"),
-          graft.functions.Portable.r6(col("q")).as("q"), col("reject"))
-    },
-
-    // top-20 term league-table churn between the doc-parity halves:
-    // RBO (top-weighted) next to plain set Jaccard
-    "q_top_terms_drift" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val terms = docs(s, dir)
-        .select((pmod(col("doc_id"), lit(2)) === 0).as("__h"),
-          explode(TextFunctions.wordTokens(col("text"))).as("term"))
-        .groupBy(col("__h"), col("term")).agg(count(lit(1)).as("__n"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("__h")).orderBy(col("__n").desc, col("term"))))
-        .filter(col("rank") <= 20)
-        .withColumn("q", lit("terms"))
-      val a = terms.filter(col("__h")).select(col("q"), col("term"), col("rank"))
-      val b = terms.filter(!col("__h")).select(col("q"), col("term"), col("rank"))
-      val rboRow = graft.text.RetrievalEval.rbo(a, b, "q", "term", "rank", k = 20, p = 0.9)
-      val jac = a.select(col("term")).intersect(b.select(col("term")))
-        .agg(count(lit(1)).as("__inter"))
-      rboRow
-        .crossJoin(broadcast(jac)) // one-row intersection count: lint-exempt
-        .select(col("n_a"), col("n_b"),
-          graft.functions.Portable.r6(col("overlap_k")).as("overlap_k"),
-          graft.functions.Portable.r6(col("rbo")).as("rbo"),
-          graft.functions.Portable.r6(col("__inter").cast("double") /
-            (col("n_a") + col("n_b") - col("__inter")).cast("double")).as("jaccard"))
-    },
-
-    // ---- round 10 batch Y: extremes, robust shape, inequality, trend ----
-
-    // Gumbel fit over daily value maxima per event type + fitted p99
-    "q_gumbel" -> ((s, dir) =>
-      Stats.gumbelFit(ev(s, dir), Seq("event_type"), "ts", "value",
-        blockUs = 86400000000L, returnQ = 0.99)),
-
-    // L-moments of doc length per lang: robust scale/shape ratios
-    "q_lmoments" -> ((s, dir) =>
-      Stats.lMoments(docs(s, dir), Seq("lang"), "n_chars")),
-
-    // Theil inequality of characters across docs, decomposed
-    // between/within sources
-    "q_theil" -> ((s, dir) =>
-      Stats.theilDecomposition(docs(s, dir), "source", "n_chars")),
-
-    // Cochran-Armitage: does the " the " rate climb with the doc-length
-    // decile, per lang
-    "q_trend_test" -> ((s, dir) =>
-      Hypothesis.cochranArmitage(
-        docs(s, dir).withColumn("dose",
-          least(lit(9L), floor(col("n_chars") / 150L)).cast("double")),
-        Seq("lang"), "dose", col("text").contains(" the "))),
-
-    // Storey pi0 + q-values over the q_bh tests frame
-    "q_storey" -> { (s, dir) =>
-      val tests = Hypothesis.twoProportionZ(docs(s, dir), Seq("lang", "source"),
-          col("n_chars") > 300,
-          pmod(TextFunctions.md5Hash32(concat(lit("bh|"), col("doc_id").cast("string"))),
-            lit(2)) === 0)
-        .select(col("lang"), col("source"),
-          graft.functions.Portable.r6(col("z")).as("z"),
-          graft.functions.Portable.r6(Hypothesis.pFromZ(col("z"))).as("p"))
-      Hypothesis.storeyQValues(tests, "p", Seq("lang", "source"), lambda = 0.5, alpha = 0.1)
-        .select(col("lang"), col("source"), col("z"), col("p"), col("m"),
-          col("rank"), col("pi0"),
-          graft.functions.Portable.r6(col("q_storey")).as("q_storey"), col("reject"))
-    },
-
-    // ---- round 10 batch Z: confounders, peaks, randomness, gains, style ----
-
-    // does length still track word count once line count is held fixed
-    "q_partial_corr" -> { (s, dir) =>
-      val feats = docs(s, dir).select(
-        col("n_chars").cast("double").as("n_chars"),
-        size(TextFunctions.wordTokens(col("text"))).cast("double").as("n_words"),
-        size(split(col("text"), "\n")).cast("double").as("n_lines"))
-      Stats.partialCorrelation(feats, "n_chars", "n_words", "n_lines")
-    },
-
-    // strict local maxima of per-user event values, >= 20 above the
-    // trailing 5-row median baseline
-    "q_peaks" -> ((s, dir) =>
-      Rolling.detectPeaks(
-        ev(s, dir).withColumn("tu", unix_micros(col("ts"))),
-        Seq("user_id"), "tu", "event_id", "value", k = 5, minProminence = 20.0)),
-
-    // Wald-Wolfowitz runs test: do per-type value sequences streak
-    "q_runs" -> ((s, dir) =>
-      Hypothesis.runsTest(ev(s, dir), Seq("event_type"), "ts", "event_id", "value")),
-
-    // cumulative gains/lift of the length score against the " the "
-    // label, per lang
-    "q_gains" -> ((s, dir) =>
-      Evaluation.gainsTable(
-        docs(s, dir).withColumn("score",
-          least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
-        Seq("lang"), "score", col("text").contains(" the "), "doc_id", nBins = 10)),
-
-    // Burrows' Delta stylometric distance between sources (top 50 words)
-    "q_burrows" -> ((s, dir) =>
-      graft.text.Lexical.burrowsDelta(docs(s, dir), "source", nWords = 50)),
-
-    // ---- round 10 batch AA: long memory, blocked designs, robust geometry ----
-
-    // R/S Hurst exponent of per-type value series
-    "q_hurst" -> ((s, dir) =>
-      Trend.hurstExponent(ev(s, dir), Seq("event_type"), "ts", "event_id",
-        "value", blockSizes = Seq(8, 16, 32, 64))),
-
-    // Friedman: do the event types rank differently across user-decile
-    // blocks (the q_kendall_w cells, tested instead of agreed)
-    "q_friedman" -> { (s, dir) =>
-      val cells = ev(s, dir).filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(col("event_type"), pmod(col("user_id"), lit(10)).as("bucket"))
-        .agg(graft.functions.Portable.r6(
-          sum(col("value").cast("decimal(38,6)")).cast("double")).as("total"))
-        .withColumn("g", lit("all"))
-      Hypothesis.friedman(cells, Seq("g"), "bucket", "event_type", "total")
-    },
-
-    // Cochran's Q: do the event types "flag" the same user deciles
-    // (hit = cell mean value above 50)
-    "q_cochran_q" -> { (s, dir) =>
-      val cells = ev(s, dir).filter(col("value").isNotNull && !isnan(col("value")))
-        .groupBy(col("event_type"), pmod(col("user_id"), lit(10)).as("bucket"))
-        .agg((graft.functions.Portable.r6(
-          sum(col("value").cast("decimal(38,6)")).cast("double")) /
-          count(lit(1)).cast("double")).as("mv"))
-        .withColumn("g", lit("all"))
-      Hypothesis.cochranQ(cells, Seq("g"), "bucket", "event_type", col("mv") > 50.0)
-    },
-
-    // robust per-label embedding anchor: 5 Weiszfeld iterations
-    // (vector exploded to per-dimension rows — the hash compare is
-    // scalar-typed)
-    "q_geo_median" -> ((s, dir) =>
-      graft.ann.Embeddings.geometricMedian(emb(s, dir), "label", "embedding",
-        iterations = 5)
-        .select(col("group"), col("n"), col("mean_dist"),
-          posexplode(col("median")).as(Seq("dim", "m")))
-        .select(col("group"), col("n"), col("mean_dist"),
-          col("dim").cast("long").as("dim"), col("m")))
-  )
-
-  /** Per-user Cox subjects shared by the q_cox Spark call and oracle:
-    * KM-style spans (first event → first purchase else last event, day
-    * granularity) plus the r6-pinned mean event value as covariate.
-    */
-  private def coxSubjects(s: SparkSession, dir: String): DataFrame = {
-    val t = unix_micros(col("ts"))
-    ev(s, dir).filter(col("ts").isNotNull)
-      .groupBy(col("user_id"))
-      .agg(
-        min(t).as("__t0"),
-        min(when(col("event_type") === "purchase", t)).as("__te"),
-        max(t).as("__tl"),
-        graft.functions.Portable.r6(
-          sum(col("value").cast("decimal(38,6)")).cast("double") /
-            count(lit(1)).cast("double")).as("x"))
-      .select(
-        floor((coalesce(col("__te"), col("__tl")) - col("__t0")).cast("double") / 86400000000.0)
-          .cast("long").as("t_day"),
-        col("__te").isNotNull.as("obs"),
-        col("x"))
-  }
-
-  /** Docs with the length-bucket label and two r6-pinned O(1)-scaled
-    * features (word count / 100, mean word length / 10) shared by the
-    * q_logreg and q_ipw Spark calls and oracles.
-    */
-  private def logitDocs(s: SparkSession, dir: String): DataFrame = {
-    val nw = size(TextFunctions.wordTokens(col("text")))
-    docs(s, dir).select(
-      col("doc_id"), col("source"), col("n_chars"),
-      (col("n_chars") >= 300).as("y"),
-      graft.functions.Portable.r6(nw.cast("double") / lit(100.0)).as("x1"),
-      when(nw > 0, graft.functions.Portable.r6(
-        col("n_chars").cast("double") / (nw.cast("double") * lit(10.0))))
-        .otherwise(lit(0.0)).as("x2"))
-  }
-
-  /** Quantile probes shared by the q_quantiles Spark call and oracle. */
-  private val QuantilePs = Seq(0.25, 0.5, 0.75, 0.9, 0.99)
-
-  /** Retention bucket width (one week of epoch micros), shared by the
-    * q_retention Spark call and its oracle SQL.
-    */
-  private val WeekUs = 604800000000L
-
-  /** Mixture weights shared by the q_mixture Spark call and its oracle
-    * VALUES list. Sources absent here are dropped (weight 0).
-    */
-  private val MixtureWeights: Map[String, Double] =
-    Map("src0" -> 0.30, "src1" -> 0.20, "src2" -> 0.15, "src3" -> 0.05)
-
-  /** Interleave width shared by the q_zorder Spark column and its
-    * generated oracle SQL.
-    */
-  private val ZOrderBits = 16
-
-  /** Decomposed-accent + uppercase suffix for the unicode-normalization
-    * query: "Cafe" + U+0301 combining acute, so NFC has real composition
-    * work to do. Shared verbatim by the Spark literal and the oracle SQL.
-    */
-  private val normSuffix = " Café FILE"
-
-  /** Expectation suite shared by the Spark query and the oracle SQL
-    * generator — one definition, two renderings.
-    */
-  private val expectRules: Seq[Validate.Expectation] = Seq(
-    Validate.Expectation("known_core_type", col("event_type").isin("click", "view", "purchase")),
-    Validate.Expectation("ts_present", col("ts").isNotNull),
-    Validate.Expectation("user_id_present", col("user_id").isNotNull),
-    Validate.Expectation("value_finite", col("value").isNotNull && !isnan(col("value"))),
-    Validate.Expectation("value_le_100", col("value") <= 100)
-  )
-
-  /** DuckDB rendering of [[expectRules]] (same names, same order). */
-  private val expectRulesSql: Seq[(String, String)] = Seq(
-    "known_core_type" -> "event_type IN ('click','view','purchase')",
-    "ts_present" -> "ts IS NOT NULL",
-    "user_id_present" -> "user_id IS NOT NULL",
-    "value_finite" -> "value IS NOT NULL AND NOT isnan(value)",
-    "value_le_100" -> "value <= 100"
-  )
-
-  /** Engine-stable row fingerprint for [[Diff]]: nulls to sentinels,
-    * timestamps to epoch micros, doubles to 1e-6-scaled integers (NaN
-    * spelled out — DuckDB cannot cast NaN to BIGINT).
-    */
-  private def diffFingerprint: org.apache.spark.sql.Column =
-    md5(concat_ws("|",
-      coalesce(col("user_id").cast("string"), lit("~")),
-      coalesce(unix_micros(col("ts")).cast("string"), lit("~")),
-      coalesce(col("event_type"), lit("~")),
-      coalesce(
-        when(isnan(col("value")), lit("nan"))
-          .otherwise(floor(col("value") * 1000000).cast("string")),
-        lit("~"))))
-
-  // ---------------------------------------------------------------- oracle
-
-  private val medsPipelineOracleSql: String =
-    """WITH m AS (SELECT user_id AS patient_id, ts AS time, event_type AS code, CAST(value AS DOUBLE) AS v FROM events),
-          |pf AS (SELECT * FROM m WHERE patient_id IN (
-          |  SELECT patient_id FROM m WHERE time IS NOT NULL GROUP BY 1 HAVING count(*) >= 60)),
-          |u AS (SELECT DISTINCT patient_id, time FROM pf WHERE time IS NOT NULL),
-          |dd AS (SELECT patient_id, time, min(time) OVER (PARTITION BY patient_id) AS dob FROM u),
-          |age AS (SELECT patient_id, time, 'AGE' AS code,
-          |  (epoch_us(time)-epoch_us(dob))/(1000000*(86400*CAST(365.2422 AS DOUBLE))) AS v
-          |  FROM dd WHERE epoch_us(time) > epoch_us(dob)),
-          |tod AS (SELECT DISTINCT patient_id, time,
-          |  CASE WHEN hour(time)<6 THEN 'time_of_day//[00,06)' WHEN hour(time)<12 THEN 'time_of_day//[06,12)'
-          |       WHEN hour(time)<18 THEN 'time_of_day//[12,18)' ELSE 'time_of_day//[18,24)' END AS code,
-          |  CAST(NULL AS DOUBLE) AS v FROM pf WHERE time IS NOT NULL),
-          |wd AS (SELECT patient_id, time, code, v FROM pf
-          |       UNION ALL SELECT * FROM age UNION ALL SELECT * FROM tod),
-          |st0 AS (SELECT code,
-          |  count(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN 1 END) AS n,
-          |  CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN CAST(v AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s,
-          |  CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN CAST(v*v AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2
-          |  FROM wd GROUP BY 1),
-          |ms0 AS (SELECT code, CASE WHEN n>0 THEN s/n END AS mean,
-          |        CASE WHEN n>0 THEN sqrt(greatest(s2/n - (s/n)*(s/n), 0)) END AS std FROM st0),
-          |oc AS (SELECT wd.patient_id, wd.time, wd.code,
-          |       CASE WHEN abs(wd.v - ms0.mean) <= 3.0*ms0.std THEN wd.v END AS v
-          |       FROM wd LEFT JOIN ms0 USING (code)),
-          |st1 AS (SELECT code,
-          |  count(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN 1 END) AS n,
-          |  CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN CAST(v AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s,
-          |  CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN CAST(v*v AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2
-          |  FROM oc GROUP BY 1),
-          |ms1 AS (SELECT code, CASE WHEN n>0 THEN s/n END AS mean,
-          |        CASE WHEN n>0 THEN sqrt(greatest(s2/n - (s/n)*(s/n), 0)) END AS std FROM st1),
-          |vc AS (SELECT code, row_number() OVER (ORDER BY code NULLS FIRST) AS idx
-          |       FROM (SELECT DISTINCT code FROM oc))
-          |SELECT oc.patient_id, epoch_us(oc.time) AS time_us, CAST(vc.idx AS BIGINT) AS code,
-          |  floor(((oc.v - ms1.mean)/ms1.std) * 1000000 + 0.5) / 1000000 AS numeric_value
-          |FROM oc JOIN vc USING (code) JOIN ms1 USING (code)""".stripMargin
-
-  /** Unrolled BPE-merge oracle (round-10 verdict item: the former
-    * rows-only check now hash-verifies every merge round). Symbol
-    * arrays ride as "(s)(s)…" strings so DuckDB's left-to-right
-    * non-overlapping `replace` IS [[graft.text.Bpe.mergeOnce]]'s
-    * leftmost-greedy fold ("(a)(a)(a)" under (a,a) → "(aa)(a)", and
-    * the per-symbol parens make cross-boundary false matches
-    * impossible); each round is a MATERIALIZED pair-count + argmax +
-    * rewrite CTE trio (the PageRank unrolling convention — without
-    * MATERIALIZED the w-chain re-evaluates exponentially).
-    */
-  private def bpeMergesOracleSql(numMerges: Int): String = {
-    val rounds = (1 to numMerges).map { r =>
-      s"""p$r AS MATERIALIZED (SELECT p.a AS a, p.b AS b, CAST(sum(cnt) AS BIGINT) AS n FROM (
-         |  SELECT unnest(list_transform(range(1, len(syms)), i -> struct_pack(a := syms[i], b := syms[i+1]))) AS p, cnt
-         |  FROM (SELECT regexp_extract_all(s, '\\((.*?)\\)', 1) AS syms, cnt FROM w${r - 1})) GROUP BY 1, 2),
-         |m$r AS MATERIALIZED (SELECT a, b FROM p$r ORDER BY n DESC, a, b LIMIT 1),
-         |w$r AS MATERIALIZED (SELECT replace(w.s, '(' || m.a || ')(' || m.b || ')', '(' || m.a || m.b || ')') AS s, w.cnt FROM w${r - 1} w, m$r m)""".stripMargin
-    }.mkString(",\n")
-    val union = (1 to numMerges)
-      .map(r => s"SELECT CAST(${r - 1} AS BIGINT) AS rank, a, b FROM m$r")
-      .mkString("\nUNION ALL ")
-    s"""WITH wc AS (SELECT word, count(*) AS cnt FROM (
-       |    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
-       |    FROM documents) GROUP BY 1),
-       |w0 AS MATERIALIZED (SELECT regexp_replace(word, '(.)', '(\\1)', 'g') AS s, cnt FROM wc),
-       |$rounds
-       |$union""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = {
-    val stop = stopwordSqlLists
-    Map(
-      "q_agg_code_metadata" ->
-        s"SELECT event_type AS code, $aggColsSql FROM events GROUP BY 1",
-
-      // merged partials must equal the direct aggregation — same SQL
-      "q_agg_merge" ->
-        s"SELECT event_type AS code, $aggColsSql FROM events GROUP BY 1",
-
-      "q_agg_all_codes" ->
-        s"SELECT event_type AS code, $aggColsSql FROM events GROUP BY GROUPING SETS ((event_type), ())",
-
-      "q_filter_measurements" ->
-        """SELECT event_id, user_id AS patient_id, epoch_us(ts) AS time_us, event_type AS code, value AS numeric_value
-          |FROM events WHERE event_type IN (
-          |  SELECT event_type FROM events GROUP BY 1
-          |  HAVING count(DISTINCT user_id) >= 100 AND count(*) >= 2000)""".stripMargin,
-
-      "q_filter_patients_meas" ->
-        """SELECT event_id, user_id AS patient_id, epoch_us(ts) AS time_us, event_type AS code, value AS numeric_value
-          |FROM events WHERE user_id IN (
-          |  SELECT user_id FROM events WHERE ts IS NOT NULL GROUP BY 1 HAVING count(*) >= 60)""".stripMargin,
-
-      // NB: a null time counts as one distinct event (Polars n_unique
-      // parity — Filters.filterPatientsByNumEvents adds +1 when any null
-      // time exists), hence the max(CASE ...) term.
-      "q_filter_patients_events" ->
-        """SELECT event_id, user_id AS patient_id, epoch_us(ts) AS time_us, event_type AS code, value AS numeric_value
-          |FROM events WHERE user_id IN (
-          |  SELECT user_id FROM events GROUP BY 1
-          |  HAVING count(DISTINCT ts) + max(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) >= 60)""".stripMargin,
-
-      "q_add_age" ->
-        """WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL),
-          |d AS (SELECT user_id, ts, min(ts) OVER (PARTITION BY user_id) AS dob FROM u)
-          |SELECT user_id AS patient_id, epoch_us(ts) AS time_us, 'AGE' AS code,
-          |  floor(((epoch_us(ts)-epoch_us(dob)) / (1000000*(86400*CAST(365.2422 AS DOUBLE)))) * 1000000 + 0.5) / 1000000 AS numeric_value
-          |FROM d WHERE epoch_us(ts) > epoch_us(dob)""".stripMargin,
-
-      "q_time_of_day" ->
-        """SELECT DISTINCT user_id AS patient_id, epoch_us(ts) AS time_us,
-          |  CASE WHEN hour(ts)<6 THEN 'time_of_day//[00,06)' WHEN hour(ts)<12 THEN 'time_of_day//[06,12)'
-          |       WHEN hour(ts)<18 THEN 'time_of_day//[12,18)' ELSE 'time_of_day//[18,24)' END AS code
-          |FROM events WHERE ts IS NOT NULL""".stripMargin,
-
-      "q_time_derived_stage" ->
-        """WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL),
-          |d AS (SELECT user_id, ts, min(ts) OVER (PARTITION BY user_id) AS dob FROM u),
-          |age AS (SELECT user_id AS patient_id, epoch_us(ts) AS time_us, 'AGE' AS code,
-          |  floor(((epoch_us(ts)-epoch_us(dob)) / (1000000*(86400*CAST(365.2422 AS DOUBLE)))) * 1000000 + 0.5) / 1000000 AS numeric_value
-          |  FROM d WHERE epoch_us(ts) > epoch_us(dob)),
-          |tod AS (SELECT DISTINCT user_id AS patient_id, epoch_us(ts) AS time_us,
-          |  CASE WHEN hour(ts)<6 THEN 'time_of_day//[00,06)' WHEN hour(ts)<12 THEN 'time_of_day//[06,12)'
-          |       WHEN hour(ts)<18 THEN 'time_of_day//[12,18)' ELSE 'time_of_day//[18,24)' END AS code,
-          |  CAST(NULL AS DOUBLE) AS numeric_value
-          |  FROM events WHERE ts IS NOT NULL),
-          |orig AS (SELECT user_id AS patient_id, epoch_us(ts) AS time_us, event_type AS code,
-          |  CAST(value AS DOUBLE) AS numeric_value FROM events)
-          |SELECT * FROM age UNION ALL SELECT * FROM tod UNION ALL SELECT * FROM orig""".stripMargin,
-
-      // the full composed chain: patient filter -> time-derived -> stats
-      // -> occlude -> refit -> vocab -> normalize (MedsPipeline.run)
-      "q_meds_pipeline" -> medsPipelineOracleSql,
-
-      // the config-driven runner reproduces the code-composed pipeline
-      "q_pipeline_config" -> medsPipelineOracleSql,
-
-
-      "q_occlude_outliers" ->
-        s"""WITH $statsCtes
-           |SELECT e.event_id, e.user_id AS patient_id, epoch_us(e.ts) AS time_us, e.event_type AS code,
-           |  CASE WHEN abs(e.value-st.mean) <= 1.5*st.std THEN e.value END AS numeric_value,
-           |  abs(e.value-st.mean) <= 1.5*st.std AS "numeric_value/is_inlier"
-           |FROM events e LEFT JOIN st ON e.event_type = st.code""".stripMargin,
-
-      "q_winsorize" ->
-        """WITH b AS (SELECT event_type, quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi
-          |           FROM events GROUP BY 1)
-          |SELECT e.event_id, e.user_id AS patient_id, epoch_us(e.ts) AS time_us, e.event_type AS code,
-          |  floor((CASE WHEN e.value IS NULL THEN e.value
-          |             WHEN e.value < b.lo THEN b.lo
-          |             WHEN e.value > b.hi THEN b.hi ELSE e.value END) * 1000000 + 0.5) / 1000000 AS numeric_value
-          |FROM events e LEFT JOIN b ON e.event_type = b.event_type""".stripMargin,
-
-      "q_normalize" ->
-        s"""WITH $statsCtes,
-           |v AS (SELECT code, mean, std, row_number() OVER (ORDER BY code NULLS FIRST) AS idx FROM st)
-           |SELECT e.user_id AS patient_id, epoch_us(e.ts) AS time_us, v.idx AS code,
-           |  floor(((e.value - v.mean)/v.std) * 1000000 + 0.5) / 1000000 AS numeric_value
-           |FROM events e JOIN v ON e.event_type = v.code""".stripMargin,
-
-      // NULLS FIRST everywhere a vocab rank is replayed: DuckDB's default
-      // ORDER BY is NULLS LAST while the Spark leg (Vocabulary.
-      // lexicographicIndices, asc_nulls_first — the reference's order) and
-      // every other Spark ascending sort put nulls first. The driver data
-      // has no null codes today, but a null event_type would otherwise
-      // shift every vocab index by one on the Spark side only (round-12
-      // ADVICE).
-      "q_fit_vocab" ->
-        """SELECT event_type AS code, row_number() OVER (ORDER BY event_type NULLS FIRST) AS "code/vocab_index"
-          |FROM (SELECT DISTINCT event_type FROM events)""".stripMargin,
-
-      "q_cust_semi_anti" ->
-        """SELECT c_custkey, c_name FROM customer
-          |WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT')
-          |  AND c_custkey NOT IN (
-          |    SELECT o_custkey FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |    WHERE l_returnflag = 'R')""".stripMargin,
-
-      "q_fit_vocab_scalable" ->
-        """SELECT event_type AS code, row_number() OVER (ORDER BY event_type NULLS FIRST) AS "code/vocab_index"
-          |FROM (SELECT DISTINCT event_type FROM events)""".stripMargin,
-
-      "q_reorder_measurements" ->
-        """WITH e AS (SELECT event_id, user_id, date_trunc('day', ts) AS t, event_type,
-          |  CASE WHEN regexp_matches(event_type,'^signup$') THEN 0
-          |       WHEN regexp_matches(event_type,'^purchase$') THEN 1
-          |       WHEN regexp_matches(event_type,'^error$') THEN 2 ELSE 3 END AS idx FROM events)
-          |SELECT event_id, user_id AS patient_id, epoch_us(t) AS time_us, event_type AS code,
-          |  CAST(row_number() OVER (PARTITION BY user_id, t ORDER BY idx, event_type, event_id) AS BIGINT) AS order_in_event
-          |FROM e""".stripMargin,
-
-      "q_tokenize_schema" ->
-        """WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL)
-          |SELECT user_id AS patient_id,
-          |  epoch_us(min(ts) OVER (PARTITION BY user_id)) AS start_time_us,
-          |  CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts) - 1 AS BIGINT) AS event_idx,
-          |  epoch_us(ts) AS time_us
-          |FROM u""".stripMargin,
-
-      "q_tokenize_seqs" ->
-        """WITH pe AS (SELECT user_id, ts, count(*) AS n_measurements,
-          |  array_to_string(list_sort(list(event_type)), ',') AS codes
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2)
-          |SELECT user_id AS patient_id, epoch_us(ts) AS time_us, n_measurements, codes,
-          |  floor(((epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts))/(86400.0*1000000.0)) * 1000000 + 0.5) / 1000000 AS time_delta_days
-          |FROM pe""".stripMargin,
-
-      // Tensorize: replay vocab-indexing + per-event (idx, val) and
-      // per-patient (ts) ordered lists, then pad/truncate to the 8×4
-      // dense window by list indexing. The day-delta division is forced
-      // to DOUBLE on both sides (integer micros / 8.64e10 — bit-equal);
-      // out-of-range list indexes are NULL in DuckDB, coalesced to the
-      // pad values exactly where toDense pads.
-      "q_tensorize" ->
-        s"""WITH v AS (SELECT code, CAST(row_number() OVER (ORDER BY code NULLS FIRST) AS BIGINT) AS idx
-           |  FROM (SELECT DISTINCT event_type AS code FROM events)),
-           |mi AS (SELECT e.user_id AS patient_id, e.ts, v.idx, CAST(e.value AS DOUBLE) AS val
-           |  FROM events e JOIN v ON v.code = e.event_type WHERE e.ts IS NOT NULL),
-           |pe AS (SELECT patient_id, ts, list(idx ORDER BY idx, val NULLS FIRST) AS codes,
-           |    list(val ORDER BY idx, val NULLS FIRST) AS vals
-           |  FROM mi GROUP BY 1, 2),
-           |se AS (SELECT patient_id, list(epoch_us(ts) ORDER BY ts) AS tus,
-           |    list(codes ORDER BY ts) AS codes, list(vals ORDER BY ts) AS vals
-           |  FROM pe GROUP BY 1),
-           |g AS (SELECT se.*, ee.e, ii.i FROM se
-           |  CROSS JOIN (SELECT unnest(range(8)) AS e) ee
-           |  CROSS JOIN (SELECT unnest(range(4)) AS i) ii)
-           |SELECT patient_id, CAST(least(len(tus), 8) AS BIGINT) AS n_events,
-           |  CAST(e AS BIGINT) AS e, CAST(i AS BIGINT) AS i,
-           |  ${graft.functions.Portable.r6Sql(
-             "CASE WHEN e + 1 > len(tus) THEN 0.0 WHEN e = 0 THEN 'NaN'::DOUBLE " +
-             "ELSE CAST(tus[e+1] - tus[e] AS DOUBLE) / CAST(86400000000 AS DOUBLE) END")} AS time_delta_days,
-           |  e + 1 <= len(tus) AS event_mask,
-           |  coalesce(codes[e+1][i+1], 0) AS code,
-           |  coalesce(len(codes[e+1]), 0) >= i + 1 AS code_mask,
-           |  ${graft.functions.Portable.r6Sql("coalesce(vals[e+1][i+1], 0.0)")} AS numeric_value,
-           |  vals[e+1][i+1] IS NOT NULL AS numeric_value_mask
-           |FROM g""".stripMargin,
-
-      "q_shard_assign" ->
-        """SELECT DISTINCT user_id AS patient_id,
-          |  CASE WHEN user_id%10 < 8 THEN 'train' WHEN user_id%10 < 9 THEN 'tuning' ELSE 'held_out' END AS split,
-          |  CAST(floor(user_id/10.0) AS BIGINT) % 4 AS shard
-          |FROM events""".stripMargin,
-
-      "q_convert_events" ->
-        """SELECT event_id, user_id AS patient_id, epoch_us(ts) AS time_us,
-          |  concat_ws('//', 'EVENT', coalesce(CAST(event_type AS VARCHAR), 'UNK')) AS code,
-          |  value AS numeric_value
-          |FROM events WHERE ts IS NOT NULL""".stripMargin,
-
-      "q_convert_multifmt" ->
-        """WITH raw AS (SELECT *,
-          |  CASE WHEN event_id % 2 = 0 THEN strftime(ts, '%Y-%m-%d %H:%M:%S.%f')
-          |       ELSE strftime(ts, '%m/%d/%Y %H:%M:%S.%f') END AS ts_str FROM events),
-          |p AS (SELECT *,
-          |  coalesce(try_strptime(ts_str, '%Y-%m-%d %H:%M:%S.%f'),
-          |           try_strptime(ts_str, '%m/%d/%Y %H:%M:%S.%f')) AS t FROM raw)
-          |SELECT event_id, user_id AS patient_id, epoch_us(t) AS time_us,
-          |  concat_ws('//', 'EVENT', coalesce(CAST(event_type AS VARCHAR), 'UNK')) AS code,
-          |  CAST(props AS VARCHAR) AS text_value,
-          |  CAST(event_type AS VARCHAR) AS categorical_value,
-          |  value AS numeric_value
-          |FROM p WHERE t IS NOT NULL""".stripMargin,
-
-      "q_merge_sort" ->
-        """WITH p1 AS (SELECT user_id AS patient_id, ts AS t, event_type AS code, value AS numeric_value, 'web' AS channel
-          |            FROM events WHERE event_type IN ('click','view')),
-          |p2 AS (SELECT user_id, ts, event_type, value, NULL FROM events WHERE event_type = 'purchase'),
-          |u AS (SELECT * FROM p1 UNION ALL SELECT * FROM p2 UNION ALL SELECT * FROM p2)
-          |SELECT DISTINCT patient_id, epoch_us(t) AS time_us, code, numeric_value, channel FROM u""".stripMargin,
-
-      "q_code_metadata_join" ->
-        """WITH c AS (SELECT event_type AS code, count(*) AS n_occurrences FROM events GROUP BY 1),
-          |m AS (SELECT * FROM (VALUES ('click','Click event'),('view','View event'),('purchase','Purchase'),('signup','Signup')) AS t(code, description))
-          |SELECT c.code, c.n_occurrences, m.description FROM c LEFT JOIN m ON c.code = m.code""".stripMargin,
-
-      "q_extract_metadata_multi" ->
-        """WITH m1 AS (SELECT * FROM (VALUES ('click','Click event',1),('view','View event',2),
-          |                                  ('purchase','Purchase v1',3)) t(code, description, priority)),
-          |m2 AS (SELECT * FROM (VALUES ('purchase','Completed checkout'),('signup','Account created')) t(code, description)),
-          |u AS (SELECT DISTINCT * FROM (SELECT code, description, priority FROM m1
-          |                              UNION ALL SELECT code, description, NULL FROM m2)),
-          |multi AS (SELECT code,
-          |    string_agg(description, '; ' ORDER BY description) AS description,
-          |    coalesce(string_agg(CAST(priority AS VARCHAR), ',' ORDER BY priority), '') AS priorities
-          |  FROM u GROUP BY 1),
-          |c AS (SELECT DISTINCT event_type AS code FROM events)
-          |SELECT c.code, m.description, m.priorities FROM c LEFT JOIN multi m ON c.code = m.code""".stripMargin,
-
-      "q_finalize" ->
-        """SELECT event_id, user_id AS patient_id, epoch_us(ts) AS time_us, event_type AS code,
-          |  CAST(value AS REAL) AS numeric_value
-          |FROM events""".stripMargin,
-
-      "q_finalize_metadata" ->
-        """SELECT DISTINCT event_type AS code, upper(event_type) AS description,
-          |  concat('evt//', event_type) AS parent_code
-          |FROM events""".stripMargin,
-
-      "q_extract_dsl" ->
-        """SELECT event_id, user_id AS patient_id, epoch_us(ts) AS time_us,
-          |  concat('EVENT//', CAST(event_type AS VARCHAR)) AS code,
-          |  coalesce(CASE WHEN event_type = 'purchase' THEN value END, -1.0) AS numeric_value
-          |FROM events""".stripMargin,
-
-      "q_dedup_exact" ->
-        """SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp,
-          |  min(doc_id) AS canonical_id, count(*) AS n_copies
-          |FROM documents GROUP BY 1""".stripMargin,
-
-      "q_dup_spans" ->
-        s"""WITH tk AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |sp AS (SELECT id, CAST(len(toks) AS BIGINT) AS n_tokens,
-           |  unnest(CASE WHEN len(toks)>=10 THEN list_transform(range(1, len(toks)-8), i -> {'pos': i, 'g': array_to_string(toks[i:i+9],' ')}) ELSE [] END) AS s
-           |  FROM tk),
-           |sh AS (SELECT id, n_tokens, CAST(s.pos AS BIGINT) AS pos, ${h32("s.g")} AS sh FROM sp),
-           |hot AS (SELECT sh FROM (SELECT sh, count(*) AS df FROM sh GROUP BY 1) WHERE df > 1),
-           |d AS (SELECT id, n_tokens, pos FROM sh WHERE sh IN (SELECT sh FROM hot)),
-           |b AS (SELECT id, n_tokens, pos, CASE WHEN pos - lag(pos) OVER (PARTITION BY id ORDER BY pos) <= 10 THEN 0 ELSE 1 END AS brk FROM d),
-           |isl AS (SELECT id, n_tokens, pos, sum(brk) OVER (PARTITION BY id ORDER BY pos) AS g FROM b),
-           |spans AS (SELECT id, g, any_value(n_tokens) AS n_tokens, min(pos) AS s, max(pos)+9 AS e FROM isl GROUP BY 1,2),
-           |agg AS (SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS n_spans, CAST(sum(e-s+1) AS BIGINT) AS dup_tokens, any_value(n_tokens) AS n_tokens FROM spans GROUP BY 1)
-           |SELECT doc_id, n_spans, dup_tokens, n_tokens,
-           |  ${graft.functions.Portable.r6Sql("CAST(dup_tokens AS DOUBLE)/CAST(n_tokens AS DOUBLE)")} AS dup_frac
-           |FROM agg""".stripMargin,
-
-      "q_dedup_jaccard" ->
-        s"""WITH $shingleCtes,
-           |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-           |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-           |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2)
-           |SELECT ia AS id_a, ib AS id_b, floor((CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc)) * 1000000 + 0.5) / 1000000 AS jaccard
-           |FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
-           |WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.5""".stripMargin,
-
-      // transitive closure of the jaccard pair graph; cluster = min reachable id
-      "q_dedup_cluster" ->
-        s"WITH RECURSIVE $closureCtes\nSELECT id, cluster_id FROM clusters",
-
-      // retention policy: keep the longest doc per near-dup cluster
-      // (tie -> smallest id); un-clustered docs are their own singleton
-      "q_dedup_survivors" ->
-        s"""WITH RECURSIVE $closureCtes,
-           |d AS (SELECT doc_id AS id, CAST(n_chars AS BIGINT) AS score FROM documents),
-           |withc AS (SELECT d.id, coalesce(c.cluster_id, d.id) AS cluster_id, d.score
-           |  FROM d LEFT JOIN clusters c ON d.id = c.id),
-           |r AS (SELECT cluster_id, id, score,
-           |    row_number() OVER (PARTITION BY cluster_id ORDER BY score DESC, id) AS rn FROM withc)
-           |SELECT cluster_id, id, score FROM r WHERE rn = 1""".stripMargin,
-
-      "q_minhash_sigs" ->
-        s"""WITH $shingleCtes
-           |SELECT id, ${minhashAggSql(8, j => s"minhash_$j")}
-           |FROM shh GROUP BY 1""".stripMargin,
-
-      // buckets over the 1000 cap are dropped whole (mirrors maxBucketSize)
-      "q_dedup_minhash" ->
-        s"""WITH $shingleCtes,
-           |sg AS (SELECT id, ${minhashAggSql(8, j => s"m$j")} FROM shh GROUP BY 1),
-           |bands0 AS (${(0 until 4).map(b => s"SELECT id, $b AS band, md5(concat(CAST(m${2 * b} AS VARCHAR),'|',CAST(m${2 * b + 1} AS VARCHAR))) AS sig FROM sg").mkString(" UNION ALL ")}),
-           |bands AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY band, sig) AS bsz FROM bands0) WHERE bsz <= 1000)
-           |SELECT DISTINCT a.id AS id_a, b.id AS id_b
-           |FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.id < b.id""".stripMargin,
-
-      "q_simhash" ->
-        s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
-           |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
-           |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
-           |      FROM w, (SELECT unnest(range(0, 32)) AS b) GROUP BY 1, 2)
-           |SELECT id, CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-           |FROM v GROUP BY 1""".stripMargin,
-
-      // pigeonhole hamming blocks: 4 blocks x 8 bits; any pair within
-      // hamming 3 shares an exact block
-      "q_simhash_pairs" ->
-        s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
-           |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
-           |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
-           |      FROM w, (SELECT unnest(range(0, 32)) AS b) GROUP BY 1, 2),
-           |sg AS (SELECT id, CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-           |       FROM v GROUP BY 1),
-           |bl0 AS (SELECT id, simhash, b AS blk, (simhash >> (b * 8)) & 255 AS v
-           |       FROM sg, (SELECT unnest(range(0, 4)) AS b)),
-           |bl AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY blk, v) AS bsz FROM bl0) WHERE bsz <= 1000)
-           |SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-           |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-           |FROM bl a JOIN bl b ON a.blk = b.blk AND a.v = b.v AND a.id < b.id
-           |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin,
-
-      // cells over the 10000 cap are dropped whole (mirrors BoundedCollectVectors)
-      "q_embed_neardup" ->
-        s"""WITH c0 AS (SELECT vec_id, embedding, $cellSql AS cell FROM embeddings),
-           |c AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY cell) AS csz FROM c0) WHERE csz <= 10000),
-           |p AS (SELECT a.vec_id AS ia, b.vec_id AS ib, ${cosSql("a.embedding", "b.embedding")} AS cos
-           |      FROM c a JOIN c b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-           |SELECT ia AS id_a, ib AS id_b, floor((cos) * 1000000 + 0.5) / 1000000 AS cosine FROM p WHERE cos >= 0.25""".stripMargin,
-
-      // SRP planes re-derived in SQL from the same md5 parity as
-      // Srp.planeSign; banding mirrors minhashCandidatePairs exactly
-      // (md5 of '|'-joined bit strings, buckets > 1000 dropped whole).
-      "q_srp_lsh" ->
-        s"""WITH pl AS (SELECT p.i AS p,
-           |  list_transform(range(0,64), d -> CASE WHEN CAST(concat('0x', substr(md5(concat('srp:', p.i, ':', d)),1,8)) AS BIGINT) % 2 = 0
-           |    THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS pv
-           |  FROM range(0,16) p(i)),
-           |sg AS (SELECT e.vec_id, pl.p,
-           |  CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> CAST(e.embedding[i] AS DOUBLE) * pl.pv[i])), (x,y) -> x+y) >= 0
-           |    THEN 1 ELSE 0 END AS bit
-           |  FROM embeddings e, pl),
-           |bl AS (SELECT vec_id, list(CAST(bit AS VARCHAR) ORDER BY p) AS bits FROM sg GROUP BY 1),
-           |bd AS (SELECT vec_id, b.i AS band, md5(array_to_string(bits[b.i*4+1:b.i*4+4], '|')) AS sig FROM bl, range(0,4) b(i)),
-           |bok AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY band, sig) AS bsz FROM bd) WHERE bsz <= 1000),
-           |cand AS (SELECT DISTINCT a.vec_id AS ia, b.vec_id AS ib
-           |         FROM bok a JOIN bok b ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id),
-           |ver AS (SELECT ia, ib, ${graft.functions.Portable.r6Sql(cosSql("ea.embedding", "eb.embedding"))} AS cosine
-           |        FROM cand JOIN embeddings ea ON ia = ea.vec_id JOIN embeddings eb ON ib = eb.vec_id)
-           |SELECT ia AS id_a, ib AS id_b, cosine FROM ver WHERE cosine >= 0.25""".stripMargin,
-
-      "q_ann_topk" ->
-        s"""WITH q AS (SELECT * FROM embeddings WHERE vec_id < 8),
-           |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
-           |       FROM embeddings c JOIN q ON c.vec_id <> q.vec_id),
-           |r AS (SELECT query_id, neighbor_id,
-           |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-           |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-           |      FROM sc)
-           |SELECT * FROM r WHERE "rank" <= 5""".stripMargin,
-
-      "q_ann_ivf" ->
-        s"""WITH c AS (SELECT vec_id, embedding, $cellSql AS cell FROM embeddings),
-           |q AS (SELECT * FROM c WHERE vec_id < 8),
-           |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
-           |       FROM c JOIN q ON c.cell = q.cell AND c.vec_id <> q.vec_id),
-           |r AS (SELECT query_id, neighbor_id,
-           |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-           |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-           |      FROM sc)
-           |SELECT * FROM r WHERE "rank" <= 5""".stripMargin,
-
-      "q_ann_multiprobe" ->
-        s"""WITH c AS (SELECT vec_id, embedding, $cellSql AS cell FROM embeddings),
-           |q0 AS (SELECT * FROM c WHERE vec_id < 8),
-           |q AS (SELECT vec_id, embedding, xor(cell, m) AS cell
-           |      FROM q0, (SELECT unnest([${0L +: (0 until 8).map(1L << _) mkString ","}]) AS m)),
-           |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
-           |       FROM c JOIN q ON c.cell = q.cell AND c.vec_id <> q.vec_id),
-           |r AS (SELECT query_id, neighbor_id,
-           |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-           |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-           |      FROM sc)
-           |SELECT * FROM r WHERE "rank" <= 5""".stripMargin,
-
-      "q_lang_id" -> langIdSelectSql,
-
-      "q_quality" -> {
-        val allStop = TextFunctions.Stopwords.flatMap(_._2).distinct.map(w => s"'$w'").mkString("[", ",", "]")
-        s"""WITH t AS (SELECT doc_id, text, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |f AS (SELECT doc_id,
-           |  CAST(len(text) AS BIGINT) AS n_chars,
-           |  CAST(len(toks) AS BIGINT) AS n_words,
-           |  floor((CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 AS mean_word_len,
-           |  floor((CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)) * 1000000 + 0.5) / 1000000 AS punct_ratio,
-           |  floor((CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 AS stopword_ratio
-           |FROM t)
-           |SELECT doc_id, n_chars, n_words, mean_word_len, punct_ratio, stopword_ratio,
-           |  floor((0.4*least(CAST(n_words AS DOUBLE)/100.0, 1.0) + 0.3*least(stopword_ratio*5.0, 1.0)
-           |    + 0.2*(CASE WHEN mean_word_len BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END)
-           |    + 0.1*(1.0 - least(punct_ratio*5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS quality_score
-           |FROM f""".stripMargin
-      },
-
-      "q_gopher_rules" -> {
-        val stop = TextFunctions.GopherStopwords.map(w => s"'$w'").mkString("[", ",", "]")
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH t AS (SELECT doc_id, text,
-           |  list_filter(string_split_regex(text, '\\s+'), x -> x<>'') AS words,
-           |  list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l<>'') AS lines,
-           |  list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks
-           |  FROM documents),
-           |f AS (SELECT doc_id,
-           |  CAST(len(words) AS BIGINT) AS n_words,
-           |  CAST(greatest(len(words),1) AS DOUBLE) AS wden,
-           |  CAST(greatest(len(lines),1) AS DOUBLE) AS lden,
-           |  ${r6("CAST(len(regexp_replace(text,'\\s','','g')) AS DOUBLE)/CAST(greatest(len(words),1) AS DOUBLE)")} AS mean_word_len,
-           |  ${r6("CAST(len(regexp_extract_all(text,'#')) + len(regexp_extract_all(text,'\\.\\.\\.|…')) AS DOUBLE)/CAST(greatest(len(words),1) AS DOUBLE)")} AS symbol_ratio,
-           |  ${r6("CAST(len(list_filter(lines, l -> regexp_matches(l,'^[-*•]'))) AS DOUBLE)/CAST(greatest(len(lines),1) AS DOUBLE)")} AS bullet_frac,
-           |  ${r6("CAST(len(list_filter(lines, l -> regexp_matches(l,'(\\.\\.\\.|…)$'))) AS DOUBLE)/CAST(greatest(len(lines),1) AS DOUBLE)")} AS ellipsis_frac,
-           |  ${r6("CAST(len(list_filter(words, w -> regexp_matches(w,'[A-Za-z]'))) AS DOUBLE)/CAST(greatest(len(words),1) AS DOUBLE)")} AS alpha_word_frac,
-           |  CAST(len(list_filter(toks, x -> list_contains($stop, x))) AS BIGINT) AS n_stopwords
-           |FROM t)
-           |SELECT doc_id, n_words, mean_word_len, symbol_ratio, bullet_frac, ellipsis_frac,
-           |  alpha_word_frac, n_stopwords,
-           |  (n_words BETWEEN 50 AND 100000 AND mean_word_len BETWEEN 3.0 AND 10.0
-           |   AND symbol_ratio < 0.1 AND bullet_frac < 0.9 AND ellipsis_frac < 0.3
-           |   AND alpha_word_frac > 0.8 AND n_stopwords >= 2) AS passes
-           |FROM f""".stripMargin
-      },
-
-      "q_token_count" ->
-        """SELECT doc_id,
-          |  CAST(len(list_filter(string_split_regex(text, '\s+'), x -> x<>'')) AS BIGINT) AS n_ws_tokens,
-          |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_bpeish_tokens
-          |FROM documents""".stripMargin,
-
-      "q_c4_rules" ->
-        """WITH t AS (SELECT doc_id, text,
-          |  list_filter(list_transform(string_split(regexp_replace(text, '\r', '', 'g'), chr(10)), l -> trim(l)), l -> l<>'') AS lines
-          |  FROM documents),
-          |f AS (SELECT doc_id, text,
-          |  CAST(len(lines) AS BIGINT) AS n_lines,
-          |  CAST(len(list_filter(lines, l -> regexp_matches(l, '[.!?"]$')
-          |    AND len(list_filter(string_split_regex(l, '\s+'), w -> w<>'')) >= 3)) AS BIGINT) AS n_kept
-          |  FROM t)
-          |SELECT doc_id, n_lines, n_kept,
-          |  floor((CAST(n_kept AS DOUBLE)/CAST(greatest(n_lines,1) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS kept_frac,
-          |  contains(lower(text), 'lorem ipsum') AS has_lorem,
-          |  contains(text, '{') AS has_brace,
-          |  (n_kept >= 5 AND NOT contains(lower(text), 'lorem ipsum') AND NOT contains(text, '{')) AS passes
-          |FROM f""".stripMargin,
-
-      "q_redact_pii" ->
-        """WITH s1 AS (SELECT doc_id, text,
-          |  regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t1
-          |  FROM documents),
-          |s2 AS (SELECT doc_id, text, t1,
-          |  regexp_replace(t1, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g') AS t2
-          |  FROM s1)
-          |SELECT doc_id,
-          |  regexp_replace(t2, '[0-9]{9,}', '<NUM>', 'g') AS redacted,
-          |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-          |     + len(regexp_extract_all(t1, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}'))
-          |     + len(regexp_extract_all(t2, '[0-9]{9,}')) AS BIGINT) AS n_redacted
-          |FROM s2""".stripMargin,
-
-      "q_mojibake" ->
-        """WITH f AS (SELECT doc_id, len(text) AS n_chars,
-          |  CAST(len(regexp_extract_all(text, '�')) AS BIGINT) AS n_replacement,
-          |  CAST(len(regexp_extract_all(text, '[\x00-\x08\x0b\x0c\x0e-\x1f]')) AS BIGINT) AS n_ctrl,
-          |  CAST(len(regexp_extract_all(text, 'Ã[©¨¤¶¼±‰]|â€|Â[«»]')) AS BIGINT) AS n_mojibake
-          |  FROM documents)
-          |SELECT doc_id, n_replacement, n_ctrl, n_mojibake,
-          |  floor((CAST(n_replacement + n_ctrl + n_mojibake AS DOUBLE)/CAST(greatest(n_chars,1) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS artifact_frac,
-          |  (n_replacement + n_ctrl + n_mojibake = 0) AS is_clean
-          |FROM f""".stripMargin,
-
-      "q_psi" ->
-        """WITH f AS (SELECT event_type, CAST(value AS DOUBLE) AS v, (event_id % 2 = 0) AS ref
-          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-          |r AS (SELECT event_type, min(v) AS lo, max(v) AS hi FROM f GROUP BY 1),
-          |b AS (SELECT f.event_type, ref,
-          |    CASE WHEN r.hi = r.lo THEN 0
-          |         ELSE CAST(least(floor((v - r.lo) / ((r.hi - r.lo)/10.0)), 9.0) AS INT) END AS bin
-          |  FROM f JOIN r ON f.event_type = r.event_type),
-          |c AS (SELECT event_type, ref, bin, count(*) AS n FROM b GROUP BY 1,2,3),
-          |tt AS (SELECT event_type, ref, sum(n) AS tot FROM c GROUP BY 1,2),
-          |grid AS (SELECT event_type, CAST(range AS INT) AS bin
-          |  FROM (SELECT DISTINCT event_type FROM c) CROSS JOIN range(10)),
-          |j AS (SELECT grid.event_type,
-          |    (CAST(COALESCE(cr.n,0) AS DOUBLE)+0.5)/(CAST(COALESCE(tr.tot,0) AS DOUBLE)+5.0) AS p,
-          |    (CAST(COALESCE(cc.n,0) AS DOUBLE)+0.5)/(CAST(COALESCE(tc.tot,0) AS DOUBLE)+5.0) AS q
-          |  FROM grid
-          |  LEFT JOIN c cr ON cr.event_type = grid.event_type AND cr.bin = grid.bin AND cr.ref
-          |  LEFT JOIN c cc ON cc.event_type = grid.event_type AND cc.bin = grid.bin AND NOT cc.ref
-          |  LEFT JOIN tt tr ON tr.event_type = grid.event_type AND tr.ref
-          |  LEFT JOIN tt tc ON tc.event_type = grid.event_type AND NOT tc.ref)
-          |SELECT event_type,
-          |  floor(CAST(sum(CAST((p - q) * ln(p / q) AS DECIMAL(38,12))) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS psi
-          |FROM j GROUP BY 1""".stripMargin,
-
-      "q_fk_audit" ->
-        """WITH a AS (SELECT 'lineitem.orderkey' AS relation, count(*) AS n_rows,
-          |    CAST(sum(CASE WHEN l.l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_fk,
-          |    CAST(sum(CASE WHEN l.l_orderkey IS NOT NULL AND o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
-          |  FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o ON l.l_orderkey = o.o_orderkey),
-          |b AS (SELECT 'orders.custkey' AS relation, count(*) AS n_rows,
-          |    CAST(sum(CASE WHEN o.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_fk,
-          |    CAST(sum(CASE WHEN o.o_custkey IS NOT NULL AND c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
-          |  FROM orders o LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c ON o.o_custkey = c.c_custkey),
-          |cta AS (SELECT 'customer.nationkey' AS relation, count(*) AS n_rows,
-          |    CAST(sum(CASE WHEN c.c_nationkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_fk,
-          |    CAST(sum(CASE WHEN c.c_nationkey IS NOT NULL AND n.n_nationkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
-          |  FROM customer c LEFT JOIN (SELECT DISTINCT n_nationkey FROM nation) n ON c.c_nationkey = n.n_nationkey)
-          |SELECT relation, n_rows, n_null_fk, n_orphans,
-          |  floor((CAST(n_orphans AS DOUBLE)/CAST(greatest(n_rows,1) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS orphan_frac
-          |FROM (SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM cta)""".stripMargin,
-
-      "q_pq_codes" ->
-        s"""WITH sub AS (SELECT e.vec_id AS id, b.blk,
-           |    list_slice(e.embedding, b.blk*16 + 1, b.blk*16 + 16) AS sub
-           |  FROM embeddings e CROSS JOIN (SELECT unnest(range(4)) AS blk) b),
-           |pc AS (SELECT blk, CAST(rn - 1 AS BIGINT) AS cid, sub FROM (
-           |  SELECT blk, sub, row_number() OVER (PARTITION BY blk ORDER BY h, id) AS rn FROM (
-           |    SELECT id, blk, sub, ${h32("concat('graft','|',CAST(id AS VARCHAR))")} AS h FROM sub))
-           |  WHERE rn <= 8),
-           |d AS (SELECT s.id, s.blk, pc.cid, ${sqDistSqlN("s.sub", "pc.sub", 16)} AS dist
-           |  FROM sub s JOIN pc ON s.blk = pc.blk),
-           |a AS (SELECT id, blk, cid AS code FROM (SELECT id, blk, cid,
-           |    row_number() OVER (PARTITION BY id, blk ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1),
-           |rec AS (SELECT a.id, flatten(list(pc.sub ORDER BY a.blk)) AS rec
-           |  FROM a JOIN pc ON pc.blk = a.blk AND pc.cid = a.code GROUP BY a.id),
-           |rd AS (SELECT e.vec_id AS id, ${graft.functions.Portable.r6Sql(sqDistSql("e.embedding", "rec.rec"))} AS recon_dist
-           |  FROM embeddings e JOIN rec ON rec.id = e.vec_id)
-           |SELECT a.id AS vec_id, CAST(a.blk AS BIGINT) AS blk,
-           |  CAST(a.code AS BIGINT) AS code, rd.recon_dist
-           |FROM a JOIN rd USING (id)""".stripMargin,
-
-      // IVF-PQ ADC: coarse assign -> residual -> init codebook (the
-      // q_pq_codes convention, over RESIDUAL sub-vectors) -> per-(query,
-      // probed-cell) ADC table -> summed lookups -> top-5. The adc sum
-      // folds in blk order (list_reduce over list(... ORDER BY blk)) to
-      // match Spark's left-to-right aggregate over the codes array.
-      "q_ann_ivfpq_adc" ->
-        s"""WITH $kmeansInitCte,
-           |asn AS (SELECT vec_id, cid, cemb FROM (
-           |  SELECT e.vec_id, c0.cid, c0.embedding AS cemb,
-           |    row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqDistSql("e.embedding", "c0.embedding")}, c0.cid) AS rn
-           |  FROM embeddings e CROSS JOIN c0) WHERE rn = 1),
-           |res AS (SELECT a.vec_id AS id, a.cid,
-           |    list_transform(range(1,65), i -> CAST(e.embedding[i] AS DOUBLE) - CAST(a.cemb[i] AS DOUBLE)) AS r
-           |  FROM asn a JOIN embeddings e ON e.vec_id = a.vec_id),
-           |sub AS (SELECT res.id, b.blk, res.cid, list_slice(res.r, b.blk*16 + 1, b.blk*16 + 16) AS sub
-           |  FROM res CROSS JOIN (SELECT unnest(range(4)) AS blk) b),
-           |pc AS (SELECT blk, CAST(rn - 1 AS BIGINT) AS code, sub FROM (
-           |  SELECT blk, sub, row_number() OVER (PARTITION BY blk ORDER BY h, id) AS rn FROM (
-           |    SELECT id, blk, sub, ${h32("concat('graft','|',CAST(id AS VARCHAR))")} AS h FROM sub))
-           |  WHERE rn <= 8),
-           |codes AS (SELECT id, blk, code, cid FROM (SELECT s.id, s.blk, s.cid, pc.code,
-           |    row_number() OVER (PARTITION BY s.id, s.blk ORDER BY ${sqDistSqlN("s.sub", "pc.sub", 16)}, pc.code) AS rn
-           |  FROM sub s JOIN pc ON s.blk = pc.blk) WHERE rn = 1),
-           |q AS (SELECT query_id, cid, qr FROM (
-           |  SELECT e.vec_id AS query_id, c0.cid,
-           |    list_transform(range(1,65), i -> CAST(e.embedding[i] AS DOUBLE) - CAST(c0.embedding[i] AS DOUBLE)) AS qr,
-           |    row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqDistSql("e.embedding", "c0.embedding")}, c0.cid) AS rn
-           |  FROM embeddings e CROSS JOIN c0 WHERE e.vec_id < 8) WHERE rn <= 2),
-           |qd AS (SELECT q.query_id, q.cid, pc.blk, pc.code,
-           |    ${sqDistSqlN("list_slice(q.qr, pc.blk*16 + 1, pc.blk*16 + 16)", "pc.sub", 16)} AS d
-           |  FROM q CROSS JOIN pc),
-           |sc AS (SELECT qd.query_id, c.id AS neighbor_id,
-           |    list_reduce(list_prepend(CAST(0 AS DOUBLE), list(qd.d ORDER BY qd.blk)), (x,y) -> x + y) AS adc
-           |  FROM codes c JOIN qd ON qd.cid = c.cid AND qd.blk = c.blk AND qd.code = c.code
-           |  WHERE c.id <> qd.query_id
-           |  GROUP BY 1, 2),
-           |r AS (SELECT query_id, neighbor_id,
-           |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS BIGINT) AS "rank",
-           |    ${graft.functions.Portable.r6Sql("-adc")} AS neg_adc_dist
-           |  FROM sc)
-           |SELECT query_id, neighbor_id, "rank", neg_adc_dist FROM r WHERE "rank" <= 5""".stripMargin,
-
-      // OPQ apply path: the fixed stride-permutation rotation is pure
-      // list indexing (y[j+1] = x[37j mod 64 + 1], exact in float),
-      // then the q_pq_codes encode/decode body runs on the rotated
-      // corpus. recon_dist is in ROTATED space (where OPQ's PQ lives).
-      "q_opq_encode" ->
-        s"""WITH rot AS (SELECT vec_id,
-           |    list_transform(range(0,64), j -> CAST(embedding[((37*j) % 64) + 1] AS DOUBLE)) AS y
-           |  FROM embeddings),
-           |sub AS (SELECT r.vec_id AS id, b.blk,
-           |    list_slice(r.y, b.blk*16 + 1, b.blk*16 + 16) AS sub
-           |  FROM rot r CROSS JOIN (SELECT unnest(range(4)) AS blk) b),
-           |pc AS (SELECT blk, CAST(rn - 1 AS BIGINT) AS cid, sub FROM (
-           |  SELECT blk, sub, row_number() OVER (PARTITION BY blk ORDER BY h, id) AS rn FROM (
-           |    SELECT id, blk, sub, ${h32("concat('graft','|',CAST(id AS VARCHAR))")} AS h FROM sub))
-           |  WHERE rn <= 8),
-           |d AS (SELECT s.id, s.blk, pc.cid, ${sqDistSqlN("s.sub", "pc.sub", 16)} AS dist
-           |  FROM sub s JOIN pc ON s.blk = pc.blk),
-           |a AS (SELECT id, blk, cid AS code FROM (SELECT id, blk, cid,
-           |    row_number() OVER (PARTITION BY id, blk ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1),
-           |rec AS (SELECT a.id, flatten(list(pc.sub ORDER BY a.blk)) AS rec
-           |  FROM a JOIN pc ON pc.blk = a.blk AND pc.cid = a.code GROUP BY a.id),
-           |rd AS (SELECT r.vec_id AS id, ${graft.functions.Portable.r6Sql(sqDistSql("r.y", "rec.rec"))} AS recon_dist
-           |  FROM rot r JOIN rec ON rec.id = r.vec_id)
-           |SELECT a.id AS vec_id, CAST(a.blk AS BIGINT) AS blk,
-           |  CAST(a.code AS BIGINT) AS code, rd.recon_dist
-           |FROM a JOIN rd USING (id)""".stripMargin,
-
-      // PCA distributed leg: unbiased covariance entries from raw
-      // moments — sums replayed per (i, j) by an unnest self-join; the
-      // centering (Σxᵢxⱼ − ΣxᵢΣxⱼ/n)/(n−1) matches Pca.covarianceFrame
-      // term-for-term. r6 absorbs reduction-order float noise.
-      "q_pca_cov" ->
-        s"""WITH xs AS (SELECT vec_id, ii.i, CAST(embedding[ii.i] AS DOUBLE) AS x
-           |  FROM embeddings CROSS JOIN (SELECT unnest(range(1,65)) AS i) ii
-           |  WHERE embedding IS NOT NULL),
-           |nn AS (SELECT count(*) AS n FROM embeddings WHERE embedding IS NOT NULL),
-           |s AS (SELECT i, sum(x) AS sx FROM xs GROUP BY i),
-           |p AS (SELECT a.i AS i, b.i AS j, sum(a.x*b.x) AS sxx
-           |  FROM xs a JOIN xs b USING (vec_id) GROUP BY 1, 2)
-           |SELECT CAST(p.i - 1 AS BIGINT) AS i, CAST(p.j - 1 AS BIGINT) AS j,
-           |  ${graft.functions.Portable.r6Sql("(p.sxx - si.sx*sj.sx/nn.n)/(nn.n - 1)")} AS cov
-           |FROM p CROSS JOIN nn JOIN s si ON si.i = p.i JOIN s sj ON sj.i = p.j""".stripMargin,
-
-      "q_kmeans_assign" ->
-        s"""WITH $kmeansInitCte,
-           |d AS (SELECT e.vec_id, c0.cid, ${sqDistSql("e.embedding", "c0.embedding")} AS dist
-           |      FROM embeddings e CROSS JOIN c0),
-           |r AS (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d)
-           |SELECT vec_id, cid, floor((dist) * 1000000 + 0.5) / 1000000 AS dist FROM r WHERE rn = 1""".stripMargin,
-
-      "q_ann_ivf_kmeans" ->
-        s"""WITH $kmeansInitCte,
-           |ca AS (SELECT vec_id, embedding, cid FROM (
-           |  SELECT e.vec_id, e.embedding, c0.cid,
-           |    row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqDistSql("e.embedding", "c0.embedding")}, c0.cid) AS rn
-           |  FROM embeddings e CROSS JOIN c0) WHERE rn = 1),
-           |q AS (SELECT query_id, embedding, cid FROM (
-           |  SELECT e.vec_id AS query_id, e.embedding, c0.cid,
-           |    row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqDistSql("e.embedding", "c0.embedding")}, c0.cid) AS rn
-           |  FROM embeddings e CROSS JOIN c0 WHERE e.vec_id < 8) WHERE rn <= 2),
-           |sc AS (SELECT q.query_id, ca.vec_id AS neighbor_id, ${cosSql("q.embedding", "ca.embedding")} AS cos
-           |       FROM ca JOIN q ON ca.cid = q.cid AND ca.vec_id <> q.query_id),
-           |r AS (SELECT query_id, neighbor_id,
-           |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-           |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-           |      FROM sc)
-           |SELECT * FROM r WHERE "rank" <= 5""".stripMargin,
-
-      // md5-threshold sampling: hash space mod 1e6, keep below frac*1e6
-      "q_sample_det" ->
-        s"""SELECT doc_id, lang FROM documents
-           |WHERE ${h32("concat('s42','|',CAST(doc_id AS VARCHAR))")} % 1000000 < 300000""".stripMargin,
-
-      "q_sample_n" ->
-        s"""SELECT doc_id, lang FROM documents
-           |ORDER BY ${h32("concat('s42','|',CAST(doc_id AS VARCHAR))")}, doc_id LIMIT 100""".stripMargin,
-
-      "q_sample_strat" ->
-        s"""SELECT doc_id, lang FROM documents
-           |WHERE ${h32("concat('s42','|',CAST(doc_id AS VARCHAR))")} % 1000000 <
-           |  CASE WHEN lang = 'en' THEN 100000 WHEN lang = 'de' THEN 1000000 ELSE 500000 END""".stripMargin,
-
-      "q_topk_per_group" ->
-        """SELECT lang, source, doc_id, n_chars, "rank" FROM (
-          |  SELECT lang, source, doc_id, n_chars,
-          |    CAST(row_number() OVER (PARTITION BY lang, source ORDER BY n_chars DESC, doc_id) AS BIGINT) AS "rank"
-          |  FROM documents)
-          |WHERE "rank" <= 3""".stripMargin,
-
-      "q_tfidf" ->
-        """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
-          |tf AS (SELECT id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-          |n AS (SELECT count(*) AS n_docs FROM documents),
-          |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)
-          |SELECT id, term, tf, floor((tf * (ln((n_docs + 1.0)/(df + 1.0)) + 1)) * 1000000 + 0.5) / 1000000 AS tfidf
-          |FROM tf JOIN idf USING (term), n""".stripMargin,
-
-      // end-to-end curation: quality >= 0.3, lang 'en', greedy near-dup
-      // removal (exact fp + jaccard >= 0.8 on the FILTERED set), then a
-      // 50% deterministic sample — same stage order as Curation.curate
-      "q_curation" -> {
-        val allStop = TextFunctions.Stopwords.flatMap(_._2).distinct.map(w => s"'$w'").mkString("[", ",", "]")
-        val langs = TextFunctions.Stopwords.map(_._1)
-        val hitCols = langs.map(l => s"len(list_filter(toks, x -> list_contains(${stop(l)}, x))) AS h_$l").mkString(", ")
-        val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
-        val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
-        s"""WITH t0 AS (SELECT doc_id, text, lang, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |q AS (SELECT doc_id,
-           |  floor((0.4*least(CAST(len(toks) AS DOUBLE)/100.0, 1.0)
-           |    + 0.3*least(floor((CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0)
-           |    + 0.2*(CASE WHEN floor((CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END)
-           |    + 0.1*(1.0 - least(floor((CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS score,
-           |  CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang_pred
-           |  FROM (SELECT doc_id, text, $hitCols, toks FROM t0) base
-           |),
-           |kept AS (SELECT t0.doc_id, t0.text, t0.lang, t0.toks FROM t0 JOIN q USING (doc_id)
-           |         WHERE q.score >= 0.3 AND q.lang_pred = 'en'),
-           |fpv AS (SELECT doc_id FROM (
-           |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g')))) AS canon
-           |  FROM kept) WHERE doc_id <> canon),
-           |sh0 AS (SELECT doc_id AS id, unnest(CASE WHEN len(toks)>=5 THEN list_transform(range(1, len(toks)-3), i -> array_to_string(toks[i:i+4],' ')) ELSE [] END) AS shingle FROM kept),
-           |shh AS (SELECT DISTINCT id, ${h32("shingle")} AS sh FROM sh0),
-           |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-           |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-           |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2),
-           |jv AS (SELECT DISTINCT ib AS doc_id FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
-           |       WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.8)
-           |SELECT doc_id, lang FROM kept
-           |WHERE doc_id NOT IN (SELECT doc_id FROM fpv)
-           |  AND doc_id NOT IN (SELECT doc_id FROM jv)
-           |  AND ${h32("concat('s42','|',CAST(doc_id AS VARCHAR))")} % 1000000 < 500000""".stripMargin
-      },
-
-      "q_repetition" ->
-        """WITH t AS (SELECT doc_id,
-          |  list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines,
-          |  list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks
-          |FROM documents)
-          |SELECT doc_id,
-          |  floor((CASE WHEN len(lines) > 0 THEN 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE)/len(lines) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS dup_line_frac,
-          |  floor((CASE WHEN len(toks) > 0 THEN 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE)/len(toks) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS dup_token_frac
-          |FROM t""".stripMargin,
-
-      "q_top_bigram" ->
-        """WITH t AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-          |bg AS (SELECT id, unnest(CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)), i -> array_to_string(toks[i:i+1], ' ')) ELSE [] END) AS bg FROM t),
-          |c AS (SELECT id, bg, count(*) AS c FROM bg GROUP BY 1, 2),
-          |a AS (SELECT t.id, c.c FROM t LEFT JOIN c ON t.id = c.id)
-          |SELECT id, floor((CASE WHEN sum(c) > 0 THEN CAST(max(c) AS DOUBLE)/sum(c) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS top_bigram_frac
-          |FROM a GROUP BY 1""".stripMargin,
-
-      "q_pii" ->
-        """SELECT doc_id,
-          |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-          |  CAST(len(regexp_extract_all(text, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) AS BIGINT) AS n_ipv4,
-          |  CAST(len(regexp_extract_all(text, '[0-9]{9,}')) AS BIGINT) AS n_long_digit_runs
-          |FROM documents""".stripMargin,
-
-      "q_unigram_lm" ->
-        """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
-          |tf AS (SELECT id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-          |tc AS (SELECT id, term, tf, sum(tf) OVER (PARTITION BY term) AS ct FROM tf),
-          |ds AS (SELECT id, sum(tf*ln(CAST(ct AS DOUBLE))) AS a, sum(tf) AS tt FROM tc GROUP BY 1),
-          |n AS (SELECT sum(tt) AS n_tokens FROM ds)
-          |SELECT id, floor((a/tt - ln(CAST(n_tokens AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS mean_log_prob FROM ds, n""".stripMargin,
-
-      "q_bigram_lm" ->
-        """WITH t AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-          |b AS (SELECT id, unnest(CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)), i ->
-          |        struct_pack(prefix := toks[i], bg := array_to_string(toks[i:i+1], ' '))) ELSE [] END) AS s FROM t),
-          |tf AS (SELECT id, s.bg AS bg, any_value(s.prefix) AS prefix, count(*) AS tf FROM b GROUP BY 1, 2),
-          |w AS (SELECT id, tf,
-          |        sum(tf) OVER (PARTITION BY bg) AS ct_bg,
-          |        sum(tf) OVER (PARTITION BY prefix) AS ct_prefix FROM tf)
-          |SELECT id, floor((sum(tf*ln(CAST(ct_bg AS DOUBLE)/ct_prefix))/sum(tf)) * 1000000 + 0.5) / 1000000 AS mean_log_prob
-          |FROM w GROUP BY 1""".stripMargin,
-
-      // benchmark = docs with id < 50 (a subset of the corpus, so those
-      // docs flag themselves — exactly what decontamination should find)
-      "q_contamination" ->
-        s"""WITH $shingleCtes,
-           |bs AS (SELECT DISTINCT sh FROM shh WHERE id < 50)
-           |SELECT shh.id, count(*) AS n_common, count(*) >= 10 AS contaminated
-           |FROM shh JOIN bs USING (sh) GROUP BY 1""".stripMargin,
-
-      "q_pack_text" ->
-        s"""WITH tc AS (SELECT doc_id, text,
-           |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x<>'')) AS BIGINT) AS ntok,
-           |    ${h32("CAST(doc_id AS VARCHAR)")} % 8 AS shard
-           |  FROM documents),
-           |b AS (SELECT doc_id, text, ntok, shard,
-           |  CAST(floor(coalesce(sum(greatest(ntok, 1)) OVER (PARTITION BY shard ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000.0) AS BIGINT) AS bin
-           |FROM tc)
-           |SELECT shard, bin, string_agg(text, '<|eod|>' ORDER BY doc_id) AS text,
-           |  CAST(sum(ntok) AS BIGINT) AS n_tokens
-           |FROM b GROUP BY 1, 2""".stripMargin,
-
-      "q_bm25" ->
-        """WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-          |t AS (SELECT id, unnest(toks) AS term FROM tok),
-          |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-          |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-          |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN ('spark','hash','merge') GROUP BY 1, 2),
-          |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)
-          |SELECT id, floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-          |FROM tf JOIN idf USING (term) JOIN dl USING (id), st GROUP BY id""".stripMargin,
-
-      // rank over the r6-rounded score (ties by id) — mirrors retrieveTopK
-      "q_bm25_retrieve" ->
-        """WITH qt(query_id, term) AS (VALUES
-          |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-          |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-          |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-          |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-          |t AS (SELECT id, unnest(toks) AS term FROM tok),
-          |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-          |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-          |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-          |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-          |sc AS (SELECT qt.query_id, tf.id,
-          |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-          |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
-          |r AS (SELECT query_id, id AS doc_id, bm25,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc)
-          |SELECT query_id, doc_id, CAST(rank AS BIGINT) AS rank, bm25 FROM r WHERE rank <= 10""".stripMargin,
-
-      // split by the hash of the cluster representative (singletons: own id)
-      "q_split_groupaware" ->
-        s"""WITH RECURSIVE $closureCtes,
-           |rep AS (SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) AS rep
-           |  FROM documents d LEFT JOIN clusters c ON d.doc_id = c.id),
-           |h AS (SELECT doc_id, ${h32("concat('split','|',CAST(rep AS VARCHAR))")} % 10 AS h FROM rep)
-           |SELECT doc_id, CASE WHEN h < 8 THEN 'train' WHEN h < 9 THEN 'val' ELSE 'test' END AS split
-           |FROM h""".stripMargin,
-
-      "q_mad" ->
-        s"""WITH med AS (SELECT event_type, quantile_cont(value, 0.5) AS med
-           |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-           |mad AS (SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
-           |  FROM events e JOIN med m USING (event_type) WHERE e.value IS NOT NULL GROUP BY 1),
-           |z AS (SELECT e.event_id, e.event_type,
-           |    ${graft.functions.Portable.r6Sql("(e.value - m.med) / (1.4826 * nullif(d.mad, 0))")} AS robust_z
-           |  FROM events e LEFT JOIN med m USING (event_type) LEFT JOIN mad d USING (event_type))
-           |SELECT event_id, event_type, robust_z,
-           |  coalesce(abs(robust_z) > 3.5, false) AS is_outlier
-           |FROM z""".stripMargin,
-
-      "q_readability" ->
-        s"""WITH s AS (SELECT doc_id,
-           |    list_filter(list_transform(string_split_regex(text, '[.!?]+'), x -> trim(x)), x -> x <> '') AS sents,
-           |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks,
-           |    regexp_extract_all(lower(text), '[aeiouy]+') AS syl
-           |  FROM documents),
-           |w AS (SELECT doc_id, CAST(len(sents) AS BIGINT) AS n_sentences,
-           |    CAST(len(toks) AS BIGINT) AS n_words, CAST(len(syl) AS BIGINT) AS n_syllables FROM s)
-           |SELECT doc_id, n_sentences, n_words, n_syllables,
-           |  CASE WHEN n_sentences > 0 AND n_words > 0 THEN
-           |    ${graft.functions.Portable.r6Sql(
-                  "206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) " +
-                    "- 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))")}
-           |  END AS flesch
-           |FROM w""".stripMargin,
-
-      "q_lexdiv" ->
-        s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
-           |b AS (SELECT doc_id, toks,
-           |    CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]) ELSE [] END AS bgs
-           |  FROM tk)
-           |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-           |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_types,
-           |  CASE WHEN len(toks) > 0 THEN ${graft.functions.Portable.r6Sql(
-                "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE)")} END AS ttr,
-           |  CAST(len(list_distinct(bgs)) AS BIGINT) AS n_bigram_types,
-           |  CASE WHEN len(toks) >= 2 THEN ${graft.functions.Portable.r6Sql(
-                "CAST(len(list_distinct(bgs)) AS DOUBLE) / CAST(len(toks) - 1 AS DOUBLE)")} END AS bigram_ttr
-           |FROM b""".stripMargin,
-
-      "q_winnow" ->
-        s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
-           |hs AS (SELECT doc_id, CASE WHEN len(toks) >= 5 THEN list_transform(range(1, len(toks)-3), i -> ${h32("array_to_string(toks[i:i+4],' ')")}) ELSE [] END AS h FROM tk),
-           |wm AS (SELECT doc_id, len(h) AS n_sh,
-           |    CASE WHEN len(h) = 0 THEN [] ELSE list_transform(range(1, greatest(len(h)-3, 1)+1), i -> list_min(h[i:i+3])) END AS wmins
-           |  FROM hs)
-           |SELECT doc_id, CAST(n_sh AS BIGINT) AS n_shingles,
-           |  CAST(len(list_distinct(wmins)) AS BIGINT) AS n_fingerprints,
-           |  CASE WHEN n_sh > 0 THEN ${graft.functions.Portable.r6Sql(
-                "CAST(len(list_distinct(wmins)) AS DOUBLE) / CAST(n_sh AS DOUBLE)")} END AS density
-           |FROM wm""".stripMargin,
-
-      "q_attribution" ->
-        """WITH w AS (SELECT event_id, user_id, event_type,
-          |    first_value(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS first_touch,
-          |    lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS last_touch,
-          |    CAST(count(*) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT) AS n_prior
-          |  FROM events WHERE ts IS NOT NULL)
-          |SELECT event_id, user_id, first_touch, last_touch, n_prior
-          |FROM w WHERE event_type = 'purchase'""".stripMargin,
-
-      "q_ab_test" ->
-        s"""WITH e AS (SELECT event_type, value,
-           |    coalesce(${h32("'ab:' || CAST(user_id AS VARCHAR)")} % 2 = 1, false) AS b
-           |  FROM events),
-           |m AS (SELECT event_type,
-           |    count(CASE WHEN $P AND NOT b THEN 1 END) AS n_a,
-           |    count(CASE WHEN $P AND b THEN 1 END) AS n_b,
-           |    CAST(coalesce(sum(CASE WHEN $P AND NOT b THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS sa,
-           |    CAST(coalesce(sum(CASE WHEN $P AND b THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS sb,
-           |    CAST(coalesce(sum(CASE WHEN $P AND NOT b THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS sa2,
-           |    CAST(coalesce(sum(CASE WHEN $P AND b THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS sb2
-           |  FROM e GROUP BY 1),
-           |d AS (SELECT event_type, n_a, n_b,
-           |    CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb, sa, sb, sa2, sb2,
-           |    CASE WHEN n_a >= 2 AND n_b >= 2 THEN
-           |      sqrt(greatest(sa2 / CAST(n_a AS DOUBLE) - (sa / CAST(n_a AS DOUBLE)) * (sa / CAST(n_a AS DOUBLE)), 0.0) * CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0) / CAST(n_a AS DOUBLE)
-           |         + greatest(sb2 / CAST(n_b AS DOUBLE) - (sb / CAST(n_b AS DOUBLE)) * (sb / CAST(n_b AS DOUBLE)), 0.0) * CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0) / CAST(n_b AS DOUBLE))
-           |    END AS se0
-           |  FROM m)
-           |SELECT event_type, n_a, n_b,
-           |  CASE WHEN n_a > 0 THEN ${graft.functions.Portable.r6Sql("sa / na")} END AS mean_a,
-           |  CASE WHEN n_b > 0 THEN ${graft.functions.Portable.r6Sql("sb / nb")} END AS mean_b,
-           |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${graft.functions.Portable.r6Sql("sb / nb - sa / na")} END AS delta,
-           |  CASE WHEN se0 IS NOT NULL THEN ${graft.functions.Portable.r6Sql("se0")} END AS se,
-           |  CASE WHEN se0 > 0 THEN ${graft.functions.Portable.r6Sql("(sb / nb - sa / na) / se0")} END AS z
-           |FROM d""".stripMargin,
-
-      "q_km_survival" ->
-        s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
-           |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
-           |    max(epoch_us(ts)) AS tl
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |dur AS (SELECT CAST(floor(CAST(coalesce(te, tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-           |    te IS NOT NULL AS obs FROM sp),
-           |cv AS (SELECT t_day, count(CASE WHEN obs THEN 1 END) AS d_events,
-           |    count(CASE WHEN NOT obs THEN 1 END) AS c_censored FROM dur GROUP BY 1),
-           |tot AS (SELECT sum(d_events + c_censored) AS total FROM cv),
-           |r AS (SELECT t_day, d_events, c_censored,
-           |    total - coalesce(sum(d_events + c_censored) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-           |  FROM cv, tot),
-           |h AS (SELECT t_day, d_events, c_censored, n_risk,
-           |    CASE WHEN d_events > 0 AND d_events < n_risk THEN
-           |      ${graft.functions.Portable.r6Sql("ln(1 - CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE))")}
-           |    ELSE 0.0 END AS term
-           |  FROM r)
-           |SELECT t_day, CAST(n_risk AS BIGINT) AS n_risk, CAST(d_events AS BIGINT) AS d_events,
-           |  CAST(c_censored AS BIGINT) AS c_censored,
-           |  CASE WHEN d_events = n_risk THEN NULL ELSE
-           |    ${graft.functions.Portable.r6Sql("CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")}
-           |  END AS log_s
-           |FROM h""".stripMargin,
-
-      "q_clustering_coef" ->
-        s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-           |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-           |       FROM tk WHERE len(ts) >= 2),
-           |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
-           |tri AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c
-           |  FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-           |  JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b),
-           |tc AS (SELECT node, count(*) AS n_triangles FROM (SELECT unnest([a, b, c]) AS node FROM tri) GROUP BY 1),
-           |dg AS (SELECT node, count(*) AS d FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1)
-           |SELECT dg.node AS node, CAST(d AS BIGINT) AS degree,
-           |  CAST(coalesce(n_triangles, 0) AS BIGINT) AS n_triangles,
-           |  CASE WHEN d >= 2 THEN ${graft.functions.Portable.r6Sql(
-                "2.0 * CAST(coalesce(n_triangles, 0) AS DOUBLE) / (CAST(d AS DOUBLE) * (CAST(d AS DOUBLE) - 1.0))")} END AS coef
-           |FROM dg LEFT JOIN tc USING (node)""".stripMargin,
-
-      "q5_local_supplier" ->
-        """SELECT n_name,
-          |  CAST(CAST(sum(CAST(floor((l_extendedprice*(1-l_discount)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS revenue
-          |FROM lineitem, orders, supplier, customer, nation, region
-          |WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey AND o_custkey = c_custkey
-          |  AND c_nationkey = s_nationkey AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-          |  AND r_name = 'ASIA'
-          |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1997-01-01'
-          |GROUP BY 1""".stripMargin,
-
-      "q_lang_mix" -> {
-        val langs = TextFunctions.Stopwords.map(_._1)
-        val hitCols = langs.map(l => s"len(list_filter(toks, x -> list_contains(${stop(l)}, x))) AS h_$l").mkString(", ")
-        val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
-        val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
-        s"""WITH lx AS (SELECT doc_id, regexp_replace(text, '\\. ', '.' || chr(10), 'g') AS text FROM documents),
-           |ln0 AS (SELECT doc_id, unnest(list_filter(string_split(text, chr(10)), x -> trim(x) <> '')) AS line FROM lx),
-           |t AS (SELECT doc_id, list_filter(string_split_regex(lower(line),'[^a-z]+'), x -> x<>'') AS toks FROM ln0),
-           |h AS (SELECT doc_id, $hitCols FROM t),
-           |lg AS (SELECT doc_id, CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang FROM h),
-           |c AS (SELECT doc_id, lang, count(*) AS c FROM lg GROUP BY 1, 2),
-           |r AS (SELECT doc_id, lang, c,
-           |    sum(c) OVER (PARTITION BY doc_id) AS n_lines,
-           |    count(*) OVER (PARTITION BY doc_id) AS n_langs,
-           |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, lang) AS rn FROM c)
-           |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines, CAST(n_langs AS BIGINT) AS n_langs,
-           |  lang AS main_lang,
-           |  ${graft.functions.Portable.r6Sql("CAST(c AS DOUBLE) / CAST(n_lines AS DOUBLE)")} AS main_frac
-           |FROM r WHERE rn = 1""".stripMargin
-      },
-
-      "q_holt" ->
-        s"""WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-           |  GROUP BY 1),
-           |f AS (SELECT user_id, CAST(len(vs) AS BIGINT) AS n,
-           |  list_reduce(
-           |    list_prepend([vs[1], CAST(0 AS DOUBLE)], list_transform(vs[2:], v -> [CAST(v AS DOUBLE), CAST(0 AS DOUBLE)])),
-           |    (acc, x) -> [
-           |      CAST(0.5 AS DOUBLE)*x[1] + (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE))*(acc[1]+acc[2]),
-           |      CAST(0.3 AS DOUBLE)*((CAST(0.5 AS DOUBLE)*x[1] + (CAST(1 AS DOUBLE) - CAST(0.5 AS DOUBLE))*(acc[1]+acc[2])) - acc[1])
-           |        + (CAST(1 AS DOUBLE) - CAST(0.3 AS DOUBLE))*acc[2]]) AS st
-           |  FROM s)
-           |SELECT user_id, n,
-           |  ${graft.functions.Portable.r6Sql("st[1]")} AS level,
-           |  ${graft.functions.Portable.r6Sql("st[2]")} AS trend,
-           |  ${graft.functions.Portable.r6Sql("st[1] + st[2]")} AS forecast
-           |FROM f""".stripMargin,
-
-      "q_cdc_chunks" ->
-        s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
-           |hs AS (SELECT doc_id, toks, CASE WHEN len(toks) >= 5 THEN list_transform(range(1, len(toks)-3), i -> ${h32("array_to_string(toks[i:i+4],' ')")}) ELSE [] END AS h FROM tk),
-           |ct AS (SELECT doc_id, toks, list_transform(list_filter(range(1, len(h)+1), i -> h[i] % 8 = 0), i -> i + 4) AS cutt FROM hs),
-           |bd AS (SELECT doc_id, toks, list_concat(list_concat([0], cutt), [len(toks)]) AS bounds FROM ct),
-           |cl AS (SELECT doc_id, list_filter(list_transform(range(1, len(bounds)), j -> toks[bounds[j]+1 : bounds[j+1]]), c -> len(c) > 0) AS chunks FROM bd),
-           |pr AS (SELECT DISTINCT doc_id, ${h32("array_to_string(c, ' ')")} AS chash
-           |  FROM (SELECT doc_id, unnest(chunks) AS c FROM cl)),
-           |dfc AS (SELECT chash, count(*) AS nd FROM pr GROUP BY 1)
-           |SELECT doc_id, count(*) AS n_chunks,
-           |  count(CASE WHEN nd > 1 THEN 1 END) AS n_dup_chunks,
-           |  ${graft.functions.Portable.r6Sql(
-                "CAST(count(CASE WHEN nd > 1 THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS dup_frac
-           |FROM pr JOIN dfc USING (chash) GROUP BY 1""".stripMargin,
-
-      "q_benford" ->
-        s"""WITH f AS (SELECT event_type,
-           |    CAST(substr(CAST(CAST(floor(value) AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND value >= 1 AND value < 1e18),
-           |c AS (SELECT event_type, digit, count(*) AS n FROM f GROUP BY 1, 2),
-           |grid AS (SELECT event_type, unnest(range(1, 10)) AS digit FROM (SELECT DISTINCT event_type FROM c)),
-           |fu AS (SELECT grid.event_type, CAST(grid.digit AS INTEGER) AS digit, CAST(coalesce(n, 0) AS BIGINT) AS n
-           |  FROM grid LEFT JOIN c ON grid.event_type = c.event_type AND grid.digit = c.digit),
-           |t AS (SELECT *, sum(n) OVER (PARTITION BY event_type) AS total,
-           |    ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE)/CAST(digit AS DOUBLE)) / ln(CAST(10 AS DOUBLE)) AS ef
-           |  FROM fu),
-           |h AS (SELECT *, ${graft.functions.Portable.r6Sql(
-                "(CAST(n AS DOUBLE) - ef * CAST(total AS DOUBLE)) * (CAST(n AS DOUBLE) - ef * CAST(total AS DOUBLE)) / (ef * CAST(total AS DOUBLE))")} AS term FROM t)
-           |SELECT event_type, digit, n,
-           |  ${graft.functions.Portable.r6Sql("CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS obs_frac,
-           |  ${graft.functions.Portable.r6Sql("ef")} AS exp_frac,
-           |  ${graft.functions.Portable.r6Sql(
-                "CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (PARTITION BY event_type) AS DOUBLE)")} AS chi2
-           |FROM h""".stripMargin,
-
-      "q_did" ->
-        s"""WITH e AS (SELECT event_type, value,
-           |    coalesce(${h32("'ab:' || CAST(user_id AS VARCHAR)")} % 2 = 1, false) AS b,
-           |    coalesce(ts >= TIMESTAMP '2024-01-16 00:00:00', false) AS p
-           |  FROM events),
-           |m AS (SELECT event_type,
-           |    count(CASE WHEN $P AND NOT b AND NOT p THEN 1 END) AS n_a_pre,
-           |    count(CASE WHEN $P AND NOT b AND p THEN 1 END) AS n_a_post,
-           |    count(CASE WHEN $P AND b AND NOT p THEN 1 END) AS n_b_pre,
-           |    count(CASE WHEN $P AND b AND p THEN 1 END) AS n_b_post,
-           |    CAST(coalesce(sum(CASE WHEN $P AND NOT b AND NOT p THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s_ape,
-           |    CAST(coalesce(sum(CASE WHEN $P AND NOT b AND p THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s_apo,
-           |    CAST(coalesce(sum(CASE WHEN $P AND b AND NOT p THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s_bpe,
-           |    CAST(coalesce(sum(CASE WHEN $P AND b AND p THEN CAST(value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s_bpo,
-           |    CAST(coalesce(sum(CASE WHEN $P AND NOT b AND NOT p THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2_ape,
-           |    CAST(coalesce(sum(CASE WHEN $P AND NOT b AND p THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2_apo,
-           |    CAST(coalesce(sum(CASE WHEN $P AND b AND NOT p THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2_bpe,
-           |    CAST(coalesce(sum(CASE WHEN $P AND b AND p THEN CAST(value*value AS DECIMAL(38,6)) END),0) AS DOUBLE) AS s2_bpo
-           |  FROM e GROUP BY 1),
-           |d AS (SELECT event_type, n_a_pre, n_a_post, n_b_pre, n_b_post,
-           |    (s_bpo / CAST(n_b_post AS DOUBLE) - s_bpe / CAST(n_b_pre AS DOUBLE))
-           |      - (s_apo / CAST(n_a_post AS DOUBLE) - s_ape / CAST(n_a_pre AS DOUBLE)) AS did0,
-           |    CASE WHEN n_a_pre >= 2 AND n_a_post >= 2 AND n_b_pre >= 2 AND n_b_post >= 2 THEN
-           |      sqrt(greatest(s2_ape / CAST(n_a_pre AS DOUBLE) - (s_ape / CAST(n_a_pre AS DOUBLE)) * (s_ape / CAST(n_a_pre AS DOUBLE)), 0.0) * CAST(n_a_pre AS DOUBLE) / (CAST(n_a_pre AS DOUBLE) - 1.0) / CAST(n_a_pre AS DOUBLE)
-           |         + greatest(s2_apo / CAST(n_a_post AS DOUBLE) - (s_apo / CAST(n_a_post AS DOUBLE)) * (s_apo / CAST(n_a_post AS DOUBLE)), 0.0) * CAST(n_a_post AS DOUBLE) / (CAST(n_a_post AS DOUBLE) - 1.0) / CAST(n_a_post AS DOUBLE)
-           |         + greatest(s2_bpe / CAST(n_b_pre AS DOUBLE) - (s_bpe / CAST(n_b_pre AS DOUBLE)) * (s_bpe / CAST(n_b_pre AS DOUBLE)), 0.0) * CAST(n_b_pre AS DOUBLE) / (CAST(n_b_pre AS DOUBLE) - 1.0) / CAST(n_b_pre AS DOUBLE)
-           |         + greatest(s2_bpo / CAST(n_b_post AS DOUBLE) - (s_bpo / CAST(n_b_post AS DOUBLE)) * (s_bpo / CAST(n_b_post AS DOUBLE)), 0.0) * CAST(n_b_post AS DOUBLE) / (CAST(n_b_post AS DOUBLE) - 1.0) / CAST(n_b_post AS DOUBLE))
-           |    END AS se0
-           |  FROM m)
-           |SELECT event_type, n_a_pre, n_a_post, n_b_pre, n_b_post,
-           |  CASE WHEN n_a_pre >= 2 AND n_a_post >= 2 AND n_b_pre >= 2 AND n_b_post >= 2
-           |    THEN ${graft.functions.Portable.r6Sql("did0")} END AS did,
-           |  CASE WHEN se0 IS NOT NULL THEN ${graft.functions.Portable.r6Sql("se0")} END AS se,
-           |  CASE WHEN se0 > 0 THEN ${graft.functions.Portable.r6Sql("did0 / se0")} END AS z
-           |FROM d""".stripMargin,
-
-      "q_rrf" ->
-        """WITH qt(query_id, term) AS (VALUES
-          |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-          |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-          |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-          |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-          |t AS (SELECT id, unnest(toks) AS term FROM tok),
-          |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-          |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-          |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-          |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-          |sc AS (SELECT qt.query_id, tf.id,
-          |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-          |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
-          |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 50),
-          |lp AS (SELECT doc_id, rank FROM (SELECT doc_id,
-          |    row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rank FROM documents) WHERE rank <= 50),
-          |pq AS (SELECT q.query_id, lp.doc_id, lp.rank
-          |  FROM (SELECT unnest(['q_joins','q_scan','q_stream']) AS query_id) q, lp),
-          |fu AS (SELECT coalesce(b.query_id, p.query_id) AS query_id, coalesce(b.doc_id, p.doc_id) AS doc_id,
-          |    floor((coalesce(CAST(1 AS DOUBLE)/(CAST(60 AS DOUBLE) + CAST(b.rank AS DOUBLE)), CAST(0 AS DOUBLE))
-          |      + coalesce(CAST(1 AS DOUBLE)/(CAST(60 AS DOUBLE) + CAST(p.rank AS DOUBLE)), CAST(0 AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS rrf
-          |  FROM b FULL OUTER JOIN pq p ON b.query_id = p.query_id AND b.doc_id = p.doc_id),
-          |r AS (SELECT query_id, doc_id, rrf,
-          |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank FROM fu)
-          |SELECT query_id, doc_id, rrf, rank FROM r WHERE rank <= 10""".stripMargin,
-
-      "q_golden" ->
-        """WITH RECURSIVE t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
-          |tok AS (SELECT DISTINCT name, unnest(list_filter(string_split_regex(name, '[^a-z]+'), x -> x <> '')) AS tk FROM t),
-          |cand AS (SELECT DISTINCT a.name AS a_name, b.name AS b_name
-          |  FROM tok a JOIN tok b ON a.tk = b.tk AND a.name < b.name),
-          |pr AS (SELECT a_name, b_name FROM cand WHERE levenshtein(a_name, b_name) <= 4),
-          |ids AS (SELECT p_partkey AS id, lower(p_name) AS name, p_retailprice AS price FROM part),
-          |nm AS (SELECT name, min(id) AS nid FROM ids WHERE name <> '' GROUP BY 1),
-          |e0 AS (SELECT a.nid AS ia, b.nid AS ib FROM pr JOIN nm a ON a.name = pr.a_name
-          |       JOIN nm b ON b.name = pr.b_name),
-          |e AS (SELECT ia AS src, ib AS dst FROM e0 UNION SELECT ib, ia FROM e0),
-          |reach AS (SELECT src AS id, src AS r FROM e
-          |          UNION SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-          |clusters AS (SELECT id AS nid, min(r) AS lbl FROM reach GROUP BY 1),
-          |ent AS (SELECT ids.id, coalesce(lbl, nm.nid, ids.id) AS entity_id, ids.name, ids.price
-          |  FROM ids LEFT JOIN nm ON nm.name = ids.name
-          |  LEFT JOIN clusters ON clusters.nid = nm.nid),
-          |rk AS (SELECT entity_id, name, row_number() OVER (PARTITION BY entity_id ORDER BY len(name) DESC, name DESC) AS rn FROM ent),
-          |g AS (SELECT entity_id, count(*) AS n_members, min(id) AS first_id, max(price) AS mp FROM ent GROUP BY 1)
-          |SELECT g.entity_id, g.n_members, g.first_id, rk.name AS canonical_name,
-          |  floor((mp) * 1000000 + 0.5) / 1000000 AS max_price
-          |FROM g JOIN (SELECT entity_id, name FROM rk WHERE rn = 1) rk USING (entity_id)""".stripMargin,
-
-      "q_kcore" -> {
-        val rounds = (1 to 3).map { r =>
-          s"""d$r AS (SELECT node, count(*) AS d FROM (SELECT a AS node FROM e${r - 1} UNION ALL SELECT b FROM e${r - 1}) GROUP BY 1),
-             |k$r AS (SELECT node FROM d$r WHERE d >= 3),
-             |e$r AS (SELECT e${r - 1}.* FROM e${r - 1} WHERE a IN (SELECT node FROM k$r) AND b IN (SELECT node FROM k$r))""".stripMargin
-        }.mkString(",\n")
-        s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-           |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-           |       FROM tk WHERE len(ts) >= 2),
-           |e0 AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
-           |$rounds
-           |SELECT node, CAST(d AS BIGINT) AS degree
-           |FROM (SELECT node, count(*) AS d FROM (SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3) GROUP BY 1)""".stripMargin
-      },
-
-      "q_hopping" ->
-        s"""WITH w AS (SELECT event_type, value,
-           |    (epoch_us(ts) // 300000000) * 300000000 - j * 300000000 AS win_start_us
-           |  FROM events, unnest([0, 1]) AS u(j) WHERE ts IS NOT NULL)
-           |SELECT event_type, win_start_us, count(*) AS n,
-           |  CAST(coalesce(sum(CASE WHEN $P THEN CAST(value AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sum_value
-           |FROM w GROUP BY 1, 2""".stripMargin,
-
-      "q_cusum" ->
-        s"""WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs,
-           |    count(*) AS n,
-           |    CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mn
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-           |  GROUP BY 1),
-           |f AS (SELECT user_id, CAST(n AS BIGINT) AS n, mn,
-           |  list_reduce(
-           |    list_prepend([CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)],
-           |      list_transform(vs, v -> [CAST(v AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)])),
-           |    (acc, x) -> [
-           |      greatest(CAST(0 AS DOUBLE), acc[1] + (x[1] - mn)),
-           |      CASE WHEN greatest(CAST(0 AS DOUBLE), acc[1] + (x[1] - mn)) > acc[2]
-           |           THEN greatest(CAST(0 AS DOUBLE), acc[1] + (x[1] - mn)) ELSE acc[2] END,
-           |      CASE WHEN greatest(CAST(0 AS DOUBLE), acc[1] + (x[1] - mn)) > acc[2]
-           |           THEN acc[4] + CAST(1 AS DOUBLE) ELSE acc[3] END,
-           |      acc[4] + CAST(1 AS DOUBLE)]) AS st
-           |  FROM s)
-           |SELECT user_id, n, ${graft.functions.Portable.r6Sql("mn")} AS mean,
-           |  ${graft.functions.Portable.r6Sql("st[2]")} AS cusum_max,
-           |  CAST(st[3] AS BIGINT) AS cusum_at
-           |FROM f""".stripMargin,
-
-      "q_sorted_blocking" ->
-        """WITH t AS (SELECT DISTINCT lower(p_name) AS name FROM part
-          |  WHERE p_name IS NOT NULL AND lower(p_name) <> ''),
-          |r AS (SELECT name, substr(name, 1, 2) AS block,
-          |    row_number() OVER (PARTITION BY substr(name, 1, 2) ORDER BY name) AS rnk FROM t),
-          |p AS (SELECT a.name AS a_name, b.name AS b_name
-          |  FROM r a JOIN r b ON a.block = b.block AND b.rnk IN (a.rnk + 1, a.rnk + 2))
-          |SELECT a_name, b_name, CAST(levenshtein(a_name, b_name) AS BIGINT) AS dist
-          |FROM p WHERE levenshtein(a_name, b_name) <= 4""".stripMargin,
-
-      "q_cooc" ->
-        """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
-          |p AS (SELECT unnest(flatten(list_transform(range(1, len(toks)), i ->
-          |    list_transform(range(1, least(2, len(toks)-i)+1), d ->
-          |      {'a': least(toks[i], toks[i+d]), 'b': greatest(toks[i], toks[i+d])})))) AS p
-          |  FROM tk WHERE len(toks) >= 2)
-          |SELECT p.a AS a, p.b AS b, count(*) AS n FROM p GROUP BY 1, 2 HAVING count(*) >= 3""".stripMargin,
-
-      "q_span_corrupt" ->
-        s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
-           |st AS (SELECT doc_id, toks, CASE WHEN len(toks) = 0 THEN [] ELSE
-           |    list_transform(range(1, len(toks)+1), i -> ${h32("CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)")} % 8 = 0) END AS s FROM tk),
-           |mk AS (SELECT doc_id, toks, CASE WHEN len(toks) = 0 THEN [] ELSE
-           |    list_transform(range(1, len(toks)+1), i -> s[i] OR (i > 1 AND s[i-1]) OR (i > 2 AND s[i-2])) END AS m FROM st),
-           |kp AS (SELECT doc_id, toks, m,
-           |    list_filter(list_transform(range(1, len(toks)+1), i ->
-           |      CASE WHEN NOT m[i] THEN toks[i] WHEN i = 1 OR NOT m[i-1] THEN '<mask>' ELSE NULL END), x -> x IS NOT NULL) AS kept
-           |  FROM mk)
-           |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-           |  CAST(len(list_filter(m, x -> x)) AS BIGINT) AS n_masked,
-           |  CAST(len(list_filter(kept, x -> x = '<mask>')) AS BIGINT) AS n_spans,
-           |  md5(array_to_string(kept, ' ')) AS corrupt_fp
-           |FROM kp""".stripMargin,
-
-      "q_corpus_report" -> {
-        val allStop = TextFunctions.Stopwords.flatMap(_._2).distinct.map(w => s"'$w'").mkString("[", ",", "]")
-        val langs = TextFunctions.Stopwords.map(_._1)
-        val hitCols = langs.map(l => s"len(list_filter(toks, x -> list_contains(${stop(l)}, x))) AS h_$l").mkString(", ")
-        val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
-        val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
-        s"""WITH t0 AS (SELECT doc_id, source, text, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |q AS (SELECT doc_id,
-           |  floor((0.4*least(CAST(len(toks) AS DOUBLE)/100.0, 1.0)
-           |    + 0.3*least(floor((CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0)
-           |    + 0.2*(CASE WHEN floor((CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END)
-           |    + 0.1*(1.0 - least(floor((CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS score,
-           |  CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang_pred
-           |  FROM (SELECT doc_id, text, $hitCols, toks FROM t0) base),
-           |b AS (SELECT t0.source, t0.doc_id, CAST(len(t0.text) AS BIGINT) AS n_chars, q.score, q.lang_pred,
-           |    md5(trim(regexp_replace(lower(t0.text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-           |  FROM t0 JOIN q USING (doc_id)),
-           |stats AS (SELECT source, count(*) AS n_docs,
-           |    CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_chars,
-           |    CAST(coalesce(sum(CAST(score AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_quality
-           |  FROM b GROUP BY 1),
-           |lc AS (SELECT source, lang_pred, count(*) AS c FROM b GROUP BY 1, 2),
-           |ent AS (SELECT source,
-           |    ln(CAST(sum(c) AS DOUBLE)) - CAST(sum(CAST(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)) AS DECIMAL(38,12))) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS lang_entropy
-           |  FROM lc GROUP BY 1),
-           |dup AS (SELECT source, CAST(sum(vict) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS dup_rate FROM (
-           |    SELECT source, CASE WHEN doc_id <> min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END AS vict FROM b)
-           |  GROUP BY 1)
-           |SELECT source, n_docs,
-           |  ${graft.functions.Portable.r6Sql("mean_chars")} AS mean_chars,
-           |  ${graft.functions.Portable.r6Sql("mean_quality")} AS mean_quality,
-           |  ${graft.functions.Portable.r6Sql("lang_entropy")} AS lang_entropy,
-           |  ${graft.functions.Portable.r6Sql("dup_rate")} AS dup_rate
-           |FROM stats JOIN ent USING (source) JOIN dup USING (source)""".stripMargin
-      },
-
-      "q_retrieval_eval" ->
-        s"""WITH qt(query_id, term) AS (VALUES
-           |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-           |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-           |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-           |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |t AS (SELECT id, unnest(toks) AS term FROM tok),
-           |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-           |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-           |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |sc AS (SELECT qt.query_id, tf.id,
-           |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-           |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
-           |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 10),
-           |rel AS (SELECT q.query_id, t2.id FROM tok t2, qt q WHERE list_contains(t2.toks, q.term)
-           |  GROUP BY 1, 2 HAVING count(*) = 3),
-           |nrel AS (SELECT query_id, count(*) AS n_relevant FROM rel GROUP BY 1),
-           |j AS (SELECT b.query_id, b.rank, (rel.id IS NOT NULL) AS isrel
-           |  FROM b LEFT JOIN rel ON rel.query_id = b.query_id AND rel.id = b.doc_id),
-           |pq AS (SELECT query_id,
-           |    min(CASE WHEN isrel THEN rank END) AS frel,
-           |    count(CASE WHEN isrel THEN 1 END) AS hits,
-           |    CAST(coalesce(sum(CASE WHEN isrel THEN CAST(floor((CAST(1 AS DOUBLE)/(ln(CAST(rank AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))) * 1000000 + 0.5)/1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS dcg
-           |  FROM j GROUP BY 1),
-           |f AS (SELECT pq.query_id, coalesce(n_relevant, 0) AS n_relevant, frel, hits, dcg,
-           |    CASE WHEN coalesce(n_relevant, 0) > 0 THEN
-           |      list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, least(n_relevant, 10)+1), i ->
-           |        floor((CAST(1 AS DOUBLE)/(ln(CAST(i AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))) * 1000000 + 0.5)/1000000)), (a, x) -> a + x)
-           |    ELSE 0.0 END AS idcg
-           |  FROM pq LEFT JOIN nrel USING (query_id))
-           |SELECT query_id, CAST(n_relevant AS BIGINT) AS n_relevant,
-           |  ${graft.functions.Portable.r6Sql("coalesce(CASE WHEN frel IS NOT NULL THEN CAST(1 AS DOUBLE)/CAST(frel AS DOUBLE) END, 0)")} AS mrr,
-           |  ${graft.functions.Portable.r6Sql("CASE WHEN n_relevant > 0 THEN CAST(hits AS DOUBLE)/CAST(n_relevant AS DOUBLE) ELSE 0.0 END")} AS recall_at_10,
-           |  ${graft.functions.Portable.r6Sql("CASE WHEN idcg > 0 THEN dcg/idcg ELSE 0.0 END")} AS ndcg_at_10
-           |FROM f""".stripMargin,
-
-      "q_retrieval_eval_graded" ->
-        s"""WITH qt(query_id, term) AS (VALUES
-           |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-           |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-           |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-           |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |t AS (SELECT id, unnest(toks) AS term FROM tok),
-           |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-           |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-           |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |sc AS (SELECT qt.query_id, tf.id,
-           |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-           |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
-           |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 10),
-           |grel AS (SELECT q.query_id, t2.id, count(*) AS grade
-           |  FROM tok t2, qt q WHERE list_contains(t2.toks, q.term) GROUP BY 1, 2),
-           |nrel AS (SELECT query_id, count(*) AS n_judged FROM grel GROUP BY 1),
-           |j AS (SELECT b.query_id, b.rank, coalesce(grel.grade, 0) AS grade,
-           |    (pow(2, coalesce(grel.grade, 0)) - 1)/8.0 AS rr
-           |  FROM b LEFT JOIN grel ON grel.query_id = b.query_id AND grel.id = b.doc_id),
-           |jc AS (SELECT query_id, rank, grade, rr,
-           |    exp(coalesce(sum(ln(1 - rr)) OVER (PARTITION BY query_id ORDER BY rank
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)) AS cont FROM j),
-           |pq AS (SELECT query_id,
-           |    CAST(coalesce(sum(CAST(${graft.functions.Portable.r6Sql("(pow(2, grade) - 1) / (ln(CAST(rank AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS dcg,
-           |    CAST(coalesce(sum(CAST(${graft.functions.Portable.r6Sql("rr / CAST(rank AS DOUBLE) * cont")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS err
-           |  FROM jc GROUP BY 1),
-           |ideal AS (SELECT query_id,
-           |    CAST(coalesce(sum(CAST(${graft.functions.Portable.r6Sql("(pow(2, grade) - 1) / (ln(CAST(ir AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS idcg
-           |  FROM (SELECT query_id, grade,
-           |      row_number() OVER (PARTITION BY query_id ORDER BY grade DESC, id) AS ir FROM grel)
-           |  WHERE ir <= 10 GROUP BY 1)
-           |SELECT pq.query_id, CAST(coalesce(n_judged, 0) AS BIGINT) AS n_judged,
-           |  ${graft.functions.Portable.r6Sql("CASE WHEN idcg > 0 THEN dcg/idcg ELSE 0.0 END")} AS ndcg_graded_at_10,
-           |  ${graft.functions.Portable.r6Sql("coalesce(err, 0)")} AS err_graded_at_10
-           |FROM pq LEFT JOIN nrel USING (query_id) LEFT JOIN ideal USING (query_id)""".stripMargin,
-
-      // BM25 top-10 (the q_retrieval_eval_graded ranking CTEs) vs the
-      // grade-ideal ordering, through the q_rbo overlap/weight tail.
-      "q_rbo_graded" -> {
-        val wts = (1 to 10).map(d => s"($d, CAST(${math.pow(0.9, d)} AS DOUBLE))")
-          .mkString(", ")
-        s"""WITH wts(d, w) AS (VALUES $wts),
-           |qt(query_id, term) AS (VALUES
-           |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-           |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-           |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-           |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |t AS (SELECT id, unnest(toks) AS term FROM tok),
-           |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-           |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-           |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |sc AS (SELECT qt.query_id, tf.id,
-           |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-           |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
-           |a AS (SELECT query_id, id, rk FROM (SELECT query_id, id,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rk FROM sc) WHERE rk <= 10),
-           |grel AS (SELECT q.query_id, t2.id, count(*) AS grade
-           |  FROM tok t2, qt q WHERE list_contains(t2.toks, q.term) GROUP BY 1, 2),
-           |b AS (SELECT query_id, id, rk FROM (SELECT query_id, id,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY grade DESC, id) AS rk FROM grel) WHERE rk <= 10),
-           |cm AS (SELECT a.query_id, greatest(a.rk, b.rk) AS m, count(*) AS c
-           |  FROM a JOIN b ON a.query_id = b.query_id AND a.id = b.id GROUP BY 1, 2),
-           |sz AS (SELECT coalesce(x.query_id, y.query_id) AS query_id,
-           |    CAST(coalesce(x.na, 0) AS BIGINT) AS n_a, CAST(coalesce(y.nb, 0) AS BIGINT) AS n_b
-           |  FROM (SELECT query_id, count(*) AS na FROM a GROUP BY 1) x
-           |  FULL JOIN (SELECT query_id, count(*) AS nb FROM b GROUP BY 1) y ON x.query_id = y.query_id),
-           |grid AS (SELECT query_id, unnest(range(1, 11)) AS d FROM (SELECT DISTINCT query_id FROM sz)),
-           |tg AS (SELECT grid.query_id, grid.d,
-           |    sum(coalesce(c, 0)) OVER (PARTITION BY grid.query_id ORDER BY grid.d
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS x
-           |  FROM grid LEFT JOIN cm ON cm.query_id = grid.query_id AND cm.m = grid.d),
-           |tt AS (SELECT tg.query_id, tg.d, tg.x, w * CAST(x AS DOUBLE) / CAST(tg.d AS DOUBLE) AS term
-           |  FROM tg JOIN wts ON wts.d = tg.d),
-           |f AS (SELECT query_id, CAST(max(CASE WHEN d = 10 THEN x END) AS BIGINT) AS xk,
-           |    CAST(sum(CAST(floor(term * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
-           |  FROM tt GROUP BY 1)
-           |SELECT sz.query_id, n_a, n_b,
-           |  floor(CAST(xk AS DOUBLE) / 10.0 * 1000000 + 0.5) / 1000000 AS overlap_k,
-           |  floor((1.0 - 0.9) / 0.9 * ss * 1000000 + 0.5) / 1000000 AS rbo
-           |FROM f JOIN sz ON f.query_id = sz.query_id""".stripMargin
-      },
-
-      "q_paths" ->
-        """WITH r AS (SELECT user_id, event_type,
-          |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn,
-          |    count(*) OVER (PARTITION BY user_id) AS n_events
-          |  FROM events WHERE ts IS NOT NULL)
-          |SELECT user_id, CAST(n_events AS BIGINT) AS n_events,
-          |  string_agg(event_type, '>' ORDER BY rn) AS path
-          |FROM r WHERE rn <= 10 GROUP BY user_id, n_events""".stripMargin,
-
-      "q_twa" ->
-        s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, value, event_id FROM events
-           |  WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)),
-           |t AS (SELECT user_id, us,
-           |    CAST(floor((value * (CAST(lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) - us AS DOUBLE) / 1e6)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) AS term
-           |  FROM e),
-           |g AS (SELECT user_id, count(*) AS n,
-           |    CAST(max(us) - min(us) AS DOUBLE) / 1e6 AS span_raw,
-           |    CAST(coalesce(sum(term), 0) AS DOUBLE) AS num
-           |  FROM t GROUP BY 1)
-           |SELECT user_id, n,
-           |  ${graft.functions.Portable.r6Sql("span_raw")} AS span_s,
-           |  CASE WHEN span_raw > 0 THEN ${graft.functions.Portable.r6Sql("num / span_raw")} END AS twa
-           |FROM g""".stripMargin,
-
-      "q_coverage" ->
-        """WITH e AS (SELECT user_id, epoch_us(ts) AS s, epoch_us(ts) + 300000000 AS en, event_id
-          |  FROM events WHERE ts IS NOT NULL),
-          |m AS (SELECT user_id, s, en, event_id,
-          |    CASE WHEN s > coalesce(max(en) OVER (PARTITION BY user_id ORDER BY s, event_id
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), -9223372036854775808) THEN 1 ELSE 0 END AS nw
-          |  FROM e),
-          |i AS (SELECT user_id, s, en, sum(nw) OVER (PARTITION BY user_id ORDER BY s, event_id) AS island FROM m),
-          |g AS (SELECT user_id, island, max(en) - min(s) AS len FROM i GROUP BY 1, 2)
-          |SELECT user_id, count(*) AS n_islands, CAST(sum(len) AS BIGINT) AS covered_us
-          |FROM g GROUP BY 1""".stripMargin,
-
-      "q_pack" ->
-        s"""WITH tc AS (SELECT doc_id,
-           |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x<>'')) AS BIGINT) AS ntok,
-           |    ${h32("CAST(doc_id AS VARCHAR)")} % 8 AS shard
-           |  FROM documents)
-           |SELECT doc_id, ntok, shard,
-           |  CAST(floor(coalesce(sum(greatest(ntok, 1)) OVER (PARTITION BY shard ORDER BY doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 2000.0) AS BIGINT) AS bin
-           |FROM tc""".stripMargin,
-
-      "q_fingerprint" ->
-        """WITH n AS (SELECT doc_id, trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS s FROM documents)
-          |SELECT doc_id, md5(s) AS fp,
-          |  list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(1, len(s)+1), i -> CAST(ascii(substr(s, i, 1)) AS BIGINT))), (acc, c) -> (acc*31 + c) % 1000000007) AS rolling
-          |FROM n""".stripMargin,
-
-      "q1_pricing" ->
-        """WITH a AS (SELECT l_returnflag, l_linestatus,
-          |  CAST(CAST(sum(CAST(floor((l_quantity) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-          |  CAST(CAST(sum(CAST(floor((l_extendedprice) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-          |  CAST(CAST(sum(CAST(floor((l_extendedprice*(1-l_discount)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-          |  CAST(CAST(sum(CAST(floor(((l_extendedprice*(1-l_discount))*(1+l_tax)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_charge,
-          |  CAST(CAST(sum(CAST(floor((l_discount) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc,
-          |  count(*) AS count_order
-          |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' GROUP BY 1, 2)
-          |SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price, sum_disc_price, sum_charge, count_order,
-          |  sum_qty/count_order AS avg_qty, sum_base_price/count_order AS avg_price, sum_disc/count_order AS avg_disc
-          |FROM a""".stripMargin,
-
-      "q3_shipping" ->
-        """SELECT l_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
-          |  CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-          |FROM customer, orders, lineitem
-          |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-          |  AND o_orderdate < TIMESTAMP '1998-03-15' AND l_shipdate > TIMESTAMP '1998-03-15'
-          |GROUP BY 1, 2 ORDER BY revenue DESC, l_orderkey LIMIT 20""".stripMargin,
-
-      "q_top_customers" ->
-        """WITH r AS (SELECT c.c_custkey, c.c_name,
-          |  CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
-          |  FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-          |  GROUP BY 1, 2),
-          |rr AS (SELECT c_custkey, c_name, revenue,
-          |  CAST(row_number() OVER (ORDER BY revenue DESC, c_custkey) AS BIGINT) AS "rank" FROM r)
-          |SELECT * FROM rr WHERE "rank" <= 10""".stripMargin,
-
-      "q_profile" -> {
-        def c(name: String, numExpr: Option[String], strExpr: Option[String]) =
-          s"""SELECT '$name' AS col_name, count(*) AS n,
-             |  count(*) - count($name) AS n_null, count(DISTINCT $name) AS n_distinct,
-             |  ${numExpr.map(e => s"CAST(min($e) AS DOUBLE)").getOrElse("CAST(NULL AS DOUBLE)")} AS min_num,
-             |  ${numExpr.map(e => s"CAST(max($e) AS DOUBLE)").getOrElse("CAST(NULL AS DOUBLE)")} AS max_num,
-             |  ${strExpr.map(e => s"min($e)").getOrElse("CAST(NULL AS VARCHAR)")} AS min_str,
-             |  ${strExpr.map(e => s"max($e)").getOrElse("CAST(NULL AS VARCHAR)")} AS max_str
-             |FROM events""".stripMargin
-        Seq(
-          c("event_id", Some("event_id"), None),
-          c("user_id", Some("user_id"), None),
-          c("event_type", None, Some("event_type")),
-          c("value", Some("value"), None),
-          c("ts", Some("epoch_us(ts)"), None)
-        ).mkString("\n", "\nUNION ALL\n", "")
-      },
-
-      "q_asof" ->
-        """WITH p AS (SELECT user_id, ts, max(value) AS purchase_value
-          |  FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL GROUP BY 1, 2)
-          |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS time_us, e.event_type,
-          |  epoch_us(p.ts) AS purchase_time_us, p.purchase_value
-          |FROM events e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts >= p.ts""".stripMargin,
-
-      "q_sessionize" ->
-        """WITH t AS (SELECT user_id, ts, event_id,
-          |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          |  FROM events WHERE ts IS NOT NULL),
-          |s AS (SELECT user_id, ts,
-          |  CAST(sum(CASE WHEN prev IS NULL OR epoch_us(ts) - epoch_us(prev) > 1800000000 THEN 1 ELSE 0 END)
-          |    OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) - 1 AS session_seq
-          |  FROM t)
-          |SELECT user_id, session_seq, count(*) AS n_events,
-          |  min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us,
-          |  max(epoch_us(ts)) - min(epoch_us(ts)) AS duration_us
-          |FROM s GROUP BY 1, 2""".stripMargin,
-
-      // session_window boundary == the lag-based rule: a new session
-      // starts only when the gap is strictly > the window (spec-pinned)
-      "q_session_window" ->
-        """WITH t AS (SELECT user_id, ts,
-          |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev
-          |  FROM events WHERE ts IS NOT NULL),
-          |s AS (SELECT user_id, ts,
-          |  CAST(sum(CASE WHEN prev IS NULL OR epoch_us(ts) - epoch_us(prev) > 1800000000 THEN 1 ELSE 0 END)
-          |    OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-          |  FROM t)
-          |SELECT user_id, count(*) AS n_events,
-          |  min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us
-          |FROM s GROUP BY user_id, session_seq""".stripMargin,
-
-      "q_range_join" ->
-        """WITH t AS (SELECT user_id, ts, event_id,
-          |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-          |  FROM events WHERE ts IS NOT NULL),
-          |sq AS (SELECT user_id, ts,
-          |  CAST(sum(CASE WHEN prev IS NULL OR epoch_us(ts) - epoch_us(prev) > 1800000000 THEN 1 ELSE 0 END)
-          |    OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) - 1 AS session_seq
-          |  FROM t),
-          |sessions AS (SELECT user_id, session_seq,
-          |    min(epoch_us(ts)) AS start_us, max(epoch_us(ts)) AS end_us
-          |  FROM sq GROUP BY 1, 2)
-          |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS time_us, s.session_seq
-          |FROM events e JOIN sessions s
-          |  ON e.user_id = s.user_id AND epoch_us(e.ts) BETWEEN s.start_us AND s.end_us
-          |WHERE e.ts IS NOT NULL""".stripMargin,
-
-      "q_rolling" ->
-        """SELECT event_id, user_id, epoch_us(ts) AS time_us,
-          |  count(*) OVER w AS n_trail,
-          |  CAST(coalesce(sum(CASE WHEN NOT isnan(value) THEN CAST(value AS DECIMAL(38,6)) END) OVER w, 0) AS DOUBLE) AS sum_trail
-          |FROM events WHERE ts IS NOT NULL
-          |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-          |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-      "q_ffill" ->
-        """SELECT event_id, user_id, epoch_us(ts) AS time_us, value,
-          |  last_value(value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled
-          |FROM events WHERE ts IS NOT NULL""".stripMargin,
-
-      "q_expect" ->
-        expectRulesSql.map { case (name, holds) =>
-          s"""SELECT '$name' AS rule, count(*) AS n_rows,
-             |  count(CASE WHEN NOT coalesce($holds, FALSE) THEN 1 END) AS n_violations,
-             |  floor((count(CASE WHEN NOT coalesce($holds, FALSE) THEN 1 END) / greatest(count(*), 1)) * 1000000 + 0.5) / 1000000 AS violation_frac
-             |FROM events""".stripMargin
-        }.mkString("\n", "\nUNION ALL\n", "\nORDER BY rule"),
-
-      "q_diff" -> {
-        val fpSql =
-          """md5(concat_ws('|',
-            |  coalesce(CAST(user_id AS VARCHAR), '~'),
-            |  coalesce(CAST(epoch_us(ts) AS VARCHAR), '~'),
-            |  coalesce(event_type, '~'),
-            |  coalesce(CASE WHEN isnan(VALUE_EXPR) THEN 'nan'
-            |           ELSE CAST(CAST(floor(VALUE_EXPR * 1000000) AS BIGINT) AS VARCHAR) END, '~')))""".stripMargin
-        val oldFp = fpSql.replace("VALUE_EXPR", "value")
-        val newFp = fpSql.replace(
-          "VALUE_EXPR", "(CASE WHEN user_id % 5 = 0 THEN value * 2 ELSE value END)")
-        s"""WITH o AS (SELECT event_id, $oldFp AS fp FROM events),
-           |n AS (SELECT event_id, $newFp AS fp FROM events WHERE event_id % 7 <> 0),
-           |j AS (SELECT coalesce(o.event_id, n.event_id) AS event_id,
-           |  CASE WHEN o.event_id IS NULL THEN 'added'
-           |       WHEN n.event_id IS NULL THEN 'removed'
-           |       WHEN o.fp <> n.fp THEN 'changed' END AS status
-           |  FROM o FULL JOIN n ON o.event_id = n.event_id)
-           |SELECT event_id, status FROM j WHERE status IS NOT NULL""".stripMargin
-      },
-
-      "q_resample" ->
-        """WITH e AS (SELECT user_id, epoch_us(ts) AS us, value, event_id
-          |    FROM events WHERE ts IS NOT NULL),
-          |b AS (SELECT user_id, (us // 3600000000) * 3600000000 AS bucket_us, count(*) AS n_events
-          |  FROM e GROUP BY 1, 2),
-          |v AS (SELECT user_id, (us // 3600000000) * 3600000000 AS bucket_us, value,
-          |    row_number() OVER (PARTITION BY user_id, (us // 3600000000)
-          |      ORDER BY us DESC, event_id DESC) AS rn
-          |  FROM e WHERE value IS NOT NULL),
-          |vb AS (SELECT user_id, bucket_us, value AS v_in_bucket FROM v WHERE rn = 1),
-          |s AS (SELECT user_id, min(bucket_us) AS lo, max(bucket_us) AS hi FROM b GROUP BY 1),
-          |g AS (SELECT user_id, unnest(range(lo, hi + 1, 3600000000)) AS bucket_us FROM s),
-          |j AS (SELECT g.user_id, g.bucket_us, coalesce(b.n_events, 0) AS n_events, vb.v_in_bucket
-          |  FROM g LEFT JOIN b ON g.user_id = b.user_id AND g.bucket_us = b.bucket_us
-          |         LEFT JOIN vb ON g.user_id = vb.user_id AND g.bucket_us = vb.bucket_us)
-          |SELECT user_id, bucket_us, n_events,
-          |  last_value(v_in_bucket IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket_us
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_last
-          |FROM j""".stripMargin,
-
-      "q_embed_centroid" ->
-        """SELECT label, CAST(i - 1 AS BIGINT) AS pos,
-          |  floor((CAST(sum(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) / count(*)) * 1000000 + 0.5) / 1000000 AS centroid
-          |FROM embeddings, range(1, 65) t(i)
-          |GROUP BY 1, 2""".stripMargin,
-
-      "q_postings" ->
-        """WITH tk AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |tf AS (SELECT term, doc_id, count(*) AS tf FROM tk GROUP BY 1, 2),
-          |d AS (SELECT *, count(*) OVER (PARTITION BY term) AS df FROM tf),
-          |r AS (SELECT term, df, doc_id, tf,
-          |    CAST(row_number() OVER (PARTITION BY term ORDER BY tf DESC, doc_id) AS BIGINT) AS rk
-          |  FROM d WHERE df BETWEEN 2 AND 400)
-          |SELECT term, df, doc_id, tf, rk FROM r WHERE rk <= 5""".stripMargin,
-
-      "q_salted" ->
-        """SELECT o_orderkey, o_custkey AS custkey, c_name, c_mktsegment
-          |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin,
-
-      "q_normalize_text" ->
-        s"SELECT doc_id, md5(lower(nfc_normalize(text || '$normSuffix'))) AS norm_hash FROM documents",
-
-      // stride = 30 - 10 = 20; chunk k covers ts[k*20+1 .. k*20+30]
-      "q_chunk" ->
-        """WITH d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |n AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS L FROM d WHERE len(ts) > 0),
-          |c AS (SELECT doc_id, ts, L,
-          |    unnest(range(0, CASE WHEN L <= 30 THEN 1 ELSE (L - 30 + 19) // 20 + 1 END)) AS chunk_seq
-          |  FROM n)
-          |SELECT doc_id, chunk_seq,
-          |  array_to_string(ts[chunk_seq*20 + 1 : least(chunk_seq*20 + 30, L)], ' ') AS chunk_text,
-          |  least(L - chunk_seq*20, 30) AS n_tokens
-          |FROM c""".stripMargin,
-
-      "q_vocab_words" ->
-        """WITH tk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word FROM documents),
-          |c AS (SELECT word, count(*) AS n FROM tk GROUP BY 1),
-          |top AS (SELECT word, n FROM c WHERE n >= 2 ORDER BY n DESC, word LIMIT 1000)
-          |SELECT word, n, CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS word_id FROM top""".stripMargin,
-
-      "q_encode" ->
-        """WITH d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |tk AS (SELECT unnest(ts) AS word FROM d),
-          |c AS (SELECT word, count(*) AS n FROM tk GROUP BY 1),
-          |top AS (SELECT word, n FROM c WHERE n >= 2 ORDER BY n DESC, word LIMIT 20),
-          |v AS (SELECT word, CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS word_id FROM top),
-          |p AS (SELECT doc_id, CAST(unnest(range(1, len(ts) + 1)) - 1 AS BIGINT) AS pos,
-          |    unnest(ts) AS word
-          |  FROM d WHERE doc_id < 50)
-          |SELECT p.doc_id, p.pos, coalesce(v.word_id, 0) AS word_id
-          |FROM p LEFT JOIN v USING (word)""".stripMargin,
-
-      "q_pivot" ->
-        """SELECT user_id,
-          |  count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-          |  count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-          |  count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-          |  count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-          |  count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-          |FROM events GROUP BY 1""".stripMargin,
-
-      "q_sample_pergroup" ->
-        s"""SELECT doc_id, lang FROM (
-           |  SELECT doc_id, lang, row_number() OVER (PARTITION BY lang
-           |    ORDER BY ${h32("concat('s42','|',CAST(doc_id AS VARCHAR))")}, doc_id) AS rn
-           |  FROM documents) WHERE rn <= 20""".stripMargin,
-
-      "q_pmi" ->
-        """WITH tk AS (SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |u AS (SELECT unnest(ts) AS t FROM tk),
-          |uni AS (SELECT t, count(*) AS c FROM u GROUP BY 1),
-          |bgl AS (SELECT unnest(list_transform(range(1, len(ts)), i -> {'a': ts[i], 'b': ts[i+1]})) AS bg
-          |  FROM tk WHERE len(ts) >= 2),
-          |bi AS (SELECT bg.a AS a, bg.b AS b, count(*) AS c_ab FROM bgl GROUP BY 1, 2),
-          |tot AS (SELECT (SELECT sum(c) FROM uni) AS n_uni, (SELECT sum(c_ab) FROM bi) AS n_bi)
-          |SELECT bi.a, bi.b, bi.c_ab,
-          |  floor((ln((CAST(bi.c_ab AS DOUBLE) * n_uni * n_uni) / (CAST(ua.c AS DOUBLE) * ub.c * n_bi))) * 1000000 + 0.5) / 1000000 AS pmi
-          |FROM bi
-          |JOIN uni ua ON bi.a = ua.t
-          |JOIN uni ub ON bi.b = ub.t
-          |CROSS JOIN tot
-          |WHERE bi.c_ab >= 30""".stripMargin,
-
-      "q_histogram" ->
-        """SELECT event_type, CAST(floor(value/50) AS BIGINT) AS bin,
-          |  CAST(floor(value/50) AS BIGINT) * CAST(50.0 AS DOUBLE) AS bin_lo, count(*) AS n
-          |FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-          |GROUP BY 1, 2, 3""".stripMargin,
-
-      "q_fuzzy" ->
-        """WITH t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
-          |tok AS (SELECT DISTINCT name, unnest(list_filter(string_split_regex(name, '[^a-z]+'), x -> x <> '')) AS tk FROM t),
-          |cand AS (SELECT DISTINCT a.name AS a_name, b.name AS b_name
-          |  FROM tok a JOIN tok b ON a.tk = b.tk AND a.name < b.name)
-          |SELECT a_name, b_name, CAST(levenshtein(a_name, b_name) AS BIGINT) AS dist
-          |FROM cand WHERE levenshtein(a_name, b_name) <= 4""".stripMargin,
-
-      "q_fuzzy_jw" ->
-        """WITH t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
-          |tok AS (SELECT DISTINCT name, unnest(list_filter(string_split_regex(name, '[^a-z]+'), x -> x <> '')) AS tk FROM t),
-          |cand AS (SELECT DISTINCT a.name AS a_name, b.name AS b_name
-          |  FROM tok a JOIN tok b ON a.tk = b.tk AND a.name < b.name)
-          |SELECT a_name, b_name,
-          |  floor(jaro_winkler_similarity(a_name, b_name) * 1000000 + 0.5) / 1000000 AS sim
-          |FROM cand WHERE jaro_winkler_similarity(a_name, b_name) >= 0.88""".stripMargin,
-
-      "q_line_dedup" ->
-        """WITH dd AS (SELECT doc_id, replace(text, ' table ', chr(10)) AS text FROM documents),
-          |l0 AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line,
-          |       unnest(range(0, len(string_split(text, chr(10))))) AS pos FROM dd),
-          |l AS (SELECT doc_id, pos, line FROM l0 WHERE trim(line) <> ''),
-          |k AS (SELECT doc_id, pos, line FROM (
-          |  SELECT *, row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn FROM l) WHERE rn = 1)
-          |SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS text FROM k GROUP BY doc_id""".stripMargin,
-
-      "q_cross_dedup" ->
-        s"""SELECT doc_id, lang FROM documents dd WHERE NOT EXISTS (
-           |  SELECT 1 FROM documents r WHERE r.doc_id < 100
-           |  AND md5(trim(regexp_replace(lower(r.text), '[^a-z0-9]+', ' ', 'g')))
-           |    = md5(trim(regexp_replace(lower(dd.text), '[^a-z0-9]+', ' ', 'g'))))""".stripMargin,
-
-      "q_semdedup" ->
-        s"""WITH $kmeansInitScaledCte,
-           |a AS (SELECT vec_id, embedding, cid FROM (
-           |  SELECT e.vec_id, e.embedding, c0.cid,
-           |    row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqDistSql("e.embedding", "c0.embedding")}, c0.cid) AS rn
-           |  FROM embeddings e CROSS JOIN c0) WHERE rn = 1),
-           |v AS (SELECT DISTINCT b.vec_id FROM a x JOIN a b ON x.cid = b.cid AND x.vec_id < b.vec_id
-           |      AND floor((${cosSql("x.embedding", "b.embedding")}) * 1000000 + 0.5) / 1000000 >= 0.25)
-           |SELECT vec_id, cid FROM a WHERE vec_id NOT IN (SELECT vec_id FROM v)""".stripMargin,
-
-      "q_bloom" ->
-        """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber FROM lineitem
-          |WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 400000)""".stripMargin,
-
-      "q_zorder" -> {
-        val terms = (0 until ZOrderBits).flatMap { i =>
-          Seq(
-            s"(((l_partkey >> $i) & 1) << ${2 * i})",
-            s"(((l_suppkey >> $i) & 1) << ${2 * i + 1})")
-        }.mkString(" + ")
-        s"""SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-           |CAST($terms AS BIGINT) AS zvalue FROM lineitem""".stripMargin
-      },
-
-      "q_ntile" ->
-        """SELECT event_id, event_type,
-          |  CAST(ntile(4) OVER (PARTITION BY event_type ORDER BY value, event_id) AS BIGINT) AS bin
-          |FROM events WHERE value IS NOT NULL AND NOT isnan(value)""".stripMargin,
-
-      "q_domain_cap" ->
-        // || not concat: DuckDB's concat SKIPS null arguments while
-        // Spark's returns NULL — || propagates NULL in both engines, so
-        // a NULL source yields a NULL host on both sides
-        s"""WITH u AS (SELECT doc_id,
-           |  lower(regexp_extract('https://' || source || '.example.com/d/' || CAST(doc_id AS VARCHAR),
-           |    '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1)) AS host
-           |  FROM documents)
-           |SELECT doc_id, host FROM (
-           |  SELECT doc_id, host, row_number() OVER (PARTITION BY host
-           |    ORDER BY ${h32("concat('s42','|',CAST(doc_id AS VARCHAR))")}, doc_id) AS rn
-           |  FROM u) WHERE rn <= 10""".stripMargin,
-
-      "q_heavy_hitters" ->
-        """WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS tok FROM documents)
-          |SELECT tok, count(*) AS n FROM t GROUP BY 1 HAVING count(*) >= 900""".stripMargin,
-
-      "q_bpe_merges" -> bpeMergesOracleSql(12),
-
-      // the exact distinct is the oracle-checkable half; the sketch
-      // estimate is asserted inside the hash via the boolean band
-      // (both engines emit TRUE iff the estimate is sane — a drifted
-      // estimator flips Spark's flag and the hash catches it)
-      "q_hll" ->
-        """SELECT event_type, count(DISTINCT user_id) AS n_distinct,
-          |TRUE AS est_within_band FROM events GROUP BY 1""".stripMargin,
-
-      // ---- round 10 batch T-V oracles ----
-
-      "q_fisher" -> {
-        def lf(e: String) = graft.functions.SpecialMath.lfactSql(e)
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def lp(k: String) =
-          s"${lf("r1")} + ${lf("n - r1")} + ${lf("c1")} + ${lf("n - c1")} - ${lf("n")}" +
-            s" - ${lf(k)} - ${lf(s"r1 - ($k)")} - ${lf(s"c1 - ($k)")} - ${lf(s"n - r1 - c1 + ($k)")}"
-        s"""WITH cells AS (SELECT source,
-           |    CAST(count(CASE WHEN doc_id % 3 = 0 AND contains(text, 'join') THEN 1 END) AS BIGINT) AS a,
-           |    CAST(count(CASE WHEN doc_id % 3 = 0 AND NOT contains(text, 'join') THEN 1 END) AS BIGINT) AS b,
-           |    CAST(count(CASE WHEN doc_id % 3 <> 0 AND contains(text, 'join') THEN 1 END) AS BIGINT) AS c,
-           |    CAST(count(CASE WHEN doc_id % 3 <> 0 AND NOT contains(text, 'join') THEN 1 END) AS BIGINT) AS d
-           |  FROM documents GROUP BY 1),
-           |m AS (SELECT source, a, b, c, d, a + b + c + d AS n, a + b AS r1, a + c AS c1 FROM cells),
-           |t AS (SELECT *, unnest(range(greatest(0, r1 + c1 - n), least(r1, c1) + 1)) AS k FROM m),
-           |l AS (SELECT source, a, b, c, d, (${lp("k")}) AS lpk, (${lp("a")}) AS lpobs FROM t)
-           |SELECT source, a, b, c, d,
-           |  ${r6("least(1.0, CAST(coalesce(sum(CASE WHEN lpk <= lpobs + 1e-7 THEN CAST(" + r6("exp(lpk)") + " AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE))")} AS p_value
-           |FROM l GROUP BY 1, 2, 3, 4, 5""".stripMargin
-      },
-
-      "q_mcnemar" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN contains(text, 'join') AND NOT contains(text, 'merge') THEN 1 END) AS BIGINT) AS b,
-           |    CAST(count(CASE WHEN NOT contains(text, 'join') AND contains(text, 'merge') THEN 1 END) AS BIGINT) AS c
-           |  FROM documents GROUP BY 1),
-           |x AS (SELECT lang, n, b, c,
-           |    CASE WHEN b + c > 0 THEN (CAST(b AS DOUBLE) - CAST(c AS DOUBLE)) * (CAST(b AS DOUBLE) - CAST(c AS DOUBLE)) / (CAST(b AS DOUBLE) + CAST(c AS DOUBLE)) END AS chi2
-           |  FROM g),
-           |z AS (SELECT lang, n, b, c, chi2, sqrt(chi2) AS az,
-           |    1.0 / (1.0 + 0.33267 * sqrt(chi2)) AS tt FROM x)
-           |SELECT lang, n, b, c, ${r6("chi2")} AS chi2,
-           |  CASE WHEN chi2 IS NOT NULL THEN ${r6(pSql)} END AS p_value
-           |FROM z""".stripMargin
-      },
-
-      "q_holm" -> {
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH v AS (SELECT lang, source,
-           |    CASE WHEN ${h32("concat('bh|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS hit
-           |  FROM documents),
-           |g AS (SELECT lang, source,
-           |        CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
-           |        CAST(coalesce(sum(CASE WHEN a = 1 THEN hit END), 0) AS BIGINT) AS k_a,
-           |        CAST(coalesce(sum(CASE WHEN a = 0 THEN hit END), 0) AS BIGINT) AS k_b
-           |      FROM v GROUP BY 1, 2),
-           |e AS (SELECT lang, source, n_a, n_b, k_a, k_b,
-           |        CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-           |        CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-           |        CAST(k_a + k_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS pp
-           |      FROM g),
-           |z0 AS (SELECT lang, source,
-           |        CASE WHEN n_a > 0 AND n_b > 0 AND pp > 0 AND pp < 1 THEN
-           |          (pa - pb) / sqrt(pp * (1.0 - pp) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-           |        END AS z FROM e),
-           |pz AS (SELECT lang, source, z, abs(z) AS az,
-           |        1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0),
-           |pv AS (SELECT lang, source,
-           |        floor(z * 1000000 + 0.5) / 1000000 AS z,
-           |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
-           |      FROM pz WHERE z IS NOT NULL),
-           |rk AS (SELECT lang, source, z, p,
-           |        CAST(count(*) OVER () AS BIGINT) AS m,
-           |        CAST(row_number() OVER (ORDER BY p, lang, source) AS BIGINT) AS "rank"
-           |      FROM pv),
-           |adj AS (SELECT lang, source, z, p, m, "rank",
-           |        least(1.0, max(p * CAST(m - "rank" + 1 AS DOUBLE))
-           |          OVER (ORDER BY p, lang, source
-           |                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS a_raw
-           |      FROM rk),
-           |nullz AS (SELECT lang, source, CAST(NULL AS DOUBLE) AS z, CAST(NULL AS DOUBLE) AS p,
-           |        CAST(NULL AS BIGINT) AS m, CAST(NULL AS BIGINT) AS "rank",
-           |        CAST(NULL AS DOUBLE) AS p_adj, CAST(NULL AS BOOLEAN) AS reject
-           |      FROM z0 WHERE z IS NULL)
-           |SELECT lang, source, z, p, m, "rank",
-           |  floor(a_raw * 1000000 + 0.5) / 1000000 AS p_adj, a_raw <= 0.1 AS reject
-           |FROM adj
-           |UNION ALL SELECT * FROM nullz""".stripMargin
-      },
-
-      "q_rand_test" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT CAST(n_chars AS DOUBLE) AS v, lang = 'en' AS a,
-           |    CAST(doc_id AS VARCHAR) AS id FROM documents
-           |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |obs AS (SELECT CAST(count(CASE WHEN a THEN 1 END) AS BIGINT) AS n_a,
-           |    CAST(count(CASE WHEN NOT a THEN 1 END) AS BIGINT) AS n_b,
-           |    CAST(coalesce(sum(CASE WHEN a THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS st
-           |  FROM b),
-           |reps AS (SELECT i,
-           |    CAST(count(CASE WHEN f THEN 1 END) AS BIGINT) AS ka,
-           |    CAST(count(CASE WHEN NOT f THEN 1 END) AS BIGINT) AS kb,
-           |    CAST(coalesce(sum(CASE WHEN f THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS ksa,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS ks
-           |  FROM (SELECT v, i.i AS i, ${h32("concat('rt:', CAST(i.i AS VARCHAR), ':', id)")} % 2 = 0 AS f
-           |        FROM b, range(1, 20) i(i))
-           |  GROUP BY 1),
-           |ds AS (SELECT
-           |    (SELECT ${r6("CASE WHEN n_a > 0 AND n_b > 0 THEN sa / CAST(n_a AS DOUBLE) - (st - sa) / CAST(n_b AS DOUBLE) END")} FROM obs) AS d_obs,
-           |    ${r6("CASE WHEN ka > 0 AND kb > 0 THEN ksa / CAST(ka AS DOUBLE) - (ks - ksa) / CAST(kb AS DOUBLE) END")} AS d_rep
-           |  FROM reps)
-           |SELECT (SELECT n_a FROM obs) AS n_a, (SELECT n_b FROM obs) AS n_b,
-           |  d_obs, CAST(count(*) AS BIGINT) AS k,
-           |  CAST(count(CASE WHEN abs(d_rep) >= abs(d_obs) THEN 1 END) AS BIGINT) AS n_ge,
-           |  ${r6("(CAST(count(CASE WHEN abs(d_rep) >= abs(d_obs) THEN 1 END) AS DOUBLE) + 1.0) / (CAST(count(*) AS DOUBLE) + 1.0)")} AS p_value
-           |FROM ds GROUP BY d_obs""".stripMargin
-      },
-
-      "q_mi" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH m AS (SELECT f.feature,
-           |    CASE f.feature WHEN 'lang' THEN coalesce(lang, '<null>') ELSE coalesce(source, '<null>') END AS x,
-           |    CAST(contains(text, ' the ') AS VARCHAR) AS y
-           |  FROM documents, (VALUES ('lang'), ('source')) f(feature)),
-           |cells AS (SELECT feature, x, y, CAST(count(*) AS BIGINT) AS nxy FROM m GROUP BY 1, 2, 3),
-           |xm AS (SELECT feature, x, CAST(sum(nxy) AS BIGINT) AS nx FROM cells GROUP BY 1, 2),
-           |ym AS (SELECT feature, y, CAST(sum(nxy) AS BIGINT) AS ny FROM cells GROUP BY 1, 2),
-           |tot AS (SELECT feature, CAST(sum(nxy) AS BIGINT) AS n FROM cells GROUP BY 1),
-           |j AS (SELECT cells.feature, cells.x, cells.y, nxy, nx, ny, n, CAST(n AS DOUBLE) AS nd
-           |  FROM cells JOIN xm USING (feature, x) JOIN ym USING (feature, y) JOIN tot USING (feature)),
-           |agg AS (SELECT feature, n,
-           |    CAST(coalesce(sum(CAST(${r6("CAST(nx AS DOUBLE) / nd * ln(nd / CAST(nx AS DOUBLE)) * CAST(nxy AS DOUBLE) / CAST(nx AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS hx,
-           |    CAST(coalesce(sum(CAST(${r6("CAST(ny AS DOUBLE) / nd * ln(nd / CAST(ny AS DOUBLE)) * CAST(nxy AS DOUBLE) / CAST(ny AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS hy,
-           |    CAST(coalesce(sum(CAST(${r6("CAST(nxy AS DOUBLE) / nd * ln(nd * CAST(nxy AS DOUBLE) / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS mi
-           |  FROM j GROUP BY 1, 2)
-           |SELECT feature, n, ${r6("hx")} AS h_x, ${r6("hy")} AS h_y, ${r6("mi")} AS mi,
-           |  CASE WHEN least(hx, hy) > 0 THEN ${r6("mi / least(hx, hy)")} END AS nmi
-           |FROM agg""".stripMargin
-      },
-
-      "q_kendall_w" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH cells AS (SELECT event_type AS r, user_id % 10 AS it,
-           |    ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS v
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-           |  GROUP BY 1, 2),
-           |rk AS (SELECT r, it, v,
-           |    CAST(rank() OVER (PARTITION BY r ORDER BY v) AS DOUBLE) +
-           |      (CAST(count(*) OVER (PARTITION BY r, v) AS DOUBLE) - 1.0) / 2.0 AS ark,
-           |    CAST(count(*) OVER (PARTITION BY r, v) AS BIGINT) AS t
-           |  FROM cells),
-           |shape AS (SELECT CAST(count(DISTINCT r) AS BIGINT) AS m, CAST(count(DISTINCT it) AS BIGINT) AS ni FROM rk),
-           |ties AS (SELECT CAST(coalesce(sum(CAST(CAST(t * t - 1 AS DOUBLE) AS DECIMAL(38,6))), 0) AS DOUBLE) AS tsum FROM rk),
-           |isum AS (SELECT it, CAST(coalesce(sum(CAST(ark AS DECIMAL(38,6))), 0) AS DOUBLE) AS ri FROM rk GROUP BY 1),
-           |dev AS (SELECT it, ri, (SELECT m FROM shape) AS m, (SELECT ni FROM shape) AS ni, (SELECT tsum FROM ties) AS tsum FROM isum),
-           |sagg AS (SELECT m, ni, tsum,
-           |    CAST(coalesce(sum(CAST(${r6("(ri - CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) + 1.0) / 2.0) * (ri - CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) + 1.0) / 2.0)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s
-           |  FROM dev GROUP BY 1, 2, 3)
-           |SELECT ni AS n_items, m AS n_raters, ${r6("s")} AS s,
-           |  CASE WHEN CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) - CAST(ni AS DOUBLE)) - CAST(m AS DOUBLE) * tsum > 0
-           |    THEN ${r6("12.0 * s / (CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) - CAST(ni AS DOUBLE)) - CAST(m AS DOUBLE) * tsum)")} END AS w
-           |FROM sagg""".stripMargin
-      },
-
-      "q_cls_metrics" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH det AS ($langIdSelectSql),
-           |cells AS (SELECT coalesce(d.lang, '(null)') AS t, coalesce(det.lang_pred, '(null)') AS p, CAST(count(*) AS BIGINT) AS n
-           |  FROM documents d JOIN det ON d.doc_id = det.doc_id GROUP BY 1, 2),
-           |classes AS (SELECT t AS class FROM cells UNION SELECT p FROM cells),
-           |diag AS (SELECT t AS class, n AS tp FROM cells WHERE t = p),
-           |tm AS (SELECT t AS class, CAST(sum(n) AS BIGINT) AS nt FROM cells GROUP BY 1),
-           |pm AS (SELECT p AS class, CAST(sum(n) AS BIGINT) AS np FROM cells GROUP BY 1),
-           |tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM cells),
-           |sums AS (SELECT class,
-           |    coalesce(tp, 0) AS tp,
-           |    coalesce(np, 0) - coalesce(tp, 0) AS fp,
-           |    coalesce(nt, 0) - coalesce(tp, 0) AS fn,
-           |    (SELECT total FROM tot) - coalesce(nt, 0) - coalesce(np, 0) + coalesce(tp, 0) AS tn
-           |  FROM classes LEFT JOIN diag USING (class) LEFT JOIN tm USING (class) LEFT JOIN pm USING (class)),
-           |r AS (SELECT class, tp, fp, fn, tn,
-           |    CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)) END AS prec,
-           |    CASE WHEN tp + fn > 0 THEN CAST(tp AS DOUBLE) / (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE)) END AS rec,
-           |    sqrt((CAST(tp AS DOUBLE) + CAST(fp AS DOUBLE)) * (CAST(tp AS DOUBLE) + CAST(fn AS DOUBLE)) * (CAST(tn AS DOUBLE) + CAST(fp AS DOUBLE)) * (CAST(tn AS DOUBLE) + CAST(fn AS DOUBLE))) AS mden
-           |  FROM sums)
-           |SELECT class, CAST(tp + fn AS BIGINT) AS n_true, CAST(tp + fp AS BIGINT) AS n_pred,
-           |  CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
-           |  ${r6("prec")} AS precision, ${r6("rec")} AS recall,
-           |  CASE WHEN prec IS NOT NULL AND rec IS NOT NULL AND prec + rec > 0 THEN ${r6("2.0 * prec * rec / (prec + rec)")} END AS f1,
-           |  CASE WHEN mden > 0 THEN ${r6("(CAST(tp AS DOUBLE) * CAST(tn AS DOUBLE) - CAST(fp AS DOUBLE) * CAST(fn AS DOUBLE)) / mden")} END AS mcc
-           |FROM r""".stripMargin
-      },
-
-      "q_fair_audit" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH g AS (SELECT coalesce(lang, '(null)') AS "group",
-           |    CAST(count(*) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN n_chars > 800 THEN 1 END) AS BIGINT) AS n_selected,
-           |    CAST(count(CASE WHEN contains(text, ' the ') THEN 1 END) AS BIGINT) AS np,
-           |    CAST(count(CASE WHEN NOT contains(text, ' the ') THEN 1 END) AS BIGINT) AS nn,
-           |    CAST(count(CASE WHEN n_chars > 800 AND contains(text, ' the ') THEN 1 END) AS BIGINT) AS tp,
-           |    CAST(count(CASE WHEN n_chars > 800 AND NOT contains(text, ' the ') THEN 1 END) AS BIGINT) AS fp
-           |  FROM documents GROUP BY 1),
-           |rates AS (SELECT "group", n, n_selected,
-           |    CASE WHEN n > 0 THEN ${r6("CAST(n_selected AS DOUBLE) / CAST(n AS DOUBLE)")} END AS selection_rate,
-           |    CASE WHEN np > 0 THEN ${r6("CAST(tp AS DOUBLE) / CAST(np AS DOUBLE)")} END AS tpr,
-           |    CASE WHEN nn > 0 THEN ${r6("CAST(fp AS DOUBLE) / CAST(nn AS DOUBLE)")} END AS fpr
-           |  FROM g),
-           |ref AS (SELECT selection_rate AS rsel, tpr AS rtpr, fpr AS rfpr
-           |  FROM rates ORDER BY n DESC, "group" ASC LIMIT 1)
-           |SELECT "group", n, n_selected, selection_rate, tpr, fpr,
-           |  CASE WHEN rsel > 0 THEN ${r6("selection_rate / rsel")} END AS selection_ratio,
-           |  ${r6("tpr - rtpr")} AS tpr_gap, ${r6("fpr - rfpr")} AS fpr_gap,
-           |  CASE WHEN rsel > 0 THEN selection_rate / rsel < 0.8 END AS four_fifths_flag
-           |FROM rates, ref""".stripMargin
-      },
-
-      "q_position_attr" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH rows AS (SELECT user_id AS u, event_type AS ty, ts, event_id,
-           |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           |  FROM events WHERE ts IS NOT NULL),
-           |cc AS (SELECT u, min(CASE WHEN ty = 'purchase' THEN rn END) AS cp FROM rows GROUP BY 1),
-           |t AS (SELECT r.u, r.ty,
-           |    row_number() OVER (PARTITION BY r.u ORDER BY r.ts, r.event_id) AS ti,
-           |    count(*) OVER (PARTITION BY r.u) AS nt
-           |  FROM rows r JOIN cc USING (u) WHERE cc.cp IS NOT NULL AND r.rn < cc.cp),
-           |cr AS (SELECT ty AS channel, ${r6("""CASE WHEN nt = 1 THEN 1.0
-           |    WHEN nt = 2 THEN 0.5
-           |    WHEN ti = 1 OR ti = nt THEN 0.4
-           |    ELSE 0.19999999999999998 / (CAST(nt AS DOUBLE) - 2.0) END""")} AS credit
-           |  FROM t)
-           |SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
-           |  ${r6(s"(${dsum("credit")})")} AS total_credit
-           |FROM cr GROUP BY 1""".stripMargin
-      },
-
-      "q_ltv" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT user_id AS u, epoch_us(date_trunc('week', ts)) AS wk,
-           |    coalesce(CAST(value AS DOUBLE), 0.0) AS v
-           |  FROM events WHERE ts IS NOT NULL),
-           |bf AS (SELECT * FROM b WHERE NOT isnan(v)),
-           |coh AS (SELECT u, min(wk) AS cw FROM bf GROUP BY 1),
-           |sz AS (SELECT cw, CAST(count(*) AS BIGINT) AS n_users FROM coh GROUP BY 1),
-           |cells AS (SELECT coh.cw, (bf.wk - coh.cw) // 604800000000 AS age_weeks,
-           |    CAST(count(DISTINCT bf.u) AS BIGINT) AS n_active,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS rev
-           |  FROM bf JOIN coh USING (u) GROUP BY 1, 2),
-           |cum AS (SELECT cw, age_weeks, n_active, rev,
-           |    CAST(sum(CAST(rev AS DECIMAL(38,6))) OVER (PARTITION BY cw ORDER BY age_weeks
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS crev
-           |  FROM cells)
-           |SELECT cw AS cohort_week, CAST(age_weeks AS BIGINT) AS age_weeks, n_users,
-           |  n_active, ${r6("rev")} AS revenue,
-           |  CASE WHEN n_users > 0 THEN ${r6("crev / CAST(n_users AS DOUBLE)")} END AS cum_revenue_per_user
-           |FROM cum JOIN sz USING (cw)""".stripMargin
-      },
-
-      "q_yule_k" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w FROM documents),
-           |vocab AS (SELECT source, w, CAST(count(*) AS BIGINT) AS m FROM t GROUP BY 1, 2),
-           |spec AS (SELECT source, m, CAST(count(*) AS BIGINT) AS vm FROM vocab GROUP BY 1, 2),
-           |agg AS (SELECT source, CAST(sum(m * vm) AS BIGINT) AS n_tokens,
-           |    CAST(sum(vm) AS BIGINT) AS n_types, CAST(sum(m * m * vm) AS BIGINT) AS s2
-           |  FROM spec GROUP BY 1)
-           |SELECT source, n_tokens, n_types,
-           |  CASE WHEN n_tokens > 0 THEN ${r6("10000.0 * CAST(s2 - n_tokens AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE))")} END AS yule_k
-           |FROM agg""".stripMargin
-      },
-
-      "q_luhn" ->
-        """WITH aug AS (SELECT doc_id,
-          |    CASE WHEN doc_id % 7 = 0 THEN text || ' card ' ||
-          |      lpad(CAST((doc_id * 2654435761) % 10000000000 AS VARCHAR), 10, '0') ||
-          |      lpad(CAST(((doc_id + 13) * 97) % 100000 AS VARCHAR), 5, '0')
-          |    ELSE text END AS txt
-          |  FROM documents),
-          |runs AS (SELECT doc_id,
-          |    list_filter(string_split_regex(txt, '[^0-9]+'), x -> len(x) >= 13 AND len(x) <= 19) AS rs
-          |  FROM aug)
-          |SELECT doc_id AS id, CAST(len(rs) AS BIGINT) AS n_candidates,
-          |  CAST(len(list_filter(rs, x -> len(x) > 0 AND
-          |    CAST(list_sum(list_transform(range(1, len(x) + 1), i ->
-          |      CASE WHEN i % 2 = 0 THEN
-          |        CASE WHEN CAST(substr(reverse(x), CAST(i AS INT), 1) AS BIGINT) * 2 > 9
-          |             THEN CAST(substr(reverse(x), CAST(i AS INT), 1) AS BIGINT) * 2 - 9
-          |             ELSE CAST(substr(reverse(x), CAST(i AS INT), 1) AS BIGINT) * 2 END
-          |      ELSE CAST(substr(reverse(x), CAST(i AS INT), 1) AS BIGINT) END)) AS BIGINT) % 10 = 0)) AS BIGINT) AS n_luhn_valid
-          |FROM runs WHERE len(rs) > 0""".stripMargin,
-
-      "q_err" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH qt(query_id, term) AS (VALUES
-           |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-           |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-           |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-           |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |t AS (SELECT id, unnest(toks) AS term FROM tok),
-           |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-           |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-           |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |sc AS (SELECT qt.query_id, tf.id,
-           |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-           |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
-           |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
-           |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 10),
-           |rel AS (SELECT q.query_id, t2.id FROM tok t2, qt q WHERE list_contains(t2.toks, q.term)
-           |  GROUP BY 1, 2 HAVING count(*) = 3),
-           |nrel AS (SELECT query_id, CAST(count(*) AS BIGINT) AS n_relevant FROM rel GROUP BY 1),
-           |j AS (SELECT b.query_id, b.rank, (rel.id IS NOT NULL) AS isrel
-           |  FROM b LEFT JOIN rel ON rel.query_id = b.query_id AND rel.id = b.doc_id),
-           |wj AS (SELECT query_id, rank, isrel,
-           |    count(CASE WHEN isrel THEN 1 END) OVER (PARTITION BY query_id ORDER BY rank
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS jj
-           |  FROM j),
-           |eq AS (SELECT query_id,
-           |    CAST(coalesce(sum(CASE WHEN isrel THEN CAST(${r6("pow(0.5, CAST(jj AS DOUBLE)) / CAST(rank AS DOUBLE)")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS err
-           |  FROM wj GROUP BY 1)
-           |SELECT q.query_id, coalesce(n_relevant, CAST(0 AS BIGINT)) AS n_relevant,
-           |  ${r6("coalesce(err, 0.0)")} AS err_at_10
-           |FROM (SELECT DISTINCT query_id FROM b) q
-           |LEFT JOIN eq USING (query_id) LEFT JOIN nrel USING (query_id)""".stripMargin
-      },
-
-      "q_sax" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
-           |mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sm,
-           |    CAST(coalesce(sum(CAST(${r6("v * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
-           |  FROM b GROUP BY 1),
-           |rk AS (SELECT g, v,
-           |    row_number() OVER (PARTITION BY g ORDER BY ts, event_id) - 1 AS rn FROM b),
-           |zz AS (SELECT rk.g, (rk.rn * 8) // mom.n AS seg,
-           |    CASE WHEN sqrt(greatest(s2 / CAST(n AS DOUBLE) - (sm / CAST(n AS DOUBLE)) * (sm / CAST(n AS DOUBLE)), 0.0)) > 0
-           |      THEN (v - sm / CAST(n AS DOUBLE)) / sqrt(greatest(s2 / CAST(n AS DOUBLE) - (sm / CAST(n AS DOUBLE)) * (sm / CAST(n AS DOUBLE)), 0.0))
-           |      ELSE 0.0 END AS z
-           |  FROM rk JOIN mom USING (g)),
-           |paa AS (SELECT g, seg,
-           |    CAST(coalesce(sum(CAST(${r6("z")} AS DECIMAL(38,6))), 0) AS DOUBLE) /
-           |      CAST(count(*) AS DOUBLE) AS pm
-           |  FROM zz GROUP BY 1, 2),
-           |sym AS (SELECT g, seg,
-           |    CASE WHEN pm < -0.6745 THEN 'a' WHEN pm < 0.0 THEN 'b'
-           |         WHEN pm < 0.6745 THEN 'c' ELSE 'd' END AS sy
-           |  FROM paa)
-           |SELECT sym.g AS event_type, mom.n AS n,
-           |  string_agg(sy, '' ORDER BY seg) AS sax
-           |FROM sym JOIN mom ON mom.g = sym.g GROUP BY sym.g, mom.n""".stripMargin
-      },
-
-      // ---- round 10 batch W oracles ----
-
-      "q_iv_wald" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH peru AS (SELECT user_id,
-           |    max(CASE WHEN event_type = 'purchase' THEN 1 END) AS t,
-           |    ${r6("CAST(coalesce(sum(CASE WHEN NOT isnan(value) THEN CAST(value AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE)")} AS y
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |f AS (SELECT user_id % 2 = 0 AS z, t = 1 AS tt, y FROM peru
-           |  WHERE y IS NOT NULL AND NOT isnan(y)),
-           |g AS (SELECT 'all' AS g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN z THEN 1 END) AS BIGINT) AS n_z1,
-           |    CAST(count(CASE WHEN NOT z THEN 1 END) AS BIGINT) AS n_z0,
-           |    CAST(count(CASE WHEN z AND tt THEN 1 END) AS BIGINT) AS t1,
-           |    CAST(count(CASE WHEN (NOT z) AND tt THEN 1 END) AS BIGINT) AS t0,
-           |    CAST(coalesce(sum(CASE WHEN z THEN CAST(${r6("y")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sy1,
-           |    CAST(coalesce(sum(CASE WHEN NOT z THEN CAST(${r6("y")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sy0
-           |  FROM f),
-           |e AS (SELECT *, CAST(n_z1 AS DOUBLE) AS n1, CAST(n_z0 AS DOUBLE) AS n0,
-           |    CAST(t1 AS DOUBLE) / CAST(n_z1 AS DOUBLE) AS p1,
-           |    CAST(t0 AS DOUBLE) / CAST(n_z0 AS DOUBLE) AS p0,
-           |    CAST(t1 + t0 AS DOUBLE) / CAST(n_z1 + n_z0 AS DOUBLE) AS pp
-           |  FROM g),
-           |x AS (SELECT *,
-           |    CASE WHEN n_z1 > 0 AND n_z0 > 0 THEN p1 - p0 END AS fs,
-           |    CASE WHEN n_z1 > 0 AND n_z0 > 0 THEN sy1 / n1 - sy0 / n0 END AS itt0
-           |  FROM e)
-           |SELECT g, n, n_z1, n_z0,
-           |  CASE WHEN n_z1 > 0 THEN ${r6("p1")} END AS t_rate_z1,
-           |  CASE WHEN n_z0 > 0 THEN ${r6("p0")} END AS t_rate_z0,
-           |  ${r6("fs")} AS first_stage,
-           |  CASE WHEN n_z1 > 0 AND n_z0 > 0 AND pp > 0 AND pp < 1
-           |    THEN ${r6("(p1 - p0) / sqrt(pp * (1.0 - pp) * (1.0 / n1 + 1.0 / n0))")} END AS first_stage_z,
-           |  ${r6("itt0")} AS itt,
-           |  CASE WHEN fs IS NOT NULL AND fs <> 0.0 THEN ${r6("itt0 / fs")} END AS late
-           |FROM x""".stripMargin
-      },
-
-      "q_cvm" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH v AS (SELECT source, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS a,
-           |    CAST(n_chars AS DOUBLE) AS x
-           |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |c AS (SELECT source, x, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(1 - a) AS BIGINT) AS cb
-           |      FROM v GROUP BY 1, 2),
-           |w AS (SELECT source, ca, cb,
-           |        CAST(sum(ca) OVER (PARTITION BY source ORDER BY x) AS BIGINT) AS fa,
-           |        CAST(sum(cb) OVER (PARTITION BY source ORDER BY x) AS BIGINT) AS fb,
-           |        CAST(sum(ca) OVER (PARTITION BY source) AS BIGINT) AS na,
-           |        CAST(sum(cb) OVER (PARTITION BY source) AS BIGINT) AS nb
-           |      FROM c),
-           |t AS (SELECT source, na, nb,
-           |        CAST(ca + cb AS DOUBLE) *
-           |          (CAST(fa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE)) *
-           |          (CAST(fa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE)) AS term
-           |      FROM w WHERE na > 0 AND nb > 0),
-           |m AS (SELECT source, first(na) AS n_a, first(nb) AS n_b,
-           |        CAST(coalesce(sum(CAST(${r6("term")} AS DECIMAL(38,6))), 0) AS DOUBLE) *
-           |          CAST(first(na) AS DOUBLE) * CAST(first(nb) AS DOUBLE) /
-           |          (CAST(first(na) + first(nb) AS DOUBLE) * CAST(first(na) + first(nb) AS DOUBLE)) AS t0
-           |      FROM t GROUP BY 1)
-           |SELECT source, n_a, n_b, ${r6("t0")} AS t FROM m""".stripMargin
-      },
-
-      "q_wquantile" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v,
-           |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS DOUBLE) AS w
-           |  FROM documents WHERE n_chars IS NOT NULL),
-           |pv AS (SELECT lang, v, sum(CAST(w AS DECIMAL(38,6))) AS wd FROM b GROUP BY 1, 2),
-           |cum AS (SELECT lang, v,
-           |    CAST(sum(wd) OVER (PARTITION BY lang ORDER BY v) AS DOUBLE) AS cw,
-           |    CAST(sum(wd) OVER (PARTITION BY lang) AS DOUBLE) AS tw
-           |  FROM pv),
-           |pr AS (SELECT lang, p.p AS p,
-           |    min(CASE WHEN cw >= p.p * tw THEN v END) AS q, max(tw) AS twx
-           |  FROM cum, (VALUES (0.5), (0.9), (0.99)) p(p) GROUP BY 1, 2)
-           |SELECT lang, CAST(p AS DOUBLE) AS p, q, ${r6("twx")} AS w_total FROM pr""".stripMargin
-      },
-
-      "q_roll_median" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT user_id, epoch_us(ts) AS t, event_id, CAST(value AS DOUBLE) AS v
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |w AS (SELECT user_id, t, v,
-           |    list_sort(list(v) OVER (PARTITION BY user_id ORDER BY t, event_id
-           |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)) AS win
-           |  FROM b)
-           |SELECT user_id, t, v, CAST(len(win) AS BIGINT) AS n_window,
-           |  ${r6("(win[(len(win) + 1) // 2] + win[len(win) // 2 + 1]) / 2.0")} AS roll_median
-           |FROM w""".stripMargin
-      },
-
-      "q_hilbert" ->
-        """WITH b AS (SELECT doc_id, doc_id % 1024 AS x, n_chars % 1024 AS y FROM documents)
-          |SELECT doc_id,
-          |  list_reduce(
-          |    list_prepend([CAST(0 AS BIGINT), x, y],
-          |      list_transform(range(0, 10), i -> [9 - i, CAST(0 AS BIGINT), CAST(0 AS BIGINT)])),
-          |    (acc, lv) -> [
-          |      acc[1] + CAST(pow(2, lv[1]) AS BIGINT) * CAST(pow(2, lv[1]) AS BIGINT) *
-          |        xor(3 * (CASE WHEN (acc[2] & CAST(pow(2, lv[1]) AS BIGINT)) > 0 THEN 1 ELSE 0 END),
-          |            (CASE WHEN (acc[3] & CAST(pow(2, lv[1]) AS BIGINT)) > 0 THEN 1 ELSE 0 END)),
-          |      CASE WHEN (acc[3] & CAST(pow(2, lv[1]) AS BIGINT)) > 0 THEN acc[2]
-          |           WHEN (acc[2] & CAST(pow(2, lv[1]) AS BIGINT)) > 0
-          |             THEN CAST(pow(2, lv[1]) AS BIGINT) - 1 - acc[3]
-          |           ELSE acc[3] END,
-          |      CASE WHEN (acc[3] & CAST(pow(2, lv[1]) AS BIGINT)) > 0 THEN acc[3]
-          |           WHEN (acc[2] & CAST(pow(2, lv[1]) AS BIGINT)) > 0
-          |             THEN CAST(pow(2, lv[1]) AS BIGINT) - 1 - acc[2]
-          |           ELSE acc[2] END
-          |    ])[1] AS h
-          |FROM b""".stripMargin,
-
-      "q_dtw" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
-           |mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sm,
-           |    CAST(coalesce(sum(CAST(${r6("v * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
-           |  FROM b GROUP BY 1),
-           |rk AS (SELECT g, v,
-           |    row_number() OVER (PARTITION BY g ORDER BY ts, event_id) - 1 AS rn FROM b),
-           |zz AS (SELECT rk.g, (rk.rn * 8) // mom.n AS seg,
-           |    CASE WHEN sqrt(greatest(s2 / CAST(n AS DOUBLE) - (sm / CAST(n AS DOUBLE)) * (sm / CAST(n AS DOUBLE)), 0.0)) > 0
-           |      THEN (v - sm / CAST(n AS DOUBLE)) / sqrt(greatest(s2 / CAST(n AS DOUBLE) - (sm / CAST(n AS DOUBLE)) * (sm / CAST(n AS DOUBLE)), 0.0))
-           |      ELSE 0.0 END AS z
-           |  FROM rk JOIN mom USING (g)),
-           |paa AS (SELECT g, seg,
-           |    ${r6("CAST(coalesce(sum(CAST(" + r6("z") + " AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS pm
-           |  FROM zz GROUP BY 1, 2),
-           |vecs AS (SELECT g, list(pm ORDER BY seg) AS paa FROM paa GROUP BY 1),
-           |pairs AS (SELECT a.g AS type_a, b.g AS type_b, a.paa AS pa, b.paa AS pb
-           |  FROM vecs a JOIN vecs b ON a.g < b.g)
-           |SELECT type_a, type_b,
-           |  ${r6("""list_reduce(
-           |    list_prepend(list_prepend(CAST(0 AS DOUBLE), list_transform(pb, q -> 1e308)),
-           |      list_transform(pa, q -> [q])),
-           |    (prev, xr) -> list_reduce(
-           |      list_prepend([1e308], list_transform(range(1, len(pb) + 1), j -> [CAST(j AS DOUBLE)])),
-           |      (row, jj) -> list_append(row,
-           |        abs(xr[1] - pb[CAST(jj[1] AS BIGINT)]) +
-           |        least(prev[CAST(jj[1] AS BIGINT)], prev[CAST(jj[1] AS BIGINT) + 1], row[len(row)]))))[len(pb) + 1]""")} AS dtw
-           |FROM pairs""".stripMargin
-      },
-
-      "q_kripp" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH r AS (SELECT event_type AS g, user_id % 10 AS u,
-           |    CASE WHEN CAST(value AS DOUBLE) < 40.0 THEN 'lo'
-           |         WHEN CAST(value AS DOUBLE) < 70.0 THEN 'mid' ELSE 'hi' END AS c
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |ouc AS (SELECT g, u, c, CAST(count(*) AS BIGINT) AS o FROM r GROUP BY 1, 2, 3),
-           |mu AS (SELECT g, u, CAST(sum(o) AS BIGINT) AS m FROM ouc GROUP BY 1, 2),
-           |cells AS (SELECT ouc.g, ouc.u, ouc.c, ouc.o, mu.m FROM ouc JOIN mu USING (g, u) WHERE mu.m >= 2),
-           |nc AS (SELECT g, c, CAST(sum(o) AS BIGINT) AS nc FROM cells GROUP BY 1, 2),
-           |ds AS (SELECT g, CAST(count(DISTINCT u) AS BIGINT) AS n_units,
-           |    CAST(sum(o) AS BIGINT) AS n_pairable,
-           |    CAST(coalesce(sum(CAST(${r6("CAST(o AS DOUBLE) * CAST(m - o AS DOUBLE) / (CAST(m AS DOUBLE) - 1.0)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS dnum
-           |  FROM cells GROUP BY 1),
-           |de AS (SELECT nc.g, CAST(coalesce(sum(CAST(CAST(nc.nc * (ds.n_pairable - nc.nc) AS DOUBLE) AS DECIMAL(38,6))), 0) AS DOUBLE) AS enum
-           |  FROM nc JOIN ds USING (g) GROUP BY 1),
-           |f AS (SELECT ds.g AS event_type, n_units, n_pairable,
-           |    CASE WHEN n_pairable > 0 THEN dnum / CAST(n_pairable AS DOUBLE) END AS d_o0,
-           |    CASE WHEN n_pairable > 1 THEN enum / (CAST(n_pairable AS DOUBLE) * (CAST(n_pairable AS DOUBLE) - 1.0)) END AS d_e0
-           |  FROM ds JOIN de USING (g))
-           |SELECT event_type, n_units, n_pairable, ${r6("d_o0")} AS d_o, ${r6("d_e0")} AS d_e,
-           |  CASE WHEN d_e0 > 0 THEN ${r6("1.0 - d_o0 / d_e0")} END AS alpha
-           |FROM f""".stripMargin
-      },
-
-      "q_negbin" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH k AS (SELECT user_id, event_type, CAST(count(*) AS DOUBLE) AS k FROM events GROUP BY 1, 2),
-           |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(coalesce(sum(CAST(${r6("k")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s,
-           |    CAST(coalesce(sum(CAST(${r6("k * k")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
-           |  FROM k GROUP BY 1),
-           |m AS (SELECT event_type, n, s / CAST(n AS DOUBLE) AS mn,
-           |    greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0) AS vr
-           |  FROM g),
-           |x AS (SELECT *, CASE WHEN vr > mn AND mn > 0 THEN mn * mn / (vr - mn) END AS r0 FROM m)
-           |SELECT event_type, n, ${r6("mn")} AS mean, ${r6("vr")} AS variance,
-           |  ${r6("r0")} AS r,
-           |  CASE WHEN r0 IS NOT NULL THEN ${r6("r0 / (r0 + mn)")} END AS p
-           |FROM x""".stripMargin
-      },
-
-      "q_lognormal" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
-           |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |g AS (SELECT lang, CAST(count(CASE WHEN v > 0 THEN 1 END) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN v <= 0 THEN 1 END) AS BIGINT) AS n_dropped,
-           |    CAST(coalesce(sum(CASE WHEN v > 0 THEN CAST(${r6("ln(v)")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s,
-           |    CAST(coalesce(sum(CASE WHEN v > 0 THEN CAST(${r6("ln(v) * ln(v)")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s2
-           |  FROM b GROUP BY 1),
-           |m AS (SELECT lang, n, n_dropped, s / CAST(n AS DOUBLE) AS mu,
-           |    sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0)) AS sd
-           |  FROM g)
-           |SELECT lang, n, n_dropped,
-           |  CASE WHEN n > 0 THEN ${r6("mu")} END AS mu,
-           |  CASE WHEN n > 0 THEN ${r6("sd")} END AS sigma,
-           |  CASE WHEN n > 0 THEN ${r6("exp(mu)")} END AS median_fit,
-           |  CASE WHEN n > 0 THEN ${r6("exp(mu + 1.6449 * sd)")} END AS p95_fit
-           |FROM m""".stripMargin
-      },
-
-      "q_json_health" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH f AS (SELECT event_type, props,
-           |    CASE WHEN props IS NOT NULL AND json_valid(props)
-           |      THEN try_cast(json_extract_string(props, '$$.k') AS DOUBLE) END AS v
-           |  FROM events),
-           |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN props IS NULL THEN 1 END) AS BIGINT) AS n_null_payload,
-           |    CAST(count(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN 1 END) AS BIGINT) AS n_field,
-           |    CAST(coalesce(sum(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s,
-           |    min(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN v END) AS mn,
-           |    max(CASE WHEN v IS NOT NULL AND NOT isnan(v) THEN v END) AS mx
-           |  FROM f GROUP BY 1)
-           |SELECT event_type, n, n_null_payload, n_field,
-           |  CASE WHEN n > 0 THEN ${r6("CAST(n_field AS DOUBLE) / CAST(n AS DOUBLE)")} END AS present_rate,
-           |  CASE WHEN n_field > 0 THEN ${r6("s / CAST(n_field AS DOUBLE)")} END AS field_mean,
-           |  ${r6("mn")} AS field_min, ${r6("mx")} AS field_max
-           |FROM g""".stripMargin
-      },
-
-      // ---- round 10 batch X oracles ----
-
-      "q_boot_median" -> {
-        s"""WITH base AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v, CAST(doc_id AS VARCHAR) AS id
-           |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |ov AS (SELECT lang, v, CAST(count(*) AS BIGINT) AS c FROM base GROUP BY 1, 2),
-           |oc AS (SELECT lang, v,
-           |        CAST(sum(c) OVER (PARTITION BY lang ORDER BY v) AS BIGINT) AS cw,
-           |        CAST(sum(c) OVER (PARTITION BY lang) AS BIGINT) AS nn
-           |      FROM ov),
-           |obs AS (SELECT lang, first(nn) AS n, min(CASE WHEN cw * 2 >= nn THEN v END) AS median_obs
-           |      FROM oc GROUP BY 1),
-           |x AS (SELECT lang, v, id, r.b FROM base, (SELECT unnest(range(0, 16)) AS b) r),
-           |u AS (SELECT lang, v, b,
-           |        ((${h32("concat('bm', '|', id, '|', CAST(b AS VARCHAR))")} % 1000000)
-           |          + CAST(0.5 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS u
-           |      FROM x),
-           |w AS (SELECT lang, v, b,
-           |        CASE WHEN u < CAST(0.36787944117144233 AS DOUBLE) THEN 0
-           |             WHEN u < CAST(0.7357588823428847 AS DOUBLE) THEN 1
-           |             WHEN u < CAST(0.9196986029286058 AS DOUBLE) THEN 2
-           |             WHEN u < CAST(0.9810118431238462 AS DOUBLE) THEN 3
-           |             WHEN u < CAST(0.9963401531726563 AS DOUBLE) THEN 4
-           |             WHEN u < CAST(0.9994058151824183 AS DOUBLE) THEN 5
-           |             WHEN u < CAST(0.9999167588507119 AS DOUBLE) THEN 6
-           |             ELSE 7 END AS w
-           |      FROM u),
-           |pv AS (SELECT lang, b, v, CAST(sum(w) AS BIGINT) AS wd FROM w GROUP BY 1, 2, 3),
-           |cum AS (SELECT lang, b, v,
-           |        CAST(sum(wd) OVER (PARTITION BY lang, b ORDER BY v) AS BIGINT) AS cw,
-           |        CAST(sum(wd) OVER (PARTITION BY lang, b) AS BIGINT) AS tw
-           |      FROM pv),
-           |med AS (SELECT lang, b, min(CASE WHEN cw * 2 >= tw THEN v END) AS med
-           |      FROM cum WHERE tw > 0 GROUP BY 1, 2),
-           |band AS (SELECT lang, list_sort(list(med)) AS ms, CAST(count(med) AS BIGINT) AS k
-           |      FROM med GROUP BY 1)
-           |SELECT obs.lang, obs.n, obs.median_obs,
-           |  ms[CASE WHEN k >= 3 THEN 2 ELSE 1 END] AS boot_lo,
-           |  ms[CAST(CASE WHEN k >= 3 THEN k - 1 ELSE k END AS INT)] AS boot_hi,
-           |  k AS k_effective
-           |FROM obs JOIN band USING (lang)""".stripMargin
-      },
-
-      "q_jl" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def planes(seed: String) =
-          s"""SELECT p.i AS p,
-             |  list_transform(range(0,64), d -> CASE WHEN CAST(concat('0x', substr(md5(concat('srp:$seed:', p.i, ':', d)),1,8)) AS BIGINT) % 2 = 0
-             |    THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS pv
-             |  FROM range(0,16) p(i)""".stripMargin
-        val dot = "list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> CAST(e.embedding[i] AS DOUBLE) * pl.pv[i])), (x,y) -> x+y)"
-        s"""WITH pl AS (${planes("jl")}),
-           |pr AS (SELECT e.vec_id, pl.p, $dot AS d
-           |  FROM embeddings e, pl WHERE e.vec_id < 40),
-           |vv AS (SELECT vec_id, list(d ORDER BY p) AS ds FROM pr GROUP BY 1),
-           |ev AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 40),
-           |pairs AS (SELECT a.vec_id AS ia, b.vec_id AS ib,
-           |    va.ds AS da, vb.ds AS db, a.embedding AS ea, b.embedding AS eb
-           |  FROM ev a JOIN ev b ON a.vec_id < b.vec_id
-           |  JOIN vv va ON va.vec_id = a.vec_id JOIN vv vb ON vb.vec_id = b.vec_id),
-           |sc AS (SELECT
-           |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           |      list_transform(range(1,65), i -> (CAST(ea[i] AS DOUBLE) - CAST(eb[i] AS DOUBLE)) * (CAST(ea[i] AS DOUBLE) - CAST(eb[i] AS DOUBLE)))), (x,y) -> x+y) AS o,
-           |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-           |      list_transform(range(1,17), i -> (da[i] - db[i]) * (da[i] - db[i]))), (x,y) -> x+y) / 16.0 AS pq
-           |  FROM pairs)
-           |SELECT CAST(count(CASE WHEN o > 0 THEN 1 END) AS BIGINT) AS n_pairs,
-           |  CAST(count(CASE WHEN o = 0 THEN 1 END) AS BIGINT) AS n_zero_dist,
-           |  ${r6("CAST(coalesce(sum(CASE WHEN o > 0 THEN CAST(" + r6("sqrt(pq / o)") + " AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) / CAST(count(CASE WHEN o > 0 THEN 1 END) AS DOUBLE)")} AS ratio_mean,
-           |  ${r6("min(CASE WHEN o > 0 THEN sqrt(pq / o) END)")} AS ratio_min,
-           |  ${r6("max(CASE WHEN o > 0 THEN sqrt(pq / o) END)")} AS ratio_max
-           |FROM sc""".stripMargin
-      },
-
-      "q_markov_eval" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH bg AS (SELECT event_type AS prev,
-           |    lead(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS next,
-           |    user_id % 2 = 0 AS tr
-           |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-           |b AS (SELECT prev, next, tr FROM bg WHERE next IS NOT NULL),
-           |tc AS (SELECT prev, next, CAST(count(*) AS BIGINT) AS n FROM b WHERE tr GROUP BY 1, 2),
-           |model AS (SELECT prev, next AS predicted FROM (
-           |    SELECT prev, next, row_number() OVER (PARTITION BY prev ORDER BY n DESC, next ASC) AS r FROM tc)
-           |  WHERE r = 1),
-           |tt AS (SELECT prev, CAST(sum(n) AS BIGINT) AS n_train FROM tc GROUP BY 1),
-           |te AS (SELECT prev, next, CAST(count(*) AS BIGINT) AS nt FROM b WHERE NOT tr GROUP BY 1, 2),
-           |tes AS (SELECT prev, CAST(sum(nt) AS BIGINT) AS n_test FROM te GROUP BY 1)
-           |SELECT model.prev, model.predicted, tt.n_train,
-           |  coalesce(tes.n_test, 0) AS n_test,
-           |  coalesce(te.nt, 0) AS n_correct,
-           |  CASE WHEN coalesce(tes.n_test, 0) > 0
-           |    THEN ${r6("CAST(coalesce(te.nt, 0) AS DOUBLE) / CAST(tes.n_test AS DOUBLE)")} END AS accuracy
-           |FROM model JOIN tt USING (prev)
-           |LEFT JOIN tes USING (prev)
-           |LEFT JOIN te ON te.prev = model.prev AND te.next = model.predicted""".stripMargin
-      },
-
-      "q_srm_sweep" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH v AS (SELECT source,
-           |    CASE WHEN ${h32("concat('srm|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS b
-           |  FROM documents),
-           |g AS (SELECT source, CAST(count(CASE WHEN b = 0 THEN 1 END) AS BIGINT) AS n_a,
-           |        CAST(count(CASE WHEN b = 1 THEN 1 END) AS BIGINT) AS n_b
-           |      FROM v GROUP BY 1),
-           |c AS (SELECT source, n_a, n_b,
-           |        CAST(n_a + n_b AS DOUBLE) AS nd FROM g),
-           |x AS (SELECT source, n_a, n_b,
-           |        CASE WHEN nd > 0 THEN
-           |          (CAST(n_b AS DOUBLE) - nd * 0.5) * (CAST(n_b AS DOUBLE) - nd * 0.5) / (nd * 0.5) +
-           |          (CAST(n_a AS DOUBLE) - nd * 0.5) * (CAST(n_a AS DOUBLE) - nd * 0.5) / (nd * 0.5)
-           |        END AS chi2 FROM c),
-           |pz AS (SELECT source, n_a, n_b, floor(chi2 * 1000000 + 0.5) / 1000000 AS chi2,
-           |        sqrt(chi2) AS az, 1.0 / (1.0 + 0.33267 * sqrt(chi2)) AS tt FROM x),
-           |pv AS (SELECT source, n_a, n_b, chi2,
-           |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
-           |      FROM pz WHERE chi2 IS NOT NULL),
-           |rk AS (SELECT source, n_a, n_b, chi2, p,
-           |        CAST(count(*) OVER () AS BIGINT) AS m,
-           |        CAST(row_number() OVER (ORDER BY p, source) AS BIGINT) AS "rank"
-           |      FROM pv),
-           |adj AS (SELECT source, n_a, n_b, chi2, p, m, "rank",
-           |        least(1.0, min(p * CAST(m AS DOUBLE) / CAST("rank" AS DOUBLE))
-           |          OVER (ORDER BY p, source
-           |                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) AS q_raw
-           |      FROM rk)
-           |SELECT source, n_a, n_b, chi2, p, m, "rank",
-           |  floor(q_raw * 1000000 + 0.5) / 1000000 AS q, q_raw <= 0.05 AS reject
-           |FROM adj""".stripMargin
-      },
-
-      "q_top_terms_drift" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val wts = (1 to 20).map(d => s"($d, CAST(${math.pow(0.9, d)} AS DOUBLE))")
-        s"""WITH t AS (SELECT doc_id % 2 = 0 AS h,
-           |    unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term
-           |  FROM documents),
-           |tc AS (SELECT h, term, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1, 2),
-           |rk AS (SELECT h, term,
-           |    CAST(row_number() OVER (PARTITION BY h ORDER BY n DESC, term) AS BIGINT) AS rank
-           |  FROM tc QUALIFY rank <= 20),
-           |a AS (SELECT term, rank AS ra FROM rk WHERE h),
-           |b AS (SELECT term, rank AS rb FROM rk WHERE NOT h),
-           |common AS (SELECT greatest(ra, rb) AS m, CAST(count(*) AS BIGINT) AS c
-           |  FROM a JOIN b USING (term) GROUP BY 1),
-           |wt(d, w) AS (VALUES ${wts.mkString(", ")}),
-           |grid AS (SELECT d, w FROM wt),
-           |terms AS (SELECT grid.d, grid.w,
-           |    CAST(sum(coalesce(common.c, 0)) OVER (ORDER BY grid.d
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS x
-           |  FROM grid LEFT JOIN common ON common.m = grid.d),
-           |rbo0 AS (SELECT CAST(coalesce(sum(CAST(${r6("w * CAST(x AS DOUBLE) / CAST(d AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS srb,
-           |    max(CASE WHEN d = 20 THEN x END) AS x20
-           |  FROM terms),
-           |sz AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM a) AS n_a,
-           |    (SELECT CAST(count(*) AS BIGINT) FROM b) AS n_b,
-           |    (SELECT CAST(count(*) AS BIGINT) FROM a JOIN b USING (term)) AS inter)
-           |SELECT n_a, n_b,
-           |  ${r6("CAST(x20 AS DOUBLE) / 20.0")} AS overlap_k,
-           |  ${r6(s"(1.0 - 0.9) / 0.9 * srb")} AS rbo,
-           |  ${r6("CAST(inter AS DOUBLE) / CAST(n_a + n_b - inter AS DOUBLE)")} AS jaccard
-           |FROM rbo0, sz""".stripMargin
-      },
-
-      // ---- round 10 batch Y oracles ----
-
-      "q_gumbel" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT event_type, epoch_us(ts) - epoch_us(ts) % 86400000000 AS blk,
-           |    max(CAST(value AS DOUBLE)) AS mx
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))
-           |  GROUP BY 1, 2),
-           |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_blocks,
-           |    CAST(coalesce(sum(CAST(${r6("mx")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s,
-           |    CAST(coalesce(sum(CAST(${r6("mx * mx")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
-           |  FROM b GROUP BY 1),
-           |m AS (SELECT event_type, n_blocks, s / CAST(n_blocks AS DOUBLE) AS mn,
-           |    sqrt(greatest(s2 / CAST(n_blocks AS DOUBLE) - (s / CAST(n_blocks AS DOUBLE)) * (s / CAST(n_blocks AS DOUBLE)), 0.0)) AS sd
-           |  FROM g),
-           |f AS (SELECT event_type, n_blocks, mn, sd * 0.7796968012336793 AS beta,
-           |    mn - 0.5772156649015329 * (sd * 0.7796968012336793) AS mu
-           |  FROM m)
-           |SELECT event_type, n_blocks, ${r6("mn")} AS block_max_mean,
-           |  CASE WHEN n_blocks >= 2 THEN ${r6("mu")} END AS mu,
-           |  CASE WHEN n_blocks >= 2 THEN ${r6("beta")} END AS beta,
-           |  CASE WHEN n_blocks >= 2 THEN ${r6("mu - beta * ln(-ln(0.99))")} END AS q_fit
-           |FROM f""".stripMargin
-      },
-
-      "q_lmoments" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
-           |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |rk AS (SELECT lang, v, CAST(row_number() OVER (PARTITION BY lang ORDER BY v) AS BIGINT) AS r FROM b),
-           |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS b0s,
-           |    CAST(coalesce(sum(CAST(${r6("CAST(r - 1 AS DOUBLE) * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS b1s,
-           |    CAST(coalesce(sum(CAST(${r6("CAST((r - 1) * (r - 2) AS DOUBLE) * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS b2s
-           |  FROM rk GROUP BY 1),
-           |m AS (SELECT lang, n, b0s / CAST(n AS DOUBLE) AS b0,
-           |    CASE WHEN n >= 2 THEN b1s / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) END AS b1,
-           |    CASE WHEN n >= 3 THEN b2s / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (CAST(n AS DOUBLE) - 2.0)) END AS b2
-           |  FROM g),
-           |l AS (SELECT lang, n, b0 AS l1, 2.0 * b1 - b0 AS l2,
-           |    6.0 * b2 - 6.0 * b1 + b0 AS l3 FROM m)
-           |SELECT lang, n, ${r6("l1")} AS l1, ${r6("l2")} AS l2,
-           |  CASE WHEN l1 <> 0.0 THEN ${r6("l2 / l1")} END AS l_cv,
-           |  CASE WHEN l2 <> 0.0 THEN ${r6("l3 / l2")} END AS l_skew
-           |FROM l""".stripMargin
-      },
-
-      "q_theil" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH base AS (SELECT source AS g, CAST(n_chars AS DOUBLE) AS v FROM documents
-           |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |tot AS (SELECT CAST(count(CASE WHEN v > 0 THEN 1 END) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN v <= 0 THEN 1 END) AS BIGINT) AS nd,
-           |    CAST(coalesce(sum(CASE WHEN v > 0 THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s
-           |  FROM base),
-           |rows0 AS (SELECT g, CAST(count(*) AS BIGINT) AS ng,
-           |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sg,
-           |    CAST(coalesce(sum(CAST(${r6("v / (tot.s / CAST(tot.n AS DOUBLE)) * ln(v / (tot.s / CAST(tot.n AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS tsum,
-           |    first(tot.n) AS n, first(tot.nd) AS nd, first(tot.s) AS s
-           |  FROM base, tot WHERE v > 0 GROUP BY 1),
-           |terms AS (SELECT n, nd,
-           |    tsum / CAST(n AS DOUBLE) AS tg,
-           |    (sg / s) * ln((sg / CAST(ng AS DOUBLE)) / (s / CAST(n AS DOUBLE))) AS btw
-           |  FROM rows0)
-           |SELECT first(n) AS n, first(nd) AS n_dropped, CAST(count(*) AS BIGINT) AS k_groups,
-           |  ${r6("CAST(coalesce(sum(CAST(" + r6("tg") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_total,
-           |  ${r6("CAST(coalesce(sum(CAST(" + r6("btw") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_between,
-           |  ${r6("CAST(coalesce(sum(CAST(" + r6("tg") + " AS DECIMAL(38,6))), 0) AS DOUBLE) - CAST(coalesce(sum(CAST(" + r6("btw") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_within
-           |FROM terms GROUP BY n, nd""".stripMargin
-      },
-
-      "q_trend_test" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH d AS (SELECT lang, CAST(least(9, n_chars // 150) AS DOUBLE) AS s,
-           |    contains(text, ' the ') AS hit
-           |  FROM documents WHERE n_chars IS NOT NULL),
-           |lv AS (SELECT lang, s, CAST(count(*) AS BIGINT) AS n, CAST(count(CASE WHEN hit THEN 1 END) AS BIGINT) AS k
-           |  FROM d GROUP BY 1, 2),
-           |g AS (SELECT lang, CAST(sum(n) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_levels,
-           |    CAST(sum(k) AS BIGINT) AS ktot,
-           |    CAST(coalesce(sum(CAST(${r6("s * CAST(n AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sn,
-           |    CAST(coalesce(sum(CAST(${r6("s * s * CAST(n AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2n,
-           |    CAST(coalesce(sum(CAST(${r6("s * CAST(k AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sk
-           |  FROM lv GROUP BY 1),
-           |x AS (SELECT lang, n, k_levels,
-           |    CAST(ktot AS DOUBLE) / CAST(n AS DOUBLE) AS pbar,
-           |    sk, sn, s2n - sn * sn / CAST(n AS DOUBLE) AS spread
-           |  FROM g),
-           |z0 AS (SELECT lang, n, k_levels,
-           |    CASE WHEN pbar > 0 AND pbar < 1 AND spread > 0
-           |      THEN (sk - pbar * sn) / sqrt(pbar * (1.0 - pbar) * spread) END AS z
-           |  FROM x),
-           |pz AS (SELECT lang, n, k_levels, z, abs(z) AS az,
-           |    1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0)
-           |SELECT lang, n, k_levels, ${r6("z")} AS z,
-           |  CASE WHEN z IS NOT NULL THEN ${r6(pSql)} END AS p_value
-           |FROM pz""".stripMargin
-      },
-
-      "q_storey" -> {
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH v AS (SELECT lang, source,
-           |    CASE WHEN ${h32("concat('bh|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS hit
-           |  FROM documents),
-           |g AS (SELECT lang, source,
-           |        CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
-           |        CAST(coalesce(sum(CASE WHEN a = 1 THEN hit END), 0) AS BIGINT) AS k_a,
-           |        CAST(coalesce(sum(CASE WHEN a = 0 THEN hit END), 0) AS BIGINT) AS k_b
-           |      FROM v GROUP BY 1, 2),
-           |e AS (SELECT lang, source, n_a, n_b, k_a, k_b,
-           |        CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-           |        CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-           |        CAST(k_a + k_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS pp
-           |      FROM g),
-           |z0 AS (SELECT lang, source,
-           |        CASE WHEN n_a > 0 AND n_b > 0 AND pp > 0 AND pp < 1 THEN
-           |          (pa - pb) / sqrt(pp * (1.0 - pp) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-           |        END AS z FROM e),
-           |pz AS (SELECT lang, source, z, abs(z) AS az,
-           |        1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0),
-           |pv AS (SELECT lang, source,
-           |        floor(z * 1000000 + 0.5) / 1000000 AS z,
-           |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
-           |      FROM pz WHERE z IS NOT NULL),
-           |rk AS (SELECT lang, source, z, p,
-           |        CAST(count(*) OVER () AS BIGINT) AS m,
-           |        least(1.0, CAST(count(CASE WHEN p > 0.5 THEN 1 END) OVER () AS DOUBLE) /
-           |          (0.5 * CAST(count(*) OVER () AS DOUBLE))) AS pi0_raw,
-           |        CAST(row_number() OVER (ORDER BY p, lang, source) AS BIGINT) AS "rank"
-           |      FROM pv),
-           |adj AS (SELECT lang, source, z, p, m, "rank", pi0_raw,
-           |        least(1.0, pi0_raw * min(p * CAST(m AS DOUBLE) / CAST("rank" AS DOUBLE))
-           |          OVER (ORDER BY p, lang, source
-           |                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) AS q_raw
-           |      FROM rk),
-           |nullz AS (SELECT lang, source, CAST(NULL AS DOUBLE) AS z, CAST(NULL AS DOUBLE) AS p,
-           |        CAST(NULL AS BIGINT) AS m, CAST(NULL AS BIGINT) AS "rank",
-           |        CAST(NULL AS DOUBLE) AS pi0, CAST(NULL AS DOUBLE) AS q_storey,
-           |        CAST(NULL AS BOOLEAN) AS reject
-           |      FROM z0 WHERE z IS NULL)
-           |SELECT lang, source, z, p, m, "rank",
-           |  floor(pi0_raw * 1000000 + 0.5) / 1000000 AS pi0,
-           |  floor(q_raw * 1000000 + 0.5) / 1000000 AS q_storey, q_raw <= 0.1 AS reject
-           |FROM adj
-           |UNION ALL SELECT * FROM nullz""".stripMargin
-      },
-
-      // ---- round 10 batch Z oracles ----
-
-      "q_partial_corr" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        s"""WITH f AS (SELECT CAST(n_chars AS DOUBLE) AS x,
-           |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), t -> t <> '')) AS DOUBLE) AS y,
-           |    CAST(len(string_split(text, chr(10))) AS DOUBLE) AS z
-           |  FROM documents),
-           |g AS (SELECT * FROM f WHERE x IS NOT NULL AND NOT isnan(x)
-           |  AND y IS NOT NULL AND NOT isnan(y) AND z IS NOT NULL AND NOT isnan(z)),
-           |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-           |    ${ds("x")} AS sx, ${ds("y")} AS sy, ${ds("z")} AS sz,
-           |    ${ds("x * x")} AS qx, ${ds("y * y")} AS qy, ${ds("z * z")} AS qz,
-           |    ${ds("x * y")} AS pxy, ${ds("x * z")} AS pxz, ${ds("y * z")} AS pyz
-           |  FROM g),
-           |r AS (SELECT n,
-           |    CASE WHEN n > 1 AND CAST(n AS DOUBLE) * qx - sx * sx > 0 AND CAST(n AS DOUBLE) * qy - sy * sy > 0
-           |      THEN (CAST(n AS DOUBLE) * pxy - sx * sy) / (sqrt(CAST(n AS DOUBLE) * qx - sx * sx) * sqrt(CAST(n AS DOUBLE) * qy - sy * sy)) END AS rxy,
-           |    CASE WHEN n > 1 AND CAST(n AS DOUBLE) * qx - sx * sx > 0 AND CAST(n AS DOUBLE) * qz - sz * sz > 0
-           |      THEN (CAST(n AS DOUBLE) * pxz - sx * sz) / (sqrt(CAST(n AS DOUBLE) * qx - sx * sx) * sqrt(CAST(n AS DOUBLE) * qz - sz * sz)) END AS rxz,
-           |    CASE WHEN n > 1 AND CAST(n AS DOUBLE) * qy - sy * sy > 0 AND CAST(n AS DOUBLE) * qz - sz * sz > 0
-           |      THEN (CAST(n AS DOUBLE) * pyz - sy * sz) / (sqrt(CAST(n AS DOUBLE) * qy - sy * sy) * sqrt(CAST(n AS DOUBLE) * qz - sz * sz)) END AS ryz
-           |  FROM m)
-           |SELECT n, ${r6("rxy")} AS r_xy, ${r6("rxz")} AS r_xz, ${r6("ryz")} AS r_yz,
-           |  CASE WHEN (1.0 - rxz * rxz) * (1.0 - ryz * ryz) > 0
-           |    THEN ${r6("(rxy - rxz * ryz) / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz))")} END AS r_xy_given_z
-           |FROM r""".stripMargin
-      },
-
-      "q_peaks" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT user_id, epoch_us(ts) AS t, event_id, CAST(value AS DOUBLE) AS v
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |w AS (SELECT user_id, t, v,
-           |    list_sort(list(v) OVER (PARTITION BY user_id ORDER BY t, event_id
-           |      ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)) AS win,
-           |    lag(v) OVER (PARTITION BY user_id ORDER BY t, event_id) AS pv,
-           |    lead(v) OVER (PARTITION BY user_id ORDER BY t, event_id) AS nv
-           |  FROM b),
-           |med AS (SELECT user_id, t, v, pv, nv,
-           |    (win[(len(win) + 1) // 2] + win[len(win) // 2 + 1]) / 2.0 AS bl
-           |  FROM w)
-           |SELECT user_id, t, v, ${r6("bl")} AS baseline, ${r6("v - bl")} AS prominence
-           |FROM med
-           |WHERE pv IS NOT NULL AND nv IS NOT NULL AND v > pv AND v > nv AND v - bl >= 20.0""".stripMargin
-      },
-
-      "q_runs" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |pv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1, 2),
-           |cm AS (SELECT g, v,
-           |    CAST(sum(c) OVER (PARTITION BY g ORDER BY v) AS BIGINT) AS cw,
-           |    CAST(sum(c) OVER (PARTITION BY g) AS BIGINT) AS nn
-           |  FROM pv),
-           |med AS (SELECT g, min(CASE WHEN cw * 2 >= nn THEN v END) AS md FROM cm GROUP BY 1),
-           |sg AS (SELECT b.g, b.ts, b.event_id, b.v > med.md AS s
-           |  FROM b JOIN med ON b.g = med.g WHERE b.v <> med.md),
-           |ch AS (SELECT g, s,
-           |    CASE WHEN lag(s) OVER (PARTITION BY g ORDER BY ts, event_id) IS NULL
-           |           OR lag(s) OVER (PARTITION BY g ORDER BY ts, event_id) <> s
-           |         THEN 1 ELSE 0 END AS chg
-           |  FROM sg),
-           |t AS (SELECT b.g, CAST(count(CASE WHEN b.v = med.md THEN 1 END) AS BIGINT) AS n_ties
-           |  FROM b JOIN med ON b.g = med.g GROUP BY 1),
-           |gg AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(count(CASE WHEN s THEN 1 END) AS BIGINT) AS n_above,
-           |    CAST(count(CASE WHEN NOT s THEN 1 END) AS BIGINT) AS n_below,
-           |    CAST(sum(chg) AS BIGINT) AS runs
-           |  FROM ch GROUP BY 1),
-           |zc AS (SELECT gg.g, n, n_above, n_below, t.n_ties, runs,
-           |    CASE WHEN n_above > 0 AND n_below > 0 AND
-           |      2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) * (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) - CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) > 0
-           |      THEN (CAST(runs AS DOUBLE) - (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) / CAST(n AS DOUBLE) + 1.0)) /
-           |        sqrt(2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) * (2.0 * CAST(n_above AS DOUBLE) * CAST(n_below AS DOUBLE) - CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)))
-           |    END AS z
-           |  FROM gg JOIN t ON gg.g = t.g),
-           |pz AS (SELECT g, n, n_above, n_below, n_ties, runs, z, abs(z) AS az,
-           |    1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM zc)
-           |SELECT g AS event_type, n, n_above, n_below, n_ties AS n_ties_dropped, runs,
-           |  ${r6("z")} AS z,
-           |  CASE WHEN z IS NOT NULL THEN ${r6(pSql)} END AS p_value
-           |FROM pz""".stripMargin
-      },
-
-      "q_gains" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH b AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
-           |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p, doc_id
-           |  FROM documents WHERE n_chars IS NOT NULL),
-           |rk AS (SELECT lang, p,
-           |    CAST(row_number() OVER (PARTITION BY lang ORDER BY x DESC, doc_id) AS BIGINT) - 1 AS r,
-           |    CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n
-           |  FROM b),
-           |bn AS (SELECT lang, (r * 10) // n + 1 AS bin, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(sum(p) AS BIGINT) AS n_pos
-           |  FROM rk GROUP BY 1, 2),
-           |c AS (SELECT lang, bin, n, n_pos,
-           |    CAST(sum(n_pos) OVER (PARTITION BY lang ORDER BY bin) AS BIGINT) AS cp,
-           |    CAST(sum(n) OVER (PARTITION BY lang ORDER BY bin) AS BIGINT) AS cn,
-           |    CAST(sum(n_pos) OVER (PARTITION BY lang) AS BIGINT) AS tp,
-           |    CAST(sum(n) OVER (PARTITION BY lang) AS BIGINT) AS tn
-           |  FROM bn)
-           |SELECT lang, CAST(bin AS BIGINT) AS bin, n, n_pos,
-           |  CASE WHEN tp > 0 THEN ${r6("CAST(cp AS DOUBLE) / CAST(tp AS DOUBLE)")} END AS cum_capture,
-           |  CASE WHEN tp > 0 THEN ${r6("(CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)) / (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE))")} END AS cum_lift
-           |FROM c""".stripMargin
-      },
-
-      "q_burrows" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        s"""WITH toks AS (SELECT source AS s,
-           |    unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS w
-           |  FROM documents),
-           |counts AS (SELECT s, w, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1, 2),
-           |totals AS (SELECT s, CAST(sum(c) AS BIGINT) AS tot FROM counts GROUP BY 1),
-           |top AS (SELECT w FROM (SELECT w, sum(c) AS cw FROM counts GROUP BY 1
-           |    ORDER BY cw DESC, w LIMIT 50)),
-           |grid AS (SELECT totals.s, top.w,
-           |    CAST(coalesce(counts.c, 0) AS DOUBLE) / CAST(totals.tot AS DOUBLE) AS f
-           |  FROM totals CROSS JOIN top
-           |  LEFT JOIN counts ON counts.s = totals.s AND counts.w = top.w),
-           |st AS (SELECT w, CAST(count(*) AS BIGINT) AS k, ${ds("f")} AS sf, ${ds("f * f")} AS qf
-           |  FROM grid GROUP BY 1),
-           |z AS (SELECT grid.s, grid.w,
-           |    CASE WHEN sqrt(greatest(qf / CAST(k AS DOUBLE) - (sf / CAST(k AS DOUBLE)) * (sf / CAST(k AS DOUBLE)), 0.0)) > 0
-           |      THEN ${r6("(f - sf / CAST(k AS DOUBLE)) / sqrt(greatest(qf / CAST(k AS DOUBLE) - (sf / CAST(k AS DOUBLE)) * (sf / CAST(k AS DOUBLE)), 0.0))")}
-           |      ELSE 0.0 END AS z
-           |  FROM grid JOIN st USING (w))
-           |SELECT a.s AS source_a, b.s AS source_b, CAST(count(*) AS BIGINT) AS n_words,
-           |  ${r6(s"(${ds("abs(a.z - b.z)")}) / CAST(count(*) AS DOUBLE)")} AS delta
-           |FROM z a JOIN z b ON a.w = b.w AND a.s < b.s
-           |GROUP BY 1, 2""".stripMargin
-      },
-
-      // ---- round 10 batch AA oracles ----
-
-      "q_hurst" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |rk AS (SELECT g, ts, event_id, v,
-           |    CAST(row_number() OVER (PARTITION BY g ORDER BY ts, event_id) AS BIGINT) - 1 AS rn FROM b),
-           |mel AS (SELECT g, ts, event_id, v, m.m AS m, (rn - rn % m.m) // m.m AS blk
-           |  FROM rk, (VALUES (CAST(8 AS BIGINT)), (16), (32), (64)) m(m)),
-           |f2 AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY g, m, blk) AS bn FROM mel)
-           |  WHERE bn = m),
-           |wm AS (SELECT *, CAST(sum(CAST(v AS DECIMAL(38,6))) OVER (PARTITION BY g, m, blk) AS DOUBLE) / CAST(m AS DOUBLE) AS mn FROM f2),
-           |cum AS (SELECT *, CAST(sum(CAST(${r6("v - mn")} AS DECIMAL(38,6)))
-           |    OVER (PARTITION BY g, m, blk ORDER BY ts, event_id
-           |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cumv FROM wm),
-           |pb AS (SELECT g, m, blk, max(cumv) - min(cumv) AS r,
-           |    sqrt(greatest(${ds("(v - mn) * (v - mn)")} / CAST(first(m) AS DOUBLE), 0.0)) AS sd
-           |  FROM cum GROUP BY 1, 2, 3),
-           |rs AS (SELECT g, m, r / sd AS rsv FROM pb WHERE sd > 0),
-           |ps AS (SELECT g, m, ${ds("rsv")} / CAST(count(*) AS DOUBLE) AS mrs FROM rs GROUP BY 1, 2),
-           |pts AS (SELECT g, ln(CAST(m AS DOUBLE)) AS x, ln(mrs) AS y FROM ps WHERE mrs > 0),
-           |fit AS (SELECT g, CAST(count(*) AS BIGINT) AS k_sizes,
-           |    ${ds("x")} AS sx, ${ds("y")} AS sy, ${ds("x * x")} AS qx, ${ds("x * y")} AS pxy
-           |  FROM pts GROUP BY 1),
-           |tot AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1)
-           |SELECT tot.g AS event_type, n, k_sizes,
-           |  CASE WHEN k_sizes >= 2 AND CAST(k_sizes AS DOUBLE) * qx - sx * sx > 0
-           |    THEN ${r6("(CAST(k_sizes AS DOUBLE) * pxy - sx * sy) / (CAST(k_sizes AS DOUBLE) * qx - sx * sx)")} END AS hurst
-           |FROM tot JOIN fit ON tot.g = fit.g""".stripMargin
-      },
-
-      "q_friedman" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        s"""WITH cells AS (SELECT event_type AS tr, user_id % 10 AS blk,
-           |    ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS v
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-           |  GROUP BY 1, 2),
-           |rk AS (SELECT tr, blk, v,
-           |    CAST(rank() OVER (PARTITION BY blk ORDER BY v) AS DOUBLE) +
-           |      (CAST(count(*) OVER (PARTITION BY blk, v) AS DOUBLE) - 1.0) / 2.0 AS ark
-           |  FROM cells),
-           |rj AS (SELECT tr, CAST(coalesce(sum(CAST(ark AS DECIMAL(38,6))), 0) AS DOUBLE) AS rjs FROM rk GROUP BY 1),
-           |shape AS (SELECT CAST(count(DISTINCT blk) AS BIGINT) AS nb, CAST(count(DISTINCT tr) AS BIGINT) AS k FROM cells),
-           |agg AS (SELECT ${ds("rjs * rjs")} AS sr2 FROM rj)
-           |SELECT 'all' AS g, nb AS n_blocks, k AS k_treatments,
-           |  CASE WHEN k >= 2 AND nb >= 2 THEN ${r6("12.0 / (CAST(nb AS DOUBLE) * CAST(k AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)) * sr2 - 3.0 * CAST(nb AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)")} END AS q,
-           |  k - 1 AS df
-           |FROM shape, agg""".stripMargin
-      },
-
-      "q_cochran_q" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        s"""WITH cells AS (SELECT event_type AS tr, user_id % 10 AS s,
-           |    CASE WHEN ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} / CAST(count(*) AS DOUBLE) > 50.0 THEN 1 ELSE 0 END AS h
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
-           |  GROUP BY 1, 2),
-           |cj AS (SELECT tr, CAST(sum(h) AS BIGINT) AS cj FROM cells GROUP BY 1),
-           |ri AS (SELECT s, CAST(sum(h) AS BIGINT) AS ri FROM cells GROUP BY 1),
-           |cs AS (SELECT CAST(sum(cj) AS BIGINT) AS t, ${ds("CAST(cj AS DOUBLE) * CAST(cj AS DOUBLE)")} AS sc2 FROM cj),
-           |rr AS (SELECT ${ds("CAST(ri AS DOUBLE) * CAST(ri AS DOUBLE)")} AS sr2 FROM ri),
-           |shape AS (SELECT CAST(count(DISTINCT s) AS BIGINT) AS ns, CAST(count(DISTINCT tr) AS BIGINT) AS k FROM cells)
-           |SELECT 'all' AS g, ns AS n_subjects, k AS k_treatments,
-           |  CASE WHEN CAST(k AS DOUBLE) * CAST(t AS DOUBLE) - sr2 > 0
-           |    THEN ${r6("(CAST(k AS DOUBLE) - 1.0) * (CAST(k AS DOUBLE) * sc2 - CAST(t AS DOUBLE) * CAST(t AS DOUBLE)) / (CAST(k AS DOUBLE) * CAST(t AS DOUBLE) - sr2)")} END AS q,
-           |  k - 1 AS df
-           |FROM shape, cs, rr""".stripMargin
-      },
-
-      "q_geo_median" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        val distTo = (m: String) =>
-          s"greatest(sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> (x[i] - $m[i]) * (x[i] - $m[i]))), (a, q) -> a + q)), 1e-9)"
-        val rounds = (1 to 5).map { r =>
-          s"""jd$r AS (SELECT ve.g, ve.x, ${distTo(s"m${r - 1}.m")} AS dd
-             |  FROM ve JOIN m${r - 1} USING (g)),
-             |w$r AS (SELECT g, CAST(coalesce(sum(CAST(${r6("1.0 / dd")} AS DECIMAL(38,18))), 0) AS DOUBLE) AS w FROM jd$r GROUP BY 1),
-             |pd$r AS (SELECT jd$r.g, i.i AS d, ${ds("x[i.i] / dd")} AS ws
-             |  FROM jd$r, range(1,65) i(i) GROUP BY 1, 2),
-             |m$r AS MATERIALIZED (SELECT pd$r.g, list(${r6("ws / w")} ORDER BY d) AS m
-             |  FROM pd$r JOIN w$r USING (g) GROUP BY 1)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ve AS MATERIALIZED (SELECT label AS g,
-           |    list_transform(range(1,65), i -> CAST(embedding[i] AS DOUBLE)) AS x
-           |  FROM embeddings WHERE embedding IS NOT NULL),
-           |pd0 AS (SELECT g, i.i AS d, ${ds("x[i.i]")} AS sv, CAST(count(*) AS BIGINT) AS cnt
-           |  FROM ve, range(1,65) i(i) GROUP BY 1, 2),
-           |m0 AS MATERIALIZED (SELECT g, list(${r6("sv / CAST(cnt AS DOUBLE)")} ORDER BY d) AS m FROM pd0 GROUP BY 1),
-           |$rounds,
-           |fin AS (SELECT ve.g, ${distTo("m5.m")} AS dd
-           |  FROM ve JOIN m5 USING (g)),
-           |res AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-           |    ${r6(s"(${ds("dd")}) / CAST(count(*) AS DOUBLE)")} AS mean_dist
-           |  FROM fin GROUP BY g)
-           |SELECT res.g AS "group", res.n, res.mean_dist,
-           |  CAST(i.i - 1 AS BIGINT) AS dim, m5.m[i.i] AS m
-           |FROM res JOIN m5 ON res.g = m5.g, range(1,65) i(i)""".stripMargin
-      },
-
-
-      "q_compact" ->
-        """SELECT user_id, event_type, event_id, ts_us, value FROM (
-          |  SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value,
-          |    row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM events) WHERE rn = 1""".stripMargin,
-
-      "q_pagerank" -> {
-        val contrib = (r: String, c: String) =>
-          s"""$c AS (SELECT e.dst AS node, sum(CAST($r.rank / deg.deg AS DECIMAL(38,12))) AS m
-             |  FROM e JOIN $r ON e.src = $r.node JOIN deg ON e.src = deg.src GROUP BY 1)""".stripMargin
-        val relax = (rPrev: String, c: String, r: String) =>
-          s"""$r AS (SELECT n.node, 0.15 + 0.85 * CAST(coalesce($c.m, 0) AS DOUBLE) AS rank
-             |  FROM n LEFT JOIN $c ON n.node = $c.node)""".stripMargin
-        s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-           |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-           |      FROM tk WHERE len(ts) >= 2),
-           |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-           |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-           |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM n),
-           |${contrib("r0", "c1")}, ${relax("r0", "c1", "r1")},
-           |${contrib("r1", "c2")}, ${relax("r1", "c2", "r2")},
-           |${contrib("r2", "c3")}, ${relax("r2", "c3", "r3")}
-           |SELECT node, floor((rank) * 1000000 + 0.5) / 1000000 AS rank FROM r3""".stripMargin
-      },
-
-      "q_mixture" -> {
-        val values = MixtureWeights.toSeq.sorted
-          .map { case (s, w) => s"('$s', CAST($w AS DOUBLE))" }.mkString(", ")
-        s"""WITH w(source, w) AS (VALUES $values),
-           |n AS (SELECT source, count(*) AS n FROM documents GROUP BY 1)
-           |SELECT doc_id, source FROM documents JOIN n USING (source) JOIN w USING (source)
-           |WHERE ${h32("concat('m42','|',CAST(doc_id AS VARCHAR))")} % 1000000
-           |  < CAST(round(least(1.0, 60 * w / n) * 1000000) AS BIGINT)""".stripMargin
-      },
-
-      "q_robust_scale" ->
-        """WITH b AS (SELECT event_type, quantile_cont(value, 0.25) AS q1,
-          |  quantile_cont(value, 0.5) AS med, quantile_cont(value, 0.75) AS q3
-          |  FROM events GROUP BY 1)
-          |SELECT e.event_id, e.user_id AS patient_id, e.event_type AS code,
-          |  floor(((e.value - b.med) / nullif(b.q3 - b.q1, 0)) * 1000000 + 0.5) / 1000000 AS scaled_value
-          |FROM events e LEFT JOIN b ON e.event_type = b.event_type""".stripMargin,
-
-      "q_term_lift" ->
-        """WITH t AS (SELECT lang, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |lt AS (SELECT lang, term, count(*) AS n FROM t GROUP BY 1, 2),
-          |pg AS (SELECT lang, sum(n) AS ng FROM lt GROUP BY 1),
-          |pt AS (SELECT term, sum(n) AS nt FROM lt GROUP BY 1),
-          |tot AS (SELECT sum(n) AS nn FROM lt)
-          |SELECT lang, term, n, floor(((CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) / (CAST(nt AS DOUBLE)/CAST(nn AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS lift
-          |FROM lt JOIN pg USING (lang) JOIN pt USING (term), tot WHERE n >= 25""".stripMargin,
-
-      "q_kl" ->
-        """WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |lt AS (SELECT source, term, count(*) AS n FROM t GROUP BY 1, 2),
-          |pg AS (SELECT source, sum(n) AS ng FROM lt GROUP BY 1),
-          |pt AS (SELECT term, sum(n) AS nt FROM lt GROUP BY 1),
-          |tot AS (SELECT sum(n) AS nn FROM lt)
-          |SELECT source, floor(CAST(sum(CAST(
-          |  (CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) *
-          |  ln((CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) / (CAST(nt AS DOUBLE)/CAST(nn AS DOUBLE)))
-          |  AS DECIMAL(38,12))) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS kl
-          |FROM lt JOIN pg USING (source) JOIN pt USING (term), tot GROUP BY source""".stripMargin,
-
-      "q_squant" ->
-        """WITH x AS (SELECT vec_id, unnest(embedding) AS v, unnest(range(0, len(embedding))) AS pos FROM embeddings),
-          |b AS (SELECT pos, min(CAST(v AS DOUBLE)) AS lo, max(CAST(v AS DOUBLE)) AS hi FROM x GROUP BY 1)
-          |SELECT vec_id, pos, CASE WHEN hi > lo
-          |  THEN least(255, greatest(0, CAST(floor((CAST(v AS DOUBLE) - lo)/(hi - lo) * 255) AS BIGINT)))
-          |  ELSE 0 END AS code
-          |FROM x JOIN b USING (pos) WHERE vec_id < 20""".stripMargin,
-
-      "q_assembly" -> {
-        val values = MixtureWeights.toSeq.sorted
-          .map { case (s, w) => s"('$s', CAST($w AS DOUBLE))" }.mkString(", ")
-        s"""WITH w(source, w) AS (VALUES $values),
-           |cnt AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-           |m AS (SELECT doc_id, text FROM documents JOIN cnt USING (source) JOIN w USING (source)
-           |  WHERE ${h32("concat('a42','|',CAST(doc_id AS VARCHAR))")} % 1000000
-           |    < CAST(round(least(1.0, 120 * w / n) * 1000000) AS BIGINT)),
-           |d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM m),
-           |nn AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS L FROM d WHERE len(ts) > 0),
-           |c AS (SELECT doc_id, L,
-           |    unnest(range(0, CASE WHEN L <= 30 THEN 1 ELSE (L - 30 + 19) // 20 + 1 END)) AS chunk_seq
-           |  FROM nn),
-           |ch AS (SELECT doc_id, chunk_seq, least(L - chunk_seq*20, 30) AS n_tokens,
-           |       doc_id*100 + chunk_seq AS cid FROM c),
-           |tc AS (SELECT *, ${h32("CAST(cid AS VARCHAR)")} % 4 AS shard FROM ch)
-           |SELECT doc_id, chunk_seq, n_tokens, shard,
-           |  CAST(floor(coalesce(sum(greatest(n_tokens, 1)) OVER (PARTITION BY shard ORDER BY cid
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 500.0) AS BIGINT) AS bin
-           |FROM tc""".stripMargin
-      },
-
-      "q_upsert" ->
-        """WITH upd AS (
-          |  SELECT event_id, user_id, ts, 'upd' AS event_type, value * 2 AS value
-          |  FROM events WHERE event_id % 10 = 0
-          |  UNION ALL
-          |  SELECT event_id + 20000000, user_id, ts, 'ins' AS event_type, value
-          |  FROM events WHERE event_id % 1000 = 1)
-          |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, e.event_type, e.value
-          |FROM events e WHERE e.event_id NOT IN (SELECT event_id FROM upd)
-          |UNION ALL
-          |SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type, value FROM upd""".stripMargin,
-
-      "q_scd2" ->
-        """SELECT event_id, user_id, event_type,
-          |  epoch_us(ts) AS valid_from_us,
-          |  epoch_us(lead(ts) OVER w) AS valid_to_us,
-          |  CAST(CASE WHEN lead(ts) OVER w IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-          |FROM events WHERE ts IS NOT NULL
-          |WINDOW w AS (PARTITION BY user_id, event_type ORDER BY ts, event_id)""".stripMargin,
-
-      "q_corr" ->
-        """WITH m AS (SELECT l_returnflag, l_linestatus, count(*) AS n,
-          |  CAST(coalesce(sum(CAST(l_quantity AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-          |  CAST(coalesce(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-          |  CAST(coalesce(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-          |  CAST(coalesce(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-          |  CAST(coalesce(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
-          |  FROM lineitem GROUP BY 1, 2)
-          |SELECT l_returnflag, l_linestatus, n,
-          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) /
-          |    nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0))
-          |    * 1000000 + 0.5) / 1000000 AS corr
-          |FROM m""".stripMargin,
-
-      "q_linreg" ->
-        """WITH v AS (SELECT event_type,
-          |  CAST(epoch_us(ts) AS DOUBLE) / 86400000000.0 - 19700.0 AS x, value AS y
-          |  FROM events WHERE ts IS NOT NULL),
-          |m AS (SELECT event_type,
-          |  count(CASE WHEN y IS NOT NULL AND NOT isnan(y) THEN 1 END) AS n,
-          |  CAST(coalesce(sum(CASE WHEN y IS NOT NULL AND NOT isnan(y) THEN CAST(x AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sx,
-          |  CAST(coalesce(sum(CASE WHEN y IS NOT NULL AND NOT isnan(y) THEN CAST(y AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sy,
-          |  CAST(coalesce(sum(CASE WHEN y IS NOT NULL AND NOT isnan(y) THEN CAST(x * y AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sxy,
-          |  CAST(coalesce(sum(CASE WHEN y IS NOT NULL AND NOT isnan(y) THEN CAST(x * x AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sxx
-          |  FROM v GROUP BY 1)
-          |SELECT event_type, n,
-          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)) * 1000000 + 0.5) / 1000000 AS slope,
-          |  floor(((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)) * sx) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS intercept
-          |FROM m""".stripMargin,
-
-      "q_triangles" ->
-        """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-          |       FROM tk WHERE len(ts) >= 2),
-          |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst)
-          |SELECT e1.a AS a, e1.b AS b, e2.b AS c
-          |FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
-          |JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b""".stripMargin,
-
-      "q_novelty" ->
-        s"""WITH $shingleCtes,
-           |dft AS (SELECT sh, count(*) AS df FROM shh GROUP BY 1)
-           |SELECT id AS doc_id, count(*) AS n_shingles,
-           |  count(CASE WHEN df = 1 THEN 1 END) AS n_unique,
-           |  floor((CAST(count(CASE WHEN df = 1 THEN 1 END) AS DOUBLE) / count(*)) * 1000000 + 0.5) / 1000000 AS novelty
-           |FROM shh JOIN dft USING (sh) GROUP BY id""".stripMargin,
-
-      "q_funnel" ->
-        """WITH f AS (SELECT user_id, epoch_us(ts) AS t, event_type FROM events
-          |  WHERE ts IS NOT NULL AND event_type IN ('signup','view','purchase')),
-          |s1 AS (SELECT user_id, min(t) AS t1 FROM f WHERE event_type = 'signup' GROUP BY 1),
-          |s2 AS (SELECT f.user_id, min(t) AS t2 FROM f JOIN s1 USING (user_id)
-          |       WHERE event_type = 'view' AND t > t1 GROUP BY 1),
-          |s3 AS (SELECT f.user_id, min(t) AS t3 FROM f JOIN s2 USING (user_id)
-          |       WHERE event_type = 'purchase' AND t > t2 GROUP BY 1)
-          |SELECT s1.user_id,
-          |  CAST(1 + CASE WHEN t2 IS NULL THEN 0 ELSE 1 END
-          |         + CASE WHEN t3 IS NULL THEN 0 ELSE 1 END AS BIGINT) AS reached,
-          |  t1 AS step_1_us, t2 AS step_2_us, t3 AS step_3_us
-          |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)""".stripMargin,
-
-      "q_retention" ->
-        s"""WITH b AS (SELECT user_id, epoch_us(ts) // $WeekUs AS bucket
-           |  FROM events WHERE ts IS NOT NULL),
-           |c AS (SELECT user_id, min(bucket) AS cohort FROM b GROUP BY 1)
-           |SELECT cohort, bucket - cohort AS offset, count(DISTINCT user_id) AS n_active
-           |FROM b JOIN c USING (user_id) GROUP BY 1, 2""".stripMargin,
-
-      "q_sample_weighted" ->
-        s"""WITH p AS (SELECT doc_id, n_chars,
-           |  CAST(n_chars AS DOUBLE) /
-           |    ((${h32("concat('w42','|',CAST(doc_id AS VARCHAR))")} % 1000000 + 1) / 1000001.0) AS pri
-           |  FROM documents WHERE n_chars IS NOT NULL AND n_chars > 0)
-           |SELECT doc_id, n_chars FROM p ORDER BY pri DESC, doc_id LIMIT 100""".stripMargin,
-
-      "q_assoc" ->
-        """WITH d AS (SELECT DISTINCT user_id AS e, event_type AS i FROM events WHERE event_type IS NOT NULL),
-          |n AS (SELECT count(DISTINCT e) AS nu FROM d),
-          |s AS (SELECT i, count(*) AS n1 FROM d GROUP BY 1),
-          |p AS (SELECT a.i AS a, b.i AS b, count(*) AS n_both
-          |      FROM d a JOIN d b ON a.e = b.e AND a.i < b.i GROUP BY 1, 2 HAVING count(*) >= 5),
-          |r AS (SELECT a AS ante, b AS cons, n_both FROM p UNION ALL SELECT b, a, n_both FROM p)
-          |SELECT ante, cons, n_both,
-          |  floor((CAST(n_both AS DOUBLE) / CAST(nu AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS support,
-          |  floor((CAST(n_both AS DOUBLE) / CAST(sa.n1 AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS confidence,
-          |  floor((CAST(n_both AS DOUBLE) * CAST(nu AS DOUBLE) / (CAST(sa.n1 AS DOUBLE) * CAST(sc.n1 AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS lift
-          |FROM r JOIN s sa ON sa.i = r.ante JOIN s sc ON sc.i = r.cons, n""".stripMargin,
-
-      "q_entropy" ->
-        """WITH t AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |c AS (SELECT doc_id, term, count(*) AS n FROM t GROUP BY 1, 2),
-          |a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
-          |  CAST(sum(CAST(n * ln(CAST(n AS DOUBLE)) AS DECIMAL(38,12))) AS DOUBLE) AS snln
-          |  FROM c GROUP BY 1)
-          |SELECT doc_id, n_tokens,
-          |  floor((ln(CAST(n_tokens AS DOUBLE)) - snln / CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS entropy
-          |FROM a""".stripMargin,
-
-      "q_dsir" ->
-        """WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |c AS (SELECT term, count(*) AS nc, count(CASE WHEN tgt THEN 1 END) AS nt FROM t GROUP BY 1),
-          |tot AS (SELECT sum(nc) AS tc, sum(nt) AS tt, count(*) AS v FROM c),
-          |r AS (SELECT term,
-          |  ln(CAST(nt + 1 AS DOUBLE) / CAST(tt + v AS DOUBLE)) -
-          |  ln(CAST(nc + 1 AS DOUBLE) / CAST(tc + v AS DOUBLE)) AS lr FROM c, tot)
-          |SELECT doc_id, count(*) AS n_tokens,
-          |  floor((CAST(sum(CAST(lr AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS llr
-          |FROM t JOIN r USING (term) GROUP BY 1""".stripMargin,
-
-      "q_pct_rank" ->
-        """SELECT event_id, event_type, value,
-          |  floor(percent_rank() OVER (PARTITION BY event_type ORDER BY value) * 1000000 + 0.5) / 1000000 AS pct
-          |FROM events WHERE value IS NOT NULL AND NOT isnan(value)""".stripMargin,
-
-      "q_feature_hash" ->
-        s"""WITH t AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
-           |h AS (SELECT doc_id, ${h32("term")} AS h FROM t)
-           |SELECT doc_id, h % 64 AS bucket, CAST(sum((h // 64) % 2 * 2 - 1) AS BIGINT) AS w
-           |FROM h GROUP BY 1, 2""".stripMargin,
-
-      "q_cms" ->
-        s"""WITH d AS (SELECT unnest([0, 1, 2, 3]) AS j),
-           |s AS (SELECT j, ${h32("concat(j, '#', CAST(user_id AS VARCHAR))")} % 64 AS b, count(*) AS n
-           |  FROM events, d GROUP BY 1, 2),
-           |k AS (SELECT DISTINCT CAST(user_id AS VARCHAR) AS i FROM events),
-           |e AS (SELECT i, j, ${h32("concat(j, '#', i)")} % 64 AS b FROM k, d)
-           |SELECT i AS user_id, CAST(min(coalesce(n, 0)) AS BIGINT) AS est
-           |FROM e LEFT JOIN s USING (j, b) GROUP BY 1""".stripMargin,
-
-      "q_debounce" ->
-        """SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type
-          |FROM (SELECT event_id, user_id, ts, event_type,
-          |        lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
-          |                                ORDER BY ts, event_id) AS prev
-          |      FROM events WHERE ts IS NOT NULL)
-          |WHERE prev IS NULL OR epoch_us(ts) - prev > 3600000000
-          |UNION ALL
-          |SELECT event_id, user_id, NULL, event_type FROM events WHERE ts IS NULL""".stripMargin,
-
-      "q_impute" ->
-        """WITH v AS (SELECT event_id, event_type AS code,
-          |  CASE WHEN event_id % 97 = 0 THEN NULL ELSE value END AS value FROM events),
-          |m AS (SELECT code,
-          |  count(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN 1 END) AS n,
-          |  CAST(coalesce(sum(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN CAST(value AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s
-          |  FROM v GROUP BY 1)
-          |SELECT event_id, v.code AS code,
-          |  floor(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN value
-          |             WHEN n > 0 THEN s / n END * 1000000 + 0.5) / 1000000 AS numeric_value,
-          |  CAST(CASE WHEN (value IS NULL OR isnan(value)) AND n > 0 THEN 1 ELSE 0 END AS BIGINT) AS imputed
-          |FROM v JOIN m ON v.code IS NOT DISTINCT FROM m.code""".stripMargin,
-
-      "q_quantiles" -> {
-        // DOUBLE-cast probes: DuckDB decimal literals would interpolate
-        // on exact 0.9 while Spark interpolates on double 0.9
-        val ps = QuantilePs.map(p => s"CAST($p AS DOUBLE)").mkString("[", ", ", "]")
-        s"""WITH q AS (SELECT event_type AS code, quantile_cont(value, $ps) AS qs
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1)
-           |SELECT code, unnest($ps) AS p,
-           |  floor(unnest(qs) * 1000000 + 0.5) / 1000000 AS q
-           |FROM q""".stripMargin
-      },
-
-      "q_chi2" ->
-        """WITH c AS (SELECT lang, source, count(*) AS obs FROM documents
-          |  WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-          |ra AS (SELECT lang, CAST(sum(obs) AS BIGINT) AS na FROM c GROUP BY 1),
-          |rb AS (SELECT source, CAST(sum(obs) AS BIGINT) AS nb FROM c GROUP BY 1),
-          |t AS (SELECT CAST(sum(obs) AS BIGINT) AS n FROM c)
-          |SELECT lang, source, observed,
-          |  floor(e * 1000000 + 0.5) / 1000000 AS expected,
-          |  floor(((CAST(observed AS DOUBLE) - e) * (CAST(observed AS DOUBLE) - e) / e) * 1000000 + 0.5) / 1000000 AS chi2
-          |FROM (SELECT ra.lang, rb.source, CAST(coalesce(obs, 0) AS BIGINT) AS observed,
-          |        CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / CAST(n AS DOUBLE) AS e
-          |      FROM ra CROSS JOIN rb LEFT JOIN c ON c.lang = ra.lang AND c.source = rb.source, t)""".stripMargin,
-
-      "q_leakage" ->
-        s"""WITH $shingleCtes,
-           |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-           |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-           |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2),
-           |pr AS (SELECT ia AS id_a, ib AS id_b, floor((CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc)) * 1000000 + 0.5) / 1000000 AS jaccard
-           |  FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
-           |  WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.5)
-           |SELECT id_a, id_b,
-           |  CASE WHEN id_a % 10 < 8 THEN 'train' ELSE 'eval' END AS split_a,
-           |  CASE WHEN id_b % 10 < 8 THEN 'train' ELSE 'eval' END AS split_b,
-           |  jaccard
-           |FROM pr
-           |WHERE (CASE WHEN id_a % 10 < 8 THEN 'train' ELSE 'eval' END) <>
-           |      (CASE WHEN id_b % 10 < 8 THEN 'train' ELSE 'eval' END)""".stripMargin,
-
-      "q_trending" ->
-        """WITH c AS (SELECT epoch_us(ts) // 86400000000 AS bucket, event_type AS item, count(*) AS n
-          |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2)
-          |SELECT bucket, item, n, CAST(rnk AS BIGINT) AS rnk
-          |FROM (SELECT *, row_number() OVER (PARTITION BY bucket ORDER BY n DESC, item) AS rnk FROM c)
-          |WHERE rnk <= 3""".stripMargin,
-
-      "q_gini" ->
-        """WITH v AS (SELECT lang, CAST(n_chars AS DOUBLE) AS x,
-          |  row_number() OVER (PARTITION BY lang ORDER BY n_chars) AS i
-          |  FROM documents WHERE n_chars IS NOT NULL AND n_chars >= 0),
-          |a AS (SELECT lang, count(*) AS n,
-          |  CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS s,
-          |  CAST(sum(CAST(i * x AS DECIMAL(38,6))) AS DOUBLE) AS si FROM v GROUP BY 1)
-          |SELECT lang, n, CASE WHEN s > 0 THEN
-          |  floor((2.0 * si / (CAST(n AS DOUBLE) * s) - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |END AS gini FROM a""".stripMargin,
-
-      "q_budget_select" ->
-        """SELECT doc_id, source, n_chars FROM (
-          |  SELECT doc_id, source, n_chars,
-          |    sum(n_chars) OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id
-          |                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |  FROM documents)
-          |WHERE cum <= 4000""".stripMargin,
-
-      "q_transitions" ->
-        """WITH s AS (SELECT event_type AS prev,
-          |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next
-          |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-          |c AS (SELECT prev, next, count(*) AS n FROM s WHERE next IS NOT NULL GROUP BY 1, 2),
-          |t AS (SELECT prev, CAST(sum(n) AS BIGINT) AS nt FROM c GROUP BY 1)
-          |SELECT prev, next, n,
-          |  floor((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS p
-          |FROM c JOIN t USING (prev)""".stripMargin,
-
-      "q_dup_stats" ->
-        """WITH f AS (SELECT doc_id, source,
-          |    md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-          |  FROM documents),
-          |v AS (SELECT source,
-          |    CASE WHEN doc_id <> min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END AS vict
-          |  FROM f)
-          |SELECT source, count(*) AS n_docs, CAST(sum(vict) AS BIGINT) AS n_dups,
-          |  floor((CAST(sum(vict) AS DOUBLE) / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS dup_rate
-          |FROM v GROUP BY 1""".stripMargin,
-
-      "q_roll_z" ->
-        s"""WITH b AS (SELECT event_id, value,
-           |    count(CASE WHEN $P THEN 1 END) OVER w AS n,
-           |    CAST(coalesce(sum(CASE WHEN $P THEN CAST(value AS DECIMAL(38,6)) END) OVER w, 0) AS DOUBLE) AS s,
-           |    CAST(coalesce(sum(CASE WHEN $P THEN CAST(value * value AS DECIMAL(38,6)) END) OVER w, 0) AS DOUBLE) AS s2
-           |  FROM events WHERE ts IS NOT NULL
-           |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-           |               ROWS BETWEEN 10 PRECEDING AND 1 PRECEDING))
-           |SELECT event_id,
-           |  CASE WHEN 3 <= CAST(n AS DOUBLE) AND $P
-           |        AND sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0)) > 0
-           |  THEN floor(((value - s / CAST(n AS DOUBLE)) /
-           |    sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0)))
-           |    * 1000000 + 0.5) / 1000000
-           |  END AS z_trail
-           |FROM b""".stripMargin,
-
-      "q_source_sim" -> {
-        val unions = (0 until 16).map(j => s"SELECT g, $j AS j, m$j AS v FROM sigw")
-          .mkString(" UNION ALL ")
-        s"""WITH tk AS (SELECT source AS g, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
-           |sh0 AS (SELECT g, unnest(CASE WHEN len(toks) >= 3 THEN list_transform(range(1, len(toks)-1), i -> array_to_string(toks[i:i+2],' ')) ELSE [] END) AS shingle FROM tk),
-           |shh AS (SELECT DISTINCT g, ${h32("shingle")} AS sh FROM sh0),
-           |sigw AS (SELECT g, ${minhashAggSql(16, j => s"m$j")} FROM shh GROUP BY 1),
-           |lng AS ($unions),
-           |p AS (SELECT a.g AS g_a, b.g AS g_b, count(*) AS n_agree
-           |      FROM lng a JOIN lng b ON a.j = b.j AND a.v = b.v AND a.g < b.g GROUP BY 1, 2)
-           |SELECT g_a, g_b, n_agree,
-           |  floor((CAST(n_agree AS DOUBLE) / 16) * 1000000 + 0.5) / 1000000 AS est_jaccard
-           |FROM p""".stripMargin
-      },
-
-      "q_interarrival" ->
-        """WITH g AS (SELECT user_id,
-          |    epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-          |  FROM events WHERE ts IS NOT NULL)
-          |SELECT user_id, count(*) AS n_gaps,
-          |  floor((CAST(sum(gap) AS DOUBLE) / CAST(count(*) AS DOUBLE) / CAST(1000000 AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS mean_gap_s,
-          |  max(gap) AS max_gap_us
-          |FROM g WHERE gap IS NOT NULL GROUP BY 1""".stripMargin,
-
-      "q_sentences" ->
-        """WITH s AS (SELECT doc_id,
-          |    list_filter(list_transform(string_split_regex(text, '[.!?]+'), x -> trim(x)), x -> x <> '') AS sents
-          |  FROM documents),
-          |w AS (SELECT doc_id, CAST(len(sents) AS BIGINT) AS n_sentences,
-          |    CAST(coalesce(list_sum(list_transform(sents,
-          |      x -> len(list_filter(string_split_regex(lower(x), '[^a-z]+'), t -> t <> '')))), 0) AS BIGINT) AS n_words
-          |  FROM s)
-          |SELECT doc_id, n_sentences, n_words,
-          |  CASE WHEN n_sentences > 0 THEN
-          |    floor((CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |  END AS avg_sentence_len
-          |FROM w""".stripMargin,
-
-      "q_select_pipeline" ->
-        """WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |c AS (SELECT term, count(*) AS nc, count(CASE WHEN tgt THEN 1 END) AS nt FROM t GROUP BY 1),
-          |tot AS (SELECT sum(nc) AS tc, sum(nt) AS tt, count(*) AS v FROM c),
-          |r AS (SELECT term,
-          |  ln(CAST(nt + 1 AS DOUBLE) / CAST(tt + v AS DOUBLE)) -
-          |  ln(CAST(nc + 1 AS DOUBLE) / CAST(tc + v AS DOUBLE)) AS lr FROM c, tot),
-          |sc AS (SELECT doc_id,
-          |  CAST(sum(CAST(lr AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS llr
-          |  FROM t JOIN r USING (term) GROUP BY 1),
-          |j AS (SELECT d.doc_id, d.source, d.n_chars,
-          |        floor(llr * 1000000 + 0.5) / 1000000 AS llr
-          |      FROM documents d JOIN sc USING (doc_id)
-          |      WHERE floor(llr * 1000000 + 0.5) / 1000000 > 0.0),
-          |w AS (SELECT *, sum(n_chars) OVER (PARTITION BY source ORDER BY llr DESC, doc_id
-          |                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-          |      FROM j)
-          |SELECT doc_id, source, n_chars, llr
-          |FROM w WHERE cum <= 1500""".stripMargin,
-
-      "q_spearman" ->
-        """WITH v AS (SELECT l_returnflag, l_linestatus,
-          |    CAST(l_quantity AS DOUBLE) AS x, CAST(l_extendedprice AS DOUBLE) AS y
-          |  FROM lineitem
-          |  WHERE l_quantity IS NOT NULL AND NOT isnan(CAST(l_quantity AS DOUBLE))
-          |    AND l_extendedprice IS NOT NULL AND NOT isnan(CAST(l_extendedprice AS DOUBLE))),
-          |r AS (SELECT l_returnflag, l_linestatus,
-          |    CAST(rank() OVER (PARTITION BY l_returnflag, l_linestatus ORDER BY x) AS DOUBLE)
-          |      + CAST(count(*) OVER (PARTITION BY l_returnflag, l_linestatus, x) - 1 AS DOUBLE) / 2.0 AS rx,
-          |    CAST(rank() OVER (PARTITION BY l_returnflag, l_linestatus ORDER BY y) AS DOUBLE)
-          |      + CAST(count(*) OVER (PARTITION BY l_returnflag, l_linestatus, y) - 1 AS DOUBLE) / 2.0 AS ry
-          |  FROM v),
-          |m AS (SELECT l_returnflag, l_linestatus, count(*) AS n,
-          |  CAST(coalesce(sum(CAST(rx AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-          |  CAST(coalesce(sum(CAST(ry AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-          |  CAST(coalesce(sum(CAST(rx * ry AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-          |  CAST(coalesce(sum(CAST(rx * rx AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-          |  CAST(coalesce(sum(CAST(ry * ry AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
-          |  FROM r GROUP BY 1, 2)
-          |SELECT l_returnflag, l_linestatus, n,
-          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) /
-          |    nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0))
-          |    * 1000000 + 0.5) / 1000000 AS rho
-          |FROM m""".stripMargin,
-
-      "q_cube" ->
-        """SELECT lang, source, count(*) AS n,
-          |  CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) AS chars,
-          |  GROUPING_ID(lang, source) AS gid
-          |FROM documents GROUP BY CUBE (lang, source)""".stripMargin,
-
-      "q_eqdepth" ->
-        """WITH b AS (SELECT lang, n_chars,
-          |    CAST(ntile(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS BIGINT) AS bin
-          |  FROM documents)
-          |SELECT lang, bin, count(*) AS n, min(n_chars) AS lo, max(n_chars) AS hi
-          |FROM b GROUP BY 1, 2""".stripMargin,
-
-      "q_entity" ->
-        """WITH RECURSIVE t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
-          |tok AS (SELECT DISTINCT name, unnest(list_filter(string_split_regex(name, '[^a-z]+'), x -> x <> '')) AS tk FROM t),
-          |cand AS (SELECT DISTINCT a.name AS a_name, b.name AS b_name
-          |  FROM tok a JOIN tok b ON a.tk = b.tk AND a.name < b.name),
-          |pr AS (SELECT a_name, b_name FROM cand WHERE levenshtein(a_name, b_name) <= 4),
-          |ids AS (SELECT p_partkey AS id, lower(p_name) AS name FROM part),
-          |nm AS (SELECT name, min(id) AS nid FROM ids WHERE name <> '' GROUP BY 1),
-          |e0 AS (SELECT a.nid AS ia, b.nid AS ib FROM pr JOIN nm a ON a.name = pr.a_name
-          |       JOIN nm b ON b.name = pr.b_name),
-          |e AS (SELECT ia AS src, ib AS dst FROM e0 UNION SELECT ib, ia FROM e0),
-          |reach AS (SELECT src AS id, src AS r FROM e
-          |          UNION SELECT e.src, reach.r FROM e JOIN reach ON e.dst = reach.id),
-          |clusters AS (SELECT id AS nid, min(r) AS lbl FROM reach GROUP BY 1)
-          |SELECT ids.id, coalesce(lbl, nm.nid, ids.id) AS entity_id
-          |FROM ids LEFT JOIN nm ON nm.name = ids.name
-          |LEFT JOIN clusters ON clusters.nid = nm.nid""".stripMargin,
-
-      "q_ewma" ->
-        """WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs
-          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-          |  GROUP BY 1)
-          |SELECT user_id, CAST(len(vs) AS BIGINT) AS n,
-          |  floor(list_reduce(vs, (acc, x) -> CAST(0.3 AS DOUBLE) * x +
-          |    (CAST(1 AS DOUBLE) - CAST(0.3 AS DOUBLE)) * acc) * 1000000 + 0.5) / 1000000 AS ewma
-          |FROM s""".stripMargin,
-
-      "q_containment" ->
-        s"""WITH $shingleCtes,
-           |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-           |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-           |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2)
-           |SELECT ia AS id_a, ib AS id_b,
-           |  floor((CAST(nc AS DOUBLE) / ca.n_sh) * 1000000 + 0.5) / 1000000 AS cont_a,
-           |  floor((CAST(nc AS DOUBLE) / cb.n_sh) * 1000000 + 0.5) / 1000000 AS cont_b
-           |FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
-           |WHERE greatest(CAST(nc AS DOUBLE) / ca.n_sh, CAST(nc AS DOUBLE) / cb.n_sh) >= 0.4""".stripMargin,
-
-      "q_wow" ->
-        s"""WITH b AS (SELECT user_id, epoch_us(ts) // $WeekUs AS bucket
-           |  FROM events WHERE ts IS NOT NULL),
-           |w AS (SELECT bucket, count(DISTINCT user_id) AS n_active FROM b GROUP BY 1)
-           |SELECT w.bucket, w.n_active, p.n_active AS prev_active,
-           |  CASE WHEN p.n_active IS NOT NULL THEN
-           |    floor(((CAST(w.n_active AS DOUBLE) - CAST(p.n_active AS DOUBLE)) / CAST(p.n_active AS DOUBLE)) * 1000000 + 0.5) / 1000000
-           |  END AS pct_change
-           |FROM w LEFT JOIN w p ON p.bucket = w.bucket - 1""".stripMargin,
-
-      "q_bootstrap" ->
-        s"""WITH r AS (SELECT unnest(range(0, 16)) AS b),
-           |x AS (SELECT event_type, value, event_id, b FROM events, r
-           |      WHERE value IS NOT NULL AND NOT isnan(value)),
-           |u AS (SELECT event_type, b, value,
-           |        ((${h32("concat('b42', '|', CAST(event_id AS VARCHAR), '|', CAST(b AS VARCHAR))")} % 1000000)
-           |          + CAST(0.5 AS DOUBLE)) / CAST(1000000 AS DOUBLE) AS u
-           |      FROM x),
-           |w AS (SELECT event_type, b, value,
-           |        CASE WHEN u < CAST(0.36787944117144233 AS DOUBLE) THEN 0
-           |             WHEN u < CAST(0.7357588823428847 AS DOUBLE) THEN 1
-           |             WHEN u < CAST(0.9196986029286058 AS DOUBLE) THEN 2
-           |             WHEN u < CAST(0.9810118431238462 AS DOUBLE) THEN 3
-           |             WHEN u < CAST(0.9963401531726563 AS DOUBLE) THEN 4
-           |             WHEN u < CAST(0.9994058151824183 AS DOUBLE) THEN 5
-           |             WHEN u < CAST(0.9999167588507119 AS DOUBLE) THEN 6
-           |             ELSE 7 END AS w
-           |      FROM u),
-           |c AS (SELECT event_type, b,
-           |        CAST(sum(CAST(w * value AS DECIMAL(38,6))) AS DOUBLE) AS wx,
-           |        CAST(sum(w) AS BIGINT) AS wn
-           |      FROM w GROUP BY 1, 2),
-           |m AS (SELECT event_type, b, CASE WHEN wn > 0 THEN wx / CAST(wn AS DOUBLE) END AS m FROM c),
-           |g AS (SELECT event_type, count(m) AS bn,
-           |        CAST(sum(CAST(m AS DECIMAL(38,12))) AS DOUBLE) AS sm,
-           |        CAST(sum(CAST(m * m AS DECIMAL(38,12))) AS DOUBLE) AS sm2
-           |      FROM m GROUP BY 1),
-           |n AS (SELECT event_type, count(*) AS n FROM events
-           |      WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1)
-           |SELECT g.event_type AS code, n,
-           |  floor((sm / CAST(bn AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS mean_boot,
-           |  CASE WHEN bn > 1 THEN
-           |    floor(sqrt(greatest((sm2 - sm * sm / CAST(bn AS DOUBLE)) / CAST(bn - 1 AS DOUBLE),
-           |                        CAST(0 AS DOUBLE))) * 1000000 + 0.5) / 1000000
-           |  END AS se_boot
-           |FROM g JOIN n ON g.event_type IS NOT DISTINCT FROM n.event_type""".stripMargin,
-
-      "q_ks" ->
-        """WITH v AS (SELECT event_type, CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS a,
-          |    CAST(value AS DOUBLE) AS x
-          |  FROM events WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-          |c AS (SELECT event_type, x, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(1 - a) AS BIGINT) AS cb
-          |      FROM v GROUP BY 1, 2),
-          |w AS (SELECT event_type,
-          |        CAST(sum(ca) OVER (PARTITION BY event_type ORDER BY x) AS BIGINT) AS fa,
-          |        CAST(sum(cb) OVER (PARTITION BY event_type ORDER BY x) AS BIGINT) AS fb,
-          |        CAST(sum(ca) OVER (PARTITION BY event_type) AS BIGINT) AS na,
-          |        CAST(sum(cb) OVER (PARTITION BY event_type) AS BIGINT) AS nb
-          |      FROM c),
-          |m AS (SELECT event_type, max(na) AS n_a, max(nb) AS n_b,
-          |        max(CASE WHEN na > 0 AND nb > 0 THEN
-          |          abs(CAST(fa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE)) END) AS d0
-          |      FROM w GROUP BY 1)
-          |SELECT event_type, n_a, n_b,
-          |  floor(d0 * 1000000 + 0.5) / 1000000 AS d,
-          |  floor(sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * d0
-          |    * 1000000 + 0.5) / 1000000 AS ks
-          |FROM m""".stripMargin,
-
-      "q_mwu" ->
-        """WITH v AS (SELECT lang, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS a,
-          |    CAST(n_chars AS DOUBLE) AS x
-          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-          |r AS (SELECT lang, a,
-          |        CAST(rank() OVER (PARTITION BY lang ORDER BY x) AS DOUBLE)
-          |          + CAST(count(*) OVER (PARTITION BY lang, x) - 1 AS DOUBLE) / 2.0 AS rk,
-          |        CAST(count(*) OVER (PARTITION BY lang, x) AS BIGINT) AS c
-          |      FROM v),
-          |m AS (SELECT lang,
-          |        CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
-          |        CAST(coalesce(sum(CASE WHEN a = 1 THEN CAST(rk AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS ra,
-          |        CAST(coalesce(sum(CAST(c * c - 1 AS DECIMAL(38,6))), 0) AS DOUBLE) AS ties
-          |      FROM r GROUP BY 1),
-          |s AS (SELECT lang, n_a, n_b,
-          |        ra - CAST(n_a AS DOUBLE) * (CAST(n_a AS DOUBLE) + 1.0) / 2.0 AS u,
-          |        CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 12.0 *
-          |          ((CAST(n_a + n_b AS DOUBLE) + 1.0)
-          |            - ties / (CAST(n_a + n_b AS DOUBLE) * (CAST(n_a + n_b AS DOUBLE) - 1.0))) AS s2
-          |      FROM m)
-          |SELECT lang, n_a, n_b,
-          |  floor(u * 1000000 + 0.5) / 1000000 AS u_a,
-          |  CASE WHEN n_a > 0 AND n_b > 0 AND s2 > 0 THEN
-          |    floor((u - CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 2.0) / sqrt(s2)
-          |      * 1000000 + 0.5) / 1000000 END AS z,
-          |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-          |    floor((2.0 * u / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) - 1.0)
-          |      * 1000000 + 0.5) / 1000000 END AS delta
-          |FROM s""".stripMargin,
-
-      "q_two_prop" ->
-        """WITH v AS (SELECT lang, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS a,
-          |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS h
-          |  FROM documents),
-          |g AS (SELECT lang,
-          |        CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
-          |        CAST(coalesce(sum(CASE WHEN a = 1 THEN h END), 0) AS BIGINT) AS k_a,
-          |        CAST(coalesce(sum(CASE WHEN a = 0 THEN h END), 0) AS BIGINT) AS k_b
-          |      FROM v GROUP BY 1),
-          |e AS (SELECT lang, n_a, n_b, k_a, k_b,
-          |        CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-          |        CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-          |        CAST(k_a + k_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS pp
-          |      FROM g)
-          |SELECT lang, n_a, n_b, k_a, k_b,
-          |  CASE WHEN n_a > 0 THEN floor(pa * 1000000 + 0.5) / 1000000 END AS p_a,
-          |  CASE WHEN n_b > 0 THEN floor(pb * 1000000 + 0.5) / 1000000 END AS p_b,
-          |  CASE WHEN n_a > 0 AND n_b > 0 AND pp > 0 AND pp < 1 THEN
-          |    floor((pa - pb) / sqrt(pp * (1.0 - pp) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-          |      * 1000000 + 0.5) / 1000000 END AS z
-          |FROM e""".stripMargin,
-
-      "q_acf" ->
-        """WITH v AS (SELECT user_id, ts, event_id, CAST(value AS DOUBLE) AS x FROM events
-          |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE)) AND ts IS NOT NULL),
-          |l AS (SELECT user_id, x,
-          |        lag(x, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l1,
-          |        lag(x, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l2,
-          |        lag(x, 3) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l3
-          |      FROM v),
-          |p AS (SELECT user_id, 1 AS "lag", x, l1 AS y FROM l WHERE l1 IS NOT NULL
-          |      UNION ALL SELECT user_id, 2, x, l2 FROM l WHERE l2 IS NOT NULL
-          |      UNION ALL SELECT user_id, 3, x, l3 FROM l WHERE l3 IS NOT NULL),
-          |m AS (SELECT user_id, "lag", count(*) AS n,
-          |        CAST(coalesce(sum(CAST(x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-          |        CAST(coalesce(sum(CAST(y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-          |        CAST(coalesce(sum(CAST(x * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-          |        CAST(coalesce(sum(CAST(x * x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-          |        CAST(coalesce(sum(CAST(y * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
-          |      FROM p GROUP BY 1, 2)
-          |SELECT user_id, "lag", n,
-          |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) /
-          |    nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy),
-          |      0.0)), 0.0)) * 1000000 + 0.5) / 1000000 AS acf
-          |FROM m""".stripMargin,
-
-      "q_temperature_mix" ->
-        """WITH g AS (SELECT source, count(*) AS n_rows,
-          |        CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) AS sz
-          |      FROM documents GROUP BY 1),
-          |s AS (SELECT source, n_rows, sz, floor(sqrt(sz) * 1000000 + 0.5) / 1000000 AS sc FROM g),
-          |t AS (SELECT CAST(sum(CAST(sc AS DECIMAL(38,6))) AS DOUBLE) AS tot,
-          |             CAST(sum(CAST(sz AS DECIMAL(38,6))) AS DOUBLE) AS grand FROM s)
-          |SELECT source, n_rows, CAST(sz AS BIGINT) AS size_total,
-          |  floor(sc / nullif(tot, 0.0) * 1000000 + 0.5) / 1000000 AS weight,
-          |  CASE WHEN sz > 0 THEN
-          |    floor(sc / nullif(tot, 0.0) * grand / sz * 1000000 + 0.5) / 1000000 END AS epochs
-          |FROM s, t""".stripMargin,
-
-      "q_hard_negatives" ->
-        s"""WITH q AS (SELECT * FROM embeddings WHERE vec_id < 8),
-           |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
-           |       FROM embeddings c JOIN q ON c.vec_id <> q.vec_id),
-           |b AS (SELECT * FROM sc WHERE cos >= 0.1 AND cos < 0.6),
-           |r AS (SELECT query_id, neighbor_id,
-           |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-           |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-           |      FROM b)
-           |SELECT * FROM r WHERE "rank" <= 5""".stripMargin,
-
-      "q_kappa" ->
-        s"""WITH det AS ($langIdSelectSql),
-           |d AS (SELECT source, lang AS a, lang_pred AS b
-           |      FROM documents JOIN det USING (doc_id) WHERE lang IS NOT NULL),
-           |cells AS (SELECT source, a, b, CAST(count(*) AS BIGINT) AS c FROM d GROUP BY 1, 2, 3),
-           |base AS (SELECT source, CAST(sum(c) AS BIGINT) AS n,
-           |        CAST(coalesce(sum(CASE WHEN a = b THEN c END), 0) AS BIGINT) AS diag
-           |      FROM cells GROUP BY 1),
-           |ma AS (SELECT source, a AS l, CAST(sum(c) AS BIGINT) AS ca FROM cells GROUP BY 1, 2),
-           |mb AS (SELECT source, b AS l, CAST(sum(c) AS BIGINT) AS cb FROM cells GROUP BY 1, 2),
-           |pe AS (SELECT ma.source, CAST(coalesce(sum(CAST(ca * cb AS DECIMAL(38,0))), 0) AS DOUBLE) AS pen
-           |      FROM ma JOIN mb ON ma.source = mb.source AND ma.l = mb.l GROUP BY 1),
-           |r AS (SELECT base.source, n,
-           |        CAST(diag AS DOUBLE) / CAST(n AS DOUBLE) AS po0,
-           |        coalesce(pen, 0.0) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS pe0
-           |      FROM base LEFT JOIN pe ON base.source = pe.source)
-           |SELECT source, n,
-           |  floor(po0 * 1000000 + 0.5) / 1000000 AS po,
-           |  floor(pe0 * 1000000 + 0.5) / 1000000 AS pe,
-           |  floor((po0 - pe0) / nullif(1.0 - pe0, 0.0) * 1000000 + 0.5) / 1000000 AS kappa
-           |FROM r""".stripMargin,
-
-      "q_wilson" ->
-        """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
-          |        CAST(count(CASE WHEN lang = 'en' THEN 1 END) AS BIGINT) AS k
-          |      FROM documents GROUP BY 1),
-          |e AS (SELECT source, n, k,
-          |        CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-          |        CAST(1.96 AS DOUBLE) * CAST(1.96 AS DOUBLE) AS z2,
-          |        CAST(n AS DOUBLE) AS nd
-          |      FROM g),
-          |w AS (SELECT source, n, k, p,
-          |        (p + z2 / (2.0 * nd)) / (1.0 + z2 / nd) AS center,
-          |        CAST(1.96 AS DOUBLE) * sqrt(p * (1.0 - p) / nd + z2 / (4.0 * nd * nd))
-          |          / (1.0 + z2 / nd) AS half
-          |      FROM e)
-          |SELECT source, n, k,
-          |  floor(p * 1000000 + 0.5) / 1000000 AS p,
-          |  floor((center - half) * 1000000 + 0.5) / 1000000 AS lo,
-          |  floor((center + half) * 1000000 + 0.5) / 1000000 AS hi
-          |FROM w""".stripMargin,
-
-      "q_oov" ->
-        """WITH d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |tk AS (SELECT unnest(ts) AS word FROM d),
-          |c AS (SELECT word, count(*) AS n FROM tk GROUP BY 1),
-          |v AS (SELECT word FROM c WHERE n >= 2 ORDER BY n DESC, word LIMIT 1000),
-          |p AS (SELECT doc_id, unnest(ts) AS word FROM d),
-          |j AS (SELECT p.doc_id, CASE WHEN v.word IS NULL THEN 1 ELSE 0 END AS oov
-          |      FROM p LEFT JOIN v USING (word))
-          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens, CAST(sum(oov) AS BIGINT) AS n_oov,
-          |  floor(CAST(sum(oov) AS DOUBLE) / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS oov_rate
-          |FROM j GROUP BY 1""".stripMargin,
-
-      "q_auc" ->
-        """WITH v AS (SELECT lang, CAST(n_chars AS DOUBLE) AS x,
-          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
-          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-          |r AS (SELECT lang, p,
-          |        CAST(rank() OVER (PARTITION BY lang ORDER BY x) AS DOUBLE)
-          |          + CAST(count(*) OVER (PARTITION BY lang, x) - 1 AS DOUBLE) / 2.0 AS rk
-          |      FROM v),
-          |m AS (SELECT lang, CAST(sum(p) AS BIGINT) AS n_pos, CAST(sum(1 - p) AS BIGINT) AS n_neg,
-          |        CAST(coalesce(sum(CASE WHEN p = 1 THEN CAST(rk AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS rp
-          |      FROM r GROUP BY 1)
-          |SELECT lang, n_pos, n_neg,
-          |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-          |    floor((rp - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0)
-          |      / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) * 1000000 + 0.5) / 1000000 END AS auc
-          |FROM m""".stripMargin,
-
-      "q_calibration" ->
-        """WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
-          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p FROM documents),
-          |g AS (SELECT lang, least(9, greatest(0, CAST(floor(x * 10) AS BIGINT))) AS bin,
-          |        CAST(count(*) AS BIGINT) AS n,
-          |        CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-          |        CAST(sum(p) AS BIGINT) AS k
-          |      FROM v GROUP BY 1, 2),
-          |b AS (SELECT lang, bin, n, sx / CAST(n AS DOUBLE) AS conf0,
-          |        CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS acc0 FROM g),
-          |e AS (SELECT lang, bin, n, conf0, acc0,
-          |        CAST(sum(CAST(floor(CAST(n AS DOUBLE) * abs(acc0 - conf0) * 1000000 + 0.5) / 1000000
-          |          AS DECIMAL(38,6))) OVER (PARTITION BY lang) AS DOUBLE)
-          |          / CAST(sum(n) OVER (PARTITION BY lang) AS DOUBLE) AS ece0
-          |      FROM b)
-          |SELECT lang, bin, n,
-          |  floor(conf0 * 1000000 + 0.5) / 1000000 AS conf,
-          |  floor(acc0 * 1000000 + 0.5) / 1000000 AS acc,
-          |  floor(ece0 * 1000000 + 0.5) / 1000000 AS ece
-          |FROM e""".stripMargin,
-
-      "q_kruskal" ->
-        """WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x FROM documents
-          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND lang IS NOT NULL),
-          |r AS (SELECT source, arm,
-          |        CAST(rank() OVER (PARTITION BY source ORDER BY x) AS DOUBLE)
-          |          + CAST(count(*) OVER (PARTITION BY source, x) - 1 AS DOUBLE) / 2.0 AS rk,
-          |        CAST(count(*) OVER (PARTITION BY source, x) AS BIGINT) AS c
-          |      FROM v),
-          |pa AS (SELECT source, arm, CAST(count(*) AS BIGINT) AS na,
-          |        CAST(coalesce(sum(CAST(rk AS DECIMAL(38,6))), 0) AS DOUBLE) AS ra,
-          |        CAST(coalesce(sum(CAST(c * c - 1 AS DECIMAL(38,6))), 0) AS DOUBLE) AS ties
-          |      FROM r GROUP BY 1, 2),
-          |m AS (SELECT source, CAST(sum(na) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_arms,
-          |        CAST(coalesce(sum(CAST(floor(ra * ra / CAST(na AS DOUBLE) * 1000000 + 0.5) / 1000000
-          |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS rr,
-          |        CAST(coalesce(sum(CAST(ties AS DECIMAL(38,6))), 0) AS DOUBLE) AS t
-          |      FROM pa GROUP BY 1),
-          |s AS (SELECT source, n, k_arms, rr,
-          |        CAST(n AS DOUBLE) AS nd,
-          |        1.0 - t / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) AS corr
-          |      FROM m)
-          |SELECT source, n, k_arms,
-          |  CASE WHEN k_arms >= 2 AND n > 1 AND corr > 0 THEN
-          |    floor((12.0 / (nd * (nd + 1.0)) * rr - 3.0 * (nd + 1.0)) / corr * 1000000 + 0.5) / 1000000
-          |  END AS h
-          |FROM s""".stripMargin,
-
-      "q_js" ->
-        """WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |lt AS (SELECT source, term, count(*) AS n FROM t GROUP BY 1, 2),
-          |pg AS (SELECT source, sum(n) AS ng FROM lt GROUP BY 1),
-          |pt AS (SELECT term, sum(n) AS nt FROM lt GROUP BY 1),
-          |tot AS (SELECT sum(n) AS nn FROM lt),
-          |j AS (SELECT source, ng, nn - ng AS nr,
-          |        CAST(n AS DOUBLE) / CAST(ng AS DOUBLE) AS p,
-          |        CASE WHEN nn - ng > 0 THEN CAST(nt - n AS DOUBLE) / CAST(nn - ng AS DOUBLE) ELSE 0.0 END AS q
-          |      FROM lt JOIN pg USING (source) JOIN pt USING (term), tot),
-          |terms AS (SELECT source, nr,
-          |        CAST(p / 2.0 * ln(p / ((p + q) / 2.0))
-          |          + CASE WHEN q > 0 THEN q / 2.0 * ln(q / ((p + q) / 2.0)) ELSE 0.0 END
-          |          AS DECIMAL(38,12)) AS js_t,
-          |        CAST(q AS DECIMAL(38,12)) AS qin
-          |      FROM j),
-          |m AS (SELECT source, max(nr) AS nr, CAST(sum(js_t) AS DOUBLE) AS s,
-          |        CAST(sum(qin) AS DOUBLE) AS qi
-          |      FROM terms GROUP BY 1)
-          |SELECT source,
-          |  CASE WHEN nr > 0 THEN
-          |    floor((s + ln(2.0) / 2.0 * (1.0 - qi)) * 1000000 + 0.5) / 1000000 END AS js
-          |FROM m""".stripMargin,
-
-      "q_adamic" ->
-        """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-          |       FROM tk WHERE len(ts) >= 2),
-          |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
-          |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d
-          |        FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-          |adj AS (SELECT a AS z, b AS x FROM e UNION ALL SELECT b, a FROM e),
-          |c AS (SELECT adj.z, adj.x, deg.d FROM adj JOIN deg ON adj.z = deg.node
-          |      WHERE deg.d >= 2 AND deg.d <= 64),
-          |p AS (SELECT l.x AS a, r.x AS b,
-          |        CAST(CAST(1 AS DOUBLE) / ln(CAST(l.d AS DOUBLE)) AS DECIMAL(38,12)) AS t
-          |      FROM c l JOIN c r ON l.z = r.z AND l.x < r.x),
-          |g AS (SELECT a, b, CAST(count(*) AS BIGINT) AS n_common, CAST(sum(t) AS DOUBLE) AS score
-          |      FROM p GROUP BY 1, 2),
-          |x2 AS (SELECT g.a, g.b, g.n_common, g.score FROM g
-          |       LEFT JOIN e ON g.a = e.a AND g.b = e.b WHERE e.a IS NULL)
-          |SELECT a, b, n_common, floor(score * 1000000 + 0.5) / 1000000 AS score
-          |FROM x2 WHERE n_common >= 2""".stripMargin,
-
-      "q_hits" -> {
-        val mass = (prev: String, inKey: String, outKey: String, c: String) =>
-          s"""${c}m AS (SELECT e.$outKey AS node, sum(CAST($prev.s AS DECIMAL(27,12)) * CAST(e.w AS DECIMAL(10,0))) AS m
-             |  FROM e JOIN $prev ON e.$inKey = $prev.node GROUP BY 1),
-             |${c}t AS (SELECT sum(m) AS t FROM ${c}m),
-             |$c AS (SELECT n.node, CASE WHEN t IS NOT NULL AND t <> 0
-             |    THEN CAST(coalesce(m, 0) AS DOUBLE) / CAST(t AS DOUBLE) ELSE 0.0 END AS s
-             |  FROM n LEFT JOIN ${c}m ON n.node = ${c}m.node, ${c}t)""".stripMargin
-        s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-           |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-           |       FROM tk WHERE len(ts) >= 2),
-           |e AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM ed GROUP BY 1, 2),
-           |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-           |h0 AS (SELECT node, CAST(1 AS DOUBLE) AS s FROM n),
-           |${mass("h0", "src", "dst", "a1")},
-           |${mass("a1", "dst", "src", "h1")},
-           |${mass("h1", "src", "dst", "a2")},
-           |${mass("a2", "dst", "src", "h2")}
-           |SELECT n.node,
-           |  floor(a2.s * 1000000 + 0.5) / 1000000 AS auth,
-           |  floor(h2.s * 1000000 + 0.5) / 1000000 AS hub
-           |FROM n JOIN a2 ON n.node = a2.node JOIN h2 ON n.node = h2.node""".stripMargin
-      },
-
-      "q_skew_audit" -> {
-        val audit = (keyCol: String, c: String) =>
-          s"""${c}c AS (SELECT CAST($keyCol AS VARCHAR) AS key, CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1),
-             |${c}s AS (SELECT CAST(sum(n) AS BIGINT) AS n_rows, CAST(count(*) AS BIGINT) AS n_keys,
-             |        CAST(max(n) AS BIGINT) AS max_n FROM ${c}c),
-             |${c}t AS (SELECT '$keyCol' AS key_col,
-             |        CAST(row_number() OVER (ORDER BY n DESC, key) AS BIGINT) AS "rank", key, n
-             |      FROM ${c}c ORDER BY n DESC, key LIMIT 5),
-             |$c AS (SELECT key_col, "rank", key, n,
-             |        CAST(n AS DOUBLE) / CAST(n_rows AS DOUBLE) AS share, n_rows, n_keys,
-             |        CAST(max_n AS DOUBLE) / (CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE)) AS skew,
-             |        CAST(ceil(CAST(max_n AS DOUBLE) / (CAST(n_rows AS DOUBLE) / CAST(n_keys AS DOUBLE))) AS BIGINT) AS salts
-             |      FROM ${c}t, ${c}s)""".stripMargin
-        s"""WITH ${audit("event_type", "r1")},
-           |${audit("user_id", "r2")},
-           |u AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2)
-           |SELECT key_col, "rank", key, n,
-           |  floor(share * 1000000 + 0.5) / 1000000 AS share, n_rows, n_keys,
-           |  floor(skew * 1000000 + 0.5) / 1000000 AS skew, salts
-           |FROM u""".stripMargin
-      },
-
-      "q_qnorm" -> {
-        val probes = (1 to 20).map(b => s"CAST($b AS DOUBLE) / 20").mkString("[", ", ", "]")
-        s"""WITH v AS (SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS value FROM documents
-           |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |ref AS (SELECT quantile_cont(value, $probes) AS r FROM v),
-           |p AS (SELECT doc_id, source, value,
-           |        percent_rank() OVER (PARTITION BY source ORDER BY value, doc_id) AS pr
-           |      FROM v),
-           |b AS (SELECT doc_id, source, value, pr,
-           |        greatest(1, least(20, CAST(ceil(pr * 20) AS BIGINT))) AS bin
-           |      FROM p)
-           |SELECT doc_id, source, value,
-           |  floor(pr * 1000000 + 0.5) / 1000000 AS pr, bin,
-           |  floor(r[CAST(bin AS INT)] * 1000000 + 0.5) / 1000000 AS norm
-           |FROM b, ref""".stripMargin
-      },
-
-      "q_fertility" ->
-        """WITH v AS (SELECT lang,
-          |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS BIGINT) AS w,
-          |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS t,
-          |    CAST(strlen(text) AS BIGINT) AS b
-          |  FROM documents),
-          |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(w) AS BIGINT) AS n_words,
-          |        CAST(sum(t) AS BIGINT) AS n_tokens, CAST(sum(b) AS BIGINT) AS n_bytes
-          |      FROM v GROUP BY 1)
-          |SELECT lang, n_docs, n_words, n_tokens, n_bytes,
-          |  CASE WHEN n_words > 0 THEN
-          |    floor(CAST(n_tokens AS DOUBLE) / CAST(n_words AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS fertility,
-          |  CASE WHEN n_tokens > 0 THEN
-          |    floor(CAST(n_bytes AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS bytes_per_token
-          |FROM g""".stripMargin,
-
-      "q_seasonality" ->
-        s"""WITH h AS (SELECT event_type, CAST(hour(ts) AS BIGINT) AS hr, CAST(count(*) AS BIGINT) AS cnt
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-           |w AS (SELECT event_type, hr, cnt,
-           |        CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-           |        row_number() OVER (PARTITION BY event_type ORDER BY cnt DESC, hr) AS rk
-           |      FROM h),
-           |t AS (SELECT event_type, hr, cnt, n, rk, CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE) AS sh FROM w),
-           |m AS (SELECT event_type, max(n) AS n,
-           |        max(CASE WHEN rk = 1 THEN hr END) AS peak_hour,
-           |        max(CASE WHEN rk = 1 THEN sh END) AS ps,
-           |        CAST(sum(CAST(floor(-sh * ln(sh) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS hsum
-           |      FROM t GROUP BY 1)
-           |SELECT event_type, n, peak_hour,
-           |  floor(ps * 1000000 + 0.5) / 1000000 AS peak_share,
-           |  floor(hsum / ${math.log(24.0)} * 1000000 + 0.5) / 1000000 AS entropy_norm
-           |FROM m""".stripMargin,
-
-      "q_cuped" -> {
-        val okx = "x IS NOT NULL AND NOT isnan(x)"
-        s"""WITH u0 AS (SELECT event_type, user_id,
-           |    CASE WHEN hour(ts) < 12 THEN 1 ELSE 0 END AS pre,
-           |    CAST(value AS DOUBLE) AS x,
-           |    CASE WHEN ${h32("concat('cu|', CAST(user_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a
-           |  FROM events),
-           |u AS (SELECT event_type, user_id,
-           |    CASE WHEN count(CASE WHEN pre = 1 AND $okx THEN 1 END) > 0 THEN
-           |      CAST(sum(CASE WHEN pre = 1 AND $okx THEN CAST(x AS DECIMAL(38,6)) END) AS DOUBLE)
-           |        / CAST(count(CASE WHEN pre = 1 AND $okx THEN 1 END) AS DOUBLE) END AS x0,
-           |    CASE WHEN count(CASE WHEN pre = 0 AND $okx THEN 1 END) > 0 THEN
-           |      CAST(sum(CASE WHEN pre = 0 AND $okx THEN CAST(x AS DECIMAL(38,6)) END) AS DOUBLE)
-           |        / CAST(count(CASE WHEN pre = 0 AND $okx THEN 1 END) AS DOUBLE) END AS y0,
-           |    max(a) AS a
-           |  FROM u0 GROUP BY 1, 2),
-           |f AS (SELECT event_type, a,
-           |    floor(x0 * 1000000 + 0.5) / 1000000 AS ux,
-           |    floor(y0 * 1000000 + 0.5) / 1000000 AS uy
-           |  FROM u WHERE x0 IS NOT NULL AND y0 IS NOT NULL),
-           |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_units,
-           |    CAST(coalesce(sum(CAST(ux AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-           |    CAST(coalesce(sum(CAST(uy AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-           |    CAST(coalesce(sum(CAST(ux * uy AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-           |    CAST(coalesce(sum(CAST(ux * ux AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-           |    CAST(coalesce(sum(CAST(uy * uy AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy,
-           |    CAST(sum(a) AS BIGINT) AS na,
-           |    CAST(coalesce(sum(CASE WHEN a = 1 THEN CAST(ux AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sxa,
-           |    CAST(coalesce(sum(CASE WHEN a = 1 THEN CAST(uy AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sya
-           |  FROM f GROUP BY 1),
-           |e AS (SELECT event_type, n_units, na, n_units - na AS nb,
-           |    CAST(n_units AS DOUBLE) * sxy - sx * sy AS cov,
-           |    CAST(n_units AS DOUBLE) * sxx - sx * sx AS vx,
-           |    CAST(n_units AS DOUBLE) * syy - sy * sy AS vy,
-           |    sx, sy, sxa, sya FROM m)
-           |SELECT event_type, n_units, na AS n_a, nb AS n_b,
-           |  floor(cov / nullif(vx, 0.0) * 1000000 + 0.5) / 1000000 AS theta,
-           |  CASE WHEN na > 0 AND nb > 0 THEN
-           |    floor((sya / CAST(na AS DOUBLE) - (sy - sya) / CAST(nb AS DOUBLE)) * 1000000 + 0.5) / 1000000 END AS diff_raw,
-           |  CASE WHEN na > 0 AND nb > 0 THEN
-           |    floor((sya / CAST(na AS DOUBLE) - (sy - sya) / CAST(nb AS DOUBLE)
-           |      - cov / nullif(vx, 0.0) * (sxa / CAST(na AS DOUBLE) - (sx - sxa) / CAST(nb AS DOUBLE)))
-           |      * 1000000 + 0.5) / 1000000 END AS diff_adj,
-           |  CASE WHEN vx > 0 AND vy > 0 THEN
-           |    floor(cov * cov / (vx * vy) * 1000000 + 0.5) / 1000000 END AS var_reduction
-           |FROM e""".stripMargin
-      },
-
-      "q_wins_mean" ->
-        """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x FROM events
-          |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-          |b AS (SELECT event_type, quantile_cont(x, 0.05) AS lo, quantile_cont(x, 0.95) AS hi
-          |      FROM v GROUP BY 1),
-          |c AS (SELECT v.event_type, x, lo, hi, least(greatest(x, lo), hi) AS w
-          |      FROM v JOIN b USING (event_type)),
-          |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-          |        CAST(sum(CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS s,
-          |        CAST(sum(CAST(floor(w * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sw,
-          |        max(lo) AS lo, max(hi) AS hi
-          |      FROM c GROUP BY 1)
-          |SELECT event_type, n,
-          |  floor(s / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean,
-          |  floor(sw / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS wins_mean,
-          |  floor(lo * 1000000 + 0.5) / 1000000 AS lo,
-          |  floor(hi * 1000000 + 0.5) / 1000000 AS hi
-          |FROM g""".stripMargin,
-
-      "q_hw" -> {
-        // the same fold as Ewma.holtWintersLast, DuckDB list_reduce form;
-        // state = [i, level, trend, s0..s3], every constant cast DOUBLE
-        val one = "CAST(1 AS DOUBLE)"
-        val (a, bta, g) = ("CAST(0.5 AS DOUBLE)", "CAST(0.3 AS DOUBLE)", "CAST(0.4 AS DOUBLE)")
-        val idx = "CAST(acc[1] AS BIGINT) % 4"
-        val sCur = s"acc[$idx + 4]"
-        val nl = s"($a * (x[1] - $sCur) + ($one - $a) * (acc[2] + acc[3]))"
-        val nt = s"($bta * ($nl - acc[2]) + ($one - $bta) * acc[3])"
-        val sSlots = (0 until 4).map(j =>
-          s"CASE WHEN $idx = $j THEN $g * (x[1] - $nl) + ($one - $g) * acc[${4 + j}] ELSE acc[${4 + j}] END")
-          .mkString(", ")
-        s"""WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs
-           |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
-           |  GROUP BY 1),
-           |f AS (SELECT user_id, CAST(len(vs) AS BIGINT) AS n,
-           |  list_reduce(
-           |    list_prepend([$one, CAST(vs[1] AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-           |                  CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)],
-           |      list_transform(vs[2:], v -> [CAST(v AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE),
-           |                  CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE), CAST(0 AS DOUBLE)])),
-           |    (acc, x) -> [acc[1] + $one, $nl, $nt, $sSlots]) AS st
-           |  FROM s)
-           |SELECT user_id, n,
-           |  ${graft.functions.Portable.r6Sql("st[2]")} AS level,
-           |  ${graft.functions.Portable.r6Sql("st[3]")} AS trend,
-           |  ${graft.functions.Portable.r6Sql("st[2] + st[3] + st[CAST(st[1] AS BIGINT) % 4 + 4]")} AS forecast
-           |FROM f""".stripMargin
-      },
-
-      "q_fano" ->
-        """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS BIGINT) AS c
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-          |g AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n_events,
-          |        CAST(count(*) AS BIGINT) AS n_buckets, CAST(sum(c * c) AS BIGINT) AS s2
-          |      FROM b GROUP BY 1),
-          |m AS (SELECT event_type, n_events, n_buckets, s2,
-          |        CAST(n_events AS DOUBLE) / CAST(n_buckets AS DOUBLE) AS mu FROM g)
-          |SELECT event_type, n_events, n_buckets,
-          |  floor(mu * 1000000 + 0.5) / 1000000 AS mean_per_bucket,
-          |  floor((CAST(s2 AS DOUBLE) / CAST(n_buckets AS DOUBLE) - mu * mu) / mu * 1000000 + 0.5) / 1000000 AS fano
-          |FROM m""".stripMargin,
-
-      "q_lsh_tuning" -> {
-        val agree = (0 until 8)
-          .map(j => s"CASE WHEN a.m$j = b.m$j THEN 1 ELSE 0 END").mkString(" + ")
-        val caught = (0 until 4)
-          .map(bd => (2 * bd until 2 * bd + 2).map(j => s"a.m$j = b.m$j").mkString(" AND "))
-          .mkString("(", ") OR (", ")")
-        s"""WITH sm AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 400),
-           |tk AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM sm),
-           |sh0 AS (SELECT id, unnest(CASE WHEN len(toks)>=5 THEN list_transform(range(1, len(toks)-3), i -> array_to_string(toks[i:i+4],' ')) ELSE [] END) AS shingle FROM tk),
-           |shh AS (SELECT DISTINCT id, ${h32("shingle")} AS sh FROM sh0),
-           |cnt AS (SELECT id, CAST(count(*) AS BIGINT) AS n_sh FROM shh GROUP BY 1),
-           |com AS (SELECT a.id AS ia, b.id AS ib, CAST(count(*) AS BIGINT) AS nc
-           |        FROM shh a JOIN shh b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2),
-           |jac AS (SELECT ia, ib, CAST(nc AS DOUBLE) / CAST(ca.n_sh + cb.n_sh - nc AS DOUBLE) AS jac
-           |        FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id),
-           |sg AS (SELECT id, ${minhashAggSql(8, j => s"m$j")} FROM shh GROUP BY 1),
-           |pp AS (SELECT jac.jac,
-           |        CAST($agree AS DOUBLE) / 8 AS est,
-           |        CASE WHEN $caught THEN 1 ELSE 0 END AS c
-           |      FROM jac JOIN sg a ON jac.ia = a.id JOIN sg b ON jac.ib = b.id),
-           |bn AS (SELECT least(9, CAST(floor(jac * 10) AS BIGINT)) AS bin, est, c FROM pp),
-           |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n_pairs,
-           |        CAST(sum(CAST(est AS DECIMAL(38,6))) AS DOUBLE) AS se,
-           |        CAST(sum(c) AS BIGINT) AS nc FROM bn GROUP BY 1),
-           |t AS (SELECT bin, n_pairs, se, nc,
-           |        (CAST(bin AS DOUBLE) + 0.5) / 10 AS s FROM g)
-           |SELECT bin, n_pairs,
-           |  floor(se / CAST(n_pairs AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_est,
-           |  floor(CAST(nc AS DOUBLE) / CAST(n_pairs AS DOUBLE) * 1000000 + 0.5) / 1000000 AS catch_rate,
-           |  floor((1.0 - (1.0 - s*s) * (1.0 - s*s) * (1.0 - s*s) * (1.0 - s*s)) * 1000000 + 0.5) / 1000000 AS theory
-           |FROM t""".stripMargin
-      },
-
-      "q_ppr" -> {
-        val contrib = (r: String, c: String) =>
-          s"""$c AS (SELECT e.dst AS node, sum(CAST($r.rank / deg.deg AS DECIMAL(38,12))) AS m
-             |  FROM e JOIN $r ON e.src = $r.node JOIN deg ON e.src = deg.src GROUP BY 1)""".stripMargin
-        val relax = (c: String, r: String) =>
-          s"""$r AS (SELECT ns.node, 0.15 * ns.seed + 0.85 * CAST(coalesce($c.m, 0) AS DOUBLE) AS rank
-             |  FROM ns LEFT JOIN $c ON ns.node = $c.node)""".stripMargin
-        s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-           |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-           |      FROM tk WHERE len(ts) >= 2),
-           |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-           |ns AS (SELECT node, CASE WHEN node LIKE 's%' THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END AS seed FROM n),
-           |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
-           |r0 AS (SELECT node, seed AS rank FROM ns),
-           |${contrib("r0", "c1")}, ${relax("c1", "r1")},
-           |${contrib("r1", "c2")}, ${relax("c2", "r2")},
-           |${contrib("r2", "c3")}, ${relax("c3", "r3")}
-           |SELECT node, floor((rank) * 1000000 + 0.5) / 1000000 AS rank FROM r3""".stripMargin
-      },
-
-      "q_zipf" ->
-        """WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS term FROM documents),
-          |lt AS (SELECT source, term, count(*) AS n FROM t GROUP BY 1, 2),
-          |rk AS (SELECT source, n,
-          |        row_number() OVER (PARTITION BY source ORDER BY n DESC, term) AS r
-          |      FROM lt QUALIFY r <= 200),
-          |xy AS (SELECT source,
-          |        floor(ln(CAST(r AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS x,
-          |        floor(ln(CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS y
-          |      FROM rk),
-          |m AS (SELECT source, CAST(count(*) AS BIGINT) AS n_terms,
-          |        CAST(coalesce(sum(CAST(x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-          |        CAST(coalesce(sum(CAST(y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-          |        CAST(coalesce(sum(CAST(x * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-          |        CAST(coalesce(sum(CAST(x * x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx
-          |      FROM xy GROUP BY 1),
-          |f AS (SELECT source, n_terms,
-          |        (CAST(n_terms AS DOUBLE) * sxy - sx * sy)
-          |          / nullif(CAST(n_terms AS DOUBLE) * sxx - sx * sx, 0.0) AS slope, sx, sy
-          |      FROM m)
-          |SELECT source, n_terms,
-          |  CASE WHEN n_terms >= 3 THEN floor(slope * 1000000 + 0.5) / 1000000 END AS slope,
-          |  CASE WHEN n_terms >= 3 THEN
-          |    floor((sy - slope * sx) / CAST(n_terms AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS intercept
-          |FROM f""".stripMargin,
-
-      "q_kanon" ->
-        """WITH c AS (SELECT lang, source, n_chars // 100 AS len_bucket, CAST(count(*) AS BIGINT) AS n
-          |  FROM documents GROUP BY 1, 2, 3),
-          |m AS (SELECT CAST(5 AS BIGINT) AS k,
-          |        CAST(sum(n) AS BIGINT) AS n_rows,
-          |        CAST(count(*) AS BIGINT) AS n_classes,
-          |        CAST(count(CASE WHEN n = 1 THEN 1 END) AS BIGINT) AS n_singletons,
-          |        CAST(coalesce(sum(CASE WHEN n < 5 THEN n END), 0) AS BIGINT) AS n_rows_at_risk,
-          |        CAST(min(n) AS BIGINT) AS min_class_size
-          |      FROM c)
-          |SELECT k, n_rows, n_classes, n_singletons, n_rows_at_risk, min_class_size,
-          |  floor(CAST(n_rows_at_risk AS DOUBLE) / CAST(n_rows AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_at_risk
-          |FROM m""".stripMargin,
-
-      "q_ap" ->
-        """WITH v AS (SELECT lang, doc_id, CAST(n_chars AS DOUBLE) AS x,
-          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
-          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-          |r AS (SELECT lang, p,
-          |        row_number() OVER (PARTITION BY lang ORDER BY x DESC, doc_id) AS rk,
-          |        sum(p) OVER (PARTITION BY lang ORDER BY x DESC, doc_id
-          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cp
-          |      FROM v),
-          |m AS (SELECT lang, CAST(count(*) AS BIGINT) AS n, CAST(sum(p) AS BIGINT) AS n_pos,
-          |        CAST(coalesce(sum(CASE WHEN p = 1 THEN
-          |          CAST(floor(CAST(cp AS DOUBLE) / CAST(rk AS DOUBLE) * 1000000 + 0.5) / 1000000
-          |            AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sap
-          |      FROM r GROUP BY 1)
-          |SELECT lang, n, n_pos,
-          |  CASE WHEN n_pos > 0 THEN
-          |    floor(sap / CAST(n_pos AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS ap
-          |FROM m""".stripMargin,
-
-      "q_markup" ->
-        """WITH w AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0
-          |    THEN concat('<p class="x">', text, '</p><a href="y">l</a>') ELSE text END AS t
-          |  FROM documents),
-          |s AS (SELECT doc_id, t, regexp_extract_all(t, '<[^>]*>') AS tags FROM w)
-          |SELECT doc_id,
-          |  CAST(len(tags) AS BIGINT) AS n_tags,
-          |  CAST(len(regexp_extract_all(t, '<[aA][\s>]')) AS BIGINT) AS n_links,
-          |  CAST(coalesce(length(array_to_string(tags, '')), 0) AS BIGINT) AS markup_chars,
-          |  CAST(length(regexp_replace(t, '<[^>]*>', '', 'g')) AS BIGINT) AS stripped_len,
-          |  CASE WHEN length(t) > 0 THEN
-          |    floor(CAST(length(regexp_replace(t, '<[^>]*>', '', 'g')) AS DOUBLE)
-          |      / CAST(length(t) AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS text_ratio
-          |FROM s""".stripMargin,
-
-      "q_embed_health" -> {
-        val r6t = (e: String) => s"CAST(floor(($e) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))"
-        s"""WITH x AS (SELECT label, unnest(embedding) AS v, unnest(range(0, len(embedding))) AS pos FROM embeddings),
-           |cd AS (SELECT CAST(pos AS BIGINT) AS pos,
-           |        floor(CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS m
-           |      FROM x GROUP BY 1),
-           |c AS (SELECT list(m ORDER BY pos) AS cvec FROM cd),
-           |per AS (SELECT label,
-           |        sqrt(${dotSql("embedding", "embedding")}) AS nrm,
-           |        sqrt(${dotSql("cvec", "cvec")}) AS cn,
-           |        ${dotSql("embedding", "cvec")} AS dc
-           |      FROM embeddings, c),
-           |pc AS (SELECT label, nrm,
-           |        CASE WHEN nrm > 0 AND cn > 0 THEN dc / (nrm * cn) END AS cos FROM per),
-           |m AS (SELECT label, CAST(count(*) AS BIGINT) AS n,
-           |        CAST(sum(${r6t("nrm")}) AS DOUBLE) AS sn,
-           |        CAST(sum(${r6t("nrm * nrm")}) AS DOUBLE) AS sn2,
-           |        CAST(sum(${r6t("coalesce(cos, 0.0)")}) AS DOUBLE) AS sc
-           |      FROM pc GROUP BY 1)
-           |SELECT CAST(label AS BIGINT) AS label, n,
-           |  floor(sn / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_norm,
-           |  floor(sqrt(greatest(sn2 / CAST(n AS DOUBLE)
-           |    - (sn / CAST(n AS DOUBLE)) * (sn / CAST(n AS DOUBLE)), 0.0)) * 1000000 + 0.5) / 1000000 AS std_norm,
-           |  floor(sc / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_cos
-           |FROM m""".stripMargin
-      },
-
-      "q_bh" -> {
-        // the SAME A&S 26.2.16 tail as Hypothesis.pFromZ, spelled out
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH v AS (SELECT lang, source,
-           |    CASE WHEN ${h32("concat('bh|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a,
-           |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS hit
-           |  FROM documents),
-           |g AS (SELECT lang, source,
-           |        CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
-           |        CAST(coalesce(sum(CASE WHEN a = 1 THEN hit END), 0) AS BIGINT) AS k_a,
-           |        CAST(coalesce(sum(CASE WHEN a = 0 THEN hit END), 0) AS BIGINT) AS k_b
-           |      FROM v GROUP BY 1, 2),
-           |e AS (SELECT lang, source, n_a, n_b, k_a, k_b,
-           |        CAST(k_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-           |        CAST(k_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb,
-           |        CAST(k_a + k_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS pp
-           |      FROM g),
-           |z0 AS (SELECT lang, source,
-           |        CASE WHEN n_a > 0 AND n_b > 0 AND pp > 0 AND pp < 1 THEN
-           |          (pa - pb) / sqrt(pp * (1.0 - pp) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-           |        END AS z FROM e),
-           |pz AS (SELECT lang, source, z, abs(z) AS az,
-           |        1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0),
-           |pv AS (SELECT lang, source,
-           |        floor(z * 1000000 + 0.5) / 1000000 AS z,
-           |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
-           |      FROM pz WHERE z IS NOT NULL),
-           |rk AS (SELECT lang, source, z, p,
-           |        CAST(count(*) OVER () AS BIGINT) AS m,
-           |        CAST(row_number() OVER (ORDER BY p, lang, source) AS BIGINT) AS "rank"
-           |      FROM pv),
-           |adj AS (SELECT lang, source, z, p, m, "rank",
-           |        least(1.0, min(p * CAST(m AS DOUBLE) / CAST("rank" AS DOUBLE))
-           |          OVER (ORDER BY p, lang, source
-           |                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) AS q_raw
-           |      FROM rk),
-           |nullz AS (SELECT lang, source, CAST(NULL AS DOUBLE) AS z, CAST(NULL AS DOUBLE) AS p,
-           |        CAST(NULL AS BIGINT) AS m, CAST(NULL AS BIGINT) AS "rank",
-           |        CAST(NULL AS DOUBLE) AS q, CAST(NULL AS BOOLEAN) AS reject
-           |      FROM z0 WHERE z IS NULL)
-           |SELECT lang, source, z, p, m, "rank",
-           |  floor(q_raw * 1000000 + 0.5) / 1000000 AS q, q_raw <= 0.1 AS reject
-           |FROM adj
-           |UNION ALL SELECT * FROM nullz""".stripMargin
-      },
-
-      "q_anova" ->
-        """WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x
-          |  FROM documents
-          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND lang IS NOT NULL),
-          |a AS (SELECT source, arm, CAST(count(*) AS BIGINT) AS n_a,
-          |    CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sa,
-          |    CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxxa
-          |  FROM v GROUP BY 1, 2),
-          |m AS (SELECT source, CAST(sum(n_a) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_arms,
-          |    CAST(sum(CAST(sa AS DECIMAL(38,6))) AS DOUBLE) AS s,
-          |    CAST(sum(CAST(sxxa AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-          |    CAST(sum(CAST(floor(sa * sa / CAST(n_a AS DOUBLE) * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(38,6))) AS DOUBLE) AS expl
-          |  FROM a GROUP BY 1),
-          |e AS (SELECT source, n, k_arms,
-          |    expl - s * s / CAST(n AS DOUBLE) AS ssb, sxx - expl AS ssw FROM m)
-          |SELECT source, n, k_arms,
-          |  floor(ssb * 1000000 + 0.5) / 1000000 AS ss_between,
-          |  floor(ssw * 1000000 + 0.5) / 1000000 AS ss_within,
-          |  CASE WHEN k_arms >= 2 AND n > k_arms AND ssw > 0 THEN
-          |    floor((ssb / (CAST(k_arms AS DOUBLE) - 1.0))
-          |      / (ssw / (CAST(n AS DOUBLE) - CAST(k_arms AS DOUBLE))) * 1000000 + 0.5) / 1000000
-          |  END AS f
-          |FROM e""".stripMargin,
-
-      "q_levene" ->
-        """WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x0
-          |  FROM documents
-          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND lang IS NOT NULL),
-          |md AS (SELECT source, arm, quantile_cont(x0, 0.5) AS med FROM v GROUP BY 1, 2),
-          |c AS (SELECT v.source, v.arm,
-          |    floor(abs(x0 - med) * 1000000 + 0.5) / 1000000 AS x
-          |  FROM v JOIN md USING (source, arm)),
-          |a AS (SELECT source, arm, CAST(count(*) AS BIGINT) AS n_a,
-          |    CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sa,
-          |    CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxxa
-          |  FROM c GROUP BY 1, 2),
-          |m AS (SELECT source, CAST(sum(n_a) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_arms,
-          |    CAST(sum(CAST(sa AS DECIMAL(38,6))) AS DOUBLE) AS s,
-          |    CAST(sum(CAST(sxxa AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-          |    CAST(sum(CAST(floor(sa * sa / CAST(n_a AS DOUBLE) * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(38,6))) AS DOUBLE) AS expl
-          |  FROM a GROUP BY 1),
-          |e AS (SELECT source, n, k_arms,
-          |    expl - s * s / CAST(n AS DOUBLE) AS ssb, sxx - expl AS ssw FROM m)
-          |SELECT source, n, k_arms,
-          |  floor(ssb * 1000000 + 0.5) / 1000000 AS ss_between,
-          |  floor(ssw * 1000000 + 0.5) / 1000000 AS ss_within,
-          |  CASE WHEN k_arms >= 2 AND n > k_arms AND ssw > 0 THEN
-          |    floor((ssb / (CAST(k_arms AS DOUBLE) - 1.0))
-          |      / (ssw / (CAST(n AS DOUBLE) - CAST(k_arms AS DOUBLE))) * 1000000 + 0.5) / 1000000
-          |  END AS f
-          |FROM e""".stripMargin,
-
-      "q_logrank" ->
-        s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
-           |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
-           |    max(epoch_us(ts)) AS tl,
-           |    max(CASE WHEN ${h32("concat('lr|', CAST(user_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END) AS a
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |dur AS (SELECT CAST(floor(CAST(coalesce(te, tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-           |    te IS NOT NULL AS obs, a = 1 AS ina FROM sp),
-           |cv AS (SELECT t_day,
-           |    count(CASE WHEN obs AND ina THEN 1 END) AS d_a,
-           |    count(CASE WHEN obs AND NOT ina THEN 1 END) AS d_b,
-           |    count(CASE WHEN NOT obs AND ina THEN 1 END) AS c_a,
-           |    count(CASE WHEN NOT obs AND NOT ina THEN 1 END) AS c_b
-           |  FROM dur GROUP BY 1),
-           |tot AS (SELECT sum(d_a + c_a) AS ta, sum(d_b + c_b) AS tb FROM cv),
-           |r AS (SELECT t_day, d_a, d_b, ta, tb,
-           |    ta - coalesce(sum(d_a + c_a) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nar,
-           |    tb - coalesce(sum(d_b + c_b) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nbr
-           |  FROM cv, tot),
-           |h AS (SELECT d_a, ta, tb,
-           |    CAST(d_a + d_b AS DOUBLE) AS d,
-           |    CAST(nar AS DOUBLE) AS na,
-           |    CAST(nar + nbr AS DOUBLE) AS nn
-           |  FROM r),
-           |t2 AS (SELECT d_a, ta, tb,
-           |    CASE WHEN d > 0 THEN floor(d * (na / nn) * 1000000 + 0.5) / 1000000 ELSE 0.0 END AS et,
-           |    CASE WHEN d > 0 AND nn > 1 THEN
-           |      floor(d * (na / nn) * (1.0 - na / nn) * (nn - d) / (nn - 1.0) * 1000000 + 0.5) / 1000000
-           |    ELSE 0.0 END AS vt
-           |  FROM h),
-           |agg AS (SELECT CAST(max(ta) AS BIGINT) AS n_a, CAST(max(tb) AS BIGINT) AS n_b,
-           |    CAST(sum(d_a) AS BIGINT) AS o_a,
-           |    CAST(coalesce(sum(CAST(et AS DECIMAL(38,6))), 0) AS DOUBLE) AS ea,
-           |    CAST(coalesce(sum(CAST(vt AS DECIMAL(38,6))), 0) AS DOUBLE) AS vv
-           |  FROM t2)
-           |SELECT n_a, n_b, o_a,
-           |  floor(ea * 1000000 + 0.5) / 1000000 AS e_a,
-           |  floor(vv * 1000000 + 0.5) / 1000000 AS v,
-           |  CASE WHEN n_a > 0 AND n_b > 0 AND vv > 0 THEN
-           |    floor((CAST(o_a AS DOUBLE) - ea) * (CAST(o_a AS DOUBLE) - ea) / vv * 1000000 + 0.5) / 1000000
-           |  END AS chi2
-           |FROM agg""".stripMargin,
-
-      "q_cramers_v" ->
-        """WITH cells AS (SELECT lang AS a, source AS b, CAST(count(*) AS BIGINT) AS obs
-          |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-          |ra AS (SELECT a, sum(obs) AS na FROM cells GROUP BY 1),
-          |rb AS (SELECT b, sum(obs) AS nb FROM cells GROUP BY 1),
-          |tot AS (SELECT sum(obs) AS n FROM cells),
-          |grid AS (SELECT a, b, na, nb, n FROM ra CROSS JOIN rb CROSS JOIN tot),
-          |j AS (SELECT grid.a, grid.b, coalesce(obs, 0) AS o,
-          |    CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / CAST(n AS DOUBLE) AS e
-          |  FROM grid LEFT JOIN cells ON grid.a = cells.a AND grid.b = cells.b),
-          |m AS (SELECT CAST(count(DISTINCT a) AS BIGINT) AS n_a_levels,
-          |    CAST(count(DISTINCT b) AS BIGINT) AS n_b_levels,
-          |    CAST(sum(o) AS BIGINT) AS n,
-          |    CAST(coalesce(sum(CAST(floor((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e
-          |      * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE) AS chi2
-          |  FROM j)
-          |SELECT n_a_levels, n_b_levels, n,
-          |  floor(chi2 * 1000000 + 0.5) / 1000000 AS chi2,
-          |  CASE WHEN least(n_a_levels, n_b_levels) >= 2 AND n > 0 THEN
-          |    floor(sqrt(chi2 / (CAST(n AS DOUBLE)
-          |      * (CAST(least(n_a_levels, n_b_levels) AS DOUBLE) - 1.0))) * 1000000 + 0.5) / 1000000
-          |  END AS v
-          |FROM m""".stripMargin,
-
-      "q_assortativity" ->
-        """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-          |       FROM tk WHERE len(ts) >= 2),
-          |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
-          |dg AS (SELECT node, CAST(count(*) AS BIGINT) AS d
-          |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-          |bi AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-          |j AS (SELECT CAST(du.d AS DOUBLE) AS x, CAST(dv.d AS DOUBLE) AS y
-          |  FROM bi JOIN dg du ON bi.u = du.node JOIN dg dv ON bi.v = dv.node),
-          |m AS (SELECT CAST(count(*) AS BIGINT) AS m2,
-          |    CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-          |    CAST(sum(CAST(x * y AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-          |    CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxx
-          |  FROM j),
-          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM dg)
-          |SELECT n_nodes, CAST(m2 // 2 AS BIGINT) AS n_edges,
-          |  CASE WHEN (CAST(m2 AS DOUBLE) * sxx - sx * sx) > 0 THEN
-          |    floor((CAST(m2 AS DOUBLE) * sxy - sx * sx)
-          |      / (CAST(m2 AS DOUBLE) * sxx - sx * sx) * 1000000 + 0.5) / 1000000
-          |  END AS r
-          |FROM m, nn""".stripMargin,
-
-      "q_modularity" ->
-        """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-          |       FROM tk WHERE len(ts) >= 2),
-          |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
-          |le AS (SELECT a, b, substr(a, 1, 1) AS la, substr(b, 1, 1) AS lb FROM e),
-          |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
-          |dm AS (SELECT label, CAST(count(*) AS BIGINT) AS d
-          |  FROM (SELECT la AS label FROM le UNION ALL SELECT lb FROM le) GROUP BY 1),
-          |np AS (SELECT substr(node, 1, 1) AS label, CAST(count(*) AS BIGINT) AS n_nodes
-          |  FROM (SELECT DISTINCT node FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e)) GROUP BY 1),
-          |itn AS (SELECT la AS label, CAST(count(*) AS BIGINT) AS lc FROM le WHERE la = lb GROUP BY 1),
-          |f AS (SELECT np.label, n_nodes, coalesce(lc, 0) AS n_internal,
-          |    CAST(coalesce(lc, 0) AS DOUBLE) / CAST(m AS DOUBLE) AS e_c,
-          |    CAST(d AS DOUBLE) / (2.0 * CAST(m AS DOUBLE)) AS a_c
-          |  FROM np LEFT JOIN dm USING (label) LEFT JOIN itn USING (label) CROSS JOIN m)
-          |SELECT label, n_nodes, CAST(n_internal AS BIGINT) AS n_internal,
-          |  floor(e_c * 1000000 + 0.5) / 1000000 AS e_c,
-          |  floor(a_c * 1000000 + 0.5) / 1000000 AS a_c,
-          |  floor((e_c - a_c * a_c) * 1000000 + 0.5) / 1000000 AS q_c
-          |FROM f""".stripMargin,
-
-      "q_kendall" ->
-        s"""WITH u AS (SELECT event_type, user_id,
-           |    CAST(count(*) AS BIGINT) AS x0,
-           |    CAST(coalesce(sum(CASE WHEN value IS NOT NULL AND NOT isnan(value)
-           |      THEN CAST(value AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS y0
-           |  FROM events GROUP BY 1, 2),
-           |h AS (SELECT event_type, user_id, CAST(x0 AS DOUBLE) AS x, y0 AS y,
-           |    row_number() OVER (PARTITION BY event_type
-           |      ORDER BY ${h32("concat('kt','|',event_type,'|',CAST(user_id AS VARCHAR))")}, user_id) AS rn
-           |  FROM u),
-           |sm AS (SELECT event_type, user_id, x, y FROM h WHERE rn <= 150),
-           |sz AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n FROM sm GROUP BY 1),
-           |p AS (SELECT l.event_type,
-           |    sign(l.x - r.x) AS cx, sign(l.y - r.y) AS cy
-           |  FROM sm l JOIN sm r ON l.event_type = r.event_type AND l.user_id < r.user_id),
-           |a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-           |    CAST(count(CASE WHEN cx * cy > 0 THEN 1 END) AS BIGINT) AS concordant,
-           |    CAST(count(CASE WHEN cx * cy < 0 THEN 1 END) AS BIGINT) AS discordant,
-           |    CAST(count(CASE WHEN cx = 0 THEN 1 END) AS BIGINT) AS tx,
-           |    CAST(count(CASE WHEN cy = 0 THEN 1 END) AS BIGINT) AS ty
-           |  FROM p GROUP BY 1)
-           |SELECT sz.event_type, n,
-           |  coalesce(n_pairs, 0) AS n_pairs,
-           |  coalesce(concordant, 0) AS concordant,
-           |  coalesce(discordant, 0) AS discordant,
-           |  CASE WHEN n_pairs - tx > 0 AND n_pairs - ty > 0 THEN
-           |    floor(CAST(concordant - discordant AS DOUBLE)
-           |      / sqrt(CAST(n_pairs - tx AS DOUBLE) * CAST(n_pairs - ty AS DOUBLE))
-           |      * 1000000 + 0.5) / 1000000 END AS tau_b
-           |FROM sz LEFT JOIN a USING (event_type)""".stripMargin,
-
-      "q_ljung_box" ->
-        """WITH v AS (SELECT user_id, ts, event_id, CAST(value AS DOUBLE) AS x FROM events
-          |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE)) AND ts IS NOT NULL),
-          |l AS (SELECT user_id, x,
-          |        lag(x, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l1,
-          |        lag(x, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l2,
-          |        lag(x, 3) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l3
-          |      FROM v),
-          |p AS (SELECT user_id, 1 AS lg, x, l1 AS y FROM l WHERE l1 IS NOT NULL
-          |      UNION ALL SELECT user_id, 2, x, l2 FROM l WHERE l2 IS NOT NULL
-          |      UNION ALL SELECT user_id, 3, x, l3 FROM l WHERE l3 IS NOT NULL),
-          |m AS (SELECT user_id, lg, count(*) AS n,
-          |        CAST(coalesce(sum(CAST(x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-          |        CAST(coalesce(sum(CAST(y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-          |        CAST(coalesce(sum(CAST(x * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-          |        CAST(coalesce(sum(CAST(x * x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-          |        CAST(coalesce(sum(CAST(y * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
-          |      FROM p GROUP BY 1, 2),
-          |rho AS (SELECT user_id, lg,
-          |        (CAST(n AS DOUBLE) * sxy - sx * sy) /
-          |          nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx)
-          |            * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0) AS r
-          |      FROM m),
-          |ns AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_obs FROM v GROUP BY 1),
-          |t AS (SELECT rho.user_id, n_obs,
-          |        r * r / (CAST(n_obs AS DOUBLE) - CAST(lg AS DOUBLE)) AS tt
-          |      FROM rho JOIN ns USING (user_id)),
-          |g AS (SELECT user_id, n_obs, CAST(count(*) AS BIGINT) AS n_lags,
-          |        count(CASE WHEN tt IS NULL THEN 1 END) AS bad,
-          |        CAST(coalesce(sum(CAST(floor(tt * 1000000 + 0.5) / 1000000
-          |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS s
-          |      FROM t GROUP BY 1, 2)
-          |SELECT user_id, n_obs, n_lags,
-          |  CASE WHEN bad = 0 AND n_obs > 3 THEN
-          |    floor(CAST(n_obs AS DOUBLE) * (CAST(n_obs AS DOUBLE) + 2.0) * s * 1000000 + 0.5) / 1000000
-          |  END AS q
-          |FROM g""".stripMargin,
-
-      "q_mase" ->
-        """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS DOUBLE) AS v
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-          |l AS (SELECT event_type, v,
-          |        lag(v, 1) OVER (PARTITION BY event_type ORDER BY bk) AS l1,
-          |        lag(v, 24) OVER (PARTITION BY event_type ORDER BY bk) AS lp
-          |      FROM b),
-          |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_buckets,
-          |        count(l1) AS c1, count(lp) AS cp,
-          |        CAST(coalesce(sum(CAST(floor(abs(v - l1) * 1000000 + 0.5) / 1000000
-          |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS s1,
-          |        CAST(coalesce(sum(CAST(floor(abs(v - lp) * 1000000 + 0.5) / 1000000
-          |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS sp
-          |      FROM l GROUP BY 1),
-          |e AS (SELECT event_type, n_buckets,
-          |        CASE WHEN c1 > 0 THEN s1 / CAST(c1 AS DOUBLE) END AS m1,
-          |        CASE WHEN cp > 0 THEN sp / CAST(cp AS DOUBLE) END AS mp
-          |      FROM g)
-          |SELECT event_type, n_buckets,
-          |  floor(m1 * 1000000 + 0.5) / 1000000 AS mae_naive,
-          |  floor(mp * 1000000 + 0.5) / 1000000 AS mae_seasonal,
-          |  CASE WHEN m1 > 0 THEN floor(mp / m1 * 1000000 + 0.5) / 1000000 END AS skill
-          |FROM e""".stripMargin,
-
-      "q_ccnet_buckets" ->
-        """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
-          |tf AS (SELECT id, term, count(*) AS tf FROM t GROUP BY 1, 2),
-          |tc AS (SELECT id, term, tf, sum(tf) OVER (PARTITION BY term) AS ct FROM tf),
-          |ds AS (SELECT id, sum(tf*ln(CAST(ct AS DOUBLE))) AS a, sum(tf) AS tt FROM tc GROUP BY 1),
-          |n AS (SELECT sum(tt) AS n_tokens FROM ds),
-          |sc AS (SELECT id, a/tt - ln(CAST(n_tokens AS DOUBLE)) AS lp FROM ds, n),
-          |wg AS (SELECT d.lang, sc.id, lp FROM sc JOIN documents d ON d.doc_id = sc.id),
-          |bk AS (SELECT lang, id, lp,
-          |        CAST(ntile(3) OVER (PARTITION BY lang ORDER BY lp DESC, id) AS BIGINT) AS bucket
-          |      FROM wg)
-          |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-          |  floor(CAST(sum(CAST(floor(lp * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-          |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_lp,
-          |  floor(min(lp) * 1000000 + 0.5) / 1000000 AS min_lp,
-          |  floor(max(lp) * 1000000 + 0.5) / 1000000 AS max_lp
-          |FROM bk GROUP BY 1, 2""".stripMargin,
-
-      "q_boilerplate" ->
-        """WITH w AS (SELECT doc_id, source,
-          |    concat(replace(text, ' table ', chr(10)),
-          |      CASE WHEN doc_id % 2 = 0 THEN concat(chr(10), 'copyright ', source) ELSE '' END) AS t
-          |  FROM documents),
-          |l0 AS (SELECT source, doc_id, unnest(string_split(t, chr(10))) AS line FROM w),
-          |l1 AS (SELECT DISTINCT source, doc_id, line FROM l0 WHERE trim(line) <> ''),
-          |f AS (SELECT source, line, CAST(count(*) AS BIGINT) AS n_docs FROM l1 GROUP BY 1, 2),
-          |r AS (SELECT source, line, n_docs,
-          |        CAST(row_number() OVER (PARTITION BY source ORDER BY n_docs DESC, line) AS BIGINT) AS "rank"
-          |      FROM f WHERE n_docs >= 3)
-          |SELECT source, line, n_docs, "rank" FROM r WHERE "rank" <= 5""".stripMargin,
-
-      "q_ldiv" ->
-        """WITH c AS (SELECT lang, n_chars // 100 AS len_bucket,
-          |    CAST(count(*) AS BIGINT) AS n, CAST(count(DISTINCT source) AS BIGINT) AS ndv
-          |  FROM documents GROUP BY 1, 2)
-          |SELECT CAST(3 AS BIGINT) AS l,
-          |  CAST(sum(n) AS BIGINT) AS n_rows,
-          |  CAST(count(*) AS BIGINT) AS n_classes,
-          |  CAST(count(CASE WHEN ndv < 3 THEN 1 END) AS BIGINT) AS n_classes_below_l,
-          |  CAST(coalesce(sum(CASE WHEN ndv < 3 THEN n END), 0) AS BIGINT) AS n_rows_at_risk,
-          |  CAST(min(ndv) AS BIGINT) AS min_diversity,
-          |  floor(CAST(coalesce(sum(CASE WHEN ndv < 3 THEN n END), 0) AS DOUBLE)
-          |    / CAST(sum(n) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_at_risk
-          |FROM c""".stripMargin,
-
-      "q_item_cf" ->
-        """WITH c AS (SELECT user_id AS u, event_type AS i, CAST(count(*) AS BIGINT) AS c
-          |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2),
-          |ok AS (SELECT u FROM (SELECT u, count(*) AS ni FROM c GROUP BY 1) WHERE ni <= 1000),
-          |cc AS (SELECT c.* FROM c JOIN ok USING (u)),
-          |nr AS (SELECT i, CAST(sum(c * c) AS BIGINT) AS ss FROM cc GROUP BY 1),
-          |p AS (SELECT l.i AS item_a, r.i AS item_b, CAST(count(*) AS BIGINT) AS n_users,
-          |        CAST(sum(l.c * r.c) AS BIGINT) AS dot
-          |      FROM cc l JOIN cc r ON l.u = r.u AND l.i < r.i GROUP BY 1, 2)
-          |SELECT item_a, item_b, n_users,
-          |  floor(CAST(dot AS DOUBLE) / (sqrt(CAST(na.ss AS DOUBLE)) * sqrt(CAST(nb.ss AS DOUBLE)))
-          |    * 1000000 + 0.5) / 1000000 AS cosine
-          |FROM p JOIN nr na ON p.item_a = na.i JOIN nr nb ON p.item_b = nb.i
-          |WHERE n_users >= 2""".stripMargin,
-
-      "q_lof" ->
-        s"""WITH d AS (SELECT q.vec_id AS id, c.vec_id AS nb,
-           |    sqrt(${sqDistSql("q.embedding", "c.embedding")}) AS dist
-           |  FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id),
-           |$lofTailSql""".stripMargin,
-
-      "q_lof_scalable" ->
-        s"""WITH c AS (SELECT vec_id, embedding, ${cellSqlN("embedding", 7)} AS cell FROM embeddings),
-           |p AS (SELECT vec_id AS id, embedding, xor(cell, m) AS cell
-           |      FROM c, (SELECT unnest([${graft.ann.Similarity.probeMasks(7, 1).mkString(",")}]) AS m)),
-           |d AS (SELECT p.id, c.vec_id AS nb,
-           |    sqrt(${sqDistSql("p.embedding", "c.embedding")}) AS dist
-           |  FROM p JOIN c ON c.cell = p.cell AND c.vec_id <> p.id),
-           |$lofTailSql""".stripMargin,
-
-      "q_hill" ->
-        """WITH v AS (SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS x FROM documents
-          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND CAST(n_chars AS DOUBLE) > 0.0),
-          |rk AS (SELECT source, x, row_number() OVER (PARTITION BY source ORDER BY x DESC, doc_id) AS r FROM v),
-          |top AS (SELECT * FROM rk WHERE r <= 51),
-          |g AS (SELECT source, count(*) AS nk, min(CASE WHEN r = 51 THEN x END) AS x_tail FROM top GROUP BY 1),
-          |t AS (SELECT top.source, g.nk, g.x_tail,
-          |        floor(ln(top.x / g.x_tail) * 1000000 + 0.5) / 1000000 AS tt
-          |      FROM top JOIN g USING (source) WHERE top.r <= 50 AND g.x_tail IS NOT NULL),
-          |m AS (SELECT source, nk, x_tail,
-          |        CAST(coalesce(sum(CAST(tt AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mn
-          |      FROM t GROUP BY 1, 2, 3),
-          |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM v GROUP BY 1)
-          |SELECT sz.source, sz.n, m.x_tail,
-          |  CASE WHEN m.nk = 51 AND m.mn > 0.0 THEN floor(1.0 / m.mn * 1000000 + 0.5) / 1000000 END AS alpha
-          |FROM sz LEFT JOIN m USING (source)""".stripMargin,
-
-      "q_silhouette" ->
-        s"""WITH $kmeansInitCte,
-           |d AS (SELECT e.vec_id, c0.cid, sqrt(${sqDistSql("e.embedding", "c0.embedding")}) AS dist
-           |      FROM embeddings e CROSS JOIN c0),
-           |r AS (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d),
-           |t AS (SELECT a.vec_id, a.cid, a.dist AS d1, b.dist AS d2
-           |      FROM r a JOIN r b ON a.vec_id = b.vec_id AND a.rn = 1 AND b.rn = 2),
-           |s AS (SELECT cid, d1, CASE WHEN d2 > 0.0 THEN (d2 - d1) / d2 ELSE 0.0 END AS sil FROM t)
-           |SELECT cid, CAST(count(*) AS BIGINT) AS n,
-           |  floor(CAST(sum(CAST(floor(d1 * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-           |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_d1,
-           |  floor(CAST(sum(CAST(floor(sil * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-           |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_sil
-           |FROM s GROUP BY 1""".stripMargin,
-
-      "q_davies_bouldin" ->
-        s"""WITH $kmeansInitCte,
-           |d AS (SELECT e.vec_id, c0.cid, sqrt(${sqDistSql("e.embedding", "c0.embedding")}) AS dist
-           |      FROM embeddings e CROSS JOIN c0),
-           |r AS (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d),
-           |a AS (SELECT vec_id, cid, dist AS d1 FROM r WHERE rn = 1),
-           |sc AS (SELECT cid, CAST(count(*) AS BIGINT) AS n,
-           |        CAST(sum(CAST(floor(d1 * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-           |          / CAST(count(*) AS DOUBLE) AS s_c
-           |      FROM a GROUP BY 1),
-           |sep AS (SELECT x.cid AS cid, y.cid AS cj,
-           |        sqrt(${sqDistSql("x.embedding", "y.embedding")}) AS sep_m
-           |      FROM c0 x JOIN c0 y ON x.cid <> y.cid),
-           |j AS (SELECT si.cid, si.n, si.s_c,
-           |        CASE WHEN sep.sep_m > 0.0 AND sj.s_c IS NOT NULL
-           |          THEN (si.s_c + sj.s_c) / sep.sep_m END AS ratio
-           |      FROM sc si JOIN sep ON sep.cid = si.cid LEFT JOIN sc sj ON sj.cid = sep.cj)
-           |SELECT cid, n, floor(s_c * 1000000 + 0.5) / 1000000 AS s_c,
-           |  floor(max(ratio) * 1000000 + 0.5) / 1000000 AS db
-           |FROM j GROUP BY cid, n, s_c""".stripMargin,
-
-      "q_theil_sen" ->
-        s"""WITH v AS (SELECT user_id, event_id,
-           |    CAST(epoch_us(ts) AS DOUBLE) / 86400000000.0 AS x, CAST(value AS DOUBLE) AS y
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))
-           |    AND ts IS NOT NULL AND event_id IS NOT NULL),
-           |h AS (SELECT user_id, event_id, x, y,
-           |    row_number() OVER (PARTITION BY user_id
-           |      ORDER BY ${h32("concat('theil','|',CAST(user_id AS VARCHAR),'|',CAST(event_id AS VARCHAR))")}, event_id) AS rn
-           |  FROM v),
-           |sm AS (SELECT user_id, event_id, x, y FROM h WHERE rn <= 150),
-           |sl AS (SELECT l.user_id, (r.y - l.y) / (r.x - l.x) AS s
-           |      FROM sm l JOIN sm r ON l.user_id = r.user_id
-           |        AND l.event_id < r.event_id AND l.x <> r.x),
-           |rk AS (SELECT user_id, s, row_number() OVER (PARTITION BY user_id ORDER BY s) AS rk,
-           |        count(*) OVER (PARTITION BY user_id) AS m FROM sl),
-           |mid AS (SELECT user_id, CAST(max(m) AS BIGINT) AS n_slopes, sum(s) / count(*) AS slope
-           |      FROM rk WHERE rk = (m + 1) // 2 OR rk = (m + 2) // 2 GROUP BY 1),
-           |sz AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM sm GROUP BY 1)
-           |SELECT sz.user_id, sz.n, CAST(coalesce(mid.n_slopes, 0) AS BIGINT) AS n_slopes,
-           |  floor(mid.slope * 1000000 + 0.5) / 1000000 AS slope
-           |FROM sz LEFT JOIN mid USING (user_id)""".stripMargin,
-
-      "q_mann_kendall" ->
-        s"""WITH v AS (SELECT user_id, event_id, ts, CAST(value AS DOUBLE) AS y
-           |  FROM events WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))
-           |    AND ts IS NOT NULL AND event_id IS NOT NULL),
-           |h AS (SELECT user_id, event_id, ts, y,
-           |    row_number() OVER (PARTITION BY user_id
-           |      ORDER BY ${h32("concat('mk','|',CAST(user_id AS VARCHAR),'|',CAST(event_id AS VARCHAR))")}, event_id) AS rn
-           |  FROM v),
-           |sm AS (SELECT user_id, event_id, ts, y FROM h WHERE rn <= 150),
-           |p AS (SELECT l.user_id,
-           |        CASE WHEN r.y > l.y THEN 1 WHEN r.y < l.y THEN -1 ELSE 0 END AS sg
-           |      FROM sm l JOIN sm r ON l.user_id = r.user_id
-           |        AND (l.ts < r.ts OR (l.ts = r.ts AND l.event_id < r.event_id))),
-           |sagg AS (SELECT user_id, CAST(sum(sg) AS BIGINT) AS s FROM p GROUP BY 1),
-           |t AS (SELECT user_id, y, CAST(count(*) AS BIGINT) AS c FROM sm GROUP BY 1, 2),
-           |ties AS (SELECT user_id, CAST(sum(c * (c - 1) * (2 * c + 5)) AS BIGINT) AS tsum,
-           |        CAST(sum(c) AS BIGINT) AS n FROM t GROUP BY 1),
-           |f AS (SELECT ties.user_id, n, CAST(coalesce(s, 0) AS BIGINT) AS s,
-           |    CAST(n * (n - 1) * (2 * n + 5) - tsum AS DOUBLE) / 18.0 AS var_s
-           |  FROM ties LEFT JOIN sagg USING (user_id))
-           |SELECT user_id, n, s, floor(var_s * 1000000 + 0.5) / 1000000 AS var_s,
-           |  CASE WHEN var_s > 0.0 THEN
-           |    floor((CAST(s AS DOUBLE) - CASE WHEN s > 0 THEN 1.0 WHEN s < 0 THEN -1.0 ELSE 0.0 END)
-           |      / sqrt(var_s) * 1000000 + 0.5) / 1000000 END AS z
-           |FROM f""".stripMargin,
-
-      "q_diversity" ->
-        """WITH c AS (SELECT event_type, user_id, count(*) AS k FROM events
-          |  WHERE user_id IS NOT NULL GROUP BY 1, 2),
-          |g AS (SELECT event_type, CAST(sum(k) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS richness,
-          |        CAST(sum(CAST(k AS DECIMAL(38,0)) * k) AS DOUBLE) AS sk2,
-          |        CAST(sum(CAST(floor(CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE)) * 1000000 + 0.5)
-          |          / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS skl
-          |      FROM c GROUP BY 1)
-          |SELECT event_type, n, richness,
-          |  floor((ln(CAST(n AS DOUBLE)) - skl / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS shannon,
-          |  floor(sk2 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS simpson,
-          |  floor(exp(ln(CAST(n AS DOUBLE)) - skl / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS hill1,
-          |  floor(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) / sk2 * 1000000 + 0.5) / 1000000 AS hill2
-          |FROM g""".stripMargin,
-
-      "q_rfm" ->
-        """WITH b AS (SELECT c_mktsegment AS seg, o_custkey AS entity,
-          |    max(o_orderdate) AS recency, CAST(count(*) AS BIGINT) AS frequency,
-          |    CAST(sum(CAST(floor(CAST(o_totalprice AS DOUBLE) * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(38,6))) AS DOUBLE) AS monetary
-          |  FROM orders JOIN customer ON o_custkey = c_custkey
-          |  WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
-          |  GROUP BY 1, 2)
-          |SELECT seg, entity, epoch_us(recency) AS recency_us, frequency, monetary,
-          |  CAST(ntile(5) OVER (PARTITION BY seg ORDER BY recency, entity) AS BIGINT) AS r,
-          |  CAST(ntile(5) OVER (PARTITION BY seg ORDER BY frequency, entity) AS BIGINT) AS f,
-          |  CAST(ntile(5) OVER (PARTITION BY seg ORDER BY monetary, entity) AS BIGINT) AS m,
-          |  CAST(ntile(5) OVER (PARTITION BY seg ORDER BY recency, entity) * 100
-          |    + ntile(5) OVER (PARTITION BY seg ORDER BY frequency, entity) * 10
-          |    + ntile(5) OVER (PARTITION BY seg ORDER BY monetary, entity) AS BIGINT) AS rfm
-          |FROM b""".stripMargin,
-
-      "q_epoch_alloc" -> {
-        val values = MixtureWeights.toSeq.sorted
-          .map { case (s, w) => s"('$s', CAST($w AS DOUBLE))" }.mkString(", ")
-        s"""WITH w(source, w0) AS (VALUES $values),
-           |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-           |    CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) AS tokens
-           |  FROM documents GROUP BY 1),
-           |j AS (SELECT g.source, n_rows, tokens,
-           |    CASE WHEN tokens > 0.0 THEN coalesce(w0, 0.0) ELSE 0.0 END AS w1
-           |  FROM g LEFT JOIN w ON g.source = w.source),
-           |tot AS (SELECT CAST(sum(CAST(floor(w1 * 1000000 + 0.5) / 1000000
-           |    AS DECIMAL(38,6))) AS DOUBLE) AS wtot FROM j),
-           |f AS (SELECT source, n_rows, tokens,
-           |    w1 / nullif(wtot, 0.0) AS weight,
-           |    2000000.0 * (w1 / nullif(wtot, 0.0)) AS target,
-           |    CASE WHEN tokens > 0.0
-           |      THEN least(3.0, 2000000.0 * (w1 / nullif(wtot, 0.0)) / tokens)
-           |      ELSE 0.0 END AS epochs
-           |  FROM j CROSS JOIN tot)
-           |SELECT source, n_rows, tokens,
-           |  floor(weight * 1000000 + 0.5) / 1000000 AS weight,
-           |  floor(target * 1000000 + 0.5) / 1000000 AS target_tokens,
-           |  floor(epochs * 1000000 + 0.5) / 1000000 AS epochs,
-           |  floor(epochs * tokens * 1000000 + 0.5) / 1000000 AS alloc_tokens,
-           |  floor((coalesce(target, 0.0) - epochs * tokens) * 1000000 + 0.5) / 1000000 AS unspent
-           |FROM f""".stripMargin
-      },
-
-      "q_url_canon" ->
-        """WITH u AS (SELECT doc_id,
-          |    concat(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://user:pw@' ELSE 'http://' END,
-          |      'WWW.', source, '.Example.COM',
-          |      CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':8080' END,
-          |      '/Docs/', CAST(doc_id AS VARCHAR),
-          |      CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END,
-          |      '?utm_source=feed&b=2&a=1&gclid=x',
-          |      CASE WHEN doc_id % 5 = 0 THEN '&ref=tw' ELSE '&z=9' END,
-          |      '#frag') AS url
-          |  FROM documents),
-          |p AS (SELECT doc_id,
-          |    lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-          |    lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1)) AS host,
-          |    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?[^/:?#]+:([0-9]+)', 1) AS port,
-          |    regexp_replace(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1), '/$', '') AS path,
-          |    list_sort(list_filter(string_split(regexp_extract(regexp_replace(url, '#.*$', ''), '\?(.*)', 1), '&'),
-          |      x -> x <> '' AND NOT regexp_matches(x, '^(utm_[^=]*|gclid|fbclid|msclkid|mc_eid|ref)(=.*)?$'))) AS kept
-          |  FROM u)
-          |SELECT doc_id,
-          |  CASE WHEN scheme <> '' AND host <> '' THEN
-          |    concat(scheme, '://', host,
-          |      CASE WHEN port <> '' AND NOT (scheme = 'http' AND port = '80')
-          |        AND NOT (scheme = 'https' AND port = '443') THEN concat(':', port) ELSE '' END,
-          |      path,
-          |      CASE WHEN len(kept) > 0 THEN concat('?', array_to_string(kept, '&')) ELSE '' END)
-          |  END AS canon
-          |FROM p""".stripMargin,
-
-      "q_decompose" ->
-        s"""WITH $decomposeCtesSql
-           |SELECT de.event_type, epoch_us(bk) AS bucket_us, CAST(de.phase AS BIGINT) AS phase, v,
-           |  floor(trend * 1000000 + 0.5) / 1000000 AS trend,
-           |  floor(seasonal * 1000000 + 0.5) / 1000000 AS seasonal,
-           |  floor((detr - seasonal) * 1000000 + 0.5) / 1000000 AS residual
-           |FROM de LEFT JOIN se ON de.event_type = se.event_type AND de.phase = se.phase""".stripMargin,
-
-      "q_isotonic" ->
-        """WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 2000.0) AS x,
-          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
-          |  FROM documents WHERE n_chars IS NOT NULL),
-          |b AS (SELECT lang, least(19, greatest(0, CAST(floor(x * 20) AS BIGINT))) AS bin,
-          |    CAST(count(*) AS BIGINT) AS n, CAST(sum(p) AS BIGINT) AS kk,
-          |    CAST(sum(CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sx
-          |  FROM v GROUP BY 1, 2),
-          |c AS (SELECT lang, bin, n, kk, sx,
-          |      CAST(sum(n) OVER w AS BIGINT) AS cn, CAST(sum(kk) OVER w AS BIGINT) AS ck,
-          |      CAST(sum(n) OVER w - n AS BIGINT) AS pn, CAST(sum(kk) OVER w - kk AS BIGINT) AS pk
-          |    FROM b WINDOW w AS (PARTITION BY lang ORDER BY bin
-          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-          |mn AS (SELECT i.lang, i.bin, j.bin AS jb, i.n, i.kk, i.sx,
-          |      min(CAST(r.ck - j.pk AS DOUBLE) / CAST(r.cn - j.pn AS DOUBLE)) AS m
-          |    FROM c i JOIN c j ON i.lang = j.lang AND j.bin <= i.bin
-          |      JOIN c r ON i.lang = r.lang AND r.bin >= i.bin
-          |    GROUP BY 1, 2, 3, 4, 5, 6),
-          |f AS (SELECT lang, bin, n, kk, sx, max(m) AS iso FROM mn GROUP BY 1, 2, 3, 4, 5)
-          |SELECT lang, bin, n,
-          |  floor(sx / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS conf,
-          |  floor(CAST(kk AS DOUBLE) / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS acc,
-          |  floor(iso * 1000000 + 0.5) / 1000000 AS iso
-          |FROM f""".stripMargin,
-
-      "q_emd" ->
-        """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-          |    CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS ref FROM events
-          |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-          |rng AS (SELECT event_type, min(x) AS lo, max(x) AS hi FROM v GROUP BY 1),
-          |cnt AS (SELECT v.event_type, ref,
-          |      CASE WHEN hi = lo THEN 0
-          |        ELSE CAST(least(floor((x - lo) / ((hi - lo) / 20.0)), 19.0) AS INT) END AS b,
-          |      count(*) AS n
-          |    FROM v JOIN rng USING (event_type) GROUP BY 1, 2, 3),
-          |tot AS (SELECT event_type, ref, CAST(sum(n) AS BIGINT) AS t FROM cnt GROUP BY 1, 2),
-          |grid AS (SELECT event_type, unnest(range(0, 20)) AS b
-          |    FROM (SELECT DISTINCT event_type FROM cnt)),
-          |g AS (SELECT grid.event_type, grid.b,
-          |      CAST(coalesce(cr.n, 0) AS DOUBLE) / CAST(tr.t AS DOUBLE) AS p,
-          |      CAST(coalesce(cc.n, 0) AS DOUBLE) / CAST(tc.t AS DOUBLE) AS q,
-          |      tr.t AS t_ref, tc.t AS t_cur, (rng.hi - rng.lo) / 20.0 AS w
-          |    FROM grid
-          |    LEFT JOIN cnt cr ON cr.event_type = grid.event_type AND cr.b = grid.b AND cr.ref = 1
-          |    LEFT JOIN cnt cc ON cc.event_type = grid.event_type AND cc.b = grid.b AND cc.ref = 0
-          |    LEFT JOIN tot tr ON tr.event_type = grid.event_type AND tr.ref = 1
-          |    LEFT JOIN tot tc ON tc.event_type = grid.event_type AND tc.ref = 0
-          |    JOIN rng ON rng.event_type = grid.event_type),
-          |cum AS (SELECT event_type, b, t_ref, t_cur, w,
-          |      sum(p - q) OVER (PARTITION BY event_type ORDER BY b
-          |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-          |    FROM g)
-          |SELECT event_type, CAST(max(t_ref) AS BIGINT) AS n_ref, CAST(max(t_cur) AS BIGINT) AS n_cur,
-          |  floor(max(w) * 1000000 + 0.5) / 1000000 AS bin_width,
-          |  CASE WHEN max(t_ref) IS NOT NULL AND max(t_cur) IS NOT NULL THEN
-          |    floor(CAST(sum(CAST(floor(abs(c) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-          |      * max(w) * 1000000 + 0.5) / 1000000 END AS emd
-          |FROM cum GROUP BY event_type""".stripMargin,
-
-      "q_fs_weights" ->
-        """WITH c AS (SELECT c_custkey AS id, c_mktsegment AS f1, c_nationkey AS f2,
-          |    CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS f3
-          |  FROM customer WHERE c_custkey IS NOT NULL),
-          |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM c),
-          |u1 AS (SELECT CAST(coalesce(sum(CAST(k AS DECIMAL(38,0)) * k), 0) AS DOUBLE) AS s2
-          |  FROM (SELECT count(*) AS k FROM c WHERE f1 IS NOT NULL GROUP BY f1)),
-          |u2 AS (SELECT CAST(coalesce(sum(CAST(k AS DECIMAL(38,0)) * k), 0) AS DOUBLE) AS s2
-          |  FROM (SELECT count(*) AS k FROM c WHERE f2 IS NOT NULL GROUP BY f2)),
-          |u3 AS (SELECT CAST(coalesce(sum(CAST(k AS DECIMAL(38,0)) * k), 0) AS DOUBLE) AS s2
-          |  FROM (SELECT count(*) AS k FROM c WHERE f3 IS NOT NULL GROUP BY f3)),
-          |p AS (SELECT x.id AS id_a, y.id AS id_b FROM c x JOIN c y
-          |  ON floor(CAST(x.id AS DOUBLE) / 64.0) = floor(CAST(y.id AS DOUBLE) / 64.0) AND x.id < y.id),
-          |j AS (SELECT p.id_a, p.id_b,
-          |    a.f1 AS a1, a.f2 AS a2, a.f3 AS a3, b.f1 AS b1, b.f2 AS b2, b.f3 AS b3
-          |  FROM p JOIN c a ON a.id = p.id_a JOIN c b ON b.id = p.id_b)
-          |SELECT id_a, id_b,
-          |  CAST((CASE WHEN a1 IS NOT NULL AND b1 IS NOT NULL AND a1 = b1 THEN 1 ELSE 0 END)
-          |    + (CASE WHEN a2 IS NOT NULL AND b2 IS NOT NULL AND a2 = b2 THEN 1 ELSE 0 END)
-          |    + (CASE WHEN a3 IS NOT NULL AND b3 IS NOT NULL AND a3 = b3 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-          |  floor((
-          |    (CASE WHEN a1 IS NULL OR b1 IS NULL THEN 0.0
-          |      WHEN a1 = b1 THEN ln(0.9 / (u1.s2 / (n * n))) / ln(2.0)
-          |      ELSE ln((1.0 - 0.9) / (1.0 - u1.s2 / (n * n))) / ln(2.0) END)
-          |    + (CASE WHEN a2 IS NULL OR b2 IS NULL THEN 0.0
-          |      WHEN a2 = b2 THEN ln(0.9 / (u2.s2 / (n * n))) / ln(2.0)
-          |      ELSE ln((1.0 - 0.9) / (1.0 - u2.s2 / (n * n))) / ln(2.0) END)
-          |    + (CASE WHEN a3 IS NULL OR b3 IS NULL THEN 0.0
-          |      WHEN a3 = b3 THEN ln(0.9 / (u3.s2 / (n * n))) / ln(2.0)
-          |      ELSE ln((1.0 - 0.9) / (1.0 - u3.s2 / (n * n))) / ln(2.0) END)
-          |  ) * 1000000 + 0.5) / 1000000 AS weight
-          |FROM j, nn, u1, u2, u3""".stripMargin,
-
-      "q_rbo" -> {
-        val wts = (1 to 10).map(d => s"($d, CAST(${math.pow(0.9, d)} AS DOUBLE))")
-          .mkString(", ")
-        s"""WITH wts(d, w) AS (VALUES $wts),
-           |a AS (SELECT lang, doc_id, rk FROM (SELECT lang, doc_id,
-           |    row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rk
-           |  FROM documents) WHERE rk <= 10),
-           |b AS (SELECT lang, doc_id, rk FROM (SELECT lang, doc_id,
-           |    row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rk
-           |  FROM documents) WHERE rk <= 10),
-           |cm AS (SELECT a.lang, greatest(a.rk, b.rk) AS m, count(*) AS c
-           |  FROM a JOIN b ON a.lang = b.lang AND a.doc_id = b.doc_id GROUP BY 1, 2),
-           |sz AS (SELECT coalesce(x.lang, y.lang) AS lang,
-           |    CAST(coalesce(x.na, 0) AS BIGINT) AS n_a, CAST(coalesce(y.nb, 0) AS BIGINT) AS n_b
-           |  FROM (SELECT lang, count(*) AS na FROM a GROUP BY 1) x
-           |  FULL JOIN (SELECT lang, count(*) AS nb FROM b GROUP BY 1) y ON x.lang = y.lang),
-           |grid AS (SELECT lang, unnest(range(1, 11)) AS d FROM (SELECT DISTINCT lang FROM sz)),
-           |t AS (SELECT grid.lang, grid.d,
-           |    sum(coalesce(c, 0)) OVER (PARTITION BY grid.lang ORDER BY grid.d
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS x
-           |  FROM grid LEFT JOIN cm ON cm.lang = grid.lang AND cm.m = grid.d),
-           |tt AS (SELECT t.lang, t.d, t.x, w * CAST(x AS DOUBLE) / CAST(t.d AS DOUBLE) AS term
-           |  FROM t JOIN wts ON wts.d = t.d),
-           |f AS (SELECT lang, CAST(max(CASE WHEN d = 10 THEN x END) AS BIGINT) AS xk,
-           |    CAST(sum(CAST(floor(term * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
-           |  FROM tt GROUP BY 1)
-           |SELECT sz.lang, n_a, n_b,
-           |  floor(CAST(xk AS DOUBLE) / 10.0 * 1000000 + 0.5) / 1000000 AS overlap_k,
-           |  floor((1.0 - 0.9) / 0.9 * ss * 1000000 + 0.5) / 1000000 AS rbo
-           |FROM f JOIN sz ON f.lang = sz.lang""".stripMargin
-      },
-
-      "q_theils_u" -> {
-        def dir(x: String, y: String, tag: String): String =
-          s"""SELECT '$tag' AS direction, n, nx, ny,
-             |  floor((ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS h_y,
-             |  floor((sx - sxy) / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS h_y_given_x,
-             |  CASE WHEN ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE) > 0.0 THEN
-             |    floor(((ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) - (sx - sxy) / CAST(n AS DOUBLE))
-             |      / (ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 END AS u
-             |FROM (
-             |  WITH jt AS (SELECT $x AS x, $y AS y, count(*) AS k FROM documents
-             |      WHERE $x IS NOT NULL AND $y IS NOT NULL GROUP BY 1, 2),
-             |  jm AS (SELECT CAST(sum(k) AS BIGINT) AS n,
-             |      CAST(sum(CAST(floor(CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE)) * 1000000 + 0.5)
-             |        / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sxy FROM jt),
-             |  xm AS (SELECT CAST(count(*) AS BIGINT) AS nx,
-             |      CAST(sum(CAST(floor(CAST(kx AS DOUBLE) * ln(CAST(kx AS DOUBLE)) * 1000000 + 0.5)
-             |        / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sx
-             |    FROM (SELECT x, sum(k) AS kx FROM jt GROUP BY 1)),
-             |  ym AS (SELECT CAST(count(*) AS BIGINT) AS ny,
-             |      CAST(sum(CAST(floor(CAST(ky AS DOUBLE) * ln(CAST(ky AS DOUBLE)) * 1000000 + 0.5)
-             |        / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sy
-             |    FROM (SELECT y, sum(k) AS ky FROM jt GROUP BY 1))
-             |  SELECT * FROM jm, xm, ym)""".stripMargin
-        dir("source", "lang", "lang_given_source") + "\nUNION ALL\n" +
-          dir("lang", "source", "source_given_lang")
-      },
-
-      "q_target_encode" ->
-        """WITH v AS (SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS y FROM documents),
-          |ok AS (SELECT * FROM v WHERE source IS NOT NULL AND y IS NOT NULL AND NOT isnan(y)),
-          |cat AS (SELECT source,
-          |    CAST(sum(CAST(floor(y * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS s,
-          |    CAST(count(*) AS BIGINT) AS n
-          |  FROM ok GROUP BY 1),
-          |g AS (SELECT CAST(sum(CAST(floor(y * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-          |    / CAST(count(*) AS DOUBLE) AS gm FROM ok)
-          |SELECT doc_id, v.source,
-          |  CASE WHEN v.source IS NOT NULL AND y IS NOT NULL AND NOT isnan(y)
-          |      AND CAST(n AS DOUBLE) - 1.0 + 10.0 > 0.0 THEN
-          |    floor((s - floor(y * 1000000 + 0.5) / 1000000 + 10.0 * gm)
-          |      / (CAST(n AS DOUBLE) - 1.0 + 10.0) * 1000000 + 0.5) / 1000000 END AS enc
-          |FROM v LEFT JOIN cat ON v.source = cat.source, g""".stripMargin,
-
-      "q_softmax" ->
-        """WITH b AS (SELECT lang, doc_id, CAST(n_chars AS DOUBLE) / 1000.0 AS score
-          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE) / 1000.0)),
-          |mx AS (SELECT lang, max(score) AS m FROM b GROUP BY 1),
-          |t AS (SELECT b.lang, doc_id, score, exp((score - m) / 0.5) AS tt FROM b JOIN mx ON b.lang = mx.lang),
-          |tot AS (SELECT lang,
-          |    CAST(sum(CAST(floor(tt * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS z
-          |  FROM t GROUP BY 1)
-          |SELECT t.lang, doc_id,
-          |  floor(score * 1000000 + 0.5) / 1000000 AS score,
-          |  floor(tt / z * 1000000 + 0.5) / 1000000 AS w
-          |FROM t JOIN tot ON t.lang = tot.lang""".stripMargin,
-
-      "q_url_dedup" ->
-        """WITH u AS (SELECT doc_id,
-          |    concat(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS://' ELSE 'https://' END,
-          |      source, '.example.com',
-          |      CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE '' END,
-          |      '/page/', CAST(doc_id // 10 AS VARCHAR),
-          |      CASE WHEN doc_id % 3 = 0 THEN '?utm_source=x' ELSE '' END) AS url
-          |  FROM documents),
-          |p AS (SELECT doc_id,
-          |    lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme,
-          |    lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?([^/:?#]+)', 1)) AS host,
-          |    regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://(?:[^/@]*@)?[^/:?#]+:([0-9]+)', 1) AS port,
-          |    regexp_replace(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?#]*)', 1), '/$', '') AS path,
-          |    list_sort(list_filter(string_split(regexp_extract(regexp_replace(url, '#.*$', ''), '\?(.*)', 1), '&'),
-          |      x -> x <> '' AND NOT regexp_matches(x, '^(utm_[^=]*|gclid|fbclid|msclkid|mc_eid|ref)(=.*)?$'))) AS kept
-          |  FROM u),
-          |c AS (SELECT doc_id,
-          |    CASE WHEN scheme <> '' AND host <> '' THEN
-          |      concat(scheme, '://', host,
-          |        CASE WHEN port <> '' AND NOT (scheme = 'http' AND port = '80')
-          |          AND NOT (scheme = 'https' AND port = '443') THEN concat(':', port) ELSE '' END,
-          |        path,
-          |        CASE WHEN len(kept) > 0 THEN concat('?', array_to_string(kept, '&')) ELSE '' END)
-          |    END AS canon
-          |  FROM p)
-          |SELECT canon, CAST(min(doc_id) AS BIGINT) AS survivor_id,
-          |  CAST(count(*) AS BIGINT) AS n_spellings
-          |FROM c GROUP BY 1""".stripMargin,
-
-      "q_length_buckets" ->
-        """WITH r AS (SELECT source AS by, doc_id AS id, CAST(n_chars AS BIGINT) AS len,
-          |    row_number() OVER (PARTITION BY source ORDER BY CAST(n_chars AS BIGINT), doc_id) AS rk
-          |  FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
-          |b AS (SELECT by, CAST(floor(CAST(rk - 1 AS DOUBLE) / 32.0) AS BIGINT) AS batch, len FROM r),
-          |g AS (SELECT by, batch, CAST(count(*) AS BIGINT) AS n,
-          |    CAST(min(len) AS BIGINT) AS min_len, CAST(max(len) AS BIGINT) AS max_len,
-          |    CAST(sum(len) AS BIGINT) AS sum_len
-          |  FROM b GROUP BY 1, 2)
-          |SELECT by AS source, batch, n, min_len, max_len, sum_len,
-          |  CASE WHEN max_len > 0 THEN
-          |    floor((1.0 - CAST(sum_len AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(max_len AS DOUBLE)))
-          |      * 1000000 + 0.5) / 1000000
-          |  ELSE 0.0 END AS pad_frac
-          |FROM g""".stripMargin,
-
-      "q_unseen_mass" ->
-        """WITH w AS (SELECT source,
-          |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
-          |  FROM documents),
-          |c AS (SELECT source, word, count(*) AS k FROM w WHERE word IS NOT NULL GROUP BY 1, 2),
-          |g AS (SELECT source, CAST(sum(k) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS richness,
-          |    CAST(count(CASE WHEN k = 1 THEN 1 END) AS BIGINT) AS n1,
-          |    CAST(count(CASE WHEN k = 2 THEN 1 END) AS BIGINT) AS n2
-          |  FROM c GROUP BY 1)
-          |SELECT source, n, richness, n1, n2,
-          |  floor(CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS missing_mass,
-          |  CASE WHEN n2 > 0 THEN
-          |    floor((CAST(richness AS DOUBLE)
-          |      + CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) / (2.0 * CAST(n2 AS DOUBLE)))
-          |      * 1000000 + 0.5) / 1000000 END AS chao1
-          |FROM g""".stripMargin,
-
-      "q_ratio_ci" -> {
-        val z = 1.959963984540054
-        def r6m(e: String) =
-          s"CAST(coalesce(sum(CAST(floor(($e) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE)"
-        s"""WITH u AS (SELECT user_id % 4 AS cohort, user_id,
-           |    CAST(count(CASE WHEN CAST(value AS DOUBLE) > 50.0 THEN 1 END) AS DOUBLE) AS x,
-           |    CAST(count(*) AS DOUBLE) AS y
-           |  FROM events GROUP BY 1, 2),
-           |m AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n,
-           |    ${r6m("x")} AS sx, ${r6m("y")} AS sy,
-           |    ${r6m("x * x")} AS sxx, ${r6m("y * y")} AS syy, ${r6m("x * y")} AS sxy
-           |  FROM u GROUP BY 1),
-           |e AS (SELECT cohort, n, sx, sy, sx / sy AS ratio,
-           |    sy / CAST(n AS DOUBLE) AS my,
-           |    (sxx / CAST(n AS DOUBLE) - (sx / CAST(n AS DOUBLE)) * (sx / CAST(n AS DOUBLE)))
-           |      * CAST(n AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0) AS vxx,
-           |    (syy / CAST(n AS DOUBLE) - (sy / CAST(n AS DOUBLE)) * (sy / CAST(n AS DOUBLE)))
-           |      * CAST(n AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0) AS vyy,
-           |    (sxy / CAST(n AS DOUBLE) - (sx / CAST(n AS DOUBLE)) * (sy / CAST(n AS DOUBLE)))
-           |      * CAST(n AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0) AS vxy
-           |  FROM m),
-           |f AS (SELECT cohort, n, sx, sy, ratio,
-           |    CASE WHEN n >= 2 AND sy <> 0.0 THEN
-           |      sqrt(greatest((vxx - 2.0 * ratio * vxy + ratio * ratio * vyy)
-           |        / (CAST(n AS DOUBLE) * my * my), 0.0)) END AS se
-           |  FROM e)
-           |SELECT cohort, n,
-           |  floor(sx * 1000000 + 0.5) / 1000000 AS sum_x,
-           |  floor(sy * 1000000 + 0.5) / 1000000 AS sum_y,
-           |  CASE WHEN sy <> 0.0 THEN floor(ratio * 1000000 + 0.5) / 1000000 END AS ratio,
-           |  floor(se * 1000000 + 0.5) / 1000000 AS se,
-           |  CASE WHEN se IS NOT NULL THEN floor((ratio - $z * se) * 1000000 + 0.5) / 1000000 END AS ci_lo,
-           |  CASE WHEN se IS NOT NULL THEN floor((ratio + $z * se) * 1000000 + 0.5) / 1000000 END AS ci_hi
-           |FROM f""".stripMargin
-      },
-
-      "q_msprt" ->
-        """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-          |    coalesce(event_id % 2 = 0, false) AS b FROM events),
-          |m AS (SELECT event_type,
-          |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b THEN 1 END) AS BIGINT) AS n_a,
-          |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b THEN 1 END) AS BIGINT) AS n_b,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-          |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-          |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
-          |  FROM v GROUP BY 1),
-          |e AS (SELECT event_type, n_a, n_b,
-          |    sb / CAST(n_b AS DOUBLE) - sa / CAST(n_a AS DOUBLE) AS theta,
-          |    greatest(sa2 / CAST(n_a AS DOUBLE) - (sa / CAST(n_a AS DOUBLE)) * (sa / CAST(n_a AS DOUBLE)), 0.0)
-          |        * CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0) / CAST(n_a AS DOUBLE)
-          |      + greatest(sb2 / CAST(n_b AS DOUBLE) - (sb / CAST(n_b AS DOUBLE)) * (sb / CAST(n_b AS DOUBLE)), 0.0)
-          |        * CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0) / CAST(n_b AS DOUBLE) AS vv
-          |  FROM m),
-          |f AS (SELECT event_type, n_a, n_b, theta, vv,
-          |    sqrt(vv / (vv + 1.0)) * exp(theta * theta * 1.0 / (2.0 * vv * (vv + 1.0))) AS lam
-          |  FROM e)
-          |SELECT event_type, n_a, n_b,
-          |  CASE WHEN n_a > 0 AND n_b > 0 THEN floor(theta * 1000000 + 0.5) / 1000000 END AS theta,
-          |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN floor(vv * 1000000 + 0.5) / 1000000 END AS v,
-          |  CASE WHEN n_a >= 2 AND n_b >= 2 AND vv > 0.0 THEN
-          |    floor(lam * 1000000 + 0.5) / 1000000 END AS lambda,
-          |  CASE WHEN n_a >= 2 AND n_b >= 2 AND vv > 0.0 THEN
-          |    floor(least(1.0, 1.0 / lam) * 1000000 + 0.5) / 1000000 END AS p_always
-          |FROM f""".stripMargin,
-
-      "q_rate_ratio" ->
-        """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-          |    coalesce(event_id % 2 = 0, false) AS b,
-          |    coalesce(CAST(value AS DOUBLE) > 50.0, false) AS e FROM events),
-          |m AS (SELECT event_type,
-          |    CAST(count(CASE WHEN NOT b AND e THEN 1 END) AS BIGINT) AS k_a,
-          |    CAST(count(CASE WHEN b AND e THEN 1 END) AS BIGINT) AS k_b,
-          |    CAST(coalesce(sum(CASE WHEN NOT b AND x IS NOT NULL AND NOT isnan(x)
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS t_a0,
-          |    CAST(coalesce(sum(CASE WHEN b AND x IS NOT NULL AND NOT isnan(x)
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS t_b0
-          |  FROM v GROUP BY 1)
-          |SELECT event_type, k_a, k_b,
-          |  floor(t_a0 * 1000000 + 0.5) / 1000000 AS t_a,
-          |  floor(t_b0 * 1000000 + 0.5) / 1000000 AS t_b,
-          |  CASE WHEN t_a0 > 0.0 THEN
-          |    floor(CAST(k_a AS DOUBLE) / t_a0 * 1000000 + 0.5) / 1000000 END AS rate_a,
-          |  CASE WHEN t_b0 > 0.0 THEN
-          |    floor(CAST(k_b AS DOUBLE) / t_b0 * 1000000 + 0.5) / 1000000 END AS rate_b,
-          |  CASE WHEN k_a > 0 AND k_b > 0 AND t_a0 > 0.0 AND t_b0 > 0.0 THEN
-          |    floor((CAST(k_b AS DOUBLE) / t_b0) / (CAST(k_a AS DOUBLE) / t_a0) * 1000000 + 0.5) / 1000000
-          |  END AS rate_ratio,
-          |  CASE WHEN k_a > 0 AND k_b > 0 AND t_a0 > 0.0 AND t_b0 > 0.0 THEN
-          |    floor(ln((CAST(k_b AS DOUBLE) / t_b0) / (CAST(k_a AS DOUBLE) / t_a0)) * 1000000 + 0.5) / 1000000
-          |  END AS log_rr,
-          |  CASE WHEN k_a > 0 AND k_b > 0 AND t_a0 > 0.0 AND t_b0 > 0.0 THEN
-          |    floor(sqrt(1.0 / CAST(k_a AS DOUBLE) + 1.0 / CAST(k_b AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |  END AS se_log_rr
-          |FROM m""".stripMargin,
-
-      "q_effect_size" ->
-        """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-          |    coalesce(event_id % 2 = 0, false) AS b FROM events),
-          |m AS (SELECT event_type,
-          |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b THEN 1 END) AS BIGINT) AS n_a,
-          |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b THEN 1 END) AS BIGINT) AS n_b,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-          |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-          |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
-          |  FROM v GROUP BY 1),
-          |e AS (SELECT event_type, n_a, n_b,
-          |    sb / CAST(n_b AS DOUBLE) - sa / CAST(n_a AS DOUBLE) AS dif,
-          |    sqrt(((CAST(n_a AS DOUBLE) - 1.0)
-          |        * (greatest(sa2 / CAST(n_a AS DOUBLE) - (sa / CAST(n_a AS DOUBLE)) * (sa / CAST(n_a AS DOUBLE)), 0.0)
-          |           * CAST(n_a AS DOUBLE) / (CAST(n_a AS DOUBLE) - 1.0))
-          |      + (CAST(n_b AS DOUBLE) - 1.0)
-          |        * (greatest(sb2 / CAST(n_b AS DOUBLE) - (sb / CAST(n_b AS DOUBLE)) * (sb / CAST(n_b AS DOUBLE)), 0.0)
-          |           * CAST(n_b AS DOUBLE) / (CAST(n_b AS DOUBLE) - 1.0)))
-          |      / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2.0)) AS sp
-          |  FROM m)
-          |SELECT event_type, n_a, n_b,
-          |  CASE WHEN n_a > 0 AND n_b > 0 THEN floor(dif * 1000000 + 0.5) / 1000000 END AS diff,
-          |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN floor(sp * 1000000 + 0.5) / 1000000 END AS s_pooled,
-          |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0.0 THEN
-          |    floor(dif / sp * 1000000 + 0.5) / 1000000 END AS d,
-          |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0.0 THEN
-          |    floor(dif / sp * (1.0 - 3.0 / (4.0 * (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) - 9.0))
-          |      * 1000000 + 0.5) / 1000000 END AS g
-          |FROM e""".stripMargin,
-
-      "q_odds_ratio" ->
-        """WITH m AS (SELECT lang,
-          |    CAST(count(CASE WHEN NOT coalesce(doc_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_a,
-          |    CAST(count(CASE WHEN coalesce(doc_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_b,
-          |    CAST(count(CASE WHEN NOT coalesce(doc_id % 2 = 0, false)
-          |      AND coalesce(n_chars > 300, false) THEN 1 END) AS BIGINT) AS k_a,
-          |    CAST(count(CASE WHEN coalesce(doc_id % 2 = 0, false)
-          |      AND coalesce(n_chars > 300, false) THEN 1 END) AS BIGINT) AS k_b
-          |  FROM documents GROUP BY 1),
-          |e AS (SELECT lang, n_a, n_b, k_a, k_b,
-          |    CAST(k_b AS DOUBLE) + 0.5 AS a, CAST(n_b - k_b AS DOUBLE) + 0.5 AS b,
-          |    CAST(k_a AS DOUBLE) + 0.5 AS c, CAST(n_a - k_a AS DOUBLE) + 0.5 AS d
-          |  FROM m)
-          |SELECT lang, n_a, n_b, k_a, k_b,
-          |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-          |    floor(a * d / (c * b) * 1000000 + 0.5) / 1000000 END AS odds_ratio,
-          |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-          |    floor(ln(a * d / (c * b)) * 1000000 + 0.5) / 1000000 END AS log_or,
-          |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-          |    floor(sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d) * 1000000 + 0.5) / 1000000 END AS se_log_or
-          |FROM e""".stripMargin,
-
-      "q_mvc" -> {
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH v AS (SELECT event_type AS arm, CAST(value AS DOUBLE) AS x FROM events
-           |  WHERE event_type IS NOT NULL),
-           |m AS (SELECT arm,
-           |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) THEN 1 END) AS BIGINT) AS n,
-           |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x)
-           |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s,
-           |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x)
-           |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s2
-           |  FROM v GROUP BY 1),
-           |c AS (SELECT n AS nc, s AS cs, s2 AS cs2 FROM m WHERE arm = 'view'),
-           |e AS (SELECT arm, n, nc, s, s2, cs, cs2,
-           |    s / CAST(n AS DOUBLE) AS mean, cs / CAST(nc AS DOUBLE) AS meanc,
-           |    CASE WHEN n >= 2 AND nc >= 2 THEN
-           |      sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0)
-           |          * CAST(n AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0) / CAST(n AS DOUBLE)
-           |        + greatest(cs2 / CAST(nc AS DOUBLE) - (cs / CAST(nc AS DOUBLE)) * (cs / CAST(nc AS DOUBLE)), 0.0)
-           |          * CAST(nc AS DOUBLE) / (CAST(nc AS DOUBLE) - 1.0) / CAST(nc AS DOUBLE)) END AS se
-           |  FROM m, c WHERE arm <> 'view'),
-           |f AS (SELECT arm, n, nc, mean, meanc, se,
-           |    CASE WHEN se > 0.0 THEN (mean - meanc) / se END AS z
-           |  FROM e),
-           |g AS (SELECT f.*, abs(z) AS az, 1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM f)
-           |SELECT arm, n, nc AS n_control,
-           |  CASE WHEN n > 0 THEN floor(mean * 1000000 + 0.5) / 1000000 END AS mean,
-           |  CASE WHEN nc > 0 THEN floor(meanc * 1000000 + 0.5) / 1000000 END AS mean_control,
-           |  CASE WHEN n > 0 AND nc > 0 THEN floor((mean - meanc) * 1000000 + 0.5) / 1000000 END AS diff,
-           |  floor(se * 1000000 + 0.5) / 1000000 AS se,
-           |  floor(z * 1000000 + 0.5) / 1000000 AS z,
-           |  CASE WHEN z IS NOT NULL THEN floor($pSql * 1000000 + 0.5) / 1000000 END AS p
-           |FROM g""".stripMargin
-      },
-
-      "q_srm" ->
-        """WITH m AS (SELECT event_type,
-          |    CAST(count(CASE WHEN NOT coalesce(event_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_a,
-          |    CAST(count(CASE WHEN coalesce(event_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_b
-          |  FROM events GROUP BY 1)
-          |SELECT event_type, n_a, n_b,
-          |  CASE WHEN n_a + n_b > 0 THEN
-          |    floor(CAST(n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS frac_b,
-          |  CASE WHEN n_a + n_b > 0 THEN floor((
-          |    (CAST(n_b AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * 0.5)
-          |      * (CAST(n_b AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * 0.5)
-          |      / (CAST(n_a + n_b AS DOUBLE) * 0.5)
-          |    + (CAST(n_a AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-          |      * (CAST(n_a AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-          |      / (CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-          |  ) * 1000000 + 0.5) / 1000000 END AS chi2
-          |FROM m""".stripMargin,
-
-      "q_qte" -> {
-        val ps = QuantilePs.map(p => s"CAST($p AS DOUBLE)").mkString("[", ", ", "]")
-        s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-           |    coalesce(event_id % 2 = 0, false) AS b FROM events
-           |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |q AS (SELECT event_type,
-           |    quantile_cont(x, $ps) FILTER (WHERE NOT b) AS qa,
-           |    quantile_cont(x, $ps) FILTER (WHERE b) AS qb
-           |  FROM v GROUP BY 1)
-           |SELECT event_type, unnest($ps) AS p,
-           |  floor(unnest(qa) * 1000000 + 0.5) / 1000000 AS q_a,
-           |  floor(unnest(qb) * 1000000 + 0.5) / 1000000 AS q_b,
-           |  floor((unnest(qb) - unnest(qa)) * 1000000 + 0.5) / 1000000 AS shift
-           |FROM q""".stripMargin
-      },
-
-      "q_strat_ate" ->
-        """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
-          |    coalesce(event_id % 2 = 0, false) AS b FROM events),
-          |m AS (SELECT event_type,
-          |    count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b THEN 1 END) AS na,
-          |    count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b THEN 1 END) AS nb,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-          |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-          |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
-          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-          |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
-          |  FROM v GROUP BY 1),
-          |ps AS (SELECT na + nb AS ns,
-          |    CASE WHEN na >= 1 AND nb >= 1 THEN sb / nb - sa / na END AS eff,
-          |    CASE WHEN na >= 2 AND nb >= 2 THEN
-          |      greatest(sa2 / na - (sa / na) * (sa / na), 0.0) * na / (na - 1.0) / na
-          |      + greatest(sb2 / nb - (sb / nb) * (sb / nb), 0.0) * nb / (nb - 1.0) / nb END AS vs
-          |  FROM m),
-          |g AS (SELECT CAST(sum(ns) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_strata,
-          |    CAST(count(CASE WHEN eff IS NULL THEN 1 END) AS BIGINT) AS n_strata_incomplete,
-          |    count(CASE WHEN eff IS NOT NULL AND vs IS NULL THEN 1 END) AS novar,
-          |    CAST(coalesce(sum(CASE WHEN eff IS NOT NULL THEN ns END), 0) AS BIGINT) AS nc,
-          |    CAST(coalesce(sum(CAST(floor(CAST(ns AS DOUBLE) * eff * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(38,6))), 0) AS DOUBLE) AS we,
-          |    CAST(coalesce(sum(CAST(floor(CAST(ns AS DOUBLE) * ns * vs * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(38,6))), 0) AS DOUBLE) AS wv
-          |  FROM ps)
-          |SELECT n, n_strata, n_strata_incomplete,
-          |  CASE WHEN nc > 0 THEN floor(we / CAST(nc AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS ate,
-          |  CASE WHEN novar = 0 AND nc > 0 THEN
-          |    floor(sqrt(wv) / CAST(nc AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS se,
-          |  CASE WHEN novar = 0 AND nc > 0 AND sqrt(wv) / CAST(nc AS DOUBLE) > 0.0 THEN
-          |    floor((we / CAST(nc AS DOUBLE)) / (sqrt(wv) / CAST(nc AS DOUBLE)) * 1000000 + 0.5) / 1000000
-          |  END AS z
-          |FROM g""".stripMargin,
-
-      "q_nelson_aalen" ->
-        s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
-           |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
-           |    max(epoch_us(ts)) AS tl
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |dur AS (SELECT CAST(floor(CAST(coalesce(te, tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-           |    te IS NOT NULL AS obs FROM sp),
-           |cv AS (SELECT t_day, count(CASE WHEN obs THEN 1 END) AS d_events,
-           |    count(CASE WHEN NOT obs THEN 1 END) AS c_censored FROM dur GROUP BY 1),
-           |tot AS (SELECT sum(d_events + c_censored) AS total FROM cv),
-           |r AS (SELECT t_day, d_events, c_censored,
-           |    total - coalesce(sum(d_events + c_censored) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-           |  FROM cv, tot),
-           |h AS (SELECT t_day, d_events, c_censored, n_risk,
-           |    ${graft.functions.Portable.r6Sql("CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE)")} AS inc
-           |  FROM r)
-           |SELECT t_day, CAST(n_risk AS BIGINT) AS n_risk, CAST(d_events AS BIGINT) AS d_events,
-           |  CAST(c_censored AS BIGINT) AS c_censored,
-           |  ${graft.functions.Portable.r6Sql("inc")} AS hazard,
-           |  ${graft.functions.Portable.r6Sql("CAST(sum(CAST(inc AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cum_hazard
-           |FROM h""".stripMargin,
-
-      "q_checksum" ->
-        """WITH e AS (SELECT source,
-          |    concat_ws('|',
-          |      CASE WHEN doc_id IS NULL THEN '\N' ELSE replace(replace(CAST(doc_id AS VARCHAR), '\', '\\'), '|', '\|') END,
-          |      CASE WHEN text IS NULL THEN '\N' ELSE replace(replace(text, '\', '\\'), '|', '\|') END,
-          |      CASE WHEN lang IS NULL THEN '\N' ELSE replace(replace(lang, '\', '\\'), '|', '\|') END,
-          |      CASE WHEN n_chars IS NULL THEN '\N' ELSE replace(replace(CAST(n_chars AS VARCHAR), '\', '\\'), '|', '\|') END
-          |    ) AS j FROM documents)
-          |SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-          |  CAST(CAST(sum(CAST(CAST(concat('0x', substr(md5(j), 1, 15)) AS BIGINT) AS DECIMAL(38,0))) AS DECIMAL(38,0)) AS VARCHAR) AS checksum
-          |FROM e GROUP BY 1""".stripMargin,
-
-      "q_dedup_lines_doc" ->
-        """WITH t AS (SELECT doc_id, text,
-          |  list_filter(list_transform(string_split(regexp_replace(text, '\r', '', 'g'), chr(10)), l -> trim(l)), l -> l<>'') AS lines
-          |  FROM documents)
-          |SELECT doc_id,
-          |  CASE WHEN text IS NOT NULL THEN
-          |    array_to_string(list_filter(lines, (x, i) -> NOT list_contains(lines[1:i-1], x)), chr(10)) END AS clean,
-          |  CASE WHEN text IS NOT NULL THEN CAST(len(lines) AS BIGINT) END AS n_before,
-          |  CASE WHEN text IS NOT NULL THEN
-          |    CAST(len(list_filter(lines, (x, i) -> NOT list_contains(lines[1:i-1], x))) AS BIGINT) END AS n_after
-          |FROM t""".stripMargin,
-
-      "q_power" -> {
-        val coef = 2.0 * (1.959963984540054 + 0.8416212335729143) *
-          (1.959963984540054 + 0.8416212335729143)
-        s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x FROM events
-           |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
-           |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           |    CAST(coalesce(sum(CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-           |    CAST(coalesce(sum(CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx
-           |  FROM v GROUP BY 1),
-           |f AS (SELECT event_type, n, sx / CAST(n AS DOUBLE) AS mean,
-           |    greatest(sxx / CAST(n AS DOUBLE) - (sx / CAST(n AS DOUBLE)) * (sx / CAST(n AS DOUBLE)), 0.0)
-           |      * CAST(n AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0) AS v,
-           |    0.05 * (sx / CAST(n AS DOUBLE)) AS delta
-           |  FROM m)
-           |SELECT event_type, n,
-           |  floor(mean * 1000000 + 0.5) / 1000000 AS mean,
-           |  CASE WHEN n >= 2 THEN floor(sqrt(v) * 1000000 + 0.5) / 1000000 END AS sd,
-           |  floor(delta * 1000000 + 0.5) / 1000000 AS delta,
-           |  CASE WHEN n >= 2 AND delta <> 0.0 THEN
-           |    CAST(ceil($coef * v / (delta * delta)) AS BIGINT) END AS n_required
-           |FROM f""".stripMargin
-      },
-
-      "q_pr_curve" ->
-        """WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 2000.0) AS x,
-          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
-          |  FROM documents WHERE n_chars IS NOT NULL),
-          |b AS (SELECT lang, least(19, greatest(0, CAST(floor(x * 20) AS BIGINT))) AS bin,
-          |    CAST(count(*) AS BIGINT) AS n, CAST(sum(p) AS BIGINT) AS kk FROM v GROUP BY 1, 2),
-          |c AS (SELECT lang, bin, n, kk,
-          |    CAST(sum(kk) OVER wd AS BIGINT) AS tp,
-          |    CAST(sum(n) OVER wd AS BIGINT) AS nge,
-          |    CAST(sum(kk) OVER (PARTITION BY lang) AS BIGINT) AS tot
-          |  FROM b WINDOW wd AS (PARTITION BY lang ORDER BY bin DESC
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-          |SELECT lang, floor(CAST(bin AS DOUBLE) / 20.0 * 1000000 + 0.5) / 1000000 AS cutoff,
-          |  nge AS n_ge, tp, nge - tp AS fp, tot - tp AS fn,
-          |  floor(CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE) * 1000000 + 0.5) / 1000000 AS "precision",
-          |  CASE WHEN tot > 0 THEN
-          |    floor(CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS recall,
-          |  CASE WHEN tot > 0 AND CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE)
-          |      + CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE) > 0.0 THEN
-          |    floor(2.0 * (CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE))
-          |      * (CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE))
-          |      / ((CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE))
-          |        + (CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE))) * 1000000 + 0.5) / 1000000 END AS f1
-          |FROM c""".stripMargin,
-
-      "q_tcloseness" ->
-        """WITH cv AS (SELECT source, n_chars // 100 AS len_bucket,
-          |    coalesce(CAST(lang AS VARCHAR), '__NULL__') AS v, CAST(count(*) AS BIGINT) AS n
-          |  FROM documents GROUP BY 1, 2, 3),
-          |cls AS (SELECT source, len_bucket, v, n,
-          |    sum(n) OVER (PARTITION BY source, len_bucket) AS cn FROM cv),
-          |g AS (SELECT v, CAST(sum(n) AS DOUBLE) / (SELECT CAST(sum(n) AS DOUBLE) FROM cv) AS q
-          |  FROM cv GROUP BY 1),
-          |pc AS (SELECT source, len_bucket, max(cn) AS cn,
-          |    CAST(sum(CAST(floor((abs(CAST(n AS DOUBLE) / CAST(cn AS DOUBLE) - q) - q)
-          |      * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS s
-          |  FROM cls JOIN g USING (v) GROUP BY 1, 2),
-          |d AS (SELECT cn, floor((1.0 + s) / 2.0 * 1000000 + 0.5) / 1000000 AS dist FROM pc)
-          |SELECT 0.2 AS t, CAST(sum(cn) AS BIGINT) AS n_rows,
-          |  CAST(count(*) AS BIGINT) AS n_classes,
-          |  CAST(count(CASE WHEN dist > 0.2 THEN 1 END) AS BIGINT) AS n_classes_above_t,
-          |  CAST(coalesce(sum(CASE WHEN dist > 0.2 THEN cn END), 0) AS BIGINT) AS n_rows_at_risk,
-          |  floor(CAST(coalesce(sum(CASE WHEN dist > 0.2 THEN cn END), 0) AS DOUBLE)
-          |    / CAST(sum(cn) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_at_risk,
-          |  floor(max(dist) * 1000000 + 0.5) / 1000000 AS max_distance
-          |FROM d""".stripMargin,
-
-      "q_periodogram" ->
-        """WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
-          |    CAST(count(*) AS DOUBLE) AS v
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-          |w AS (SELECT key, v,
-          |    (epoch_us(bk) - min(epoch_us(bk)) OVER (PARTITION BY key)) // 3600000000 AS t,
-          |    sum(v) OVER (PARTITION BY key) / count(*) OVER (PARTITION BY key) AS mean
-          |  FROM b),
-          |tm AS (SELECT key, t, v - mean AS dv, p.period
-          |  FROM w, (SELECT unnest(range(2, 27)) AS period) p),
-          |a AS (SELECT key, period, CAST(count(*) AS BIGINT) AS n_buckets,
-          |    CAST(sum(CAST(floor(dv * cos(2 * pi() * CAST(t % period AS DOUBLE)
-          |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sc,
-          |    CAST(sum(CAST(floor(dv * sin(2 * pi() * CAST(t % period AS DOUBLE)
-          |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
-          |  FROM tm GROUP BY 1, 2),
-          |pw AS (SELECT key, period, n_buckets,
-          |    floor((sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE) * 1000000 + 0.5) / 1000000 AS power
-          |  FROM a)
-          |SELECT key AS event_type, CAST(period AS BIGINT) AS period, n_buckets, power,
-          |  CAST(row_number() OVER (PARTITION BY key ORDER BY power DESC, period) AS BIGINT) AS rk
-          |FROM pw""".stripMargin,
-
-      "q_dominant_period" ->
-        """WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
-          |    CAST(count(*) AS DOUBLE) AS v
-          |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-          |w AS (SELECT key, v,
-          |    (epoch_us(bk) - min(epoch_us(bk)) OVER (PARTITION BY key)) // 3600000000 AS t,
-          |    sum(v) OVER (PARTITION BY key) / count(*) OVER (PARTITION BY key) AS mean
-          |  FROM b),
-          |tm AS (SELECT key, t, v - mean AS dv, p.period
-          |  FROM w, (SELECT unnest(range(2, 27)) AS period) p),
-          |a AS (SELECT key, period, CAST(count(*) AS BIGINT) AS n_buckets,
-          |    CAST(sum(CAST(floor(dv * cos(2 * pi() * CAST(t % period AS DOUBLE)
-          |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sc,
-          |    CAST(sum(CAST(floor(dv * sin(2 * pi() * CAST(t % period AS DOUBLE)
-          |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
-          |  FROM tm GROUP BY 1, 2),
-          |pw AS (SELECT key, period, n_buckets,
-          |    floor((sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE) * 1000000 + 0.5) / 1000000 AS power
-          |  FROM a),
-          |rk AS (SELECT *, row_number() OVER (PARTITION BY key ORDER BY power DESC, period) AS rn
-          |  FROM pw),
-          |gg AS (SELECT key, max(n_buckets) AS n_buckets,
-          |    CAST(max(CASE WHEN rn = 1 THEN period END) AS BIGINT) AS dominant_period,
-          |    max(CASE WHEN rn = 1 THEN power END) AS pmax,
-          |    CAST(sum(CAST(power AS DECIMAL(38,6))) AS DOUBLE) AS tot
-          |  FROM rk GROUP BY 1),
-          |e AS (SELECT rk.key,
-          |    CAST(sum(CAST(floor((-(power / tot)) * ln(power / tot) * 1000000 + 0.5) / 1000000
-          |      AS DECIMAL(38,6))) AS DOUBLE) AS h
-          |  FROM rk JOIN gg ON gg.key = rk.key WHERE tot > 0 AND power > 0 GROUP BY 1)
-          |SELECT gg.key AS event_type, n_buckets, dominant_period,
-          |  floor(CASE WHEN tot > 0 THEN pmax / tot END * 1000000 + 0.5) / 1000000 AS power_share,
-          |  floor(coalesce(h, 0) / ln(25.0) * 1000000 + 0.5) / 1000000 AS spectral_entropy
-          |FROM gg LEFT JOIN e ON e.key = gg.key""".stripMargin,
-
-      "q_pareto" ->
-        """WITH v AS (SELECT doc_id, n_chars,
-          |    (length(text) - length(replace(text, ' the ', ''))) / 5
-          |      * 100.0 / CAST(n_chars AS DOUBLE) AS q
-          |  FROM documents WHERE n_chars > 0 AND text IS NOT NULL),
-          |pc AS (SELECT n_chars, max(q) AS q FROM v GROUP BY 1),
-          |f AS (SELECT n_chars, q, max(q) OVER (ORDER BY n_chars
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM pc),
-          |fr AS (SELECT n_chars, q FROM f WHERE pm IS NULL OR q > pm)
-          |SELECT a.doc_id, a.n_chars, floor(a.q * 1000000 + 0.5) / 1000000 AS quality
-          |FROM v a JOIN fr ON fr.n_chars = a.n_chars AND fr.q = a.q""".stripMargin,
-
-      "q_trunc_recall" -> {
-        val dims = Seq(8, 16, 32)
-        val perDim = dims.map { d =>
-          s"""td_$d AS (SELECT query_id, neighbor_id FROM (
-             |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             |    row_number() OVER (PARTITION BY q.vec_id
-             |      ORDER BY ${cosSqlN("q.embedding", "c.embedding", d)} DESC, c.vec_id) AS rk
-             |  FROM embeddings c JOIN q ON c.vec_id <> q.vec_id) WHERE rk <= 5),
-             |h_$d AS (SELECT fk.query_id, CAST(count(*) AS BIGINT) AS hits
-             |  FROM fk JOIN td_$d USING (query_id, neighbor_id) GROUP BY 1),
-             |r_$d AS (SELECT $d AS dim, fn.query_id,
-             |    CAST(coalesce(hits, 0) AS DOUBLE) / CAST(nf AS DOUBLE) AS r
-             |  FROM fn LEFT JOIN h_$d USING (query_id))""".stripMargin
-        }.mkString(",\n")
-        val unions = dims.map(d => s"SELECT * FROM r_$d").mkString(" UNION ALL ")
-        s"""WITH q AS (SELECT * FROM embeddings WHERE vec_id < 8),
-           |fk AS (SELECT query_id, neighbor_id FROM (
-           |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           |    row_number() OVER (PARTITION BY q.vec_id
-           |      ORDER BY ${cosSql("q.embedding", "c.embedding")} DESC, c.vec_id) AS rk
-           |  FROM embeddings c JOIN q ON c.vec_id <> q.vec_id) WHERE rk <= 5),
-           |fn AS (SELECT query_id, CAST(count(*) AS BIGINT) AS nf FROM fk GROUP BY 1),
-           |$perDim,
-           |u AS ($unions)
-           |SELECT CAST(dim AS BIGINT) AS dim, CAST(count(*) AS BIGINT) AS n_queries,
-           |  floor(CAST(sum(CAST(floor(r * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-           |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_recall,
-           |  min(floor(r * 1000000 + 0.5) / 1000000) AS min_recall,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_corpus,
-           |  CAST(dim * (SELECT count(*) FROM embeddings) AS BIGINT) AS floats_per_query
-           |FROM u GROUP BY dim""".stripMargin
-      },
-
-      "q_rake" -> {
-        val allStop = TextFunctions.Stopwords.flatMap(_._2).distinct
-          .map(w => s"'$w'").mkString("[", ",", "]")
-        s"""WITH tk AS (SELECT source, doc_id,
-           |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
-           |  FROM documents),
-           |ex AS (SELECT source, doc_id, unnest(toks) AS w,
-           |    unnest(range(1, len(toks) + 1)) AS pos FROM tk),
-           |ns AS (SELECT * FROM ex WHERE NOT list_contains($allStop, w)),
-           |rn AS (SELECT source, doc_id, pos, w,
-           |    pos - row_number() OVER (PARTITION BY source, doc_id ORDER BY pos) AS run FROM ns),
-           |ph AS (SELECT source, doc_id, run, CAST(count(*) AS BIGINT) AS len,
-           |    array_to_string(list(w ORDER BY pos), ' ') AS phrase
-           |  FROM rn GROUP BY 1, 2, 3),
-           |p2 AS (SELECT * FROM ph WHERE len <= 4),
-           |ws AS (SELECT source, unnest(string_split(phrase, ' ')) AS w, len FROM p2),
-           |st AS (SELECT source, w, CAST(count(*) AS BIGINT) AS freq,
-           |    CAST(sum(len) AS BIGINT) AS deg FROM ws GROUP BY 1, 2),
-           |pd AS (SELECT source, phrase, CAST(count(*) AS BIGINT) AS n_occ, max(len) AS len
-           |  FROM p2 GROUP BY 1, 2),
-           |pw AS (SELECT source, phrase, n_occ, len,
-           |    unnest(string_split(phrase, ' ')) AS w FROM pd),
-           |sc AS (SELECT pw.source, pw.phrase, max(pw.n_occ) AS n_occurrences,
-           |    CAST(max(pw.len) AS BIGINT) AS n_words,
-           |    floor(CAST(sum(CAST(floor(CAST(deg AS DOUBLE) / CAST(freq AS DOUBLE)
-           |      * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS score
-           |  FROM pw JOIN st ON st.source = pw.source AND st.w = pw.w GROUP BY 1, 2)
-           |SELECT source, phrase, n_words, n_occurrences, score, rk FROM (
-           |  SELECT source, phrase, n_words, n_occurrences, score,
-           |    CAST(row_number() OVER (PARTITION BY source ORDER BY score DESC, phrase) AS BIGINT) AS rk
-           |  FROM sc) WHERE rk <= 10""".stripMargin
-      },
-
-      "q_balance" -> {
-        def cov(name: String, vExpr: String): String =
-          s"""SELECT '$name' AS covariate, na AS n_a, nb AS n_b,
-             |  floor(mean_a * 1000000 + 0.5) / 1000000 AS mean_a,
-             |  floor(mean_b * 1000000 + 0.5) / 1000000 AS mean_b,
-             |  floor(CASE WHEN (va + vb) / 2.0 > 0.0 THEN (mean_b - mean_a) / sqrt((va + vb) / 2.0)
-             |        WHEN (va + vb) / 2.0 = 0.0 AND mean_b = mean_a THEN 0.0 END
-             |    * 1000000 + 0.5) / 1000000 AS smd,
-             |  floor(CASE WHEN va > 0.0 THEN vb / va END * 1000000 + 0.5) / 1000000 AS variance_ratio
-             |FROM (SELECT na, nb, mean_a, mean_b,
-             |    CASE WHEN na >= 2 THEN (greatest(sa2 / CAST(na AS DOUBLE) - mean_a * mean_a, 0.0)
-             |      * CAST(na AS DOUBLE)) / (CAST(na AS DOUBLE) - 1.0) END AS va,
-             |    CASE WHEN nb >= 2 THEN (greatest(sb2 / CAST(nb AS DOUBLE) - mean_b * mean_b, 0.0)
-             |      * CAST(nb AS DOUBLE)) / (CAST(nb AS DOUBLE) - 1.0) END AS vb
-             |  FROM (SELECT na, nb, sa2, sb2,
-             |      CASE WHEN na >= 1 THEN sa / CAST(na AS DOUBLE) END AS mean_a,
-             |      CASE WHEN nb >= 1 THEN sb / CAST(nb AS DOUBLE) END AS mean_b
-             |    FROM (SELECT
-             |        CAST(count(CASE WHEN p AND NOT b THEN 1 END) AS BIGINT) AS na,
-             |        CAST(count(CASE WHEN p AND b THEN 1 END) AS BIGINT) AS nb,
-             |        CAST(coalesce(sum(CASE WHEN p AND NOT b THEN CAST(floor(v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-             |        CAST(coalesce(sum(CASE WHEN p AND b THEN CAST(floor(v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
-             |        CAST(coalesce(sum(CASE WHEN p AND NOT b THEN CAST(floor(v * v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
-             |        CAST(coalesce(sum(CASE WHEN p AND b THEN CAST(floor(v * v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
-             |      FROM (SELECT $vExpr AS v,
-             |          $vExpr IS NOT NULL AND NOT isnan($vExpr) AS p,
-             |          coalesce(event_id % 2 = 0, FALSE) AS b FROM events) t0) t1) t2) t3""".stripMargin
-        cov("value", "CAST(value AS DOUBLE)") + "\nUNION ALL\n" +
-          cov("hr", "CAST(hour(ts) AS DOUBLE)")
-      },
-
-      "q_season_pipeline" -> {
-        val periods = Seq(6, 8, 12, 24)
-        def branch(p: Int): String = {
-          val h = p / 2
-          s"""t_$p AS (SELECT b.key AS event_type, bk, v,
-             |    (epoch_us(bk) // 3600000000) % $p AS phase,
-             |    lag(v, $h) OVER wn AS l, lead(v, $h) OVER wn AS r,
-             |    sum(v) OVER (PARTITION BY b.key ORDER BY bk
-             |      ROWS BETWEEN ${h - 1} PRECEDING AND ${h - 1} FOLLOWING) AS si,
-             |    count(v) OVER (PARTITION BY b.key ORDER BY bk
-             |      ROWS BETWEEN ${h - 1} PRECEDING AND ${h - 1} FOLLOWING) AS ci
-             |  FROM b JOIN win ON b.key = win.key AND win.period = $p
-             |  WINDOW wn AS (PARTITION BY b.key ORDER BY bk)),
-             |dd_$p AS (SELECT event_type, bk, phase, v,
-             |    CASE WHEN l IS NOT NULL AND r IS NOT NULL AND ci = ${p - 1}
-             |      THEN ((l + r) * 0.5 + si) / $p.0 END AS trend FROM t_$p),
-             |de_$p AS (SELECT *, v - trend AS detr FROM dd_$p),
-             |pm_$p AS (SELECT event_type, phase,
-             |    CASE WHEN count(detr) > 0 THEN
-             |      CAST(sum(CAST(floor(detr * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-             |        / CAST(count(detr) AS DOUBLE) END AS sp FROM de_$p GROUP BY 1, 2),
-             |ctr_$p AS (SELECT event_type,
-             |    CASE WHEN count(sp) > 0 THEN
-             |      CAST(sum(CAST(floor(sp * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-             |        / CAST(count(sp) AS DOUBLE) END AS c FROM pm_$p GROUP BY 1),
-             |se_$p AS (SELECT pm.event_type, phase, sp - c AS seasonal
-             |  FROM pm_$p pm JOIN ctr_$p ctr USING (event_type)),
-             |out_$p AS (SELECT de.event_type, epoch_us(bk) AS bucket_us,
-             |    CAST(de.phase AS BIGINT) AS phase, CAST($p AS BIGINT) AS period, v,
-             |    floor(trend * 1000000 + 0.5) / 1000000 AS trend,
-             |    floor(seasonal * 1000000 + 0.5) / 1000000 AS seasonal,
-             |    floor((detr - seasonal) * 1000000 + 0.5) / 1000000 AS residual
-             |  FROM de_$p de LEFT JOIN se_$p se
-             |    ON de.event_type = se.event_type AND de.phase = se.phase)""".stripMargin
-        }
-        s"""WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
-           |    CAST(count(*) AS DOUBLE) AS v
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
-           |w AS (SELECT key, v,
-           |    (epoch_us(bk) - min(epoch_us(bk)) OVER (PARTITION BY key)) // 3600000000 AS t,
-           |    sum(v) OVER (PARTITION BY key) / count(*) OVER (PARTITION BY key) AS mean
-           |  FROM b),
-           |tm AS (SELECT key, t, v - mean AS dv, p.period
-           |  FROM w, (SELECT unnest(${periods.mkString("[", ", ", "]")}) AS period) p),
-           |a AS (SELECT key, period, CAST(count(*) AS BIGINT) AS n_buckets,
-           |    CAST(sum(CAST(floor(dv * cos(2 * pi() * CAST(t % period AS DOUBLE)
-           |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sc,
-           |    CAST(sum(CAST(floor(dv * sin(2 * pi() * CAST(t % period AS DOUBLE)
-           |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
-           |  FROM tm GROUP BY 1, 2),
-           |pw AS (SELECT key, period, n_buckets,
-           |    floor((sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE) * 1000000 + 0.5) / 1000000 AS power
-           |  FROM a),
-           |win AS (SELECT key, period FROM (SELECT key, period,
-           |    row_number() OVER (PARTITION BY key ORDER BY power DESC, period) AS rk,
-           |    sum(power) OVER (PARTITION BY key) AS tot FROM pw)
-           |  WHERE rk = 1 AND tot > 0),
-           |${periods.map(branch).mkString(",\n")}
-           |${periods.map(p => s"SELECT * FROM out_$p").mkString(" UNION ALL ")}""".stripMargin
-      },
-
-      "q_woe" -> {
-        def melt(f: String) =
-          s"SELECT '$f' AS feature, coalesce(CAST($f AS VARCHAR),'(null)') AS bin, coalesce(n_chars > 500, false) AS pos FROM documents"
-        s"""WITH m AS (${melt("source")} UNION ALL ${melt("lang")}),
-           |cells AS (SELECT feature, bin,
-           |    count(CASE WHEN pos THEN 1 END) AS n_good,
-           |    count(CASE WHEN NOT pos THEN 1 END) AS n_bad
-           |  FROM m GROUP BY 1, 2),
-           |d AS (SELECT feature, bin, n_good, n_bad,
-           |    (CAST(n_good AS DOUBLE) + 0.5) / sum(CAST(n_good AS DOUBLE) + 0.5) OVER (PARTITION BY feature) AS pg,
-           |    (CAST(n_bad AS DOUBLE) + 0.5) / sum(CAST(n_bad AS DOUBLE) + 0.5) OVER (PARTITION BY feature) AS pb
-           |  FROM cells),
-           |t AS (SELECT feature, bin, n_good, n_bad,
-           |    floor(ln(pg / pb) * 1000000 + 0.5) / 1000000 AS woe,
-           |    floor((pg - pb) * ln(pg / pb) * 1000000 + 0.5) / 1000000 AS iv_term
-           |  FROM d)
-           |SELECT feature, bin, n_good, n_bad, woe, iv_term,
-           |  CAST(sum(CAST(iv_term AS DECIMAL(38,6))) OVER (PARTITION BY feature) AS DOUBLE) AS iv
-           |FROM t""".stripMargin
-      },
-
-      "q_dp_counts" -> {
-        val key = "concat('dp42', coalesce(md5(CAST(source AS VARCHAR)),'N'), coalesce(md5(CAST(lang AS VARCHAR)),'N'))"
-        s"""WITH g AS (SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2),
-           |h AS (SELECT source, lang, n,
-           |    (CAST(${h32(key)} AS DOUBLE) + 0.5) / 4294967296.0 - 0.5 AS u FROM g)
-           |SELECT source, lang, CAST(1.0 AS DOUBLE) AS epsilon,
-           |  floor((CAST(n AS DOUBLE)
-           |    - (CASE WHEN u < 0 THEN -1.0 WHEN u > 0 THEN 1.0 ELSE 0.0 END)
-           |      * ln(1.0 - 2.0 * abs(u)) / 1.0) * 1000000 + 0.5) / 1000000 AS noisy_count
-           |FROM h""".stripMargin
-      },
-
-      "q_bleu" -> {
-        def grams(side: String, carry: String, n: Int): String =
-          if (n == 1) s"SELECT $carry id, 1 AS n, unnest($side) AS gram FROM base"
-          else
-            s"""SELECT $carry id, $n AS n, unnest(CASE WHEN len($side) >= $n
-               |  THEN list_transform(range(1, len($side) - ${n - 2}), i -> array_to_string($side[i:i+${n - 1}], ' '))
-               |  ELSE [] END) AS gram FROM base""".stripMargin
-        val cSides = (1 to 4).map(grams("ct", "source,", _)).mkString(" UNION ALL ")
-        val rSides = (1 to 4).map(grams("rt", "", _)).mkString(" UNION ALL ")
-        val dropHash = h32("concat(CAST(id AS VARCHAR), '|', CAST(i AS VARCHAR))")
-        s"""WITH tk AS (SELECT source, doc_id AS id,
-           |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS rt FROM documents),
-           |base AS (SELECT source, id, rt,
-           |    list_filter(rt, (x, i) -> $dropHash % 7 <> 0) AS ct FROM tk),
-           |cg AS (SELECT source, id, n, gram, count(*) AS cc FROM ($cSides) GROUP BY 1, 2, 3, 4),
-           |rg AS (SELECT id, n, gram, count(*) AS rc FROM ($rSides) GROUP BY 1, 2, 3),
-           |clip AS (SELECT source, n, CAST(sum(least(cc, rc)) AS BIGINT) AS cl
-           |  FROM cg JOIN rg USING (id, n, gram) GROUP BY 1, 2),
-           |lens AS (SELECT source, len(ct) AS lc, len(rt) AS lr FROM base),
-           |tots AS (SELECT source, CAST(count(*) AS BIGINT) AS n_pairs,
-           |    CAST(sum(lc) AS BIGINT) AS cand_tokens, CAST(sum(lr) AS BIGINT) AS ref_tokens,
-           |    CAST(sum(greatest(lc - 0, 0)) AS BIGINT) AS t1, CAST(sum(greatest(lc - 1, 0)) AS BIGINT) AS t2,
-           |    CAST(sum(greatest(lc - 2, 0)) AS BIGINT) AS t3, CAST(sum(greatest(lc - 3, 0)) AS BIGINT) AS t4
-           |  FROM lens GROUP BY 1),
-           |cw AS (SELECT source,
-           |    CAST(sum(CASE WHEN n = 1 THEN cl END) AS BIGINT) AS c1, CAST(sum(CASE WHEN n = 2 THEN cl END) AS BIGINT) AS c2,
-           |    CAST(sum(CASE WHEN n = 3 THEN cl END) AS BIGINT) AS c3, CAST(sum(CASE WHEN n = 4 THEN cl END) AS BIGINT) AS c4
-           |  FROM clip GROUP BY 1),
-           |p AS (SELECT t.source, n_pairs, cand_tokens, ref_tokens,
-           |    CASE WHEN t1 > 0 THEN CAST(coalesce(c1, 0) AS DOUBLE) / CAST(t1 AS DOUBLE) END AS p1,
-           |    CASE WHEN t2 > 0 THEN CAST(coalesce(c2, 0) AS DOUBLE) / CAST(t2 AS DOUBLE) END AS p2,
-           |    CASE WHEN t3 > 0 THEN CAST(coalesce(c3, 0) AS DOUBLE) / CAST(t3 AS DOUBLE) END AS p3,
-           |    CASE WHEN t4 > 0 THEN CAST(coalesce(c4, 0) AS DOUBLE) / CAST(t4 AS DOUBLE) END AS p4
-           |  FROM tots t LEFT JOIN cw USING (source)),
-           |b AS (SELECT *, floor((CASE WHEN cand_tokens >= ref_tokens THEN 1.0
-           |    WHEN cand_tokens > 0 THEN exp(1.0 - CAST(ref_tokens AS DOUBLE) / CAST(cand_tokens AS DOUBLE)) END)
-           |    * 1000000 + 0.5) / 1000000 AS bp FROM p)
-           |SELECT source, n_pairs, cand_tokens, ref_tokens, bp,
-           |  floor(p1 * 1000000 + 0.5) / 1000000 AS p1, floor(p2 * 1000000 + 0.5) / 1000000 AS p2,
-           |  floor(p3 * 1000000 + 0.5) / 1000000 AS p3, floor(p4 * 1000000 + 0.5) / 1000000 AS p4,
-           |  CASE WHEN (p1 = 0.0 OR p2 = 0.0 OR p3 = 0.0 OR p4 = 0.0) THEN 0.0
-           |    ELSE floor(bp * exp((((ln(p1) + ln(p2)) + ln(p3)) + ln(p4)) / 4) * 1000000 + 0.5) / 1000000 END AS bleu
-           |FROM b""".stripMargin
-      },
-
-      "q_kmv" -> {
-        val k = 256
-        s"""WITH t AS (SELECT DISTINCT source, ${h32("tok")} AS h
-           |  FROM (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS tok FROM documents)),
-           |r AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rk FROM t),
-           |sk AS (SELECT source, list(h ORDER BY h) AS kmv, CAST(count(*) AS BIGINT) AS sz FROM r WHERE rk <= $k GROUP BY 1),
-           |est AS (SELECT source, kmv,
-           |    CASE WHEN sz < $k THEN CAST(sz AS DOUBLE)
-           |      ELSE ${k - 1}.0 / ((CAST(kmv[$k] AS DOUBLE) + 1.0) / 4294967296.0) END AS e0 FROM sk),
-           |pr AS (SELECT a.source AS src_a, b.source AS src_b, a.kmv AS sa, b.kmv AS sb,
-           |    floor(a.e0 * 1000000 + 0.5) / 1000000 AS est_a, floor(b.e0 * 1000000 + 0.5) / 1000000 AS est_b
-           |  FROM est a JOIN est b ON a.source < b.source),
-           |m AS (SELECT *, list_sort(list_distinct(list_concat(sa, sb))) AS un FROM pr),
-           |l AS (SELECT *, un[1:$k] AS ll, len(un) AS usz FROM m),
-           |f AS (SELECT *, len(list_intersect(ll, list_intersect(sa, sb))) AS ncom, len(ll) AS lsz,
-           |    CASE WHEN usz < $k THEN CAST(usz AS DOUBLE)
-           |      ELSE ${k - 1}.0 / ((CAST(ll[$k] AS DOUBLE) + 1.0) / 4294967296.0) END AS eu FROM l),
-           |g AS (SELECT *, CASE WHEN lsz > 0 THEN CAST(ncom AS DOUBLE) / CAST(lsz AS DOUBLE) END AS jac FROM f)
-           |SELECT src_a, src_b, est_a, est_b,
-           |  floor(eu * 1000000 + 0.5) / 1000000 AS est_union,
-           |  floor(jac * 1000000 + 0.5) / 1000000 AS est_jaccard,
-           |  floor(jac * eu * 1000000 + 0.5) / 1000000 AS est_intersection
-           |FROM g""".stripMargin
-      },
-
-      "q_qlm" ->
-        """WITH qt(query_id, term) AS (VALUES
-          |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-          |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-          |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-          |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-          |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-          |coll AS (SELECT CAST(CAST(sum(len(toks)) AS BIGINT) AS DOUBLE) AS c FROM tok),
-          |tf AS (SELECT id, term, count(*) AS tf FROM (SELECT id, unnest(toks) AS term FROM tok)
-          |  WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-          |cf AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tf GROUP BY 1),
-          |ql AS (SELECT query_id, CAST(count(*) AS DOUBLE) AS qlen FROM qt JOIN cf USING (term) GROUP BY 1),
-          |m AS (SELECT query_id, id,
-          |    CAST(sum(CAST(floor(ln(1.0 + CAST(tf AS DOUBLE) * c / (CAST(1000 AS DOUBLE) * CAST(cf AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS mt
-          |  FROM tf JOIN cf USING (term) JOIN qt USING (term), coll GROUP BY 1, 2),
-          |s AS (SELECT query_id, m.id AS doc_id,
-          |    floor((mt + qlen * ln(CAST(1000 AS DOUBLE) / (dl + CAST(1000 AS DOUBLE)))) * 1000000 + 0.5) / 1000000 AS qlm
-          |  FROM m JOIN dl ON m.id = dl.id JOIN ql USING (query_id)),
-          |r AS (SELECT query_id, doc_id, qlm,
-          |    row_number() OVER (PARTITION BY query_id ORDER BY qlm DESC, doc_id) AS rank FROM s)
-          |SELECT query_id, doc_id, CAST(rank AS BIGINT) AS rank, qlm FROM r WHERE rank <= 10""".stripMargin,
-
-      "q_mmr" -> {
-        // λ and (1−λ) rendered as the IEEE ops Scala performs: 0.7 and
-        // (1.0 − 0.7) = 0.30000000000000004 — NOT the decimal 0.3
-        val lam = "CAST(0.7 AS DOUBLE)"
-        val oneMinusLam = "(CAST(1 AS DOUBLE) - CAST(0.7 AS DOUBLE))"
-        def mmrExpr(ms: String) =
-          s"floor(($lam * rel - $oneMinusLam * $ms) * 1000000 + 0.5) / 1000000"
-        def stage(j: Int): String =
-          s"""p$j AS (SELECT c.qid, c.id, any_value(c.rel) AS rel, any_value(c.vec) AS vec,
-             |    max(floor(${cosSql("c.vec", "s.vec")} * 1000000 + 0.5) / 1000000) AS ms
-             |  FROM cv c JOIN sel${j - 1} s ON c.qid = s.qid
-             |  WHERE NOT EXISTS (SELECT 1 FROM sel${j - 1} x WHERE x.qid = c.qid AND x.id = c.id)
-             |  GROUP BY 1, 2),
-             |s$j AS (SELECT qid, $j AS step, id, rel, ms AS max_sim, ${mmrExpr("ms")} AS mmr, vec
-             |  FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY ${mmrExpr("ms")} DESC, id) AS rk
-             |        FROM p$j) WHERE rk = 1),
-             |sel$j AS (SELECT * FROM sel${j - 1} UNION ALL SELECT * FROM s$j)""".stripMargin
-        s"""WITH q AS (SELECT * FROM embeddings WHERE vec_id < 3),
-           |sc AS (SELECT q.vec_id AS qid, c.vec_id AS id, ${cosSql("q.embedding", "c.embedding")} AS cos
-           |       FROM embeddings c JOIN q ON c.vec_id <> q.vec_id),
-           |cand AS (SELECT qid, id, floor(cos * 1000000 + 0.5) / 1000000 AS rel
-           |  FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id) AS rk FROM sc)
-           |  WHERE rk <= 20),
-           |cv AS (SELECT cand.qid, cand.id, cand.rel, e.embedding AS vec
-           |  FROM cand JOIN embeddings e ON cand.id = e.vec_id),
-           |sel1 AS (SELECT qid, 1 AS step, id, rel, CAST(NULL AS DOUBLE) AS max_sim,
-           |    floor($lam * rel * 1000000 + 0.5) / 1000000 AS mmr, vec
-           |  FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, id) AS rk FROM cv)
-           |  WHERE rk = 1),
-           |${(2 to 5).map(stage).mkString(",\n")}
-           |SELECT qid AS query_id, CAST(step AS BIGINT) AS step, id AS neighbor_id, rel, max_sim, mmr
-           |FROM sel5""".stripMargin
-      },
-
-      "q_communities" -> {
-        def round(j: Int): String =
-          s"""l$j AS (SELECT node, community FROM (
-             |  SELECT n.node, l.community, count(*) AS c,
-             |    row_number() OVER (PARTITION BY n.node ORDER BY count(*) DESC, l.community) AS rk
-             |  FROM nb n JOIN l${j - 1} l ON n.nb = l.node GROUP BY 1, 2) WHERE rk = 1)""".stripMargin
-        s"""WITH p AS (SELECT least(a.l_partkey, b.l_partkey) AS a, greatest(a.l_partkey, b.l_partkey) AS b
-           |  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
-           |e0 AS (SELECT a, b FROM p GROUP BY 1, 2 HAVING count(*) >= 2),
-           |nb AS (SELECT a AS node, b AS nb FROM e0 UNION ALL SELECT b, a FROM e0),
-           |l0 AS (SELECT DISTINCT node, node AS community FROM nb),
-           |${(1 to 3).map(round).mkString(",\n")}
-           |SELECT community, CAST(count(*) AS BIGINT) AS n_nodes, min(node) AS min_member
-           |FROM l3 GROUP BY 1 HAVING count(*) >= 5""".stripMargin
-      },
-
-      "q_nb" ->
-        s"""WITH $nbScoredCtes
-           |SELECT id AS doc_id, label, class, log_post, posterior FROM scored""".stripMargin,
-
-      "q_label_noise" ->
-        s"""WITH $nbScoredCtes,
-           |th AS (SELECT class, floor((CAST(sum(CAST(floor(posterior * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-           |    / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS t
-           |  FROM scored WHERE label = class GROUP BY 1),
-           |cand AS (SELECT s.id, s.label, s.class, s.posterior FROM scored s JOIN th ON s.class = th.class
-           |  WHERE s.posterior >= th.t),
-           |conf AS (SELECT id, label, class AS confident_class FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY id ORDER BY posterior DESC, class) AS rn FROM cand)
-           |  WHERE rn = 1),
-           |lt AS (SELECT label, count(*) AS n_label FROM (SELECT DISTINCT id, label FROM scored) GROUP BY 1),
-           |cj AS (SELECT label, confident_class, CAST(count(*) AS BIGINT) AS n FROM conf GROUP BY 1, 2)
-           |SELECT label, confident_class, n,
-           |  floor(CAST(n AS DOUBLE) / CAST(n_label AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_of_label,
-           |  n_label, CAST(n_label - sum(n) OVER (PARTITION BY label) AS BIGINT) AS n_unconfident
-           |FROM cj JOIN lt USING (label)""".stripMargin,
-
-      "q_cox" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH ${coxCtes(4)}
-           |SELECT (SELECT count(*) FROM subj) AS n,
-           |  (SELECT count(*) FROM subj WHERE obs) AS n_events,
-           |  b4.beta AS beta, ${r6("exp(b4.beta)")} AS hr,
-           |  CASE WHEN ui4.i > 0 THEN ${r6("1.0 / sqrt(ui4.i)")} END AS se,
-           |  ui4.ll AS loglik
-           |FROM b4, ui4""".stripMargin
-      },
-
-      "q_logreg" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH ${logitCtes("n_chars >= 300", 5)},
-           |lc AS (SELECT CAST(y AS DOUBLE) AS yd,
-           |    least(greatest(p, 1e-6), CAST(1.0 AS DOUBLE) - 1e-6) AS pc FROM p5),
-           |lossq AS (SELECT count(*) AS n,
-           |    ${r6(s"coalesce(${dsum(r6("-(yd * ln(pc) + (1.0 - yd) * ln(1.0 - pc))"))}, 0.0) / CAST(count(*) AS DOUBLE)")} AS log_loss
-           |  FROM lc)
-           |SELECT '__intercept' AS feature, cb5.c0 AS beta, lossq.n AS n, lossq.log_loss FROM cb5, lossq
-           |UNION ALL SELECT 'x1', cb5.c1, lossq.n, lossq.log_loss FROM cb5, lossq
-           |UNION ALL SELECT 'x2', cb5.c2, lossq.n, lossq.log_loss FROM cb5, lossq""".stripMargin
-      },
-
-      "q_ipw" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH ${logitCtes("source = 'src0'", 5)},
-           |cl AS (SELECT n_chars, y = 1 AS t,
-           |    ${r6("least(greatest(p, CAST(0.05 AS DOUBLE)), CAST(0.95 AS DOUBLE))")} AS pcl FROM p5),
-           |wts AS (SELECT CAST(n_chars AS DOUBLE) AS yo, t,
-           |    CASE WHEN t THEN ${r6("1.0 / pcl")} END AS wt,
-           |    CASE WHEN NOT t THEN ${r6("1.0 / (1.0 - pcl)")} END AS wc FROM cl),
-           |ag AS (SELECT count(CASE WHEN t THEN 1 END) AS n_treated,
-           |    count(CASE WHEN NOT t THEN 1 END) AS n_control,
-           |    ${dsum(r6("wt * yo"))} / ${dsum("wt")} AS mt,
-           |    ${dsum(r6("wc * yo"))} / ${dsum("wc")} AS mc FROM wts)
-           |SELECT n_treated, n_control, ${r6("mt")} AS mean_treated,
-           |  ${r6("mc")} AS mean_control, ${r6("mt - mc")} AS ate FROM ag""".stripMargin
-      },
-
-      "q_eb_shrink" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH grp AS (SELECT o_custkey, count(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS x,
-           |    count(*) AS n FROM orders GROUP BY 1),
-           |gr AS (SELECT o_custkey, x, n, ${r6("CAST(x AS DOUBLE) / CAST(n AS DOUBLE)")} AS raw_rate FROM grp),
-           |mo AS (SELECT ${dsum("raw_rate")} / CAST(count(*) AS DOUBLE) AS m,
-           |    CASE WHEN count(*) > 1 THEN (${dsum(r6("raw_rate * raw_rate"))} -
-           |      ${dsum("raw_rate")} * ${dsum("raw_rate")} / CAST(count(*) AS DOUBLE)) / (CAST(count(*) AS DOUBLE) - 1.0)
-           |    END AS v FROM gr),
-           |pr AS (SELECT CASE WHEN v > 0 AND m * (1.0 - m) > v THEN ${r6("m * (1.0 - m) / v - 1.0")} END AS k,
-           |    m FROM mo),
-           |sh AS (SELECT gr.*, CASE WHEN pr.k > 0 THEN ${r6("pr.m * pr.k")} END AS eb_alpha,
-           |    CASE WHEN pr.k > 0 THEN ${r6("(1.0 - pr.m) * pr.k")} END AS eb_beta FROM gr, pr)
-           |SELECT o_custkey, x, n, raw_rate,
-           |  CASE WHEN eb_alpha IS NOT NULL THEN
-           |    ${r6("(CAST(x AS DOUBLE) + eb_alpha) / (CAST(n AS DOUBLE) + eb_alpha + eb_beta)")}
-           |  ELSE raw_rate END AS shrunk_rate, eb_alpha, eb_beta FROM sh""".stripMargin
-      },
-
-      "q_conformal" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH rws AS (SELECT doc_id AS id, source AS grp, CAST(n_chars AS DOUBLE) AS y,
-           |    CASE WHEN h < 50 THEN 'train' WHEN h < 75 THEN 'cal' ELSE 'test' END AS split
-           |  FROM (SELECT *, ${h32("concat('c42', '|', CAST(doc_id AS VARCHAR))")} % 100 AS h FROM documents)),
-           |tm AS (SELECT grp, count(*) AS n_train,
-           |    ${r6(s"${dsum("y")} / CAST(count(*) AS DOUBLE)")} AS y_hat
-           |  FROM rws WHERE split = 'train' GROUP BY 1),
-           |sc AS (SELECT r.id, r.grp, r.split, r.y, t.y_hat, ${r6("abs(r.y - t.y_hat)")} AS s
-           |  FROM rws r JOIN tm t ON r.grp = t.grp WHERE r.split <> 'train'),
-           |cal AS (SELECT *, row_number() OVER (PARTITION BY grp ORDER BY s, id) AS rn,
-           |    count(*) OVER (PARTITION BY grp) AS ncal FROM sc WHERE split = 'cal'),
-           |qh AS (SELECT grp, max(ncal) AS n_cal,
-           |    max(CASE WHEN rn = CAST(ceil(CAST(ncal + 1 AS DOUBLE) * CAST(0.8 AS DOUBLE)) AS BIGINT)
-           |      THEN s END) AS q_hat FROM cal GROUP BY 1),
-           |tst AS (SELECT s.grp, count(*) AS n_test,
-           |    CASE WHEN max(q.q_hat) IS NOT NULL THEN
-           |      ${r6("CAST(count(CASE WHEN s.s <= q.q_hat THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")}
-           |    END AS coverage
-           |  FROM sc s JOIN qh q ON s.grp = q.grp WHERE s.split = 'test' GROUP BY 1)
-           |SELECT t.grp AS "group", t.n_train, coalesce(q.n_cal, 0) AS n_cal,
-           |  coalesce(ts.n_test, 0) AS n_test, t.y_hat, q.q_hat, ts.coverage,
-           |  CAST(0.8 AS DOUBLE) AS target
-           |FROM tm t LEFT JOIN qh q ON t.grp = q.grp LEFT JOIN tst ts ON t.grp = ts.grp""".stripMargin
-      },
-
-      "q_cmh" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        // the SAME A&S 26.2.16 tail as Hypothesis.pFromZ (the q_bh form)
-        val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH e AS (SELECT event_type,
-           |    ${h32("concat('cmh:', CAST(user_id AS VARCHAR))")} % 2 = 1 AS a,
-           |    value >= 10.0 AS hit FROM events),
-           |cells AS (SELECT event_type,
-           |    count(CASE WHEN a AND hit THEN 1 END) AS ca,
-           |    count(CASE WHEN a AND NOT hit THEN 1 END) AS cb,
-           |    count(CASE WHEN NOT a AND hit THEN 1 END) AS cc,
-           |    count(CASE WHEN NOT a AND NOT hit THEN 1 END) AS cd
-           |  FROM e GROUP BY 1),
-           |w AS (SELECT *, ca + cb + cc + cd AS n, ca + cb + cc + cd >= 2 AS info FROM cells),
-           |s AS (SELECT
-           |    count(CASE WHEN info THEN 1 END) AS k_strata,
-           |    count(CASE WHEN NOT info THEN 1 END) AS k_dropped,
-           |    CAST(coalesce(sum(CASE WHEN info THEN n END), 0) AS BIGINT) AS n,
-           |    coalesce(${dsum(s"CASE WHEN info THEN ${r6("CAST(ca AS DOUBLE) - CAST(ca + cb AS DOUBLE) * CAST(ca + cc AS DOUBLE) / CAST(n AS DOUBLE)")} END")}, 0.0) AS dev,
-           |    coalesce(${dsum(s"CASE WHEN info THEN ${r6("CAST(ca + cb AS DOUBLE) * CAST(cc + cd AS DOUBLE) * CAST(ca + cc AS DOUBLE) * CAST(cb + cd AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))")} END")}, 0.0) AS v,
-           |    coalesce(${dsum(s"CASE WHEN info THEN ${r6("CAST(ca AS DOUBLE) * CAST(cd AS DOUBLE) / CAST(n AS DOUBLE)")} END")}, 0.0) AS rn,
-           |    coalesce(${dsum(s"CASE WHEN info THEN ${r6("CAST(cb AS DOUBLE) * CAST(cc AS DOUBLE) / CAST(n AS DOUBLE)")} END")}, 0.0) AS rd
-           |  FROM w),
-           |c2 AS (SELECT *, CASE WHEN v > 0 THEN ${r6("dev * dev / v")} END AS chi2 FROM s),
-           |pz AS (SELECT *, sqrt(chi2) AS az, 1.0 / (1.0 + 0.33267 * sqrt(chi2)) AS tt FROM c2)
-           |SELECT k_strata, k_dropped, n, chi2,
-           |  CASE WHEN chi2 IS NOT NULL THEN ${r6(pSql)} END AS p_value,
-           |  CASE WHEN rd > 0 THEN ${r6("rn / rd")} END AS or_mh
-           |FROM pz""".stripMargin
-      },
-
-      "q_stump" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def gini(p: String, n: String) =
-          s"(1.0 - (CAST($p AS DOUBLE) / CAST($n AS DOUBLE)) * (CAST($p AS DOUBLE) / CAST($n AS DOUBLE)) - (1.0 - CAST($p AS DOUBLE) / CAST($n AS DOUBLE)) * (1.0 - CAST($p AS DOUBLE) / CAST($n AS DOUBLE)))"
-        s"""WITH ${logitDocsCtes("n_chars >= 300")},
-           |m AS (SELECT y, 'x1' AS f, x1 AS x FROM ld WHERE x1 IS NOT NULL
-           |  UNION ALL SELECT y, 'x2', x2 FROM ld WHERE x2 IS NOT NULL),
-           |bd AS (SELECT f, min(x) AS lo, max(x) AS hi, count(*) AS n, sum(y) AS npos
-           |  FROM m GROUP BY 1 HAVING max(x) > min(x)),
-           |bw AS (SELECT *, (hi - lo) / 16.0 AS w FROM bd),
-           |cl AS (SELECT m.f, least(CAST(floor((m.x - b.lo) / b.w) AS INT), 15) AS bin,
-           |    count(*) AS cn, sum(m.y) AS cpos FROM m JOIN bw b USING (f) GROUP BY 1, 2),
-           |cum AS (SELECT f, bin,
-           |    sum(cn) OVER (PARTITION BY f ORDER BY bin) AS nl,
-           |    sum(cpos) OVER (PARTITION BY f ORDER BY bin) AS posl FROM cl),
-           |sp AS (SELECT c.f, b.lo + b.w * CAST(c.bin + 1 AS DOUBLE) AS threshold,
-           |    c.nl, b.n - c.nl AS nr,
-           |    ${gini("b.npos", "b.n")} AS gp,
-           |    (CAST(c.nl AS DOUBLE) * ${gini("c.posl", "c.nl")} +
-           |     CAST(b.n - c.nl AS DOUBLE) * ${gini("b.npos - c.posl", "b.n - c.nl")}) / CAST(b.n AS DOUBLE) AS gs
-           |  FROM cum c JOIN bw b USING (f) WHERE c.nl > 0 AND c.nl < b.n),
-           |g AS (SELECT *, ${r6("gp - gs")} AS gain FROM sp),
-           |best AS (SELECT *, row_number() OVER (PARTITION BY f ORDER BY gain DESC, threshold) AS rnk FROM g)
-           |SELECT f AS feature, ${r6("threshold")} AS threshold,
-           |  CAST(nl AS BIGINT) AS n_left, CAST(nr AS BIGINT) AS n_right,
-           |  ${r6("gp")} AS gini_parent, ${r6("gs")} AS gini_split, gain
-           |FROM best WHERE rnk = 1""".stripMargin
-      },
-
-      "q_jackknife" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH rws AS (SELECT
-           |    ${h32("concat('jk42', '|', CAST(user_id AS VARCHAR))")} % 20 AS b,
-           |    value AS num, CASE WHEN event_type = 'click' THEN 1.0 ELSE 0.0 END AS den
-           |  FROM events),
-           |pb AS (SELECT b, count(*) AS nrows,
-           |    coalesce(${dsum(r6("num"))}, 0.0) AS n, coalesce(${dsum(r6("den"))}, 0.0) AS d
-           |  FROM rws GROUP BY 1),
-           |tot AS (SELECT CAST(sum(nrows) AS BIGINT) AS n_rows, count(*) AS n_buckets,
-           |    coalesce(${dsum("n")}, 0.0) AS tn, coalesce(${dsum("d")}, 0.0) AS td FROM pb),
-           |reps AS (SELECT pb.*, CASE WHEN t.td - pb.d > 0 THEN ${r6("(t.tn - pb.n) / (t.td - pb.d)")} END AS rep
-           |  FROM pb, tot t),
-           |st AS (SELECT count(CASE WHEN rep IS NULL THEN 1 END) AS b_degenerate,
-           |    CAST(count(*) AS DOUBLE) AS bd,
-           |    coalesce(${dsum("rep")}, 0.0) AS sr, coalesce(${dsum(r6("rep * rep"))}, 0.0) AS sr2 FROM reps),
-           |fin AS (SELECT t.n_rows, t.n_buckets, st.b_degenerate,
-           |    CASE WHEN t.td > 0 THEN ${r6("t.tn / t.td")} END AS ratio,
-           |    CASE WHEN st.b_degenerate = 0 AND t.td > 0 THEN
-           |      ${r6("sqrt(greatest(0.0, (st.bd - 1.0) / st.bd * (st.sr2 - st.sr * st.sr / st.bd)))")}
-           |    END AS se_jack
-           |  FROM tot t, st)
-           |SELECT n_rows, n_buckets, b_degenerate, ratio, se_jack,
-           |  CASE WHEN se_jack IS NOT NULL THEN ${r6("ratio - 1.959964 * se_jack")} END AS ci_lo,
-           |  CASE WHEN se_jack IS NOT NULL THEN ${r6("ratio + 1.959964 * se_jack")} END AS ci_hi
-           |FROM fin""".stripMargin
-      },
-
-      "q_mahalanobis" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH x AS (SELECT vec_id, ${r6("CAST(unnest(embedding) AS DOUBLE)")} AS v,
-           |    unnest(range(0, len(embedding))) AS pos FROM embeddings),
-           |mo AS (SELECT pos, ${dsum("v")} / CAST(count(*) AS DOUBLE) AS mean,
-           |    CASE WHEN count(*) > 1 THEN
-           |      (${dsum(r6("v * v"))} - ${dsum("v")} * ${dsum("v")} / CAST(count(*) AS DOUBLE)) / (CAST(count(*) AS DOUBLE) - 1.0)
-           |    ELSE 0.0 END AS variance
-           |  FROM x GROUP BY 1),
-           |nd AS (SELECT CAST(count(CASE WHEN variance > 0 THEN 1 END) AS BIGINT) AS n_dims_used FROM mo),
-           |z AS (SELECT x.vec_id,
-           |    CASE WHEN mo.variance > 0 THEN ${r6("(x.v - mo.mean) * (x.v - mo.mean) / mo.variance")}
-           |      ELSE 0.0 END AS z2
-           |  FROM x JOIN mo USING (pos)),
-           |m2 AS (SELECT vec_id, coalesce(${dsum("z2")}, 0.0) AS m2 FROM z GROUP BY 1)
-           |SELECT vec_id, m2, ${r6("sqrt(m2)")} AS maha, nd.n_dims_used FROM m2, nd""".stripMargin
-      },
-
-      "q_sampling_table" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
-           |  FROM documents),
-           |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1),
-           |wt AS (SELECT word, n, ${r6("pow(CAST(n AS DOUBLE), 0.75)")} AS weight FROM c),
-           |tot AS (SELECT CAST(sum(CAST(weight AS DECIMAL(38,6))) AS DOUBLE) AS tw FROM wt),
-           |pr AS (SELECT word, n, weight, ${r6("weight / t.tw")} AS prob FROM wt, tot t),
-           |cm AS (SELECT *, CAST(sum(CAST(prob AS DECIMAL(38,6)))
-           |    OVER (ORDER BY n DESC, word) AS DOUBLE) AS cum_hi FROM pr)
-           |SELECT word, n, weight, prob, ${r6("cum_hi - prob")} AS cum_lo, cum_hi FROM cm""".stripMargin
-      },
-
-      "q_bradley_terry" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        def step(k: Int): String =
-          s"""d$k AS (SELECT g.a AS item,
-             |    ${dsum(r6("CAST(g.g AS DOUBLE) / (ta.theta + tb.theta)"))} AS den
-             |  FROM gm g JOIN t$k ta ON g.a = ta.item JOIN t$k tb ON g.b = tb.item GROUP BY 1),
-             |r$k AS (SELECT itw.item,
-             |    CASE WHEN d.den > 0 THEN CAST(itw.n_wins AS DOUBLE) / d.den ELSE 0.0 END AS raw
-             |  FROM itw JOIN d$k d USING (item)),
-             |s$k AS (SELECT CAST(count(*) AS DOUBLE) / ${dsum(r6("raw"))} AS kk FROM r$k),
-             |t${k + 1} AS (SELECT item, ${r6("raw * s.kk")} AS theta FROM r$k, s$k s)""".stripMargin
-        s"""WITH p0 AS (SELECT
-           |    CASE WHEN a.n_chars > b.n_chars THEN a.source ELSE b.source END AS w,
-           |    CASE WHEN a.n_chars > b.n_chars THEN b.source ELSE a.source END AS l
-           |  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-           |  WHERE a.doc_id % 2 = 0 AND a.n_chars <> b.n_chars),
-           |wc AS (SELECT w, l, count(*) AS n FROM p0 WHERE w <> l GROUP BY 1, 2),
-           |gm AS (SELECT a, b, CAST(sum(n) AS BIGINT) AS g FROM (
-           |    SELECT w AS a, l AS b, n FROM wc UNION ALL SELECT l AS a, w AS b, n FROM wc)
-           |  GROUP BY 1, 2),
-           |it AS (SELECT a AS item, CAST(sum(g) AS BIGINT) AS n_games FROM gm GROUP BY 1),
-           |wi AS (SELECT w AS item, CAST(sum(n) AS BIGINT) AS n_wins FROM wc GROUP BY 1),
-           |itw AS (SELECT it.item, coalesce(wi.n_wins, 0) AS n_wins, it.n_games
-           |  FROM it LEFT JOIN wi USING (item)),
-           |t0 AS (SELECT item, CAST(1.0 AS DOUBLE) AS theta FROM itw),
-           |${(0 until 3).map(step).mkString(",\n")}
-           |SELECT itw.item, itw.n_wins, itw.n_games, t3.theta
-           |FROM itw JOIN t3 ON itw.item = t3.item""".stripMargin
-      },
-
-      "q_brier" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
-           |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS y FROM documents),
-           |g AS (SELECT lang, least(9, greatest(0, CAST(floor(x * 10) AS BIGINT))) AS bin,
-           |    count(*) AS n, ${dsum(r6("x"))} AS sx, CAST(sum(y) AS BIGINT) AS k,
-           |    ${dsum(r6("(x - CAST(y AS DOUBLE)) * (x - CAST(y AS DOUBLE))"))} AS sq
-           |  FROM v GROUP BY 1, 2),
-           |w AS (SELECT lang, n, sx, k, sq,
-           |    sx / CAST(n AS DOUBLE) AS pbar, CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS ybar,
-           |    CAST(sum(n) OVER (PARTITION BY lang) AS DOUBLE) AS nd,
-           |    CAST(sum(k) OVER (PARTITION BY lang) AS DOUBLE) /
-           |      CAST(sum(n) OVER (PARTITION BY lang) AS DOUBLE) AS yg,
-           |    CAST(sum(CAST(sq AS DECIMAL(38,6))) OVER (PARTITION BY lang) AS DOUBLE) AS sqs
-           |  FROM g),
-           |z AS (SELECT lang, CAST(nd AS BIGINT) AS n,
-           |    sqs / nd AS brier,
-           |    CAST(sum(CAST(${r6("CAST(n AS DOUBLE) * (pbar - ybar) * (pbar - ybar)")} AS DECIMAL(38,6)))
-           |      OVER (PARTITION BY lang) AS DOUBLE) / nd AS rel,
-           |    CAST(sum(CAST(${r6("CAST(n AS DOUBLE) * (ybar - yg) * (ybar - yg)")} AS DECIMAL(38,6)))
-           |      OVER (PARTITION BY lang) AS DOUBLE) / nd AS res,
-           |    yg FROM w)
-           |SELECT DISTINCT lang, n, ${r6("brier")} AS brier, ${r6("rel")} AS reliability,
-           |  ${r6("res")} AS resolution, ${r6("yg * (1.0 - yg)")} AS uncertainty FROM z""".stripMargin
-      },
-
-      "q_neyman" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH v AS (SELECT source, CAST(n_chars AS DOUBLE) AS x FROM documents
-           |  WHERE n_chars IS NOT NULL),
-           |st AS (SELECT source AS stratum, count(*) AS n,
-           |    CASE WHEN count(*) > 1 THEN sqrt(greatest(0.0,
-           |      (${dsum(r6("x * x"))} - ${dsum(r6("x"))} * ${dsum(r6("x"))} / CAST(count(*) AS DOUBLE))
-           |        / (CAST(count(*) AS DOUBLE) - 1.0)))
-           |    ELSE 0.0 END AS sd0 FROM v GROUP BY 1),
-           |sg AS (SELECT stratum, n, ${r6("sd0")} AS sigma,
-           |    ${r6(s"CAST(n AS DOUBLE) * ${r6("sd0")}")} AS wt FROM st),
-           |tot AS (SELECT ${dsum("wt")} AS tw FROM sg),
-           |al AS (SELECT sg.stratum, sg.n, sg.sigma,
-           |    CASE WHEN t.tw > 0 THEN ${r6("sg.wt / t.tw")} ELSE 0.0 END AS alloc_frac
-           |  FROM sg, tot t),
-           |rw AS (SELECT *, 100.0 * alloc_frac AS raw,
-           |    CAST(floor(100.0 * alloc_frac) AS BIGINT) AS base FROM al),
-           |fr AS (SELECT *, ${r6("raw - CAST(base AS DOUBLE)")} AS fracpart FROM rw),
-           |sp AS (SELECT CAST(sum(base) AS BIGINT) AS spent FROM fr)
-           |SELECT stratum, CAST(n AS BIGINT) AS n, sigma, alloc_frac,
-           |  least(CAST(n AS BIGINT), base + CASE WHEN
-           |    row_number() OVER (ORDER BY fracpart DESC, stratum) <= 100 - sp.spent
-           |    AND alloc_frac > 0
-           |    THEN 1 ELSE 0 END) AS n_alloc
-           |FROM fr, sp""".stripMargin
-      },
-
-      "q_cv" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH rws AS (SELECT source AS g,
-           |    ${h32("concat('cv42', '|', CAST(doc_id AS VARCHAR))")} % 5 AS fold,
-           |    CAST(n_chars AS DOUBLE) AS y FROM documents WHERE n_chars IS NOT NULL),
-           |cl AS (SELECT g, fold, count(*) AS cn, ${dsum(r6("y"))} AS cs FROM rws GROUP BY 1, 2),
-           |pr AS (SELECT g, fold,
-           |    CASE WHEN sum(cn) OVER (PARTITION BY g) > cn THEN
-           |      ${r6("(CAST(sum(CAST(cs AS DECIMAL(38,6))) OVER (PARTITION BY g) AS DOUBLE) - cs) / CAST(sum(cn) OVER (PARTITION BY g) - cn AS DOUBLE)")}
-           |    END AS yhat FROM cl),
-           |j AS (SELECT r.fold, r.y, p.yhat FROM rws r JOIN pr p ON r.g = p.g AND r.fold = p.fold)
-           |SELECT fold, count(CASE WHEN yhat IS NOT NULL THEN 1 END) AS n_test,
-           |  count(CASE WHEN yhat IS NULL THEN 1 END) AS n_skipped,
-           |  ${r6(s"${dsum(s"CASE WHEN yhat IS NOT NULL THEN ${r6("abs(y - yhat)")} END")} / CAST(count(CASE WHEN yhat IS NOT NULL THEN 1 END) AS DOUBLE)")} AS mae,
-           |  ${r6(s"sqrt(${dsum(s"CASE WHEN yhat IS NOT NULL THEN ${r6("(y - yhat) * (y - yhat)")} END")} / CAST(count(CASE WHEN yhat IS NOT NULL THEN 1 END) AS DOUBLE))")} AS rmse
-           |FROM j GROUP BY 1""".stripMargin
-      },
-
-      "q_kwic" ->
-        """WITH tok AS (SELECT doc_id,
-          |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts
-          |  FROM documents),
-          |h AS (SELECT doc_id, ts, unnest(ts) AS w, unnest(range(0, len(ts))) AS pos FROM tok)
-          |SELECT doc_id, CAST(pos AS BIGINT) AS pos,
-          |  coalesce(array_to_string(ts[greatest(1, pos - 2) : pos], ' '), '') AS left_ctx,
-          |  w AS term,
-          |  coalesce(array_to_string(ts[pos + 2 : pos + 4], ' '), '') AS right_ctx
-          |FROM h WHERE w = 'spark'""".stripMargin,
-
-      "q_heldout_ppl" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH tk AS (SELECT ${h32("concat('lm42', '|', CAST(doc_id AS VARCHAR))")} % 100 < 70 AS train,
-           |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
-           |  FROM documents),
-           |c AS (SELECT w, count(*) AS c FROM tk WHERE train GROUP BY 1),
-           |ks AS (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS v FROM c),
-           |te AS (SELECT t.w, c.c FROM tk t LEFT JOIN c ON t.w = c.w WHERE NOT t.train),
-           |sc AS (SELECT c IS NULL AS oov,
-           |    ${r6("-ln((CAST(coalesce(c, 0) AS DOUBLE) + 1.0) / (CAST(ks.n AS DOUBLE) + 1.0 * CAST(ks.v + 1 AS DOUBLE)))")} AS nll
-           |  FROM te, ks),
-           |ag AS (SELECT (SELECT n FROM ks) AS n_train_tokens, (SELECT v FROM ks) AS vocab_size,
-           |    count(*) AS n_test_tokens, count(CASE WHEN oov THEN 1 END) AS n_oov,
-           |    ${r6(s"coalesce(${dsum("nll")}, 0.0) / CAST(count(*) AS DOUBLE)")} AS avg_nll
-           |  FROM sc)
-           |SELECT n_train_tokens, vocab_size, n_test_tokens, n_oov, avg_nll,
-           |  ${r6("exp(avg_nll)")} AS ppl FROM ag""".stripMargin
-      },
-
-      "q_aipw" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        def arm(cond: String, tag: String): String =
-          s"""count(CASE WHEN $cond THEN 1 END) AS n$tag,
-             |    coalesce(${dsum(s"CASE WHEN $cond THEN ${r6("x1")} END")}, 0.0) AS sx$tag,
-             |    coalesce(${dsum(s"CASE WHEN $cond THEN ${r6("yo")} END")}, 0.0) AS sy$tag,
-             |    coalesce(${dsum(s"CASE WHEN $cond THEN ${r6("x1 * yo")} END")}, 0.0) AS sxy$tag,
-             |    coalesce(${dsum(s"CASE WHEN $cond THEN ${r6("x1 * x1")} END")}, 0.0) AS sxx$tag""".stripMargin
-        def ab(tag: String): String =
-          s"""CASE WHEN CAST(n$tag AS DOUBLE) > 1 AND CAST(n$tag AS DOUBLE) * sxx$tag - sx$tag * sx$tag > 0
-             |      THEN ${r6(s"(CAST(n$tag AS DOUBLE) * sxy$tag - sx$tag * sy$tag) / (CAST(n$tag AS DOUBLE) * sxx$tag - sx$tag * sx$tag)")}
-             |      ELSE 0.0 END AS b$tag""".stripMargin
-        s"""WITH ${logitCtes("source = 'src0'", 5)},
-           |cl AS (SELECT CAST(n_chars AS DOUBLE) AS yo, x1, y = 1 AS t,
-           |    ${r6("least(greatest(p, CAST(0.05 AS DOUBLE)), CAST(0.95 AS DOUBLE))")} AS pcl FROM p5),
-           |ms AS (SELECT ${arm("t", "1")},
-           |    ${arm("NOT t", "0")} FROM cl),
-           |mb AS (SELECT *, ${ab("1")}, ${ab("0")} FROM ms),
-           |ma AS (SELECT *,
-           |    CASE WHEN n1 > 0 THEN ${r6("(sy1 - b1 * sx1) / CAST(n1 AS DOUBLE)")} ELSE 0.0 END AS a1,
-           |    CASE WHEN n0 > 0 THEN ${r6("(sy0 - b0 * sx0) / CAST(n0 AS DOUBLE)")} ELSE 0.0 END AS a0
-           |  FROM mb),
-           |co AS (SELECT cl.t,
-           |    ${r6("(ma.a1 + ma.b1 * cl.x1) - (ma.a0 + ma.b0 * cl.x1) + CASE WHEN cl.t THEN (cl.yo - (ma.a1 + ma.b1 * cl.x1)) / cl.pcl ELSE 0.0 END - CASE WHEN NOT cl.t THEN (cl.yo - (ma.a0 + ma.b0 * cl.x1)) / (1.0 - cl.pcl) ELSE 0.0 END")} AS contrib
-           |  FROM cl, ma)
-           |SELECT (SELECT n1 FROM ma) AS n_treated, (SELECT n0 FROM ma) AS n_control,
-           |  ${r6(s"coalesce(${dsum("contrib")}, 0.0) / CAST(count(*) AS DOUBLE)")} AS ate
-           |FROM co""".stripMargin
-      },
-
-      "q_markov_attr" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        // channels fixed by the testdata event-type domain (sorted, as
-        // markovRemoval derives them); K matches iters = 12
-        val channels = Seq("click", "error", "signup", "view")
-        val K = 12
-        def chain(tag: String, removed: Option[String]): String = {
-          val excl = removed.map(c => s" AND pr.t <> '$c'").getOrElse("")
-          val steps = (1 to K).map { k =>
-            s"""ab$tag$k AS (SELECT coalesce(${dsum(r6("v.p * pr.p"))}, 0.0) AS a
-               |  FROM v$tag${k - 1} v JOIN pr ON v.s = pr.f WHERE pr.t = '__CONV__'),
-               |v$tag$k AS (SELECT pr.t AS s, ${dsum(r6("v.p * pr.p"))} AS p
-               |  FROM v$tag${k - 1} v JOIN pr ON v.s = pr.f
-               |  WHERE pr.t <> '__CONV__' AND pr.t <> '__NULL__'$excl GROUP BY 1)""".stripMargin
-          }
-          val total = (1 to K).map(k => s"CAST((SELECT a FROM ab$tag$k) AS DECIMAL(38,6))")
-            .mkString(" + ")
-          (s"v${tag}0 AS (SELECT '__START__' AS s, CAST(1.0 AS DOUBLE) AS p)" +:
-            steps :+ s"pc$tag AS (SELECT ${r6(s"CAST($total AS DOUBLE)")} AS p)").mkString(",\n")
-        }
-        val chains = chain("f", None) +: channels.zipWithIndex.map { case (c, i) =>
-          chain(s"r$i", Some(c))
-        }
-        val finals = channels.zipWithIndex.map { case (c, i) =>
-          s"""SELECT '$c' AS channel,
-             |  (SELECT CAST(sum(n) AS BIGINT) FROM cnt WHERE f = '$c' OR t = '$c') AS n_transitions,
-             |  (SELECT p FROM pcf) AS p_full, (SELECT p FROM pcr$i) AS p_removed,
-             |  CASE WHEN (SELECT p FROM pcf) > 0
-             |    THEN ${r6(s"1.0 - (SELECT p FROM pcr$i) / (SELECT p FROM pcf)")} END AS removal_effect""".stripMargin
-        }.mkString("\nUNION ALL ")
-        s"""WITH rws AS (SELECT user_id AS u,
-           |    CASE WHEN event_type = 'purchase' THEN '__CONV__' ELSE event_type END AS st,
-           |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           |  FROM events WHERE ts IS NOT NULL),
-           |kp AS (SELECT *, min(CASE WHEN st = '__CONV__' THEN rn END)
-           |    OVER (PARTITION BY u) AS cp FROM rws),
-           |kept AS (SELECT * FROM kp WHERE cp IS NULL OR rn <= cp),
-           |inr AS (SELECT coalesce(lag(st) OVER (PARTITION BY u ORDER BY rn), '__START__') AS f,
-           |    st AS t FROM kept),
-           |lst AS (SELECT st AS f, '__NULL__' AS t FROM (
-           |    SELECT *, max(rn) OVER (PARTITION BY u) AS mx FROM kept)
-           |  WHERE rn = mx AND cp IS NULL),
-           |cnt AS (SELECT f, t, count(*) AS n FROM (
-           |    SELECT * FROM inr UNION ALL SELECT * FROM lst) GROUP BY 1, 2),
-           |pr AS (SELECT f, t, ${r6("CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY f) AS DOUBLE)")} AS p
-           |  FROM cnt),
-           |${chains.mkString(",\n")}
-           |$finals""".stripMargin
-      },
-
-      "q_rmst" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
-           |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
-           |    max(epoch_us(ts)) AS tl
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |dur AS (SELECT CAST(floor(CAST(coalesce(te, tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-           |    te IS NOT NULL AS obs FROM sp),
-           |cv AS (SELECT t_day, count(CASE WHEN obs THEN 1 END) AS d_events,
-           |    count(CASE WHEN NOT obs THEN 1 END) AS c_censored FROM dur GROUP BY 1),
-           |tot AS (SELECT sum(d_events + c_censored) AS total FROM cv),
-           |r AS (SELECT t_day, d_events, c_censored,
-           |    total - coalesce(sum(d_events + c_censored) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
-           |  FROM cv, tot),
-           |h AS (SELECT t_day, d_events, c_censored, n_risk,
-           |    CASE WHEN d_events > 0 AND d_events < n_risk THEN
-           |      ${r6("ln(1 - CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE))")}
-           |    ELSE 0.0 END AS term FROM r),
-           |km AS (SELECT t_day, d_events, c_censored,
-           |    CASE WHEN d_events = n_risk THEN NULL ELSE
-           |      CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)
-           |    END AS log_s FROM h),
-           |st AS (SELECT t_day, d_events, c_censored,
-           |    CASE WHEN log_s IS NULL THEN 0.0 ELSE ${r6("exp(log_s)")} END AS s FROM km),
-           |lg AS (SELECT *, coalesce(lag(s) OVER (ORDER BY t_day), 1.0) AS prevs,
-           |    coalesce(lag(t_day) OVER (ORDER BY t_day), 0) AS prevt,
-           |    max(t_day) OVER () AS mxt FROM st),
-           |wd AS (SELECT *, greatest(0.0, least(CAST(t_day AS DOUBLE), 20.0) - least(CAST(prevt AS DOUBLE), 20.0)) AS w FROM lg)
-           |SELECT CAST(20 AS BIGINT) AS horizon_days,
-           |  ${r6(s"coalesce(${dsum(r6("prevs * w"))}, 0.0) + coalesce(${dsum(s"CASE WHEN t_day = mxt THEN ${r6("s * greatest(0.0, 20.0 - least(CAST(t_day AS DOUBLE), 20.0))")} END")}, 0.0)")} AS rmst,
-           |  CAST(coalesce(sum(d_events + c_censored), 0) AS BIGINT) AS n,
-           |  CAST(coalesce(sum(d_events), 0) AS BIGINT) AS n_events
-           |FROM wd""".stripMargin
-      },
-
-      "q_hosmer" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        val pz = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-          s"${math.sqrt(2.0 * math.Pi)} * " +
-          "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
-        s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
-           |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS y FROM documents),
-           |g AS (SELECT lang, least(9, greatest(0, CAST(floor(x * 10) AS BIGINT))) AS bin,
-           |    count(*) AS cn, ${dsum(r6("x"))} AS e, CAST(sum(y) AS BIGINT) AS o
-           |  FROM v GROUP BY 1, 2),
-           |t AS (SELECT lang, cn, e, o, e > 0 AND e < CAST(cn AS DOUBLE) AS testable,
-           |    CASE WHEN e > 0 AND e < CAST(cn AS DOUBLE) THEN
-           |      ${r6("(CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / (e * (1.0 - e / CAST(cn AS DOUBLE)))")}
-           |    END AS term FROM g),
-           |a AS (SELECT lang, CAST(sum(cn) AS BIGINT) AS n,
-           |    count(CASE WHEN testable THEN 1 END) AS b_tested,
-           |    count(CASE WHEN NOT testable THEN 1 END) AS b_skipped,
-           |    coalesce(${dsum("term")}, 0.0) AS chi2raw FROM t GROUP BY 1),
-           |b AS (SELECT *, greatest(0, b_tested - 2) AS df,
-           |    CASE WHEN b_tested >= 3 THEN ${r6("chi2raw")} END AS chi2 FROM a),
-           |c AS (SELECT *, sqrt(2.0 * chi2) - sqrt(2.0 * CAST(df AS DOUBLE) - 1.0) AS z FROM b),
-           |d AS (SELECT *, abs(z) AS az, 1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM c)
-           |SELECT lang, n, b_tested, b_skipped, chi2, df,
-           |  CASE WHEN chi2 IS NOT NULL AND df >= 1 THEN
-           |    CASE WHEN z >= 0 THEN ${r6(s"$pz / 2.0")} ELSE ${r6(s"1.0 - $pz / 2.0")} END
-           |  END AS p_value
-           |FROM d""".stripMargin
-      },
-
-      "q_ess" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH ${logitCtes("source = 'src0'", 5)},
-           |cl AS (SELECT y = 1 AS t,
-           |    ${r6("least(greatest(p, CAST(0.05 AS DOUBLE)), CAST(0.95 AS DOUBLE))")} AS pcl FROM p5),
-           |ws AS (SELECT CASE WHEN t THEN 'treated' ELSE 'control' END AS arm,
-           |    CASE WHEN t THEN ${r6("1.0 / pcl")} ELSE ${r6("1.0 / (1.0 - pcl)")} END AS w FROM cl),
-           |ag AS (SELECT arm, count(*) AS n, ${dsum("w")} AS sw,
-           |    ${dsum(r6("w * w"))} AS sw2, max(w) AS mw FROM ws GROUP BY 1)
-           |SELECT arm, n,
-           |  CASE WHEN sw2 > 0 THEN ${r6("sw * sw / sw2")} END AS ess,
-           |  CASE WHEN sw2 > 0 THEN ${r6("sw * sw / sw2 / CAST(n AS DOUBLE)")} END AS ess_ratio,
-           |  CASE WHEN sw > 0 THEN ${r6("mw / sw")} END AS max_w_share
-           |FROM ag""".stripMargin
-      },
-
-      "q_placebo" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        val placebo = s"${h32("concat('pb:', CAST(doc_id AS VARCHAR))")} % 2 = 1"
-        s"""WITH ${logitCtes(placebo, 5)},
-           |cl AS (SELECT n_chars, y = 1 AS t,
-           |    ${r6("least(greatest(p, CAST(0.05 AS DOUBLE)), CAST(0.95 AS DOUBLE))")} AS pcl FROM p5),
-           |wts AS (SELECT CAST(n_chars AS DOUBLE) AS yo, t,
-           |    CASE WHEN t THEN ${r6("1.0 / pcl")} END AS wt,
-           |    CASE WHEN NOT t THEN ${r6("1.0 / (1.0 - pcl)")} END AS wc FROM cl),
-           |ag AS (SELECT count(CASE WHEN t THEN 1 END) AS n_treated,
-           |    count(CASE WHEN NOT t THEN 1 END) AS n_control,
-           |    ${dsum(r6("wt * yo"))} / ${dsum("wt")} AS mt,
-           |    ${dsum(r6("wc * yo"))} / ${dsum("wc")} AS mc FROM wts)
-           |SELECT n_treated, n_control, ${r6("mt")} AS mean_treated,
-           |  ${r6("mc")} AS mean_control, ${r6("mt - mc")} AS ate FROM ag""".stripMargin
-      },
-
-      "q_cif" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
-           |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t1,
-           |    min(CASE WHEN event_type = 'error' THEN epoch_us(ts) END) AS t2,
-           |    max(epoch_us(ts)) AS tl
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |dur AS (SELECT
-           |    CAST(floor(CAST(coalesce(
-           |      CASE WHEN t1 IS NOT NULL AND (t2 IS NULL OR t1 <= t2) THEN t1 ELSE t2 END,
-           |      tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-           |    CASE WHEN t1 IS NOT NULL AND (t2 IS NULL OR t1 <= t2) THEN 1
-           |      WHEN t2 IS NOT NULL THEN 2 END AS cause
-           |  FROM sp),
-           |cv AS (SELECT t_day,
-           |    count(CASE WHEN cause = 1 THEN 1 END) AS d_cause1,
-           |    count(CASE WHEN cause = 2 THEN 1 END) AS d_cause2,
-           |    count(CASE WHEN cause IS NULL THEN 1 END) AS c_censored
-           |  FROM dur GROUP BY 1),
-           |tot AS (SELECT sum(d_cause1 + d_cause2 + c_censored) AS total FROM cv),
-           |r AS (SELECT t_day, d_cause1, d_cause2, c_censored,
-           |    CAST(total - coalesce(sum(d_cause1 + d_cause2 + c_censored)
-           |      OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_risk
-           |  FROM cv, tot),
-           |h AS (SELECT *, CAST(d_cause1 + d_cause2 AS DOUBLE) AS dall,
-           |    CASE WHEN d_cause1 + d_cause2 > 0 AND CAST(d_cause1 + d_cause2 AS DOUBLE) < CAST(n_risk AS DOUBLE)
-           |      THEN ${r6("ln(1.0 - CAST(d_cause1 + d_cause2 AS DOUBLE) / CAST(n_risk AS DOUBLE))")}
-           |      ELSE 0.0 END AS term FROM r),
-           |s AS (SELECT *,
-           |    CASE WHEN coalesce(sum(CASE WHEN dall = CAST(n_risk AS DOUBLE) THEN 1 END)
-           |        OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) > 0
-           |      THEN 0.0
-           |      ELSE ${r6("exp(CAST(coalesce(sum(CAST(term AS DECIMAL(38,6))) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE))")}
-           |    END AS sprev FROM h)
-           |SELECT t_day, n_risk, d_cause1, d_cause2, c_censored,
-           |  ${r6("CAST(sum(CAST(" + r6("sprev * CAST(d_cause1 AS DOUBLE) / CAST(n_risk AS DOUBLE)") + " AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cif1,
-           |  ${r6("CAST(sum(CAST(" + r6("sprev * CAST(d_cause2 AS DOUBLE) / CAST(n_risk AS DOUBLE)") + " AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cif2
-           |FROM s""".stripMargin
-      },
-
-      "q_loo_source" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH g AS (SELECT source AS "group", count(*) AS n,
-           |    ${dsum(r6("CAST(n_chars AS DOUBLE)"))} AS s
-           |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
-           |t AS (SELECT CAST(sum(n) AS BIGINT) AS nn, coalesce(${dsum("s")}, 0.0) AS ss FROM g)
-           |SELECT g."group", CAST(g.n AS BIGINT) AS n,
-           |  ${r6("g.s / CAST(g.n AS DOUBLE)")} AS group_mean,
-           |  ${r6("t.ss / CAST(t.nn AS DOUBLE)")} AS corpus_mean,
-           |  CASE WHEN t.nn > g.n THEN ${r6("(t.ss - g.s) / CAST(t.nn - g.n AS DOUBLE)")} END AS loo_mean,
-           |  CASE WHEN t.nn > g.n THEN
-           |    ${r6(s"${r6("(t.ss - g.s) / CAST(t.nn - g.n AS DOUBLE)")} - ${r6("t.ss / CAST(t.nn AS DOUBLE)")}")}
-           |  END AS delta
-           |FROM g, t""".stripMargin
-      },
-
-      "q_isotropy" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-           |    unnest(range(0, len(embedding))) AS pos FROM embeddings),
-           |nr AS (SELECT vec_id, sqrt(${dsum(r6("v * v"))}) AS nm FROM x GROUP BY 1),
-           |un AS (SELECT x.vec_id, x.pos, ${r6("x.v / nr.nm")} AS u
-           |  FROM x JOIN nr ON x.vec_id = nr.vec_id WHERE nr.nm > 0),
-           |dm AS (SELECT pos, ${dsum("u")} AS s FROM un GROUP BY 1),
-           |ct AS (SELECT coalesce(${dsum(r6("s * s"))}, 0.0) AS ss, count(*) AS dim FROM dm),
-           |rq0 AS (SELECT vec_id, ${dsum(r6("u * u"))} AS q FROM un GROUP BY 1),
-           |rq AS (SELECT count(*) AS n, coalesce(${dsum("q")}, 0.0) AS rqs FROM rq0),
-           |zr AS (SELECT count(*) AS n_zero FROM nr WHERE NOT (nm > 0))
-           |SELECT rq.n, zr.n_zero, ct.dim,
-           |  CASE WHEN rq.n > 0 THEN ${r6("sqrt(ct.ss) / CAST(rq.n AS DOUBLE)")} END AS centroid_norm,
-           |  CASE WHEN rq.n > 1 THEN
-           |    ${r6("(ct.ss - rq.rqs) / (CAST(rq.n AS DOUBLE) * CAST(rq.n - 1 AS DOUBLE))")}
-           |  END AS mean_offdiag_cos
-           |FROM rq, ct, zr""".stripMargin
-      },
-
-      "q_simpson" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH e AS (SELECT event_type,
-           |    ${h32("concat('cmh:', CAST(user_id AS VARCHAR))")} % 2 = 1 AS a,
-           |    value >= 10.0 AS hit FROM events),
-           |cells AS (SELECT event_type,
-           |    count(CASE WHEN a THEN 1 END) AS na,
-           |    count(CASE WHEN NOT a THEN 1 END) AS nb,
-           |    count(CASE WHEN a AND hit THEN 1 END) AS ka,
-           |    count(CASE WHEN NOT a AND hit THEN 1 END) AS kb
-           |  FROM e GROUP BY 1),
-           |d AS (SELECT *,
-           |    CAST(ka AS DOUBLE) / CAST(na AS DOUBLE) - CAST(kb AS DOUBLE) / CAST(nb AS DOUBLE) AS dd,
-           |    CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE)) AS wgt,
-           |    na > 0 AND nb > 0 AS wtd FROM cells),
-           |su AS (SELECT count(*) AS k_strata,
-           |    CAST(sum(na + nb) AS BIGINT) AS n,
-           |    CAST(sum(na) AS BIGINT) AS sna, CAST(sum(nb) AS BIGINT) AS snb,
-           |    CAST(sum(ka) AS BIGINT) AS ska, CAST(sum(kb) AS BIGINT) AS skb,
-           |    coalesce(${dsum(s"CASE WHEN wtd THEN ${r6("wgt * dd")} END")}, 0.0) AS wd,
-           |    coalesce(${dsum(s"CASE WHEN wtd THEN ${r6("wgt")} END")}, 0.0) AS w
-           |  FROM d),
-           |pp AS (SELECT *,
-           |    CASE WHEN sna > 0 AND snb > 0 THEN
-           |      ${r6("CAST(ska AS DOUBLE) / CAST(sna AS DOUBLE) - CAST(skb AS DOUBLE) / CAST(snb AS DOUBLE)")}
-           |    END AS pooled,
-           |    CASE WHEN w > 0 THEN ${r6("wd / w")} END AS strat FROM su),
-           |tl AS (SELECT coalesce(sum(CASE WHEN d.wtd AND pp.pooled IS NOT NULL
-           |      AND sign(d.dd) <> 0 AND sign(d.dd) <> sign(pp.pooled) THEN 1 END), 0) AS n_reversed
-           |  FROM d, pp)
-           |SELECT pp.k_strata, pp.n, pp.pooled AS pooled_diff, pp.strat AS stratified_diff,
-           |  CAST(tl.n_reversed AS BIGINT) AS n_reversed,
-           |  CASE WHEN pp.pooled IS NOT NULL AND pp.strat IS NOT NULL THEN
-           |    sign(pp.pooled) <> sign(pp.strat) AND sign(pp.pooled) <> 0
-           |  END AS simpson_flag
-           |FROM pp, tl""".stripMargin
-      },
-
-      "q_evalue" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH e AS (SELECT ${h32("concat('cmh:', CAST(user_id AS VARCHAR))")} % 2 = 1 AS a,
-           |    value >= 10.0 AS hit FROM events),
-           |g AS (SELECT count(CASE WHEN a THEN 1 END) AS n_a,
-           |    count(CASE WHEN NOT a THEN 1 END) AS n_b,
-           |    count(CASE WHEN a AND hit THEN 1 END) AS ka,
-           |    count(CASE WHEN NOT a AND hit THEN 1 END) AS kb FROM e),
-           |p AS (SELECT *, CAST(ka AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa,
-           |    CAST(kb AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb FROM g),
-           |rr AS (SELECT *, CASE WHEN n_a > 0 AND n_b > 0 AND pb > 0 AND pa > 0 THEN pa / pb END AS r FROM p),
-           |aw AS (SELECT *, CASE WHEN r >= 1 THEN r ELSE 1.0 / r END AS away FROM rr)
-           |SELECT n_a, n_b,
-           |  CASE WHEN n_a > 0 THEN ${r6("pa")} END AS p_a,
-           |  CASE WHEN n_b > 0 THEN ${r6("pb")} END AS p_b,
-           |  ${r6("r")} AS rr,
-           |  CASE WHEN r IS NOT NULL THEN ${r6("away + sqrt(away * (away - 1.0))")} END AS e_value
-           |FROM aw""".stripMargin
-      },
-
-      "q_rmst_diff" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH sp AS (SELECT user_id,
-           |    max(CASE WHEN ${h32("concat('ab:', CAST(user_id AS VARCHAR))")} % 2 = 1 THEN 1 ELSE 0 END) AS arm,
-           |    min(epoch_us(ts)) AS t0,
-           |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
-           |    max(epoch_us(ts)) AS tl
-           |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-           |dur AS (SELECT arm,
-           |    CAST(floor(CAST(coalesce(te, tl) - t0 AS DOUBLE) / 86400000000.0) AS BIGINT) AS t_day,
-           |    te IS NOT NULL AS obs FROM sp),
-           |cv AS (SELECT arm, t_day, count(CASE WHEN obs THEN 1 END) AS d,
-           |    count(CASE WHEN NOT obs THEN 1 END) AS c FROM dur GROUP BY 1, 2),
-           |r AS (SELECT *, sum(d + c) OVER (PARTITION BY arm) -
-           |    coalesce(sum(d + c) OVER (PARTITION BY arm ORDER BY t_day
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS nrisk FROM cv),
-           |h AS (SELECT *, CASE WHEN d > 0 AND d < nrisk THEN
-           |      ${r6("ln(1.0 - CAST(d AS DOUBLE) / CAST(nrisk AS DOUBLE))")}
-           |    ELSE 0.0 END AS term FROM r),
-           |z AS (SELECT *, coalesce(sum(CASE WHEN d = nrisk THEN 1 END)
-           |      OVER (PARTITION BY arm ORDER BY t_day), 0) AS zeroed FROM h),
-           |s AS (SELECT *, CASE WHEN zeroed > 0 THEN 0.0 ELSE
-           |      ${r6("exp(CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (PARTITION BY arm ORDER BY t_day) AS DOUBLE))")}
-           |    END AS sv FROM z),
-           |lg AS (SELECT *, coalesce(lag(sv) OVER (PARTITION BY arm ORDER BY t_day), 1.0) AS prevs,
-           |    coalesce(lag(t_day) OVER (PARTITION BY arm ORDER BY t_day), 0) AS prevt,
-           |    max(t_day) OVER (PARTITION BY arm) AS mxt FROM s),
-           |wd AS (SELECT *, greatest(0.0, least(CAST(t_day AS DOUBLE), 20.0) -
-           |    least(CAST(prevt AS DOUBLE), 20.0)) AS w FROM lg),
-           |ag AS (SELECT
-           |    CAST(coalesce(sum(CASE WHEN arm = 1 THEN d + c END), 0) AS BIGINT) AS n_a,
-           |    CAST(coalesce(sum(CASE WHEN arm = 0 THEN d + c END), 0) AS BIGINT) AS n_b,
-           |    ${r6(s"coalesce(${dsum(s"CASE WHEN arm = 1 THEN ${r6("prevs * w")} END")}, 0.0) + coalesce(${dsum(s"CASE WHEN t_day = mxt AND arm = 1 THEN ${r6("sv * greatest(0.0, 20.0 - least(CAST(t_day AS DOUBLE), 20.0))")} END")}, 0.0)")} AS ra,
-           |    ${r6(s"coalesce(${dsum(s"CASE WHEN arm = 0 THEN ${r6("prevs * w")} END")}, 0.0) + coalesce(${dsum(s"CASE WHEN t_day = mxt AND arm = 0 THEN ${r6("sv * greatest(0.0, 20.0 - least(CAST(t_day AS DOUBLE), 20.0))")} END")}, 0.0)")} AS rb
-           |  FROM wd)
-           |SELECT CAST(20 AS BIGINT) AS horizon_days, n_a, n_b,
-           |  CASE WHEN n_a > 0 THEN ra END AS rmst_a,
-           |  CASE WHEN n_b > 0 THEN rb END AS rmst_b,
-           |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${r6("ra - rb")} END AS rmst_diff
-           |FROM ag""".stripMargin
-      },
-
-      "q_entropy_rate" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH sq AS (SELECT event_type AS prev,
-           |    lead(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS nxt
-           |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-           |pc AS (SELECT prev, nxt, count(*) AS n FROM sq WHERE nxt IS NOT NULL GROUP BY 1, 2),
-           |rt AS (SELECT prev, CAST(sum(n) AS BIGINT) AS nt FROM pc GROUP BY 1),
-           |tm AS (SELECT pc.prev, pc.n,
-           |    ${r6(s"-${r6("CAST(pc.n AS DOUBLE) / CAST(rt.nt AS DOUBLE)")} * ln(${r6("CAST(pc.n AS DOUBLE) / CAST(rt.nt AS DOUBLE)")})")} AS term
-           |  FROM pc JOIN rt USING (prev)),
-           |ps AS (SELECT prev, CAST(sum(n) AS BIGINT) AS ns, ${dsum("term")} AS h FROM tm GROUP BY 1),
-           |tt AS (SELECT CAST(coalesce(sum(ns), 0) AS BIGINT) AS nt FROM ps),
-           |er AS (SELECT count(*) AS n_states,
-           |    CAST(coalesce(sum(ps.ns), 0) AS BIGINT) AS n_transitions,
-           |    ${r6(s"coalesce(${dsum(r6("CAST(ps.ns AS DOUBLE) / CAST(tt.nt AS DOUBLE) * ps.h"))}, 0.0)")} AS entropy_rate
-           |  FROM ps, tt)
-           |SELECT n_states, n_transitions, entropy_rate,
-           |  CASE WHEN n_states > 0 THEN ${r6("ln(CAST(n_states AS DOUBLE))")} END AS max_entropy,
-           |  CASE WHEN n_states > 0 AND ${r6("ln(CAST(n_states AS DOUBLE))")} > 0 THEN
-           |    ${r6(s"1.0 - entropy_rate / (${r6("ln(CAST(n_states AS DOUBLE))")})")}
-           |  END AS predictability
-           |FROM er""".stripMargin
-      },
-
-      "q_heaps" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        val cps = Seq(16L, 32L, 64L, 128L, 256L, 512L)
-        val melt = cps.map(c =>
-          s"SELECT (SELECT coalesce(sum(CASE WHEN id < $c THEN nt END), 0) FROM dt) AS nn, " +
-            s"(SELECT count(CASE WHEN fd < $c THEN 1 END) FROM fw) AS vv").mkString("\nUNION ALL ")
-        s"""WITH tk AS (SELECT doc_id AS id,
-           |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
-           |  FROM documents),
-           |fw AS (SELECT w, min(id) AS fd FROM tk GROUP BY 1),
-           |dt AS (SELECT doc_id AS id,
-           |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nt
-           |  FROM documents),
-           |mp AS ($melt),
-           |pt AS (SELECT ${r6("ln(CAST(nn AS DOUBLE))")} AS x, ${r6("ln(CAST(vv AS DOUBLE))")} AS y
-           |  FROM mp WHERE nn >= 2 AND vv >= 2),
-           |ft AS (SELECT count(*) AS n_points, CAST(count(*) AS DOUBLE) AS nd,
-           |    ${dsum("x")} AS sx, ${dsum("y")} AS sy, ${dsum(r6("x * y"))} AS sxy,
-           |    ${dsum(r6("x * x"))} AS sxx, ${dsum(r6("y * y"))} AS syy FROM pt),
-           |fb AS (SELECT *, nd * sxx - sx * sx AS det,
-           |    (nd * sxy - sx * sy) / (nd * sxx - sx * sx) AS beta,
-           |    syy - sy * sy / nd AS sstot FROM ft),
-           |fc AS (SELECT *, sstot - beta * (sxy - sx * sy / nd) AS ssres FROM fb)
-           |SELECT n_points,
-           |  CASE WHEN n_points >= 3 AND det > 0 THEN ${r6("beta")} END AS heaps_beta,
-           |  CASE WHEN n_points >= 3 AND det > 0 THEN ${r6("exp((sy - beta * sx) / nd)")} END AS heaps_k,
-           |  CASE WHEN n_points >= 3 AND det > 0 AND sstot > 0 THEN ${r6("1.0 - ssres / sstot")} END AS r2
-           |FROM fc""".stripMargin
-      },
-
-      "q_churn_labels" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val cutoff = 1705708800000000L
-        val obsStart = cutoff - 10L * 86400000000L
-        val horEnd = cutoff + 5L * 86400000000L
-        s"""WITH e AS (SELECT user_id, epoch_us(ts) AS t, event_type FROM events WHERE ts IS NOT NULL),
-           |g AS (SELECT user_id,
-           |    count(CASE WHEN t >= $obsStart AND t < $cutoff THEN 1 END) AS n_obs_events,
-           |    count(CASE WHEN t >= $obsStart AND t < $cutoff AND event_type = 'purchase' THEN 1 END) AS n_obs_target,
-           |    CAST(count(DISTINCT CASE WHEN t >= $obsStart AND t < $cutoff
-           |      THEN CAST(floor(CAST(t - $obsStart AS DOUBLE) / 86400000000.0) AS BIGINT) END) AS BIGINT) AS n_active_days,
-           |    max(CASE WHEN t >= $obsStart AND t < $cutoff THEN t END) AS last_t,
-           |    count(CASE WHEN t >= $cutoff AND t < $horEnd THEN 1 END) > 0 AS label_active,
-           |    count(CASE WHEN t >= $cutoff AND t < $horEnd AND event_type = 'purchase' THEN 1 END) > 0 AS label_target
-           |  FROM e GROUP BY 1)
-           |SELECT user_id, n_obs_events, n_obs_target, n_active_days,
-           |  ${r6(s"CAST($cutoff - last_t AS DOUBLE) / 3600000000.0")} AS recency_hours,
-           |  label_active, label_target
-           |FROM g WHERE n_obs_events > 0""".stripMargin
-      },
-
-      "q_hte" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH ${logitCtes("source = 'src0'", 5)},
-           |cl AS (SELECT CAST(n_chars AS DOUBLE) AS yo, y = 1 AS t,
-           |    least(9, greatest(0, CAST(floor(p * 10) AS BIGINT))) AS bin FROM p5
-           |  WHERE p IS NOT NULL),
-           |g AS (SELECT bin, count(CASE WHEN t THEN 1 END) AS n_treated,
-           |    count(CASE WHEN NOT t THEN 1 END) AS n_control,
-           |    ${dsum(s"CASE WHEN t THEN ${r6("yo")} END")} AS st,
-           |    ${dsum(s"CASE WHEN NOT t THEN ${r6("yo")} END")} AS sc
-           |  FROM cl GROUP BY 1)
-           |SELECT bin, ${r6("CAST(bin AS DOUBLE) * 0.1")} AS p_lo,
-           |  ${r6("CAST(bin + 1 AS DOUBLE) * 0.1")} AS p_hi,
-           |  n_treated, n_control,
-           |  CASE WHEN n_treated > 0 THEN ${r6("st / CAST(n_treated AS DOUBLE)")} END AS mean_treated,
-           |  CASE WHEN n_control > 0 THEN ${r6("sc / CAST(n_control AS DOUBLE)")} END AS mean_control,
-           |  CASE WHEN n_treated > 0 AND n_control > 0 THEN
-           |    ${r6("st / CAST(n_treated AS DOUBLE) - sc / CAST(n_control AS DOUBLE)")}
-           |  END AS diff
-           |FROM g""".stripMargin
-      },
-
-      "q_confusion" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH pred AS ($langIdSelectSql),
-           |j AS (SELECT coalesce(CAST(d.lang AS VARCHAR), '(null)') AS true_label,
-           |    coalesce(CAST(p.lang_pred AS VARCHAR), '(null)') AS pred_label
-           |  FROM documents d JOIN pred p USING (doc_id)),
-           |cells AS (SELECT true_label, pred_label, count(*) AS n FROM j GROUP BY 1, 2),
-           |tot AS (SELECT CAST(sum(n) AS BIGINT) AS t,
-           |    CAST(coalesce(sum(CASE WHEN true_label = pred_label THEN n END), 0) AS BIGINT) AS ok
-           |  FROM cells)
-           |SELECT true_label, pred_label, n,
-           |  ${r6("CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY true_label) AS DOUBLE)")} AS frac_of_true,
-           |  ${r6("CAST(tot.ok AS DOUBLE) / CAST(tot.t AS DOUBLE)")} AS accuracy
-           |FROM cells, tot""".stripMargin
-      },
-
-      "q_fleiss" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH lw AS (SELECT doc_id, n_chars,
-           |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nw
-           |  FROM documents),
-           |votes AS (
-           |  SELECT doc_id, CASE WHEN n_chars >= 250 THEN 'long' ELSE 'short' END AS vote FROM lw
-           |  UNION ALL SELECT doc_id, CASE WHEN n_chars >= 300 THEN 'long' ELSE 'short' END FROM lw
-           |  UNION ALL SELECT doc_id, CASE WHEN nw >= 55 THEN 'long' ELSE 'short' END FROM lw),
-           |cells AS (SELECT doc_id, vote, count(*) AS nij FROM votes GROUP BY 1, 2),
-           |items AS (SELECT doc_id, CAST(sum(nij) AS BIGINT) AS m,
-           |    CAST(sum(nij * nij) AS BIGINT) AS sq FROM cells GROUP BY 1),
-           |chk AS (SELECT count(*) AS ni, CAST(min(m) AS BIGINT) AS m FROM items),
-           |pb AS (SELECT c.ni AS n_items, c.m AS m_raters,
-           |    ${r6(s"coalesce(${dsum(r6("CAST(sq - i.m AS DOUBLE) / (CAST(c.m AS DOUBLE) * (CAST(c.m AS DOUBLE) - 1.0))"))}, 0.0) / CAST(count(*) AS DOUBLE)")} AS p_bar
-           |  FROM items i, chk c GROUP BY 1, 2),
-           |mg AS (SELECT vote, CAST(sum(nij) AS BIGINT) AS cn FROM cells GROUP BY 1),
-           |pe AS (SELECT count(*) AS n_categories,
-           |    ${r6(s"coalesce(${dsum(r6(s"${r6("CAST(cn AS DOUBLE) / CAST(c.ni * c.m AS DOUBLE)")} * ${r6("CAST(cn AS DOUBLE) / CAST(c.ni * c.m AS DOUBLE)")}"))}, 0.0)")} AS p_e
-           |  FROM mg, chk c)
-           |SELECT pb.n_items, pb.m_raters, pe.n_categories, pb.p_bar, pe.p_e,
-           |  CASE WHEN pe.p_e < 1.0 THEN ${r6("(pb.p_bar - pe.p_e) / (1.0 - pe.p_e)")} END AS kappa
-           |FROM pb, pe""".stripMargin
-      },
-
-      "q_rake_weights" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        def step(k: Int, prev: String, axis: String, target: String): String =
-          s"""ms$k AS (SELECT $axis, ${dsum(r6("weight * CAST(n AS DOUBLE)"))} AS mass
-             |  FROM $prev GROUP BY 1),
-             |tt$k AS (SELECT coalesce(${dsum(r6("weight * CAST(n AS DOUBLE)"))}, 0.0) AS tm FROM $prev),
-             |c$k AS MATERIALIZED (SELECT p.a, p.b, p.n, p.ta, p.tb,
-             |    CASE WHEN ${r6("m.mass / t.tm")} > 0
-             |      THEN ${r6(s"p.weight * ${r6(s"p.$target / (${r6("m.mass / t.tm")})")}")}
-             |      ELSE 0.0 END AS weight
-             |  FROM $prev p JOIN ms$k m ON p.$axis = m.$axis, tt$k t)""".stripMargin
-        val steps = (0 until 5).flatMap { i =>
-          val ka = 2 * i + 1; val kb = 2 * i + 2
-          val prevA = if (i == 0) "c0" else s"c${2 * i}"
-          Seq(step(ka, prevA, "a", "ta"), step(kb, s"c$ka", "b", "tb"))
-        }
-        s"""WITH smp AS (SELECT CAST(lang AS VARCHAR) AS a, CAST(source AS VARCHAR) AS b FROM documents
-           |  WHERE ${h32("concat('rk:', CAST(doc_id AS VARCHAR))")} % 10 < 3),
-           |pa AS (SELECT CAST(lang AS VARCHAR) AS a, count(*) AS cnt FROM documents GROUP BY 1),
-           |paT AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM pa),
-           |tas AS (SELECT a, ${r6("CAST(cnt AS DOUBLE) / CAST(t.t AS DOUBLE)")} AS ta FROM pa, paT t),
-           |pb AS (SELECT CAST(source AS VARCHAR) AS b, count(*) AS cnt FROM documents GROUP BY 1),
-           |pbT AS (SELECT CAST(sum(cnt) AS BIGINT) AS t FROM pb),
-           |tbs AS (SELECT b, ${r6("CAST(cnt AS DOUBLE) / CAST(t.t AS DOUBLE)")} AS tb FROM pb, pbT t),
-           |c0 AS MATERIALIZED (SELECT s.a, s.b, count(*) AS n,
-           |    coalesce(any_value(tas.ta), 0.0) AS ta, coalesce(any_value(tbs.tb), 0.0) AS tb,
-           |    CAST(1.0 AS DOUBLE) AS weight
-           |  FROM smp s LEFT JOIN tas ON s.a = tas.a LEFT JOIN tbs ON s.b = tbs.b
-           |  GROUP BY 1, 2),
-           |${steps.mkString(",\n")}
-           |SELECT a, b, n, weight FROM c10""".stripMargin
-      },
-
-      "q_capture_recapture" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        // one seeded SRP pass as prefixed CTEs ending in <t>pr(ia, ib)
-        def srpPass(t: String, seed: String): String =
-          s"""${t}pl AS (SELECT p.i AS p,
-             |  list_transform(range(0,64), d -> CASE WHEN CAST(concat('0x', substr(md5(concat('srp:$seed:', p.i, ':', d)),1,8)) AS BIGINT) % 2 = 0
-             |    THEN CAST(1 AS DOUBLE) ELSE CAST(-1 AS DOUBLE) END) AS pv
-             |  FROM range(0,16) p(i)),
-             |${t}sg AS (SELECT e.vec_id, ${t}pl.p,
-             |  CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> CAST(e.embedding[i] AS DOUBLE) * ${t}pl.pv[i])), (x,y) -> x+y) >= 0
-             |    THEN 1 ELSE 0 END AS bit
-             |  FROM embeddings e, ${t}pl),
-             |${t}bl AS (SELECT vec_id, list(CAST(bit AS VARCHAR) ORDER BY p) AS bits FROM ${t}sg GROUP BY 1),
-             |${t}bd AS (SELECT vec_id, b.i AS band, md5(array_to_string(bits[b.i*4+1:b.i*4+4], '|')) AS sig FROM ${t}bl, range(0,4) b(i)),
-             |${t}bok AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY band, sig) AS bsz FROM ${t}bd) WHERE bsz <= 1000),
-             |${t}cand AS (SELECT DISTINCT a.vec_id AS ia, b.vec_id AS ib
-             |  FROM ${t}bok a JOIN ${t}bok b ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id),
-             |${t}pr AS (SELECT ia, ib FROM (
-             |    SELECT ia, ib, ${r6(cosSql("ea.embedding", "eb.embedding"))} AS cosine
-             |    FROM ${t}cand JOIN embeddings ea ON ia = ea.vec_id JOIN embeddings eb ON ib = eb.vec_id)
-             |  WHERE cosine >= 0.25)""".stripMargin
-        s"""WITH ${srpPass("x", "cr1")},
-           |${srpPass("y", "cr2")},
-           |j AS (SELECT coalesce(x.ia, y.ia) AS ia, coalesce(x.ib, y.ib) AS ib,
-           |    x.ia IS NOT NULL AS ina, y.ia IS NOT NULL AS inb
-           |  FROM xpr x FULL OUTER JOIN ypr y ON x.ia = y.ia AND x.ib = y.ib),
-           |ag AS (SELECT
-           |    CAST(count(CASE WHEN ina THEN 1 END) AS BIGINT) AS n_a,
-           |    CAST(count(CASE WHEN inb THEN 1 END) AS BIGINT) AS n_b,
-           |    CAST(count(CASE WHEN ina AND inb THEN 1 END) AS BIGINT) AS n_both FROM j),
-           |nm AS (SELECT *, CAST(n_a AS DOUBLE) AS d1, CAST(n_b AS DOUBLE) AS d2,
-           |    CAST(n_both AS DOUBLE) AS dm FROM ag)
-           |SELECT n_a, n_b, n_both,
-           |  CASE WHEN d1 > 0 AND d2 > 0 THEN ${r6("(d1 + 1.0) * (d2 + 1.0) / (dm + 1.0) - 1.0")} END AS n_est,
-           |  CASE WHEN d1 > 0 AND d2 > 0 THEN
-           |    ${r6("sqrt(greatest(0.0, (d1 + 1.0) * (d2 + 1.0) * (d1 - dm) * (d2 - dm) / ((dm + 1.0) * (dm + 1.0) * (dm + 2.0))))")}
-           |  END AS se_est,
-           |  CASE WHEN d1 > 0 AND d2 > 0 AND (d1 + 1.0) * (d2 + 1.0) / (dm + 1.0) - 1.0 > 0 THEN
-           |    ${r6("d1 / ((d1 + 1.0) * (d2 + 1.0) / (dm + 1.0) - 1.0)")} END AS recall_a,
-           |  CASE WHEN d1 > 0 AND d2 > 0 AND (d1 + 1.0) * (d2 + 1.0) / (dm + 1.0) - 1.0 > 0 THEN
-           |    ${r6("d2 / ((d1 + 1.0) * (d2 + 1.0) / (dm + 1.0) - 1.0)")} END AS recall_b
-           |FROM nm""".stripMargin
-      },
-
-      "q_split_half" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH rws AS (SELECT source AS g,
-           |    ${h32("concat('sh42', '|', CAST(doc_id AS VARCHAR))")} % 2 AS h,
-           |    CAST(n_chars AS DOUBLE) AS m FROM documents WHERE n_chars IS NOT NULL),
-           |cells AS (SELECT g, h, ${r6(s"${dsum(r6("m"))} / CAST(count(*) AS DOUBLE)")} AS mm
-           |  FROM rws GROUP BY 1, 2),
-           |wide AS (SELECT g, max(CASE WHEN h = 0 THEN mm END) AS m0,
-           |    max(CASE WHEN h = 1 THEN mm END) AS m1 FROM cells GROUP BY 1),
-           |st AS (SELECT
-           |    count(CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN 1 END) AS n_groups,
-           |    count(CASE WHEN m0 IS NULL OR m1 IS NULL THEN 1 END) AS n_dropped,
-           |    coalesce(${dsum("CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN m0 END")}, 0.0) AS s0,
-           |    coalesce(${dsum("CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN m1 END")}, 0.0) AS s1,
-           |    coalesce(${dsum(s"CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN ${r6("m0 * m1")} END")}, 0.0) AS s01,
-           |    coalesce(${dsum(s"CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN ${r6("m0 * m0")} END")}, 0.0) AS s00,
-           |    coalesce(${dsum(s"CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN ${r6("m1 * m1")} END")}, 0.0) AS s11,
-           |    CAST(count(CASE WHEN m0 IS NOT NULL AND m1 IS NOT NULL THEN 1 END) AS DOUBLE) AS nd
-           |  FROM wide),
-           |rr AS (SELECT *, CASE WHEN n_groups >= 3
-           |      AND s00 - s0 * s0 / nd > 0 AND s11 - s1 * s1 / nd > 0 THEN
-           |    ${r6("(s01 - s0 * s1 / nd) / sqrt((s00 - s0 * s0 / nd) * (s11 - s1 * s1 / nd))")}
-           |  END AS r_half FROM st)
-           |SELECT n_groups, n_dropped, r_half,
-           |  CASE WHEN r_half IS NOT NULL AND r_half > -1.0 THEN
-           |    ${r6("2.0 * r_half / (1.0 + r_half)")} END AS reliability
-           |FROM rr""".stripMargin
-      },
-
-      "q_threshold_opt" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
-           |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS y FROM documents),
-           |g AS (SELECT lang, least(19, greatest(0, CAST(floor(x * 20) AS BIGINT))) AS bin,
-           |    count(*) AS n, CAST(sum(y) AS BIGINT) AS pos FROM v GROUP BY 1, 2),
-           |c AS (SELECT lang, bin, n, pos,
-           |    CAST(sum(pos) OVER (PARTITION BY lang ORDER BY bin ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS tp,
-           |    CAST(sum(n - pos) OVER (PARTITION BY lang ORDER BY bin ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS fp,
-           |    CAST(sum(pos) OVER (PARTITION BY lang) AS BIGINT) AS allpos FROM g),
-           |u AS (SELECT lang, ${r6("CAST(bin AS DOUBLE) / 20.0")} AS threshold, tp, fp,
-           |    allpos - tp AS fn,
-           |    ${r6("1.0 * CAST(tp AS DOUBLE) - 2.0 * CAST(fp AS DOUBLE)")} AS utility FROM c),
-           |rk AS (SELECT *, row_number() OVER (PARTITION BY lang
-           |    ORDER BY utility DESC, threshold DESC) AS rn FROM u)
-           |SELECT lang, threshold, tp, fp, CAST(fn AS BIGINT) AS fn, utility
-           |FROM rk WHERE rn = 1""".stripMargin
-      },
-
-      "q_term_burstiness" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH tk AS (SELECT doc_id,
-           |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
-           |  FROM documents),
-           |tf AS (SELECT doc_id, w, count(*) AS tf FROM tk GROUP BY 1, 2),
-           |tm AS (SELECT w AS term, CAST(sum(tf) AS BIGINT) AS cf, count(*) AS df,
-           |    CAST(sum(tf * tf) AS BIGINT) AS sq FROM tf GROUP BY 1 HAVING count(*) >= 25),
-           |nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents)
-           |SELECT term, cf, df,
-           |  ${r6("CAST(cf AS DOUBLE) / CAST(df AS DOUBLE)")} AS burstiness,
-           |  CASE WHEN CAST(cf AS DOUBLE) / nd.n > 0 THEN
-           |    ${r6("(CAST(sq AS DOUBLE) / nd.n - (CAST(cf AS DOUBLE) / nd.n) * (CAST(cf AS DOUBLE) / nd.n)) / (CAST(cf AS DOUBLE) / nd.n)")}
-           |  END AS vmr
-           |FROM tm, nd""".stripMargin
-      },
-
-      "q_dup_influx" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH fp AS (SELECT doc_id AS o,
-           |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-           |      list_transform(range(1, len(s)+1), i -> CAST(ascii(substr(s, i, 1)) AS BIGINT))),
-           |      (acc, c) -> (acc*31 + c) % 1000000007) AS f
-           |  FROM (SELECT doc_id, trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) AS s
-           |    FROM documents)),
-           |fs AS (SELECT f, min(o) AS first FROM fp GROUP BY 1),
-           |j AS (SELECT CAST((fp.o - ((fp.o % 50 + 50) % 50)) // 50 AS BIGINT) AS bucket,
-           |    fp.o > fs.first AS dup FROM fp JOIN fs USING (f))
-           |SELECT bucket, count(*) AS n_docs,
-           |  count(CASE WHEN dup THEN 1 END) AS n_dups,
-           |  ${r6("CAST(count(CASE WHEN dup THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS dup_rate
-           |FROM j GROUP BY 1""".stripMargin
-      },
-
-      "q_bcubed" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
-           |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
-           |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
-           |      FROM w, (SELECT unnest(range(0, 32)) AS b) GROUP BY 1, 2),
-           |sh AS (SELECT id, CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS simhash
-           |      FROM v GROUP BY 1),
-           |g AS (SELECT doc_id AS id, md5(trim(regexp_replace(lower(text),'[^a-z0-9]+',' ','g'))) AS fp FROM documents),
-           |j0 AS (SELECT CAST(sh.simhash AS VARCHAR) AS cl, g.fp AS lb FROM sh JOIN g USING (id)),
-           |dr AS (SELECT CAST(count(CASE WHEN cl IS NULL OR lb IS NULL THEN 1 END) AS BIGINT) AS n_dropped FROM j0),
-           |cells AS (SELECT cl, lb, count(*) AS cell FROM j0 WHERE cl IS NOT NULL AND lb IS NOT NULL GROUP BY 1, 2),
-           |cs AS (SELECT cl, sum(cell) AS cssz FROM cells GROUP BY 1),
-           |ls AS (SELECT lb, sum(cell) AS lssz FROM cells GROUP BY 1),
-           |a AS (SELECT CAST(sum(cell) AS BIGINT) AS n_items,
-           |    CAST(count(DISTINCT cells.cl) AS BIGINT) AS n_clusters,
-           |    CAST(count(DISTINCT cells.lb) AS BIGINT) AS n_labels,
-           |    ${dsum(r6("CAST(cell AS DOUBLE) * CAST(cell AS DOUBLE) / CAST(cssz AS DOUBLE)"))} AS sp,
-           |    ${dsum(r6("CAST(cell AS DOUBLE) * CAST(cell AS DOUBLE) / CAST(lssz AS DOUBLE)"))} AS sr
-           |  FROM cells JOIN cs USING (cl) JOIN ls USING (lb))
-           |SELECT n_items, dr.n_dropped, n_clusters, n_labels,
-           |  CASE WHEN n_items > 0 THEN ${r6("sp / CAST(n_items AS DOUBLE)")} END AS bcubed_precision,
-           |  CASE WHEN n_items > 0 THEN ${r6("sr / CAST(n_items AS DOUBLE)")} END AS bcubed_recall,
-           |  CASE WHEN n_items > 0 AND sp + sr > 0 THEN
-           |    ${r6("2.0 * (sp / CAST(n_items AS DOUBLE)) * (sr / CAST(n_items AS DOUBLE)) / (sp / CAST(n_items AS DOUBLE) + sr / CAST(n_items AS DOUBLE))")}
-           |  END AS bcubed_f1
-           |FROM a, dr""".stripMargin
-      },
-
-      "q_khop" ->
-        """WITH RECURSIVE tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-          |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-          |      FROM tk WHERE len(ts) >= 2),
-          |s AS (SELECT min(src) AS node FROM e),
-          |r(node, d) AS (SELECT node, 0 FROM s
-          |    UNION SELECT e.dst, r.d + 1 FROM r JOIN e ON e.src = r.node WHERE r.d < 4)
-          |SELECT node, CAST(min(d) AS BIGINT) AS dist FROM r GROUP BY 1""".stripMargin,
-
-      "q_seq_patterns" ->
-        """WITH b AS (SELECT user_id AS u, event_type AS a,
-          |    lead(event_type, 1) OVER w AS b2, lead(event_type, 2) OVER w AS c
-          |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-          |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          |p AS (SELECT u, 2 AS len, a || '>' || b2 AS pattern FROM b WHERE b2 IS NOT NULL
-          |      UNION ALL
-          |      SELECT u, 3, a || '>' || b2 || '>' || c FROM b WHERE c IS NOT NULL)
-          |SELECT pattern, CAST(len AS BIGINT) AS len,
-          |  CAST(count(DISTINCT u) AS BIGINT) AS n_users,
-          |  CAST(count(*) AS BIGINT) AS n_occurrences
-          |FROM p GROUP BY 1, 2 HAVING count(DISTINCT u) >= 5""".stripMargin,
-
-      "q_dp_means" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        def lap(tag: String, scale: String) = {
-          val h = h32(s"concat('graft-dp9', coalesce(md5(CAST(event_type AS VARCHAR)), 'N'), '$tag')")
-          s"""-sign(($h + 0.5) / 4294967296.0 - 0.5)
-             | * ln(1.0 - 2.0 * abs(($h + 0.5) / 4294967296.0 - 0.5)) * $scale""".stripMargin
-        }
-        s"""WITH v AS (SELECT event_type, user_id,
-           |    least(CAST(500.0 AS DOUBLE), greatest(CAST(0.0 AS DOUBLE), CAST(value AS DOUBLE))) AS cv
-           |  FROM events WHERE value IS NOT NULL),
-           |pu AS (SELECT event_type, user_id, ${dsum(r6("cv"))} / CAST(count(*) AS DOUBLE) AS m
-           |  FROM v GROUP BY 1, 2),
-           |g AS (SELECT event_type, count(*) AS nu, ${dsum(r6("m"))} AS s FROM pu GROUP BY 1),
-           |n AS (SELECT event_type, CAST(1.0 AS DOUBLE) AS epsilon,
-           |    ${r6(s"s + (${lap("S", "1000.0")})")} AS noisy_sum,
-           |    ${r6(s"CAST(nu AS DOUBLE) + (${lap("C", "2.0")})")} AS noisy_count
-           |  FROM g)
-           |SELECT event_type, epsilon, noisy_sum, noisy_count,
-           |  ${r6("noisy_sum / greatest(noisy_count, CAST(1.0 AS DOUBLE))")} AS noisy_mean
-           |FROM n""".stripMargin
-      },
-
-      "q_season_strength" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        val rr = r6("de.detr - se.seasonal")
-        val ss = r6("se.seasonal + (de.detr - se.seasonal)")
-        val tt = r6("de.trend + (de.detr - se.seasonal)")
-        s"""WITH $decomposeCtesSql,
-           |jj AS (SELECT de.event_type AS key, $rr AS r, $ss AS sr, $tt AS tr
-           |  FROM de LEFT JOIN se ON de.event_type = se.event_type AND de.phase = se.phase
-           |  WHERE de.trend IS NOT NULL),
-           |m AS (SELECT key, count(*) AS n,
-           |    ${dsum("r")} AS sR, ${dsum(r6("r * r"))} AS qR,
-           |    ${dsum("sr")} AS sS, ${dsum(r6("sr * sr"))} AS qS,
-           |    ${dsum("tr")} AS sT, ${dsum(r6("tr * tr"))} AS qT
-           |  FROM jj GROUP BY 1),
-           |f AS (SELECT key, n, CAST(n AS DOUBLE) AS nd,
-           |    qR / CAST(n AS DOUBLE) - (sR / CAST(n AS DOUBLE)) * (sR / CAST(n AS DOUBLE)) AS vR,
-           |    qS / CAST(n AS DOUBLE) - (sS / CAST(n AS DOUBLE)) * (sS / CAST(n AS DOUBLE)) AS vS,
-           |    qT / CAST(n AS DOUBLE) - (sT / CAST(n AS DOUBLE)) * (sT / CAST(n AS DOUBLE)) AS vT
-           |  FROM m)
-           |SELECT key AS event_type, CAST(n AS BIGINT) AS n,
-           |  CASE WHEN vT > 0 THEN ${r6("greatest(CAST(0.0 AS DOUBLE), 1.0 - vR / vT)")} END AS f_trend,
-           |  CASE WHEN vS > 0 THEN ${r6("greatest(CAST(0.0 AS DOUBLE), 1.0 - vR / vS)")} END AS f_seas
-           |FROM f""".stripMargin
-      },
-
-      "q_matched_att" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH ${logitCtes("source = 'src0'", 5)},
-           |cl AS (SELECT id, CAST(n_chars AS DOUBLE) AS yo, y = 1 AS t,
-           |    least(9, greatest(0, CAST(floor(p * 10) AS BIGINT))) AS bin FROM p5
-           |  WHERE p IS NOT NULL AND n_chars IS NOT NULL),
-           |rk AS (SELECT *, row_number() OVER (PARTITION BY bin, t ORDER BY id) AS rk FROM cl),
-           |arms AS (SELECT bin, CAST(count(CASE WHEN t THEN 1 END) AS BIGINT) AS n_treated,
-           |    CAST(count(CASE WHEN NOT t THEN 1 END) AS BIGINT) AS n_control FROM cl GROUP BY 1),
-           |pr AS (SELECT tt.bin, CAST(count(*) AS BIGINT) AS np, ${dsum(r6("tt.yo - cc.yo"))} AS sd
-           |  FROM rk tt JOIN rk cc ON tt.bin = cc.bin AND tt.rk = cc.rk AND tt.t AND NOT cc.t
-           |  GROUP BY 1)
-           |SELECT arms.bin, ${r6("CAST(arms.bin AS DOUBLE) * 0.1")} AS p_lo,
-           |  ${r6("CAST(arms.bin + 1 AS DOUBLE) * 0.1")} AS p_hi,
-           |  n_treated, n_control, coalesce(np, 0) AS n_pairs,
-           |  CASE WHEN np > 0 THEN ${r6("sd / CAST(np AS DOUBLE)")} END AS att
-           |FROM arms LEFT JOIN pr ON arms.bin = pr.bin""".stripMargin
-      },
-
-      "q_embed_drift" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-           |    unnest(range(0, len(embedding))) AS pos FROM embeddings),
-           |nr AS (SELECT vec_id, sqrt(${dsum(r6("v * v"))}) AS nm FROM x GROUP BY 1),
-           |un AS (SELECT CAST((x.vec_id - ((x.vec_id % 100 + 100) % 100)) // 100 AS BIGINT) AS bucket,
-           |    x.pos, ${r6("x.v / nr.nm")} AS u
-           |  FROM x JOIN nr ON x.vec_id = nr.vec_id WHERE nr.nm > 0),
-           |dm AS (SELECT bucket, pos, count(*) AS n,
-           |    ${r6(s"(${dsum("u")}) / CAST(count(*) AS DOUBLE)")} AS c
-           |  FROM un GROUP BY 1, 2),
-           |cur AS (SELECT bucket, CAST(max(n) AS BIGINT) AS n_vecs, ${dsum(r6("c * c"))} AS ss
-           |  FROM dm GROUP BY 1),
-           |dt AS (SELECT a.bucket, ${dsum(r6("a.c * b.c"))} AS dot, ${dsum(r6("b.c * b.c"))} AS pss
-           |  FROM dm a JOIN dm b ON a.bucket = b.bucket + 1 AND a.pos = b.pos GROUP BY 1)
-           |SELECT cur.bucket, cur.n_vecs, ${r6("sqrt(cur.ss)")} AS centroid_norm,
-           |  CASE WHEN dt.dot IS NOT NULL AND cur.ss > 0 AND dt.pss > 0 THEN
-           |    ${r6("dt.dot / (sqrt(cur.ss) * sqrt(dt.pss))")}
-           |  END AS drift_cos
-           |FROM cur LEFT JOIN dt ON cur.bucket = dt.bucket""".stripMargin
-      },
-
-      "q_shapley_attr" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        val weight = "CAST(factorial(CAST(bit_count(v1.S) AS INTEGER)) AS DOUBLE) " +
-          "* CAST(factorial(CAST(k.k - 1 - bit_count(v1.S) AS INTEGER)) AS DOUBLE) " +
-          "/ CAST(factorial(CAST(k.k AS INTEGER)) AS DOUBLE)"
-        s"""WITH rows AS (SELECT user_id AS u, event_type AS t,
-           |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           |  FROM events WHERE ts IS NOT NULL),
-           |cp AS (SELECT u, min(CASE WHEN t = 'purchase' THEN rn END) AS cp FROM rows GROUP BY 1),
-           |cu AS (SELECT u, cp FROM cp WHERE cp IS NOT NULL),
-           |ch AS (SELECT DISTINCT r.u, r.t FROM rows r JOIN cu USING (u) WHERE r.rn < cu.cp),
-           |chl AS (SELECT t, row_number() OVER (ORDER BY t) - 1 AS b FROM (SELECT DISTINCT t FROM ch)),
-           |k AS (SELECT count(*) AS k FROM chl),
-           |um AS (SELECT cu.u, coalesce(m.mask, 0) AS mask FROM cu
-           |  LEFT JOIN (SELECT u, CAST(sum(CAST(1 AS BIGINT) << b) AS BIGINT) AS mask
-           |             FROM ch JOIN chl USING (t) GROUP BY 1) m USING (u)),
-           |sv AS (SELECT mask, count(*) AS conv FROM um GROUP BY 1),
-           |ss AS (SELECT unnest(range(0, 1 << k.k)) AS S FROM k),
-           |v AS (SELECT ss.S, coalesce(CAST(sum(sv.conv) AS BIGINT), 0) AS v
-           |  FROM ss LEFT JOIN sv ON (sv.mask & ss.S) = sv.mask GROUP BY 1),
-           |vf AS (SELECT v.v AS v_full FROM v, k WHERE v.S = (1 << k.k) - 1),
-           |ve AS (SELECT v AS v_empty FROM v WHERE S = 0),
-           |terms AS (SELECT chl.t AS channel,
-           |    ${r6(s"($weight) * CAST(v2.v - v1.v AS DOUBLE)")} AS term
-           |  FROM chl, k, v v1, v v2
-           |  WHERE (v1.S >> chl.b) & 1 = 0 AND v2.S = v1.S | (1 << chl.b)),
-           |shap AS (SELECT channel, ${dsum("term")} AS phi FROM terms GROUP BY 1)
-           |SELECT channel, ${r6("phi")} AS shapley,
-           |  CASE WHEN v_full > 0 THEN ${r6("phi / CAST(v_full AS DOUBLE)")} END AS share,
-           |  CAST(v_full AS BIGINT) AS v_full, CAST(v_empty AS BIGINT) AS v_empty
-           |FROM shap, vf, ve""".stripMargin
-      },
-
-      "q_growth" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH a AS (SELECT DISTINCT user_id AS u, epoch_us(ts) // $WeekUs AS p
-           |  FROM events WHERE ts IS NOT NULL),
-           |c AS (SELECT u, p, min(p) OVER (PARTITION BY u) AS f,
-           |    lag(p) OVER (PARTITION BY u ORDER BY p) AS pv,
-           |    lead(p) OVER (PARTITION BY u ORDER BY p) AS nx FROM a),
-           |st AS (SELECT p, CASE WHEN p = f THEN 'new'
-           |                     WHEN pv = p - 1 THEN 'retained'
-           |                     ELSE 'resurrected' END AS s FROM c
-           |  UNION ALL
-           |  SELECT c.p + 1, 'churned' FROM c, (SELECT max(p) AS mp FROM a) m
-           |  WHERE (c.nx IS NULL OR c.nx > c.p + 1) AND c.p + 1 <= m.mp)
-           |SELECT p AS period,
-           |  CAST(count(CASE WHEN s <> 'churned' THEN 1 END) AS BIGINT) AS n_active,
-           |  CAST(count(CASE WHEN s = 'new' THEN 1 END) AS BIGINT) AS n_new,
-           |  CAST(count(CASE WHEN s = 'retained' THEN 1 END) AS BIGINT) AS n_retained,
-           |  CAST(count(CASE WHEN s = 'resurrected' THEN 1 END) AS BIGINT) AS n_resurrected,
-           |  CAST(count(CASE WHEN s = 'churned' THEN 1 END) AS BIGINT) AS n_churned,
-           |  CASE WHEN count(CASE WHEN s = 'churned' THEN 1 END) > 0 THEN
-           |    ${r6("CAST(count(CASE WHEN s = 'new' THEN 1 END) + count(CASE WHEN s = 'resurrected' THEN 1 END) AS DOUBLE) / CAST(count(CASE WHEN s = 'churned' THEN 1 END) AS DOUBLE)")}
-           |  END AS quick_ratio
-           |FROM st GROUP BY 1""".stripMargin
-      },
-
-      "q_rdd" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        def side(cond: String, tag: String) = Seq(
-          s"count(CASE WHEN $cond THEN 1 END) AS n_$tag",
-          s"${dsum(s"CASE WHEN $cond THEN ${r6("u")} END")} AS su_$tag",
-          s"${dsum(s"CASE WHEN $cond THEN ${r6("y")} END")} AS sy_$tag",
-          s"${dsum(s"CASE WHEN $cond THEN ${r6("u * y")} END")} AS suy_$tag",
-          s"${dsum(s"CASE WHEN $cond THEN ${r6("u * u")} END")} AS suu_$tag"
-        ).mkString(",\n    ")
-        def fit(tag: String) = {
-          val n = s"CAST(n_$tag AS DOUBLE)"
-          val (su, sy, suy, suu) =
-            (s"coalesce(su_$tag, 0.0)", s"coalesce(sy_$tag, 0.0)",
-              s"coalesce(suy_$tag, 0.0)", s"coalesce(suu_$tag, 0.0)")
-          val denom = s"$n * $suu - $su * $su"
-          val slope = s"($n * $suy - $su * $sy) / ($denom)"
-          (s"CASE WHEN n_$tag > 0 THEN ${r6(s"CASE WHEN $denom > 0 THEN ($sy - ($slope) * $su) / $n ELSE $sy / $n END")} END",
-            s"CASE WHEN n_$tag > 0 AND $denom > 0 THEN ${r6(slope)} END")
-        }
-        val (il, sl) = fit("left")
-        val (ir, sr) = fit("right")
-        s"""WITH b AS (SELECT CAST(n_chars AS DOUBLE) - CAST(1000.0 AS DOUBLE) AS u,
-           |    CAST(CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS DOUBLE) AS y,
-           |    CAST(n_chars AS DOUBLE) >= 1000.0 AS r
-           |  FROM documents WHERE n_chars IS NOT NULL
-           |    AND abs(CAST(n_chars AS DOUBLE) - CAST(1000.0 AS DOUBLE)) <= CAST(800.0 AS DOUBLE)),
-           |m AS (SELECT ${side("NOT r", "left")},
-           |    ${side("r", "right")}
-           |  FROM b),
-           |f AS (SELECT CAST(n_left AS BIGINT) AS n_left, CAST(n_right AS BIGINT) AS n_right,
-           |    $il AS il, $sl AS sl, $ir AS ir, $sr AS sr FROM m)
-           |SELECT n_left, n_right, il AS intercept_left, sl AS slope_left,
-           |  ir AS intercept_right, sr AS slope_right,
-           |  CASE WHEN il IS NOT NULL AND ir IS NOT NULL THEN ${r6("ir - il")} END AS effect
-           |FROM f""".stripMargin
-      },
-
-      "q_asof_nearest" ->
-        """WITH p AS (SELECT user_id, ts, max(value) AS value
-          |  FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL GROUP BY 1, 2)
-          |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS time_us, e.event_type,
-          |  CASE WHEN pb.ts IS NOT NULL AND (pf.ts IS NULL OR
-          |      epoch_us(e.ts) - epoch_us(pb.ts) <= epoch_us(pf.ts) - epoch_us(e.ts))
-          |    THEN epoch_us(pb.ts) ELSE epoch_us(pf.ts) END AS purchase_time_us,
-          |  CASE WHEN pb.ts IS NOT NULL AND (pf.ts IS NULL OR
-          |      epoch_us(e.ts) - epoch_us(pb.ts) <= epoch_us(pf.ts) - epoch_us(e.ts))
-          |    THEN pb.value ELSE pf.value END AS purchase_value
-          |FROM events e
-          |ASOF LEFT JOIN p pb ON e.user_id = pb.user_id AND e.ts >= pb.ts
-          |ASOF LEFT JOIN p pf ON e.user_id = pf.user_id AND e.ts <= pf.ts""".stripMargin,
-
-      "q_bm25_prox" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |t AS (SELECT id, unnest(toks) AS term FROM tok),
-           |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-           |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-           |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN ('spark','hash','merge') GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |bs AS (SELECT id, sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl))) AS raw
-           |  FROM tf JOIN idf USING (term) JOIN dl USING (id), st GROUP BY id),
-           |pos AS (SELECT id, p, term FROM (
-           |    SELECT id, unnest(toks) AS term, generate_subscripts(toks, 1) AS p FROM tok)
-           |  WHERE term IN ('spark','hash','merge')),
-           |lg AS (SELECT id, p, term, lag(term) OVER w AS pt, lag(p) OVER w AS pp
-           |  FROM pos WINDOW w AS (PARTITION BY id ORDER BY p)),
-           |sp AS (SELECT id, CAST(min(p - pp) AS BIGINT) AS min_span FROM lg
-           |  WHERE pt IS NOT NULL AND pt <> term GROUP BY 1)
-           |SELECT bs.id, ${r6("bs.raw")} AS bm25, sp.min_span,
-           |  ${r6("CASE WHEN sp.min_span IS NOT NULL THEN bs.raw + CAST(2.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + CAST(sp.min_span AS DOUBLE)) ELSE bs.raw END")} AS bm25_prox
-           |FROM bs LEFT JOIN sp ON bs.id = sp.id""".stripMargin
-      },
-
-      "q_blocking_eval" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH base AS (SELECT DISTINCT lower(p_name) AS name FROM part
-           |  WHERE p_name IS NOT NULL AND lower(p_name) <> ''),
-           |rk AS (SELECT name, substr(name, 1, 2) AS block,
-           |    row_number() OVER (PARTITION BY substr(name, 1, 2) ORDER BY name) AS rnk
-           |  FROM base),
-           |sz AS (SELECT block, count(*) AS bs FROM rk GROUP BY 1),
-           |gold AS (SELECT a.name AS a_name, b.name AS b_name FROM rk a JOIN rk b
-           |  ON a.block = b.block AND a.rnk < b.rnk
-           |  WHERE levenshtein(a.name, b.name) <= 4),
-           |cand AS (SELECT a.name AS a_name, b.name AS b_name
-           |  FROM rk a, (SELECT unnest([1, 2]) AS off) o, rk b
-           |  WHERE b.block = a.block AND b.rnk = a.rnk + o.off
-           |    AND levenshtein(a.name, b.name) <= 4),
-           |cov AS (SELECT count(*) AS n_covered FROM gold
-           |  WHERE EXISTS (SELECT 1 FROM cand WHERE cand.a_name = gold.a_name AND cand.b_name = gold.b_name)),
-           |cnt AS (SELECT CAST(sum(bs) AS BIGINT) AS n_names, CAST(count(*) AS BIGINT) AS n_blocks,
-           |    CAST(sum(bs * (bs - 1) // 2) AS BIGINT) AS n_block_pairs,
-           |    CAST(sum(CASE WHEN bs <= 3 THEN bs * (bs - 1) // 2 ELSE 2 * bs - 3 END) AS BIGINT) AS n_candidates
-           |  FROM sz),
-           |g AS (SELECT CAST(count(*) AS BIGINT) AS n_gold FROM gold)
-           |SELECT n_names, n_blocks, n_block_pairs, n_candidates, n_gold,
-           |  CAST(n_covered AS BIGINT) AS n_covered,
-           |  CASE WHEN n_gold > 0 THEN ${r6("CAST(n_covered AS DOUBLE) / CAST(n_gold AS DOUBLE)")} END AS pair_completeness,
-           |  CASE WHEN n_block_pairs > 0 THEN ${r6("1.0 - CAST(n_candidates AS DOUBLE) / CAST(n_block_pairs AS DOUBLE)")} END AS reduction_ratio
-           |FROM cnt, g, cov""".stripMargin
-      },
-
-      "q_drift_report" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH m AS (
-           |  SELECT source = 'src0' AS ref, 'n_chars' AS feature, CAST(n_chars AS DOUBLE) AS v FROM documents
-           |  UNION ALL
-           |  SELECT source = 'src0', 'n_words', CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS DOUBLE) FROM documents
-           |  UNION ALL
-           |  SELECT source = 'src0', 'n_lines', CAST(len(string_split(text, chr(10))) AS DOUBLE) FROM documents),
-           |vv AS (SELECT feature, CASE WHEN ref THEN 1 ELSE 0 END AS a, v AS x FROM m
-           |  WHERE v IS NOT NULL AND NOT isnan(v)),
-           |c AS (SELECT feature, x, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(1 - a) AS BIGINT) AS cb
-           |      FROM vv GROUP BY 1, 2),
-           |w AS (SELECT feature,
-           |        CAST(sum(ca) OVER (PARTITION BY feature ORDER BY x) AS BIGINT) AS fa,
-           |        CAST(sum(cb) OVER (PARTITION BY feature ORDER BY x) AS BIGINT) AS fb,
-           |        CAST(sum(ca) OVER (PARTITION BY feature) AS BIGINT) AS na,
-           |        CAST(sum(cb) OVER (PARTITION BY feature) AS BIGINT) AS nb
-           |      FROM c),
-           |ksm AS (SELECT feature, max(na) AS n_ref, max(nb) AS n_cur,
-           |        max(CASE WHEN na > 0 AND nb > 0 THEN
-           |          abs(CAST(fa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE)) END) AS d0
-           |      FROM w GROUP BY 1),
-           |r2 AS (SELECT feature, min(x) AS lo, max(x) AS hi FROM vv GROUP BY 1),
-           |b2 AS (SELECT vv.feature, a = 1 AS ref,
-           |    CASE WHEN r2.hi = r2.lo THEN 0
-           |         ELSE CAST(least(floor((x - r2.lo) / ((r2.hi - r2.lo)/10.0)), 9.0) AS INT) END AS bin
-           |  FROM vv JOIN r2 ON vv.feature = r2.feature),
-           |c2 AS (SELECT feature, ref, bin, count(*) AS n FROM b2 GROUP BY 1,2,3),
-           |tt AS (SELECT feature, ref, sum(n) AS tot FROM c2 GROUP BY 1,2),
-           |grid AS (SELECT feature, CAST(range AS INT) AS bin
-           |  FROM (SELECT DISTINCT feature FROM c2) CROSS JOIN range(10)),
-           |j2 AS (SELECT grid.feature,
-           |    (CAST(COALESCE(cr.n,0) AS DOUBLE)+0.5)/(CAST(COALESCE(tr.tot,0) AS DOUBLE)+5.0) AS p,
-           |    (CAST(COALESCE(cc.n,0) AS DOUBLE)+0.5)/(CAST(COALESCE(tc.tot,0) AS DOUBLE)+5.0) AS q
-           |  FROM grid
-           |  LEFT JOIN c2 cr ON cr.feature = grid.feature AND cr.bin = grid.bin AND cr.ref
-           |  LEFT JOIN c2 cc ON cc.feature = grid.feature AND cc.bin = grid.bin AND NOT cc.ref
-           |  LEFT JOIN tt tr ON tr.feature = grid.feature AND tr.ref
-           |  LEFT JOIN tt tc ON tc.feature = grid.feature AND NOT tc.ref),
-           |ps AS (SELECT feature,
-           |    CAST(sum(CAST((p - q) * ln(p / q) AS DECIMAL(38,12))) AS DOUBLE) AS psi0
-           |  FROM j2 GROUP BY 1)
-           |SELECT ksm.feature, n_ref, n_cur,
-           |  ${r6("d0")} AS d,
-           |  ${r6("sqrt(CAST(n_ref AS DOUBLE) * CAST(n_cur AS DOUBLE) / CAST(n_ref + n_cur AS DOUBLE)) * d0")} AS ks,
-           |  ${r6("psi0")} AS psi
-           |FROM ksm LEFT JOIN ps ON ksm.feature = ps.feature""".stripMargin
-      },
-
-      "q_stem" ->
-        """WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
-          |s AS (SELECT term, CASE
-          |  WHEN ends_with(term,'ies') THEN
-          |    CASE WHEN ends_with(term,'eies') OR ends_with(term,'aies') THEN term
-          |         ELSE substr(term, 1, len(term)-3) || 'y' END
-          |  WHEN ends_with(term,'es') THEN
-          |    CASE WHEN ends_with(term,'aes') OR ends_with(term,'ees') OR ends_with(term,'oes') THEN term
-          |         ELSE substr(term, 1, len(term)-1) END
-          |  WHEN ends_with(term,'s') THEN
-          |    CASE WHEN ends_with(term,'ss') OR ends_with(term,'us') THEN term
-          |         ELSE substr(term, 1, len(term)-1) END
-          |  ELSE term END AS stem FROM t)
-          |SELECT stem, CAST(count(DISTINCT term) AS BIGINT) AS n_forms,
-          |  CAST(count(*) AS BIGINT) AS n_tokens
-          |FROM s GROUP BY 1""".stripMargin,
-
-      "q_templates" ->
-        """WITH t AS (SELECT
-          |    md5(array_to_string(list_transform(
-          |      list_filter(list_transform(string_split(regexp_replace(text, '\r', '', 'g'), chr(10)), l -> trim(l)), l -> l <> ''),
-          |      l -> least(50, CAST(floor(len(l) / 10.0) AS INT))), ',')) AS structure_hash,
-          |    md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
-          |  FROM documents WHERE text IS NOT NULL)
-          |SELECT structure_hash, CAST(count(*) AS BIGINT) AS n_docs,
-          |  CAST(count(DISTINCT fp) AS BIGINT) AS n_contents
-          |FROM t GROUP BY 1 HAVING count(*) >= 2""".stripMargin,
-
-      "q_curriculum" ->
-        """WITH g AS (SELECT source, CAST(row_number() OVER (ORDER BY source) - 1 AS BIGINT) AS gi
-          |  FROM (SELECT DISTINCT source FROM documents)),
-          |n AS (SELECT CAST(count(*) AS BIGINT) AS ng FROM g),
-          |r AS (SELECT doc_id, source, n_chars,
-          |    CAST(row_number() OVER (PARTITION BY source ORDER BY n_chars, doc_id) - 1 AS BIGINT) AS rk
-          |  FROM documents)
-          |SELECT r.doc_id, r.source, r.n_chars, rk AS rank_in_group,
-          |  CAST(rk * ng + gi AS BIGINT) AS global_pos
-          |FROM r JOIN g USING (source), n""".stripMargin,
-
-      "q_asof_forward" ->
-        """WITH p AS (SELECT user_id, ts, max(value) AS purchase_value
-          |  FROM events WHERE event_type = 'purchase' AND ts IS NOT NULL GROUP BY 1, 2)
-          |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS time_us, e.event_type,
-          |  epoch_us(p.ts) AS purchase_time_us, p.purchase_value
-          |FROM events e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.ts <= p.ts""".stripMargin,
-
-      "q_lang_margin" -> {
-        val langs = TextFunctions.Stopwords.map(_._1)
-        val hitCols = langs
-          .map(l => s"len(list_filter(toks, x -> list_contains(${stopwordSqlLists(l)}, x))) AS h_$l")
-          .mkString(", ")
-        s"""WITH pred AS ($langIdSelectSql),
-           |t AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |h AS (SELECT doc_id, $hitCols FROM t),
-           |s AS (SELECT doc_id, list_reverse(list_sort([${langs.map(l => s"h_$l").mkString(", ")}])) AS hs FROM h)
-           |SELECT pred.doc_id, pred.lang_pred,
-           |  CAST(hs[1] AS BIGINT) AS top_hits, CAST(hs[2] AS BIGINT) AS second_hits,
-           |  CAST(hs[1] - hs[2] AS BIGINT) AS margin
-           |FROM pred JOIN s ON pred.doc_id = s.doc_id""".stripMargin
-      },
-
-      "q_graph_profile" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-           |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-           |      FROM tk WHERE len(ts) >= 2),
-           |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM (SELECT src AS x FROM e UNION SELECT dst FROM e)),
-           |de AS (SELECT DISTINCT src, dst FROM e),
-           |rr AS (SELECT count(*) AS nr FROM de a
-           |  WHERE EXISTS (SELECT 1 FROM de b WHERE b.src = a.dst AND b.dst = a.src)),
-           |dg AS (SELECT src, count(*) AS od FROM e GROUP BY 1),
-           |m AS (SELECT CAST(max(od) AS BIGINT) AS max_out_deg, count(*) AS nsrc,
-           |    CAST(sum(od) AS BIGINT) AS n_edges FROM dg),
-           |dc AS (SELECT CAST(count(*) AS BIGINT) AS n_edges_distinct FROM de)
-           |SELECT nn.n_nodes, m.n_edges, dc.n_edges_distinct, m.max_out_deg,
-           |  ${r6("CAST(m.n_edges AS DOUBLE) / CAST(m.nsrc AS DOUBLE)")} AS avg_out_deg,
-           |  CASE WHEN dc.n_edges_distinct > 0 THEN
-           |    ${r6("CAST(rr.nr AS DOUBLE) / CAST(dc.n_edges_distinct AS DOUBLE)")}
-           |  END AS reciprocity
-           |FROM m, nn, dc, rr""".stripMargin
-      },
-
-      "q_feature_auc" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH m0 AS (
-           |  SELECT CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p,
-           |    'n_chars' AS feature, CAST(n_chars AS DOUBLE) AS x FROM documents
-           |  UNION ALL
-           |  SELECT CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END, 'n_words',
-           |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS DOUBLE) FROM documents
-           |  UNION ALL
-           |  SELECT CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END, 'n_lines',
-           |    CAST(len(string_split(text, chr(10))) AS DOUBLE) FROM documents),
-           |v AS (SELECT feature, x, p FROM m0 WHERE x IS NOT NULL AND NOT isnan(x)),
-           |r AS (SELECT feature, p,
-           |        CAST(rank() OVER (PARTITION BY feature ORDER BY x) AS DOUBLE)
-           |          + CAST(count(*) OVER (PARTITION BY feature, x) - 1 AS DOUBLE) / 2.0 AS rk
-           |      FROM v),
-           |m AS (SELECT feature, CAST(sum(p) AS BIGINT) AS n_pos, CAST(sum(1 - p) AS BIGINT) AS n_neg,
-           |        CAST(coalesce(sum(CASE WHEN p = 1 THEN CAST(rk AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS rp
-           |      FROM r GROUP BY 1),
-           |a AS (SELECT feature, n_pos, n_neg,
-           |    CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-           |      (rp - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0)
-           |        / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) END AS auc0
-           |  FROM m)
-           |SELECT feature, n_pos, n_neg, ${r6("auc0")} AS auc,
-           |  CASE WHEN auc0 IS NOT NULL THEN ${r6("abs(auc0 - 0.5) * 2.0")} END AS separation
-           |FROM a""".stripMargin
-      },
-
-      "q_rendezvous" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def hw(n: Int) =
-          s"list_transform(range(0, $n), sh -> ${h32("concat('rdz', '|', CAST(key AS VARCHAR), '|', CAST(sh AS VARCHAR))")})"
-        s"""WITH k AS (SELECT DISTINCT user_id AS key FROM events WHERE user_id IS NOT NULL),
-           |a AS (SELECT key, ${hw(8)} AS lf, ${hw(10)} AS lt FROM k),
-           |m AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-           |    CAST(count(CASE WHEN list_position(lf, list_max(lf)) <> list_position(lt, list_max(lt)) THEN 1 END) AS BIGINT) AS n_moved
-           |  FROM a)
-           |SELECT n_keys, n_moved,
-           |  CASE WHEN n_keys > 0 THEN ${r6("CAST(n_moved AS DOUBLE) / CAST(n_keys AS DOUBLE)")} END AS moved_frac,
-           |  ${r6("CAST(2 AS DOUBLE) / CAST(10 AS DOUBLE)")} AS expected_frac
-           |FROM m""".stripMargin
-      },
-
-      "q_prf_terms" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-           |t AS (SELECT id, unnest(toks) AS term FROM tok),
-           |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-           |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-           |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN ('spark','hash','merge') GROUP BY 1, 2),
-           |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |bs AS (SELECT id, sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl))) AS raw
-           |  FROM tf JOIN idf USING (term) JOIN dl USING (id), st GROUP BY id),
-           |top AS (SELECT id FROM (SELECT id, ${r6("raw")} AS s0 FROM bs)
-           |  ORDER BY s0 DESC, id LIMIT 10),
-           |e AS (SELECT tok.id, CAST(len(toks) AS DOUBLE) AS dl, unnest(toks) AS term
-           |  FROM tok JOIN top USING (id)),
-           |f AS (SELECT id, term, dl, count(*) AS tf FROM e
-           |  WHERE term NOT IN ('spark','hash','merge') AND dl > 0 GROUP BY 1, 2, 3),
-           |w AS (SELECT term, CAST(count(*) AS BIGINT) AS n_docs,
-           |    ${r6(s"(${dsum(r6("CAST(tf AS DOUBLE) / dl"))})")} AS weight
-           |  FROM f GROUP BY 1)
-           |SELECT term, n_docs, weight FROM w ORDER BY weight DESC, term LIMIT 10""".stripMargin
-      },
-
-      "q_decay_attr" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        s"""WITH rows AS (SELECT user_id AS u, event_type AS ty, epoch_us(ts) AS tu,
-           |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-           |  FROM events WHERE ts IS NOT NULL),
-           |cc AS (SELECT u, min(CASE WHEN ty = 'purchase' THEN rn END) AS cp,
-           |    min(CASE WHEN ty = 'purchase' THEN tu END) AS ct FROM rows GROUP BY 1),
-           |t AS (SELECT r.u, r.ty,
-           |    ${r6("pow(0.5, CAST(cc.ct - r.tu AS DOUBLE) / 86400000000.0)")} AS w
-           |  FROM rows r JOIN cc USING (u) WHERE cc.cp IS NOT NULL AND r.rn < cc.cp),
-           |sw AS (SELECT u, ${dsum("w")} AS sw FROM t GROUP BY 1),
-           |cr AS (SELECT t.ty AS channel, ${r6("t.w / sw.sw")} AS credit
-           |  FROM t JOIN sw USING (u))
-           |SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
-           |  ${r6(s"(${dsum("credit")})")} AS total_credit
-           |FROM cr GROUP BY 1""".stripMargin
-      },
-
-      "q_dau_wau" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        s"""WITH a AS (SELECT DISTINCT user_id AS key, epoch_us(ts) // 86400000000 AS day
-           |  FROM events WHERE ts IS NOT NULL),
-           |d AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM a GROUP BY 1),
-           |c AS (SELECT DISTINCT key, day + o AS wday FROM a, (SELECT unnest(range(0, 7)) AS o)),
-           |w AS (SELECT wday, CAST(count(*) AS BIGINT) AS wau FROM c GROUP BY 1)
-           |SELECT d.day, d.dau, w.wau,
-           |  ${r6("CAST(d.dau AS DOUBLE) / CAST(w.wau AS DOUBLE)")} AS stickiness
-           |FROM d JOIN w ON w.wday = d.day""".stripMargin
-      },
-
-      "q_class_balance" ->
-        s"""WITH b AS (SELECT doc_id, lang FROM documents WHERE lang IS NOT NULL),
-           |n AS (SELECT min(cnt) AS nmin FROM (SELECT count(*) AS cnt FROM b GROUP BY lang)),
-           |r AS (SELECT doc_id, lang, row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) AS rn
-           |  FROM (SELECT doc_id, lang,
-           |          ${h32("concat('bal9', '|', CAST(doc_id AS VARCHAR))")} AS h FROM b))
-           |SELECT doc_id, lang FROM r, n WHERE rn <= nmin""".stripMargin,
-
-      "q_qq_drift" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        val ps = QuantilePs.map(p => s"CAST($p AS DOUBLE)").mkString("[", ", ", "]")
-        s"""WITH v AS (SELECT (source = 'src0') AS slice, CAST(n_chars AS DOUBLE) AS x
-           |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |q AS (SELECT slice, quantile_cont(x, $ps) AS qs FROM v GROUP BY 1),
-           |u AS (SELECT slice, unnest($ps) AS p, unnest(qs) AS q FROM q),
-           |r AS (SELECT p, q FROM u WHERE slice),
-           |c AS (SELECT p, q FROM u WHERE NOT slice)
-           |SELECT coalesce(r.p, c.p) AS p, ${r6("r.q")} AS q_ref, ${r6("c.q")} AS q_cur,
-           |  CASE WHEN r.q IS NOT NULL AND c.q IS NOT NULL THEN ${r6("c.q - r.q")} END AS gap
-           |FROM r FULL JOIN c ON r.p = c.p""".stripMargin
-      },
-
-      "q_corr_matrix" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        def cellSqlRow(fa: String, fb: String, a: String, b: String) = {
-          val (sa, sb, qa, qb, p) = (s"s$a", s"s$b", s"q$a", s"q$b", s"p$a$b")
-          val va = s"(CAST(n AS DOUBLE) * $qa - $sa * $sa)"
-          val vb = s"(CAST(n AS DOUBLE) * $qb - $sb * $sb)"
-          s"""SELECT '$fa' AS feature_a, '$fb' AS feature_b, CAST(n AS BIGINT) AS n,
-             |  CASE WHEN n > 1 AND $va > 0 AND $vb > 0 THEN
-             |    ${r6(s"(CAST(n AS DOUBLE) * $p - $sa * $sb) / (sqrt($va) * sqrt($vb))")}
-             |  END AS corr FROM m""".stripMargin
-        }
-        s"""WITH b0 AS (SELECT CAST(n_chars AS DOUBLE) AS a,
-           |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS DOUBLE) AS b,
-           |    CAST(len(string_split(text, chr(10))) AS DOUBLE) AS c
-           |  FROM documents),
-           |bb AS (SELECT * FROM b0 WHERE a IS NOT NULL AND b IS NOT NULL AND c IS NOT NULL),
-           |m AS (SELECT count(*) AS n,
-           |    ${dsum(r6("a"))} AS sa, ${dsum(r6("a * a"))} AS qa,
-           |    ${dsum(r6("b"))} AS sb, ${dsum(r6("b * b"))} AS qb,
-           |    ${dsum(r6("c"))} AS sc, ${dsum(r6("c * c"))} AS qc,
-           |    ${dsum(r6("a * b"))} AS pab, ${dsum(r6("a * c"))} AS pac,
-           |    ${dsum(r6("b * c"))} AS pbc
-           |  FROM bb)
-           |${cellSqlRow("n_chars", "n_words", "a", "b")}
-           |UNION ALL
-           |${cellSqlRow("n_chars", "n_lines", "a", "c")}
-           |UNION ALL
-           |${cellSqlRow("n_words", "n_lines", "b", "c")}""".stripMargin
-      },
-
-      "q_lorenz" -> {
-        def r6(e: String) = graft.functions.Portable.r6Sql(e)
-        def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
-        val ps = (1 until 10).map(p => s"CAST(0.${p} AS DOUBLE)").mkString("[", ", ", "]")
-        s"""WITH v AS (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
-           |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
-           |e AS (SELECT quantile_cont(x, $ps) AS qs FROM v),
-           |bn AS (SELECT CAST(len(list_filter(e.qs, q -> q < v.x)) AS BIGINT) AS bin, v.x
-           |  FROM v, e),
-           |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n, ${dsum(r6("x"))} AS s
-           |  FROM bn GROUP BY 1),
-           |t AS (SELECT ${dsum(r6("s"))} AS tot FROM g),
-           |cm AS (SELECT a.bin, ${dsum(r6("b.s"))} AS cs
-           |  FROM g a JOIN g b ON b.bin <= a.bin GROUP BY 1)
-           |SELECT g.bin, g.n,
-           |  CASE WHEN tot > 0 THEN ${r6("g.s / tot")} END AS value_share,
-           |  CASE WHEN tot > 0 THEN ${r6("cm.cs / tot")} END AS cum_share
-           |FROM g JOIN cm ON g.bin = cm.bin, t""".stripMargin
-      }
-    )
-  }
 }

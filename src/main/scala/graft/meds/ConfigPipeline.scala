@@ -5,41 +5,51 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.operators._
 import org.apache.spark.sql.DataFrame
 
+import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
 
 /** Declarative, config-file-driven pipeline composition — the reference's
   * user interface (reference: pipeline_configuration.md; configs/
   * preprocess.yaml `stages:` list; configs/stage_configs/&#42;.yaml per-stage
-  * blocks). A user ports a reference pipeline by editing a config, not
-  * Scala: the YAML/JSON document names an ordered `stages` list, each
-  * stage optionally configured by a same-named block under
-  * `stage_configs` (keys match the reference's snake_case).
+  * blocks), and the one way graft composes the MEDS preprocessing
+  * pipeline (`q_meds_pipeline` runs through it). A user ports a
+  * reference pipeline by editing a config, not Scala: the YAML/JSON
+  * document names an ordered `stages` list, each stage optionally
+  * configured by a same-named block under `stage_configs` (keys match the
+  * reference's snake_case).
   *
   * Where the reference materializes every stage to parquet shards with a
   * mapreduce runner between them, this interpreter threads TWO lazy
   * frames through the fold — the DATA frame and the current code-METADATA
   * frame (the reference's `codes.parquet`) — so Catalyst sees the whole
-  * composed chain as one plan per output, exactly like the code-composed
-  * [[MedsPipeline.run]]. Fit stages (`preliminary_counts`,
-  * `fit_outlier_detection`, `fit_normalization`) re-aggregate the current
-  * data into the metadata slot; transform stages consume it via
-  * vocabulary-sized broadcast joins.
+  * composed chain as one plan per output: column pruning and filter
+  * ordering cross stage boundaries, and the cohort's hash(patient_id)
+  * exchange is reused by every patient-keyed stage downstream. Fit stages
+  * (`preliminary_counts`, `fit_outlier_detection`, `fit_normalization`)
+  * re-aggregate the current data into the metadata slot; transform stages
+  * consume it via vocabulary-sized broadcast joins.
   *
-  * Supported stage names (reference: configs/stage_configs/):
+  * Supported stage names and the keys each reads (reference:
+  * configs/stage_configs/), as `StageKeys` lists them:
   *   - `filter_patients` {min_events_per_patient, min_measurements_per_patient}
-  *   - `add_time_derived_measurements` {age {DOB_code|dob_from_first_event,
-  *     age_code, age_unit}, time_of_day {time_of_day_code, endpoints}}
+  *   - `add_time_derived_measurements` {age {DOB_code, age_code, age_unit},
+  *     time_of_day {time_of_day_code, endpoints}}; a null `DOB_code`
+  *     anchors ages at each patient's first event
   *   - `preliminary_counts` / `count_code_occurrences`
   *     {aggregations, do_summarize_over_all_codes}
   *   - `filter_measurements` {min_patients_per_code, min_occurrences_per_code}
-  *   - `fit_outlier_detection` {}
+  *   - `fit_outlier_detection` / `fit_normalization` {aggregations}
   *   - `occlude_outliers` {stddev_cutoff, drop_is_inlier}
-  *   - `fit_normalization` {}
-  *   - `fit_vocabulary_indices` {}
+  *   - `fit_vocabulary_indices` {ordering_method: lexicographic}
   *   - `normalization` {}
   *   - `reorder_measurements` {ordered_code_patterns}
   *   - `tokenization` {}
   * Top-level `code_modifiers` applies to every code-keyed stage.
+  *
+  * Bad configs fail before any frame is built: an unknown stage, a key a
+  * stage does not read, a `stage_configs` block for a stage missing from
+  * `stages`, or a value of the wrong type (text where a number belongs)
+  * raises an IllegalArgumentException naming the key and the valid ones.
   */
 object ConfigPipeline {
 
@@ -67,8 +77,68 @@ object ConfigPipeline {
     val mods = Option(root.get("code_modifiers")).filter(_.isArray)
       .map(_.elements().asScala.map(_.asText()).toSeq)
       .getOrElse(Nil)
+    stages.foreach { stage =>
+      val keys = StageKeys.getOrElse(stage, throw new IllegalArgumentException(
+        s"unknown pipeline stage `$stage`; known: ${StageKeys.keys.mkString(", ")}"))
+      validate(s"stage_configs.$stage", effectiveConfig(stage, sc.getOrElse(stage, empty)), keys)
+    }
+    sc.keys.filterNot(stages.contains).foreach { block =>
+      throw new IllegalArgumentException(
+        s"stage_configs block `$block` names a stage missing from `stages`; stages: ${stages.mkString(", ")}")
+    }
     Parsed(stages, sc, mods)
   }
+
+  /** What a config value must be; `null` is always accepted (it unsets a
+    * registry default).
+    */
+  private sealed trait Kind
+  private final case class Scalar(what: String, ok: JsonNode => Boolean) extends Kind
+  private final case class ListOf(elem: Scalar) extends Kind
+  private final case class Block(keys: ListMap[String, Kind]) extends Kind
+
+  private val AnInteger = Scalar("an integer", _.isIntegralNumber)
+  private val ANumber = Scalar("a number", _.isNumber)
+  private val ABoolean = Scalar("true or false", _.isBoolean)
+  private val AString = Scalar("a string", _.isValueNode)
+  private val Aggregations = ListMap[String, Kind]("aggregations" -> ListOf(AString))
+
+  /** The keys each stage reads, after the defaults merge. */
+  private val StageKeys: ListMap[String, ListMap[String, Kind]] = ListMap(
+    "filter_patients" -> ListMap(
+      "min_events_per_patient" -> AnInteger, "min_measurements_per_patient" -> AnInteger),
+    "add_time_derived_measurements" -> ListMap(
+      "age" -> Block(ListMap("DOB_code" -> AString, "age_code" -> AString, "age_unit" -> AString)),
+      "time_of_day" -> Block(ListMap("time_of_day_code" -> AString, "endpoints" -> ListOf(AnInteger)))),
+    "preliminary_counts" -> (Aggregations + ("do_summarize_over_all_codes" -> ABoolean)),
+    "count_code_occurrences" -> (Aggregations + ("do_summarize_over_all_codes" -> ABoolean)),
+    "filter_measurements" -> ListMap(
+      "min_patients_per_code" -> AnInteger, "min_occurrences_per_code" -> AnInteger),
+    "fit_outlier_detection" -> Aggregations,
+    "occlude_outliers" -> ListMap("stddev_cutoff" -> ANumber, "drop_is_inlier" -> ABoolean),
+    "fit_normalization" -> Aggregations,
+    "fit_vocabulary_indices" -> ListMap(
+      "ordering_method" -> Scalar("\"lexicographic\"", _.asText() == "lexicographic")),
+    "normalization" -> ListMap(),
+    "reorder_measurements" -> ListMap("ordered_code_patterns" -> ListOf(AString)),
+    "tokenization" -> ListMap())
+
+  private def validate(path: String, n: JsonNode, keys: ListMap[String, Kind]): Unit =
+    if (n != null && !n.isNull) {
+      val valid = if (keys.isEmpty) "none" else keys.keys.mkString(", ")
+      require(n.isObject, s"$path must be a mapping; valid keys: $valid")
+      n.properties().asScala.foreach { e =>
+        val (k, v) = (e.getKey, e.getValue)
+        val kind = keys.getOrElse(k, throw new IllegalArgumentException(
+          s"$path: unknown key `$k`; valid keys: $valid"))
+        if (!v.isNull) kind match {
+          case s: Scalar => require(s.ok(v), s"$path.$k must be ${s.what}, got $v")
+          case ListOf(s) => require(v.isArray && v.elements().asScala.forall(s.ok),
+            s"$path.$k must be a list, each item ${s.what}, got $v")
+          case Block(sub) => validate(s"$path.$k", v, sub)
+        }
+      }
+    }
 
   /** Per-stage defaults registry mirroring the reference's
     * `configs/stage_configs/&#42;.yaml` composition model (one defaults file
@@ -118,13 +188,8 @@ object ConfigPipeline {
 
   private def timeDerivedConfigs(n: JsonNode): Seq[TimeDerived.TimeDerivedConfig] = {
     val age = Option(n.get("age")).filterNot(_.isNull).map { a =>
-      val dob: DataFrame => org.apache.spark.sql.Column =
-        optText(a, "DOB_code") match {
-          case Some(code) => TimeDerived.dobFromCode(code)
-          // graft extension for cohorts without explicit birth events
-          case None => TimeDerived.dobFromFirstEvent
-        }
-      TimeDerived.AgeConfig(dob,
+      TimeDerived.AgeConfig(
+        optText(a, "DOB_code").map(TimeDerived.Dob.Code).getOrElse(TimeDerived.Dob.FirstEvent),
         optText(a, "age_code").getOrElse("AGE"),
         optText(a, "age_unit").getOrElse("years"))
     }
@@ -199,14 +264,6 @@ object ConfigPipeline {
 
         case "tokenization" =>
           st.copy(tokenized = Some(Tokenize.seqOfPatientEvents(st.data)))
-
-        case other =>
-          throw new IllegalArgumentException(
-            s"unknown pipeline stage `$other`; known: filter_patients, " +
-              "add_time_derived_measurements, preliminary_counts, " +
-              "count_code_occurrences, filter_measurements, fit_outlier_detection, " +
-              "occlude_outliers, fit_normalization, fit_vocabulary_indices, " +
-              "normalization, reorder_measurements, tokenization")
       }
     }
   }

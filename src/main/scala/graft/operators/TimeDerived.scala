@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.meds.Meds
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Time-derived measurement generators (age, time-of-day) and the
@@ -48,9 +48,9 @@ object TimeDerived {
     * keeping only strictly-positive ages
     * (add_time_derived_measurements.py:250-265).
     *
-    * `dobExpr` generalizes the reference's `DOB_code` lookup: pass
-    * `dobFromCode("DOB")` for reference semantics, or e.g. the patient's
-    * first observation time for datasets without explicit birth events.
+    * `dob` generalizes the reference's `DOB_code` lookup: `Dob.Code("DOB")`
+    * for reference semantics, or `Dob.FirstEvent` for datasets without
+    * explicit birth events.
     *
     * Shape: the per-patient DOB is a narrow AGGREGATE over the non-null-
     * time rows, null-safe-joined onto the distinct (patient, time) frame —
@@ -64,7 +64,7 @@ object TimeDerived {
     */
   def ageEvents(
       df: DataFrame,
-      dobExpr: DataFrame => Column,
+      dob: Dob,
       ageCode: String = "AGE",
       ageUnit: String = "years"
   ): DataFrame = {
@@ -74,8 +74,8 @@ object TimeDerived {
     val keys = nonNull
       .select(col(Meds.PatientId), col(Meds.Time))
       .dropDuplicates(Meds.PatientId, Meds.Time)
-    val dobs =
-      if (dobExpr eq dobFromFirstEvent)
+    val dobs = dob match {
+      case Dob.FirstEvent =>
         // first-event DOB reads only (patient, time): min over the
         // DISTINCT key set equals min over the multiset, so aggregate
         // the dedup frame itself — the cohort is scanned once and the
@@ -83,9 +83,10 @@ object TimeDerived {
         // second full scan + window sort of the upstream chain
         keys.groupBy(col(Meds.PatientId).as("__pid"))
           .agg(min(col(Meds.Time)).as("__dob"))
-      else nonNull
+      case Dob.Code(code) => nonNull
         .groupBy(col(Meds.PatientId).as("__pid"))
-        .agg(dobExpr(df).as("__dob"))
+        .agg(min(when(col(Meds.Code) === code, col(Meds.Time))).as("__dob"))
+    }
     keys
       .join(dobs.hint("shuffle_hash"), col(Meds.PatientId) <=> col("__pid"), "inner")
       .select(
@@ -98,22 +99,18 @@ object TimeDerived {
       .filter(col(Meds.NumericValue).isNotNull && col(Meds.NumericValue) > 0)
   }
 
-  /** DOB from an explicit birth-code event: min time of rows whose code is
-    * `dobCode`, per patient (add_time_derived_measurements.py:251). The
-    * returned column is the per-patient AGGREGATE [[ageEvents]] groups by
-    * patient_id (it was a patient-window min before round 13 — same
-    * values, see the ageEvents shape note).
-    */
-  def dobFromCode(dobCode: String): DataFrame => Column = { _ =>
-    min(when(col(Meds.Code) === dobCode, col(Meds.Time)))
-  }
+  /** Where [[ageEvents]] anchors each patient's date of birth. */
+  sealed trait Dob
+  object Dob {
+    /** The patient's first observed time (for cohorts without birth
+      * events; an extension beyond the reference).
+      */
+    case object FirstEvent extends Dob
 
-  /** Anchor ages at each patient's first observed time (for cohorts without
-    * birth events; an extension beyond the reference). Aggregate form, as
-    * [[dobFromCode]].
-    */
-  val dobFromFirstEvent: DataFrame => Column = { _ =>
-    min(col(Meds.Time))
+    /** The earliest time of the patient's `code` events
+      * (add_time_derived_measurements.py:251).
+      */
+    final case class Code(code: String) extends Dob
   }
 
   /** Emit one time-of-day bucket event per (patient, unique non-null time):
@@ -147,7 +144,7 @@ object TimeDerived {
     */
   sealed trait TimeDerivedConfig
   final case class AgeConfig(
-      dobExpr: DataFrame => Column,
+      dob: Dob,
       ageCode: String = "AGE",
       ageUnit: String = "years"
   ) extends TimeDerivedConfig

@@ -1,37 +1,87 @@
 package graft
 
-import graft.meds.{ConfigPipeline, MedsPipeline}
-import graft.operators.TimeDerived
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
+import graft.meds.ConfigPipeline
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** The declarative stage-list runner must reproduce the code-composed
-  * pipeline exactly — a user ports a reference pipeline by editing the
-  * YAML, never Scala.
+/** The declarative stage-list runner — the one way the MEDS pipeline is
+  * composed. The checked-in example config must reproduce the
+  * oracle-verified catalog pipeline exactly: a user ports a reference
+  * pipeline by editing the YAML, never Scala.
   */
 class ConfigPipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val meds = graft.meds.Meds.fromEvents(
-    graft.sources.Tables.events(spark, "/root/testdata/sf0.001"))
+  private val sf = "/root/testdata/sf0.001"
+  private lazy val meds = graft.meds.Meds.fromEvents(graft.sources.Tables.events(spark, sf))
+  private lazy val exampleYaml = new String(
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("configs/preprocess_example.yaml")),
+    java.nio.charset.StandardCharsets.UTF_8)
 
-  test("the checked-in example YAML reproduces MedsPipeline.run bit-for-bit") {
-    val yaml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("configs/preprocess_example.yaml")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val fromConfig = ConfigPipeline.run(meds, yaml).data
-      .select(col("patient_id"), unix_micros(col("time")).as("t"), col("code"),
-        graft.functions.Portable.r6(col("numeric_value")).as("v"))
-    val fromCode = MedsPipeline.run(meds, MedsPipeline.Config(
-        minMeasurementsPerPatient = Some(60),
-        timeDerived = Seq(
-          TimeDerived.AgeConfig(TimeDerived.dobFromFirstEvent, "AGE", "yrs"),
-          TimeDerived.TimeOfDayConfig()),
-        stddevCutoff = Some(3.0)))
-      .data
-      .select(col("patient_id"), unix_micros(col("time")).as("t"), col("code"),
-        graft.functions.Portable.r6(col("numeric_value")).as("v"))
+  test("the checked-in example YAML reproduces q_meds_pipeline's rows exactly") {
+    val fromConfig = ConfigPipeline.run(meds, exampleYaml).data
+      .select(col("patient_id"), unix_micros(col("time")).as("time_us"), col("code"),
+        graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))
+    val fromCatalog = SparkEntry.queries("q_meds_pipeline")(spark, sf)
     assert(fromConfig.count() > 0)
-    assert(fromConfig.exceptAll(fromCode).isEmpty && fromCode.exceptAll(fromConfig).isEmpty)
+    assert(fromConfig.exceptAll(fromCatalog).isEmpty && fromCatalog.exceptAll(fromConfig).isEmpty)
+  }
+
+  test("the reference stage chain composes end-to-end on real events") {
+    val result = ConfigPipeline.run(meds,
+      """stages:
+        |  - filter_patients
+        |  - add_time_derived_measurements
+        |  - filter_measurements
+        |  - fit_outlier_detection
+        |  - occlude_outliers
+        |  - fit_normalization
+        |  - fit_vocabulary_indices
+        |  - normalization
+        |  - tokenization
+        |stage_configs:
+        |  filter_patients: {min_measurements_per_patient: 5}
+        |  add_time_derived_measurements:
+        |    age: {DOB_code: null, age_unit: "yrs"}
+        |    time_of_day: {time_of_day_code: "time_of_day"}
+        |  filter_measurements: {min_occurrences_per_code: 10}
+        |  occlude_outliers: {stddev_cutoff: 3.0, drop_is_inlier: true}
+        |""".stripMargin)
+
+    assert(result.data.count() > 0)
+    // the generated measurement codes entered the vocabulary
+    val vocab = result.meta.get.select("code").as[String].collect().toSet
+    assert(vocab.contains("AGE") && vocab.exists(_.startsWith("time_of_day//")))
+    // normalized codes are vocabulary indices covering 1..V
+    val codeRange = result.data.agg(min("code"), max("code")).as[(Long, Long)].head()
+    assert(codeRange._1 >= 1L && codeRange._2 <= vocab.size)
+    // z-scoring: per-code mean of normalized values ~ 0, std ~ 1
+    val stats = result.data.filter(col("numeric_value").isNotNull)
+      .groupBy("code").agg(avg("numeric_value").as("m"), stddev_pop("numeric_value").as("s"), count(lit(1)).as("n"))
+      .filter(col("n") >= 30).as[(Long, Double, Double, Long)].collect()
+    assert(stats.nonEmpty)
+    assert(stats.forall { case (_, m, s, _) => math.abs(m) < 0.15 && math.abs(s - 1.0) < 0.15 },
+      s"normalization off: ${stats.take(3).toSeq}")
+    // tokenization: one row per patient with aligned per-event lists
+    val tok = result.tokenized.get
+    assert(tok.count() ==
+      result.data.filter(col("time").isNotNull).select("patient_id").distinct().count())
+    assert(tok.filter(
+      size(col("code")) =!= size(col("numeric_value")) ||
+      size(col("code")) =!= size(col("time_delta_days"))).count() == 0)
+  }
+
+  test("the fit-vocabulary + normalization chain keeps every row") {
+    val df = Seq(
+      (1L, java.sql.Timestamp.valueOf("2020-01-01 10:00:00"), "HR", Some(60.0)),
+      (1L, java.sql.Timestamp.valueOf("2020-01-01 11:00:00"), "HR", Some(80.0))
+    ).toDF("patient_id", "time", "code", "numeric_value")
+    val result = ConfigPipeline.run(df, "stages: [fit_vocabulary_indices, normalization]\n")
+    assert(result.data.count() == 2)
+    assert(result.meta.get.count() == 1)
   }
 
   test("JSON works too (YAML superset), stages compose left to right") {
@@ -78,8 +128,7 @@ class ConfigPipelineSpec extends SparkSpec {
     assert(d.get("time_of_day").get("time_of_day_code").asText() == "TIME_OF_DAY")
     assert(ConfigPipeline.stageDefaults("occlude_outliers").get("stddev_cutoff").asDouble() == 4.5)
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper(
-      new com.fasterxml.jackson.dataformat.yaml.YAMLFactory())
+    val mapper = new ObjectMapper(new YAMLFactory())
     val user = mapper.readTree(
       "age:\n  DOB_code: null\n  age_unit: \"yrs\"\ntime_of_day:\n  endpoints: [6, 18]\n")
     val eff = ConfigPipeline.effectiveConfig("add_time_derived_measurements", user)
@@ -120,5 +169,63 @@ class ConfigPipelineSpec extends SparkSpec {
     ).toDF("patient_id", "time", "code", "numeric_value")
     val out = ConfigPipeline.run(df, "stages:\n  - add_time_derived_measurements\n").data
     assert(out.filter(col("code") === "AGE").count() == 0)
+  }
+
+  // --- config validation ---------------------------------------------------
+
+  private def rejected(yaml: String): String =
+    intercept[IllegalArgumentException](ConfigPipeline.parse(yaml)).getMessage
+
+  test("a misspelled stage key fails loudly, naming the key and the valid ones") {
+    val msg = rejected(
+      "stages: [filter_patients]\nstage_configs:\n  filter_patients:\n    min_measurement_per_patient: 60\n")
+    assert(msg.contains("`min_measurement_per_patient`") &&
+      msg.contains("min_events_per_patient, min_measurements_per_patient"), msg)
+    val nested = rejected(
+      "stages: [add_time_derived_measurements]\nstage_configs:\n" +
+        "  add_time_derived_measurements:\n    age:\n      dob_code: DOB\n")
+    assert(nested.contains("age: unknown key `dob_code`") &&
+      nested.contains("DOB_code, age_code, age_unit"), nested)
+  }
+
+  test("a stage_configs block for a stage missing from `stages` is rejected") {
+    val msg = rejected("stages: [normalization]\nstage_configs:\n  occlude_outliers: {stddev_cutoff: 3.0}\n")
+    assert(msg.contains("`occlude_outliers`") && msg.contains("stages: normalization"), msg)
+  }
+
+  test("text where a number belongs is rejected, not read as 0") {
+    val msg = rejected(
+      "stages: [filter_patients]\nstage_configs:\n  filter_patients:\n    min_measurements_per_patient: sixty\n")
+    assert(msg.contains("min_measurements_per_patient must be an integer") && msg.contains("sixty"), msg)
+    val cutoff = rejected(
+      "stages: [occlude_outliers]\nstage_configs:\n  occlude_outliers: {stddev_cutoff: \"3\"}\n")
+    assert(cutoff.contains("stddev_cutoff must be a number"), cutoff)
+  }
+
+  test("fit_vocabulary_indices accepts only the lexicographic ordering") {
+    val msg = rejected(
+      "stages: [fit_vocabulary_indices]\nstage_configs:\n  fit_vocabulary_indices: {ordering_method: frequency}\n")
+    assert(msg.contains("ordering_method") && msg.contains("\"lexicographic\""), msg)
+    ConfigPipeline.parse(
+      "stages: [fit_vocabulary_indices]\nstage_configs:\n  fit_vocabulary_indices: {ordering_method: lexicographic}\n")
+  }
+
+  test("the example config, each of its stage prefixes and every stage's defaults validate") {
+    val parsed = ConfigPipeline.parse(exampleYaml)
+    assert(parsed.stages.size == 7)
+    // the benchmark runs the example's first k stages with only their blocks
+    val mapper = new ObjectMapper(new YAMLFactory())
+    (1 to parsed.stages.size).foreach { k =>
+      val kept = parsed.stages.take(k)
+      val cfg = mapper.readTree(exampleYaml).asInstanceOf[ObjectNode]
+      val stages = cfg.putArray("stages")
+      kept.foreach(s => stages.add(s))
+      cfg.get("stage_configs").asInstanceOf[ObjectNode].retain(kept.asJava)
+      assert(ConfigPipeline.parse(mapper.writeValueAsString(cfg)).stages == kept)
+    }
+    Seq("filter_patients", "add_time_derived_measurements", "preliminary_counts",
+      "count_code_occurrences", "filter_measurements", "fit_outlier_detection",
+      "occlude_outliers", "fit_normalization", "fit_vocabulary_indices", "normalization",
+      "reorder_measurements", "tokenization").foreach(s => ConfigPipeline.parse(s"stages: [$s]\n"))
   }
 }

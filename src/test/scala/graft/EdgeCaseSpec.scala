@@ -1,7 +1,7 @@
 package graft
 
 import graft.dedup.Dedup
-import graft.meds.{Meds, MedsPipeline}
+import graft.meds.ConfigPipeline
 import graft.operators._
 import graft.pipeline.{Packing, Sampling, Selection}
 import graft.text.{Bm25, TextFunctions, Tfidf}
@@ -23,13 +23,18 @@ class EdgeCaseSpec extends SparkSpec {
     assert(CodeMetadata.aggregate(emptyMeds).count() == 0)
     assert(Filters.filterPatientsByNumMeasurements(emptyMeds, 1).count() == 0)
     assert(Filters.filterPatientsByNumEvents(emptyMeds, 1).count() == 0)
-    assert(TimeDerived.ageEvents(emptyMeds, TimeDerived.dobFromFirstEvent).count() == 0)
+    assert(TimeDerived.ageEvents(emptyMeds, TimeDerived.Dob.FirstEvent).count() == 0)
     assert(TimeDerived.timeOfDayEvents(emptyMeds).count() == 0)
     assert(Vocabulary.lexicographicIndices(CodeMetadata.aggregate(emptyMeds)).count() == 0)
     assert(Vocabulary.lexicographicIndicesScalable(CodeMetadata.aggregate(emptyMeds)).count() == 0)
     assert(Tokenize.seqOfPatientEvents(emptyMeds).count() == 0)
-    val r = MedsPipeline.run(emptyMeds, MedsPipeline.Config(stddevCutoff = Some(3.0)))
-    assert(r.data.count() == 0 && r.codeMetadata.count() == 0 && r.tokenized.count() == 0)
+    val r = ConfigPipeline.run(emptyMeds,
+      """stages: [fit_outlier_detection, occlude_outliers, fit_normalization,
+        |  fit_vocabulary_indices, normalization, tokenization]
+        |stage_configs:
+        |  occlude_outliers: {stddev_cutoff: 3.0, drop_is_inlier: true}
+        |""".stripMargin)
+    assert(r.data.count() == 0 && r.meta.get.count() == 0 && r.tokenized.get.count() == 0)
   }
 
   test("dedup and text operators tolerate an empty corpus") {

@@ -109,7 +109,7 @@ class MedsOperatorsSpec extends SparkSpec {
 
   test("ageEvents emits positive ages per unique (patient, time) from DOB code") {
     val out = TimeDerived
-      .ageEvents(fixture, TimeDerived.dobFromCode("DOB"), "AGE", "years")
+      .ageEvents(fixture, TimeDerived.Dob.Code("DOB"), "AGE", "years")
       .collect()
     // patient 2 has no DOB row -> no ages; patient 1: DOB row itself has age 0 (excluded),
     // two observation times remain
@@ -148,7 +148,7 @@ class MedsOperatorsSpec extends SparkSpec {
     val out = TimeDerived
       .addTimeDerivedMeasurements(
         fixture,
-        Seq(AgeConfig(TimeDerived.dobFromCode("DOB"), "AGE", "yrs"), TimeOfDayConfig()))
+        Seq(AgeConfig(TimeDerived.Dob.Code("DOB"), "AGE", "yrs"), TimeOfDayConfig()))
       .collect()
     // 5 original + 2 age (patient 1 obs times) + 4 time_of_day
     assert(out.length == 11)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Filters, Tokenize}
+import graft.operators.{Filters, TimeDerived, Tokenize}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
@@ -62,6 +62,14 @@ class PlanShapeSpec extends SparkSpec {
     // see Filters.filterPatientsByNumMeasurements.)
     val out = Tokenize.seqsExploded(Filters.filterPatientsByNumMeasurements(cohort, 2))
     assert(countShuffles(out) == 1)
+  }
+
+  test("first-event ageEvents runs without a sort (DOB aggregated over the dedup keys)") {
+    // The Dob.FirstEvent fast path takes each patient's min time over the
+    // already-deduplicated (patient, time) keys: an aggregate + hash join,
+    // never a patient-window sort of the cohort. 0 is the count measured
+    // before the DOB source became an ADT.
+    assert(countSorts(TimeDerived.ageEvents(cohort, TimeDerived.Dob.FirstEvent)) == 0)
   }
 
   test("no query plan has an unbounded single-partition window") {

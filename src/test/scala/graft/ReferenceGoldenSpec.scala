@@ -171,7 +171,7 @@ class ReferenceGoldenSpec extends SparkSpec {
     val got = addTimeDerivedMeasurements(
       medsDf(allIn),
       Seq(
-        AgeConfig(dobFromCode("DOB"), ageCode = "AGE", ageUnit = "years"),
+        AgeConfig(Dob.Code("DOB"), ageCode = "AGE", ageUnit = "years"),
         TimeOfDayConfig(Seq(6, 12, 18), todCode = "TIME_OF_DAY")))
     val want = tup4(TimeDerivedTrain0 ++ TimeDerivedTrain1 ++ TimeDerivedTuning0 ++ TimeDerivedHeldOut0)
     // semantic order at one (patient, time): TIME_OF_DAY, then AGE, then
