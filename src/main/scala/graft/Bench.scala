@@ -48,7 +48,7 @@ object Bench {
     * shuffles exceed one node's disk at this size (measured: >90 GB
     * before ENOSPC for shingle-jaccard); banded MinHash is the path for
     * this regime. Rows-only — no oracle at this size; the df-cap-bind
-    * evidence comes from [[graft.CapBindProbe]].
+    * evidence (max_df 1323 at 5M docs) is recorded in SURVEY §7 (R8).
     * LIST ORDER IS EXECUTION ORDER, cheapest first (see Sf10Queries).
     */
   val Sf100Queries: Seq[String] = Seq(
@@ -168,16 +168,6 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'           => "\\\""
-    case '\\'          => "\\\\"
-    case '\n'          => "\\n"
-    case '\r'          => "\\r"
-    case '\t'          => "\\t"
-    case c if c < ' '  => f"\\u${c.toInt}%04x"
-    case c             => c.toString
-  }
-
   /** Fresh SparkSession per section. Round-5 verdict: running the sf1
     * section in the same JVM session after 182 sf0.1 queries inflated its
     * timings 1.5-4x (dead codegen classes, block-manager litter, GC
@@ -186,36 +176,22 @@ object Bench {
     * executor/block state so each section measures its plans, not the
     * previous section's garbage.
     */
-  private def newSession(cpus: String, extraConf: Map[String, String]): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+  private def newSession(cpus: Int, extraConf: Map[String, String]): SparkSession =
+    SessionDefaults.local(cpus, Map(
       // Let AQE size shuffles for the DATA, not the core count: start
       // wide (256 pre-coalesce partitions) and coalesce down to the
       // target size per stage. With a bare shuffle.partitions=32 the
       // sf10 (100x) section put ~0.5 GB in every sort-merge partition
       // and spilled (q_top_customers read 21x for 10x data); at sf0.1
       // AQE coalesces right back so small sections pay nothing.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256",
       // the driver's sf tables are single parquet files and ScaleData's
       // are many ~original-sized files with 1 MiB row groups; 4 MiB
       // splits give the scan the parallelism a production multi-file
       // layout has without drowning the scheduler in footer-only tasks
       // (splits cannot cross a row-group boundary, so the cap only bites
       // where row groups are at least that fine).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // keep the object-hash aggregates on the hash path (SessionDefaults:
-    // the 128-group sort fallback silently re-sorted the LOF pair stream)
-    SessionDefaults.applyTo(b)
-    extraConf.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      "spark.sql.files.maxPartitionBytes" -> "4m") ++ extraConf)
 
   /** Cumulative task-metrics counters; `delta` reads the increment since
     * the last call, so one listener serves every query in a section.
@@ -247,25 +223,6 @@ object Bench {
     }
   }
 
-  /** Run each query of `subset` in its OWN SparkSession. The scaled
-    * (sf1/sf10/sf100) sections use this: even with section-fresh
-    * sessions, blocking unpersist and an explicit gc(), a 100x query
-    * following other 100x queries read up to 4x its isolated time
-    * (q_curation: 57s isolated, 156-251s in-section — residual shuffle
-    * files, codegen cache and GC state). The artifact is the round
-    * contract and must match isolated reality, so isolation is the
-    * measurement, not a diagnostic. Session setup (~2s) stays outside
-    * the timed region.
-    */
-  def runIsolated(
-      dir: String,
-      subset: Set[String],
-      cpus: String,
-      extraConf: Map[String, String] = Map.empty): Seq[QRes] =
-    subset.toSeq.sorted.flatMap { name =>
-      runSection(dir, Some(Set(name)), cpus, extraConf)
-    }
-
   /** Run `subset` (or all queries) against `dir` in one SparkSession,
     * calling `onResult` after EVERY query (the round-11 driver run was
     * killed at its timeout and the all-at-the-end artifact write left
@@ -280,7 +237,7 @@ object Bench {
   def runSection(
       dir: String,
       subset: Option[Set[String]],
-      cpus: String,
+      cpus: Int,
       extraConf: Map[String, String] = Map.empty,
       onResult: QRes => Unit = _ => (),
       shouldStop: () => Boolean = () => false): Seq[QRes] = {
@@ -368,7 +325,7 @@ object Bench {
     * the same tables (the example YAML composes that exact pipeline) —
     * a mismatch is an `err` and fails the bench run.
     */
-  def runMainPipeline(dir: String, cpus: String): Seq[QRes] = {
+  def runMainPipeline(dir: String, cpus: Int): Seq[QRes] = {
     val spark = newSession(cpus, Map.empty)
     try {
       val metrics = new MetricsAcc
@@ -451,7 +408,7 @@ object Bench {
   private def rowsJson(rs: Seq[QRes]): String =
     rs.map(r => s"\"${r.name}\":${r.rows}").mkString("{", ",", "}")
   private def errsJson(rs: Seq[QRes]): String =
-    rs.collect { case QRes(n, _, Some(e), _, _) => s"\"$n\":\"${esc(e)}\"" }
+    rs.collect { case QRes(n, _, Some(e), _, _) => s"\"$n\":${Verify.jsonStr(e)}" }
       .mkString("{", ",", "}")
   private def samplesJson(acc: Acc): String = acc.samples.toSeq.sortBy(_._1)
     .map { case (n, rs) => s"\"$n\":[${rs.map(_.sec).mkString(",")}]" }
@@ -471,12 +428,12 @@ object Bench {
   private def skippedJson(accs: Seq[(String, Acc)]): String = accs
     .filter(_._2.skipped.nonEmpty)
     .map { case (tag, a) =>
-      s"\"$tag\":{${a.skipped.map { case (q, why) => s"\"$q\":\"${esc(why)}\"" }.mkString(",")}}"
+      s"\"$tag\":{${a.skipped.map { case (q, why) => s"\"$q\":${Verify.jsonStr(why)}" }.mkString(",")}}"
     }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = SessionDefaults.defaultCpus
     // Optional comma-separated subset for local iteration; the driver
     // leaves this unset and benches everything.
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
@@ -530,7 +487,7 @@ object Bench {
       def section(tag: String, accTag: String, dir: String): String = {
         val rs = acc(accTag).summary
         if (rs.isEmpty) ""
-        else s""","$tag":{"total":${rs.map(_.sec).sum},"n_queries":${rs.size},"n_err":${rs.count(_.err.isDefined)},"dir":"${esc(dir)}"}"""
+        else s""","$tag":{"total":${rs.map(_.sec).sum},"n_queries":${rs.size},"n_err":${rs.count(_.err.isDefined)},"dir":${Verify.jsonStr(dir)}}"""
       }
       val rs0 = acc("sf").summary
       val nErr = accs.values.flatMap(_.summary).count(_.err.isDefined)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: print the formatted physical plan of one or more
   * registered queries without executing them (beyond any bounded fit/
   * collect work the query constructor itself performs). Usage:
@@ -17,12 +15,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <query> [query...]")
     val sfDir = args(0)
-    val spark = SessionDefaults.applyTo(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionDefaults.local(SessionDefaults.defaultCpus)
     spark.sparkContext.setLogLevel("ERROR")
     try args.drop(1).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))

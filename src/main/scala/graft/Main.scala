@@ -1,7 +1,8 @@
 package graft
 
 import graft.meds.{ConfigPipeline, Meds}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Spark-submit-able pipeline entry point — parity with the reference's
   * deployment UI, where every stage ships as a console script
@@ -48,12 +49,25 @@ object Main {
       spark: SparkSession,
       configText: String,
       inDir: String,
-      outDir: String): ConfigPipeline.State = {
+      outDir: String): ConfigPipeline.State =
+    runCounted(spark, configText, inDir, outDir)._1
+
+  /** [[run]], plus the number of rows written to `data/`, counted by an
+    * `Observation` inside the write job itself — so the summary line
+    * costs no second execution of the pipeline.
+    */
+  def runCounted(
+      spark: SparkSession,
+      configText: String,
+      inDir: String,
+      outDir: String): (ConfigPipeline.State, Long) = {
     val state = ConfigPipeline.run(readMeds(spark, inDir), configText)
-    state.data.write.mode("overwrite").parquet(s"$outDir/data")
+    val rows = Observation("data_rows")
+    state.data.observe(rows, count(lit(1)).as("n"))
+      .write.mode("overwrite").parquet(s"$outDir/data")
     state.meta.foreach(_.write.mode("overwrite").parquet(s"$outDir/metadata"))
     state.tokenized.foreach(_.write.mode("overwrite").parquet(s"$outDir/tokenized"))
-    state
+    (state, rows.get("n").asInstanceOf[Long])
   }
 
   def main(args: Array[String]): Unit = {
@@ -76,9 +90,9 @@ object Main {
         .config("spark.sql.session.timeZone", "UTC"))
         .getOrCreate()
     try {
-      val state = run(spark, configText, inDir, outDir)
+      val (state, dataRows) = runCounted(spark, configText, inDir, outDir)
       // stable one-line summary for scripts wrapping the submit
-      println(s"""{"data_rows":${state.data.count()},""" +
+      println(s"""{"data_rows":$dataRows,""" +
         s""""wrote_metadata":${state.meta.nonEmpty},""" +
         s""""wrote_tokenized":${state.tokenized.nonEmpty},"out":"$outDir"}""")
     } finally spark.stop()

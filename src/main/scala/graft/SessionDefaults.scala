@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session configuration every graft entry point (Bench, Verify, Main,
-  * Explain) applies, so the engine's TypedImperativeAggregate plans run
-  * the same way everywhere.
+  * Explain, Probe) applies, so the engine's TypedImperativeAggregate
+  * plans run the same way everywhere — and [[local]], the one place a
+  * standalone local session is built.
   *
   * The one load-bearing key: Spark's `ObjectHashAggregateExec` falls
   * back to SORT-based aggregation once a task sees more than
@@ -48,5 +49,30 @@ object SessionDefaults {
   def applyTo(b: SparkSession.Builder): SparkSession.Builder = {
     effective(sys.props).foreach { case (k, v) => b.config(k, v) }
     b
+  }
+
+  /** Local core count: `SPARK_GRAFT_CPUS`, else every available core. */
+  def defaultCpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** A fresh `local[cpus]` session: one shuffle partition per core, UTC,
+    * no UI, [[configs]] as defaults (a system property still wins), then
+    * `conf` on top. The active and default sessions are cleared first, so
+    * `getOrCreate` builds a session from exactly this conf instead of
+    * handing back one an earlier caller registered.
+    */
+  def local(cpus: Int, conf: Map[String, String] = Map.empty): SparkSession = {
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val b = applyTo(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+    conf.foreach { case (k, v) => b.config(k, v) }
+    val s = b.getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
   }
 }

@@ -178,16 +178,9 @@ object Verify {
       case Array(s, o, q) => (s, o, Some(q.split(",").map(_.trim).toSet))
       case _ => sys.error("usage: Verify <sfDir> <outDir> [q1,q2,...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nThreads = math.max(1, sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_TIME_BUDGET", "2400").toDouble
-    val spark = SessionDefaults.applyTo(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local(SessionDefaults.defaultCpus)
     val summary = run(spark, sfDir, outDir, only, budgetSec, nThreads)
     spark.stop()
     // rc stays 0 even with failures (the pre-round-13 driver contract):

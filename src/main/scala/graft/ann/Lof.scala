@@ -152,6 +152,22 @@ object Lof {
     lofFromScored(scored, k, enforceK = true)
   }
 
+  /** The IVF sizing rule as a function: 2^nBits ≈ √n, floored so tiny
+    * corpora keep enough cells for the probe ring to mean something and
+    * capped at 16 (65k cells — past that the probe fan-out, nBits+1
+    * cells per point, costs more than the cell shrink saves at any n
+    * this library targets). Pairs scale as (nBits+1)·n^1.5 under this
+    * rule; a FIXED nBits degrades to n²/2^nBits as the corpus grows —
+    * the round-10 sf10 measurements of q_lof_scalable use exactly this
+    * sizing (nBits 7 up to ~8k vectors, 8 at 20k, 9 at 200k).
+    */
+  def sizedBits(n: Long, floor: Int = 7, cap: Int = 16): Int = {
+    require(floor >= 1 && cap >= floor, s"need 1 <= floor <= cap, got $floor..$cap")
+    val bits = math.ceil(
+      math.log(math.sqrt(math.max(1L, n).toDouble)) / math.log(2.0)).toInt
+    math.min(cap, math.max(floor, bits))
+  }
+
   /** Self-kNN candidate pairs for [[lofWithCandidates]]: every vector
     * probes its own sign-bit cell plus the cells one sign-flip away
     * (radius ≤ 2 via [[Similarity.probeMasks]]) and pairs with every
@@ -169,22 +185,6 @@ object Lof {
     * corpus vector lives in exactly one cell), so pass
     * `pairsDistinct = true` downstream and skip the dedup shuffle.
     */
-  /** The IVF sizing rule as a function: 2^nBits ≈ √n, floored so tiny
-    * corpora keep enough cells for the probe ring to mean something and
-    * capped at 16 (65k cells — past that the probe fan-out, nBits+1
-    * cells per point, costs more than the cell shrink saves at any n
-    * this library targets). Pairs scale as (nBits+1)·n^1.5 under this
-    * rule; a FIXED nBits degrades to n²/2^nBits as the corpus grows —
-    * the round-10 sf10 measurements of q_lof_scalable use exactly this
-    * sizing (nBits 7 up to ~8k vectors, 8 at 20k, 9 at 200k).
-    */
-  def sizedBits(n: Long, floor: Int = 7, cap: Int = 16): Int = {
-    require(floor >= 1 && cap >= floor, s"need 1 <= floor <= cap, got $floor..$cap")
-    val bits = math.ceil(
-      math.log(math.sqrt(math.max(1L, n).toDouble)) / math.log(2.0)).toInt
-    math.min(cap, math.max(floor, bits))
-  }
-
   def selfProbeCandidates(
       vectors: DataFrame,
       nBits: Int = 7,

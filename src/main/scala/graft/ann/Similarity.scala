@@ -107,30 +107,6 @@ object Similarity {
         graft.functions.Portable.r6(col("entry.score")).as("cosine")
       )
 
-  /** Coarse quantization cell id: sign bits of the vector's projection onto
-    * `nPlanes` deterministic pseudo-random hyperplanes (seeded per-plane
-    * md5-free arithmetic hash of the dimension index). This is
-    * random-hyperplane LSH — cells with matching ids hold vectors with
-    * similar direction.
-    */
-  def hyperplaneCell(vec: Column, dim: Int, nPlanes: Int, seed: Long = 42): Column = {
-    // plane p component d = deterministic pseudo-random in [-1,1):
-    // frac(sin(seed + p*dim + d) * 43758.5453) * 2 - 1  (classic shader hash)
-    def planeDot(p: Int): Column =
-      aggregate(
-        zip_with(vec, sequence(lit(0), lit(dim - 1)), (x, d) => {
-          val s = sin(lit(seed.toDouble) + lit(p.toDouble * dim) + d.cast("double")) * lit(43758.5453)
-          val r = (s - floor(s)) * 2.0 - 1.0
-          x.cast("double") * r
-        }),
-        lit(0.0),
-        (acc, x) => acc + x
-      )
-    (0 until nPlanes)
-      .map(p => when(planeDot(p) > 0, lit(1L << p)).otherwise(lit(0L)))
-      .reduce(_ + _)
-  }
-
   /** Portable coarse-quantization cell: bit d set iff vec[d] > 0 —
     * one-bit-per-dimension sign quantization over the first `nBits`
     * dimensions. Well balanced when dimensions are roughly zero-centered,

@@ -108,7 +108,7 @@ object Srp {
     * pair population (quadratic in cluster density), not corpus rows —
     * measured: 10× vectors grew the estimated pair population 98× and
     * wall time 5.4× (SURVEY §4 "Capture–recapture work growth",
-    * [[graft.CrProbe]] for the stage breakdown). Size bands to the
+    * which also records the stage breakdown). Size bands to the
     * corpus via `nPlanes`/`numBands` (bits/band ≈ log₂(n/targetBucket))
     * when auditing bigger corpora; 4-bit bands saturate ≈20k clustered
     * vectors.

@@ -540,7 +540,8 @@ object AnnQueries {
       // bound and streams it — the round-9 verdict's "would this
       // survive one more decade" question, answered in code.
       // sf10 first-sample spread (r10 bench: 93.5/37.1/36.0 s) is
-      // WARMUP, not sizing: SpillProbe r11 measured 102.6/48.5/31.5 s
+      // WARMUP, not sizing (SURVEY §7, "q_lof_scalable first-sample
+      // spread"): three fresh-session r11 runs measured 102.6/48.5/31.5 s
       // with byte-identical shuffle (0.8 GB) and sorter spill
       // (8 GB disk / 34 GB mem) on every run while GC fell
       // 30.9 → 16.8 → 8.4 s — the spill footprint is a constant plan

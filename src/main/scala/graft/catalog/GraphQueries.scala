@@ -276,15 +276,17 @@ object GraphQueries {
       // bench median, both zero-spill — because collect_list's partial
       // aggregation cannot shrink the 60M-row exchange while the
       // sort-merge join streams it; the r9 single-sample 67 s that
-      // prompted the experiment was JIT/GC noise (CommProbe: edges grow
-      // exactly 10.0× for 10× data). Keeping the faster plan.
-      // round-13 continuation (guide §2.2, CommShapeProbe shape C): the
-      // pair stream repartitions on (a, b) BEFORE the groupBy, so the
-      // count's partial aggregate runs post-exchange (EnsureRequirements
-      // elides the agg's own exchange) and the map side never builds the
-      // near-unique-key hash map whose sort fallback was the measured
-      // map-side spill (the partial agg shrank almost nothing — same
-      // ~29.5 GB shuffle either way at sf100). Measured same-host,
+      // prompted the experiment was JIT/GC noise (edges grow exactly
+      // 10.0× for 10× data; SURVEY §7, round-10 sf10 entries). Keeping
+      // the faster plan.
+      // round-13 continuation (guide §2.2; shape C, OPTIMIZATION_r13.md
+      // Batch 9): the pair stream repartitions on (a, b) BEFORE the
+      // groupBy, so the count's partial aggregate runs post-exchange
+      // (EnsureRequirements elides the agg's own exchange) and the map
+      // side never builds the near-unique-key hash map whose sort
+      // fallback was the measured map-side spill (the partial agg shrank
+      // almost nothing — same ~29.5 GB shuffle either way at sf100).
+      // Measured same-host,
       // hash-identical output: sf10 16.8/25.8 s (A) -> 12.8/21.6 s (C);
       // sf100 784 s (A) -> 472 s (C) at probe width.
       val edges = li.as("x")

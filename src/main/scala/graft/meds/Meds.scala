@@ -1,6 +1,6 @@
 package graft.meds
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -90,8 +90,4 @@ object Meds {
     */
   def splitStaticAndDynamic(df: DataFrame): (DataFrame, DataFrame) =
     (df.filter(col(Time).isNull).drop(Time), df.filter(col(Time).isNotNull))
-
-  /** The canonical MEDS sort order (merge_to_MEDS_cohort.py:190-198). */
-  def sortKeys(additional: Seq[String] = Nil): Seq[Column] =
-    (Seq(PatientId, Time) ++ additional).map(col)
 }

@@ -32,9 +32,6 @@ object PlanLint {
   /** Lint the ANALYZED (pre-AQE) physical plan of `df`. Runs no job. */
   def lint(df: DataFrame): Seq[Finding] = walk(df.queryExecution.sparkPlan)
 
-  /** Lint the final executed plan (call after an action for AQE truth). */
-  def lintExecuted(df: DataFrame): Seq[Finding] = walk(df.queryExecution.executedPlan)
-
   private def boundedBelow(p: SparkPlan): Boolean = p match {
     case _: GlobalLimitExec | _: TakeOrderedAndProjectExec => true
     case other => other.children.exists(boundedBelow)

@@ -21,7 +21,7 @@ class MainSpec extends SparkSpec {
       java.nio.charset.StandardCharsets.UTF_8)
     // Main.main would getOrCreate the suite's session; call the typed
     // entry it delegates to, then check the WRITTEN artifacts.
-    val state = Main.run(spark, yaml, inDir, out)
+    val (state, dataRows) = Main.runCounted(spark, yaml, inDir, out)
     assert(state.meta.isDefined, "fit stages must populate metadata")
 
     def proj(df: org.apache.spark.sql.DataFrame) =
@@ -30,6 +30,8 @@ class MainSpec extends SparkSpec {
     val written = proj(spark.read.parquet(s"$out/data"))
     val direct = proj(ConfigPipeline.run(Main.readMeds(spark, inDir), yaml).data)
     assert(written.count() > 0)
+    assert(dataRows == written.count(),
+      "the summary's observed data_rows must equal the rows written to data/")
     assert(written.exceptAll(direct).isEmpty && direct.exceptAll(written).isEmpty,
       "written data/ must equal the in-process ConfigPipeline result")
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not a test): scale the sf0.1 testdata by an integer factor
@@ -43,13 +43,7 @@ object ScaleData {
       tableArg.map(_.split(",").map(_.trim).toSet).map(s => s.contains(_))
         .getOrElse(_ => true)
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionDefaults.local(SessionDefaults.defaultCpus)
     new java.io.File(out).mkdirs()
 
     def copies(base: DataFrame)(transform: (DataFrame, Int) => DataFrame): DataFrame =

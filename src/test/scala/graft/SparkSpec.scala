@@ -10,16 +10,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SessionDefaults.applyTo(SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
+    val s = SessionDefaults.local(4, Map(
+      "spark.app.name" -> "graft-test",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
-      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -50,6 +50,37 @@ class TensorizeMultimodalStreamingSpec extends SparkSpec {
     assert(r.getSeq[collection.Seq[Boolean]](7)(1) == Seq(false, false)) // second event's value was null
   }
 
+  test("tensorize statics: pad, mask and truncation of staticsAndSchema's lists") {
+    val cohort = Seq[(Long, Option[Timestamp], Long, Double)](
+      (1L, None, 30L, 3.0), (1L, None, 10L, 1.0), (1L, None, 20L, 2.0),
+      (1L, Some(ts("2020-01-01 00:00:00")), 50L, 5.0),
+      (2L, None, 40L, 4.0),
+      (2L, Some(ts("2020-01-02 00:00:00")), 50L, 6.0)
+    ).toDF("patient_id", "time", "code", "numeric_value")
+    val dense = Tensorize.staticsToDense(Tokenize.staticsAndSchema(cohort), maxStatic = 2)
+    assert(dense.columns.toSeq ==
+      Seq("patient_id", "static_code", "static_numeric_value", "static_mask"))
+    val got = dense.as[(Long, Seq[Long], Seq[Double], Seq[Boolean])].collect().sortBy(_._1)
+    // patient 1: three statics, sorted by code, truncated to the first two
+    assert(got(0) == ((1L, Seq(10L, 20L), Seq(1.0, 2.0), Seq(true, true))))
+    // patient 2: one static, 0-padded and masked out past it
+    assert(got(1) == ((2L, Seq(40L, 0L), Seq(4.0, 0.0), Seq(true, false))))
+  }
+
+  test("tensorize: withNarrowedCodes stores codes at the vocabulary's narrowest type") {
+    val seqs = Seq(
+      (1L, Seq(Double.NaN, 1.5), Seq(Seq(3L, 300L), Seq(5L)), Seq(Seq(0.5, 1.0), Seq(2.0)))
+    ).toDF("patient_id", "time_delta_days", "code", "numeric_value")
+    val dense = Tensorize.toDense(seqs, maxEvents = 3, maxMeasurementsPerEvent = 2)
+    for (vocab <- Seq(300L, 40000L)) {
+      val narrowed = Tensorize.withNarrowedCodes(dense, vocab)
+      val ArrayType(ArrayType(elem, _), _) = narrowed.schema("code").dataType
+      assert(elem == Tensorize.narrowestIndexType(vocab))
+      assert(narrowed.select(col("code").cast("array<array<long>>")).as[Seq[Seq[Long]]].collect()
+        .toSeq == dense.select("code").as[Seq[Seq[Long]]].collect().toSeq)
+    }
+  }
+
   test("multimodal: format sniffing from magic bytes") {
     val png = Array[Byte](0x89.toByte, 0x50, 0x4e, 0x47, 1, 2, 3)
     val jpg = Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xe0.toByte, 9)
