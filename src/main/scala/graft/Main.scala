@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions.{count, lit}
   * `MEDS_extract-*` each taking a Hydra config). graft's equivalent is
   * ONE binary running the whole declarative stage list
   * ([[graft.meds.ConfigPipeline]]): where the reference materializes
-  * parquet between per-stage processes, this submits the composed chain
-  * as a single Catalyst plan per output and writes only the final
-  * frames.
+  * parquet between per-stage processes, this runs each fit stage as one
+  * small job whose vocabulary-sized result stays on the driver, submits
+  * the transformed data as a single Catalyst plan, and writes only the
+  * final frames.
   *
   * Usage (cluster):
   * {{{
@@ -29,8 +30,9 @@ import org.apache.spark.sql.functions.{count, lit}
   *
   * Outputs under `<outDir>`:
   *   - `data/`      — the transformed measurement table (always)
-  *   - `metadata/`  — the final code-metadata frame (when a fit/count
-  *                    stage ran, the reference's `codes.parquet`)
+  *   - `metadata/`  — the final code-metadata frame as one parquet file
+  *                    (when a fit/count stage ran, the reference's
+  *                    `codes.parquet`)
   *   - `tokenized/` — patient event sequences (when a `tokenization`
   *                    stage ran)
   */
@@ -65,7 +67,7 @@ object Main {
     val rows = Observation("data_rows")
     state.data.observe(rows, count(lit(1)).as("n"))
       .write.mode("overwrite").parquet(s"$outDir/data")
-    state.meta.foreach(_.write.mode("overwrite").parquet(s"$outDir/metadata"))
+    state.meta.foreach(_.coalesce(1).write.mode("overwrite").parquet(s"$outDir/metadata"))
     state.tokenized.foreach(_.write.mode("overwrite").parquet(s"$outDir/tokenized"))
     (state, rows.get("n").asInstanceOf[Long])
   }
@@ -81,6 +83,9 @@ object Main {
     // Under spark-submit the master comes from the launcher; standalone
     // runs default to every local core. shuffle.partitions is only a
     // default — a cluster submit overrides it on the command line.
+    // getOrCreate hands back a session an embedding caller (a notebook, a
+    // test) already runs; that one is theirs to stop, not ours.
+    val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
     val builder = SparkSession.builder().appName("graft-pipeline")
     val spark = SessionDefaults.applyTo(
       (if (sys.props.contains("spark.master")) builder
@@ -95,6 +100,6 @@ object Main {
       println(s"""{"data_rows":$dataRows,""" +
         s""""wrote_metadata":${state.meta.nonEmpty},""" +
         s""""wrote_tokenized":${state.tokenized.nonEmpty},"out":"$outDir"}""")
-    } finally spark.stop()
+    } finally if (!existing.contains(spark)) spark.stop()
   }
 }

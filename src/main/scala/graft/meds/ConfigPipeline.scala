@@ -19,15 +19,19 @@ import scala.jdk.CollectionConverters._
   * reference's snake_case).
   *
   * Where the reference materializes every stage to parquet shards with a
-  * mapreduce runner between them, this interpreter threads TWO lazy
-  * frames through the fold — the DATA frame and the current code-METADATA
-  * frame (the reference's `codes.parquet`) — so Catalyst sees the whole
-  * composed chain as one plan per output: column pruning and filter
-  * ordering cross stage boundaries, and the cohort's hash(patient_id)
-  * exchange is reused by every patient-keyed stage downstream. Fit stages
-  * (`preliminary_counts`, `fit_outlier_detection`, `fit_normalization`)
-  * re-aggregate the current data into the metadata slot; transform stages
-  * consume it via vocabulary-sized broadcast joins.
+  * mapreduce runner between them, this interpreter threads two frames
+  * through the fold: the DATA frame and the current code-METADATA frame
+  * (the reference's `codes.parquet`). The data frame stays lazy, so
+  * Catalyst sees the composed chain as one plan: column pruning and
+  * filter ordering cross stage boundaries, and the cohort's
+  * hash(patient_id) exchange is reused by every patient-keyed stage
+  * downstream. Fit stages (`preliminary_counts`, `fit_outlier_detection`,
+  * `fit_normalization`, `fit_vocabulary_indices`) aggregate the current
+  * data into the metadata slot and compute it at once, as a
+  * vocabulary-sized local relation on the driver — the reference's one
+  * `codes.parquet` write per fit. Transform stages broadcast-join that
+  * relation, so the data plan holds the pipeline prefix once instead of
+  * once more per fit it consumes.
   *
   * Supported stage names and the keys each reads (reference:
   * configs/stage_configs/), as `StageKeys` lists them:
@@ -207,13 +211,27 @@ object ConfigPipeline {
       tokenized: Option[DataFrame]
   )
 
-  /** Run the configured stage list over a MEDS measurement frame. */
+  /** A fitted code-metadata frame, computed now and kept on the driver as
+    * a local relation. It is vocabulary-sized by contract (one row per
+    * code and modifiers; see [[Vocabulary.lexicographicIndices]]), and
+    * every consumer broadcasts it anyway, so the collect only moves ahead
+    * of the plan: the data plan then scans the pipeline prefix once
+    * instead of once more per broadcast side, and a write of the metadata
+    * is a local write.
+    */
+  private def fitted(meta: DataFrame): DataFrame =
+    meta.sparkSession.createDataFrame(meta.collect().toSeq.asJava, meta.schema)
+
+  /** Run the configured stage list over a MEDS measurement frame. Fit
+    * stages run their (small) jobs here, when the stage is reached; the
+    * returned data frame stays lazy.
+    */
   def run(meds: DataFrame, configText: String): State = {
     val cfg = parse(configText)
     val mods = cfg.codeModifiers
 
     def metaOrFit(st: State): DataFrame =
-      st.meta.getOrElse(CodeMetadata.aggregate(st.data, codeModifiers = mods))
+      st.meta.getOrElse(fitted(CodeMetadata.aggregate(st.data, codeModifiers = mods)))
 
     cfg.stages.foldLeft(State(meds, None, None)) { (st, stage) =>
       val c = effectiveConfig(stage, cfg.stageConfigs.getOrElse(stage, empty))
@@ -234,7 +252,7 @@ object ConfigPipeline {
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
             .getOrElse(CodeMetadata.aggregationNames)
           val overAll = Option(c.get("do_summarize_over_all_codes")).exists(_.asBoolean(false))
-          st.copy(meta = Some(CodeMetadata.aggregate(st.data, aggs, mods, overAll)))
+          st.copy(meta = Some(fitted(CodeMetadata.aggregate(st.data, aggs, mods, overAll))))
 
         case "filter_measurements" =>
           st.copy(data = Filters.filterMeasurements(st.data, metaOrFit(st),
@@ -244,7 +262,7 @@ object ConfigPipeline {
         case "fit_outlier_detection" | "fit_normalization" =>
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
             .getOrElse(CodeMetadata.aggregationNames)
-          st.copy(meta = Some(CodeMetadata.aggregate(st.data, aggs, codeModifiers = mods)))
+          st.copy(meta = Some(fitted(CodeMetadata.aggregate(st.data, aggs, codeModifiers = mods))))
 
         case "occlude_outliers" =>
           val cutoff = optDouble(c, "stddev_cutoff").getOrElse(4.5)
@@ -253,7 +271,7 @@ object ConfigPipeline {
           st.copy(data = if (dropFlag) occluded.drop("numeric_value/is_inlier") else occluded)
 
         case "fit_vocabulary_indices" =>
-          st.copy(meta = Some(Vocabulary.lexicographicIndices(metaOrFit(st), mods)))
+          st.copy(meta = Some(fitted(Vocabulary.lexicographicIndices(metaOrFit(st), mods))))
 
         case "normalization" =>
           st.copy(data = Normalize.normalize(st.data, metaOrFit(st), mods))

@@ -4,6 +4,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.meds.ConfigPipeline
+import graft.operators.{CodeMetadata, Vocabulary}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -210,22 +214,68 @@ class ConfigPipelineSpec extends SparkSpec {
       "stages: [fit_vocabulary_indices]\nstage_configs:\n  fit_vocabulary_indices: {ordering_method: lexicographic}\n")
   }
 
+  /** The example config cut to its first `k` stages, with only their blocks. */
+  private def examplePrefix(k: Int): String = {
+    val mapper = new ObjectMapper(new YAMLFactory())
+    val cfg = mapper.readTree(exampleYaml).asInstanceOf[ObjectNode]
+    val kept = ConfigPipeline.parse(exampleYaml).stages.take(k)
+    val stages = cfg.putArray("stages")
+    kept.foreach(s => stages.add(s))
+    cfg.get("stage_configs").asInstanceOf[ObjectNode].retain(kept.asJava)
+    mapper.writeValueAsString(cfg)
+  }
+
   test("the example config, each of its stage prefixes and every stage's defaults validate") {
     val parsed = ConfigPipeline.parse(exampleYaml)
     assert(parsed.stages.size == 7)
     // the benchmark runs the example's first k stages with only their blocks
-    val mapper = new ObjectMapper(new YAMLFactory())
     (1 to parsed.stages.size).foreach { k =>
-      val kept = parsed.stages.take(k)
-      val cfg = mapper.readTree(exampleYaml).asInstanceOf[ObjectNode]
-      val stages = cfg.putArray("stages")
-      kept.foreach(s => stages.add(s))
-      cfg.get("stage_configs").asInstanceOf[ObjectNode].retain(kept.asJava)
-      assert(ConfigPipeline.parse(mapper.writeValueAsString(cfg)).stages == kept)
+      assert(ConfigPipeline.parse(examplePrefix(k)).stages == parsed.stages.take(k))
     }
     Seq("filter_patients", "add_time_derived_measurements", "preliminary_counts",
       "count_code_occurrences", "filter_measurements", "fit_outlier_detection",
       "occlude_outliers", "fit_normalization", "fit_vocabulary_indices", "normalization",
       "reorder_measurements", "tokenization").foreach(s => ConfigPipeline.parse(s"stages: [$s]\n"))
+  }
+
+  // --- fitted metadata on the driver ----------------------------------------
+
+  test("fit stages add no scan of the input and no copy of the pipeline prefix") {
+    def scans(df: DataFrame): Int =
+      df.queryExecution.optimizedPlan.collectLeaves().count(_.isInstanceOf[LogicalRelation])
+    // the first two stages are the prefix every fit stage aggregates
+    val prefix = scans(ConfigPipeline.run(meds, examplePrefix(2)).data)
+    val state = ConfigPipeline.run(meds, exampleYaml)
+    assert(prefix > 0 && scans(state.data) == prefix,
+      s"${scans(state.data)} input scans in the full pipeline, $prefix in its prefix")
+    assert(state.meta.get.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("each fitted metadata frame equals its lazy aggregate row for row") {
+    val emptyMeds = Seq.empty[(Long, Option[java.sql.Timestamp], String, Option[Double])]
+      .toDF("patient_id", "time", "code", "numeric_value")
+    def rows(df: DataFrame): Seq[Row] = df.orderBy(col("code").asc_nulls_first).collect().toSeq
+    val aggs = Seq(CodeMetadata.CodeNPatients, CodeMetadata.ValuesSum, CodeMetadata.ValuesMin)
+    for (input <- Seq(meds, emptyMeds)) {
+      val rollup = CodeMetadata.aggregate(input, aggs, summarizeOverAllCodes = true)
+      Seq(
+        "stages: [preliminary_counts]\nstage_configs:\n  preliminary_counts:\n" +
+          s"    aggregations: [${aggs.mkString(", ")}]\n" +
+          "    do_summarize_over_all_codes: true\n" -> rollup,
+        "stages: [fit_normalization]\nstage_configs:\n" +
+          s"  fit_normalization: {aggregations: [${aggs.mkString(", ")}]}\n" ->
+          CodeMetadata.aggregate(input, aggs),
+        // no fit before it: the vocabulary ranks the metaOrFit fallback
+        "stages: [fit_vocabulary_indices]\n" ->
+          Vocabulary.lexicographicIndices(CodeMetadata.aggregate(input))
+      ).foreach { case (yaml, lazyMeta) =>
+        val fitted = ConfigPipeline.run(input, yaml).meta.get
+        assert(fitted.schema == lazyMeta.schema, yaml)
+        // Row equality compares the doubles exactly
+        assert(rows(fitted) == rows(lazyMeta), yaml)
+      }
+      // the rollup's grand total is the one null-code row
+      assert(rows(rollup).count(_.isNullAt(0)) == (if (input eq meds) 1 else 0))
+    }
   }
 }

@@ -19,8 +19,8 @@ class MainSpec extends SparkSpec {
     val yaml = new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(configPath)),
       java.nio.charset.StandardCharsets.UTF_8)
-    // Main.main would getOrCreate the suite's session; call the typed
-    // entry it delegates to, then check the WRITTEN artifacts.
+    // call the typed entry main delegates to, then check the WRITTEN
+    // artifacts
     val (state, dataRows) = Main.runCounted(spark, yaml, inDir, out)
     assert(state.meta.isDefined, "fit stages must populate metadata")
 
@@ -37,6 +37,8 @@ class MainSpec extends SparkSpec {
 
     val meta = spark.read.parquet(s"$out/metadata")
     assert(meta.count() > 0 && meta.columns.contains("code"))
+    assert(new java.io.File(s"$out/metadata").list().count(_.endsWith(".parquet")) == 1,
+      "metadata/ is one parquet file, like the reference's codes.parquet")
     assert(!new java.io.File(s"$out/tokenized").exists(),
       "no tokenization stage configured -> no tokenized/ output")
   }
@@ -50,6 +52,17 @@ class MainSpec extends SparkSpec {
     val got = Main.readMeds(spark, dir)
     assert(got.columns.sorted.toSeq == Seq("code", "numeric_value", "patient_id", "time"))
     assert(got.count() == 1)
+  }
+
+  test("main() runs in an embedding caller's session and leaves it running") {
+    val out = java.nio.file.Files.createTempDirectory("graft-main-embedded").toString
+    // main's getOrCreate applies its runtime conf to the session it finds
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try Main.main(Array(configPath, inDir, out))
+    finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() == 3)
+    assert(spark.read.parquet(s"$out/data").count() > 0)
   }
 
   test("main() rejects bad usage loudly") {

@@ -1,6 +1,8 @@
 package graft
 
-import graft.functions.MatOps
+import graft.functions.{AdcLookup, MatOps}
+import org.apache.spark.sql.execution.ProjectExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Parity pins for the round-13 native linear-algebra kernels: each must
@@ -116,15 +118,31 @@ class MatOpsSpec extends SparkSpec {
       zip_with(codes, dt, (code, table) => element_at(table, code + 1)),
       lit(0.0), (acc, x) => acc + x)
 
-  test("adcLookup is bit-identical to the zip_with/aggregate fold") {
-    // codes in [0, k), tables numBlocks × k — the searchADC shape
+  // codes in [0, k), tables numBlocks × k — the searchADC shape
+  private lazy val adcRows = {
     val numBlocks = 4
     val k = 3
-    val rows = (1L to 40L).map { i =>
+    (1L to 40L).map { i =>
       (Array.tabulate(numBlocks)(b => ((i + b) % k).toInt),
         Array.tabulate(numBlocks, k)((b, c) => ((i * 7 + b * 5 + c * 3) % 11 - 5) / 4.0))
     }.toDF("codes", "dt")
-    val both = rows.select(
+  }
+
+  // NULL codes / NULL table / length mismatch / NULL table cell /
+  // out-of-range positive code all NULL the sum, exactly like the fold
+  private lazy val adcEdges = spark.sql(
+    """SELECT * FROM VALUES
+      |  (CAST(NULL AS array<int>), array(array(1.0D), array(2.0D))),
+      |  (array(0, 0), CAST(NULL AS array<array<double>>)),
+      |  (array(0), array(array(1.0D), array(2.0D))),
+      |  (array(0, 0, 0), array(array(1.0D), array(2.0D))),
+      |  (array(0, CAST(NULL AS int)), array(array(1.0D), array(2.0D))),
+      |  (array(0, 0), array(array(1.0D), CAST(NULL AS array<double>))),
+      |  (array(0, 0), array(array(1.0D), array(CAST(NULL AS double))))
+      |AS t(codes, dt)""".stripMargin)
+
+  test("adcLookup is bit-identical to the zip_with/aggregate fold") {
+    val both = adcRows.select(
       graft.functions.MatOps.adcLookup(col("codes"), col("dt")).as("native"),
       hofAdc(col("codes"), col("dt")).as("hof"))
     assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
@@ -132,19 +150,7 @@ class MatOpsSpec extends SparkSpec {
   }
 
   test("adcLookup null semantics match the fold; -1 sentinel is NULL not error") {
-    // NULL codes / NULL table / length mismatch / NULL table cell /
-    // out-of-range positive code all NULL the sum, exactly like the fold
-    val edge = spark.sql(
-      """SELECT * FROM VALUES
-        |  (CAST(NULL AS array<int>), array(array(1.0D), array(2.0D))),
-        |  (array(0, 0), CAST(NULL AS array<array<double>>)),
-        |  (array(0), array(array(1.0D), array(2.0D))),
-        |  (array(0, 0, 0), array(array(1.0D), array(2.0D))),
-        |  (array(0, CAST(NULL AS int)), array(array(1.0D), array(2.0D))),
-        |  (array(0, 0), array(array(1.0D), CAST(NULL AS array<double>))),
-        |  (array(0, 0), array(array(1.0D), array(CAST(NULL AS double))))
-        |AS t(codes, dt)""".stripMargin)
-    val both = edge.select(
+    val both = adcEdges.select(
       graft.functions.MatOps.adcLookup(col("codes"), col("dt")).as("native"),
       hofAdc(col("codes"), col("dt")).as("hof"))
     assert(both.filter(not(col("native") <=> col("hof"))).count() == 0)
@@ -164,6 +170,41 @@ class MatOpsSpec extends SparkSpec {
       assertThrows[Exception] {
         sentinel.select(hofAdc(col("codes"), col("dt")).as("hof")).collect()
       }
+    }
+  }
+
+  test("adcLookup's generated code is bit-identical to the fold (CODEGEN_ONLY)") {
+    // A projection straight over a local relation is folded at plan time
+    // by interpreted eval; behind the exchange it runs as a physical
+    // projection, and CODEGEN_ONLY with no fallback compiles it from
+    // doGenCode and fails the query if that code does not compile,
+    // instead of silently running the interpreted path.
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.fallback")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      def both(df: org.apache.spark.sql.DataFrame) = df.repartition(2).select(
+        graft.functions.MatOps.adcLookup(col("codes"), col("dt")).as("native"),
+        hofAdc(col("codes"), col("dt")).as("hof"))
+      val rows = both(adcRows)
+      rows.collect()
+      val projections = new AdaptiveSparkPlanHelper {}.collect(rows.queryExecution.executedPlan) {
+        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[AdcLookup])) => p
+      }
+      assert(projections.nonEmpty, "the kernel must run in a physical projection")
+      assert(rows.filter(not(col("native") <=> col("hof"))).count() == 0)
+      assert(rows.filter(col("native").isNull).count() == 0)
+      val edges = both(adcEdges)
+      assert(edges.filter(not(col("native") <=> col("hof"))).count() == 0)
+      assert(edges.filter(col("native").isNotNull).count() == 0)
+      val sentinel = spark.sql("SELECT array(-1, 0) AS codes, array(array(1.0D), array(2.0D)) AS dt")
+        .repartition(2)
+        .select(graft.functions.MatOps.adcLookup(col("codes"), col("dt")).as("native"))
+      assert(sentinel.filter(col("native").isNull).count() == 1)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -45,8 +45,10 @@ class PlanLintSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     // Per-query ALLOWED rules — each entry bounded by contract, not by luck:
     //  - global-window: the rank runs over the distinct-code VOCABULARY
-    //    (q_fit_vocab and its consumers q_normalize / q_meds_pipeline),
-    //    never over measurement rows.
+    //    (q_fit_vocab and its consumer q_normalize), never over
+    //    measurement rows. q_meds_pipeline / q_pipeline_config rank their
+    //    fitted vocabulary in a job of its own, so neither plan may hold
+    //    a global window.
     //  - nested-loop-join: a broadcast of a k-row frame (k-means centroids /
     //    the ANN query set / the chi-square |B| category marginals) against
     //    the corpus — the build side is parameter- or cardinality-bounded,
@@ -81,8 +83,6 @@ class PlanLintSpec extends SparkSpec {
       "q_fit_vocab"      -> Set("global-window"),
       "q_tensorize"      -> Set("global-window"), // vocab indexing, the q_fit_vocab contract
       "q_normalize"      -> Set("global-window"),
-      "q_meds_pipeline"  -> Set("global-window"),
-      "q_pipeline_config" -> Set("global-window"), // same pipeline, config-composed
       "q_kmeans_assign"  -> Set("nested-loop-join"),
       // cluster quality shares q_kmeans_assign's broadcast-centroid scan;
       // Davies-Bouldin adds the k x k centroid-pair frame (k-bounded twice)

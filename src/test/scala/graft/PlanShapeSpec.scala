@@ -93,7 +93,7 @@ class PlanShapeSpec extends SparkSpec {
     // raise_error past maxDistinctCosts, so the corpus can never
     // silently reach the window.)
     val vocabSizedByContract = Set(
-      "q_fit_vocab", "q_normalize", "q_meds_pipeline", "q_pipeline_config",
+      "q_fit_vocab", "q_normalize",
       "q_tensorize", // vocab indexing rank, the q_fit_vocab contract
       "q_km_survival", "q_bh", "q_logrank",
       "q_nelson_aalen", // same day-curve contract as q_km_survival
