@@ -21,6 +21,9 @@ import org.apache.spark.sql.functions.{count, lit}
   *   configs/preprocess_example.yaml /data/meds_input /data/out
   * }}}
   * or locally: `sbt "runMain graft.Main <config.yaml> <in> <out>"`.
+  * Called inside a process that already runs a session (a notebook, a
+  * test), `main` runs in that session with its own conf for the call,
+  * then puts the caller's conf back and leaves the session running.
   *
   * Input resolution: a directory containing `events.parquet` is read
   * through [[graft.sources.Tables.events]] (the synthetic test layout,
@@ -84,8 +87,10 @@ object Main {
     // runs default to every local core. shuffle.partitions is only a
     // default — a cluster submit overrides it on the command line.
     // getOrCreate hands back a session an embedding caller (a notebook, a
-    // test) already runs; that one is theirs to stop, not ours.
+    // test) already runs and writes the builder's runtime conf into it;
+    // that session is theirs: put its conf back and leave it running.
     val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val callerConf = existing.map(s => RetunedKeys.map(k => k -> s.conf.getOption(k)))
     val builder = SparkSession.builder().appName("graft-pipeline")
     val spark = SessionDefaults.applyTo(
       (if (sys.props.contains("spark.master")) builder
@@ -100,6 +105,17 @@ object Main {
       println(s"""{"data_rows":$dataRows,""" +
         s""""wrote_metadata":${state.meta.nonEmpty},""" +
         s""""wrote_tokenized":${state.tokenized.nonEmpty},"out":"$outDir"}""")
-    } finally if (!existing.contains(spark)) spark.stop()
+    } finally {
+      if (existing.contains(spark)) callerConf.get.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      else spark.stop()
+    }
   }
+
+  /** The runtime conf keys [[main]]'s builder sets. */
+  private val RetunedKeys: Seq[String] =
+    Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone") ++
+      SessionDefaults.configs.keys
 }

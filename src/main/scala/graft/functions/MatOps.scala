@@ -432,36 +432,17 @@ case class AdcLookup(left: Expression, right: Expression)
     acc
   }
 
-  // The nullSafeEval loop emitted inline (the SqDist pattern): no call
-  // through a reference object and no boxed Double per scored pair.
+  // Delegation codegen (the OuterFlat pattern): one virtual call into the
+  // tight interpreted loop still removes the per-element zip_with array
+  // allocation and the per-step interpreted lambda evals.
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (c, t) => {
-      val n = ctx.freshName("n")
-      val b = ctx.freshName("b")
-      val code = ctx.freshName("code")
-      val table = ctx.freshName("table")
-      val acc = ctx.freshName("acc")
-      val tableType = right.dataType.asInstanceOf[ArrayType].elementType
-      val cellType = tableType.asInstanceOf[ArrayType].elementType
-      val cell = CodeGenerator.getValue(table, cellType, code)
+      val expr = ctx.addReferenceObj("adcLookupExpr", this, classOf[AdcLookup].getName)
+      val r = ctx.freshName("adcResult")
       s"""
-         |final int $n = $c.numElements();
-         |if ($t.numElements() != $n) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $acc = 0.0;
-         |  for (int $b = 0; $b < $n; $b++) {
-         |    if ($c.isNullAt($b) || $t.isNullAt($b)) { ${ev.isNull} = true; break; }
-         |    final int $code = $c.getInt($b);
-         |    final ${CodeGenerator.javaType(tableType)} $table = $t.getArray($b);
-         |    if ($code < 0 || $code >= $table.numElements() || $table.isNullAt($code)) {
-         |      ${ev.isNull} = true;
-         |      break;
-         |    }
-         |    $acc += (double) $cell;
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $acc;
-         |}
+         |Object $r = $expr.nullSafeEval($c, $t);
+         |if ($r == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = ((Double) $r).doubleValue(); }
        """.stripMargin
     })
 

@@ -3,6 +3,7 @@ package graft.meds
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.operators._
+import graft.plans.Materialize
 import org.apache.spark.sql.DataFrame
 
 import scala.collection.immutable.ListMap
@@ -211,27 +212,17 @@ object ConfigPipeline {
       tokenized: Option[DataFrame]
   )
 
-  /** A fitted code-metadata frame, computed now and kept on the driver as
-    * a local relation. It is vocabulary-sized by contract (one row per
-    * code and modifiers; see [[Vocabulary.lexicographicIndices]]), and
-    * every consumer broadcasts it anyway, so the collect only moves ahead
-    * of the plan: the data plan then scans the pipeline prefix once
-    * instead of once more per broadcast side, and a write of the metadata
-    * is a local write.
-    */
-  private def fitted(meta: DataFrame): DataFrame =
-    meta.sparkSession.createDataFrame(meta.collect().toSeq.asJava, meta.schema)
-
   /** Run the configured stage list over a MEDS measurement frame. Fit
-    * stages run their (small) jobs here, when the stage is reached; the
-    * returned data frame stays lazy.
+    * stages run their (small) jobs here, when the stage is reached, and
+    * keep the result on the driver ([[Materialize.local]]); the returned
+    * data frame stays lazy.
     */
   def run(meds: DataFrame, configText: String): State = {
     val cfg = parse(configText)
     val mods = cfg.codeModifiers
 
     def metaOrFit(st: State): DataFrame =
-      st.meta.getOrElse(fitted(CodeMetadata.aggregate(st.data, codeModifiers = mods)))
+      st.meta.getOrElse(Materialize.local(CodeMetadata.aggregate(st.data, codeModifiers = mods)))
 
     cfg.stages.foldLeft(State(meds, None, None)) { (st, stage) =>
       val c = effectiveConfig(stage, cfg.stageConfigs.getOrElse(stage, empty))
@@ -252,7 +243,7 @@ object ConfigPipeline {
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
             .getOrElse(CodeMetadata.aggregationNames)
           val overAll = Option(c.get("do_summarize_over_all_codes")).exists(_.asBoolean(false))
-          st.copy(meta = Some(fitted(CodeMetadata.aggregate(st.data, aggs, mods, overAll))))
+          st.copy(meta = Some(Materialize.local(CodeMetadata.aggregate(st.data, aggs, mods, overAll))))
 
         case "filter_measurements" =>
           st.copy(data = Filters.filterMeasurements(st.data, metaOrFit(st),
@@ -262,7 +253,7 @@ object ConfigPipeline {
         case "fit_outlier_detection" | "fit_normalization" =>
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
             .getOrElse(CodeMetadata.aggregationNames)
-          st.copy(meta = Some(fitted(CodeMetadata.aggregate(st.data, aggs, codeModifiers = mods))))
+          st.copy(meta = Some(Materialize.local(CodeMetadata.aggregate(st.data, aggs, codeModifiers = mods))))
 
         case "occlude_outliers" =>
           val cutoff = optDouble(c, "stddev_cutoff").getOrElse(4.5)
@@ -271,7 +262,7 @@ object ConfigPipeline {
           st.copy(data = if (dropFlag) occluded.drop("numeric_value/is_inlier") else occluded)
 
         case "fit_vocabulary_indices" =>
-          st.copy(meta = Some(fitted(Vocabulary.lexicographicIndices(metaOrFit(st), mods))))
+          st.copy(meta = Some(Materialize.local(Vocabulary.lexicographicIndices(metaOrFit(st), mods))))
 
         case "normalization" =>
           st.copy(data = Normalize.normalize(st.data, metaOrFit(st), mods))

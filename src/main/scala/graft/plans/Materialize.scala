@@ -1,10 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
+
+import scala.jdk.CollectionConverters._
 
 /** Lineage pinning with a durability switch — every iterative loop and
   * multi-consumer frame in graft materializes through [[pin]] instead of
-  * calling `localCheckpoint` directly.
+  * calling `localCheckpoint` directly. The one exception is a frame that
+  * is small by contract and broadcast by every consumer (a fitted code
+  * vocabulary): [[local]] keeps it on the driver instead.
   *
   * Default (key unset): `localCheckpoint` — blocks cached on executors,
   * zero I/O, the right call on `local[n]` and for short-lived frames.
@@ -39,6 +43,18 @@ object Materialize {
       case None => ds.localCheckpoint(eager)
     }
   }
+
+  /** `df` computed now and kept on the driver as a local relation. Only
+    * for frames that are small by contract and that every consumer
+    * broadcasts anyway — a fitted code vocabulary, one row per code (see
+    * [[graft.operators.Vocabulary.lexicographicIndices]]): the collect then
+    * only moves ahead of the plan, so each consumer scans the local rows
+    * instead of re-planning the lineage that produced them, and a write
+    * of the frame is a local write. Unlike [[pin]], nothing is cached on
+    * executors, so no executor loss can lose it.
+    */
+  def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   /** `.pin(eager)` chain syntax — a drop-in for `.localCheckpoint(eager)`. */
   implicit class PinOps[T](private val ds: Dataset[T]) extends AnyVal {

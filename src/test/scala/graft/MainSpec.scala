@@ -56,13 +56,22 @@ class MainSpec extends SparkSpec {
 
   test("main() runs in an embedding caller's session and leaves it running") {
     val out = java.nio.file.Files.createTempDirectory("graft-main-embedded").toString
-    // main's getOrCreate applies its runtime conf to the session it finds
-    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try Main.main(Array(configPath, inDir, out))
-    finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    assert(!spark.sparkContext.isStopped)
-    assert(spark.range(3).count() == 3)
-    assert(spark.read.parquet(s"$out/data").count() > 0)
+    // values main's builder would set differently, so a leak shows
+    val callerConf = Map(
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.session.timeZone" -> "America/New_York",
+      SessionDefaults.ObjectHashFallbackKey -> "128")
+    val suiteConf = callerConf.keys.map(k => k -> spark.conf.get(k)).toMap
+    callerConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      Main.main(Array(configPath, inDir, out))
+      assert(!spark.sparkContext.isStopped)
+      assert(spark.range(3).count() == 3)
+      assert(spark.read.parquet(s"$out/data").count() > 0)
+      callerConf.foreach { case (k, v) =>
+        assert(spark.conf.get(k) == v, s"main left $k retuned")
+      }
+    } finally suiteConf.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("main() rejects bad usage loudly") {

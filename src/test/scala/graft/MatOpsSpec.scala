@@ -187,14 +187,17 @@ class MatOpsSpec extends SparkSpec {
       def both(df: org.apache.spark.sql.DataFrame) = df.repartition(2).select(
         graft.functions.MatOps.adcLookup(col("codes"), col("dt")).as("native"),
         hofAdc(col("codes"), col("dt")).as("hof"))
-      val rows = both(adcRows)
-      rows.collect()
-      val projections = new AdaptiveSparkPlanHelper {}.collect(rows.queryExecution.executedPlan) {
-        case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[AdcLookup])) => p
+      // double tables, and float tables whose cells widen to double
+      val floatRows = adcRows.select(col("codes"), col("dt").cast("array<array<float>>").as("dt"))
+      for (rows <- Seq(both(adcRows), both(floatRows))) {
+        rows.collect()
+        val projections = new AdaptiveSparkPlanHelper {}.collect(rows.queryExecution.executedPlan) {
+          case p: ProjectExec if p.projectList.exists(_.exists(_.isInstanceOf[AdcLookup])) => p
+        }
+        assert(projections.nonEmpty, "the kernel must run in a physical projection")
+        assert(rows.filter(not(col("native") <=> col("hof"))).count() == 0)
+        assert(rows.filter(col("native").isNull).count() == 0)
       }
-      assert(projections.nonEmpty, "the kernel must run in a physical projection")
-      assert(rows.filter(not(col("native") <=> col("hof"))).count() == 0)
-      assert(rows.filter(col("native").isNull).count() == 0)
       val edges = both(adcEdges)
       assert(edges.filter(not(col("native") <=> col("hof"))).count() == 0)
       assert(edges.filter(col("native").isNotNull).count() == 0)
