@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions.{count, lit}
   * ONE binary running the whole declarative stage list
   * ([[graft.meds.ConfigPipeline]]): where the reference materializes
   * parquet between per-stage processes, this runs each fit stage as one
-  * small job whose vocabulary-sized result stays on the driver, submits
-  * the transformed data as a single Catalyst plan, and writes only the
-  * final frames.
+  * small job whose vocabulary-sized result stays on the driver, pins the
+  * data frame on the executors only where a stage reads it twice, and
+  * writes only the final frames. The input is scanned once per run.
   *
   * Usage (cluster):
   * {{{
@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions.{count, lit}
   * or locally: `sbt "runMain graft.Main <config.yaml> <in> <out>"`.
   * Called inside a process that already runs a session (a notebook, a
   * test), `main` runs in that session with its own conf for the call,
-  * then puts the caller's conf back and leaves the session running.
+  * then puts the caller's conf back, releases the blocks the call pinned
+  * and leaves the session running. [[run]] and [[runCounted]] keep their
+  * pins: the state they return reads them.
   *
   * Input resolution: a directory containing `events.parquet` is read
   * through [[graft.sources.Tables.events]] (the synthetic test layout,
@@ -99,6 +101,7 @@ object Main {
            Runtime.getRuntime.availableProcessors().toString))
         .config("spark.sql.session.timeZone", "UTC"))
         .getOrCreate()
+    val callerRdds = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val (state, dataRows) = runCounted(spark, configText, inDir, outDir)
       // stable one-line summary for scripts wrapping the submit
@@ -106,11 +109,17 @@ object Main {
         s""""wrote_metadata":${state.meta.nonEmpty},""" +
         s""""wrote_tokenized":${state.tokenized.nonEmpty},"out":"$outDir"}""")
     } finally {
-      if (existing.contains(spark)) callerConf.get.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      else spark.stop()
+      if (existing.contains(spark)) {
+        callerConf.get.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+        // the blocks the pipeline pinned; run() and runCounted() keep them,
+        // since the State they return still reads them
+        spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!callerRdds.contains(id)) rdd.unpersist(blocking = false)
+        }
+      } else spark.stop()
     }
   }
 

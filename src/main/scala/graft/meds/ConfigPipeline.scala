@@ -5,6 +5,7 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.operators._
 import graft.plans.Materialize
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -22,17 +23,25 @@ import scala.jdk.CollectionConverters._
   * Where the reference materializes every stage to parquet shards with a
   * mapreduce runner between them, this interpreter threads two frames
   * through the fold: the DATA frame and the current code-METADATA frame
-  * (the reference's `codes.parquet`). The data frame stays lazy, so
-  * Catalyst sees the composed chain as one plan: column pruning and
-  * filter ordering cross stage boundaries, and the cohort's
-  * hash(patient_id) exchange is reused by every patient-keyed stage
-  * downstream. Fit stages (`preliminary_counts`, `fit_outlier_detection`,
+  * (the reference's `codes.parquet`). The data frame is lazy between
+  * stages that read it once, so Catalyst plans such a run of stages as
+  * one plan: column pruning and filter ordering cross their boundaries.
+  * A stage that reads the data frame twice pins it first
+  * ([[graft.plans.Materialize.pin]], eager), the reference's per-stage
+  * materialization kept only where a second read would otherwise re-plan
+  * the input scan and every stage before it:
+  *   - `add_time_derived_measurements`: the original rows and one branch
+  *     per generator each read the input;
+  *   - every fit stage: its collect and the rest of the chain;
+  *   - a metadata-reading stage with no fit before it, which fits its own
+  *     metadata from the data first.
+  * Fit stages (`preliminary_counts`, `fit_outlier_detection`,
   * `fit_normalization`, `fit_vocabulary_indices`) aggregate the current
   * data into the metadata slot and compute it at once, as a
   * vocabulary-sized local relation on the driver — the reference's one
   * `codes.parquet` write per fit. Transform stages broadcast-join that
-  * relation, so the data plan holds the pipeline prefix once instead of
-  * once more per fit it consumes.
+  * relation. Over the example config this scans the input and runs the
+  * patient filter's window once per run, in the first pin job.
   *
   * Supported stage names and the keys each reads (reference:
   * configs/stage_configs/), as `StageKeys` lists them:
@@ -214,15 +223,31 @@ object ConfigPipeline {
 
   /** Run the configured stage list over a MEDS measurement frame. Fit
     * stages run their (small) jobs here, when the stage is reached, and
-    * keep the result on the driver ([[Materialize.local]]); the returned
-    * data frame stays lazy.
+    * keep the result on the driver ([[Materialize.local]]). A stage that
+    * reads the data frame twice pins it first ([[pinned]]), so that pin
+    * job is the last one to plan the stages before it; the returned data
+    * frame is lazy from the last pin on.
     */
   def run(meds: DataFrame, configText: String): State = {
     val cfg = parse(configText)
     val mods = cfg.codeModifiers
 
-    def metaOrFit(st: State): DataFrame =
-      st.meta.getOrElse(Materialize.local(CodeMetadata.aggregate(st.data, codeModifiers = mods)))
+    /** The stage's data and code metadata: the fitted metadata, or, when
+      * no fit ran before, an aggregate of the data, which the stage then
+      * reads twice.
+      */
+    def withMeta(st: State): (DataFrame, DataFrame) = st.meta match {
+      case Some(meta) => (st.data, meta)
+      case None =>
+        val data = pinned(st.data)
+        (data, Materialize.local(CodeMetadata.aggregate(data, codeModifiers = mods)))
+    }
+
+    /** A fit stage: its collect and the rest of the chain both read the data. */
+    def fit(st: State)(aggregate: DataFrame => DataFrame): State = {
+      val data = pinned(st.data)
+      st.copy(data = data, meta = Some(Materialize.local(aggregate(data))))
+    }
 
     cfg.stages.foldLeft(State(meds, None, None)) { (st, stage) =>
       val c = effectiveConfig(stage, cfg.stageConfigs.getOrElse(stage, empty))
@@ -237,43 +262,59 @@ object ConfigPipeline {
         case "add_time_derived_measurements" =>
           val gens = timeDerivedConfigs(c)
           require(gens.nonEmpty, s"stage `$stage` configured with no generators")
-          st.copy(data = TimeDerived.addTimeDerivedMeasurements(st.data, gens))
+          // the original rows and one branch per generator each read the input
+          st.copy(data = TimeDerived.addTimeDerivedMeasurements(pinned(st.data), gens))
 
         case "preliminary_counts" | "count_code_occurrences" =>
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
             .getOrElse(CodeMetadata.aggregationNames)
           val overAll = Option(c.get("do_summarize_over_all_codes")).exists(_.asBoolean(false))
-          st.copy(meta = Some(Materialize.local(CodeMetadata.aggregate(st.data, aggs, mods, overAll))))
+          fit(st)(CodeMetadata.aggregate(_, aggs, mods, overAll))
 
         case "filter_measurements" =>
-          st.copy(data = Filters.filterMeasurements(st.data, metaOrFit(st),
+          val (data, meta) = withMeta(st)
+          st.copy(data = Filters.filterMeasurements(data, meta,
             optLong(c, "min_patients_per_code"),
             optLong(c, "min_occurrences_per_code"), mods))
 
         case "fit_outlier_detection" | "fit_normalization" =>
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
             .getOrElse(CodeMetadata.aggregationNames)
-          st.copy(meta = Some(Materialize.local(CodeMetadata.aggregate(st.data, aggs, codeModifiers = mods))))
+          fit(st)(CodeMetadata.aggregate(_, aggs, codeModifiers = mods))
 
         case "occlude_outliers" =>
           val cutoff = optDouble(c, "stddev_cutoff").getOrElse(4.5)
-          val occluded = Outliers.occludeOutliers(st.data, metaOrFit(st), cutoff, mods)
+          val (data, meta) = withMeta(st)
+          val occluded = Outliers.occludeOutliers(data, meta, cutoff, mods)
           val dropFlag = Option(c.get("drop_is_inlier")).exists(_.asBoolean(false))
           st.copy(data = if (dropFlag) occluded.drop("numeric_value/is_inlier") else occluded)
 
         case "fit_vocabulary_indices" =>
-          st.copy(meta = Some(Materialize.local(Vocabulary.lexicographicIndices(metaOrFit(st), mods))))
+          val (data, meta) = withMeta(st)
+          st.copy(data = data, meta = Some(Materialize.local(Vocabulary.lexicographicIndices(meta, mods))))
 
         case "normalization" =>
-          st.copy(data = Normalize.normalize(st.data, metaOrFit(st), mods))
+          val (data, meta) = withMeta(st)
+          st.copy(data = Normalize.normalize(data, meta, mods))
 
         case "reorder_measurements" =>
           val patterns = optSeq(c, "ordered_code_patterns").map(_.map(_.asText())).getOrElse(Nil)
-          st.copy(data = Reorder.reorderMeasurements(st.data, metaOrFit(st), patterns, mods))
+          val (data, meta) = withMeta(st)
+          st.copy(data = Reorder.reorderMeasurements(data, meta, patterns, mods))
 
         case "tokenization" =>
           st.copy(tokenized = Some(Tokenize.seqOfPatientEvents(st.data)))
       }
     }
+  }
+
+  /** `df` computed now and pinned on the executors ([[Materialize.pin]]),
+    * unless it already reads pinned blocks. For a frame the stage reads
+    * twice: both reads then scan the blocks instead of each re-planning the
+    * input scan and every stage since the last pin.
+    */
+  private def pinned(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => df
+    case _ => Materialize.pin(df, eager = true)
   }
 }

@@ -6,7 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Lineage pinning with a durability switch — every iterative loop and
   * multi-consumer frame in graft materializes through [[pin]] instead of
-  * calling `localCheckpoint` directly. The one exception is a frame that
+  * calling `localCheckpoint` directly. That includes the MEDS data frame
+  * in [[graft.meds.ConfigPipeline]], pinned at each stage that reads it
+  * twice. The one exception is a frame that
   * is small by contract and broadcast by every consumer (a fitted code
   * vocabulary): [[local]] keeps it on the driver instead.
   *

@@ -5,10 +5,17 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 import graft.meds.ConfigPipeline
 import graft.operators.{CodeMetadata, Vocabulary}
+import graft.plans.Materialize
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import scala.collection.mutable
+import scala.util.chaining._
 import scala.jdk.CollectionConverters._
 
 /** The declarative stage-list runner — the one way the MEDS pipeline is
@@ -238,17 +245,70 @@ class ConfigPipelineSpec extends SparkSpec {
       "reorder_measurements", "tokenization").foreach(s => ConfigPipeline.parse(s"stages: [$s]\n"))
   }
 
-  // --- fitted metadata on the driver ----------------------------------------
+  // --- fitted metadata on the driver, pinned data ----------------------------
 
-  test("fit stages add no scan of the input and no copy of the pipeline prefix") {
-    def scans(df: DataFrame): Int =
-      df.queryExecution.optimizedPlan.collectLeaves().count(_.isInstanceOf[LogicalRelation])
-    // the first two stages are the prefix every fit stage aggregates
-    val prefix = scans(ConfigPipeline.run(meds, examplePrefix(2)).data)
-    val state = ConfigPipeline.run(meds, exampleYaml)
-    assert(prefix > 0 && scans(state.data) == prefix,
-      s"${scans(state.data)} input scans in the full pipeline, $prefix in its prefix")
+  /** `body`'s result and every physical plan node its jobs executed, read
+    * from AQE's final plans (query stages and subqueries included; a reused
+    * exchange is a leaf, so the plan it reuses counts once).
+    */
+  private def withExecutedNodes[T](body: => T): (T, Seq[SparkPlan]) = {
+    val nodes = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        nodes.synchronized(nodes ++= collectWithSubqueries(qe.executedPlan) { case p => p })
+      override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val result =
+      try body.tap(_ => ListenerBusDrain(spark.sparkContext))
+      finally spark.listenerManager.unregister(listener)
+    (result, nodes.synchronized(nodes.toList))
+  }
+
+  test("one graft.Main launch scans the input once and runs the cohort window once") {
+    val out = java.nio.file.Files.createTempDirectory("graft-main-plans").toString
+    val ((state, _), nodes) = withExecutedNodes(Main.runCounted(spark, exampleYaml, sf, out))
+    val inputScans = nodes.count {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.toString.contains(sf))
+      case _ => false
+    }
+    val cohortWindows = nodes.count {
+      case w: WindowExec => w.partitionSpec.exists(_.references.exists(_.name == "patient_id"))
+      case _ => false
+    }
+    // the pipeline prefix runs once, in the first pin job; the fit
+    // collects and the data/ write read pinned blocks
+    assert(inputScans == 1 && cohortWindows == 1,
+      s"$inputScans input scans and $cohortWindows patient windows in one launch")
     assert(state.meta.get.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+  }
+
+  test("the example config gives the same rows with a reliable checkpoint dir") {
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+    val local = rows(ConfigPipeline.run(meds, exampleYaml).data)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    spark.conf.set(Materialize.DirKey, dir)
+    val reliable =
+      try rows(ConfigPipeline.run(meds, exampleYaml).data)
+      finally spark.conf.unset(Materialize.DirKey)
+    assert(Option(new java.io.File(dir).listFiles()).exists(_.nonEmpty),
+      s"no reliable checkpoint was written under $dir")
+    assert(local.nonEmpty && reliable == local)
+  }
+
+  test("an empty cohort runs through the full example config") {
+    val full = ConfigPipeline.run(meds, exampleYaml)
+    val empty = ConfigPipeline.run(meds.filter(lit(false)), exampleYaml)
+    assert(empty.data.schema == full.data.schema && empty.data.count() == 0)
+    assert(empty.meta.get.schema == full.meta.get.schema && empty.meta.get.count() == 0)
+  }
+
+  test("consecutive stages that read the data without changing it pin it once") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val state = ConfigPipeline.run(meds, "stages: [fit_normalization, preliminary_counts]\n")
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"persisted RDDs added: $added")
+    assert(state.data.count() == meds.count())
   }
 
   test("each fitted metadata frame equals its lazy aggregate row for row") {

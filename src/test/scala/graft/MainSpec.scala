@@ -63,9 +63,13 @@ class MainSpec extends SparkSpec {
       SessionDefaults.ObjectHashFallbackKey -> "128")
     val suiteConf = callerConf.keys.map(k => k -> spark.conf.get(k)).toMap
     callerConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     try {
       Main.main(Array(configPath, inDir, out))
       assert(!spark.sparkContext.isStopped)
+      // the blocks main pinned are released; the cleaner may drop older ones
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- rddsBefore
+      assert(added.isEmpty, s"main left persisted RDDs $added in the caller's session")
       assert(spark.range(3).count() == 3)
       assert(spark.read.parquet(s"$out/data").count() > 0)
       callerConf.foreach { case (k, v) =>
