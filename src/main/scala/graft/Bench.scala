@@ -623,64 +623,51 @@ object Bench {
       emitStdout()
     }
 
-    // ---------------- pass 2: precision — extra samples for medians, budget-gated.
-    // Round-11 verdict item 1b: median-of-3 ONLY where a sample is under
-    // ~60 s (the heavies keep their single sample + inline probe — at
-    // sf100 the extra samples alone cost 1,579 s and blew the driver
-    // budget). sf100 first (its medians carry the round-over-round
-    // noise history), cheapest queries first within a section, and each
-    // query takes BOTH extra samples or none (odd sample counts only).
+    // ---------------- passes 2 and 3: extra samples for medians, budget-gated.
+    // Round-11 verdict item 1b: pass 2 takes median-of-3 ONLY where a
+    // sample is under ~60 s (the heavies keep their single sample +
+    // inline probe — at sf100 the extra samples alone cost 1,579 s and
+    // blew the driver budget). Pass 3 then spends leftover budget only on
+    // the > 60 s heavies (single + inline probe is their 2400 s contract;
+    // a driver granting a larger SPARK_GRAFT_TIME_BUDGET buys real
+    // medians for q_communities/q_khop-class queries instead of idling
+    // the rest). Both go sf100 first (its medians carry the
+    // round-over-round noise history), cheapest queries first within a
+    // section, and each query takes BOTH extra samples or none (odd
+    // sample counts only).
     val targetRuns = Map(
       "sf10" -> sys.env.getOrElse("SPARK_GRAFT_SF10_RUNS", "3").toInt,
       "sf100" -> sys.env.getOrElse("SPARK_GRAFT_SF100_RUNS", "3").toInt)
-    for (tag <- Seq("sf100", "sf10") if only.isEmpty && wantSection(tag)) {
-      val a = acc(tag)
-      val extra = targetRuns(tag) - 1
-      if (extra > 0 && a.nonEmpty) {
-        val candidates = a.samples.toSeq.collect {
-          case (n, rs) if rs.size == 1 && rs.head.err.isEmpty && rs.head.sec < 60.0 =>
-            (n, rs.head.sec)
-        }.sortBy(_._2)
-        candidates.foreach { case (n, sec1) =>
-          // 1.5x the observed sample + per-session setup, per extra run
-          val estEach = sec1 * 1.5 + 12
-          if (remaining > estEach * extra + 45)
-            (1 to extra).foreach { _ =>
-              a.addCanary(n)
-              runSection(a.dir, Some(Set(n)), cpus, onResult = record(a))
+    /** One median pass over the queries whose single clean first sample's
+      * seconds satisfy `pick`; prints the cumulative lines after each
+      * section that ran a sample, or after every section when `emitAlways`.
+      */
+    def medianPass(pick: Double => Boolean, emitAlways: Boolean): Unit =
+      for (tag <- Seq("sf100", "sf10") if only.isEmpty && wantSection(tag)) {
+        val a = acc(tag)
+        val extra = targetRuns(tag) - 1
+        if (extra > 0 && a.nonEmpty) {
+          val candidates = a.samples.toSeq.collect {
+            case (n, rs) if rs.size == 1 && rs.head.err.isEmpty && pick(rs.head.sec) =>
+              (n, rs.head.sec)
+          }.sortBy(_._2)
+          var emitted = false
+          candidates.foreach { case (n, sec1) =>
+            // 1.5x the observed sample + per-session setup, per extra run
+            val estEach = sec1 * 1.5 + 12
+            if (remaining > estEach * extra + 45) {
+              (1 to extra).foreach { _ =>
+                a.addCanary(n)
+                runSection(a.dir, Some(Set(n)), cpus, onResult = record(a))
+              }
+              emitted = true
             }
-        }
-        emitStdout()
-      }
-    }
-
-    // ---------------- pass 3: leftover budget only — extend medians to the
-    // > 60 s heavies (single + inline probe is their 2400 s contract; a
-    // driver granting a larger SPARK_GRAFT_TIME_BUDGET buys real medians
-    // for q_communities/q_khop-class queries instead of idling the rest).
-    // Same cheapest-first, both-extra-samples-or-none gating as pass 2.
-    for (tag <- Seq("sf100", "sf10") if only.isEmpty && wantSection(tag)) {
-      val a = acc(tag)
-      val extra = targetRuns(tag) - 1
-      if (extra > 0 && a.nonEmpty) {
-        val heavies = a.samples.toSeq.collect {
-          case (n, rs) if rs.size == 1 && rs.head.err.isEmpty && rs.head.sec >= 60.0 =>
-            (n, rs.head.sec)
-        }.sortBy(_._2)
-        var emitted = false
-        heavies.foreach { case (n, sec1) =>
-          val estEach = sec1 * 1.5 + 12
-          if (remaining > estEach * extra + 45) {
-            (1 to extra).foreach { _ =>
-              a.addCanary(n)
-              runSection(a.dir, Some(Set(n)), cpus, onResult = record(a))
-            }
-            emitted = true
           }
+          if (emitted || emitAlways) emitStdout()
         }
-        if (emitted) emitStdout()
       }
-    }
+    medianPass(_ < 60.0, emitAlways = true)
+    medianPass(_ >= 60.0, emitAlways = false)
 
     emitStdout()
     // a failed query must fail the bench run — a regression cannot hide as

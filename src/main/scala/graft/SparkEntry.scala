@@ -16,8 +16,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - timestamps are emitted as epoch MICROSECONDS (BIGINT) — engine-
   *     neutral, no parquet logical-type ambiguity;
   *   - floating sums go through DECIMAL(38,6) (associative, partitioning-
-  *     independent) and are cast back to DOUBLE; ratios/z-scores are
-  *     ROUND(x, 6) in both engines;
+  *     independent) and are cast back to DOUBLE (`Portable.dsum`);
+  *     ratios/z-scores are rounded by `Portable.r6`, floor(x·10⁶ + 0.5)/10⁶,
+  *     in both engines — not `round(x, 6)`;
   *   - portable hashes only: md5 and md5-derived 32-bit ints.
   */
 object SparkEntry {

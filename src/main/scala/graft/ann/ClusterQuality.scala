@@ -1,6 +1,6 @@
 package graft.ann
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +51,7 @@ object ClusterQuality {
   }
 
   private def dmean(e: Column): Column =
-    sum(Portable.r6(e).cast("decimal(38,6)")).cast("double") /
+    dsum(r6(e)) /
       count(lit(1)).cast("double")
 
   /** Per-cluster simplified silhouette: (cid, n, mean_d1, mean_sil).

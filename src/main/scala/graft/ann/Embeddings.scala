@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +35,7 @@ object Embeddings {
         count(lit(1)).as("__n"))
       .select(
         col("group"), col("pos"),
-        graft.functions.Portable.r6(col("__s").cast("double") / col("__n")).as("centroid"))
+        r6(col("__s").cast("double") / col("__n")).as("centroid"))
 
   /** Per-group embedding health report — the pre-flight check before
     * pointing ANN / cosine-dedup at a vector column: (group, n,
@@ -64,8 +65,7 @@ object Embeddings {
     val cnorm = sqrt(dot(col("__c"), col("__c")))
     val cos = when(norm > 0 && cnorm > 0, dot(v, col("__c")) / (norm * cnorm))
     def rsum(e: Column): Column =
-      sum((floor(e * 1000000.0 + 0.5) / 1000000.0).cast("decimal(38,6)"))
-        .cast("double")
+      dsum(floor(e * 1000000.0 + 0.5) / 1000000.0)
     emb
       .crossJoin(broadcast(cent))
       .select(col(groupCol).as("group"), norm.as("__n"), cos.as("__cos"))
@@ -175,7 +175,6 @@ object Embeddings {
     require(k >= 1, s"k must be >= 1, got $k")
     require(dims.nonEmpty && dims.forall(_ >= 1), s"bad prefix list $dims")
     import graft.plans.Materialize.PinOps
-    val r6 = graft.functions.Portable.r6 _
     val full = Similarity.bruteForceTopK(corpus, queries, k, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id"))
       .pin(false) // reused by every candidate dimension
@@ -203,7 +202,7 @@ object Embeddings {
         .groupBy(lit(d).cast("long").as("dim"))
         .agg(
           count(lit(1)).as("n_queries"),
-          (sum(r6(col("__r")).cast("decimal(38,6)")).cast("double") /
+          (dsum(r6(col("__r"))) /
             count(lit(1)).cast("double")).as("mean_recall"),
           min(r6(col("__r"))).as("min_recall"))
         .crossJoin(broadcast(corpusN))
@@ -234,8 +233,6 @@ object Embeddings {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     import graft.plans.Materialize.PinOps
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     def rowFold(arr: Column): Column =
       aggregate(arr, lit(0).cast("decimal(38,6)"),
         (acc, x) => acc + x.cast("decimal(38,6)")).cast("double")
@@ -313,8 +310,6 @@ object Embeddings {
       emb: DataFrame,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val nD = count(lit(1)).cast("double")
     val moments = emb
       .select(posexplode(col(vecCol)).as(Seq("pos", "v")))
@@ -377,8 +372,6 @@ object Embeddings {
       vecCol: String = "embedding"): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
     import graft.plans.Materialize.PinOps
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     def rowFold(arr: Column): Column =
       aggregate(arr, lit(0).cast("decimal(38,6)"),
         (acc, x) => acc + x.cast("decimal(38,6)")).cast("double")
@@ -453,8 +446,6 @@ object Embeddings {
     require(iterations >= 1 && iterations <= 16,
       s"iterations must be in [1, 16], got $iterations — each is a corpus pass")
     import graft.plans.Materialize.PinOps
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val vecs = df
       .filter(col(vecCol).isNotNull)
       .select(col(groupCol).as("__g"), col(vecCol).cast("array<double>").as("__x"))
@@ -489,8 +480,7 @@ object Embeddings {
     vecs.join(broadcast(med), "__g")
       .groupBy(col("__g"))
       .agg(count(lit(1)).as("n"), first(col("__m")).as("median"),
-        (sum(r6(sqrt(graft.functions.GraftFunctions.sqDist(col("__x"), col("__m"))))
-          .cast("decimal(38,6)")).cast("double") /
+        (dsum(r6(sqrt(graft.functions.GraftFunctions.sqDist(col("__x"), col("__m"))))) /
           count(lit(1)).cast("double")).as("__md"))
       .select(col("__g").as("group"), col("n"), col("median"),
         r6(col("__md")).as("mean_dist"))

@@ -1,6 +1,6 @@
 package graft.ann
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -233,7 +233,7 @@ object Lof {
     val kdist = knn.filter(col("pos") === (k - 1).toLong)
       .select(col("id").as("nb"), col("d").as("__kd_nb"))
     def dmean(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      (sum(Portable.r6(e).cast("decimal(38,6)")).cast("double") /
+      (dsum(r6(e)) /
         count(lit(1)).cast("double"))
     val lrd = knn
       .join(kdist, "nb") // node-sized k-dist frame
@@ -253,7 +253,7 @@ object Lof {
       .join(lrd, "id")
       .groupBy(col("id"), col("lrd"))
       .agg(
-        sum(Portable.r6(ratio).cast("decimal(38,6)")).cast("double").as("__sr"),
+        dsum(r6(ratio)).as("__sr"),
         count(ratio).as("__cn"),
         count(lit(1)).as("__ct"))
       .join(kdist.select(col("nb").as("id"), col("__kd_nb").as("k_dist")), "id")

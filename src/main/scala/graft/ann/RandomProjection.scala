@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -49,8 +50,6 @@ object RandomProjection {
       vecCol: String = "embedding"): DataFrame = {
     require(maxId >= 2 && maxId <= 128,
       s"maxId must be in [2, 128], got $maxId — the probe frame is maxId² pairs")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val probe = vectors
       .filter(col(idCol) < maxId)
       .select(col(idCol).as("id"), col(vecCol).as("__v"))

@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import graft.ann.Similarity.cosine
 import org.apache.spark.sql.DataFrame
@@ -51,7 +52,7 @@ object SemDedup {
     // pair array is a memory cliff with vector payloads), zero per-pair
     // slice/struct allocation (see Pairs.pairs)
     graft.functions.Pairs.pairs(clusters, col("items"), "a", "b")
-      .filter(graft.functions.Portable.r6(cosine(col("a.vec"), col("b.vec"))) >= threshold)
+      .filter(r6(cosine(col("a.vec"), col("b.vec"))) >= threshold)
       .select(col("b.id").as(idCol))
       .distinct()
   }

@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -104,7 +105,7 @@ object Similarity {
         col("query_id"),
         col("entry.id").as("neighbor_id"),
         (col("pos") + 1).cast("int").as("rank"),
-        graft.functions.Portable.r6(col("entry.score")).as("cosine")
+        r6(col("entry.score")).as("cosine")
       )
 
   /** Portable coarse-quantization cell: bit d set iff vec[d] > 0 —
@@ -228,7 +229,7 @@ object Similarity {
         .select(
           col(s"a.$idCol").as("id_a"),
           col(s"b.$idCol").as("id_b"),
-          graft.functions.Portable.r6(cosine(col(s"a.$vecCol"), col(s"b.$vecCol"))).as("cosine")
+          r6(cosine(col(s"a.$vecCol"), col(s"b.$vecCol"))).as("cosine")
         )
         .filter(col("cosine") >= threshold)
     case Some(f) =>
@@ -245,7 +246,7 @@ object Similarity {
         .select(
           col("a.id").as("id_a"),
           col("b.id").as("id_b"),
-          graft.functions.Portable.r6(cosine(col("a.vec"), col("b.vec"))).as("cosine")
+          r6(cosine(col("a.vec"), col("b.vec"))).as("cosine")
         )
         .filter(col("cosine") >= threshold)
   }

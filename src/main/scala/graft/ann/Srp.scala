@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -79,7 +80,7 @@ object Srp {
       .select(
         col("id_a"),
         col("id_b"),
-        graft.functions.Portable.r6(Similarity.cosine(col("__va"), col("__vb"))).as("cosine"))
+        r6(Similarity.cosine(col("__va"), col("__vb"))).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -129,7 +130,6 @@ object Srp {
       vecCol: String = "embedding"): DataFrame = {
     require(seedA != seedB, "the two passes need independent hyperplane seeds")
     import graft.plans.Materialize.PinOps
-    val r6 = graft.functions.Portable.r6 _
     val pinned = vectors.select(col(idCol).as("id"), col(vecCol).as("__v"))
       .pin(false) // both seeded projections + all 4 verify joins read it
     def seedBits(seed: String, tag: String): Seq[Column] =

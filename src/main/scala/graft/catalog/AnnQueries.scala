@@ -707,9 +707,6 @@ object AnnQueries {
 
     // diagonal-covariance Mahalanobis embedding outlier scores
     QueryDef("q_mahalanobis", (s, dir) => Embeddings.mahalanobisDiag(emb(s, dir)),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH x AS (SELECT vec_id, ${r6("CAST(unnest(embedding) AS DOUBLE)")} AS v,
          |    unnest(range(0, len(embedding))) AS pos FROM embeddings),
          |mo AS (SELECT pos, ${dsum("v")} / CAST(count(*) AS DOUBLE) AS mean,
@@ -723,15 +720,11 @@ object AnnQueries {
          |      ELSE 0.0 END AS z2
          |  FROM x JOIN mo USING (pos)),
          |m2 AS (SELECT vec_id, coalesce(${dsum("z2")}, 0.0) AS m2 FROM z GROUP BY 1)
-         |SELECT vec_id, m2, ${r6("sqrt(m2)")} AS maha, nd.n_dims_used FROM m2, nd""".stripMargin
-    }),
+         |SELECT vec_id, m2, ${r6("sqrt(m2)")} AS maha, nd.n_dims_used FROM m2, nd""".stripMargin),
 
     // embedding isotropy: mean pairwise cosine from the closed form
     // (no pair ever materializes)
     QueryDef("q_isotropy", (s, dir) => Embeddings.isotropy(emb(s, dir)),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
          |    unnest(range(0, len(embedding))) AS pos FROM embeddings),
          |nr AS (SELECT vec_id, sqrt(${dsum(r6("v * v"))}) AS nm FROM x GROUP BY 1),
@@ -747,8 +740,7 @@ object AnnQueries {
          |  CASE WHEN rq.n > 1 THEN
          |    ${r6("(ct.ss - rq.rqs) / (CAST(rq.n AS DOUBLE) * CAST(rq.n - 1 AS DOUBLE))")}
          |  END AS mean_offdiag_cos
-         |FROM rq, ct, zr""".stripMargin
-    }),
+         |FROM rq, ct, zr""".stripMargin),
 
     // capture-recapture dedup-recall estimate: two independent SRP
     // passes -> Chapman estimate of the TRUE near-dup pair count
@@ -756,7 +748,6 @@ object AnnQueries {
       graft.ann.Srp.captureRecapture(emb(s, dir), threshold = 0.25,
         seedA = "cr1", seedB = "cr2"),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       // one seeded SRP pass as prefixed CTEs ending in <t>pr(ia, ib)
       def srpPass(t: String, seed: String): String =
         s"""${t}pl AS (SELECT p.i AS p,
@@ -803,9 +794,6 @@ object AnnQueries {
     // WHEN did the embedding distribution move
     QueryDef("q_embed_drift", (s, dir) =>
       Embeddings.centroidDrift(emb(s, dir), bucketWidth = 100L),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
          |    unnest(range(0, len(embedding))) AS pos FROM embeddings),
          |nr AS (SELECT vec_id, sqrt(${dsum(r6("v * v"))}) AS nm FROM x GROUP BY 1),
@@ -823,15 +811,13 @@ object AnnQueries {
          |  CASE WHEN dt.dot IS NOT NULL AND cur.ss > 0 AND dt.pss > 0 THEN
          |    ${r6("dt.dot / (sqrt(cur.ss) * sqrt(dt.pss))")}
          |  END AS drift_cos
-         |FROM cur LEFT JOIN dt ON cur.bucket = dt.bucket""".stripMargin
-    }),
+         |FROM cur LEFT JOIN dt ON cur.bucket = dt.bucket""".stripMargin),
 
     // JL projection distortion, measured on the id<40 probe pairs
     QueryDef("q_jl", (s, dir) =>
       graft.ann.RandomProjection.distortionReport(emb(s, dir),
         k = 16, dim = 64, maxId = 40L),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       def planes(seed: String) =
         s"""SELECT p.i AS p,
            |  list_transform(range(0,64), d -> CASE WHEN CAST(concat('0x', substr(md5(concat('srp:$seed:', p.i, ':', d)),1,8)) AS BIGINT) % 2 = 0
@@ -872,8 +858,6 @@ object AnnQueries {
         .select(col("group"), col("n"), col("mean_dist"),
           col("dim").cast("long").as("dim"), col("m")),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
       val distTo = (m: String) =>
         s"greatest(sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,65), i -> (x[i] - $m[i]) * (x[i] - $m[i]))), (a, q) -> a + q)), 1e-9)"
       val rounds = (1 to 5).map { r =>

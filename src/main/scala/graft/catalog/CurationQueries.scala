@@ -464,9 +464,6 @@ object CurationQueries {
     // Neyman-optimal labeling-budget allocation across sources
     QueryDef("q_neyman", (s, dir) =>
       Sampling.neymanAllocation(docs(s, dir), "source", "n_chars", budget = 100L),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH v AS (SELECT source, CAST(n_chars AS DOUBLE) AS x FROM documents
          |  WHERE n_chars IS NOT NULL),
          |st AS (SELECT source AS stratum, count(*) AS n,
@@ -489,17 +486,13 @@ object CurationQueries {
          |    row_number() OVER (ORDER BY fracpart DESC, stratum) <= 100 - sp.spent
          |    AND alloc_frac > 0
          |    THEN 1 ELSE 0 END) AS n_alloc
-         |FROM fr, sp""".stripMargin
-    }),
+         |FROM fr, sp""".stripMargin),
 
     // 5-fold CV of the per-source mean predictor (delete-one-block
     // closed form: no per-fold retrain pass)
     QueryDef("q_cv", (s, dir) =>
       Splits.kFoldGroupMeanCv(docs(s, dir), "doc_id", "source", "n_chars",
         k = 5, seed = "cv42"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH rws AS (SELECT source AS g,
          |    ${h32("concat('cv42', '|', CAST(doc_id AS VARCHAR))")} % 5 AS fold,
          |    CAST(n_chars AS DOUBLE) AS y FROM documents WHERE n_chars IS NOT NULL),
@@ -513,16 +506,12 @@ object CurationQueries {
          |  count(CASE WHEN yhat IS NULL THEN 1 END) AS n_skipped,
          |  ${r6(s"${dsum(s"CASE WHEN yhat IS NOT NULL THEN ${r6("abs(y - yhat)")} END")} / CAST(count(CASE WHEN yhat IS NOT NULL THEN 1 END) AS DOUBLE)")} AS mae,
          |  ${r6(s"sqrt(${dsum(s"CASE WHEN yhat IS NOT NULL THEN ${r6("(y - yhat) * (y - yhat)")} END")} / CAST(count(CASE WHEN yhat IS NOT NULL THEN 1 END) AS DOUBLE))")} AS rmse
-         |FROM j GROUP BY 1""".stripMargin
-    }),
+         |FROM j GROUP BY 1""".stripMargin),
 
     // leave-one-source-out influence on the corpus mean doc length —
     // which source's removal moves the corpus metric, and which way
     QueryDef("q_loo_source", (s, dir) =>
       Influence.leaveOneOutMean(docs(s, dir), "source", col("n_chars")),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH g AS (SELECT source AS "group", count(*) AS n,
          |    ${dsum(r6("CAST(n_chars AS DOUBLE)"))} AS s
          |  FROM documents WHERE n_chars IS NOT NULL GROUP BY 1),
@@ -534,8 +523,7 @@ object CurationQueries {
          |  CASE WHEN t.nn > g.n THEN
          |    ${r6(s"${r6("(t.ss - g.s) / CAST(t.nn - g.n AS DOUBLE)")} - ${r6("t.ss / CAST(t.nn AS DOUBLE)")}")}
          |  END AS delta
-         |FROM g, t""".stripMargin
-    }),
+         |FROM g, t""".stripMargin),
 
     // leakage-proof churn/conversion label engineering: obs window
     // [Jan 10, Jan 20), horizon [Jan 20, Jan 25)
@@ -543,7 +531,6 @@ object CurationQueries {
       Labels.activityLabels(ev(s, dir), "user_id", "ts", "event_type", "purchase",
         cutoffUs = 1705708800000000L, obsDays = 10, horizonDays = 5),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val cutoff = 1705708800000000L
       val obsStart = cutoff - 10L * 86400000000L
       val horEnd = cutoff + 5L * 86400000000L
@@ -572,8 +559,6 @@ object CurationQueries {
       Sampling.rakeWeights(sample, d, "lang", "source", iters = 5)
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       def step(k: Int, prev: String, axis: String, target: String): String =
         s"""ms$k AS (SELECT $axis, ${dsum(r6("weight * CAST(n AS DOUBLE)"))} AS mass
            |  FROM $prev GROUP BY 1),

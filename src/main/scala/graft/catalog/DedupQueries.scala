@@ -314,8 +314,6 @@ object DedupQueries {
     // 50 docs — WHEN did duplication start, not just how much
     QueryDef("q_dup_influx", (s, dir) =>
       Dedup.duplicateInflux(docs(s, dir), "doc_id", "text", bucketWidth = 50L),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH fp AS (SELECT doc_id AS o,
          |    list_reduce(list_prepend(CAST(0 AS BIGINT),
          |      list_transform(range(1, len(s)+1), i -> CAST(ascii(substr(s, i, 1)) AS BIGINT))),
@@ -328,8 +326,7 @@ object DedupQueries {
          |SELECT bucket, count(*) AS n_docs,
          |  count(CASE WHEN dup THEN 1 END) AS n_dups,
          |  ${r6("CAST(count(CASE WHEN dup THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS dup_rate
-         |FROM j GROUP BY 1""".stripMargin
-    }),
+         |FROM j GROUP BY 1""".stripMargin),
 
     // B-cubed clustering eval: does 32-bit SimHash (as a bucket id)
     // recover the exact-fingerprint duplicate classes — precision =
@@ -340,9 +337,6 @@ object DedupQueries {
         TextFunctions.fingerprint(col("text")).as("fp"))
       Evaluation.bCubed(sh.join(gold, "id"), "simhash", "fp")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
          |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
          |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
@@ -367,7 +361,6 @@ object DedupQueries {
          |  CASE WHEN n_items > 0 AND sp + sr > 0 THEN
          |    ${r6("2.0 * (sp / CAST(n_items AS DOUBLE)) * (sr / CAST(n_items AS DOUBLE)) / (sp / CAST(n_items AS DOUBLE) + sr / CAST(n_items AS DOUBLE))")}
          |  END AS bcubed_f1
-         |FROM a, dr""".stripMargin
-    })
+         |FROM a, dr""".stripMargin)
   )
 }

@@ -348,8 +348,6 @@ object GraphQueries {
     // one-row graph sanity sheet for the word-adjacency graph
     QueryDef("q_graph_profile", (s, dir) =>
       Graph.profile(wordAdjacencyEdges(s, dir)),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
          |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
          |      FROM tk WHERE len(ts) >= 2),
@@ -366,7 +364,6 @@ object GraphQueries {
          |  CASE WHEN dc.n_edges_distinct > 0 THEN
          |    ${r6("CAST(rr.nr AS DOUBLE) / CAST(dc.n_edges_distinct AS DOUBLE)")}
          |  END AS reciprocity
-         |FROM m, nn, dc, rr""".stripMargin
-    })
+         |FROM m, nn, dc, rr""".stripMargin)
   )
 }

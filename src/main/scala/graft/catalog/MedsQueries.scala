@@ -620,7 +620,6 @@ object MedsQueries {
       Shard.rendezvousRebalanceAudit(ev(s, dir), "user_id",
         fromShards = 8, toShards = 10, seed = "rdz"),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       def hw(n: Int) =
         s"list_transform(range(0, $n), sh -> ${h32("concat('rdz', '|', CAST(key AS VARCHAR), '|', CAST(sh AS VARCHAR))")})"
       s"""WITH k AS (SELECT DISTINCT user_id AS key FROM events WHERE user_id IS NOT NULL),

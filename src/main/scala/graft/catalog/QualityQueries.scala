@@ -379,8 +379,6 @@ object QualityQueries {
       Integrity.dpMeans(ev(s, dir), Seq("event_type"), "user_id", "value",
         lo = 0.0, hi = 500.0, epsilon = 1.0, seed = "graft-dp9"),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       def lap(tag: String, scale: String) = {
         val h = h32(s"concat('graft-dp9', coalesce(md5(CAST(event_type AS VARCHAR)), 'N'), '$tag')")
         s"""-sign(($h + 0.5) / 4294967296.0 - 0.5)
@@ -416,8 +414,6 @@ object QualityQueries {
           graft.functions.Portable.r6(col("ks")).as("ks"),
           graft.functions.Portable.r6(col("psi")).as("psi"))
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH m AS (
          |  SELECT source = 'src0' AS ref, 'n_chars' AS feature, CAST(n_chars AS DOUBLE) AS v FROM documents
          |  UNION ALL
@@ -462,8 +458,7 @@ object QualityQueries {
          |  ${r6("d0")} AS d,
          |  ${r6("sqrt(CAST(n_ref AS DOUBLE) * CAST(n_cur AS DOUBLE) / CAST(n_ref + n_cur AS DOUBLE)) * d0")} AS ks,
          |  ${r6("psi0")} AS psi
-         |FROM ksm LEFT JOIN ps ON ksm.feature = ps.feature""".stripMargin
-    }),
+         |FROM ksm LEFT JOIN ps ON ksm.feature = ps.feature""".stripMargin),
 
     // leakage screen: single-feature AUC of each doc feature against
     // the ' the ' label (n_words ~ doc length: the expected "proxy")
@@ -476,8 +471,6 @@ object QualityQueries {
       Drift.featureAucScreen(feats, Seq("n_chars", "n_words", "n_lines"),
         col("text").contains(" the "))
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH m0 AS (
          |  SELECT CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p,
          |    'n_chars' AS feature, CAST(n_chars AS DOUBLE) AS x FROM documents
@@ -502,15 +495,13 @@ object QualityQueries {
          |  FROM m)
          |SELECT feature, n_pos, n_neg, ${r6("auc0")} AS auc,
          |  CASE WHEN auc0 IS NOT NULL THEN ${r6("abs(auc0 - 0.5) * 2.0")} END AS separation
-         |FROM a""".stripMargin
-    }),
+         |FROM a""".stripMargin),
 
     // qq drift: WHERE src0's length distribution sits vs the rest,
     // probe by probe
     QueryDef("q_qq_drift", (s, dir) =>
       Drift.qqDrift(docs(s, dir), "n_chars", col("source") === "src0", QuantilePs),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val ps = QuantilePs.map(p => s"CAST($p AS DOUBLE)").mkString("[", ", ", "]")
       s"""WITH v AS (SELECT (source = 'src0') AS slice, CAST(n_chars AS DOUBLE) AS x
          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
@@ -527,8 +518,6 @@ object QualityQueries {
     QueryDef("q_json_health", (s, dir) =>
       graft.operators.Json.fieldHealth(ev(s, dir), Seq("event_type"),
         "props", "$.k"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH f AS (SELECT event_type, props,
          |    CASE WHEN props IS NOT NULL AND json_valid(props)
          |      THEN try_cast(json_extract_string(props, '$$.k') AS DOUBLE) END AS v
@@ -544,7 +533,6 @@ object QualityQueries {
          |  CASE WHEN n > 0 THEN ${r6("CAST(n_field AS DOUBLE) / CAST(n AS DOUBLE)")} END AS present_rate,
          |  CASE WHEN n_field > 0 THEN ${r6("s / CAST(n_field AS DOUBLE)")} END AS field_mean,
          |  ${r6("mn")} AS field_min, ${r6("mx")} AS field_max
-         |FROM g""".stripMargin
-    })
+         |FROM g""".stripMargin)
   )
 }

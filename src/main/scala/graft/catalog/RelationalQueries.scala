@@ -612,8 +612,6 @@ object RelationalQueries {
     QueryDef("q_blocking_eval", (s, dir) =>
       FuzzyJoin.blockingQuality(Tables.part(s, dir), "p_name",
         maxDist = 4, windowSize = 3),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH base AS (SELECT DISTINCT lower(p_name) AS name FROM part
          |  WHERE p_name IS NOT NULL AND lower(p_name) <> ''),
          |rk AS (SELECT name, substr(name, 1, 2) AS block,
@@ -638,8 +636,7 @@ object RelationalQueries {
          |  CAST(n_covered AS BIGINT) AS n_covered,
          |  CASE WHEN n_gold > 0 THEN ${r6("CAST(n_covered AS DOUBLE) / CAST(n_gold AS DOUBLE)")} END AS pair_completeness,
          |  CASE WHEN n_block_pairs > 0 THEN ${r6("1.0 - CAST(n_candidates AS DOUBLE) / CAST(n_block_pairs AS DOUBLE)")} END AS reduction_ratio
-         |FROM cnt, g, cov""".stripMargin
-    }),
+         |FROM cnt, g, cov""".stripMargin),
 
     // as-of join, forward direction: next purchase at-or-after each
     // event (the already-implemented third direction, oracle-paired)

@@ -10,6 +10,18 @@ import org.apache.spark.sql.functions._
   */
 object Shared {
 
+  /** Oracle side of [[graft.functions.Portable.r6]]: `floor(x·10⁶ + 0.5) / 10⁶`. */
+  private[catalog] def r6(e: String): String = graft.functions.Portable.r6Sql(e)
+
+  /** Oracle side of [[graft.functions.Portable.dsum]]: a sum through DECIMAL(38,6). */
+  private[catalog] def dsum(e: String): String = graft.functions.Portable.dsumSql(e)
+
+  /** Oracle side of `Portable.dsum0(Portable.r6(e))`: the sum of rounded
+    * values, 0 on no rows.
+    */
+  private[catalog] def ds(e: String): String =
+    s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
+
   private[catalog] def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 
   /** events as MEDS measurements, with event_id retained for row-unique

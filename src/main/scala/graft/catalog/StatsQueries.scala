@@ -19,8 +19,6 @@ object StatsQueries {
     * evaluated AT the final beta) and `b$iters` (the final beta).
     */
   private def coxCtes(iters: Int): String = {
-    def r6(e: String) = graft.functions.Portable.r6Sql(e)
-    def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
     val head =
       s"""sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
          |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
@@ -62,7 +60,6 @@ object StatsQueries {
     * y, x1, x2)` — shared by the logistic-GD oracles and q_stump.
     */
   private def logitDocsCtes(yExpr: String): String = {
-    def r6(e: String) = graft.functions.Portable.r6Sql(e)
     s"""lw AS (SELECT *, len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nw
        |  FROM documents),
        |ld AS (SELECT doc_id AS id, source, n_chars, CAST(($yExpr) AS INT) AS y,
@@ -79,8 +76,6 @@ object StatsQueries {
     * (id, source, n_chars, y, x1, x2, p).
     */
   private def logitCtes(yExpr: String, iters: Int): String = {
-    def r6(e: String) = graft.functions.Portable.r6Sql(e)
-    def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
     val head =
       s"""${logitDocsCtes(yExpr)},
          |cb0 AS (SELECT CAST(0.0 AS DOUBLE) AS c0, CAST(0.0 AS DOUBLE) AS c1, CAST(0.0 AS DOUBLE) AS c2)""".stripMargin
@@ -1948,16 +1943,13 @@ object StatsQueries {
     // user's mean event value shift the time-to-purchase hazard
     // (fixed 4-step Newton, Breslow ties)
     QueryDef("q_cox", (s, dir) => Survival.coxPh(coxSubjects(s, dir), "t_day", "obs", "x"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH ${coxCtes(4)}
          |SELECT (SELECT count(*) FROM subj) AS n,
          |  (SELECT count(*) FROM subj WHERE obs) AS n_events,
          |  b4.beta AS beta, ${r6("exp(b4.beta)")} AS hr,
          |  CASE WHEN ui4.i > 0 THEN ${r6("1.0 / sqrt(ui4.i)")} END AS se,
          |  ui4.ll AS loglik
-         |FROM b4, ui4""".stripMargin
-    }),
+         |FROM b4, ui4""".stripMargin),
 
     // logistic regression by fixed-step GD on the length-bucket label —
     // the linear-classifier counterpart to q_nb's generative model
@@ -1967,9 +1959,6 @@ object StatsQueries {
         d, Logistic.fitGd(d, "y", Seq("x1", "x2"), iters = 5, lr = 0.5),
         "y", Seq("x1", "x2"))
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH ${logitCtes("n_chars >= 300", 5)},
          |lc AS (SELECT CAST(y AS DOUBLE) AS yd,
          |    least(greatest(p, 1e-6), CAST(1.0 AS DOUBLE) - 1e-6) AS pc FROM p5),
@@ -1978,8 +1967,7 @@ object StatsQueries {
          |  FROM lc)
          |SELECT '__intercept' AS feature, cb5.c0 AS beta, lossq.n AS n, lossq.log_loss FROM cb5, lossq
          |UNION ALL SELECT 'x1', cb5.c1, lossq.n, lossq.log_loss FROM cb5, lossq
-         |UNION ALL SELECT 'x2', cb5.c2, lossq.n, lossq.log_loss FROM cb5, lossq""".stripMargin
-    }),
+         |UNION ALL SELECT 'x2', cb5.c2, lossq.n, lossq.log_loss FROM cb5, lossq""".stripMargin),
 
     // IPW average treatment effect: LR propensity (treatment = src0)
     // -> clipped Hajek weighting of n_chars — the composed
@@ -1990,9 +1978,6 @@ object StatsQueries {
       Logistic.ipwAte(Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
         "n_chars", "treat", "p_hat", clip = 0.05)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH ${logitCtes("source = 'src0'", 5)},
          |cl AS (SELECT n_chars, y = 1 AS t,
          |    ${r6("least(greatest(p, CAST(0.05 AS DOUBLE)), CAST(0.95 AS DOUBLE))")} AS pcl FROM p5),
@@ -2004,8 +1989,7 @@ object StatsQueries {
          |    ${dsum(r6("wt * yo"))} / ${dsum("wt")} AS mt,
          |    ${dsum(r6("wc * yo"))} / ${dsum("wc")} AS mc FROM wts)
          |SELECT n_treated, n_control, ${r6("mt")} AS mean_treated,
-         |  ${r6("mc")} AS mean_control, ${r6("mt - mc")} AS ate FROM ag""".stripMargin
-    }),
+         |  ${r6("mc")} AS mean_control, ${r6("mt - mc")} AS ate FROM ag""".stripMargin),
 
     // empirical-Bayes beta-binomial shrinkage of per-customer urgent-
     // order rates (method-of-moments prior from the data)
@@ -2014,9 +1998,6 @@ object StatsQueries {
         Tables.orders(s, dir), "o_custkey",
         col("o_orderpriority") === "1-URGENT")
         .withColumnRenamed("group", "o_custkey"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH grp AS (SELECT o_custkey, count(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS x,
          |    count(*) AS n FROM orders GROUP BY 1),
          |gr AS (SELECT o_custkey, x, n, ${r6("CAST(x AS DOUBLE) / CAST(n AS DOUBLE)")} AS raw_rate FROM grp),
@@ -2031,8 +2012,7 @@ object StatsQueries {
          |SELECT o_custkey, x, n, raw_rate,
          |  CASE WHEN eb_alpha IS NOT NULL THEN
          |    ${r6("(CAST(x AS DOUBLE) + eb_alpha) / (CAST(n AS DOUBLE) + eb_alpha + eb_beta)")}
-         |  ELSE raw_rate END AS shrunk_rate, eb_alpha, eb_beta FROM sh""".stripMargin
-    }),
+         |  ELSE raw_rate END AS shrunk_rate, eb_alpha, eb_beta FROM sh""".stripMargin),
 
     // Mondrian split-conformal calibration of the per-source n_chars
     // predictor: finite-sample +/- bands per group, coverage audited
@@ -2040,9 +2020,6 @@ object StatsQueries {
     QueryDef("q_conformal", (s, dir) =>
       Conformal.splitConformal(docs(s, dir), "doc_id", "source", "n_chars",
         alpha = 0.2, seed = "c42"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH rws AS (SELECT doc_id AS id, source AS grp, CAST(n_chars AS DOUBLE) AS y,
          |    CASE WHEN h < 50 THEN 'train' WHEN h < 75 THEN 'cal' ELSE 'test' END AS split
          |  FROM (SELECT *, ${h32("concat('c42', '|', CAST(doc_id AS VARCHAR))")} % 100 AS h FROM documents)),
@@ -2064,8 +2041,7 @@ object StatsQueries {
          |SELECT t.grp AS "group", t.n_train, coalesce(q.n_cal, 0) AS n_cal,
          |  coalesce(ts.n_test, 0) AS n_test, t.y_hat, q.q_hat, ts.coverage,
          |  CAST(0.8 AS DOUBLE) AS target
-         |FROM tm t LEFT JOIN qh q ON t.grp = q.grp LEFT JOIN tst ts ON t.grp = ts.grp""".stripMargin
-    }),
+         |FROM tm t LEFT JOIN qh q ON t.grp = q.grp LEFT JOIN tst ts ON t.grp = ts.grp""".stripMargin),
 
     // Cochran-Mantel-Haenszel: arm x high-value association controlled
     // for event_type strata + the MH pooled odds ratio
@@ -2075,8 +2051,6 @@ object StatsQueries {
       Hypothesis.cmh(ev(s, dir), Seq("event_type"), col("value") >= 10.0, arm)
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       // the SAME A&S 26.2.16 tail as Hypothesis.pFromZ (the q_bh form)
       val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
         s"${math.sqrt(2.0 * math.Pi)} * " +
@@ -2113,7 +2087,6 @@ object StatsQueries {
       Stump.bestSplits(logitDocs(s, dir), col("y"),
         Seq("x1" -> col("x1"), "x2" -> col("x2")), bins = 16),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       def gini(p: String, n: String) =
         s"(1.0 - (CAST($p AS DOUBLE) / CAST($n AS DOUBLE)) * (CAST($p AS DOUBLE) / CAST($n AS DOUBLE)) - (1.0 - CAST($p AS DOUBLE) / CAST($n AS DOUBLE)) * (1.0 - CAST($p AS DOUBLE) / CAST($n AS DOUBLE)))"
       s"""WITH ${logitDocsCtes("n_chars >= 300")},
@@ -2147,9 +2120,6 @@ object StatsQueries {
       Jackknife.ratioCi(ev(s, dir), "user_id", col("value"),
         when(col("event_type") === "click", lit(1.0)).otherwise(lit(0.0)),
         buckets = 20, seed = "jk42"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH rws AS (SELECT
          |    ${h32("concat('jk42', '|', CAST(user_id AS VARCHAR))")} % 20 AS b,
          |    value AS num, CASE WHEN event_type = 'click' THEN 1.0 ELSE 0.0 END AS den
@@ -2173,8 +2143,7 @@ object StatsQueries {
          |SELECT n_rows, n_buckets, b_degenerate, ratio, se_jack,
          |  CASE WHEN se_jack IS NOT NULL THEN ${r6("ratio - 1.959964 * se_jack")} END AS ci_lo,
          |  CASE WHEN se_jack IS NOT NULL THEN ${r6("ratio + 1.959964 * se_jack")} END AS ci_hi
-         |FROM fin""".stripMargin
-    }),
+         |FROM fin""".stripMargin),
 
     // Bradley-Terry preference strengths over head-to-head doc-length
     // comparisons between sources (consecutive-doc tournament)
@@ -2191,8 +2160,6 @@ object StatsQueries {
       BradleyTerry.fit(p, "winner", "loser", iters = 3)
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       def step(k: Int): String =
         s"""d$k AS (SELECT g.a AS item,
            |    ${dsum(r6("CAST(g.g AS DOUBLE) / (ta.theta + tb.theta)"))} AS den
@@ -2228,9 +2195,6 @@ object StatsQueries {
         docs(s, dir).withColumn("score",
           least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
         Seq("lang"), "score", col("text").contains(" the "), nBins = 10),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS y FROM documents),
          |g AS (SELECT lang, least(9, greatest(0, CAST(floor(x * 10) AS BIGINT))) AS bin,
@@ -2252,8 +2216,7 @@ object StatsQueries {
          |      OVER (PARTITION BY lang) AS DOUBLE) / nd AS res,
          |    yg FROM w)
          |SELECT DISTINCT lang, n, ${r6("brier")} AS brier, ${r6("rel")} AS reliability,
-         |  ${r6("res")} AS resolution, ${r6("yg * (1.0 - yg)")} AS uncertainty FROM z""".stripMargin
-    }),
+         |  ${r6("res")} AS resolution, ${r6("yg * (1.0 - yg)")} AS uncertainty FROM z""".stripMargin),
 
     // doubly-robust AIPW ATE: LR propensity + per-arm OLS outcome
     // models, composed in one plan (the q_ipw setting, upgraded)
@@ -2264,8 +2227,6 @@ object StatsQueries {
         "n_chars", "treat", "p_hat", "x1", clip = 0.05)
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       def arm(cond: String, tag: String): String =
         s"""count(CASE WHEN $cond THEN 1 END) AS n$tag,
            |    coalesce(${dsum(s"CASE WHEN $cond THEN ${r6("x1")} END")}, 0.0) AS sx$tag,
@@ -2300,8 +2261,6 @@ object StatsQueries {
       Attribution.markovRemoval(ev(s, dir), "user_id", "ts", "event_type",
         "event_id", "purchase", iters = 12),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       // channels fixed by the testdata event-type domain (sorted, as
       // markovRemoval derives them); K matches iters = 12
       val channels = Seq("click", "error", "signup", "view")
@@ -2355,9 +2314,6 @@ object StatsQueries {
     QueryDef("q_rmst", (s, dir) =>
       Survival.restrictedMeanSurvival(ev(s, dir), "user_id", "ts", "event_type",
         "purchase", horizonDays = 20L),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
          |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS te,
          |    max(epoch_us(ts)) AS tl
@@ -2388,8 +2344,7 @@ object StatsQueries {
          |  ${r6(s"coalesce(${dsum(r6("prevs * w"))}, 0.0) + coalesce(${dsum(s"CASE WHEN t_day = mxt THEN ${r6("s * greatest(0.0, 20.0 - least(CAST(t_day AS DOUBLE), 20.0))")} END")}, 0.0)")} AS rmst,
          |  CAST(coalesce(sum(d_events + c_censored), 0) AS BIGINT) AS n,
          |  CAST(coalesce(sum(d_events), 0) AS BIGINT) AS n_events
-         |FROM wd""".stripMargin
-    }),
+         |FROM wd""".stripMargin),
 
     // Hosmer-Lemeshow-style calibration chi-square on the
     // q_calibration score/label pair (fixed-width-bin variant)
@@ -2399,8 +2354,6 @@ object StatsQueries {
           least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
         Seq("lang"), "score", col("text").contains(" the "), nBins = 10),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       val pz = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
         s"${math.sqrt(2.0 * math.Pi)} * " +
         "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
@@ -2436,9 +2389,6 @@ object StatsQueries {
       Logistic.weightDiagnostics(
         Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"), "treat", "p_hat", clip = 0.05)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH ${logitCtes("source = 'src0'", 5)},
          |cl AS (SELECT y = 1 AS t,
          |    ${r6("least(greatest(p, CAST(0.05 AS DOUBLE)), CAST(0.95 AS DOUBLE))")} AS pcl FROM p5),
@@ -2450,8 +2400,7 @@ object StatsQueries {
          |  CASE WHEN sw2 > 0 THEN ${r6("sw * sw / sw2")} END AS ess,
          |  CASE WHEN sw2 > 0 THEN ${r6("sw * sw / sw2 / CAST(n AS DOUBLE)")} END AS ess_ratio,
          |  CASE WHEN sw > 0 THEN ${r6("mw / sw")} END AS max_w_share
-         |FROM ag""".stripMargin
-    }),
+         |FROM ag""".stripMargin),
 
     // placebo refutation: rerun the whole q_ipw pipeline on an md5
     // coin-flip pseudo-treatment — a real design should land near 0
@@ -2463,8 +2412,6 @@ object StatsQueries {
         "n_chars", "treat", "p_hat", clip = 0.05)
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       val placebo = s"${h32("concat('pb:', CAST(doc_id AS VARCHAR))")} % 2 = 1"
       s"""WITH ${logitCtes(placebo, 5)},
          |cl AS (SELECT n_chars, y = 1 AS t,
@@ -2485,8 +2432,6 @@ object StatsQueries {
     QueryDef("q_cif", (s, dir) =>
       Survival.competingRisks(ev(s, dir), "user_id", "ts", "event_type",
         "purchase", "error"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH sp AS (SELECT user_id, min(epoch_us(ts)) AS t0,
          |    min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS t1,
          |    min(CASE WHEN event_type = 'error' THEN epoch_us(ts) END) AS t2,
@@ -2522,8 +2467,7 @@ object StatsQueries {
          |SELECT t_day, n_risk, d_cause1, d_cause2, c_censored,
          |  ${r6("CAST(sum(CAST(" + r6("sprev * CAST(d_cause1 AS DOUBLE) / CAST(n_risk AS DOUBLE)") + " AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cif1,
          |  ${r6("CAST(sum(CAST(" + r6("sprev * CAST(d_cause2 AS DOUBLE) / CAST(n_risk AS DOUBLE)") + " AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cif2
-         |FROM s""".stripMargin
-    }),
+         |FROM s""".stripMargin),
 
     // Simpson's-paradox audit: pooled vs MH-stratified rate difference
     // across event-type strata for the md5 A/B arms
@@ -2532,9 +2476,6 @@ object StatsQueries {
         concat(lit("cmh:"), col("user_id").cast("string"))) % 2 === 1
       Hypothesis.simpsonCheck(ev(s, dir), Seq("event_type"), col("value") >= 10.0, arm)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH e AS (SELECT event_type,
          |    ${h32("concat('cmh:', CAST(user_id AS VARCHAR))")} % 2 = 1 AS a,
          |    value >= 10.0 AS hit FROM events),
@@ -2568,8 +2509,7 @@ object StatsQueries {
          |  CASE WHEN pp.pooled IS NOT NULL AND pp.strat IS NOT NULL THEN
          |    sign(pp.pooled) <> sign(pp.strat) AND sign(pp.pooled) <> 0
          |  END AS simpson_flag
-         |FROM pp, tl""".stripMargin
-    }),
+         |FROM pp, tl""".stripMargin),
 
     // VanderWeele E-value: how much unmeasured confounding the observed
     // arm risk ratio could absorb before vanishing
@@ -2578,8 +2518,6 @@ object StatsQueries {
         concat(lit("cmh:"), col("user_id").cast("string"))) % 2 === 1
       Hypothesis.eValue(ev(s, dir), col("value") >= 10.0, arm)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH e AS (SELECT ${h32("concat('cmh:', CAST(user_id AS VARCHAR))")} % 2 = 1 AS a,
          |    value >= 10.0 AS hit FROM events),
          |g AS (SELECT count(CASE WHEN a THEN 1 END) AS n_a,
@@ -2595,8 +2533,7 @@ object StatsQueries {
          |  CASE WHEN n_b > 0 THEN ${r6("pb")} END AS p_b,
          |  ${r6("r")} AS rr,
          |  CASE WHEN r IS NOT NULL THEN ${r6("away + sqrt(away * (away - 1.0))")} END AS e_value
-         |FROM aw""".stripMargin
-    }),
+         |FROM aw""".stripMargin),
 
     // two-arm RMST contrast at a 20-day horizon (the PH-free effect
     // report; arm-partitioned KM curves, no global window)
@@ -2606,9 +2543,6 @@ object StatsQueries {
       Survival.rmstDiff(ev(s, dir), "user_id", "ts", "event_type", "purchase",
         arm, horizonDays = 20L)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH sp AS (SELECT user_id,
          |    max(CASE WHEN ${h32("concat('ab:', CAST(user_id AS VARCHAR))")} % 2 = 1 THEN 1 ELSE 0 END) AS arm,
          |    min(epoch_us(ts)) AS t0,
@@ -2646,8 +2580,7 @@ object StatsQueries {
          |  CASE WHEN n_a > 0 THEN ra END AS rmst_a,
          |  CASE WHEN n_b > 0 THEN rb END AS rmst_b,
          |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${r6("ra - rb")} END AS rmst_diff
-         |FROM ag""".stripMargin
-    }),
+         |FROM ag""".stripMargin),
 
     // heterogeneous effect by propensity bin on the q_ipw setting —
     // the positivity/overlap picture behind the single ATE number
@@ -2658,9 +2591,6 @@ object StatsQueries {
         Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
         "n_chars", "treat", "p_hat", nBins = 10)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH ${logitCtes("source = 'src0'", 5)},
          |cl AS (SELECT CAST(n_chars AS DOUBLE) AS yo, y = 1 AS t,
          |    least(9, greatest(0, CAST(floor(p * 10) AS BIGINT))) AS bin FROM p5
@@ -2678,8 +2608,7 @@ object StatsQueries {
          |  CASE WHEN n_treated > 0 AND n_control > 0 THEN
          |    ${r6("st / CAST(n_treated AS DOUBLE) - sc / CAST(n_control AS DOUBLE)")}
          |  END AS diff
-         |FROM g""".stripMargin
-    }),
+         |FROM g""".stripMargin),
 
     // language-ID confusion matrix: the per-class eval of #28 against
     // the lang column (which labels leak where)
@@ -2688,8 +2617,6 @@ object StatsQueries {
         docs(s, dir).select(col("lang"),
           TextFunctions.langId(col("text")).as("lang_pred")),
         "lang", "lang_pred"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH pred AS ($langIdSelectSql),
          |j AS (SELECT coalesce(CAST(d.lang AS VARCHAR), '(null)') AS true_label,
          |    coalesce(CAST(p.lang_pred AS VARCHAR), '(null)') AS pred_label
@@ -2701,8 +2628,7 @@ object StatsQueries {
          |SELECT true_label, pred_label, n,
          |  ${r6("CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY true_label) AS DOUBLE)")} AS frac_of_true,
          |  ${r6("CAST(tot.ok AS DOUBLE) / CAST(tot.t AS DOUBLE)")} AS accuracy
-         |FROM cells, tot""".stripMargin
-    }),
+         |FROM cells, tot""".stripMargin),
 
     // Fleiss' kappa across three deterministic heuristic "raters" —
     // the annotator-agreement gate on a preference/label corpus
@@ -2716,9 +2642,6 @@ object StatsQueries {
           vote(size(TextFunctions.wordTokens(col("text"))) >= 55).as("vote")))
       Evaluation.fleissKappa(votes, "doc_id", "vote")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH lw AS (SELECT doc_id, n_chars,
          |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nw
          |  FROM documents),
@@ -2739,17 +2662,13 @@ object StatsQueries {
          |  FROM mg, chk c)
          |SELECT pb.n_items, pb.m_raters, pe.n_categories, pb.p_bar, pe.p_e,
          |  CASE WHEN pe.p_e < 1.0 THEN ${r6("(pb.p_bar - pe.p_e) / (1.0 - pe.p_e)")} END AS kappa
-         |FROM pb, pe""".stripMargin
-    }),
+         |FROM pb, pe""".stripMargin),
 
     // split-half reliability of the per-source mean-length metric:
     // is the source league table signal or re-rolled dice
     QueryDef("q_split_half", (s, dir) =>
       Reliability.splitHalf(docs(s, dir), "source", "doc_id",
         col("n_chars"), seed = "sh42"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH rws AS (SELECT source AS g,
          |    ${h32("concat('sh42', '|', CAST(doc_id AS VARCHAR))")} % 2 AS h,
          |    CAST(n_chars AS DOUBLE) AS m FROM documents WHERE n_chars IS NOT NULL),
@@ -2774,8 +2693,7 @@ object StatsQueries {
          |SELECT n_groups, n_dropped, r_half,
          |  CASE WHEN r_half IS NOT NULL AND r_half > -1.0 THEN
          |    ${r6("2.0 * r_half / (1.0 + r_half)")} END AS reliability
-         |FROM rr""".stripMargin
-    }),
+         |FROM rr""".stripMargin),
 
     // cost-optimal quality-filter threshold on the q_calibration
     // score/label pair: keep-good pays 1, keep-bad costs 2
@@ -2785,8 +2703,6 @@ object StatsQueries {
           least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
         Seq("lang"), "score", col("text").contains(" the "),
         benefitTp = 1.0, costFp = 2.0, nBins = 20),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS y FROM documents),
          |g AS (SELECT lang, least(19, greatest(0, CAST(floor(x * 20) AS BIGINT))) AS bin,
@@ -2801,8 +2717,7 @@ object StatsQueries {
          |rk AS (SELECT *, row_number() OVER (PARTITION BY lang
          |    ORDER BY utility DESC, threshold DESC) AS rn FROM u)
          |SELECT lang, threshold, tp, fp, CAST(fn AS BIGINT) AS fn, utility
-         |FROM rk WHERE rn = 1""".stripMargin
-    }),
+         |FROM rk WHERE rn = 1""".stripMargin),
 
     // deterministic propensity matching: rank-paired ATT within the
     // q_hte propensity bins (same GD fit)
@@ -2813,9 +2728,6 @@ object StatsQueries {
         Logistic.score(d, fit, Seq("x1", "x2"), "p_hat"),
         "doc_id", "n_chars", "treat", "p_hat", nBins = 10)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH ${logitCtes("source = 'src0'", 5)},
          |cl AS (SELECT id, CAST(n_chars AS DOUBLE) AS yo, y = 1 AS t,
          |    least(9, greatest(0, CAST(floor(p * 10) AS BIGINT))) AS bin FROM p5
@@ -2830,8 +2742,7 @@ object StatsQueries {
          |  ${r6("CAST(arms.bin + 1 AS DOUBLE) * 0.1")} AS p_hi,
          |  n_treated, n_control, coalesce(np, 0) AS n_pairs,
          |  CASE WHEN np > 0 THEN ${r6("sd / CAST(np AS DOUBLE)")} END AS att
-         |FROM arms LEFT JOIN pr ON arms.bin = pr.bin""".stripMargin
-    }),
+         |FROM arms LEFT JOIN pr ON arms.bin = pr.bin""".stripMargin),
 
     // exact Shapley attribution over pre-conversion channel sets — the
     // order-free axiomatic twin of q_markov_attr; disagreement between
@@ -2840,8 +2751,6 @@ object StatsQueries {
       Attribution.shapleyAttribution(ev(s, dir), "user_id", "ts", "event_type",
         "event_id", "purchase"),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       val weight = "CAST(factorial(CAST(bit_count(v1.S) AS INTEGER)) AS DOUBLE) " +
         "* CAST(factorial(CAST(k.k - 1 - bit_count(v1.S) AS INTEGER)) AS DOUBLE) " +
         "/ CAST(factorial(CAST(k.k AS INTEGER)) AS DOUBLE)"
@@ -2882,8 +2791,6 @@ object StatsQueries {
           col("text").contains(" the ").cast("int").as("y")),
         "n_chars", "y", cutoff = 1000.0, bandwidth = 800.0),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       def side(cond: String, tag: String) = Seq(
         s"count(CASE WHEN $cond THEN 1 END) AS n_$tag",
         s"${dsum(s"CASE WHEN $cond THEN ${r6("u")} END")} AS su_$tag",
@@ -2924,9 +2831,6 @@ object StatsQueries {
     QueryDef("q_decay_attr", (s, dir) =>
       Attribution.timeDecayAttribution(ev(s, dir), "user_id", "ts",
         "event_type", "event_id", "purchase", halfLifeUs = 86400000000L),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH rows AS (SELECT user_id AS u, event_type AS ty, epoch_us(ts) AS tu,
          |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
          |  FROM events WHERE ts IS NOT NULL),
@@ -2940,8 +2844,7 @@ object StatsQueries {
          |  FROM t JOIN sw USING (u))
          |SELECT channel, CAST(count(*) AS BIGINT) AS n_touches,
          |  ${r6(s"(${dsum("credit")})")} AS total_credit
-         |FROM cr GROUP BY 1""".stripMargin
-    }),
+         |FROM cr GROUP BY 1""".stripMargin),
 
     // full Pearson matrix over the doc features in ONE scan
     QueryDef("q_corr_matrix", { (s, dir) =>
@@ -2952,8 +2855,6 @@ object StatsQueries {
       Stats.correlationMatrix(feats, Seq("n_chars", "n_words", "n_lines"))
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       def cellSqlRow(fa: String, fb: String, a: String, b: String) = {
         val (sa, sb, qa, qb, p) = (s"s$a", s"s$b", s"q$a", s"q$b", s"p$a$b")
         val va = s"(CAST(n AS DOUBLE) * $qa - $sa * $sa)"
@@ -2987,8 +2888,6 @@ object StatsQueries {
     QueryDef("q_lorenz", (s, dir) =>
       Stats.concentrationCurve(docs(s, dir), "n_chars", nBins = 10),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       val ps = (1 until 10).map(p => s"CAST(0.${p} AS DOUBLE)").mkString("[", ", ", "]")
       s"""WITH v AS (SELECT CAST(n_chars AS DOUBLE) AS x FROM documents
          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
@@ -3013,7 +2912,6 @@ object StatsQueries {
         pmod(col("doc_id"), lit(3)) === 0, col("text").contains("join")),
       {
       def lf(e: String) = graft.functions.SpecialMath.lfactSql(e)
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       def lp(k: String) =
         s"${lf("r1")} + ${lf("n - r1")} + ${lf("c1")} + ${lf("n - c1")} - ${lf("n")}" +
           s" - ${lf(k)} - ${lf(s"r1 - ($k)")} - ${lf(s"c1 - ($k)")} - ${lf(s"n - r1 - c1 + ($k)")}"
@@ -3037,7 +2935,6 @@ object StatsQueries {
       Hypothesis.mcnemar(docs(s, dir), Seq("lang"),
         col("text").contains("join"), col("text").contains("merge")),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
         s"${math.sqrt(2.0 * math.Pi)} * " +
         "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
@@ -3122,8 +3019,6 @@ object StatsQueries {
     QueryDef("q_rand_test", (s, dir) =>
       Hypothesis.randomizationTest(docs(s, dir), "n_chars",
         col("lang") === "en", "doc_id", k = 19, seed = "rt"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT CAST(n_chars AS DOUBLE) AS v, lang = 'en' AS a,
          |    CAST(doc_id AS VARCHAR) AS id FROM documents
          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
@@ -3148,16 +3043,13 @@ object StatsQueries {
          |  d_obs, CAST(count(*) AS BIGINT) AS k,
          |  CAST(count(CASE WHEN abs(d_rep) >= abs(d_obs) THEN 1 END) AS BIGINT) AS n_ge,
          |  ${r6("(CAST(count(CASE WHEN abs(d_rep) >= abs(d_obs) THEN 1 END) AS DOUBLE) + 1.0) / (CAST(count(*) AS DOUBLE) + 1.0)")} AS p_value
-         |FROM ds GROUP BY d_obs""".stripMargin
-    }),
+         |FROM ds GROUP BY d_obs""".stripMargin),
 
     // mutual-information screen: which categorical doc columns know
     // the " the " label
     QueryDef("q_mi", (s, dir) =>
       Stats.miScreen(docs(s, dir), Seq("lang", "source"),
         col("text").contains(" the ")),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH m AS (SELECT f.feature,
          |    CASE f.feature WHEN 'lang' THEN coalesce(lang, '<null>') ELSE coalesce(source, '<null>') END AS x,
          |    CAST(contains(text, ' the ') AS VARCHAR) AS y
@@ -3175,8 +3067,7 @@ object StatsQueries {
          |  FROM j GROUP BY 1, 2)
          |SELECT feature, n, ${r6("hx")} AS h_x, ${r6("hy")} AS h_y, ${r6("mi")} AS mi,
          |  CASE WHEN least(hx, hy) > 0 THEN ${r6("mi / least(hx, hy)")} END AS nmi
-         |FROM agg""".stripMargin
-    }),
+         |FROM agg""".stripMargin),
 
     // Kendall's W: do the 5 event types agree on the user-decile
     // ranking by total value
@@ -3187,8 +3078,6 @@ object StatsQueries {
           sum(col("value").cast("decimal(38,6)")).cast("double")).as("total"))
       Stats.kendallW(cells, "event_type", "bucket", "total")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH cells AS (SELECT event_type AS r, user_id % 10 AS it,
          |    ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
@@ -3208,8 +3097,7 @@ object StatsQueries {
          |SELECT ni AS n_items, m AS n_raters, ${r6("s")} AS s,
          |  CASE WHEN CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) - CAST(ni AS DOUBLE)) - CAST(m AS DOUBLE) * tsum > 0
          |    THEN ${r6("12.0 * s / (CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) - CAST(ni AS DOUBLE)) - CAST(m AS DOUBLE) * tsum)")} END AS w
-         |FROM sagg""".stripMargin
-    }),
+         |FROM sagg""".stripMargin),
 
     // per-class one-vs-rest metrics of the n-gram language-ID against
     // the true lang column
@@ -3218,8 +3106,6 @@ object StatsQueries {
         docs(s, dir).select(col("lang"),
           TextFunctions.langId(col("text")).as("lang_pred")),
         "lang", "lang_pred"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH det AS ($langIdSelectSql),
          |cells AS (SELECT coalesce(d.lang, '(null)') AS t, coalesce(det.lang_pred, '(null)') AS p, CAST(count(*) AS BIGINT) AS n
          |  FROM documents d JOIN det ON d.doc_id = det.doc_id GROUP BY 1, 2),
@@ -3244,16 +3130,13 @@ object StatsQueries {
          |  ${r6("prec")} AS precision, ${r6("rec")} AS recall,
          |  CASE WHEN prec IS NOT NULL AND rec IS NOT NULL AND prec + rec > 0 THEN ${r6("2.0 * prec * rec / (prec + rec)")} END AS f1,
          |  CASE WHEN mden > 0 THEN ${r6("(CAST(tp AS DOUBLE) * CAST(tn AS DOUBLE) - CAST(fp AS DOUBLE) * CAST(fn AS DOUBLE)) / mden")} END AS mcc
-         |FROM r""".stripMargin
-    }),
+         |FROM r""".stripMargin),
 
     // fairness audit of a length-gate "keep" decision across langs,
     // labeled by the " the " ground truth
     QueryDef("q_fair_audit", (s, dir) =>
       Fairness.fairnessAudit(docs(s, dir), "lang",
         col("n_chars") > 800, col("text").contains(" the ")),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH g AS (SELECT coalesce(lang, '(null)') AS "group",
          |    CAST(count(*) AS BIGINT) AS n,
          |    CAST(count(CASE WHEN n_chars > 800 THEN 1 END) AS BIGINT) AS n_selected,
@@ -3273,8 +3156,7 @@ object StatsQueries {
          |  CASE WHEN rsel > 0 THEN ${r6("selection_rate / rsel")} END AS selection_ratio,
          |  ${r6("tpr - rtpr")} AS tpr_gap, ${r6("fpr - rfpr")} AS fpr_gap,
          |  CASE WHEN rsel > 0 THEN selection_rate / rsel < 0.8 END AS four_fifths_flag
-         |FROM rates, ref""".stripMargin
-    }),
+         |FROM rates, ref""".stripMargin),
 
     // U-shaped 40/20/40 attribution, same journey truncation as
     // q_decay_attr
@@ -3282,8 +3164,6 @@ object StatsQueries {
       Attribution.positionAttribution(ev(s, dir), "user_id", "ts",
         "event_type", "event_id", "purchase", endWeight = 0.4),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH rows AS (SELECT user_id AS u, event_type AS ty, ts, event_id,
          |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
          |  FROM events WHERE ts IS NOT NULL),
@@ -3315,8 +3195,6 @@ object StatsQueries {
       Causal.ivWald(peru.withColumn("g", lit("all")), Seq("g"),
         pmod(col("user_id"), lit(2)) === 0, col("__t") === 1L, "y")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH peru AS (SELECT user_id,
          |    max(CASE WHEN event_type = 'purchase' THEN 1 END) AS t,
          |    ${r6("CAST(coalesce(sum(CASE WHEN NOT isnan(value) THEN CAST(value AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE)")} AS y
@@ -3348,16 +3226,13 @@ object StatsQueries {
          |    THEN ${r6("(p1 - p0) / sqrt(pp * (1.0 - pp) * (1.0 / n1 + 1.0 / n0))")} END AS first_stage_z,
          |  ${r6("itt0")} AS itt,
          |  CASE WHEN fs IS NOT NULL AND fs <> 0.0 THEN ${r6("itt0 / fs")} END AS late
-         |FROM x""".stripMargin
-    }),
+         |FROM x""".stripMargin),
 
     // Cramer-von Mises: integrated squared ECDF gap of n_chars,
     // en vs rest, per source — next to the same slice's KS
     QueryDef("q_cvm", (s, dir) =>
       Hypothesis.cvmTest(docs(s, dir), Seq("source"), "n_chars",
         col("lang") === "en"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH v AS (SELECT source, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS a,
          |    CAST(n_chars AS DOUBLE) AS x
          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
@@ -3379,8 +3254,7 @@ object StatsQueries {
          |          CAST(first(na) AS DOUBLE) * CAST(first(nb) AS DOUBLE) /
          |          (CAST(first(na) + first(nb) AS DOUBLE) * CAST(first(na) + first(nb) AS DOUBLE)) AS t0
          |      FROM t GROUP BY 1)
-         |SELECT source, n_a, n_b, ${r6("t0")} AS t FROM m""".stripMargin
-    }),
+         |SELECT source, n_a, n_b, ${r6("t0")} AS t FROM m""".stripMargin),
 
     // token-weighted doc-length quantiles per lang: where the TOKENS
     // live, not where the docs are
@@ -3389,8 +3263,6 @@ object StatsQueries {
         docs(s, dir).withColumn("n_words",
           size(TextFunctions.wordTokens(col("text"))).cast("double")),
         Seq("lang"), "n_chars", "n_words", Seq(0.5, 0.9, 0.99)),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v,
          |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS DOUBLE) AS w
          |  FROM documents WHERE n_chars IS NOT NULL),
@@ -3402,8 +3274,7 @@ object StatsQueries {
          |pr AS (SELECT lang, p.p AS p,
          |    min(CASE WHEN cw >= p.p * tw THEN v END) AS q, max(tw) AS twx
          |  FROM cum, (VALUES (0.5), (0.9), (0.99)) p(p) GROUP BY 1, 2)
-         |SELECT lang, CAST(p AS DOUBLE) AS p, q, ${r6("twx")} AS w_total FROM pr""".stripMargin
-    }),
+         |SELECT lang, CAST(p AS DOUBLE) AS p, q, ${r6("twx")} AS w_total FROM pr""".stripMargin),
 
     // Krippendorff's alpha over an incomplete rating design: unit =
     // user decile, category = an event's value tercile, every event a
@@ -3416,8 +3287,6 @@ object StatsQueries {
             when(col("value") < 40.0, "lo")
               .when(col("value") < 70.0, "mid").otherwise("hi")),
         Seq("event_type"), "unit", "cat"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH r AS (SELECT event_type AS g, user_id % 10 AS u,
          |    CASE WHEN CAST(value AS DOUBLE) < 40.0 THEN 'lo'
          |         WHEN CAST(value AS DOUBLE) < 70.0 THEN 'mid' ELSE 'hi' END AS c
@@ -3438,8 +3307,7 @@ object StatsQueries {
          |  FROM ds JOIN de USING (g))
          |SELECT event_type, n_units, n_pairable, ${r6("d_o0")} AS d_o, ${r6("d_e0")} AS d_e,
          |  CASE WHEN d_e0 > 0 THEN ${r6("1.0 - d_o0 / d_e0")} END AS alpha
-         |FROM f""".stripMargin
-    }),
+         |FROM f""".stripMargin),
 
     // negative-binomial overdispersion fit of per-user event counts
     QueryDef("q_negbin", (s, dir) => {
@@ -3447,8 +3315,6 @@ object StatsQueries {
         .agg(count(lit(1)).cast("double").as("k"))
       Stats.negativeBinomialFit(counts, Seq("event_type"), "k")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH k AS (SELECT user_id, event_type, CAST(count(*) AS DOUBLE) AS k FROM events GROUP BY 1, 2),
          |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
          |    CAST(coalesce(sum(CAST(${r6("k")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s,
@@ -3461,14 +3327,11 @@ object StatsQueries {
          |SELECT event_type, n, ${r6("mn")} AS mean, ${r6("vr")} AS variance,
          |  ${r6("r0")} AS r,
          |  CASE WHEN r0 IS NOT NULL THEN ${r6("r0 / (r0 + mn)")} END AS p
-         |FROM x""".stripMargin
-    }),
+         |FROM x""".stripMargin),
 
     // log-normal fit of doc lengths per lang with implied median/p95
     QueryDef("q_lognormal", (s, dir) =>
       Stats.logNormalFit(docs(s, dir), Seq("lang"), "n_chars"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
          |g AS (SELECT lang, CAST(count(CASE WHEN v > 0 THEN 1 END) AS BIGINT) AS n,
@@ -3484,14 +3347,12 @@ object StatsQueries {
          |  CASE WHEN n > 0 THEN ${r6("sd")} END AS sigma,
          |  CASE WHEN n > 0 THEN ${r6("exp(mu)")} END AS median_fit,
          |  CASE WHEN n > 0 THEN ${r6("exp(mu + 1.6449 * sd)")} END AS p95_fit
-         |FROM m""".stripMargin
-    }),
+         |FROM m""".stripMargin),
 
     // Poisson-bootstrap band for the per-lang median doc length
     QueryDef("q_boot_median", (s, dir) =>
       Bootstrap.bootstrapMedianCI(docs(s, dir), Seq("lang"), "n_chars",
         "doc_id", replicas = 16, seed = "bm"),
-      {
       s"""WITH base AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v, CAST(doc_id AS VARCHAR) AS id
          |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
          |ov AS (SELECT lang, v, CAST(count(*) AS BIGINT) AS c FROM base GROUP BY 1, 2),
@@ -3529,8 +3390,7 @@ object StatsQueries {
          |  ms[CASE WHEN k >= 3 THEN 2 ELSE 1 END] AS boot_lo,
          |  ms[CAST(CASE WHEN k >= 3 THEN k - 1 ELSE k END AS INT)] AS boot_hi,
          |  k AS k_effective
-         |FROM obs JOIN band USING (lang)""".stripMargin
-    }),
+         |FROM obs JOIN band USING (lang)""".stripMargin),
 
     // SRM sweep: per-source split-health chi2 -> p -> BH over sources
     QueryDef("q_srm_sweep", { (s, dir) =>
@@ -3548,7 +3408,6 @@ object StatsQueries {
           graft.functions.Portable.r6(col("q")).as("q"), col("reject"))
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
         s"${math.sqrt(2.0 * math.Pi)} * " +
         "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
@@ -3588,8 +3447,6 @@ object StatsQueries {
     QueryDef("q_gumbel", (s, dir) =>
       Stats.gumbelFit(ev(s, dir), Seq("event_type"), "ts", "value",
         blockUs = 86400000000L, returnQ = 0.99),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT event_type, epoch_us(ts) - epoch_us(ts) % 86400000000 AS blk,
          |    max(CAST(value AS DOUBLE)) AS mx
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))
@@ -3608,14 +3465,11 @@ object StatsQueries {
          |  CASE WHEN n_blocks >= 2 THEN ${r6("mu")} END AS mu,
          |  CASE WHEN n_blocks >= 2 THEN ${r6("beta")} END AS beta,
          |  CASE WHEN n_blocks >= 2 THEN ${r6("mu - beta * ln(-ln(0.99))")} END AS q_fit
-         |FROM f""".stripMargin
-    }),
+         |FROM f""".stripMargin),
 
     // L-moments of doc length per lang: robust scale/shape ratios
     QueryDef("q_lmoments", (s, dir) =>
       Stats.lMoments(docs(s, dir), Seq("lang"), "n_chars"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents
          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
          |rk AS (SELECT lang, v, CAST(row_number() OVER (PARTITION BY lang ORDER BY v) AS BIGINT) AS r FROM b),
@@ -3633,15 +3487,12 @@ object StatsQueries {
          |SELECT lang, n, ${r6("l1")} AS l1, ${r6("l2")} AS l2,
          |  CASE WHEN l1 <> 0.0 THEN ${r6("l2 / l1")} END AS l_cv,
          |  CASE WHEN l2 <> 0.0 THEN ${r6("l3 / l2")} END AS l_skew
-         |FROM l""".stripMargin
-    }),
+         |FROM l""".stripMargin),
 
     // Theil inequality of characters across docs, decomposed
     // between/within sources
     QueryDef("q_theil", (s, dir) =>
       Stats.theilDecomposition(docs(s, dir), "source", "n_chars"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH base AS (SELECT source AS g, CAST(n_chars AS DOUBLE) AS v FROM documents
          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
          |tot AS (SELECT CAST(count(CASE WHEN v > 0 THEN 1 END) AS BIGINT) AS n,
@@ -3661,8 +3512,7 @@ object StatsQueries {
          |  ${r6("CAST(coalesce(sum(CAST(" + r6("tg") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_total,
          |  ${r6("CAST(coalesce(sum(CAST(" + r6("btw") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_between,
          |  ${r6("CAST(coalesce(sum(CAST(" + r6("tg") + " AS DECIMAL(38,6))), 0) AS DOUBLE) - CAST(coalesce(sum(CAST(" + r6("btw") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_within
-         |FROM terms GROUP BY n, nd""".stripMargin
-    }),
+         |FROM terms GROUP BY n, nd""".stripMargin),
 
     // Cochran-Armitage: does the " the " rate climb with the doc-length
     // decile, per lang
@@ -3672,7 +3522,6 @@ object StatsQueries {
           least(lit(9L), floor(col("n_chars") / 150L)).cast("double")),
         Seq("lang"), "dose", col("text").contains(" the ")),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
         s"${math.sqrt(2.0 * math.Pi)} * " +
         "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
@@ -3775,9 +3624,6 @@ object StatsQueries {
         size(split(col("text"), "\n")).cast("double").as("n_lines"))
       Stats.partialCorrelation(feats, "n_chars", "n_words", "n_lines")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
       s"""WITH f AS (SELECT CAST(n_chars AS DOUBLE) AS x,
          |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), t -> t <> '')) AS DOUBLE) AS y,
          |    CAST(len(string_split(text, chr(10))) AS DOUBLE) AS z
@@ -3800,14 +3646,12 @@ object StatsQueries {
          |SELECT n, ${r6("rxy")} AS r_xy, ${r6("rxz")} AS r_xz, ${r6("ryz")} AS r_yz,
          |  CASE WHEN (1.0 - rxz * rxz) * (1.0 - ryz * ryz) > 0
          |    THEN ${r6("(rxy - rxz * ryz) / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz))")} END AS r_xy_given_z
-         |FROM r""".stripMargin
-    }),
+         |FROM r""".stripMargin),
 
     // Wald-Wolfowitz runs test: do per-type value sequences streak
     QueryDef("q_runs", (s, dir) =>
       Hypothesis.runsTest(ev(s, dir), Seq("event_type"), "ts", "event_id", "value"),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
         s"${math.sqrt(2.0 * math.Pi)} * " +
         "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
@@ -3855,8 +3699,6 @@ object StatsQueries {
         docs(s, dir).withColumn("score",
           least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
         Seq("lang"), "score", col("text").contains(" the "), "doc_id", nBins = 10),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p, doc_id
          |  FROM documents WHERE n_chars IS NOT NULL),
@@ -3876,8 +3718,7 @@ object StatsQueries {
          |SELECT lang, CAST(bin AS BIGINT) AS bin, n, n_pos,
          |  CASE WHEN tp > 0 THEN ${r6("CAST(cp AS DOUBLE) / CAST(tp AS DOUBLE)")} END AS cum_capture,
          |  CASE WHEN tp > 0 THEN ${r6("(CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)) / (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE))")} END AS cum_lift
-         |FROM c""".stripMargin
-    }),
+         |FROM c""".stripMargin),
 
     // Friedman: do the event types rank differently across user-decile
     // blocks (the q_kendall_w cells, tested instead of agreed)
@@ -3889,9 +3730,6 @@ object StatsQueries {
         .withColumn("g", lit("all"))
       Hypothesis.friedman(cells, Seq("g"), "bucket", "event_type", "total")
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
       s"""WITH cells AS (SELECT event_type AS tr, user_id % 10 AS blk,
          |    ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
@@ -3906,8 +3744,7 @@ object StatsQueries {
          |SELECT 'all' AS g, nb AS n_blocks, k AS k_treatments,
          |  CASE WHEN k >= 2 AND nb >= 2 THEN ${r6("12.0 / (CAST(nb AS DOUBLE) * CAST(k AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)) * sr2 - 3.0 * CAST(nb AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)")} END AS q,
          |  k - 1 AS df
-         |FROM shape, agg""".stripMargin
-    }),
+         |FROM shape, agg""".stripMargin),
 
     // Cochran's Q: do the event types "flag" the same user deciles
     // (hit = cell mean value above 50)
@@ -3920,9 +3757,6 @@ object StatsQueries {
         .withColumn("g", lit("all"))
       Hypothesis.cochranQ(cells, Seq("g"), "bucket", "event_type", col("mv") > 50.0)
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
       s"""WITH cells AS (SELECT event_type AS tr, user_id % 10 AS s,
          |    CASE WHEN ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} / CAST(count(*) AS DOUBLE) > 50.0 THEN 1 ELSE 0 END AS h
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
@@ -3936,7 +3770,6 @@ object StatsQueries {
          |  CASE WHEN CAST(k AS DOUBLE) * CAST(t AS DOUBLE) - sr2 > 0
          |    THEN ${r6("(CAST(k AS DOUBLE) - 1.0) * (CAST(k AS DOUBLE) * sc2 - CAST(t AS DOUBLE) * CAST(t AS DOUBLE)) / (CAST(k AS DOUBLE) * CAST(t AS DOUBLE) - sr2)")} END AS q,
          |  k - 1 AS df
-         |FROM shape, cs, rr""".stripMargin
-    })
+         |FROM shape, cs, rr""".stripMargin)
   )
 }

@@ -717,9 +717,6 @@ object TemporalQueries {
     // journey predictability: entropy rate of the first-order chain
     QueryDef("q_entropy_rate", (s, dir) =>
       Transitions.entropyRate(ev(s, dir), "user_id", "ts", "event_type", "event_id"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH sq AS (SELECT event_type AS prev,
          |    lead(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS nxt
          |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
@@ -739,8 +736,7 @@ object TemporalQueries {
          |  CASE WHEN n_states > 0 AND ${r6("ln(CAST(n_states AS DOUBLE))")} > 0 THEN
          |    ${r6(s"1.0 - entropy_rate / (${r6("ln(CAST(n_states AS DOUBLE))")})")}
          |  END AS predictability
-         |FROM er""".stripMargin
-    }),
+         |FROM er""".stripMargin),
 
     // consecutive 2/3-step event-sequence motifs with per-user support
     QueryDef("q_seq_patterns", (s, dir) =>
@@ -765,8 +761,6 @@ object TemporalQueries {
         .select(col("key").as("event_type"), col("n"),
           col("f_trend"), col("f_seas")),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       val rr = r6("de.detr - se.seasonal")
       val ss = r6("se.seasonal + (de.detr - se.seasonal)")
       val tt = r6("de.trend + (de.detr - se.seasonal)")
@@ -794,8 +788,6 @@ object TemporalQueries {
     // resurrected, silences churn into the next week; quick ratio
     QueryDef("q_growth", (s, dir) =>
       Retention.growthAccounting(ev(s, dir), "user_id", "ts", WeekUs),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH a AS (SELECT DISTINCT user_id AS u, epoch_us(ts) // $WeekUs AS p
          |  FROM events WHERE ts IS NOT NULL),
          |c AS (SELECT u, p, min(p) OVER (PARTITION BY u) AS f,
@@ -816,14 +808,11 @@ object TemporalQueries {
          |  CASE WHEN count(CASE WHEN s = 'churned' THEN 1 END) > 0 THEN
          |    ${r6("CAST(count(CASE WHEN s = 'new' THEN 1 END) + count(CASE WHEN s = 'resurrected' THEN 1 END) AS DOUBLE) / CAST(count(CASE WHEN s = 'churned' THEN 1 END) AS DOUBLE)")}
          |  END AS quick_ratio
-         |FROM st GROUP BY 1""".stripMargin
-    }),
+         |FROM st GROUP BY 1""".stripMargin),
 
     // DAU / trailing-7-day actives / stickiness per day
     QueryDef("q_dau_wau", (s, dir) =>
       Retention.rollingActives(ev(s, dir), "user_id", "ts"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH a AS (SELECT DISTINCT user_id AS key, epoch_us(ts) // 86400000000 AS day
          |  FROM events WHERE ts IS NOT NULL),
          |d AS (SELECT day, CAST(count(*) AS BIGINT) AS dau FROM a GROUP BY 1),
@@ -831,14 +820,11 @@ object TemporalQueries {
          |w AS (SELECT wday, CAST(count(*) AS BIGINT) AS wau FROM c GROUP BY 1)
          |SELECT d.day, d.dau, w.wau,
          |  ${r6("CAST(d.dau AS DOUBLE) / CAST(w.wau AS DOUBLE)")} AS stickiness
-         |FROM d JOIN w ON w.wday = d.day""".stripMargin
-    }),
+         |FROM d JOIN w ON w.wday = d.day""".stripMargin),
 
     // cohort LTV: cumulative value per cohort member by cohort age
     QueryDef("q_ltv", (s, dir) =>
       Retention.ltvCurve(ev(s, dir), "user_id", "ts", "value"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT user_id AS u, epoch_us(date_trunc('week', ts)) AS wk,
          |    coalesce(CAST(value AS DOUBLE), 0.0) AS v
          |  FROM events WHERE ts IS NOT NULL),
@@ -856,15 +842,12 @@ object TemporalQueries {
          |SELECT cw AS cohort_week, CAST(age_weeks AS BIGINT) AS age_weeks, n_users,
          |  n_active, ${r6("rev")} AS revenue,
          |  CASE WHEN n_users > 0 THEN ${r6("crev / CAST(n_users AS DOUBLE)")} END AS cum_revenue_per_user
-         |FROM cum JOIN sz USING (cw)""".stripMargin
-    }),
+         |FROM cum JOIN sz USING (cw)""".stripMargin),
 
     // SAX words: each event type's value series as an 8-letter shape
     QueryDef("q_sax", (s, dir) =>
       Trend.sax(ev(s, dir), Seq("event_type"), "ts", "event_id", "value",
         nSegments = 8),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
          |mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
@@ -888,8 +871,7 @@ object TemporalQueries {
          |  FROM paa)
          |SELECT sym.g AS event_type, mom.n AS n,
          |  string_agg(sy, '' ORDER BY seg) AS sax
-         |FROM sym JOIN mom ON mom.g = sym.g GROUP BY sym.g, mom.n""".stripMargin
-    }),
+         |FROM sym JOIN mom ON mom.g = sym.g GROUP BY sym.g, mom.n""".stripMargin),
 
     // trailing 5-row rolling median of event values per user
     QueryDef("q_roll_median", (s, dir) =>
@@ -898,8 +880,6 @@ object TemporalQueries {
         Seq("user_id"), "t", "event_id", "value", k = 5)
         .select(col("user_id"), col("t"), col("v"), col("n_window"),
           col("roll_median")),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT user_id, epoch_us(ts) AS t, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
          |w AS (SELECT user_id, t, v,
@@ -908,8 +888,7 @@ object TemporalQueries {
          |  FROM b)
          |SELECT user_id, t, v, CAST(len(win) AS BIGINT) AS n_window,
          |  ${r6("(win[(len(win) + 1) // 2] + win[len(win) // 2 + 1]) / 2.0")} AS roll_median
-         |FROM w""".stripMargin
-    }),
+         |FROM w""".stripMargin),
 
     // pairwise DTW over the event types' 8-segment PAA shapes
     QueryDef("q_dtw", { (s, dir) =>
@@ -923,7 +902,6 @@ object TemporalQueries {
             Trend.dtwDistance(col("a.paa"), col("b.paa"))).as("dtw"))
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
          |mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
@@ -960,8 +938,6 @@ object TemporalQueries {
     QueryDef("q_markov_eval", (s, dir) =>
       Transitions.markovBacktest(ev(s, dir), "user_id", "ts",
         "event_type", "event_id", pmod(col("user_id"), lit(2)) === 0),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH bg AS (SELECT event_type AS prev,
          |    lead(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS next,
          |    user_id % 2 = 0 AS tr
@@ -981,8 +957,7 @@ object TemporalQueries {
          |    THEN ${r6("CAST(coalesce(te.nt, 0) AS DOUBLE) / CAST(tes.n_test AS DOUBLE)")} END AS accuracy
          |FROM model JOIN tt USING (prev)
          |LEFT JOIN tes USING (prev)
-         |LEFT JOIN te ON te.prev = model.prev AND te.next = model.predicted""".stripMargin
-    }),
+         |LEFT JOIN te ON te.prev = model.prev AND te.next = model.predicted""".stripMargin),
 
     // strict local maxima of per-user event values, >= 20 above the
     // trailing 5-row median baseline
@@ -990,8 +965,6 @@ object TemporalQueries {
       Rolling.detectPeaks(
         ev(s, dir).withColumn("tu", unix_micros(col("ts"))),
         Seq("user_id"), "tu", "event_id", "value", k = 5, minProminence = 20.0),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH b AS (SELECT user_id, epoch_us(ts) AS t, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
          |w AS (SELECT user_id, t, v,
@@ -1005,16 +978,12 @@ object TemporalQueries {
          |  FROM w)
          |SELECT user_id, t, v, ${r6("bl")} AS baseline, ${r6("v - bl")} AS prominence
          |FROM med
-         |WHERE pv IS NOT NULL AND nv IS NOT NULL AND v > pv AND v > nv AND v - bl >= 20.0""".stripMargin
-    }),
+         |WHERE pv IS NOT NULL AND nv IS NOT NULL AND v > pv AND v > nv AND v - bl >= 20.0""".stripMargin),
 
     // R/S Hurst exponent of per-type value series
     QueryDef("q_hurst", (s, dir) =>
       Trend.hurstExponent(ev(s, dir), Seq("event_type"), "ts", "event_id",
         "value", blockSizes = Seq(8, 16, 32, 64)),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
       s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
          |rk AS (SELECT g, ts, event_id, v,
@@ -1040,7 +1009,6 @@ object TemporalQueries {
          |SELECT tot.g AS event_type, n, k_sizes,
          |  CASE WHEN k_sizes >= 2 AND CAST(k_sizes AS DOUBLE) * qx - sx * sx > 0
          |    THEN ${r6("(CAST(k_sizes AS DOUBLE) * pxy - sx * sy) / (CAST(k_sizes AS DOUBLE) * qx - sx * sx)")} END AS hurst
-         |FROM tot JOIN fit ON tot.g = fit.g""".stripMargin
-    })
+         |FROM tot JOIN fit ON tot.g = fit.g""".stripMargin)
   )
 }

@@ -110,7 +110,6 @@ object TextQueries {
     },
       {
       val stop = TextFunctions.GopherStopwords.map(w => s"'$w'").mkString("[", ",", "]")
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH t AS (SELECT doc_id, text,
          |  list_filter(string_split_regex(text, '\\s+'), x -> x<>'') AS words,
          |  list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l<>'') AS lines,
@@ -1345,8 +1344,6 @@ object TextQueries {
     // word2vec negative-sampling table: prob ~ count^0.75 + cumulative
     // sampling ranges over the vocabulary rank
     QueryDef("q_sampling_table", (s, dir) => WordVocab.samplingTable(docs(s, dir), "text"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
          |  FROM documents),
          |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1),
@@ -1355,8 +1352,7 @@ object TextQueries {
          |pr AS (SELECT word, n, weight, ${r6("weight / t.tw")} AS prob FROM wt, tot t),
          |cm AS (SELECT *, CAST(sum(CAST(prob AS DECIMAL(38,6)))
          |    OVER (ORDER BY n DESC, word) AS DOUBLE) AS cum_hi FROM pr)
-         |SELECT word, n, weight, prob, ${r6("cum_hi - prob")} AS cum_lo, cum_hi FROM cm""".stripMargin
-    }),
+         |SELECT word, n, weight, prob, ${r6("cum_hi - prob")} AS cum_lo, cum_hi FROM cm""".stripMargin),
 
     // KWIC concordance: every 'spark' occurrence with +/-3 words of
     // context, sliced row-locally from the carried token array
@@ -1377,9 +1373,6 @@ object TextQueries {
     QueryDef("q_heldout_ppl", (s, dir) =>
       graft.text.LmEval.heldoutUnigramPerplexity(docs(s, dir), "doc_id", "text",
         smoothing = 1.0, trainPct = 70, seed = "lm42"),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH tk AS (SELECT ${h32("concat('lm42', '|', CAST(doc_id AS VARCHAR))")} % 100 < 70 AS train,
          |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
          |  FROM documents),
@@ -1394,16 +1387,13 @@ object TextQueries {
          |    ${r6(s"coalesce(${dsum("nll")}, 0.0) / CAST(count(*) AS DOUBLE)")} AS avg_nll
          |  FROM sc)
          |SELECT n_train_tokens, vocab_size, n_test_tokens, n_oov, avg_nll,
-         |  ${r6("exp(avg_nll)")} AS ppl FROM ag""".stripMargin
-    }),
+         |  ${r6("exp(avg_nll)")} AS ppl FROM ag""".stripMargin),
 
     // Heaps'-law vocabulary-growth fit over id-ordered checkpoints
     QueryDef("q_heaps", (s, dir) =>
       WordVocab.heapsLaw(docs(s, dir), "doc_id", "text",
         checkpoints = Seq(16L, 32L, 64L, 128L, 256L, 512L)),
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       val cps = Seq(16L, 32L, 64L, 128L, 256L, 512L)
       val melt = cps.map(c =>
         s"SELECT (SELECT coalesce(sum(CASE WHEN id < $c THEN nt END), 0) FROM dt) AS nn, " +
@@ -1436,8 +1426,6 @@ object TextQueries {
     // glue spreads (~Poisson)
     QueryDef("q_term_burstiness", (s, dir) =>
       graft.text.Keywords.termBurstiness(docs(s, dir), "doc_id", "text", minDf = 25L),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH tk AS (SELECT doc_id,
          |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
          |  FROM documents),
@@ -1450,16 +1438,13 @@ object TextQueries {
          |  CASE WHEN CAST(cf AS DOUBLE) / nd.n > 0 THEN
          |    ${r6("(CAST(sq AS DOUBLE) / nd.n - (CAST(cf AS DOUBLE) / nd.n) * (CAST(cf AS DOUBLE) / nd.n)) / (CAST(cf AS DOUBLE) / nd.n)")}
          |  END AS vmr
-         |FROM tm, nd""".stripMargin
-    }),
+         |FROM tm, nd""".stripMargin),
 
     // BM25 + min-span proximity boost: same probe terms as q_bm25,
     // co-occurring terms get lambda/(1+span) on top
     QueryDef("q_bm25_prox", (s, dir) =>
       Bm25.scoreWithProximity(docs(s, dir), Seq("spark", "hash", "merge"),
         lambda = 2.0),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
          |t AS (SELECT id, unnest(toks) AS term FROM tok),
          |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
@@ -1477,8 +1462,7 @@ object TextQueries {
          |  WHERE pt IS NOT NULL AND pt <> term GROUP BY 1)
          |SELECT bs.id, ${r6("bs.raw")} AS bm25, sp.min_span,
          |  ${r6("CASE WHEN sp.min_span IS NOT NULL THEN bs.raw + CAST(2.0 AS DOUBLE) / (CAST(1.0 AS DOUBLE) + CAST(sp.min_span AS DOUBLE)) ELSE bs.raw END")} AS bm25_prox
-         |FROM bs LEFT JOIN sp ON bs.id = sp.id""".stripMargin
-    }),
+         |FROM bs LEFT JOIN sp ON bs.id = sp.id""".stripMargin),
 
     // S-stemmer vocabulary profile: per-stem surface-form and token
     // counts (the synthetic vocab has no plural pairs, so collapses are
@@ -1559,9 +1543,6 @@ object TextQueries {
     // RM1 pseudo-relevance expansion terms off the spark/hash/merge probe
     QueryDef("q_prf_terms", (s, dir) =>
       Bm25.expansionTerms(docs(s, dir), Seq("spark", "hash", "merge")),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def dsum(e: String) = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
       s"""WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
          |t AS (SELECT id, unnest(toks) AS term FROM tok),
          |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
@@ -1579,14 +1560,11 @@ object TextQueries {
          |w AS (SELECT term, CAST(count(*) AS BIGINT) AS n_docs,
          |    ${r6(s"(${dsum(r6("CAST(tf AS DOUBLE) / dl"))})")} AS weight
          |  FROM f GROUP BY 1)
-         |SELECT term, n_docs, weight FROM w ORDER BY weight DESC, term LIMIT 10""".stripMargin
-    }),
+         |SELECT term, n_docs, weight FROM w ORDER BY weight DESC, term LIMIT 10""".stripMargin),
 
     // Yule's K repetitiveness constant per source
     QueryDef("q_yule_k", (s, dir) =>
       graft.text.Lexical.yuleK(docs(s, dir), Seq("source")),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w FROM documents),
          |vocab AS (SELECT source, w, CAST(count(*) AS BIGINT) AS m FROM t GROUP BY 1, 2),
          |spec AS (SELECT source, m, CAST(count(*) AS BIGINT) AS vm FROM vocab GROUP BY 1, 2),
@@ -1595,8 +1573,7 @@ object TextQueries {
          |  FROM spec GROUP BY 1)
          |SELECT source, n_tokens, n_types,
          |  CASE WHEN n_tokens > 0 THEN ${r6("10000.0 * CAST(s2 - n_tokens AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * CAST(n_tokens AS DOUBLE))")} END AS yule_k
-         |FROM agg""".stripMargin
-    }),
+         |FROM agg""".stripMargin),
 
     // Luhn-verified card-number candidates over deterministically
     // planted digit runs (the corpus itself is digit-free)
@@ -1640,8 +1617,6 @@ object TextQueries {
       graft.text.RetrievalEval.errAtK(ranking, rel, k = 10)
         .select(col("query_id"), col("n_relevant"), col("err_at_k").as("err_at_10"))
     },
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       s"""WITH qt(query_id, term) AS (VALUES
          |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
          |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
@@ -1672,8 +1647,7 @@ object TextQueries {
          |SELECT q.query_id, coalesce(n_relevant, CAST(0 AS BIGINT)) AS n_relevant,
          |  ${r6("coalesce(err, 0.0)")} AS err_at_10
          |FROM (SELECT DISTINCT query_id FROM b) q
-         |LEFT JOIN eq USING (query_id) LEFT JOIN nrel USING (query_id)""".stripMargin
-    }),
+         |LEFT JOIN eq USING (query_id) LEFT JOIN nrel USING (query_id)""".stripMargin),
 
     // top-20 term league-table churn between the doc-parity halves:
     // RBO (top-weighted) next to plain set Jaccard
@@ -1701,7 +1675,6 @@ object TextQueries {
             (col("n_a") + col("n_b") - col("__inter")).cast("double")).as("jaccard"))
     },
       {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
       val wts = (1 to 20).map(d => s"($d, CAST(${math.pow(0.9, d)} AS DOUBLE))")
       s"""WITH t AS (SELECT doc_id % 2 = 0 AS h,
          |    unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term
@@ -1736,9 +1709,6 @@ object TextQueries {
     // Burrows' Delta stylometric distance between sources (top 50 words)
     QueryDef("q_burrows", (s, dir) =>
       graft.text.Lexical.burrowsDelta(docs(s, dir), "source", nWords = 50),
-      {
-      def r6(e: String) = graft.functions.Portable.r6Sql(e)
-      def ds(e: String) = s"CAST(coalesce(sum(CAST(${r6(e)} AS DECIMAL(38,6))), 0) AS DOUBLE)"
       s"""WITH toks AS (SELECT source AS s,
          |    unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS w
          |  FROM documents),
@@ -1760,7 +1730,6 @@ object TextQueries {
          |SELECT a.s AS source_a, b.s AS source_b, CAST(count(*) AS BIGINT) AS n_words,
          |  ${r6(s"(${ds("abs(a.z - b.z)")}) / CAST(count(*) AS DOUBLE)")} AS delta
          |FROM z a JOIN z b ON a.w = b.w AND a.s < b.s
-         |GROUP BY 1, 2""".stripMargin
-    })
+         |GROUP BY 1, 2""".stripMargin)
   )
 }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import graft.text.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -116,7 +117,7 @@ object Dedup {
         sum(col("__e") - col("__s") + 1).cast("long").as("dup_tokens"),
         first(col("n_tokens")).as("n_tokens"))
       .withColumn("dup_frac",
-        graft.functions.Portable.r6(col("dup_tokens").cast("double") / col("n_tokens").cast("double")))
+        r6(col("dup_tokens").cast("double") / col("n_tokens").cast("double")))
   }
 
   /** Universal-hash family params (a_j, b_j) for minhash: h_j(x) =
@@ -840,7 +841,6 @@ object Dedup {
       textCol: String,
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, s"bucketWidth must be positive, got $bucketWidth")
-    val r6 = graft.functions.Portable.r6 _
     val fp = docs.select(
       col(orderCol).cast("long").as("__o"),
       graft.text.TextFunctions.rollingFingerprint(col(textCol)).as("__fp"))

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.functions.Portable.dsum
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -76,7 +77,7 @@ object LshTuning {
       .groupBy("bin")
       .agg(
         count(lit(1)).as("n_pairs"),
-        sum(col("__est").cast("decimal(38,6)")).cast("double").as("__se"),
+        dsum(col("__est")).as("__se"),
         sum(col("__c")).as("__nc"))
     val s = (col("bin").cast("double") + 0.5) / nBins
     val sr = Seq.fill(rows)(s).reduce(_ * _)

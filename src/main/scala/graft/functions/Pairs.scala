@@ -21,9 +21,9 @@ object Pairs {
     * size the caller caps, never on corpus-sized data.
     *
     * Materializes the FULL O(m²) pair array per bucket row before the
-    * caller's explode — kept as the reference semantics the streaming
-    * [[pairs]] generator is spec-pinned against; hot paths use
-    * [[pairs]], and fat payloads (vectors) use [[explodeOrderedPairs]].
+    * caller's explode — kept only as the reference semantics the
+    * streaming [[pairs]] generator is spec-pinned against. Callers use
+    * [[pairs]], which never builds that array.
     */
   def orderedPairs(xs: Column, aName: String, bName: String): Column =
     flatten(transform(xs, (x, i) =>
@@ -40,19 +40,6 @@ object Pairs {
     */
   def pairs(df: DataFrame, xs: Column, aName: String, bName: String, keep: Seq[Column] = Nil): DataFrame =
     df.select(keep :+ Bridge.column(OrderedPairsGen(Bridge.expression(xs))).as(Seq(aName, bName)): _*)
-
-  /** The same ordered pair set as [[orderedPairs]], exploded in TWO
-    * stages — elements first, then each element's tail slice — so peak
-    * memory per in-flight row is one input array, never the O(m²) pair
-    * array. With vector payloads the one-shot flatten is a memory cliff
-    * (a 2,500-member × 64-dim cluster builds a ~1.6 GiB single array and
-    * OOMs an 8 GiB heap); this form holds ~one array copy per row.
-    * Output columns: (aName, bName), each an element of `arrayCol`.
-    */
-  def explodeOrderedPairs(df: DataFrame, arrayCol: String, aName: String, bName: String): DataFrame =
-    df.select(col(arrayCol).as("__xs"), posexplode(col(arrayCol)).as(Seq("__i", aName)))
-      .select(col(aName),
-        explode(expr("slice(__xs, __i + 2, size(__xs) - __i - 1)")).as(bName))
 }
 
 /** Streaming ordered-pair generator: for an array column xs emits one row

@@ -3,7 +3,13 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Cross-engine-portable numeric helpers for oracle-compared outputs. */
+/** Cross-engine-portable numeric helpers for oracle-compared outputs.
+  *
+  * This is the one home of the convention: Spark code imports
+  * `Portable.{dsum, r6}`, oracle SQL uses [[graft.catalog.Shared]]'s
+  * `dsum`/`r6` (which forward to [[dsumSql]]/[[r6Sql]]), and no other
+  * file spells the convention out. `PortableSpec` fails on a local copy.
+  */
 object Portable {
 
   /** Round to 6 decimals the PORTABLE way: `floor(x·10⁶ + 0.5) / 10⁶`,
@@ -27,4 +33,19 @@ object Portable {
 
   /** The DuckDB rendering of [[r6]] — keep the two in lockstep. */
   def r6Sql(e: String): String = s"floor(($e) * 1000000 + 0.5) / 1000000"
+
+  /** Deterministic sum: the values go through DECIMAL(38,6), whose
+    * addition is exact and associative, so the result is the same double
+    * for any row order, partitioning or engine (a DOUBLE `sum` is not).
+    * NULL on no rows, like `sum`. Inputs carry 6 decimals into the sum;
+    * sum [[r6]]-rounded values (`dsum(r6(e))`) when the oracle does.
+    */
+  def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
+
+  /** [[dsum]] that gives 0.0 instead of NULL when no row contributes. */
+  def dsum0(c: Column): Column =
+    coalesce(sum(c.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
+
+  /** The DuckDB rendering of [[dsum]] — keep the two in lockstep. */
+  def dsumSql(e: String): String = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum0, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,6 @@ object Anova {
 
   private def okCol(c: Column): Column = c.isNotNull && !isnan(c)
 
-  private def dsum(e: Column): Column =
-    coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
 
   /** Shared tail: (by..., __arm, __x) rows → per-slice ANOVA frame
     * `(by..., n, k_arms, ss_between, ss_within, f)`. `f` is NULL when
@@ -47,8 +45,8 @@ object Anova {
       .groupBy((byCols :+ col("__arm")): _*)
       .agg(
         count(lit(1)).as("__na"),
-        dsum(col("__x")).as("__sa"),
-        dsum(col("__x") * col("__x")).as("__sxxa"))
+        dsum0(col("__x")).as("__sa"),
+        dsum0(col("__x") * col("__x")).as("__sxxa"))
     // S_a²/n_a is the one inexact double — r6 before the DECIMAL sum so
     // the cross-arm reduction is order-free and engine-portable
     val explained = col("__sa") * col("__sa") / col("__na").cast("double")
@@ -57,9 +55,9 @@ object Anova {
       .agg(
         sum(col("__na")).as("n"),
         count(lit(1)).as("k_arms"),
-        dsum(col("__sa")).as("__s"),
-        dsum(col("__sxxa")).as("__sxx"),
-        dsum(Portable.r6(explained)).as("__expl"))
+        dsum0(col("__sa")).as("__s"),
+        dsum0(col("__sxxa")).as("__sxx"),
+        dsum0(r6(explained)).as("__expl"))
     val nD = col("n").cast("double")
     val kD = col("k_arms").cast("double")
     val ssb = col("__expl") - col("__s") * col("__s") / nD
@@ -114,7 +112,7 @@ object Anova {
     val cells = base
       .join(broadcast(meds), by :+ "__arm")
       .select((by.map(col) :+ col("__arm") :+
-        Portable.r6(abs(col("__x0") - col("__med"))).as("__x")): _*)
+        r6(abs(col("__x0") - col("__med"))).as("__x")): _*)
     fFromCells(cells, by)
   }
 }

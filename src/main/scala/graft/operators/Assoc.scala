@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * per-entity `collect_set`, which dedups map-side (the distinct IS the
   * set-union partial agg, no separate distinct pass). Each entity's
   * item set is vocabulary-bounded (≤ distinct items, NOT event count),
-  * so the in-group pair explosion via [[Pairs.orderedPairs]] is
+  * so the in-group pair explosion via [[Pairs.pairs]] is
   * |vocab|² worst-case per entity and typically tiny; pair counts then
   * partial-aggregate to a ≤ vocab² frame. Item marginals and the
   * entity total derive from the materialized entity-set frame — the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,6 +25,16 @@ import org.apache.spark.sql.functions._
   * brief; complements [[Funnel]] / [[Sessionize]]).
   */
 object Attribution {
+
+  /** [[graft.functions.Portable.r6]] of a driver-side double. */
+  private def r6d(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
+
+  /** The exact 6-decimal rational a SQL DECIMAL cast of `r6d(x)` gives
+    * (`BigDecimal(double)` alone would drag the binary representation
+    * error into the sums).
+    */
+  private def d6(x: Double): BigDecimal =
+    BigDecimal(r6d(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
 
   /** (tieCol, userCol, first_touch, last_touch, n_prior) — one row per
     * conversion event (`typeCol === conversionType`). `first_touch` /
@@ -102,7 +113,6 @@ object Attribution {
       iters: Int = 12,
       maxStates: Int = 64): DataFrame = {
     require(iters >= 1 && iters <= 64, s"iters must be in [1, 64], got $iters")
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
     val w = Window.partitionBy(col(userCol)).orderBy(col(timeCol), col(tieCol))
     val rows = events
       .filter(col(timeCol).isNotNull)
@@ -146,15 +156,11 @@ object Attribution {
     // row-normalized probabilities, r6-pinned (the oracle's r6(n/rowsum))
     val rowSums = mat.groupBy(_._1).map { case (f, ts) => f -> ts.map(_._3).sum }
     val probs: Map[(String, String), Double] = mat.map { case (f, t, n) =>
-      (f, t) -> r6(n.toDouble / rowSums(f).toDouble)
+      (f, t) -> r6d(n.toDouble / rowSums(f).toDouble)
     }.toMap
     // K forward steps from {START: 1}; DECIMAL(38,6)-exact sums of
     // r6-pinned products, exactly the arithmetic the SQL oracle's
-    // staged CTEs perform. d6 recovers the exact 6-decimal rational a
-    // SQL DECIMAL cast would (BigDecimal(double) alone would drag the
-    // binary representation error into the sums).
-    def d6(x: Double): BigDecimal =
-      BigDecimal(r6(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    // staged CTEs perform.
     def pConv(removed: Option[String]): Double = {
       val transient = channels.filterNot(removed.contains) :+ StartState
       var v: Map[String, BigDecimal] = Map(StartState -> d6(1.0))
@@ -173,10 +179,10 @@ object Attribution {
       }
       acc.toDouble
     }
-    val pFull = r6(pConv(None))
+    val pFull = r6d(pConv(None))
     val out = channels.map { c =>
-      val pr = r6(pConv(Some(c)))
-      val eff = if (pFull > 0) Some(r6(1.0 - pr / pFull)) else None
+      val pr = r6d(pConv(Some(c)))
+      val eff = if (pFull > 0) Some(r6d(1.0 - pr / pFull)) else None
       (c, mat.filter(t => t._1 == c || t._2 == c).map(_._3).sum,
         pFull, pr, eff)
     }
@@ -211,7 +217,6 @@ object Attribution {
       conversionType: String,
       halfLifeUs: Long): DataFrame = {
     require(halfLifeUs > 0, s"halfLifeUs must be positive, got $halfLifeUs")
-    val r6 = graft.functions.Portable.r6 _
     val w = Window.partitionBy(col(userCol)).orderBy(col(timeCol), col(tieCol))
     val rows = events
       .filter(col(timeCol).isNotNull)
@@ -232,7 +237,7 @@ object Attribution {
       .withColumn("__credit", r6(col("__w") / col("__sw")))
       .groupBy(col("__ty").as("channel"))
       .agg(count(lit(1)).as("n_touches"),
-        r6(sum(col("__credit").cast("decimal(38,6)")).cast("double")).as("total_credit"))
+        r6(dsum(col("__credit"))).as("total_credit"))
   }
 
   /** Exact Shapley-value attribution (Shapley 1953 applied to journeys,
@@ -277,9 +282,6 @@ object Attribution {
     require(maxChannels >= 1 && maxChannels <= 16,
       s"maxChannels must be in [1, 16], got $maxChannels — 2^k subset values " +
         "must stay a driver-trivial frame")
-    def r6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
-    def d6(x: Double): BigDecimal =
-      BigDecimal(r6(x)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
     val w = Window.partitionBy(col(userCol)).orderBy(col(timeCol), col(tieCol))
     val rows = events
       .filter(col(timeCol).isNotNull)
@@ -328,7 +330,7 @@ object Attribution {
         acc += d6(weight * (v(m | (1 << b)) - v(m)))
       }
       val phi = acc.toDouble
-      (c, r6(phi), if (vFull > 0) Some(r6(phi / vFull)) else None,
+      (c, r6d(phi), if (vFull > 0) Some(r6d(phi / vFull)) else None,
         vFull.toLong, vEmpty.toLong)
     }
     val spark = events.sparkSession
@@ -359,7 +361,6 @@ object Attribution {
       endWeight: Double = 0.4): DataFrame = {
     require(endWeight > 0 && endWeight <= 0.5,
       s"endWeight must be in (0, 0.5], got $endWeight")
-    val r6 = graft.functions.Portable.r6 _
     val w = Window.partitionBy(col(userCol)).orderBy(col(timeCol), col(tieCol))
     val rows = events
       .filter(col(timeCol).isNotNull)
@@ -382,6 +383,6 @@ object Attribution {
     indexed
       .groupBy(col("__ty").as("channel"))
       .agg(count(lit(1)).as("n_touches"),
-        r6(sum(r6(credit).cast("decimal(38,6)")).cast("double")).as("total_credit"))
+        r6(dsum(r6(credit))).as("total_credit"))
   }
 }

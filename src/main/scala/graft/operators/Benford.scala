@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -63,7 +64,7 @@ object Benford {
       .withColumn("total", sum(col("n")).over(byG))
       .withColumn("exp_frac", expFrac)
     val e = col("exp_frac") * col("total").cast("double")
-    val term = graft.functions.Portable.r6(
+    val term = r6(
       (col("n").cast("double") - e) * (col("n").cast("double") - e) / e)
     withTot
       .withColumn("chi2",

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.dsum
 import graft.text.TextFunctions.md5Hash32
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -66,7 +67,7 @@ object Bootstrap {
       .withColumn("__w", poissonWeight(u))
       .groupBy((by.map(col) :+ col("b")): _*)
       .agg(
-        sum((col("__w") * col("__v")).cast("decimal(38,6)")).cast("double").as("__wx"),
+        dsum(col("__w") * col("__v")).as("__wx"),
         sum(col("__w")).as("__wn"),
         count(lit(1)).as("__rows"))
       .withColumn("__m", when(col("__wn") > 0, col("__wx") / col("__wn").cast("double")))

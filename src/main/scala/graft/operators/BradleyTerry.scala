@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bradley–Terry preference-strength fit — turn a pile of pairwise
@@ -51,8 +51,6 @@ object BradleyTerry {
       iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 32,
       s"fit is a fixed-step MM contract: 1 <= iters <= 32, got $iters")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val pairs = comparisons.select(
       col(winnerCol).cast("string").as("__w"),
       col(loserCol).cast("string").as("__l"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +31,6 @@ object Causal {
       instrument: Column,
       treated: Column,
       outcomeCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val y = col(outcomeCol).cast("double")
     val g = df
       .filter(y.isNotNull && !isnan(y))

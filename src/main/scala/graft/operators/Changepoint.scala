@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.dsum0
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -50,8 +51,7 @@ object Changepoint {
       .agg(
         sort_array(collect_list(col("e"))).as("es"),
         count(lit(1)).as("n"),
-        (coalesce(sum(col("e.v").cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-          .cast("double") / count(lit(1)).cast("double")).as("mean"))
+        (dsum0(col("e.v")) / count(lit(1)).cast("double")).as("mean"))
     // state: [S, maxS, argmax, i] — homogeneous double array so the
     // fold stays a plain Catalyst aggregate in BOTH engines
     val state = aggregate(

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.md5Hash32
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -53,8 +53,6 @@ object Conformal {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
     require(trainPct > 0 && calPct > 0 && trainPct + calPct < 100,
       s"need three non-empty bands, got train=$trainPct cal=$calPct")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val h = pmod(md5Hash32(concat_ws("|", lit(seed), col(idCol).cast("string"))), lit(100))
     val rows = data.select(
       col(idCol).as("__id"),

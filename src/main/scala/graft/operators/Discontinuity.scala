@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -37,8 +37,6 @@ object Discontinuity {
       cutoff: Double,
       bandwidth: Double): DataFrame = {
     require(bandwidth > 0, s"bandwidth must be positive, got $bandwidth")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val x = col(runningCol).cast("double")
     val y = col(outcomeCol).cast("double")
     val u = x - lit(cutoff)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -43,8 +44,7 @@ object Diversity {
         // Σ k² exact through DECIMAL(38,0) (a long would overflow once
         // group sizes pass ~3e9); Σ k·ln k r6'd then DECIMAL-summed
         sum(col("__k").cast("decimal(38,0)") * col("__k")).cast("double").as("__sk2"),
-        sum(graft.functions.Portable.r6(kD * log(kD)).cast("decimal(38,6)"))
-          .cast("double").as("__skl"))
+        dsum(r6(kD * log(kD))).as("__skl"))
     val nD = col("n").cast("double")
     val shannon = log(nD) - col("__skl") / nD
     g.select((byCols :+ col("n") :+ col("richness") :+

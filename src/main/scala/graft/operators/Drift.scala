@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -61,7 +62,6 @@ object Drift {
       inRef: Column,
       ps: Seq[Double]): DataFrame = {
     require(ps.nonEmpty, "qqDrift needs probe quantiles")
-    val r6 = graft.functions.Portable.r6 _
     val qs = Profile.quantileSummary(
       df.select(inRef.as("__slice"), col(valueCol).as("__v")),
       Seq("__slice"), "__v", ps)
@@ -91,7 +91,6 @@ object Drift {
     require(cols.size <= 64,
       s"featureAucScreen melts the fact table x|cols|; ${cols.size} columns " +
         "exceed the 64-column audit contract — run in batches")
-    val r6 = graft.functions.Portable.r6 _
     val melted = df
       .select(label.as("__y"),
         explode(array(cols.map(c =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import graft.plans.Materialize.PinOps
@@ -92,7 +93,7 @@ object Evaluation {
       .groupBy((byCols :+ col("bin")): _*)
       .agg(
         count(lit(1)).as("n"),
-        sum(col("__x").cast("decimal(38,6)")).cast("double").as("__sx"),
+        dsum(col("__x")).as("__sx"),
         sum(col("__p")).as("__k"))
     val nD = col("n").cast("double")
     val binned = g
@@ -146,8 +147,6 @@ object Evaluation {
       label: Column,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 2, s"nBins must be >= 2, got $nBins")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val x = col(scoreCol).cast("double")
     val byCols = by.map(col)
     val bin = least(lit(nBins - 1L), greatest(lit(0L), floor(x * nBins).cast("long")))
@@ -212,8 +211,6 @@ object Evaluation {
       label: Column,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 3, s"nBins must be >= 3, got $nBins")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val x = col(scoreCol).cast("double")
     val byCols = by.map(col)
     val bin = least(lit(nBins - 1L), greatest(lit(0L), floor(x * nBins).cast("long")))
@@ -266,7 +263,6 @@ object Evaluation {
       df: DataFrame,
       trueCol: String,
       predCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val cells = df
       .groupBy(
         coalesce(col(trueCol).cast("string"), lit("(null)")).as("true_label"),
@@ -306,8 +302,6 @@ object Evaluation {
       votes: DataFrame,
       itemCol: String,
       categoryCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val cells = votes
       .filter(col(categoryCol).isNotNull)
       .groupBy(col(itemCol).as("__i"), col(categoryCol).cast("string").as("__c"))
@@ -378,7 +372,6 @@ object Evaluation {
       nBins: Int = 20): DataFrame = {
     require(nBins >= 2 && nBins <= 10000, s"nBins must be in [2, 10000], got $nBins")
     require(benefitTp > 0 && costFp >= 0, "benefit must be positive, cost non-negative")
-    val r6 = graft.functions.Portable.r6 _
     val x = col(scoreCol).cast("double")
     val byCols = by.map(col)
     val bin = least(lit(nBins - 1L), greatest(lit(0L), floor(x * nBins).cast("long")))
@@ -529,8 +522,7 @@ object Evaluation {
       .agg(
         count(lit(1)).as("n"),
         sum(col("__p")).as("__k"),
-        sum(graft.functions.Portable.r6(col("__x")).cast("decimal(38,6)"))
-          .cast("double").as("__sx"))
+        dsum(r6(col("__x"))).as("__sx"))
     val wc = Window.partitionBy(byCols: _*).orderBy(col("bin"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // cumulative columns get distinct lowercase names: Spark resolution
@@ -586,8 +578,6 @@ object Evaluation {
       df: DataFrame,
       clusterCol: String,
       labelCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val base = df.select(col(clusterCol).cast("string").as("__cl"),
       col(labelCol).cast("string").as("__lb"))
     val kept = base.filter(col("__cl").isNotNull && col("__lb").isNotNull)
@@ -645,7 +635,6 @@ object Evaluation {
       df: DataFrame,
       trueCol: String,
       predCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val cells = df
       .groupBy(
         coalesce(col(trueCol).cast("string"), lit("(null)")).as("__t"),
@@ -708,8 +697,6 @@ object Evaluation {
       byCols: Seq[String],
       unitCol: String,
       categoryCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val by = byCols.map(col)
     val ouc = df
       .filter(col(unitCol).isNotNull && col(categoryCol).isNotNull)
@@ -763,7 +750,6 @@ object Evaluation {
       idCol: String,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 2 && nBins <= 100, s"nBins must be in [2, 100], got $nBins")
-    val r6 = graft.functions.Portable.r6 _
     val x = col(scoreCol).cast("double")
     val byCols = by.map(col)
     val wr = Window.partitionBy(byCols: _*).orderBy(col("__x").desc, col("__id"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -36,7 +37,6 @@ object Fairness {
       selected: Column,
       label: Column,
       refGroup: Option[String] = None): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val g = df
       .select(coalesce(col(groupCol).cast("string"), lit("(null)")).as("group"),
         selected.as("__s"), label.as("__y"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import graft.functions.Pairs
 import org.apache.spark.sql.DataFrame
@@ -31,8 +32,8 @@ object FuzzyJoin {
     *
     * One shuffle: tokens groupBy-collect into per-token sorted buckets
     * (bucket size == token df, since names are distinct), over-cap
-    * buckets drop whole, and [[graft.functions.Pairs.orderedPairs]]
-    * explodes in-bucket pairs — no self-join, no double evaluation of
+    * buckets drop whole, and [[graft.functions.Pairs.pairs]] streams the
+    * in-bucket pairs — no self-join, no double evaluation of
     * the tokenizer.
     */
   def candidatePairs(df: DataFrame, nameCol: String, maxTokenDf: Long): DataFrame = {
@@ -237,7 +238,6 @@ object FuzzyJoin {
       maxBlockSize: Long = 10000L): DataFrame = {
     require(windowSize >= 2, s"windowSize must be >= 2, got $windowSize")
     require(maxDist >= 0, "maxDist must be >= 0")
-    val r6 = graft.functions.Portable.r6 _
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("block")).orderBy(col("name"))
     val ranked = df

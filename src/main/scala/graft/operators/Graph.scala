@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum0, r6}
 import graft.plans.Materialize.PinOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Triangle enumeration over an undirected edge table — the local
@@ -176,7 +177,6 @@ object Graph {
       edges: DataFrame,
       srcCol: String = "src",
       dstCol: String = "dst"): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
       .filter(col("__s").isNotNull && col("__d").isNotNull)
     val de = e.distinct().pin(false) // reciprocity joins it against itself
@@ -332,15 +332,13 @@ object Graph {
       .unionAll(und.select(col("b").as("u"), col("a").as("v")))
       .join(deg.select(col("node").as("u"), col("d").as("__du")), "u")
       .join(deg.select(col("node").as("v"), col("d").as("__dv")), "v")
-    def dsum(e: Column): Column =
-      coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
     val x = col("__du").cast("double")
     val y = col("__dv").cast("double")
     val m = both.agg(
       count(lit(1)).as("__m2"),
-      dsum(x).as("__sx"),
-      dsum(x * y).as("__sxy"),
-      dsum(x * x).as("__sxx"))
+      dsum0(x).as("__sx"),
+      dsum0(x * y).as("__sxy"),
+      dsum0(x * x).as("__sxx"))
     // symmetry: sy = sx, syy = sxx
     val nD = col("__m2").cast("double")
     val cov = nD * col("__sxy") - col("__sx") * col("__sx")

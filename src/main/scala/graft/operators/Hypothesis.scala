@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, dsum0, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -106,15 +107,13 @@ object Hypothesis {
     val ranked = base
       .withColumn("__rk", avgRank)
       .withColumn("__c", count(lit(1)).over(wv))
-    def dsum(e: Column): Column =
-      coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
     val m = ranked
       .groupBy(byCols: _*)
       .agg(
         sum(col("__a")).as("n_a"),
         sum(lit(1L) - col("__a")).as("n_b"),
-        dsum(when(col("__a") === 1L, col("__rk"))).as("__ra"),
-        dsum((col("__c") * col("__c") - 1L)).as("__ties"))
+        dsum0(when(col("__a") === 1L, col("__rk"))).as("__ra"),
+        dsum0((col("__c") * col("__c") - 1L)).as("__ties"))
     val naD = col("n_a").cast("double")
     val nbD = col("n_b").cast("double")
     val nD = (col("n_a") + col("n_b")).cast("double")
@@ -191,16 +190,14 @@ object Hypothesis {
     val avgRank =
       rank().over(wg.orderBy(col("__x"))).cast("double") +
         (count(lit(1)).over(wv) - 1).cast("double") / 2.0
-    def dsum(e: Column): Column =
-      coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
     val perArm = base
       .withColumn("__rk", avgRank)
       .withColumn("__c", count(lit(1)).over(wv))
       .groupBy((byCols :+ col("__arm")): _*)
       .agg(
         count(lit(1)).as("__na"),
-        dsum(col("__rk")).as("__ra"),
-        dsum(col("__c") * col("__c") - 1L).as("__ties"))
+        dsum0(col("__rk")).as("__ra"),
+        dsum0(col("__c") * col("__c") - 1L).as("__ties"))
     // R_a²/n_a is the one inexact double here — r6 it in DOUBLE space
     // before the DECIMAL-cast sum (§5 convention: the raw double→DECIMAL
     // cast rounds differently across engines at 10⁻⁶ boundaries)
@@ -210,8 +207,8 @@ object Hypothesis {
       .agg(
         sum(col("__na")).as("n"),
         count(lit(1)).as("k_arms"),
-        dsum(floor(rr * 1000000.0 + 0.5) / 1000000.0).as("__rr"),
-        dsum(col("__ties")).as("__t"))
+        dsum0(floor(rr * 1000000.0 + 0.5) / 1000000.0).as("__rr"),
+        dsum0(col("__ties")).as("__t"))
     val nD = col("n").cast("double")
     val h0 = lit(12.0) / (nD * (nD + 1.0)) * col("__rr") - lit(3.0) * (nD + 1.0)
     val corr = lit(1.0) - col("__t") / (nD * nD * nD - nD)
@@ -304,8 +301,6 @@ object Hypothesis {
     */
   def cmh(df: DataFrame, strata: Seq[String], hit: Column, inA: Column): DataFrame = {
     require(strata.nonEmpty, "cmh needs at least one stratum column")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val cells = df
       .groupBy(strata.map(col): _*)
       .agg(
@@ -359,8 +354,6 @@ object Hypothesis {
     */
   def simpsonCheck(df: DataFrame, strata: Seq[String], hit: Column, inA: Column): DataFrame = {
     require(strata.nonEmpty, "simpsonCheck needs at least one stratum column")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val cells = df
       .groupBy(strata.map(col): _*)
       .agg(
@@ -420,7 +413,6 @@ object Hypothesis {
     * row: (n_a, n_b, p_a, p_b, rr, e_value).
     */
   def eValue(df: DataFrame, hit: Column, inA: Column): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val g = df.agg(
       count(when(inA, lit(1))).as("n_a"),
       count(when(!inA, lit(1))).as("n_b"),
@@ -467,9 +459,7 @@ object Hypothesis {
       outcome: Column,
       maxTerms: Long = 100000L): DataFrame = {
     require(maxTerms >= 1, s"maxTerms must be positive, got $maxTerms")
-    val r6 = graft.functions.Portable.r6 _
     val lf = graft.functions.SpecialMath.lfact _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val cells = df
       .groupBy(byCols.map(col): _*)
       .agg(
@@ -524,7 +514,6 @@ object Hypothesis {
       byCols: Seq[String],
       before: Column,
       after: Column): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val g = df
       .groupBy(byCols.map(col): _*)
       .agg(
@@ -601,8 +590,6 @@ object Hypothesis {
       seed: String = "rt"): DataFrame = {
     require(k >= 1 && k <= 64,
       s"k must be in [1, 64], got $k — the melt factor is k")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val base = df
       .filter(v.isNotNull && !isnan(v))
@@ -654,7 +641,6 @@ object Hypothesis {
     * Output per group: (by…, n_a, n_b, t).
     */
   def cvmTest(df: DataFrame, by: Seq[String], valueCol: String, inA: Column): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val x = col(valueCol).cast("double")
     val a = when(inA, 1L).otherwise(0L)
     val byCols = by.map(col)
@@ -682,7 +668,7 @@ object Hypothesis {
       .agg(
         first(col("__na")).as("n_a"),
         first(col("__nb")).as("n_b"),
-        (sum(r6(term).cast("decimal(38,6)")).cast("double") *
+        (dsum(r6(term)) *
           first(col("__na")).cast("double") * first(col("__nb")).cast("double") /
           ((first(col("__na")) + first(col("__nb"))).cast("double") *
             (first(col("__na")) + first(col("__nb"))).cast("double"))).as("__t"))
@@ -705,8 +691,6 @@ object Hypothesis {
       byCols: Seq[String],
       doseCol: String,
       hit: Column): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val s = col(doseCol).cast("double")
     val levels = df
       .filter(s.isNotNull && !isnan(s))
@@ -747,7 +731,6 @@ object Hypothesis {
       lambda: Double = 0.5,
       alpha: Double = 0.05): DataFrame = {
     require(lambda > 0 && lambda < 1, s"lambda must be in (0,1), got $lambda")
-    val r6 = graft.functions.Portable.r6 _
     val p = col(pCol)
     val ord = p.asc +: tieCols.map(col(_).asc)
     val wAll = Window.partitionBy()
@@ -797,7 +780,6 @@ object Hypothesis {
       timeCol: String,
       tieCol: String,
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val by = byCols.map(col)
     val v = col(valueCol).cast("double")
     val base = df
@@ -864,8 +846,6 @@ object Hypothesis {
       blockCol: String,
       treatmentCol: String,
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val by = byCols.map(col)
     val v = col(valueCol).cast("double")
     val base = df
@@ -921,8 +901,6 @@ object Hypothesis {
       subjectCol: String,
       treatmentCol: String,
       hit: Column): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val by = byCols.map(col)
     val base = df
       .filter(col(subjectCol).isNotNull && col(treatmentCol).isNotNull)

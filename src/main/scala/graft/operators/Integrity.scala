@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -101,7 +102,6 @@ object Integrity {
     */
   def tCloseness(df: DataFrame, quasiCols: Seq[String], sensitiveCol: String, t: Double): DataFrame = {
     require(t > 0 && t < 1, s"t must be in (0,1), got $t")
-    val r6 = graft.functions.Portable.r6 _
     // NULL folds to a marker so it survives the value equi-join as a
     // real category instead of dropping (null never equals null there).
     // Un-spoofable encoding (the contentChecksum discipline): every real
@@ -135,8 +135,7 @@ object Integrity {
       .groupBy(quasiCols.map(col): _*)
       .agg(
         max(col("__cn")).as("__cn"),
-        sum(r6(abs(p - col("__q")) - col("__q")).cast("decimal(38,6)"))
-          .cast("double").as("__s"))
+        dsum(r6(abs(p - col("__q")) - col("__q"))).as("__s"))
       .select(col("__cn"), r6((lit(1.0) + col("__s")) / 2.0).as("__d"))
     perClass.agg(
       lit(t).as("t"),
@@ -221,7 +220,7 @@ object Integrity {
       .agg(count(lit(1)).as("__n"))
       .withColumn("epsilon", lit(epsilon))
       .withColumn("noisy_count",
-        graft.functions.Portable.r6(col("__n").cast("double") + noise))
+        r6(col("__n").cast("double") + noise))
       .select(by.map(col) :+ col("epsilon") :+ col("noisy_count"): _*)
   }
 
@@ -260,8 +259,6 @@ object Integrity {
     require(by.nonEmpty, "dpMeans needs at least one group column")
     require(epsilon > 0, s"epsilon must be > 0, got $epsilon")
     require(lo < hi, s"need lo < hi, got [$lo, $hi]")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     def lap(tag: String, scale: Double): Column = {
       val keyHash = concat(
         lit(seed) +: by.map(c => coalesce(md5(col(c).cast("string")), lit("N")))

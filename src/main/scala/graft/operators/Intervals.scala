@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,7 +35,7 @@ object Intervals {
     val v = col(valueCol).cast("double")
     val w = Window.partitionBy(col(keyCol)).orderBy(col("__us"), col(tieCol))
     val dtS = (lead(col("__us"), 1).over(w) - col("__us")).cast("double") / 1e6
-    val term = graft.functions.Portable.r6(v * dtS).cast("decimal(38,6)")
+    val term = r6(v * dtS).cast("decimal(38,6)")
     events
       .filter(col(timeCol).isNotNull && v.isNotNull && !isnan(v))
       .withColumn("__us", unix_micros(col(timeCol)))
@@ -45,7 +46,7 @@ object Intervals {
         ((max(col("__us")) - min(col("__us"))).cast("double") / 1e6).as("span_s"),
         coalesce(sum(col("__term")), lit(0).cast("decimal(38,6)")).cast("double").as("__num"))
       .select(col("key"), col("n"),
-        graft.functions.Portable.r6(col("span_s")).as("span_s"),
+        r6(col("span_s")).as("span_s"),
         when(col("span_s") > 0, col("__num") / col("span_s")).as("twa"))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.md5Hash32
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -40,8 +40,6 @@ object Jackknife {
       z: Double = 1.959964): DataFrame = {
     require(buckets >= 2 && buckets <= 10000,
       s"buckets must be in [2, 10000], got $buckets")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val b = pmod(md5Hash32(concat_ws("|", lit(seed), col(idCol).cast("string"))),
       lit(buckets))
     val perBucket = data

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -30,8 +31,6 @@ object Json {
       byCols: Seq[String],
       jsonCol: String,
       path: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val f = numericField(col(jsonCol), path)
     val okF = f.isNotNull && !isnan(f)
     val g = df

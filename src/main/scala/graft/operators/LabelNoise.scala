@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,9 +41,9 @@ object LabelNoise {
     val thresholds = scored
       .filter(col(labelCol) === col(classCol))
       .groupBy(col(classCol))
-      .agg((sum(Portable.r6(p).cast("decimal(38,6)")).cast("double") /
+      .agg((dsum(r6(p)) /
         count(lit(1)).cast("double")).as("__t0"))
-      .select(col(classCol), Portable.r6(col("__t0")).as("__t"))
+      .select(col(classCol), r6(col("__t0")).as("__t"))
     val candidates = scored
       .join(broadcast(thresholds), classCol)
       .filter(p >= col("__t"))
@@ -62,7 +62,7 @@ object LabelNoise {
       .agg(count(lit(1)).as("n"))
       .join(broadcast(labelTotals), labelCol)
       .withColumn("frac_of_label",
-        Portable.r6(col("n").cast("double") / col("n_label").cast("double")))
+        r6(col("n").cast("double") / col("n_label").cast("double")))
       .withColumn("n_unconfident",
         col("n_label") - sum(col("n")).over(Window.partitionBy(col(labelCol))))
       .select(col(labelCol).as("label"), col("confident_class"), col("n"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -59,8 +59,6 @@ object Logistic {
     require(iters >= 1 && iters <= 64,
       s"fitGd is a fixed-step GD contract: 1 <= iters <= 64, got $iters")
     require(lr > 0, s"learning rate must be > 0, got $lr")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val xs = lit(1.0) +: xCols.map(c => col(c).cast("double"))
     // every GD step re-reads the feature frame: pin it once so the
     // steps iterate over the projected rows, never the upstream plan
@@ -108,8 +106,6 @@ object Logistic {
       fit: DataFrame,
       yCol: String,
       xCols: Seq[String]): DataFrame = {
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val scored = score(data.withColumn("__y",
       col(yCol).cast("boolean").cast("int").cast("double")), fit, xCols, "__p")
     // r6-rounded probabilities can hit exactly 0/1; clamp into
@@ -139,7 +135,7 @@ object Logistic {
     val xs = lit(1.0) +: xCols.map(c => col(c).cast("double"))
     val z = xs.zipWithIndex.map { case (x, j) => col(bcol(j)) * x }.reduce(_ + _)
     data.crossJoin(broadcast(fit)) // one-row frame: lint-exempt
-      .withColumn(outCol, Portable.r6(lit(1.0) / (lit(1.0) + exp(-z))))
+      .withColumn(outCol, r6(lit(1.0) / (lit(1.0) + exp(-z))))
       .drop(xs.indices.map(bcol): _*)
   }
 
@@ -184,8 +180,6 @@ object Logistic {
       xCol: String,
       clip: Double = 0.05): DataFrame = {
     require(clip >= 0 && clip < 0.5, s"clip must be in [0, 0.5), got $clip")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     // two full passes read `scored` (the outcome-model aggregate and the
     // contribution aggregate); pin the four needed columns once so the
     // caller's upstream plan (typically a scored+tokenized corpus) runs
@@ -247,8 +241,6 @@ object Logistic {
       propCol: String,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 2 && nBins <= 1000, s"nBins must be in [2, 1000], got $nBins")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val t = col(treatCol).cast("boolean")
     val y = col(yCol).cast("double")
     val p = col(propCol).cast("double")
@@ -307,8 +299,6 @@ object Logistic {
       propCol: String,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 2 && nBins <= 1000, s"nBins must be in [2, 1000], got $nBins")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val t = col(treatCol).cast("boolean")
     val p = col(propCol).cast("double")
     val bin = least(lit(nBins - 1L), greatest(lit(0L), floor(p * nBins).cast("long")))
@@ -358,8 +348,6 @@ object Logistic {
       propCol: String,
       clip: Double = 0.05): DataFrame = {
     require(clip >= 0 && clip < 0.5, s"clip must be in [0, 0.5), got $clip")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val t = col(treatCol).cast("boolean")
     val p = r6(least(greatest(col(propCol), lit(clip)), lit(1.0 - clip)))
     val w = when(t, r6(lit(1.0) / p)).otherwise(r6(lit(1.0) / (lit(1.0) - p)))
@@ -387,8 +375,6 @@ object Logistic {
       propCol: String,
       clip: Double = 0.05): DataFrame = {
     require(clip >= 0 && clip < 0.5, s"clip must be in [0, 0.5), got $clip")
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val t = col(treatCol).cast("boolean")
     val y = col(yCol).cast("double")
     val p = r6(least(greatest(col(propCol), lit(clip)), lit(1.0 - clip)))

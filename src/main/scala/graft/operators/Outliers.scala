@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.dsum
 import graft.meds.Meds
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -176,7 +177,7 @@ object Outliers {
         Quantiles.q(col("__v"), lit(pHi), ex).as("hi"))
     val clamped = least(greatest(col("__v"), col("lo")), col("hi"))
     def rsum(e: Column): Column =
-      sum((floor(e * 1000000.0 + 0.5) / 1000000.0).cast("decimal(38,6)")).cast("double")
+      dsum(floor(e * 1000000.0 + 0.5) / 1000000.0)
     base
       .join(broadcast(bounds), by)
       .groupBy(by.map(col): _*)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,7 +66,6 @@ object Quantiles {
       ps: Seq[Double]): org.apache.spark.sql.DataFrame = {
     require(ps.nonEmpty && ps.forall(p => p > 0 && p <= 1),
       s"probes must lie in (0, 1], got $ps")
-    val r6 = graft.functions.Portable.r6 _
     val by = byCols.map(col)
     val v = col(valueCol).cast("double")
     val w = col(weightCol).cast("double")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.md5Hash32
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -32,8 +32,6 @@ object Reliability {
       idCol: String,
       metric: Column,
       seed: String = "sh"): DataFrame = {
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val m = metric.cast("double")
     val half = pmod(md5Hash32(concat_ws("|", lit(seed), col(idCol).cast("string"))), lit(2))
     val cells = df

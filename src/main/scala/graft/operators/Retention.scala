@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -101,7 +102,6 @@ object Retention {
       timeCol: String,
       bucketUs: Long): DataFrame = {
     require(bucketUs > 0, s"bucketUs must be positive, got $bucketUs")
-    val r6 = graft.functions.Portable.r6 _
     val act = events
       .filter(col(timeCol).isNotNull)
       .select(col(keyCol).as("key"),
@@ -164,7 +164,6 @@ object Retention {
       dayUs: Long = 86400000000L): DataFrame = {
     require(windowDays >= 1 && windowDays <= 90,
       s"windowDays must be in [1, 90], got $windowDays — the explode factor IS windowDays")
-    val r6 = graft.functions.Portable.r6 _
     val act = events
       .filter(col(timeCol).isNotNull)
       .select(col(keyCol).as("key"),
@@ -213,9 +212,6 @@ object Retention {
       userCol: String,
       timeCol: String,
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: org.apache.spark.sql.Column) =
-      sum(e.cast("decimal(38,6)")).cast("double")
     val base = events
       .filter(col(timeCol).isNotNull)
       .select(col(userCol).as("__u"),

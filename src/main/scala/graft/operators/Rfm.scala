@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -35,7 +36,7 @@ object Rfm {
       nBins: Int = 5): DataFrame = {
     require(nBins >= 2 && nBins <= 9, s"nBins must be in 2..9, got $nBins")
     def dec(c: Column): Column =
-      graft.functions.Portable.r6(c.cast("double")).cast("decimal(38,6)")
+      r6(c.cast("double")).cast("decimal(38,6)")
     val base = df
       .filter(col(custCol).isNotNull && col(timeCol).isNotNull)
       .groupBy(col(segCol).as("seg"), col(custCol).as("entity"))

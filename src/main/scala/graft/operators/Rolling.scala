@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -257,7 +258,6 @@ object Rolling {
       k: Int): DataFrame = {
     require(k >= 1 && k <= 64,
       s"k must be in [1, 64], got $k — the per-row window state is O(k)")
-    val r6 = graft.functions.Portable.r6 _
     val v = col(valueCol).cast("double")
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col("t"), col("__tie"))
@@ -296,7 +296,6 @@ object Rolling {
       k: Int = 5,
       minProminence: Double = 0.0): DataFrame = {
     require(minProminence >= 0, s"minProminence must be >= 0, got $minProminence")
-    val r6 = graft.functions.Portable.r6 _
     val base = rollingMedian(df, keyCols, timeCol, tieCol, valueCol, k)
     val w = Window.partitionBy(keyCols.map(col): _*)
       .orderBy(col("t"), col("__tie"))

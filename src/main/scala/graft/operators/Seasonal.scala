@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -45,8 +46,7 @@ object Seasonal {
         max(col("n")).as("n"),
         max(when(col("__rk") === 1, col("hour"))).as("peak_hour"),
         max(when(col("__rk") === 1, share)).as("peak_share"),
-        sum((floor(col("__h") * 1000000.0 + 0.5) / 1000000.0).cast("decimal(38,6)"))
-          .cast("double").as("__hsum"))
+        dsum(floor(col("__h") * 1000000.0 + 0.5) / 1000000.0).as("__hsum"))
       .withColumn("entropy_norm", col("__hsum") / math.log(24.0))
       .drop("__hsum")
   }
@@ -119,7 +119,7 @@ object Seasonal {
       lag(col("__v"), period).over(w).as("__lp"))
     def dmean(e: Column): Column =
       when(count(e) > 0,
-        sum(graft.functions.Portable.r6(e).cast("decimal(38,6)")).cast("double") /
+        dsum(r6(e)) /
           count(e).cast("double"))
     withLags
       .groupBy("key")
@@ -200,7 +200,7 @@ object Seasonal {
       .withColumn("__detr", col("v") - col("trend"))
     def dmean(e: Column): Column =
       when(count(e) > 0,
-        sum(graft.functions.Portable.r6(e).cast("decimal(38,6)")).cast("double") /
+        dsum(r6(e)) /
           count(e).cast("double"))
     val phaseMeans = withTrend.groupBy(col("key"), col("phase"))
       .agg(dmean(col("__detr")).as("__sp"))
@@ -254,7 +254,6 @@ object Seasonal {
       buckets: DataFrame, periods: Seq[Int]): DataFrame = {
     require(periods.nonEmpty && periods.forall(_ >= 2) && periods.distinct == periods,
       s"periods must be distinct and >= 2, got $periods")
-    val r6 = graft.functions.Portable.r6 _
     val b = buckets.select(col("key"), col("bucket").as("__b"), col("v").as("__v"))
     val wk = Window.partitionBy(col("key")).rowsBetween(
       Window.unboundedPreceding, Window.unboundedFollowing)
@@ -273,8 +272,8 @@ object Seasonal {
       .groupBy(col("key"), col("period"))
       .agg(
         count(lit(1)).as("n_buckets"),
-        sum(r6(col("__dv") * cos(theta)).cast("decimal(38,6)")).cast("double").as("__sc"),
-        sum(r6(col("__dv") * sin(theta)).cast("decimal(38,6)")).cast("double").as("__ss"))
+        dsum(r6(col("__dv") * cos(theta))).as("__sc"),
+        dsum(r6(col("__dv") * sin(theta))).as("__ss"))
     agg
       .select(col("key"), col("period"), col("n_buckets"),
         r6((col("__sc") * col("__sc") + col("__ss") * col("__ss")) /
@@ -302,11 +301,10 @@ object Seasonal {
   /** [[dominantPeriod]] over a prebuilt bucket frame + explicit periods. */
   private[operators] def dominantPeriodBuckets(
       buckets: DataFrame, periods: Seq[Int]): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val nP = periods.size
     // consumed by both the winner aggregation and the entropy pass
     val pg = periodogramBuckets(buckets, periods).pin(false)
-    val tot = sum(col("power").cast("decimal(38,6)")).cast("double")
+    val tot = dsum(col("power"))
     val g = pg.groupBy(col("key"))
       .agg(
         max(col("n_buckets")).as("n_buckets"),
@@ -319,8 +317,7 @@ object Seasonal {
       .filter(col("__tot") > 0.0 && col("power") > 0.0)
       .withColumn("__p", col("power") / col("__tot"))
       .groupBy(col("key"))
-      .agg(sum(r6(-col("__p") * log(col("__p"))).cast("decimal(38,6)"))
-        .cast("double").as("__h"))
+      .agg(dsum(r6(-col("__p") * log(col("__p")))).as("__h"))
     g.join(ent, Seq("key"), "left")
       .select(col("key"), col("n_buckets"), col("dominant_period"),
         r6(share).as("power_share"),
@@ -403,8 +400,6 @@ object Seasonal {
       keyCol: String,
       tsCol: String,
       period: Int): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val d = decomposeBuckets(hourlyBuckets(df, keyCol, tsCol), period)
       .filter(col("trend").isNotNull)
     val r = r6(col("residual"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import graft.meds.Meds
 import org.apache.spark.sql.DataFrame
@@ -143,7 +144,6 @@ object Shard {
       seed: String): DataFrame = {
     require(fromShards >= 1 && toShards > fromShards,
       s"audit expects growth, got $fromShards -> $toShards")
-    val r6 = graft.functions.Portable.r6 _
     val keys = df.select(col(keyCol)).filter(col(keyCol).isNotNull).distinct()
     val assigned = rendezvousAssign(
       rendezvousAssign(keys, keyCol, fromShards, seed, "__from"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -42,8 +42,6 @@ object Shrinkage {
       data: DataFrame,
       groupCol: String,
       successCol: Column): DataFrame = {
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val groups = data
       .groupBy(col(groupCol).as("group"))
       .agg(

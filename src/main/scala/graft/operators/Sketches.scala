@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -117,7 +118,7 @@ object Sketches {
       .agg(graft.functions.KmvSketch.kmv(
         graft.text.TextFunctions.md5Hash32(col(itemCol).cast("string")), k).as("kmv"))
       .withColumn("est_distinct",
-        graft.functions.Portable.r6(
+        r6(
           when(size(col("kmv")) < k, size(col("kmv")).cast("double"))
             .otherwise(lit(k - 1.0) / kmvU(element_at(col("kmv"), k)))))
   }
@@ -147,9 +148,9 @@ object Sketches {
     val estUnion = when(size(col("__u")) < k, size(col("__u")).cast("double"))
       .otherwise(lit(k - 1.0) / kmvU(element_at(col("__l"), k)))
     pairs
-      .withColumn("est_union", graft.functions.Portable.r6(estUnion))
-      .withColumn("est_jaccard", graft.functions.Portable.r6(jac))
-      .withColumn("est_intersection", graft.functions.Portable.r6(jac * estUnion))
+      .withColumn("est_union", r6(estUnion))
+      .withColumn("est_jaccard", r6(jac))
+      .withColumn("est_intersection", r6(jac * estUnion))
       .select("key_a", "key_b", "est_a", "est_b", "est_union", "est_jaccard", "est_intersection")
   }
 }

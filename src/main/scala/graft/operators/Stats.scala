@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, dsum0, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -25,6 +26,10 @@ object Stats {
 
   private def ok(c: Column): Column = c.isNotNull && !isnan(c)
 
+  /** `Portable.dsum0` over the rows where `p` holds (0.0 when none do). */
+  private def dsumIf(p: Column, e: Column): Column =
+    coalesce(sum(when(p, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)")).cast("double")
+
   /** The shared moment-sum aggregate: by..., n, sx, sy, sxy, sxx, syy
     * (sums as DOUBLE, exact through DECIMAL(38,6)).
     */
@@ -32,16 +37,14 @@ object Stats {
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
     val p = ok(x) && ok(y)
-    def dsum(e: Column): Column =
-      coalesce(sum(when(p, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)")).cast("double")
     df.groupBy(by.map(col): _*)
       .agg(
         count(when(p, lit(1))).as("n"),
-        dsum(x).as("sx"),
-        dsum(y).as("sy"),
-        dsum(x * y).as("sxy"),
-        dsum(x * x).as("sxx"),
-        dsum(y * y).as("syy")
+        dsumIf(p, x).as("sx"),
+        dsumIf(p, y).as("sy"),
+        dsumIf(p, x * y).as("sxy"),
+        dsumIf(p, x * x).as("sxx"),
+        dsumIf(p, y * y).as("syy")
       )
   }
 
@@ -97,8 +100,8 @@ object Stats {
       .groupBy(by.map(col): _*)
       .agg(
         count(lit(1)).as("n"),
-        sum(v.cast("decimal(38,6)")).cast("double").as("__s"),
-        sum((col("__i") * v).cast("decimal(38,6)")).cast("double").as("__is"))
+        dsum(v).as("__s"),
+        dsum(col("__i") * v).as("__is"))
       .select(by.map(col) :+ col("n") :+
         when(col("__s") > 0,
           lit(2.0) * col("__is") / (col("n").cast("double") * col("__s")) -
@@ -158,14 +161,12 @@ object Stats {
     * measure and emit NULL V.
     */
   def cramersV(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    def dsum(e: Column): Column =
-      coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
     chiSquare(df, aCol, bCol)
       .agg(
         countDistinct(col("a")).as("n_a_levels"),
         countDistinct(col("b")).as("n_b_levels"),
         sum(col("observed")).as("n"),
-        dsum(graft.functions.Portable.r6(col("chi2"))).as("chi2"))
+        dsum0(r6(col("chi2"))).as("chi2"))
       .withColumn(
         "v",
         when(least(col("n_a_levels"), col("n_b_levels")) >= 2 && col("n") > 0,
@@ -356,10 +357,9 @@ object Stats {
       .agg(
         max(col("__tr")).as("n_ref"),
         max(col("__tc")).as("n_cur"),
-        graft.functions.Portable.r6(max(width)).as("bin_width"),
+        r6(max(width)).as("bin_width"),
         when(max(col("__tr")).isNotNull && max(col("__tc")).isNotNull,
-          sum(graft.functions.Portable.r6(abs(col("__cum"))).cast("decimal(38,6)"))
-            .cast("double") * max(width)).as("emd"))
+          dsum(r6(abs(col("__cum")))) * max(width)).as("emd"))
   }
 
   /** Two-sample Welch z-test per group — the A/B experiment readout:
@@ -384,18 +384,15 @@ object Stats {
     val v = col(valueCol).cast("double")
     val p = ok(v)
     val isB = coalesce(armB, lit(false))
-    def dsum(cond: Column, e: Column): Column =
-      coalesce(sum(when(p && cond, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)"))
-        .cast("double")
     val m = df
       .groupBy(by.map(col): _*)
       .agg(
         count(when(p && !isB, lit(1))).as("n_a"),
         count(when(p && isB, lit(1))).as("n_b"),
-        dsum(!isB, v).as("__sa"),
-        dsum(isB, v).as("__sb"),
-        dsum(!isB, v * v).as("__sa2"),
-        dsum(isB, v * v).as("__sb2"))
+        dsumIf(p && !isB, v).as("__sa"),
+        dsumIf(p && isB, v).as("__sb"),
+        dsumIf(p && !isB, v * v).as("__sa2"),
+        dsumIf(p && isB, v * v).as("__sb2"))
     val na = col("n_a").cast("double")
     val nb = col("n_b").cast("double")
     val meanA = col("__sa") / na
@@ -440,14 +437,11 @@ object Stats {
     val cells = Seq(
       "a_pre" -> (!isB && !post), "a_post" -> (!isB && post),
       "b_pre" -> (isB && !post), "b_post" -> (isB && post))
-    def dsum(cond: Column, e: Column): Column =
-      coalesce(sum(when(p && cond, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)"))
-        .cast("double")
     val aggs = cells.flatMap { case (nm, cond) =>
       Seq(
         count(when(p && cond, lit(1))).as(s"n_$nm"),
-        dsum(cond, v).as(s"__s_$nm"),
-        dsum(cond, v * v).as(s"__s2_$nm"))
+        dsumIf(p && cond, v).as(s"__s_$nm"),
+        dsumIf(p && cond, v * v).as(s"__s2_$nm"))
     }
     val m = df.groupBy(by.map(col): _*).agg(aggs.head, aggs.tail: _*)
     def mean(nm: String): Column = col(s"__s_$nm") / col(s"n_$nm").cast("double")
@@ -632,20 +626,18 @@ object Stats {
         (byCols :+ col("__a") :+
           (floor(col("__x0") * 1000000.0 + 0.5) / 1000000.0).as("__x") :+
           (floor(col("__y0") * 1000000.0 + 0.5) / 1000000.0).as("__y")): _*)
-    def dsum(e: Column): Column =
-      coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
     val m = units
       .groupBy(byCols: _*)
       .agg(
         count(lit(1)).as("n_units"),
-        dsum(col("__x")).as("sx"),
-        dsum(col("__y")).as("sy"),
-        dsum(col("__x") * col("__y")).as("sxy"),
-        dsum(col("__x") * col("__x")).as("sxx"),
-        dsum(col("__y") * col("__y")).as("syy"),
+        dsum0(col("__x")).as("sx"),
+        dsum0(col("__y")).as("sy"),
+        dsum0(col("__x") * col("__y")).as("sxy"),
+        dsum0(col("__x") * col("__x")).as("sxx"),
+        dsum0(col("__y") * col("__y")).as("syy"),
         sum(col("__a")).as("na"),
-        dsum(when(col("__a") === 1L, col("__x"))).as("sxa"),
-        dsum(when(col("__a") === 1L, col("__y"))).as("sya"))
+        dsum0(when(col("__a") === 1L, col("__x"))).as("sxa"),
+        dsum0(when(col("__a") === 1L, col("__y"))).as("sya"))
     val n = col("n_units").cast("double")
     val naD = col("na").cast("double")
     val nbD = (col("n_units") - col("na")).cast("double")
@@ -763,8 +755,6 @@ object Stats {
       .groupBy(by.map(col): _*)
       .agg(count(lit(1)).as("n_obs"))
     val rho = acf(df, by, orderCol, tieCol, valueCol, maxLag)
-    def dsum(e: Column): Column =
-      sum(e.cast("decimal(38,6)")).cast("double")
     val terms = rho.join(nSeries, by)
       .select((by.map(col) :+ col("n_obs") :+
         (col("acf") * col("acf") /
@@ -774,7 +764,7 @@ object Stats {
       .agg(
         count(lit(1)).as("n_lags"),
         count(when(col("__t").isNull, lit(1))).as("__bad"),
-        dsum(graft.functions.Portable.r6(col("__t"))).as("__s"))
+        dsum(r6(col("__t"))).as("__s"))
     val nD = col("n_obs").cast("double")
     m.select((by.map(col) :+ col("n_obs") :+ col("n_lags") :+
       when(col("__bad") === 0L && col("n_obs") > maxLag.toLong,
@@ -830,10 +820,10 @@ object Stats {
         explode(col("__xs")).as("__e")): _*)
       .filter(col("__e.__rk") <= k && col("x_tail").isNotNull)
       .select((byCols :+ col("__nk") :+ col("x_tail") :+
-        graft.functions.Portable.r6(log(col("__e.__x") / col("x_tail"))).as("__t")): _*)
+        r6(log(col("__e.__x") / col("x_tail"))).as("__t")): _*)
     val m = terms
       .groupBy((byCols :+ col("__nk") :+ col("x_tail")): _*)
-      .agg((sum(col("__t").cast("decimal(38,6)")).cast("double") /
+      .agg((dsum(col("__t")) /
         count(lit(1)).cast("double")).as("__mean"))
     sizes.join(
         m.select((byCols :+ col("x_tail") :+
@@ -862,16 +852,13 @@ object Stats {
     val v = col(valueCol).cast("double")
     val p = ok(v)
     val isB = coalesce(armB, lit(false))
-    def dsum(cond: Column, e: Column): Column =
-      coalesce(sum(when(p && cond, graft.functions.Portable.r6(e).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val m = df
       .groupBy(by.map(col): _*)
       .agg(
         count(when(p && !isB, lit(1))).as("n_a"),
         count(when(p && isB, lit(1))).as("n_b"),
-        dsum(!isB, v).as("__sa"), dsum(isB, v).as("__sb"),
-        dsum(!isB, v * v).as("__sa2"), dsum(isB, v * v).as("__sb2"))
+        dsumIf(p && !isB, r6(v)).as("__sa"), dsumIf(p && isB, r6(v)).as("__sb"),
+        dsumIf(p && !isB, r6(v * v)).as("__sa2"), dsumIf(p && isB, r6(v * v)).as("__sb2"))
     val naD = col("n_a").cast("double")
     val nbD = col("n_b").cast("double")
     val meanA = col("__sa") / naD
@@ -945,13 +932,11 @@ object Stats {
       controlArm: String): DataFrame = {
     val v = col(valueCol).cast("double")
     val p = ok(v)
-    def dsum(e: Column): Column =
-      coalesce(sum(when(p, graft.functions.Portable.r6(e).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val m = df
       .filter(col(armCol).isNotNull)
       .groupBy(col(armCol).as("arm"))
-      .agg(count(when(p, lit(1))).as("n"), dsum(v).as("__s"), dsum(v * v).as("__s2"))
+      .agg(count(when(p, lit(1))).as("n"), dsumIf(p, r6(v)).as("__s"),
+        dsumIf(p, r6(v * v)).as("__s2"))
     val ctrl = m.filter(col("arm") === controlArm)
       .select(col("n").as("n_control"), col("__s").as("__cs"), col("__s2").as("__cs2"))
     val nD = col("n").cast("double")
@@ -1002,8 +987,7 @@ object Stats {
     val term = exp((col("score") - col("__mx")) / temperature)
     val withT = base.join(mx, by).withColumn("__t", term)
     val tot = withT.groupBy(byCols: _*)
-      .agg(sum(graft.functions.Portable.r6(col("__t")).cast("decimal(38,6)"))
-        .cast("double").as("__tot"))
+      .agg(dsum(r6(col("__t"))).as("__tot"))
     withT.join(tot, by)
       .select((byCols :+ col(idCol) :+ col("score") :+
         (col("__t") / col("__tot")).as("w")): _*)
@@ -1031,15 +1015,13 @@ object Stats {
     val x = col(xCol).cast("double")
     val y = col(yCol).cast("double")
     val p = ok(x) && ok(y)
-    def dsum(e: Column): Column =
-      coalesce(sum(when(p, graft.functions.Portable.r6(e).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val m = units
       .groupBy(by.map(col): _*)
       .agg(
         count(when(p, lit(1))).as("n"),
-        dsum(x).as("sum_x"), dsum(y).as("sum_y"),
-        dsum(x * x).as("__sxx"), dsum(y * y).as("__syy"), dsum(x * y).as("__sxy"))
+        dsumIf(p, r6(x)).as("sum_x"), dsumIf(p, r6(y)).as("sum_y"),
+        dsumIf(p, r6(x * x)).as("__sxx"), dsumIf(p, r6(y * y)).as("__syy"),
+        dsumIf(p, r6(x * y)).as("__sxy"))
     val nD = col("n").cast("double")
     val mx = col("sum_x") / nD
     val my = col("sum_y") / nD
@@ -1083,16 +1065,13 @@ object Stats {
     val v = col(valueCol).cast("double")
     val p = ok(v)
     val isB = coalesce(armB, lit(false))
-    def dsum(cond: Column, e: Column): Column =
-      coalesce(sum(when(p && cond, graft.functions.Portable.r6(e).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val m = df
       .groupBy(by.map(col): _*)
       .agg(
         count(when(p && !isB, lit(1))).as("n_a"),
         count(when(p && isB, lit(1))).as("n_b"),
-        dsum(!isB, v).as("__sa"), dsum(isB, v).as("__sb"),
-        dsum(!isB, v * v).as("__sa2"), dsum(isB, v * v).as("__sb2"))
+        dsumIf(p && !isB, r6(v)).as("__sa"), dsumIf(p && isB, r6(v)).as("__sb"),
+        dsumIf(p && !isB, r6(v * v)).as("__sa2"), dsumIf(p && isB, r6(v * v)).as("__sb2"))
     val naD = col("n_a").cast("double")
     val nbD = col("n_b").cast("double")
     val meanA = col("__sa") / naD
@@ -1131,16 +1110,13 @@ object Stats {
     val isB = coalesce(armB, lit(false))
     val e = coalesce(isEvent, lit(false))
     val exp0 = col(exposureCol).cast("double")
-    def dsum(cond: Column): Column =
-      coalesce(sum(when(cond && ok(exp0), graft.functions.Portable.r6(exp0).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val m = df
       .groupBy(by.map(col): _*)
       .agg(
         count(when(!isB && e, lit(1))).as("k_a"),
         count(when(isB && e, lit(1))).as("k_b"),
-        dsum(!isB).as("t_a"),
-        dsum(isB).as("t_b"))
+        dsumIf(!isB && ok(exp0), r6(exp0)).as("t_a"),
+        dsumIf(isB && ok(exp0), r6(exp0)).as("t_b"))
     val rateA = col("k_a").cast("double") / col("t_a")
     val rateB = col("k_b").cast("double") / col("t_b")
     val have = col("k_a") > 0 && col("k_b") > 0 && col("t_a") > 0.0 && col("t_b") > 0.0
@@ -1250,19 +1226,16 @@ object Stats {
     require(covariates.nonEmpty, "covariateBalance needs at least one covariate")
     require(covariates.distinct.size == covariates.size, "duplicate covariate names")
     val isB = coalesce(armB, lit(false))
-    def dsum(cond: Column, e: Column): Column =
-      coalesce(sum(when(cond, graft.functions.Portable.r6(e).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val aggs = covariates.flatMap { cv =>
       val v = col(cv).cast("double")
       val p = ok(v)
       Seq(
         count(when(p && !isB, lit(1))).as(s"__na_$cv"),
         count(when(p && isB, lit(1))).as(s"__nb_$cv"),
-        dsum(p && !isB, v).as(s"__sa_$cv"),
-        dsum(p && isB, v).as(s"__sb_$cv"),
-        dsum(p && !isB, v * v).as(s"__sa2_$cv"),
-        dsum(p && isB, v * v).as(s"__sb2_$cv"))
+        dsumIf(p && !isB, r6(v)).as(s"__sa_$cv"),
+        dsumIf(p && isB, r6(v)).as(s"__sb_$cv"),
+        dsumIf(p && !isB, r6(v * v)).as(s"__sa2_$cv"),
+        dsumIf(p && isB, r6(v * v)).as(s"__sb2_$cv"))
     }
     val row = df.agg(aggs.head, aggs.tail: _*)
     val perCov = array(covariates.map { cv =>
@@ -1280,10 +1253,10 @@ object Stats {
       struct(
         lit(cv).as("covariate"),
         na.as("n_a"), nb.as("n_b"),
-        graft.functions.Portable.r6(meanA).as("mean_a"),
-        graft.functions.Portable.r6(meanB).as("mean_b"),
-        graft.functions.Portable.r6(smd).as("smd"),
-        graft.functions.Portable.r6(when(va > 0.0, vb / va)).as("variance_ratio"))
+        r6(meanA).as("mean_a"),
+        r6(meanB).as("mean_b"),
+        r6(smd).as("smd"),
+        r6(when(va > 0.0, vb / va)).as("variance_ratio"))
     }: _*)
     row.select(explode(perCov).as("p")).select("p.*")
   }
@@ -1308,16 +1281,13 @@ object Stats {
     val v = col(valueCol).cast("double")
     val p = ok(v)
     val isB = coalesce(armB, lit(false))
-    def dsum(cond: Column, e: Column): Column =
-      coalesce(sum(when(p && cond, graft.functions.Portable.r6(e).cast("decimal(38,6)"))),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val m = df
       .groupBy(strata.map(col): _*)
       .agg(
         count(when(p && !isB, lit(1))).as("na"),
         count(when(p && isB, lit(1))).as("nb"),
-        dsum(!isB, v).as("sa"), dsum(isB, v).as("sb"),
-        dsum(!isB, v * v).as("sa2"), dsum(isB, v * v).as("sb2"))
+        dsumIf(p && !isB, r6(v)).as("sa"), dsumIf(p && isB, r6(v)).as("sb"),
+        dsumIf(p && !isB, r6(v * v)).as("sa2"), dsumIf(p && isB, r6(v * v)).as("sb2"))
     val naD = col("na").cast("double")
     val nbD = col("nb").cast("double")
     val meanA = col("sa") / naD
@@ -1334,8 +1304,7 @@ object Stats {
       when(varOk, svar(col("sa2"), meanA, naD) / naD + svar(col("sb2"), meanB, nbD) / nbD)
         .as("vs"))
     def d2(e: Column): Column =
-      coalesce(sum(graft.functions.Portable.r6(e).cast("decimal(38,6)")),
-        lit(0).cast("decimal(38,6)")).cast("double")
+      dsum0(r6(e))
     val g = perStratum.agg(
       sum(col("ns")).as("n"),
       count(lit(1)).as("n_strata"),
@@ -1381,14 +1350,11 @@ object Stats {
   ): DataFrame = {
     require(relEffect > 0, s"relEffect must be positive, got $relEffect")
     val v = col(valueCol).cast("double")
-    def dsum(e: Column): Column =
-      coalesce(sum(graft.functions.Portable.r6(e).cast("decimal(38,6)")),
-        lit(0).cast("decimal(38,6)")).cast("double")
     val coef = 2.0 * (zAlpha + zBeta) * (zAlpha + zBeta)
     val m = df
       .filter(ok(v))
       .groupBy(by.map(col): _*)
-      .agg(count(lit(1)).as("n"), dsum(v).as("__sx"), dsum(v * v).as("__sxx"))
+      .agg(count(lit(1)).as("n"), dsum0(r6(v)).as("__sx"), dsum0(r6(v * v)).as("__sxx"))
     val nD = col("n").cast("double")
     val mean = col("__sx") / nD
     val variance = greatest(col("__sxx") / nD - mean * mean, lit(0.0)) * nD / (nD - 1.0)
@@ -1424,8 +1390,7 @@ object Stats {
       yCol: String): DataFrame = {
     val byCols = by.map(col)
     def klnk(c: Column): Column =
-      sum(graft.functions.Portable.r6(c.cast("double") * log(c.cast("double")))
-        .cast("decimal(38,6)")).cast("double")
+      dsum(r6(c.cast("double") * log(c.cast("double"))))
     val joint = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy((byCols :+ col(xCol).as("__x") :+ col(yCol).as("__y")): _*)
@@ -1464,8 +1429,6 @@ object Stats {
     require(cols.size >= 2 && cols.size <= 16,
       s"correlationMatrix needs 2..16 columns, got ${cols.size} — wider " +
         "matrices belong in batched calls")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val base = df
       .filter(cols.map(c =>
         col(c).isNotNull && !isnan(col(c).cast("double"))).reduce(_ && _))
@@ -1512,8 +1475,6 @@ object Stats {
       valueCol: String,
       nBins: Int = 10): DataFrame = {
     require(nBins >= 2 && nBins <= 100, s"nBins must be in [2, 100], got $nBins")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val base = df.filter(v.isNotNull && !isnan(v)).select(v.as("__v"))
     val ps = (1 until nBins).map(_.toDouble / nBins)
@@ -1565,8 +1526,6 @@ object Stats {
     require(featureCols.size <= 64,
       s"miScreen melts the fact table x|cols|; ${featureCols.size} " +
         "columns exceed the 64-column audit contract — run in batches")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val cells = df
       .select(labelCol.cast("string").as("__y"),
         explode(array(featureCols.map(c => struct(
@@ -1630,8 +1589,6 @@ object Stats {
       raterCol: String,
       itemCol: String,
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val base = df
       .filter(v.isNotNull && !isnan(v) &&
@@ -1694,8 +1651,6 @@ object Stats {
       df: DataFrame,
       byCols: Seq[String],
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val g = df
       .filter(v.isNotNull && !isnan(v))
@@ -1724,8 +1679,6 @@ object Stats {
       df: DataFrame,
       byCols: Seq[String],
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val lx = log(v)
     val g = df
@@ -1769,8 +1722,6 @@ object Stats {
       returnQ: Double = 0.99): DataFrame = {
     require(blockUs > 0, s"blockUs must be positive, got $blockUs")
     require(returnQ > 0 && returnQ < 1, s"returnQ must be in (0,1), got $returnQ")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val sqrt6OverPi = 0.7796968012336793 // √6/π as the shared double
     val gamma = 0.5772156649015329 // Euler–Mascheroni
     val v = col(valueCol).cast("double")
@@ -1815,8 +1766,6 @@ object Stats {
       df: DataFrame,
       byCols: Seq[String],
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(byCols.map(col): _*).orderBy(col("__v"))
@@ -1862,8 +1811,6 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       valueCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val base = df
       .filter(v.isNotNull && !isnan(v))
@@ -1911,8 +1858,6 @@ object Stats {
       xCol: String,
       yCol: String,
       zCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val cols = Seq(xCol, yCol, zCol)
     val base = df
       .filter(cols.map(c =>

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,7 +42,6 @@ object Stump {
       bins: Int = 16): DataFrame = {
     require(features.nonEmpty, "bestSplits needs at least one feature")
     require(bins >= 2 && bins <= 4096, s"bins must be in [2, 4096], got $bins")
-    val r6 = Portable.r6 _
     val melted = data.select(
       label.cast("boolean").cast("int").as("__y"),
       explode(array(features.map { case (n, c) =>

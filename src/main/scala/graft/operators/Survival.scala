@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, dsum0, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -79,7 +80,7 @@ object Survival {
     // instead of an unportable infinity, and no later row exists to
     // inherit the skip.
     val term = when(col("d_events") > 0 && col("d_events") < col("n_risk"),
-      graft.functions.Portable.r6(
+      r6(
         log(lit(1.0) - col("d_events").cast("double") / col("n_risk").cast("double"))))
       .otherwise(lit(0.0))
     withRisk
@@ -159,18 +160,16 @@ object Survival {
     val nA = col("n_a_risk").cast("double")
     val n = (col("n_a_risk") + col("n_b_risk")).cast("double")
     val p = nA / n
-    val eTerm = when(d > 0.0, graft.functions.Portable.r6(d * p)).otherwise(lit(0.0))
+    val eTerm = when(d > 0.0, r6(d * p)).otherwise(lit(0.0))
     val vTerm = when(d > 0.0 && n > 1.0,
-      graft.functions.Portable.r6(d * p * (lit(1.0) - p) * (n - d) / (n - 1.0)))
+      r6(d * p * (lit(1.0) - p) * (n - d) / (n - 1.0)))
       .otherwise(lit(0.0))
-    def dsum(e: Column): Column =
-      coalesce(sum(e.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
     withRisk.agg(
         max(col("__tot_a")).as("n_a"),
         max(col("__tot_b")).as("n_b"),
         sum(col("d_a")).as("o_a"),
-        dsum(eTerm).as("e_a"),
-        dsum(vTerm).as("v"))
+        dsum0(eTerm).as("e_a"),
+        dsum0(vTerm).as("v"))
       .withColumn(
         "chi2",
         when(col("n_a") > 0 && col("n_b") > 0 && col("v") > 0.0,
@@ -223,7 +222,7 @@ object Survival {
       .withColumn("n_risk",
         col("__total") - coalesce(
           sum(col("d_events") + col("c_censored")).over(prior), lit(0L)))
-    val inc = graft.functions.Portable.r6(
+    val inc = r6(
       col("d_events").cast("double") / col("n_risk").cast("double"))
     withRisk
       .withColumn("hazard", inc)
@@ -255,8 +254,6 @@ object Survival {
       eventType: String,
       horizonDays: Long): DataFrame = {
     require(horizonDays > 0, s"horizon must be positive, got $horizonDays")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val curve = kaplanMeier(events, keyCol, timeCol, typeCol, eventType)
     val byT = Window.orderBy(col("t_day"))
     val tau = lit(horizonDays.toDouble)
@@ -302,8 +299,6 @@ object Survival {
       inA: Column,
       horizonDays: Long): DataFrame = {
     require(horizonDays > 0, s"horizon must be positive, got $horizonDays")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val t = unix_micros(col(timeCol))
     val tau = lit(horizonDays.toDouble)
     val spans = events
@@ -396,7 +391,6 @@ object Survival {
       cause1: String,
       cause2: String): DataFrame = {
     require(cause1 != cause2, "the two causes must differ")
-    val r6 = graft.functions.Portable.r6 _
     val t = unix_micros(col(timeCol))
     val spans = events
       .filter(col(timeCol).isNotNull)
@@ -475,12 +469,11 @@ object Survival {
     * upstream); each Newton step is one map-side-combined groupBy(day)
     * over it plus windows on the DAY-granularity frame — bounded by the
     * observation horizon, the [[kaplanMeier]] global-window contract —
-    * collected to ONE (U, I, ll) row whose β update runs driver-side
-    * via [[graft.functions.Portable.r6d]] (bit-identical to the in-plan
-    * rounding) and re-enters the next step as a literal. `iters` steps
-    * = `iters`+1 linear passes, zero subject-frame shuffles beyond the
-    * day groupBy. The previous shape (β in a one-row frame folded into
-    * the next step's plan) referenced β THREE times per step, so the
+    * collected to ONE (U, I, ll) row with the [[graft.functions.Portable.r6]]-
+    * rounded β update, which re-enters the next step as a one-row local
+    * frame. `iters` steps = `iters`+1 linear passes, zero subject-frame
+    * shuffles beyond the day groupBy. The previous shape (β in a one-row
+    * frame folded into the next step's plan) referenced β THREE times per step, so the
     * logical plan — and the executed aggregate count, Spark not
     * dedup'ing common subplans — grew 3^(iters+1): at iters=4 that was
     * up to ~3⁵ redundant day-aggregate+window passes (measured: q_cox
@@ -501,8 +494,6 @@ object Survival {
       iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 16,
       s"coxPh is a fixed-step Newton contract: 1 <= iters <= 16, got $iters")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     import graft.plans.Materialize.PinOps
     // every Newton step re-reads the subject frame: pin it once so the
     // steps iterate over the per-key frame, never the upstream event log

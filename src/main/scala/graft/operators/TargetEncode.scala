@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.Portable.{dsum, r6}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Leave-one-out target encoding of a categorical column — the
@@ -32,17 +33,15 @@ object TargetEncode {
       smoothing: Double = 0.0): DataFrame = {
     require(smoothing >= 0, s"smoothing must be >= 0, got $smoothing")
     val y = col(targetCol).cast("double")
-    def dsum(e: Column): Column =
-      sum(graft.functions.Portable.r6(e).cast("decimal(38,6)")).cast("double")
     val ok = col(catCol).isNotNull && y.isNotNull && !isnan(y)
     val cat = df.filter(ok)
       .groupBy(col(catCol).as("__c"))
-      .agg(dsum(y).as("__s"), count(lit(1)).as("__n"))
+      .agg(dsum(r6(y)).as("__s"), count(lit(1)).as("__n"))
     val glob = df.filter(ok)
-      .agg((dsum(y) / count(lit(1)).cast("double")).as("__gmean"))
+      .agg((dsum(r6(y)) / count(lit(1)).cast("double")).as("__gmean"))
     val denom = col("__n").cast("double") - 1.0 + smoothing
     val enc = when(ok && denom > 0.0,
-      (col("__s") - graft.functions.Portable.r6(y) + lit(smoothing) * col("__gmean")) / denom)
+      (col("__s") - r6(y) + lit(smoothing) * col("__gmean")) / denom)
     df.join(broadcast(cat), df(catCol) === col("__c"), "left")
       .crossJoin(broadcast(glob))
       .withColumn("enc", enc)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -128,15 +129,13 @@ object Transitions {
       timeCol: String,
       typeCol: String,
       tieCol: String): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val tc = transitionCounts(events, keyCol, timeCol, typeCol, tieCol)
     val perState = tc
       .groupBy(col("prev"))
       .agg(
         sum(col("n")).as("__ns"),
-        dsum(r6(-graft.functions.Portable.r6(col("p")) *
-          log(graft.functions.Portable.r6(col("p"))))).as("__h"))
+        dsum(r6(-r6(col("p")) *
+          log(r6(col("p"))))).as("__h"))
     val total = perState.agg(coalesce(sum(col("__ns")), lit(0L)).as("__nt"))
     perState
       .crossJoin(broadcast(total)) // one-row totals frame: lint-exempt
@@ -146,10 +145,10 @@ object Transitions {
         r6(coalesce(dsum(r6(col("__ns").cast("double") /
           col("__nt").cast("double") * col("__h"))), lit(0.0))).as("entropy_rate"))
       .withColumn("max_entropy",
-        when(col("n_states") > 0, graft.functions.Portable.r6(
+        when(col("n_states") > 0, r6(
           log(col("n_states").cast("double")))))
       .withColumn("predictability",
-        when(col("max_entropy") > 0, graft.functions.Portable.r6(
+        when(col("max_entropy") > 0, r6(
           lit(1.0) - col("entropy_rate") / col("max_entropy"))))
   }
 
@@ -179,7 +178,6 @@ object Transitions {
       typeCol: String,
       tieCol: String,
       inTrain: Column): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val w = Window.partitionBy(col(keyCol)).orderBy(unix_micros(col(timeCol)), col(tieCol))
     val bigrams = events
       .filter(col(timeCol).isNotNull && col(typeCol).isNotNull)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -207,8 +208,6 @@ object Trend {
     require(byCols.nonEmpty, "PAA needs at least one key column")
     require(nSegments >= 2 && nSegments <= 64,
       s"nSegments must be in [2, 64], got $nSegments")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val by = byCols.map(col)
     val v = col(valueCol).cast("double")
     val base = df
@@ -254,7 +253,6 @@ object Trend {
       tieCol: String,
       valueCol: String,
       nSegments: Int = 8): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     paaFrame(df, byCols, timeCol, tieCol, valueCol, nSegments)
       .groupBy(byCols.map(col): _*)
       .agg(first(col("__n")).as("n"),
@@ -329,8 +327,6 @@ object Trend {
     require(blockSizes.size >= 2 && blockSizes.forall(_ >= 4) &&
       blockSizes.distinct == blockSizes && blockSizes.max <= 4096,
       s"need >= 2 distinct block sizes in [4, 4096], got $blockSizes")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val by = byCols.map(col)
     val v = col(valueCol).cast("double")
     val wk = org.apache.spark.sql.expressions.Window

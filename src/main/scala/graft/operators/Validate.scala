@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,7 @@ object Validate {
         lit(r.name).as("rule"),
         col("__n").as("n_rows"),
         col(s"__v_${r.name}").as("n_violations"),
-        graft.functions.Portable.r6(col(s"__v_${r.name}") / greatest(col("__n"), lit(1L)))
+        r6(col(s"__v_${r.name}") / greatest(col("__n"), lit(1L)))
           .as("violation_frac"))
     }: _*)
     row.select(explode(perRule).as("p")).select("p.*")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -69,8 +69,8 @@ object Woe {
       .withColumn("__pb", b / totB)
     val woe = log(col("__pg") / col("__pb"))
     val scored = withDist
-      .withColumn("woe", Portable.r6(woe))
-      .withColumn("iv_term", Portable.r6((col("__pg") - col("__pb")) * woe))
+      .withColumn("woe", r6(woe))
+      .withColumn("iv_term", r6((col("__pg") - col("__pb")) * woe))
     scored
       .withColumn("iv",
         sum(col("iv_term").cast("decimal(38,6)")).over(perFeature).cast("double"))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.dsum0
 import graft.plans.Materialize.PinOps
 import graft.text.TextFunctions
 import org.apache.spark.sql.DataFrame
@@ -47,10 +48,8 @@ object CorpusReport {
       .groupBy("source")
       .agg(
         count(lit(1)).as("n_docs"),
-        (coalesce(sum(col("n_chars").cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-          .cast("double") / count(lit(1)).cast("double")).as("mean_chars"),
-        (coalesce(sum(col("q").cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-          .cast("double") / count(lit(1)).cast("double")).as("mean_quality"))
+        (dsum0(col("n_chars")) / count(lit(1)).cast("double")).as("mean_chars"),
+        (dsum0(col("q")) / count(lit(1)).cast("double")).as("mean_quality"))
     // H = ln N − (Σ n·ln n)/N over the language cells, DECIMAL-summed
     // so reduction order can't wiggle low bits (the word-entropy form)
     val entropy = base

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import graft.dedup.Dedup
 import graft.text.TextFunctions
@@ -84,7 +85,7 @@ object Curation {
     val scores = graft.text.Importance
       .importanceScore(docs, idCol, textCol, targetPred)
       .withColumnRenamed("id", idCol)
-      .withColumn("llr", graft.functions.Portable.r6(col("llr")))
+      .withColumn("llr", r6(col("llr")))
       .filter(col("llr") > minLlr)
     Selection.selectUnderBudget(
       docs.join(scores.select(col(idCol), col("llr")), idCol),

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,7 +41,7 @@ object Fusion {
     }
     val joined = contribs.reduce((a, b) => a.join(b, Seq("query_id", "doc_id"), "full_outer"))
     // fixed left-to-right addition order over the list index: portable
-    val rrf = graft.functions.Portable.r6(
+    val rrf = r6(
       (0 until rankings.size).map(i => coalesce(col(s"__c$i"), lit(0.0))).reduce(_ + _))
     val w = Window.partitionBy(col("query_id")).orderBy(col("rrf").desc, col("doc_id"))
     joined

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -27,8 +27,6 @@ object Influence {
       df: DataFrame,
       groupCol: String,
       metric: Column): DataFrame = {
-    val r6 = Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val m = metric.cast("double")
     val groups = df
       .filter(m.isNotNull && !isnan(m))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -54,7 +55,7 @@ object Labels {
           .as("label_target"))
       .filter(col("n_obs_events") > 0)
       .withColumn("recency_hours",
-        graft.functions.Portable.r6(
+        r6(
           (lit(cutoffUs) - col("__last")).cast("double") / 3600000000.0))
       .select(col(userCol), col("n_obs_events"), col("n_obs_target"),
         col("n_active_days"), col("recency_hours"),

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.{dsum, dsum0, r6}
 import graft.text.TextFunctions.md5Hash32
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -189,21 +190,19 @@ object Sampling {
       alpha: Double = 0.5
   ): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    import graft.functions.Portable.r6
     val g = df
       .groupBy(col(groupCol))
       .agg(
         count(lit(1)).as("n_rows"),
-        coalesce(sum(col(sizeCol).cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-          .cast("double").as("size_total"))
+        dsum0(col(sizeCol)).as("size_total"))
       .withColumn(
         "__sc",
         r6(
           if (alpha == 0.5) sqrt(col("size_total"))
           else pow(col("size_total"), lit(alpha))))
     val tot = g.agg(
-      sum(col("__sc").cast("decimal(38,6)")).cast("double").as("__tot"),
-      sum(col("size_total").cast("decimal(38,6)")).cast("double").as("__grand"))
+      dsum(col("__sc")).as("__tot"),
+      dsum(col("size_total")).as("__grand"))
     g.crossJoin(broadcast(tot))
       .select(
         col(groupCol),
@@ -247,19 +246,17 @@ object Sampling {
     require(maxEpochs > 0, s"maxEpochs must be positive, got $maxEpochs")
     val spark = df.sparkSession
     import spark.implicits._
-    import graft.functions.Portable.r6
     val wdf = weights.toSeq.toDF(groupCol, "__w")
     val g = df
       .groupBy(col(groupCol))
       .agg(
         count(lit(1)).as("n_rows"),
-        coalesce(sum(col(sizeCol).cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-          .cast("double").as("tokens"))
+        dsum0(col(sizeCol)).as("tokens"))
       .join(broadcast(wdf), Seq(groupCol), "left")
       .withColumn("__w", when(col("tokens") > 0.0, coalesce(col("__w"), lit(0.0)))
         .otherwise(lit(0.0)))
     val tot = g.agg(
-      sum(r6(col("__w")).cast("decimal(38,6)")).cast("double").as("__wtot"))
+      dsum(r6(col("__w"))).as("__wtot"))
     val weight = col("__w") / nullif(col("__wtot"), lit(0.0))
     val target = lit(budget.toDouble) * weight
     val epochs = when(col("tokens") > 0.0,
@@ -306,8 +303,6 @@ object Sampling {
       iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 32,
       s"rakeWeights is a fixed-step IPF contract: 1 <= iters <= 32, got $iters")
-    import graft.functions.Portable.r6
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     def shares(df: DataFrame, c: String, out: String): DataFrame = {
       val g = df.groupBy(col(c).cast("string").as(out)).agg(count(lit(1)).as("__cnt"))
       val t = g.agg(sum(col("__cnt")).as("__tt"))
@@ -379,8 +374,6 @@ object Sampling {
       valueCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    import graft.functions.Portable.r6
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val v = col(valueCol).cast("double")
     val nD = count(lit(1)).cast("double")
     val strata = df

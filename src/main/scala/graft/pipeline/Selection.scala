@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -197,7 +198,6 @@ object Selection {
     require(k >= 1, s"k must be >= 1, got $k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda must be in [0,1], got $lambda")
     import graft.plans.Materialize.PinOps
-    val r6 = graft.functions.Portable.r6 _
     val wc = Window.partitionBy(col(queryCol))
     val guarded = candidates
       .withColumn("__nc", count(lit(1)).over(wc))

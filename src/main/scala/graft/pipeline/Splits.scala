@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.md5Hash32
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -83,8 +84,6 @@ object Splits {
       k: Int = 5,
       seed: String = "cv"): DataFrame = {
     require(k >= 2 && k <= 1000, s"k must be in [2, 1000], got $k")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val y = col(yCol).cast("double")
     val fold = pmod(md5Hash32(concat_ws("|", lit(seed), col(idCol).cast("string"))), lit(k))
     val rows = df

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.functions.Portable
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -110,9 +110,9 @@ object Bleu {
     val anyZero = (1 to MaxN).map(n => col(s"p$n") === 0.0).reduce(_ || _)
     val bleu = when(anyZero, lit(0.0)).otherwise(col("bp") * exp(lnSum / MaxN))
     withP
-      .withColumn("bp", Portable.r6(bp))
-      .withColumn("bleu", Portable.r6(bleu))
+      .withColumn("bp", r6(bp))
+      .withColumn("bleu", r6(bleu))
       .select((by.map(col) :+ col("n_pairs") :+ col("cand_tokens") :+ col("ref_tokens") :+
-        col("bp")) ++ (1 to MaxN).map(n => Portable.r6(col(s"p$n")).as(s"p$n")) :+ col("bleu"): _*)
+        col("bp")) ++ (1 to MaxN).map(n => r6(col(s"p$n")).as(s"p$n")) :+ col("bleu"): _*)
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.wordTokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -123,7 +124,7 @@ object Bm25 {
       .crossJoin(broadcast(stats))
       .select(col("query_id"), col("id"), (idf * tfNorm).as("__s"))
       .groupBy("query_id", "id")
-      .agg(graft.functions.Portable.r6(sum("__s")).as("bm25"))
+      .agg(r6(sum("__s")).as("bm25"))
     graft.pipeline.Selection
       .topKPerGroup(scored, Seq("query_id"), "bm25", k, tieBreakCol = "id")
   }
@@ -180,9 +181,6 @@ object Bm25 {
       textCol: String = "text"
   ): DataFrame = {
     require(fbDocs > 0 && fbTerms > 0, "need positive feedback sizes")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(38,6)")).cast("double")
     val top = score(docs, queryTerms, k1, b, idCol, textCol)
       .select(col("id"), r6(col("bm25")).as("__s"))
       .orderBy(col("__s").desc, col("id").asc)
@@ -217,7 +215,6 @@ object Bm25 {
       idCol: String = "doc_id",
       textCol: String = "text"
   ): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     score(docs, queryTerms, k1, b, idCol, textCol)
       .join(minPairSpan(docs, queryTerms, idCol, textCol), Seq("id"), "left")
       .select(col("id"), r6(col("bm25")).as("bm25"), col("min_span"),

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import graft.text.TextFunctions.wordTokens
 import org.apache.spark.sql.{Column, DataFrame}
@@ -226,7 +227,6 @@ object Keywords {
     require(topN >= 1, s"topN must be >= 1, got $topN")
     require(maxLen >= 1, s"maxLen must be >= 1, got $maxLen")
     require(stopwords.nonEmpty, "rake needs a stopword list")
-    val r6 = graft.functions.Portable.r6 _
     val toks = docs
       .select(col(groupCol).as("group"), col(idCol).as("__doc"),
         posexplode(wordTokens(col(textCol))).as(Seq("pos", "w")))
@@ -257,8 +257,7 @@ object Keywords {
       .agg(
         max(col("n_occurrences")).as("n_occurrences"),
         max(col("n_words")).cast("long").as("n_words"),
-        r6(sum(r6(col("__deg").cast("double") / col("__freq").cast("double"))
-          .cast("decimal(38,6)")).cast("double")).as("score"))
+        r6(dsum(r6(col("__deg").cast("double") / col("__freq").cast("double")))).as("score"))
     scored
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -289,7 +288,6 @@ object Keywords {
       idCol: String,
       textCol: String,
       minDf: Long = 2L): DataFrame = {
-    val r6 = graft.functions.Portable.r6 _
     val tf = docs
       .select(col(idCol).as("__id"),
         explode(TextFunctions.wordTokens(col(textCol))).as("__w"))

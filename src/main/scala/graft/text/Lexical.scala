@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,6 @@ object Lexical {
       byCols: Seq[String],
       textCol: String = "text"): DataFrame = {
     require(byCols.nonEmpty, "yuleK needs at least one grouping column")
-    val r6 = graft.functions.Portable.r6 _
     val by = byCols.map(col)
     val vocab = df
       .select((by :+ explode(TextFunctions.wordTokens(col(textCol))).as("__w")): _*)
@@ -127,8 +127,6 @@ object Lexical {
       textCol: String = "text",
       nWords: Int = 50): DataFrame = {
     require(nWords >= 5 && nWords <= 500, s"nWords must be in [5, 500], got $nWords")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(e: Column): Column = sum(e.cast("decimal(38,6)")).cast("double")
     val toks = df
       .select(col(sourceCol).as("__s"),
         explode(TextFunctions.wordTokens(col(textCol))).as("__w"))

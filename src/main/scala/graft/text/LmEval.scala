@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.md5Hash32
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -36,9 +36,6 @@ object LmEval {
       seed: String = "lm"): DataFrame = {
     require(smoothing > 0, s"add-k smoothing needs k > 0, got $smoothing")
     require(trainPct > 0 && trainPct < 100, s"trainPct must be in (0,100), got $trainPct")
-    val r6 = Portable.r6 _
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(38,6)")).cast("double")
     val h = pmod(md5Hash32(concat_ws("|", lit(seed), col(idCol).cast("string"))), lit(100))
     val toks = docs
       .select((h < trainPct).as("__train"),

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -67,12 +67,12 @@ object NaiveBayes {
           (col("__nc").cast("double") + lit(2.0 * alpha)))
     val model = grid.select(
       col("__w"), col("__label").as("__class"),
-      Portable.r6(log(col("__p")) - log(lit(1.0) - col("__p"))).as("__wt"),
-      Portable.r6(log(lit(1.0) - col("__p"))).as("__ln1p"))
+      r6(log(col("__p")) - log(lit(1.0) - col("__p"))).as("__wt"),
+      r6(log(lit(1.0) - col("__p"))).as("__ln1p"))
     // per-class constant: ln prior + Σ_vocab ln(1−p)
     val classConst = model
       .groupBy("__class")
-      .agg(sum(col("__ln1p").cast("decimal(38,6)")).cast("double").as("__s"))
+      .agg(dsum(col("__ln1p")).as("__s"))
       .join(broadcast(classes.withColumnRenamed("__label", "__class")), "__class")
       .crossJoin(broadcast(total))
       .select(col("__class"),
@@ -81,20 +81,20 @@ object NaiveBayes {
       .select(col("__id"), col("__label"), col("__w"))
       .join(model.select(col("__w"), col("__class"), col("__wt")), "__w")
       .groupBy(col("__id"), col("__label"), col("__class"))
-      .agg(sum(col("__wt").cast("decimal(38,6)")).cast("double").as("__m"))
+      .agg(dsum(col("__wt")).as("__m"))
       .join(broadcast(classConst), "__class")
-      .withColumn("log_post", Portable.r6(col("__const") + col("__m")))
+      .withColumn("log_post", r6(col("__const") + col("__m")))
     // max-shifted softmax per doc (classes-per-doc is class-count-sized)
     val byDoc = Window.partitionBy(col("__id"))
     val shifted = docClass
       .withColumn("__mx", max(col("log_post")).over(byDoc))
-      .withColumn("__e", Portable.r6(exp(col("log_post") - col("__mx"))))
+      .withColumn("__e", r6(exp(col("log_post") - col("__mx"))))
       .withColumn("__den", sum(col("__e").cast("decimal(38,6)")).over(byDoc).cast("double"))
     shifted.select(
       col("__id").as(idCol),
       col("__label").as("label"),
       col("__class").as("class"),
       col("log_post"),
-      Portable.r6(col("__e") / col("__den")).as("posterior"))
+      r6(col("__e") / col("__den")).as("posterior"))
   }
 }

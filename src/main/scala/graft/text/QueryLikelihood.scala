@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.functions.Portable
+import graft.functions.Portable.{dsum, r6}
 import graft.text.TextFunctions.wordTokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -73,14 +73,14 @@ object QueryLikelihood {
     val matched = tf
       .join(broadcast(qt), "term")
       .crossJoin(broadcast(coll))
-      .select(col("query_id"), col("id"), Portable.r6(term).as("__t"))
+      .select(col("query_id"), col("id"), r6(term).as("__t"))
       .groupBy("query_id", "id")
-      .agg(sum(col("__t").cast("decimal(38,6)")).cast("double").as("__m"))
+      .agg(dsum(col("__t")).as("__m"))
     val scored = matched
       .join(dl, "id")
       .join(broadcast(qlen), "query_id")
       .select(col("query_id"), col("id"),
-        Portable.r6(col("__m") + col("qlen") * log(lit(mu) / (col("dl") + lit(mu)))).as("qlm"))
+        r6(col("__m") + col("qlen") * log(lit(mu) / (col("dl") + lit(mu)))).as("qlm"))
     graft.pipeline.Selection.topKPerGroup(scored, Seq("query_id"), "qlm", k, tieBreakCol = "id")
   }
 }

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.Portable.{dsum, dsum0, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,7 +71,7 @@ object RetrievalEval {
       .withColumn("__rel", coalesce(col("__rel"), lit(false)))
     // per-rank gain, r6'd then DECIMAL-summed so frame order is free
     val gain = when(col("__rel"),
-      graft.functions.Portable.r6(lit(1.0) / log2(col("rank").cast("double") + 1.0)))
+      r6(lit(1.0) / log2(col("rank").cast("double") + 1.0)))
       .cast("decimal(38,6)")
     val perQuery = judged
       .groupBy("query_id")
@@ -81,7 +82,7 @@ object RetrievalEval {
     // ideal DCG: ascending fold over the best min(n_relevant, k) ranks
     val idcg = aggregate(
       transform(sequence(lit(1), least(col("n_relevant"), lit(k)).cast("int")),
-        i => graft.functions.Portable.r6(lit(1.0) / log2(i.cast("double") + 1.0))),
+        i => r6(lit(1.0) / log2(i.cast("double") + 1.0))),
       lit(0.0),
       (acc, x) => acc + x)
     perQuery
@@ -160,7 +161,6 @@ object RetrievalEval {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxGrade >= 1 && maxGrade <= 16,
       s"maxGrade must be in [1, 16], got $maxGrade — 2^g must stay exact")
-    val r6 = graft.functions.Portable.r6 _
     // a qrel grade above maxGrade would make the cascade stop-probability
     // R > 1, so log(1 - R) goes NULL and the window sum silently DROPS
     // that term from the continuation — ERR would come out quietly wrong.
@@ -191,19 +191,15 @@ object RetrievalEval {
       .withColumn("__cont", exp(coalesce(sum(col("__logc")).over(wPrev), lit(0.0))))
       .groupBy("query_id")
       .agg(
-        coalesce(sum(r6(gain(col("grade"), col("rank"))).cast("decimal(38,6)")),
-          lit(0).cast("decimal(38,6)")).cast("double").as("__dcg"),
-        coalesce(sum(r6(stopP / col("rank").cast("double") * col("__cont"))
-          .cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
-          .cast("double").as("__err"))
+        dsum0(r6(gain(col("grade"), col("rank")))).as("__dcg"),
+        dsum0(r6(stopP / col("rank").cast("double") * col("__cont"))).as("__err"))
     val wIdeal = Window.partitionBy(col("query_id"))
       .orderBy(col("grade").desc, col("id").asc)
     val ideal = rel
       .withColumn("__ir", row_number().over(wIdeal))
       .filter(col("__ir") <= k)
       .groupBy("query_id")
-      .agg(coalesce(sum(r6(gain(col("grade"), col("__ir"))).cast("decimal(38,6)")),
-        lit(0).cast("decimal(38,6)")).cast("double").as("__idcg"))
+      .agg(dsum0(r6(gain(col("grade"), col("__ir")))).as("__idcg"))
     ranking.select(col("query_id")).distinct()
       .join(perQuery, Seq("query_id"), "left")
       .join(broadcast(nRel), Seq("query_id"), "left")
@@ -231,7 +227,6 @@ object RetrievalEval {
     */
   def errAtK(ranking: DataFrame, relevance: DataFrame, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val r6 = graft.functions.Portable.r6 _
     val relDistinct = relevance.select(col("query_id"), col("id")).distinct()
     val nRel = relDistinct.groupBy("query_id").agg(count(lit(1)).as("n_relevant"))
     val judged = ranking
@@ -246,11 +241,8 @@ object RetrievalEval {
       .withColumn("__j", count(when(col("__rel"), lit(1))).over(wq))
       .filter(col("__rel"))
       .groupBy("query_id")
-      .agg(coalesce(sum(
-        graft.functions.Portable.r6(
-          pow(lit(0.5), col("__j").cast("double")) / col("rank").cast("double"))
-          .cast("decimal(38,6)")),
-        lit(0).cast("decimal(38,6)")).cast("double").as("__err"))
+      .agg(dsum0(r6(
+          pow(lit(0.5), col("__j").cast("double")) / col("rank").cast("double"))).as("__err"))
     ranking.select(col("query_id")).distinct()
       .join(perQuery, Seq("query_id"), "left")
       .join(broadcast(nRel), Seq("query_id"), "left")
@@ -319,8 +311,7 @@ object RetrievalEval {
       .groupBy(col("q"))
       .agg(
         max(when(col("d") === k, col("__x"))).as("__xk"),
-        sum(graft.functions.Portable.r6(col("__t")).cast("decimal(38,6)"))
-          .cast("double").as("__s"))
+        dsum(r6(col("__t"))).as("__s"))
       .join(sizes, "q")
       .select(col("q").as(queryCol), col("n_a"), col("n_b"),
         (col("__xk").cast("double") / k.toDouble).as("overlap_k"),

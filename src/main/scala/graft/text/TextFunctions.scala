@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.Portable.r6
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -93,9 +94,9 @@ object TextFunctions {
     struct(
       nChars.as("n_chars"),
       nWords.as("n_words"),
-      graft.functions.Portable.r6(alphaChars.cast("double") / greatest(nWords, lit(1))).as("mean_word_len"),
-      graft.functions.Portable.r6(punct.cast("double") / greatest(nChars, lit(1))).as("punct_ratio"),
-      graft.functions.Portable.r6(stopHits.cast("double") / greatest(nWords, lit(1))).as("stopword_ratio")
+      r6(alphaChars.cast("double") / greatest(nWords, lit(1))).as("mean_word_len"),
+      r6(punct.cast("double") / greatest(nChars, lit(1))).as("punct_ratio"),
+      r6(stopHits.cast("double") / greatest(nWords, lit(1))).as("stopword_ratio")
     )
   }
 
@@ -116,8 +117,8 @@ object TextFunctions {
       when(size(xs) > 0,
         lit(1.0) - size(array_distinct(xs)).cast("double") / size(xs)).otherwise(0.0)
     struct(
-      graft.functions.Portable.r6(dupFrac(lines)).as("dup_line_frac"),
-      graft.functions.Portable.r6(dupFrac(toks)).as("dup_token_frac")
+      r6(dupFrac(lines)).as("dup_line_frac"),
+      r6(dupFrac(toks)).as("dup_token_frac")
     )
   }
 
@@ -215,7 +216,7 @@ object TextFunctions {
     val stopScore = least(f("stopword_ratio") * 5.0, lit(1.0))
     val punctPenalty = least(f("punct_ratio") * 5.0, lit(1.0))
     val wordLenOk = when(f("mean_word_len").between(2.0, 12.0), 1.0).otherwise(0.0)
-    graft.functions.Portable.r6(lit(0.4) * lenScore + lit(0.3) * stopScore + lit(0.2) * wordLenOk
+    r6(lit(0.4) * lenScore + lit(0.3) * stopScore + lit(0.2) * wordLenOk
       + lit(0.1) * (lit(1.0) - punctPenalty))
   }
 
@@ -269,7 +270,6 @@ object TextFunctions {
     * ULP-insensitive across engines (§5 convention).
     */
   def gopherRules(text: Column): Column = {
-    import graft.functions.Portable.r6
     val words = filter(split(text, "\\s+"), t => t =!= "")
     val nWords = size(words).cast("long")
     val wDen = greatest(nWords, lit(1L)).cast("double")
@@ -312,7 +312,6 @@ object TextFunctions {
     * the scan, zero shuffle.
     */
   def c4Rules(text: Column): Column = {
-    import graft.functions.Portable.r6
     // \r is stripped BEFORE splitting: Java's unanchored `$` also matches
     // before a final \r (RE2's does not), so lines must hold no terminator
     // for the end-punctuation test to agree across engines.
@@ -368,7 +367,6 @@ object TextFunctions {
     * shuffle.
     */
   def encodingArtifacts(text: Column): Column = {
-    import graft.functions.Portable.r6
     val nRepl = regexp_count(text, lit("�")).cast("long")
     val nCtrl = regexp_count(text, lit("[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]")).cast("long")
     val nMoji = regexp_count(text, lit("Ã[©¨¤¶¼±‰]|â€|Â[«»]")).cast("long")

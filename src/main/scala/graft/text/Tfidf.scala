@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import graft.text.TextFunctions.wordTokens
 import org.apache.spark.sql.DataFrame
@@ -144,8 +145,7 @@ object Tfidf {
       .groupBy("group", "bucket")
       .agg(
         count(lit(1)).as("n_docs"),
-        (sum(graft.functions.Portable.r6(col("mean_log_prob")).cast("decimal(38,6)"))
-          .cast("double") / count(lit(1)).cast("double")).as("mean_lp"),
+        (dsum(r6(col("mean_log_prob"))) / count(lit(1)).cast("double")).as("mean_lp"),
         min(col("mean_log_prob")).as("min_lp"),
         max(col("mean_log_prob")).as("max_lp"))
   }

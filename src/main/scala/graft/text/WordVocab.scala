@@ -1,6 +1,7 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.Portable.{dsum, r6}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,8 +99,6 @@ object WordVocab {
       s"need 1..64 checkpoints, got ${checkpoints.size}")
     require(checkpoints == checkpoints.sorted && checkpoints.distinct == checkpoints,
       "checkpoints must be strictly increasing")
-    val r6 = graft.functions.Portable.r6 _
-    def dsum(c: Column): Column = sum(c.cast("decimal(38,6)")).cast("double")
     val firstDoc = docs
       .select(col(idCol).cast("long").as("__id"), explode(toks(textCol)).as("word"))
       .groupBy(col("word")).agg(min(col("__id")).as("__fd"))
@@ -169,14 +168,13 @@ object WordVocab {
       power: Double = 0.75,
       minCount: Long = 1L): DataFrame = {
     require(power > 0 && power <= 1.0, s"power must be in (0, 1], got $power")
-    val r6 = graft.functions.Portable.r6 _
     val counts = docs
       .select(explode(toks(textCol)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
       .withColumn("weight", r6(pow(col("n").cast("double"), lit(power))))
     val total = counts.agg(
-      sum(col("weight").cast("decimal(38,6)")).cast("double").as("__tw"))
+      dsum(col("weight")).as("__tw"))
     val byRank = Window.orderBy(col("n").desc, col("word"))
     val run = byRank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     counts
