@@ -3,6 +3,7 @@ package graft
 import graft.meds.{ConfigPipeline, Meds}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Spark-submit-able pipeline entry point — parity with the reference's
   * deployment UI, where every stage ships as a console script
@@ -123,8 +124,11 @@ object Main {
     }
   }
 
-  /** The runtime conf keys [[main]]'s builder sets. */
+  /** The runtime conf keys [[main]]'s builder sets. A static key (the
+    * codegen cache size) is skipped: `getOrCreate` leaves it alone in an
+    * existing session, and `spark.conf.set`/`unset` throw on it.
+    */
   private val RetunedKeys: Seq[String] =
-    Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone") ++
-      SessionDefaults.configs.keys
+    (Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone") ++
+      SessionDefaults.configs.keys).filterNot(SQLConf.isStaticConfigKey)
 }

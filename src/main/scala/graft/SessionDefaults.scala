@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session configuration every graft entry point (Bench, Verify, Main,
-  * Explain, Probe) applies, so the engine's TypedImperativeAggregate
+  * Explain, Probe, and the benchmark harness) applies, so the engine's
   * plans run the same way everywhere — and [[local]], the one place a
   * standalone local session is built.
   *
-  * The one load-bearing key: Spark's `ObjectHashAggregateExec` falls
-  * back to SORT-based aggregation once a task sees more than
+  * The first key: Spark's `ObjectHashAggregateExec` falls back to
+  * SORT-based aggregation once a task sees more than
   * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` distinct
   * groups — and the stock default is 128. Every object aggregate in
   * this library (`TopKByScore`, the `BoundedCollect*` dedup bucket
@@ -30,13 +30,48 @@ import org.apache.spark.sql.SparkSession
   * call. On a real cluster the same value ships via --conf; entry
   * points here apply it as a DEFAULT (an explicit spark-submit/system
   * property wins — see [[applyTo]]).
+  *
+  * The second key sizes Spark's cache of compiled generated code,
+  * `spark.sql.codegen.cache.maxEntries` (stock default 100). A warm
+  * session runs the same plans again and again, and the cache is what
+  * lets it skip Janino and the JIT on a plan it already compiled. One
+  * pass over graft's plans needs more than 100 entries, so at the stock
+  * size the LRU evicted each class before the next pass came back to it
+  * and every pass compiled everything again. Distinct compiles counted
+  * with an unbounded cache (Janino class loads, 4-core host):
+  *   - one `corpus_dedup` sweep (the benchmark's 12 dedup/ANN queries):
+  *     194;
+  *   - one full `graft.Verify` catalog pass at sf0.01 (398 queries):
+  *     5,134.
+  * 2¹³ = 8,192 holds the larger count with 1.6× headroom for catalog
+  * growth and for plans that change between runs. At the end of that
+  * Verify pass, with all 5,134 classes held, the JIT code cache was at
+  * most 77% full (profiled heap; 44% non-profiled) and never stopped
+  * compiling, and metaspace used 234 MB (class space 38 MB of 1 GB), so
+  * holding every class does not switch the JIT off.
+  *
+  * The key is a static conf, with two consequences:
+  *   - Spark's `CodeGenerator` object sizes its cache once, in its
+  *     static initializer, from the session conf it sees first. Only the
+  *     first session a JVM builds sets it; a later session, or
+  *     `spark.conf.set`, cannot (the latter throws), which is why
+  *     [[graft.Main]] restores only the runtime keys of a caller's conf.
+  *   - The cache is keyed by (context class loader, code), and every
+  *     SparkContext brings new executor class loaders. So a fresh
+  *     launch — each `graft.Main` call of the `meds_etl` benchmark, or a
+  *     spark-submit — compiles its plans again whatever the size; the
+  *     key pays off in a long-lived session that reruns its plans.
   */
 object SessionDefaults {
   val ObjectHashFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
   val ObjectHashFallbackThreshold: String = (1 << 21).toString
 
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+  val CodegenCacheEntries: String = (1 << 13).toString
+
   val configs: Map[String, String] = Map(
-    ObjectHashFallbackKey -> ObjectHashFallbackThreshold)
+    ObjectHashFallbackKey -> ObjectHashFallbackThreshold,
+    CodegenCacheKey -> CodegenCacheEntries)
 
   /** The defaults that remain after dropping every key the operator
     * already set through `overrides` (in practice: system properties,

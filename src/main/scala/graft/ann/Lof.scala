@@ -230,8 +230,14 @@ object Lof {
       .select(col("id"), col("e.id").as("nb"), (-col("e.score")).as("d"),
         col("pos").cast("long").as("pos"))
       .pin(false) // consumed by k-dist, the reach join, and the lof join
+    // the node-sized frames (kdist, lrd) are the hash-join build side by
+    // hint: left to AQE, the build side of each join with knn followed
+    // whichever shuffle stage finished first, so the same query compiled
+    // different code from run to run. A shuffle hash join, not a
+    // broadcast, keeps the tail free of any n-sized broadcast.
     val kdist = knn.filter(col("pos") === (k - 1).toLong)
       .select(col("id").as("nb"), col("d").as("__kd_nb"))
+      .hint("shuffle_hash")
     def dmean(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       (dsum(r6(e)) /
         count(lit(1)).cast("double"))
@@ -242,6 +248,7 @@ object Lof {
       .select(col("id"),
         when(col("__mr") > 0.0, lit(1.0) / col("__mr")).as("lrd"))
       .pin(false) // consumed by both sides of the ratio join
+      .hint("shuffle_hash")
     // a neighbor with NULL lrd (its own neighborhood is a >= k duplicate
     // family) contributes no ratio term: dividing by count(*) would
     // silently bias LOF low for points ADJACENT to duplicate families,

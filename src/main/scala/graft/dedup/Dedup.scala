@@ -421,10 +421,12 @@ object Dedup {
     * the corpus that produced it), and when it has at most
     * `maxDriverEdges` edges the multi-round distributed loop is pure
     * scheduling overhead — a driver-side union-find labels it in
-    * milliseconds. The bounded `limit(n+1).count()` pre-pass picks the
-    * path (the same pattern as `Shard.splitAndShardPatients`'s
-    * small-cohort fallback); above the cap, the distributed loop carries
-    * arbitrarily large graphs.
+    * milliseconds. A count of the pinned edge list picks the path; above
+    * the cap, the distributed loop carries arbitrarily large graphs. It
+    * is a plain count, not a bounded `limit(n+1).count()`: Spark names
+    * each `LocalLimitExec`'s row counter with a JVM-wide serial number,
+    * so a limit under whole-stage codegen is new code — a codegen cache
+    * miss — on every run of the query.
     */
   def connectedComponents(
       pairs: DataFrame,
@@ -438,7 +440,7 @@ object Dedup {
     val e = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .pin(true)
-    if (e.limit(maxDriverEdges + 1).count() <= maxDriverEdges)
+    if (e.count() <= maxDriverEdges)
       return unionFindLocal(e)
     val sym = e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))

@@ -24,6 +24,17 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
   * `s > ws || (s == ws && i < wi)` comparison, including its NaN
   * conventions (a NaN candidate is never accepted into a full heap; a
   * NaN-scored root ranks as the worst element).
+  *
+  * k is assumed small: both arrays are allocated at construction, so a
+  * group that sees fewer than k rows still holds 16·k bytes. That is one
+  * buffer per group, and an object hash aggregate keeps up to 2²¹ groups
+  * per task ([[graft.SessionDefaults]]). Every caller in the library
+  * passes a small k — 2 in `ClusterQuality`, 5 for the catalog's kNN and
+  * LOF queries, 20 for the widest brute-force top-k — so a buffer's
+  * arrays hold at most 320 bytes, and growing them lazily would add a
+  * branch to every insert to save at most that much per group. A caller
+  * of `graft_top_k` with a large k over many small groups pays k-sized
+  * buffers for each.
   */
 final class TopKHeap(val k: Int) {
   val scores = new Array[Double](k)

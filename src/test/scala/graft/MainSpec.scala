@@ -63,6 +63,10 @@ class MainSpec extends SparkSpec {
       SessionDefaults.ObjectHashFallbackKey -> "128")
     val suiteConf = callerConf.keys.map(k => k -> spark.conf.get(k)).toMap
     callerConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    // a static key main's builder sets: the session keeps the value it
+    // was built with, and main must neither change it nor try to restore it
+    assert(org.apache.spark.sql.internal.SQLConf.isStaticConfigKey(SessionDefaults.CodegenCacheKey))
+    val staticBefore = spark.conf.getOption(SessionDefaults.CodegenCacheKey)
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet
     try {
       Main.main(Array(configPath, inDir, out))
@@ -75,6 +79,7 @@ class MainSpec extends SparkSpec {
       callerConf.foreach { case (k, v) =>
         assert(spark.conf.get(k) == v, s"main left $k retuned")
       }
+      assert(spark.conf.getOption(SessionDefaults.CodegenCacheKey) == staticBefore)
     } finally suiteConf.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 

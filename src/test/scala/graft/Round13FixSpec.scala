@@ -84,8 +84,8 @@ class Round13FixSpec extends SparkSpec {
     assert(spark.conf.get(SessionDefaults.ObjectHashFallbackKey) == (1 << 21).toString)
     // an operator-provided value (spark-submit --conf lands in system
     // properties) must win over the default
-    assert(SessionDefaults.effective(
-      Map(SessionDefaults.ObjectHashFallbackKey -> "555")).isEmpty)
+    assert(SessionDefaults.effective(Map(SessionDefaults.ObjectHashFallbackKey -> "555")) ==
+      SessionDefaults.configs - SessionDefaults.ObjectHashFallbackKey)
     assert(SessionDefaults.effective(Map.empty[String, String]) == SessionDefaults.configs)
   }
 
