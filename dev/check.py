@@ -12,6 +12,9 @@ only = sys.argv[3].split(',') if len(sys.argv) > 3 else None
 json_out = os.environ.get('CHECK_JSON')
 results = {}
 con = duckdb.connect()
+# bound the spill: an oracle that needs more fails alone instead of filling
+# the disk under every other job on the host
+con.execute("SET max_temp_directory_size = '5GB'")
 for p in glob.glob(os.path.join(sfdir, '*.parquet')):
     # ScaleData writes multi-file tables as DIRECTORIES named <t>.parquet
     src = f'{p}/*.parquet' if os.path.isdir(p) else p

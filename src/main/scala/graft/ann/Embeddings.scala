@@ -64,17 +64,15 @@ object Embeddings {
     val norm = sqrt(dot(v, v))
     val cnorm = sqrt(dot(col("__c"), col("__c")))
     val cos = when(norm > 0 && cnorm > 0, dot(v, col("__c")) / (norm * cnorm))
-    def rsum(e: Column): Column =
-      dsum(floor(e * 1000000.0 + 0.5) / 1000000.0)
     emb
       .crossJoin(broadcast(cent))
       .select(col(groupCol).as("group"), norm.as("__n"), cos.as("__cos"))
       .groupBy("group")
       .agg(
         count(lit(1)).as("n"),
-        rsum(col("__n")).as("__sn"),
-        rsum(col("__n") * col("__n")).as("__sn2"),
-        rsum(coalesce(col("__cos"), lit(0.0))).as("__sc"))
+        dsum(r6(col("__n"))).as("__sn"),
+        dsum(r6(col("__n") * col("__n"))).as("__sn2"),
+        dsum(r6(coalesce(col("__cos"), lit(0.0)))).as("__sc"))
       .select(
         col("group"), col("n"),
         (col("__sn") / col("n").cast("double")).as("mean_norm"),

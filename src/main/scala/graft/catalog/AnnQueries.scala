@@ -35,6 +35,17 @@ object AnnQueries {
   private def sqDistSqlN(a: String, b: String, n: Int): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1,${n + 1}), i -> (CAST($a[i] AS DOUBLE)-CAST($b[i] AS DOUBLE))*(CAST($a[i] AS DOUBLE)-CAST($b[i] AS DOUBLE)))), (x,y) -> x+y)"
 
+  /** The top-5 tail of the cosine-neighbour oracles (the ranking of
+    * [[Similarity.bruteForceTopK]]): rank each query's rows of
+    * `from(query_id, neighbor_id, cos)` by cosine, ties by neighbour id.
+    */
+  private def topCosSql(from: String): String =
+    s"""r AS (SELECT query_id, neighbor_id,
+       |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
+       |        ${r6("cos")} AS cosine
+       |      FROM $from)
+       |SELECT * FROM r WHERE "rank" <= 5""".stripMargin
+
   /** Hash-seeded k=8 init centroids (matches [[KMeans.initCentroids]]). */
   private val kmeansInitCte: String =
     s"""c0 AS (SELECT CAST(row_number() OVER (ORDER BY h, vec_id) - 1 AS BIGINT) AS cid, embedding
@@ -79,13 +90,13 @@ object AnnQueries {
     * (all-pairs `d`) and the q_lof_scalable oracle (probe-cell `d`).
     */
   private val lofTailSql: String =
-    """r AS (SELECT id, nb, dist, row_number() OVER (PARTITION BY id ORDER BY dist, nb) AS rk FROM d),
+    s"""r AS (SELECT id, nb, dist, row_number() OVER (PARTITION BY id ORDER BY dist, nb) AS rk FROM d),
       |knn AS (SELECT id, nb, dist FROM r WHERE rk <= 5),
       |kd AS (SELECT id, max(dist) AS kdist FROM knn GROUP BY 1),
       |reach AS (SELECT knn.id, knn.nb, greatest(kd.kdist, knn.dist) AS rd
       |  FROM knn JOIN kd ON kd.id = knn.nb),
       |lrd0 AS (SELECT id,
-      |    CAST(sum(CAST(floor(rd * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+      |    ${dsum(r6("rd"))}
       |      / CAST(count(*) AS DOUBLE) AS mr
       |  FROM reach GROUP BY 1),
       |lr AS (SELECT id, CASE WHEN mr > 0 THEN CAST(1 AS DOUBLE) / mr END AS lrd FROM lrd0),
@@ -93,13 +104,13 @@ object AnnQueries {
       |  FROM knn JOIN lr l2 ON l2.id = knn.nb JOIN lr l1 ON l1.id = knn.id),
       |lf AS (SELECT id, max(lrd) AS lrd,
       |    CASE WHEN count(*) = count(lrd_nb / lrd) THEN
-      |      CAST(sum(CAST(floor(lrd_nb / lrd * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+      |      ${dsum(r6("lrd_nb / lrd"))}
       |        / CAST(count(lrd_nb / lrd) AS DOUBLE) END AS lofraw
       |  FROM lf0 GROUP BY 1)
       |SELECT lf.id AS vec_id,
-      |  floor(kd.kdist * 1000000 + 0.5) / 1000000 AS k_dist,
-      |  floor(lf.lrd * 1000000 + 0.5) / 1000000 AS lrd,
-      |  CASE WHEN lf.lrd IS NOT NULL THEN floor(lofraw * 1000000 + 0.5) / 1000000 END AS lof
+      |  ${r6("kd.kdist")} AS k_dist,
+      |  ${r6("lf.lrd")} AS lrd,
+      |  CASE WHEN lf.lrd IS NOT NULL THEN ${r6("lofraw")} END AS lof
       |FROM lf JOIN kd ON kd.id = lf.id""".stripMargin
 
   val all: Seq[QueryDef] = Seq(
@@ -110,7 +121,7 @@ object AnnQueries {
          |c AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY cell) AS csz FROM c0) WHERE csz <= 10000),
          |p AS (SELECT a.vec_id AS ia, b.vec_id AS ib, ${cosSql("a.embedding", "b.embedding")} AS cos
          |      FROM c a JOIN c b ON a.cell = b.cell AND a.vec_id < b.vec_id)
-         |SELECT ia AS id_a, ib AS id_b, floor((cos) * 1000000 + 0.5) / 1000000 AS cosine FROM p WHERE cos >= 0.25""".stripMargin),
+         |SELECT ia AS id_a, ib AS id_b, ${r6("cos")} AS cosine FROM p WHERE cos >= 0.25""".stripMargin),
 
     QueryDef("q_srp_lsh", (s, dir) =>
       // 4 bands x 4 bits keeps buckets ~n/16 per band (scale-safe under
@@ -135,7 +146,7 @@ object AnnQueries {
          |bok AS (SELECT * FROM (SELECT *, count(*) OVER (PARTITION BY band, sig) AS bsz FROM bd) WHERE bsz <= 1000),
          |cand AS (SELECT DISTINCT a.vec_id AS ia, b.vec_id AS ib
          |         FROM bok a JOIN bok b ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id),
-         |ver AS (SELECT ia, ib, ${graft.functions.Portable.r6Sql(cosSql("ea.embedding", "eb.embedding"))} AS cosine
+         |ver AS (SELECT ia, ib, ${r6(cosSql("ea.embedding", "eb.embedding"))} AS cosine
          |        FROM cand JOIN embeddings ea ON ia = ea.vec_id JOIN embeddings eb ON ib = eb.vec_id)
          |SELECT ia AS id_a, ib AS id_b, cosine FROM ver WHERE cosine >= 0.25""".stripMargin),
 
@@ -148,11 +159,7 @@ object AnnQueries {
       s"""WITH q AS (SELECT * FROM embeddings WHERE vec_id < 8),
          |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
          |       FROM embeddings c JOIN q ON c.vec_id <> q.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-         |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-         |      FROM sc)
-         |SELECT * FROM r WHERE "rank" <= 5""".stripMargin),
+         |${topCosSql("sc")}""".stripMargin),
 
     QueryDef("q_ann_ivf", { (s, dir) =>
       val e = emb(s, dir)
@@ -164,11 +171,7 @@ object AnnQueries {
          |q AS (SELECT * FROM c WHERE vec_id < 8),
          |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
          |       FROM c JOIN q ON c.cell = q.cell AND c.vec_id <> q.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-         |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-         |      FROM sc)
-         |SELECT * FROM r WHERE "rank" <= 5""".stripMargin),
+         |${topCosSql("sc")}""".stripMargin),
 
     QueryDef("q_ann_multiprobe", { (s, dir) =>
       val e = emb(s, dir)
@@ -182,11 +185,7 @@ object AnnQueries {
          |      FROM q0, (SELECT unnest([${0L +: (0 until 8).map(1L << _) mkString ","}]) AS m)),
          |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
          |       FROM c JOIN q ON c.cell = q.cell AND c.vec_id <> q.vec_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-         |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-         |      FROM sc)
-         |SELECT * FROM r WHERE "rank" <= 5""".stripMargin),
+         |${topCosSql("sc")}""".stripMargin),
 
     QueryDef("q_kmeans_assign", { (s, dir) =>
       val e = emb(s, dir)
@@ -198,7 +197,7 @@ object AnnQueries {
          |d AS (SELECT e.vec_id, c0.cid, ${sqDistSql("e.embedding", "c0.embedding")} AS dist
          |      FROM embeddings e CROSS JOIN c0),
          |r AS (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d)
-         |SELECT vec_id, cid, floor((dist) * 1000000 + 0.5) / 1000000 AS dist FROM r WHERE rn = 1""".stripMargin),
+         |SELECT vec_id, cid, ${r6("dist")} AS dist FROM r WHERE rn = 1""".stripMargin),
 
     QueryDef("q_ann_ivf_kmeans", { (s, dir) =>
       val e = emb(s, dir)
@@ -217,11 +216,7 @@ object AnnQueries {
          |  FROM embeddings e CROSS JOIN c0 WHERE e.vec_id < 8) WHERE rn <= 2),
          |sc AS (SELECT q.query_id, ca.vec_id AS neighbor_id, ${cosSql("q.embedding", "ca.embedding")} AS cos
          |       FROM ca JOIN q ON ca.cid = q.cid AND ca.vec_id <> q.query_id),
-         |r AS (SELECT query_id, neighbor_id,
-         |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-         |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-         |      FROM sc)
-         |SELECT * FROM r WHERE "rank" <= 5""".stripMargin),
+         |${topCosSql("sc")}""".stripMargin),
 
     // PQ encode + reconstruction against the DuckDB oracle — the
     // init-codebook convention q_kmeans_assign established (iters = 0:
@@ -258,7 +253,7 @@ object AnnQueries {
          |    row_number() OVER (PARTITION BY id, blk ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1),
          |rec AS (SELECT a.id, flatten(list(pc.sub ORDER BY a.blk)) AS rec
          |  FROM a JOIN pc ON pc.blk = a.blk AND pc.cid = a.code GROUP BY a.id),
-         |rd AS (SELECT e.vec_id AS id, ${graft.functions.Portable.r6Sql(sqDistSql("e.embedding", "rec.rec"))} AS recon_dist
+         |rd AS (SELECT e.vec_id AS id, ${r6(sqDistSql("e.embedding", "rec.rec"))} AS recon_dist
          |  FROM embeddings e JOIN rec ON rec.id = e.vec_id)
          |SELECT a.id AS vec_id, CAST(a.blk AS BIGINT) AS blk,
          |  CAST(a.code AS BIGINT) AS code, rd.recon_dist
@@ -325,7 +320,7 @@ object AnnQueries {
          |  GROUP BY 1, 2),
          |r AS (SELECT query_id, neighbor_id,
          |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc, neighbor_id) AS BIGINT) AS "rank",
-         |    ${graft.functions.Portable.r6Sql("-adc")} AS neg_adc_dist
+         |    ${r6("-adc")} AS neg_adc_dist
          |  FROM sc)
          |SELECT query_id, neighbor_id, "rank", neg_adc_dist FROM r WHERE "rank" <= 5""".stripMargin),
 
@@ -376,7 +371,7 @@ object AnnQueries {
          |    row_number() OVER (PARTITION BY id, blk ORDER BY dist, cid) AS rn FROM d) WHERE rn = 1),
          |rec AS (SELECT a.id, flatten(list(pc.sub ORDER BY a.blk)) AS rec
          |  FROM a JOIN pc ON pc.blk = a.blk AND pc.cid = a.code GROUP BY a.id),
-         |rd AS (SELECT r.vec_id AS id, ${graft.functions.Portable.r6Sql(sqDistSql("r.y", "rec.rec"))} AS recon_dist
+         |rd AS (SELECT r.vec_id AS id, ${r6(sqDistSql("r.y", "rec.rec"))} AS recon_dist
          |  FROM rot r JOIN rec ON rec.id = r.vec_id)
          |SELECT a.id AS vec_id, CAST(a.blk AS BIGINT) AS blk,
          |  CAST(a.code AS BIGINT) AS code, rd.recon_dist
@@ -405,7 +400,7 @@ object AnnQueries {
          |p AS (SELECT a.i AS i, b.i AS j, sum(a.x*b.x) AS sxx
          |  FROM xs a JOIN xs b USING (vec_id) GROUP BY 1, 2)
          |SELECT CAST(p.i - 1 AS BIGINT) AS i, CAST(p.j - 1 AS BIGINT) AS j,
-         |  ${graft.functions.Portable.r6Sql("(p.sxx - si.sx*sj.sx/nn.n)/(nn.n - 1)")} AS cov
+         |  ${r6("(p.sxx - si.sx*sj.sx/nn.n)/(nn.n - 1)")} AS cov
          |FROM p CROSS JOIN nn JOIN s si ON si.i = p.i JOIN s sj ON sj.i = p.j""".stripMargin),
 
     // per-label embedding centroids via the exact decimal path (the
@@ -415,8 +410,8 @@ object AnnQueries {
       Embeddings
         .labelCentroids(emb(s, dir), "label", "embedding")
         .select(col("group").as("label"), col("pos"), col("centroid")),
-      """SELECT label, CAST(i - 1 AS BIGINT) AS pos,
-        |  floor((CAST(sum(CAST(CAST(embedding[i] AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) / count(*)) * 1000000 + 0.5) / 1000000 AS centroid
+      s"""SELECT label, CAST(i - 1 AS BIGINT) AS pos,
+        |  ${r6(s"${dsum("CAST(embedding[i] AS DOUBLE)")} / count(*)")} AS centroid
         |FROM embeddings, range(1, 65) t(i)
         |GROUP BY 1, 2""".stripMargin),
 
@@ -441,7 +436,7 @@ object AnnQueries {
          |    row_number() OVER (PARTITION BY e.vec_id ORDER BY ${sqDistSql("e.embedding", "c0.embedding")}, c0.cid) AS rn
          |  FROM embeddings e CROSS JOIN c0) WHERE rn = 1),
          |v AS (SELECT DISTINCT b.vec_id FROM a x JOIN a b ON x.cid = b.cid AND x.vec_id < b.vec_id
-         |      AND floor((${cosSql("x.embedding", "b.embedding")}) * 1000000 + 0.5) / 1000000 >= 0.25)
+         |      AND ${r6(cosSql("x.embedding", "b.embedding"))} >= 0.25)
          |SELECT vec_id, cid FROM a WHERE vec_id NOT IN (SELECT vec_id FROM v)""".stripMargin),
 
     // uint8 scalar quantization (first 20 vectors, exploded codes):
@@ -470,11 +465,7 @@ object AnnQueries {
          |sc AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, ${cosSql("q.embedding", "c.embedding")} AS cos
          |       FROM embeddings c JOIN q ON c.vec_id <> q.vec_id),
          |b AS (SELECT * FROM sc WHERE cos >= 0.1 AND cos < 0.6),
-         |r AS (SELECT query_id, neighbor_id,
-         |        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS "rank",
-         |        floor((cos) * 1000000 + 0.5) / 1000000 AS cosine
-         |      FROM b)
-         |SELECT * FROM r WHERE "rank" <= 5""".stripMargin),
+         |${topCosSql("b")}""".stripMargin),
 
     // per-label embedding health: norm stats + mean cosine to the
     // corpus centroid (anisotropy/collapse screen before ANN)
@@ -485,10 +476,10 @@ object AnnQueries {
           graft.functions.Portable.r6(col("std_norm")).as("std_norm"),
           graft.functions.Portable.r6(col("mean_cos")).as("mean_cos")),
       {
-      val r6t = (e: String) => s"CAST(floor(($e) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))"
+      val r6t = (e: String) => s"CAST(${r6(e)} AS DECIMAL(38,6))"
       s"""WITH x AS (SELECT label, unnest(embedding) AS v, unnest(range(0, len(embedding))) AS pos FROM embeddings),
          |cd AS (SELECT CAST(pos AS BIGINT) AS pos,
-         |        floor(CAST(sum(CAST(CAST(v AS DOUBLE) AS DECIMAL(38,6))) AS DOUBLE) / count(*) * 1000000 + 0.5) / 1000000 AS m
+         |        ${r6(s"${dsum("CAST(v AS DOUBLE)")} / count(*)")} AS m
          |      FROM x GROUP BY 1),
          |c AS (SELECT list(m ORDER BY pos) AS cvec FROM cd),
          |per AS (SELECT label,
@@ -504,10 +495,9 @@ object AnnQueries {
          |        CAST(sum(${r6t("coalesce(cos, 0.0)")}) AS DOUBLE) AS sc
          |      FROM pc GROUP BY 1)
          |SELECT CAST(label AS BIGINT) AS label, n,
-         |  floor(sn / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_norm,
-         |  floor(sqrt(greatest(sn2 / CAST(n AS DOUBLE)
-         |    - (sn / CAST(n AS DOUBLE)) * (sn / CAST(n AS DOUBLE)), 0.0)) * 1000000 + 0.5) / 1000000 AS std_norm,
-         |  floor(sc / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_cos
+         |  ${r6("sn / CAST(n AS DOUBLE)")} AS mean_norm,
+         |  ${r6("sqrt(greatest(sn2 / CAST(n AS DOUBLE) - (sn / CAST(n AS DOUBLE)) * (sn / CAST(n AS DOUBLE)), 0.0))")} AS std_norm,
+         |  ${r6("sc / CAST(n AS DOUBLE)")} AS mean_cos
          |FROM m""".stripMargin
     }),
 
@@ -579,10 +569,8 @@ object AnnQueries {
          |      FROM r a JOIN r b ON a.vec_id = b.vec_id AND a.rn = 1 AND b.rn = 2),
          |s AS (SELECT cid, d1, CASE WHEN d2 > 0.0 THEN (d2 - d1) / d2 ELSE 0.0 END AS sil FROM t)
          |SELECT cid, CAST(count(*) AS BIGINT) AS n,
-         |  floor(CAST(sum(CAST(floor(d1 * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_d1,
-         |  floor(CAST(sum(CAST(floor(sil * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_sil
+         |  ${r6(s"${dsum(r6("d1"))} / CAST(count(*) AS DOUBLE)")} AS mean_d1,
+         |  ${r6(s"${dsum(r6("sil"))} / CAST(count(*) AS DOUBLE)")} AS mean_sil
          |FROM s GROUP BY 1""".stripMargin),
 
     // Davies-Bouldin per k-means cell: worst scatter/separation ratio
@@ -599,7 +587,7 @@ object AnnQueries {
          |r AS (SELECT vec_id, cid, dist, row_number() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d),
          |a AS (SELECT vec_id, cid, dist AS d1 FROM r WHERE rn = 1),
          |sc AS (SELECT cid, CAST(count(*) AS BIGINT) AS n,
-         |        CAST(sum(CAST(floor(d1 * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+         |        ${dsum(r6("d1"))}
          |          / CAST(count(*) AS DOUBLE) AS s_c
          |      FROM a GROUP BY 1),
          |sep AS (SELECT x.cid AS cid, y.cid AS cj,
@@ -609,8 +597,8 @@ object AnnQueries {
          |        CASE WHEN sep.sep_m > 0.0 AND sj.s_c IS NOT NULL
          |          THEN (si.s_c + sj.s_c) / sep.sep_m END AS ratio
          |      FROM sc si JOIN sep ON sep.cid = si.cid LEFT JOIN sc sj ON sj.cid = sep.cj)
-         |SELECT cid, n, floor(s_c * 1000000 + 0.5) / 1000000 AS s_c,
-         |  floor(max(ratio) * 1000000 + 0.5) / 1000000 AS db
+         |SELECT cid, n, ${r6("s_c")} AS s_c,
+         |  ${r6("max(ratio)")} AS db
          |FROM j GROUP BY cid, n, s_c""".stripMargin),
 
     // Matryoshka truncation fidelity: recall@5 of prefix-d cosine
@@ -649,9 +637,8 @@ object AnnQueries {
          |$perDim,
          |u AS ($unions)
          |SELECT CAST(dim AS BIGINT) AS dim, CAST(count(*) AS BIGINT) AS n_queries,
-         |  floor(CAST(sum(CAST(floor(r * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_recall,
-         |  min(floor(r * 1000000 + 0.5) / 1000000) AS min_recall,
+         |  ${r6(s"${dsum(r6("r"))} / CAST(count(*) AS DOUBLE)")} AS mean_recall,
+         |  min(${r6("r")}) AS min_recall,
          |  (SELECT CAST(count(*) AS BIGINT) FROM embeddings) AS n_corpus,
          |  CAST(dim * (SELECT count(*) FROM embeddings) AS BIGINT) AS floats_per_query
          |FROM u GROUP BY dim""".stripMargin
@@ -677,10 +664,10 @@ object AnnQueries {
       val lam = "CAST(0.7 AS DOUBLE)"
       val oneMinusLam = "(CAST(1 AS DOUBLE) - CAST(0.7 AS DOUBLE))"
       def mmrExpr(ms: String) =
-        s"floor(($lam * rel - $oneMinusLam * $ms) * 1000000 + 0.5) / 1000000"
+        r6(s"$lam * rel - $oneMinusLam * $ms")
       def stage(j: Int): String =
         s"""p$j AS (SELECT c.qid, c.id, any_value(c.rel) AS rel, any_value(c.vec) AS vec,
-           |    max(floor(${cosSql("c.vec", "s.vec")} * 1000000 + 0.5) / 1000000) AS ms
+           |    max(${r6(cosSql("c.vec", "s.vec"))}) AS ms
            |  FROM cv c JOIN sel${j - 1} s ON c.qid = s.qid
            |  WHERE NOT EXISTS (SELECT 1 FROM sel${j - 1} x WHERE x.qid = c.qid AND x.id = c.id)
            |  GROUP BY 1, 2),
@@ -691,13 +678,13 @@ object AnnQueries {
       s"""WITH q AS (SELECT * FROM embeddings WHERE vec_id < 3),
          |sc AS (SELECT q.vec_id AS qid, c.vec_id AS id, ${cosSql("q.embedding", "c.embedding")} AS cos
          |       FROM embeddings c JOIN q ON c.vec_id <> q.vec_id),
-         |cand AS (SELECT qid, id, floor(cos * 1000000 + 0.5) / 1000000 AS rel
+         |cand AS (SELECT qid, id, ${r6("cos")} AS rel
          |  FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, id) AS rk FROM sc)
          |  WHERE rk <= 20),
          |cv AS (SELECT cand.qid, cand.id, cand.rel, e.embedding AS vec
          |  FROM cand JOIN embeddings e ON cand.id = e.vec_id),
          |sel1 AS (SELECT qid, 1 AS step, id, rel, CAST(NULL AS DOUBLE) AS max_sim,
-         |    floor($lam * rel * 1000000 + 0.5) / 1000000 AS mmr, vec
+         |    ${r6(s"$lam * rel")} AS mmr, vec
          |  FROM (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, id) AS rk FROM cv)
          |  WHERE rk = 1),
          |${(2 to 5).map(stage).mkString(",\n")}
@@ -864,7 +851,7 @@ object AnnQueries {
         s"""jd$r AS (SELECT ve.g, ve.x, ${distTo(s"m${r - 1}.m")} AS dd
            |  FROM ve JOIN m${r - 1} USING (g)),
            |w$r AS (SELECT g, CAST(coalesce(sum(CAST(${r6("1.0 / dd")} AS DECIMAL(38,18))), 0) AS DOUBLE) AS w FROM jd$r GROUP BY 1),
-           |pd$r AS (SELECT jd$r.g, i.i AS d, ${ds("x[i.i] / dd")} AS ws
+           |pd$r AS (SELECT jd$r.g, i.i AS d, ${dsum0(r6("x[i.i] / dd"))} AS ws
            |  FROM jd$r, range(1,65) i(i) GROUP BY 1, 2),
            |m$r AS MATERIALIZED (SELECT pd$r.g, list(${r6("ws / w")} ORDER BY d) AS m
            |  FROM pd$r JOIN w$r USING (g) GROUP BY 1)""".stripMargin
@@ -872,14 +859,14 @@ object AnnQueries {
       s"""WITH ve AS MATERIALIZED (SELECT label AS g,
          |    list_transform(range(1,65), i -> CAST(embedding[i] AS DOUBLE)) AS x
          |  FROM embeddings WHERE embedding IS NOT NULL),
-         |pd0 AS (SELECT g, i.i AS d, ${ds("x[i.i]")} AS sv, CAST(count(*) AS BIGINT) AS cnt
+         |pd0 AS (SELECT g, i.i AS d, ${dsum0(r6("x[i.i]"))} AS sv, CAST(count(*) AS BIGINT) AS cnt
          |  FROM ve, range(1,65) i(i) GROUP BY 1, 2),
          |m0 AS MATERIALIZED (SELECT g, list(${r6("sv / CAST(cnt AS DOUBLE)")} ORDER BY d) AS m FROM pd0 GROUP BY 1),
          |$rounds,
          |fin AS (SELECT ve.g, ${distTo("m5.m")} AS dd
          |  FROM ve JOIN m5 USING (g)),
          |res AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-         |    ${r6(s"(${ds("dd")}) / CAST(count(*) AS DOUBLE)")} AS mean_dist
+         |    ${r6(s"(${dsum0(r6("dd"))}) / CAST(count(*) AS DOUBLE)")} AS mean_dist
          |  FROM fin GROUP BY g)
          |SELECT res.g AS "group", res.n, res.mean_dist,
          |  CAST(i.i - 1 AS BIGINT) AS dim, m5.m[i.i] AS m

@@ -70,12 +70,9 @@ object CurationQueries {
       val hitCols = langs.map(l => s"len(list_filter(toks, x -> list_contains(${stopwordSqlLists(l)}, x))) AS h_$l").mkString(", ")
       val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
       val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
-      s"""WITH t0 AS (SELECT doc_id, text, lang, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH t0 AS (SELECT doc_id, text, lang, ${wordTokensSql("text")} AS toks FROM documents),
          |q AS (SELECT doc_id,
-         |  floor((0.4*least(CAST(len(toks) AS DOUBLE)/100.0, 1.0)
-         |    + 0.3*least(floor((CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0)
-         |    + 0.2*(CASE WHEN floor((CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END)
-         |    + 0.1*(1.0 - least(floor((CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS score,
+         |  ${r6(s"0.4*least(CAST(len(toks) AS DOUBLE)/100.0, 1.0) + 0.3*least(${r6(s"CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)")}*5.0, 1.0) + 0.2*(CASE WHEN ${r6("CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)")} BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) + 0.1*(1.0 - least(${r6("CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)")}*5.0, 1.0))")} AS score,
          |  CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang_pred
          |  FROM (SELECT doc_id, text, $hitCols, toks FROM t0) base
          |),
@@ -86,9 +83,7 @@ object CurationQueries {
          |  FROM kept) WHERE doc_id <> canon),
          |sh0 AS (SELECT doc_id AS id, unnest(CASE WHEN len(toks)>=5 THEN list_transform(range(1, len(toks)-3), i -> array_to_string(toks[i:i+4],' ')) ELSE [] END) AS shingle FROM kept),
          |shh AS (SELECT DISTINCT id, ${h32("shingle")} AS sh FROM sh0),
-         |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-         |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-         |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2),
+         |$shingleOverlapCtes,
          |jv AS (SELECT DISTINCT ib AS doc_id FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
          |       WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.8)
          |SELECT doc_id, lang FROM kept
@@ -148,20 +143,17 @@ object CurationQueries {
       val hitCols = langs.map(l => s"len(list_filter(toks, x -> list_contains(${stopwordSqlLists(l)}, x))) AS h_$l").mkString(", ")
       val best = s"greatest(${langs.map(l => s"h_$l").mkString(", ")})"
       val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
-      s"""WITH t0 AS (SELECT doc_id, source, text, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH t0 AS (SELECT doc_id, source, text, ${wordTokensSql("text")} AS toks FROM documents),
          |q AS (SELECT doc_id,
-         |  floor((0.4*least(CAST(len(toks) AS DOUBLE)/100.0, 1.0)
-         |    + 0.3*least(floor((CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0)
-         |    + 0.2*(CASE WHEN floor((CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END)
-         |    + 0.1*(1.0 - least(floor((CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)) * 1000000 + 0.5) / 1000000*5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS score,
+         |  ${r6(s"0.4*least(CAST(len(toks) AS DOUBLE)/100.0, 1.0) + 0.3*least(${r6(s"CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)")}*5.0, 1.0) + 0.2*(CASE WHEN ${r6("CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)")} BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) + 0.1*(1.0 - least(${r6("CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)")}*5.0, 1.0))")} AS score,
          |  CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang_pred
          |  FROM (SELECT doc_id, text, $hitCols, toks FROM t0) base),
          |b AS (SELECT t0.source, t0.doc_id, CAST(len(t0.text) AS BIGINT) AS n_chars, q.score, q.lang_pred,
          |    md5(trim(regexp_replace(lower(t0.text), '[^a-z0-9]+', ' ', 'g'))) AS fp
          |  FROM t0 JOIN q USING (doc_id)),
          |stats AS (SELECT source, count(*) AS n_docs,
-         |    CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_chars,
-         |    CAST(coalesce(sum(CAST(score AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mean_quality
+         |    ${dsum0("n_chars")} / CAST(count(*) AS DOUBLE) AS mean_chars,
+         |    ${dsum0("score")} / CAST(count(*) AS DOUBLE) AS mean_quality
          |  FROM b GROUP BY 1),
          |lc AS (SELECT source, lang_pred, count(*) AS c FROM b GROUP BY 1, 2),
          |ent AS (SELECT source,
@@ -171,10 +163,10 @@ object CurationQueries {
          |    SELECT source, CASE WHEN doc_id <> min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END AS vict FROM b)
          |  GROUP BY 1)
          |SELECT source, n_docs,
-         |  ${graft.functions.Portable.r6Sql("mean_chars")} AS mean_chars,
-         |  ${graft.functions.Portable.r6Sql("mean_quality")} AS mean_quality,
-         |  ${graft.functions.Portable.r6Sql("lang_entropy")} AS lang_entropy,
-         |  ${graft.functions.Portable.r6Sql("dup_rate")} AS dup_rate
+         |  ${r6("mean_chars")} AS mean_chars,
+         |  ${r6("mean_quality")} AS mean_quality,
+         |  ${r6("lang_entropy")} AS lang_entropy,
+         |  ${r6("dup_rate")} AS dup_rate
          |FROM stats JOIN ent USING (source) JOIN dup USING (source)""".stripMargin
     }),
 
@@ -278,7 +270,7 @@ object CurationQueries {
          |m AS (SELECT doc_id, text FROM documents JOIN cnt USING (source) JOIN w USING (source)
          |  WHERE ${h32("concat('a42','|',CAST(doc_id AS VARCHAR))")} % 1000000
          |    < CAST(round(least(1.0, 120 * w / n) * 1000000) AS BIGINT)),
-         |d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM m),
+         |d AS (SELECT doc_id, ${wordTokensSql("text")} AS ts FROM m),
          |nn AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS L FROM d WHERE len(ts) > 0),
          |c AS (SELECT doc_id, L,
          |    unnest(range(0, CASE WHEN L <= 30 THEN 1 ELSE (L - 30 + 19) // 20 + 1 END)) AS chunk_seq
@@ -326,7 +318,7 @@ object CurationQueries {
           minLlr = 0.0, budgetPerSource = 1500L)
         .select(col("doc_id"), col("source"), col("n_chars"),
           graft.functions.Portable.r6(col("llr")).as("llr")),
-      """WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |c AS (SELECT term, count(*) AS nc, count(CASE WHEN tgt THEN 1 END) AS nt FROM t GROUP BY 1),
         |tot AS (SELECT sum(nc) AS tc, sum(nt) AS tt, count(*) AS v FROM c),
         |r AS (SELECT term,
@@ -336,9 +328,9 @@ object CurationQueries {
         |  CAST(sum(CAST(lr AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS llr
         |  FROM t JOIN r USING (term) GROUP BY 1),
         |j AS (SELECT d.doc_id, d.source, d.n_chars,
-        |        floor(llr * 1000000 + 0.5) / 1000000 AS llr
+        |        ${r6("llr")} AS llr
         |      FROM documents d JOIN sc USING (doc_id)
-        |      WHERE floor(llr * 1000000 + 0.5) / 1000000 > 0.0),
+        |      WHERE ${r6("llr")} > 0.0),
         |w AS (SELECT *, sum(n_chars) OVER (PARTITION BY source ORDER BY llr DESC, doc_id
         |                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
         |      FROM j)
@@ -365,16 +357,16 @@ object CurationQueries {
           col("size_total").cast("long").as("size_total"),
           graft.functions.Portable.r6(col("weight")).as("weight"),
           graft.functions.Portable.r6(col("epochs")).as("epochs")),
-      """WITH g AS (SELECT source, count(*) AS n_rows,
-        |        CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) AS sz
+      s"""WITH g AS (SELECT source, count(*) AS n_rows,
+        |        ${dsum0("n_chars")} AS sz
         |      FROM documents GROUP BY 1),
-        |s AS (SELECT source, n_rows, sz, floor(sqrt(sz) * 1000000 + 0.5) / 1000000 AS sc FROM g),
-        |t AS (SELECT CAST(sum(CAST(sc AS DECIMAL(38,6))) AS DOUBLE) AS tot,
-        |             CAST(sum(CAST(sz AS DECIMAL(38,6))) AS DOUBLE) AS grand FROM s)
+        |s AS (SELECT source, n_rows, sz, ${r6("sqrt(sz)")} AS sc FROM g),
+        |t AS (SELECT ${dsum("sc")} AS tot,
+        |             ${dsum("sz")} AS grand FROM s)
         |SELECT source, n_rows, CAST(sz AS BIGINT) AS size_total,
-        |  floor(sc / nullif(tot, 0.0) * 1000000 + 0.5) / 1000000 AS weight,
+        |  ${r6("sc / nullif(tot, 0.0)")} AS weight,
         |  CASE WHEN sz > 0 THEN
-        |    floor(sc / nullif(tot, 0.0) * grand / sz * 1000000 + 0.5) / 1000000 END AS epochs
+        |    ${r6("sc / nullif(tot, 0.0) * grand / sz")} END AS epochs
         |FROM s, t""".stripMargin),
 
     // Pile-style token-budget epoch allocation under the mixture weights
@@ -392,13 +384,12 @@ object CurationQueries {
         .map { case (s, w) => s"('$s', CAST($w AS DOUBLE))" }.mkString(", ")
       s"""WITH w(source, w0) AS (VALUES $values),
          |g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_rows,
-         |    CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) AS tokens
+         |    ${dsum0("n_chars")} AS tokens
          |  FROM documents GROUP BY 1),
          |j AS (SELECT g.source, n_rows, tokens,
          |    CASE WHEN tokens > 0.0 THEN coalesce(w0, 0.0) ELSE 0.0 END AS w1
          |  FROM g LEFT JOIN w ON g.source = w.source),
-         |tot AS (SELECT CAST(sum(CAST(floor(w1 * 1000000 + 0.5) / 1000000
-         |    AS DECIMAL(38,6))) AS DOUBLE) AS wtot FROM j),
+         |tot AS (SELECT ${dsum(r6("w1"))} AS wtot FROM j),
          |f AS (SELECT source, n_rows, tokens,
          |    w1 / nullif(wtot, 0.0) AS weight,
          |    2000000.0 * (w1 / nullif(wtot, 0.0)) AS target,
@@ -407,11 +398,11 @@ object CurationQueries {
          |      ELSE 0.0 END AS epochs
          |  FROM j CROSS JOIN tot)
          |SELECT source, n_rows, tokens,
-         |  floor(weight * 1000000 + 0.5) / 1000000 AS weight,
-         |  floor(target * 1000000 + 0.5) / 1000000 AS target_tokens,
-         |  floor(epochs * 1000000 + 0.5) / 1000000 AS epochs,
-         |  floor(epochs * tokens * 1000000 + 0.5) / 1000000 AS alloc_tokens,
-         |  floor((coalesce(target, 0.0) - epochs * tokens) * 1000000 + 0.5) / 1000000 AS unspent
+         |  ${r6("weight")} AS weight,
+         |  ${r6("target")} AS target_tokens,
+         |  ${r6("epochs")} AS epochs,
+         |  ${r6("epochs * tokens")} AS alloc_tokens,
+         |  ${r6("coalesce(target, 0.0) - epochs * tokens")} AS unspent
          |FROM f""".stripMargin
     }),
 
@@ -422,7 +413,7 @@ object CurationQueries {
         .select(col("by").as("source"), col("batch"), col("n"),
           col("min_len"), col("max_len"), col("sum_len"),
           graft.functions.Portable.r6(col("pad_frac")).as("pad_frac")),
-      """WITH r AS (SELECT source AS by, doc_id AS id, CAST(n_chars AS BIGINT) AS len,
+      s"""WITH r AS (SELECT source AS by, doc_id AS id, CAST(n_chars AS BIGINT) AS len,
         |    row_number() OVER (PARTITION BY source ORDER BY CAST(n_chars AS BIGINT), doc_id) AS rk
         |  FROM documents WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
         |b AS (SELECT by, CAST(floor(CAST(rk - 1 AS DOUBLE) / 32.0) AS BIGINT) AS batch, len FROM r),
@@ -432,8 +423,7 @@ object CurationQueries {
         |  FROM b GROUP BY 1, 2)
         |SELECT by AS source, batch, n, min_len, max_len, sum_len,
         |  CASE WHEN max_len > 0 THEN
-        |    floor((1.0 - CAST(sum_len AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(max_len AS DOUBLE)))
-        |      * 1000000 + 0.5) / 1000000
+        |    ${r6("1.0 - CAST(sum_len AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(max_len AS DOUBLE))")}
         |  ELSE 0.0 END AS pad_frac
         |FROM g""".stripMargin),
 
@@ -450,7 +440,7 @@ object CurationQueries {
         .select(col("doc_id"), col("n_chars"),
           graft.functions.Portable.r6(col("quality")).as("quality"))
     },
-      """WITH v AS (SELECT doc_id, n_chars,
+      s"""WITH v AS (SELECT doc_id, n_chars,
         |    (length(text) - length(replace(text, ' the ', ''))) / 5
         |      * 100.0 / CAST(n_chars AS DOUBLE) AS q
         |  FROM documents WHERE n_chars > 0 AND text IS NOT NULL),
@@ -458,7 +448,7 @@ object CurationQueries {
         |f AS (SELECT n_chars, q, max(q) OVER (ORDER BY n_chars
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM pc),
         |fr AS (SELECT n_chars, q FROM f WHERE pm IS NULL OR q > pm)
-        |SELECT a.doc_id, a.n_chars, floor(a.q * 1000000 + 0.5) / 1000000 AS quality
+        |SELECT a.doc_id, a.n_chars, ${r6("a.q")} AS quality
         |FROM v a JOIN fr ON fr.n_chars = a.n_chars AND fr.q = a.q""".stripMargin),
 
     // Neyman-optimal labeling-budget allocation across sources

@@ -26,7 +26,7 @@ object DedupQueries {
         |FROM documents GROUP BY 1""".stripMargin),
 
     QueryDef("q_dup_spans", (s, dir) => Dedup.duplicateSpans(docs(s, dir), w = 10),
-      s"""WITH tk AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH tk AS (SELECT doc_id AS id, ${wordTokensSql("text")} AS toks FROM documents),
          |sp AS (SELECT id, CAST(len(toks) AS BIGINT) AS n_tokens,
          |  unnest(CASE WHEN len(toks)>=10 THEN list_transform(range(1, len(toks)-8), i -> {'pos': i, 'g': array_to_string(toks[i:i+9],' ')}) ELSE [] END) AS s
          |  FROM tk),
@@ -38,7 +38,7 @@ object DedupQueries {
          |spans AS (SELECT id, g, any_value(n_tokens) AS n_tokens, min(pos) AS s, max(pos)+9 AS e FROM isl GROUP BY 1,2),
          |agg AS (SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS n_spans, CAST(sum(e-s+1) AS BIGINT) AS dup_tokens, any_value(n_tokens) AS n_tokens FROM spans GROUP BY 1)
          |SELECT doc_id, n_spans, dup_tokens, n_tokens,
-         |  ${graft.functions.Portable.r6Sql("CAST(dup_tokens AS DOUBLE)/CAST(n_tokens AS DOUBLE)")} AS dup_frac
+         |  ${r6("CAST(dup_tokens AS DOUBLE)/CAST(n_tokens AS DOUBLE)")} AS dup_frac
          |FROM agg""".stripMargin),
 
     QueryDef("q_dedup_jaccard", (s, dir) =>
@@ -46,10 +46,8 @@ object DedupQueries {
         .ngramJaccardPairs(docs(s, dir), threshold = 0.5, n = 5, maxDocFreq = 1000)
         .select(col("id_a"), col("id_b"), graft.functions.Portable.r6(col("jaccard")).as("jaccard")),
       s"""WITH $shingleCtes,
-         |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-         |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-         |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2)
-         |SELECT ia AS id_a, ib AS id_b, floor((CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc)) * 1000000 + 0.5) / 1000000 AS jaccard
+         |$shingleOverlapCtes
+         |SELECT ia AS id_a, ib AS id_b, ${r6("CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc)")} AS jaccard
          |FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
          |WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.5""".stripMargin),
 
@@ -99,7 +97,7 @@ object DedupQueries {
          |FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.id < b.id""".stripMargin),
 
     QueryDef("q_simhash", (s, dir) => Dedup.simhash(docs(s, dir), bits = 32),
-      s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, unnest(${wordTokensSql("text")}) AS tok FROM documents),
          |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
          |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
          |      FROM w, (SELECT unnest(range(0, 32)) AS b) GROUP BY 1, 2)
@@ -112,7 +110,7 @@ object DedupQueries {
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming")),
       // pigeonhole hamming blocks: 4 blocks x 8 bits; any pair within
       // hamming 3 shares an exact block
-      s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, unnest(${wordTokensSql("text")}) AS tok FROM documents),
          |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
          |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
          |      FROM w, (SELECT unnest(range(0, 32)) AS b) GROUP BY 1, 2),
@@ -179,10 +177,8 @@ object DedupQueries {
         .select(col("id_a"), col("id_b"), col("split_a"), col("split_b"),
           graft.functions.Portable.r6(col("jaccard")).as("jaccard")),
       s"""WITH $shingleCtes,
-         |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-         |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-         |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2),
-         |pr AS (SELECT ia AS id_a, ib AS id_b, floor((CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc)) * 1000000 + 0.5) / 1000000 AS jaccard
+         |$shingleOverlapCtes,
+         |pr AS (SELECT ia AS id_a, ib AS id_b, ${r6("CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc)")} AS jaccard
          |  FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
          |  WHERE CAST(nc AS DOUBLE)/(ca.n_sh + cb.n_sh - nc) >= 0.5)
          |SELECT id_a, id_b,
@@ -198,14 +194,14 @@ object DedupQueries {
       Dedup.duplicationStats(docs(s, dir), "source")
         .select(col("g").as("source"), col("n_docs"), col("n_dups"),
           graft.functions.Portable.r6(col("dup_rate")).as("dup_rate")),
-      """WITH f AS (SELECT doc_id, source,
+      s"""WITH f AS (SELECT doc_id, source,
         |    md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fp
         |  FROM documents),
         |v AS (SELECT source,
         |    CASE WHEN doc_id <> min(doc_id) OVER (PARTITION BY fp) THEN 1 ELSE 0 END AS vict
         |  FROM f)
         |SELECT source, count(*) AS n_docs, CAST(sum(vict) AS BIGINT) AS n_dups,
-        |  floor((CAST(sum(vict) AS DOUBLE) / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS dup_rate
+        |  ${r6("CAST(sum(vict) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS dup_rate
         |FROM v GROUP BY 1""".stripMargin),
 
     // source-overlap matrix from MERGED minhash sketches (union = min)
@@ -216,7 +212,7 @@ object DedupQueries {
       {
       val unions = (0 until 16).map(j => s"SELECT g, $j AS j, m$j AS v FROM sigw")
         .mkString(" UNION ALL ")
-      s"""WITH tk AS (SELECT source AS g, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT source AS g, ${wordTokensSql("text")} AS toks FROM documents),
          |sh0 AS (SELECT g, unnest(CASE WHEN len(toks) >= 3 THEN list_transform(range(1, len(toks)-1), i -> array_to_string(toks[i:i+2],' ')) ELSE [] END) AS shingle FROM tk),
          |shh AS (SELECT DISTINCT g, ${h32("shingle")} AS sh FROM sh0),
          |sigw AS (SELECT g, ${minhashAggSql(16, j => s"m$j")} FROM shh GROUP BY 1),
@@ -224,7 +220,7 @@ object DedupQueries {
          |p AS (SELECT a.g AS g_a, b.g AS g_b, count(*) AS n_agree
          |      FROM lng a JOIN lng b ON a.j = b.j AND a.v = b.v AND a.g < b.g GROUP BY 1, 2)
          |SELECT g_a, g_b, n_agree,
-         |  floor((CAST(n_agree AS DOUBLE) / 16) * 1000000 + 0.5) / 1000000 AS est_jaccard
+         |  ${r6("CAST(n_agree AS DOUBLE) / 16")} AS est_jaccard
          |FROM p""".stripMargin
     }),
 
@@ -235,12 +231,10 @@ object DedupQueries {
           graft.functions.Portable.r6(col("cont_a")).as("cont_a"),
           graft.functions.Portable.r6(col("cont_b")).as("cont_b")),
       s"""WITH $shingleCtes,
-         |filt AS (SELECT id, sh FROM (SELECT id, sh, count(*) OVER (PARTITION BY sh) AS df FROM shh) WHERE df <= 1000),
-         |cnt AS (SELECT id, count(*) AS n_sh FROM shh GROUP BY 1),
-         |com AS (SELECT a.id AS ia, b.id AS ib, count(*) AS nc FROM filt a JOIN filt b ON a.sh = b.sh AND a.id < b.id GROUP BY 1, 2)
+         |$shingleOverlapCtes
          |SELECT ia AS id_a, ib AS id_b,
-         |  floor((CAST(nc AS DOUBLE) / ca.n_sh) * 1000000 + 0.5) / 1000000 AS cont_a,
-         |  floor((CAST(nc AS DOUBLE) / cb.n_sh) * 1000000 + 0.5) / 1000000 AS cont_b
+         |  ${r6("CAST(nc AS DOUBLE) / ca.n_sh")} AS cont_a,
+         |  ${r6("CAST(nc AS DOUBLE) / cb.n_sh")} AS cont_b
          |FROM com JOIN cnt ca ON ia = ca.id JOIN cnt cb ON ib = cb.id
          |WHERE greatest(CAST(nc AS DOUBLE) / ca.n_sh, CAST(nc AS DOUBLE) / cb.n_sh) >= 0.4""".stripMargin),
 
@@ -259,7 +253,7 @@ object DedupQueries {
         .map(bd => (2 * bd until 2 * bd + 2).map(j => s"a.m$j = b.m$j").mkString(" AND "))
         .mkString("(", ") OR (", ")")
       s"""WITH sm AS (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 400),
-         |tk AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM sm),
+         |tk AS (SELECT doc_id AS id, ${wordTokensSql("text")} AS toks FROM sm),
          |sh0 AS (SELECT id, unnest(CASE WHEN len(toks)>=5 THEN list_transform(range(1, len(toks)-3), i -> array_to_string(toks[i:i+4],' ')) ELSE [] END) AS shingle FROM tk),
          |shh AS (SELECT DISTINCT id, ${h32("shingle")} AS sh FROM sh0),
          |cnt AS (SELECT id, CAST(count(*) AS BIGINT) AS n_sh FROM shh GROUP BY 1),
@@ -274,14 +268,14 @@ object DedupQueries {
          |      FROM jac JOIN sg a ON jac.ia = a.id JOIN sg b ON jac.ib = b.id),
          |bn AS (SELECT least(9, CAST(floor(jac * 10) AS BIGINT)) AS bin, est, c FROM pp),
          |g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n_pairs,
-         |        CAST(sum(CAST(est AS DECIMAL(38,6))) AS DOUBLE) AS se,
+         |        ${dsum("est")} AS se,
          |        CAST(sum(c) AS BIGINT) AS nc FROM bn GROUP BY 1),
          |t AS (SELECT bin, n_pairs, se, nc,
          |        (CAST(bin AS DOUBLE) + 0.5) / 10 AS s FROM g)
          |SELECT bin, n_pairs,
-         |  floor(se / CAST(n_pairs AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_est,
-         |  floor(CAST(nc AS DOUBLE) / CAST(n_pairs AS DOUBLE) * 1000000 + 0.5) / 1000000 AS catch_rate,
-         |  floor((1.0 - (1.0 - s*s) * (1.0 - s*s) * (1.0 - s*s) * (1.0 - s*s)) * 1000000 + 0.5) / 1000000 AS theory
+         |  ${r6("se / CAST(n_pairs AS DOUBLE)")} AS mean_est,
+         |  ${r6("CAST(nc AS DOUBLE) / CAST(n_pairs AS DOUBLE)")} AS catch_rate,
+         |  ${r6("1.0 - (1.0 - s*s) * (1.0 - s*s) * (1.0 - s*s) * (1.0 - s*s)")} AS theory
          |FROM t""".stripMargin
     }),
 
@@ -337,7 +331,7 @@ object DedupQueries {
         TextFunctions.fingerprint(col("text")).as("fp"))
       Evaluation.bCubed(sh.join(gold, "id"), "simhash", "fp")
     },
-      s"""WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS tok FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, unnest(${wordTokensSql("text")}) AS tok FROM documents),
          |w AS (SELECT id, tok, count(*) AS w, ${h32("tok")} AS h FROM t GROUP BY 1, 2),
          |v AS (SELECT id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN w ELSE -w END) AS v
          |      FROM w, (SELECT unnest(range(0, 32)) AS b) GROUP BY 1, 2),

@@ -27,6 +27,15 @@ object GraphQueries {
       .select(col("e.src"), col("e.dst"))
   }
 
+  /** Oracle side of [[wordAdjacencyEdges]]: CTEs `tk` (each document's
+    * tokens) and one named `edges` with a `(src, dst)` row per adjacent
+    * token pair.
+    */
+  private def wordAdjacencySql(edges: String): String =
+    s"""tk AS (SELECT ${wordTokensSql("text")} AS ts FROM documents),
+       |$edges AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
+       |  FROM tk WHERE len(ts) >= 2)""".stripMargin
+
   val all: Seq[QueryDef] = Seq(
     // local clustering coefficient over the word-adjacency graph
     // (same edge derivation as q_triangles / q_pagerank)
@@ -36,9 +45,7 @@ object GraphQueries {
         .select(col("node"), col("degree"), col("n_triangles"),
           graft.functions.Portable.r6(col("coef")).as("coef"))
     },
-      s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-         |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-         |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
          |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
          |tri AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c
          |  FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
@@ -47,7 +54,7 @@ object GraphQueries {
          |dg AS (SELECT node, count(*) AS d FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1)
          |SELECT dg.node AS node, CAST(d AS BIGINT) AS degree,
          |  CAST(coalesce(n_triangles, 0) AS BIGINT) AS n_triangles,
-         |  CASE WHEN d >= 2 THEN ${graft.functions.Portable.r6Sql(
+         |  CASE WHEN d >= 2 THEN ${r6(
                 "2.0 * CAST(coalesce(n_triangles, 0) AS DOUBLE) / (CAST(d AS DOUBLE) * (CAST(d AS DOUBLE) - 1.0))")} END AS coef
          |FROM dg LEFT JOIN tc USING (node)""".stripMargin),
 
@@ -63,9 +70,7 @@ object GraphQueries {
            |k$r AS (SELECT node FROM d$r WHERE d >= 3),
            |e$r AS (SELECT e${r - 1}.* FROM e${r - 1} WHERE a IN (SELECT node FROM k$r) AND b IN (SELECT node FROM k$r))""".stripMargin
       }.mkString(",\n")
-      s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-         |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-         |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
          |e0 AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
          |$rounds
          |SELECT node, CAST(d AS BIGINT) AS degree
@@ -85,16 +90,14 @@ object GraphQueries {
       val relax = (rPrev: String, c: String, r: String) =>
         s"""$r AS (SELECT n.node, 0.15 + 0.85 * CAST(coalesce($c.m, 0) AS DOUBLE) AS rank
            |  FROM n LEFT JOIN $c ON n.node = $c.node)""".stripMargin
-      s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-         |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-         |      FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("e")},
          |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
          |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
          |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS rank FROM n),
          |${contrib("r0", "c1")}, ${relax("r0", "c1", "r1")},
          |${contrib("r1", "c2")}, ${relax("r1", "c2", "r2")},
          |${contrib("r2", "c3")}, ${relax("r2", "c3", "r3")}
-         |SELECT node, floor((rank) * 1000000 + 0.5) / 1000000 AS rank FROM r3""".stripMargin
+         |SELECT node, ${r6("rank")} AS rank FROM r3""".stripMargin
     }),
 
     // degree-ordered triangle enumeration over the word-adjacency graph
@@ -103,9 +106,7 @@ object GraphQueries {
       val edges = wordAdjacencyEdges(s, dir)
       Graph.triangles(edges)
     },
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-        |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-        |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
         |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst)
         |SELECT e1.a AS a, e1.b AS b, e2.b AS c
         |FROM e e1 JOIN e e2 ON e2.a = e1.a AND e2.b > e1.b
@@ -117,9 +118,7 @@ object GraphQueries {
       Graph.adamicAdar(wordAdjacencyEdges(s, dir), maxDegree = 64, minCommon = 2L)
         .select(col("a"), col("b"), col("n_common"),
           graft.functions.Portable.r6(col("score")).as("score")),
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-        |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-        |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
         |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
         |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d
         |        FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
@@ -133,7 +132,7 @@ object GraphQueries {
         |      FROM p GROUP BY 1, 2),
         |x2 AS (SELECT g.a, g.b, g.n_common, g.score FROM g
         |       LEFT JOIN e ON g.a = e.a AND g.b = e.b WHERE e.a IS NULL)
-        |SELECT a, b, n_common, floor(score * 1000000 + 0.5) / 1000000 AS score
+        |SELECT a, b, n_common, ${r6("score")} AS score
         |FROM x2 WHERE n_common >= 2""".stripMargin),
 
     // 2-round HITS hubs/authorities over the word-adjacency graph
@@ -151,9 +150,7 @@ object GraphQueries {
            |$c AS (SELECT n.node, CASE WHEN t IS NOT NULL AND t <> 0
            |    THEN CAST(coalesce(m, 0) AS DOUBLE) / CAST(t AS DOUBLE) ELSE 0.0 END AS s
            |  FROM n LEFT JOIN ${c}m ON n.node = ${c}m.node, ${c}t)""".stripMargin
-      s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-         |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-         |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
          |e AS (SELECT src, dst, CAST(count(*) AS BIGINT) AS w FROM ed GROUP BY 1, 2),
          |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
          |h0 AS (SELECT node, CAST(1 AS DOUBLE) AS s FROM n),
@@ -162,8 +159,8 @@ object GraphQueries {
          |${mass("h1", "src", "dst", "a2")},
          |${mass("a2", "dst", "src", "h2")}
          |SELECT n.node,
-         |  floor(a2.s * 1000000 + 0.5) / 1000000 AS auth,
-         |  floor(h2.s * 1000000 + 0.5) / 1000000 AS hub
+         |  ${r6("a2.s")} AS auth,
+         |  ${r6("h2.s")} AS hub
          |FROM n JOIN a2 ON n.node = a2.node JOIN h2 ON n.node = h2.node""".stripMargin
     }),
 
@@ -186,9 +183,7 @@ object GraphQueries {
       val relax = (c: String, r: String) =>
         s"""$r AS (SELECT ns.node, 0.15 * ns.seed + 0.85 * CAST(coalesce($c.m, 0) AS DOUBLE) AS rank
            |  FROM ns LEFT JOIN $c ON ns.node = $c.node)""".stripMargin
-      s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-         |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-         |      FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("e")},
          |n AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
          |ns AS (SELECT node, CASE WHEN node LIKE 's%' THEN CAST(1 AS DOUBLE) ELSE CAST(0 AS DOUBLE) END AS seed FROM n),
          |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
@@ -196,7 +191,7 @@ object GraphQueries {
          |${contrib("r0", "c1")}, ${relax("c1", "r1")},
          |${contrib("r1", "c2")}, ${relax("c2", "r2")},
          |${contrib("r2", "c3")}, ${relax("c3", "r3")}
-         |SELECT node, floor((rank) * 1000000 + 0.5) / 1000000 AS rank FROM r3""".stripMargin
+         |SELECT node, ${r6("rank")} AS rank FROM r3""".stripMargin
     }),
 
     // degree assortativity of the word-adjacency graph (hub-hub vs
@@ -205,9 +200,7 @@ object GraphQueries {
       Graph.assortativity(wordAdjacencyEdges(s, dir))
         .select(col("n_nodes"), col("n_edges"),
           graft.functions.Portable.r6(col("r")).as("r")),
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-        |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-        |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
         |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
         |dg AS (SELECT node, CAST(count(*) AS BIGINT) AS d
         |  FROM (SELECT a AS node FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
@@ -215,15 +208,14 @@ object GraphQueries {
         |j AS (SELECT CAST(du.d AS DOUBLE) AS x, CAST(dv.d AS DOUBLE) AS y
         |  FROM bi JOIN dg du ON bi.u = du.node JOIN dg dv ON bi.v = dv.node),
         |m AS (SELECT CAST(count(*) AS BIGINT) AS m2,
-        |    CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(x * y AS DECIMAL(38,6))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxx
+        |    ${dsum("x")} AS sx,
+        |    ${dsum("x * y")} AS sxy,
+        |    ${dsum("x * x")} AS sxx
         |  FROM j),
         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM dg)
         |SELECT n_nodes, CAST(m2 // 2 AS BIGINT) AS n_edges,
         |  CASE WHEN (CAST(m2 AS DOUBLE) * sxx - sx * sx) > 0 THEN
-        |    floor((CAST(m2 AS DOUBLE) * sxy - sx * sx)
-        |      / (CAST(m2 AS DOUBLE) * sxx - sx * sx) * 1000000 + 0.5) / 1000000
+        |    ${r6("(CAST(m2 AS DOUBLE) * sxy - sx * sx) / (CAST(m2 AS DOUBLE) * sxx - sx * sx)")}
         |  END AS r
         |FROM m, nn""".stripMargin),
 
@@ -242,9 +234,7 @@ object GraphQueries {
           graft.functions.Portable.r6(col("a_c")).as("a_c"),
           graft.functions.Portable.r6(col("q_c")).as("q_c"))
     },
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-        |ed AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-        |       FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("ed")},
         |e AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM ed WHERE src <> dst),
         |le AS (SELECT a, b, substr(a, 1, 1) AS la, substr(b, 1, 1) AS lb FROM e),
         |m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
@@ -258,9 +248,9 @@ object GraphQueries {
         |    CAST(d AS DOUBLE) / (2.0 * CAST(m AS DOUBLE)) AS a_c
         |  FROM np LEFT JOIN dm USING (label) LEFT JOIN itn USING (label) CROSS JOIN m)
         |SELECT label, n_nodes, CAST(n_internal AS BIGINT) AS n_internal,
-        |  floor(e_c * 1000000 + 0.5) / 1000000 AS e_c,
-        |  floor(a_c * 1000000 + 0.5) / 1000000 AS a_c,
-        |  floor((e_c - a_c * a_c) * 1000000 + 0.5) / 1000000 AS q_c
+        |  ${r6("e_c")} AS e_c,
+        |  ${r6("a_c")} AS a_c,
+        |  ${r6("e_c - a_c * a_c")} AS q_c
         |FROM f""".stripMargin),
 
     // LPA communities over the REPEAT co-purchase graph: parts sharing
@@ -337,9 +327,7 @@ object GraphQueries {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       Graph.kHopDistances(e, e.agg(min(col("src")).as("node")), maxHops = 4)
     },
-      """WITH RECURSIVE tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-        |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-        |      FROM tk WHERE len(ts) >= 2),
+      s"""WITH RECURSIVE ${wordAdjacencySql("e")},
         |s AS (SELECT min(src) AS node FROM e),
         |r(node, d) AS (SELECT node, 0 FROM s
         |    UNION SELECT e.dst, r.d + 1 FROM r JOIN e ON e.src = r.node WHERE r.d < 4)
@@ -348,9 +336,7 @@ object GraphQueries {
     // one-row graph sanity sheet for the word-adjacency graph
     QueryDef("q_graph_profile", (s, dir) =>
       Graph.profile(wordAdjacencyEdges(s, dir)),
-      s"""WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS ts FROM documents),
-         |e AS (SELECT unnest(list_slice(ts, 1, len(ts)-1)) AS src, unnest(list_slice(ts, 2, len(ts))) AS dst
-         |      FROM tk WHERE len(ts) >= 2),
+      s"""WITH ${wordAdjacencySql("e")},
          |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM (SELECT src AS x FROM e UNION SELECT dst FROM e)),
          |de AS (SELECT DISTINCT src, dst FROM e),
          |rr AS (SELECT count(*) AS nr FROM de a

@@ -77,7 +77,7 @@ object MedsQueries {
         graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))
 
   private val medsPipelineOracleSql: String =
-    """WITH m AS (SELECT user_id AS patient_id, ts AS time, event_type AS code, CAST(value AS DOUBLE) AS v FROM events),
+    s"""WITH m AS (SELECT user_id AS patient_id, ts AS time, event_type AS code, CAST(value AS DOUBLE) AS v FROM events),
           |pf AS (SELECT * FROM m WHERE patient_id IN (
           |  SELECT patient_id FROM m WHERE time IS NOT NULL GROUP BY 1 HAVING count(*) >= 60)),
           |u AS (SELECT DISTINCT patient_id, time FROM pf WHERE time IS NOT NULL),
@@ -111,7 +111,7 @@ object MedsQueries {
           |vc AS (SELECT code, row_number() OVER (ORDER BY code NULLS FIRST) AS idx
           |       FROM (SELECT DISTINCT code FROM oc))
           |SELECT oc.patient_id, epoch_us(oc.time) AS time_us, CAST(vc.idx AS BIGINT) AS code,
-          |  floor(((oc.v - ms1.mean)/ms1.std) * 1000000 + 0.5) / 1000000 AS numeric_value
+          |  ${r6("(oc.v - ms1.mean)/ms1.std")} AS numeric_value
           |FROM oc JOIN vc USING (code) JOIN ms1 USING (code)""".stripMargin
 
   val all: Seq[QueryDef] = Seq(
@@ -171,10 +171,10 @@ object MedsQueries {
       TimeDerived
         .ageEvents(meds(s, dir), TimeDerived.Dob.FirstEvent, "AGE", "years")
         .select(col("patient_id"), timeUs(), col("code"), graft.functions.Portable.r6(col("numeric_value")).as("numeric_value")),
-      """WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL),
+      s"""WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL),
         |d AS (SELECT user_id, ts, min(ts) OVER (PARTITION BY user_id) AS dob FROM u)
         |SELECT user_id AS patient_id, epoch_us(ts) AS time_us, 'AGE' AS code,
-        |  floor(((epoch_us(ts)-epoch_us(dob)) / (1000000*(86400*CAST(365.2422 AS DOUBLE)))) * 1000000 + 0.5) / 1000000 AS numeric_value
+        |  ${r6("(epoch_us(ts)-epoch_us(dob)) / (1000000*(86400*CAST(365.2422 AS DOUBLE)))")} AS numeric_value
         |FROM d WHERE epoch_us(ts) > epoch_us(dob)""".stripMargin),
 
     QueryDef("q_time_of_day", (s, dir) =>
@@ -198,10 +198,10 @@ object MedsQueries {
           when(col("code") === "AGE", graft.functions.Portable.r6(col("numeric_value")))
             .otherwise(col("numeric_value")).as("numeric_value"))
     },
-      """WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL),
+      s"""WITH u AS (SELECT DISTINCT user_id, ts FROM events WHERE ts IS NOT NULL),
         |d AS (SELECT user_id, ts, min(ts) OVER (PARTITION BY user_id) AS dob FROM u),
         |age AS (SELECT user_id AS patient_id, epoch_us(ts) AS time_us, 'AGE' AS code,
-        |  floor(((epoch_us(ts)-epoch_us(dob)) / (1000000*(86400*CAST(365.2422 AS DOUBLE)))) * 1000000 + 0.5) / 1000000 AS numeric_value
+        |  ${r6("(epoch_us(ts)-epoch_us(dob)) / (1000000*(86400*CAST(365.2422 AS DOUBLE)))")} AS numeric_value
         |  FROM d WHERE epoch_us(ts) > epoch_us(dob)),
         |tod AS (SELECT DISTINCT user_id AS patient_id, epoch_us(ts) AS time_us,
         |  CASE WHEN hour(ts)<6 THEN 'time_of_day//[00,06)' WHEN hour(ts)<12 THEN 'time_of_day//[06,12)'
@@ -235,12 +235,10 @@ object MedsQueries {
         .winsorize(medsE(s, dir), lowerQ = 0.05, upperQ = 0.95, exact = true)
         .select(col("event_id"), col("patient_id"), timeUs(), col("code"),
           graft.functions.Portable.r6(col("numeric_value")).as("numeric_value")),
-      """WITH b AS (SELECT event_type, quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi
+      s"""WITH b AS (SELECT event_type, quantile_cont(value, 0.05) AS lo, quantile_cont(value, 0.95) AS hi
         |           FROM events GROUP BY 1)
         |SELECT e.event_id, e.user_id AS patient_id, epoch_us(e.ts) AS time_us, e.event_type AS code,
-        |  floor((CASE WHEN e.value IS NULL THEN e.value
-        |             WHEN e.value < b.lo THEN b.lo
-        |             WHEN e.value > b.hi THEN b.hi ELSE e.value END) * 1000000 + 0.5) / 1000000 AS numeric_value
+        |  ${r6("CASE WHEN e.value IS NULL THEN e.value WHEN e.value < b.lo THEN b.lo WHEN e.value > b.hi THEN b.hi ELSE e.value END")} AS numeric_value
         |FROM events e LEFT JOIN b ON e.event_type = b.event_type""".stripMargin),
 
     QueryDef("q_normalize", { (s, dir) =>
@@ -252,7 +250,7 @@ object MedsQueries {
       s"""WITH $statsCtes,
          |v AS (SELECT code, mean, std, row_number() OVER (ORDER BY code NULLS FIRST) AS idx FROM st)
          |SELECT e.user_id AS patient_id, epoch_us(e.ts) AS time_us, v.idx AS code,
-         |  floor(((e.value - v.mean)/v.std) * 1000000 + 0.5) / 1000000 AS numeric_value
+         |  ${r6("(e.value - v.mean)/v.std")} AS numeric_value
          |FROM events e JOIN v ON e.event_type = v.code""".stripMargin),
 
     QueryDef("q_fit_vocab", (s, dir) =>
@@ -312,11 +310,11 @@ object MedsQueries {
         .seqsExploded(meds(s, dir))
         .select(col("patient_id"), timeUs(), col("n_measurements"), col("codes"),
           graft.functions.Portable.r6(col("time_delta_days")).as("time_delta_days")),
-      """WITH pe AS (SELECT user_id, ts, count(*) AS n_measurements,
+      s"""WITH pe AS (SELECT user_id, ts, count(*) AS n_measurements,
         |  array_to_string(list_sort(list(event_type)), ',') AS codes
         |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2)
         |SELECT user_id AS patient_id, epoch_us(ts) AS time_us, n_measurements, codes,
-        |  floor(((epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts))/(86400.0*1000000.0)) * 1000000 + 0.5) / 1000000 AS time_delta_days
+        |  ${r6("(epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts))/(86400.0*1000000.0)")} AS time_delta_days
         |FROM pe""".stripMargin),
 
     // Tensorization (§2 #14, the reference's convert_to_NRT) against the
@@ -383,13 +381,13 @@ object MedsQueries {
          |  CROSS JOIN (SELECT unnest(range(4)) AS i) ii)
          |SELECT patient_id, CAST(least(len(tus), 8) AS BIGINT) AS n_events,
          |  CAST(e AS BIGINT) AS e, CAST(i AS BIGINT) AS i,
-         |  ${graft.functions.Portable.r6Sql(
+         |  ${r6(
              "CASE WHEN e + 1 > len(tus) THEN 0.0 WHEN e = 0 THEN 'NaN'::DOUBLE " +
              "ELSE CAST(tus[e+1] - tus[e] AS DOUBLE) / CAST(86400000000 AS DOUBLE) END")} AS time_delta_days,
          |  e + 1 <= len(tus) AS event_mask,
          |  coalesce(codes[e+1][i+1], 0) AS code,
          |  coalesce(len(codes[e+1]), 0) >= i + 1 AS code_mask,
-         |  ${graft.functions.Portable.r6Sql("coalesce(vals[e+1][i+1], 0.0)")} AS numeric_value,
+         |  ${r6("coalesce(vals[e+1][i+1], 0.0)")} AS numeric_value,
          |  vals[e+1][i+1] IS NOT NULL AS numeric_value_mask
          |FROM g""".stripMargin),
 
@@ -566,7 +564,7 @@ object MedsQueries {
          |mad AS (SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
          |  FROM events e JOIN med m USING (event_type) WHERE e.value IS NOT NULL GROUP BY 1),
          |z AS (SELECT e.event_id, e.event_type,
-         |    ${graft.functions.Portable.r6Sql("(e.value - m.med) / (1.4826 * nullif(d.mad, 0))")} AS robust_z
+         |    ${r6("(e.value - m.med) / (1.4826 * nullif(d.mad, 0))")} AS robust_z
          |  FROM events e LEFT JOIN med m USING (event_type) LEFT JOIN mad d USING (event_type))
          |SELECT event_id, event_type, robust_z,
          |  coalesce(abs(robust_z) > 3.5, false) AS is_outlier
@@ -579,11 +577,11 @@ object MedsQueries {
         .robustScale(medsE(s, dir), exact = true)
         .select(col("event_id"), col("patient_id"), col("code"),
           graft.functions.Portable.r6(col("scaled_value")).as("scaled_value")),
-      """WITH b AS (SELECT event_type, quantile_cont(value, 0.25) AS q1,
+      s"""WITH b AS (SELECT event_type, quantile_cont(value, 0.25) AS q1,
         |  quantile_cont(value, 0.5) AS med, quantile_cont(value, 0.75) AS q3
         |  FROM events GROUP BY 1)
         |SELECT e.event_id, e.user_id AS patient_id, e.event_type AS code,
-        |  floor(((e.value - b.med) / nullif(b.q3 - b.q1, 0)) * 1000000 + 0.5) / 1000000 AS scaled_value
+        |  ${r6("(e.value - b.med) / nullif(b.q3 - b.q1, 0)")} AS scaled_value
         |FROM events e LEFT JOIN b ON e.event_type = b.event_type""".stripMargin),
 
     // winsorized mean of value per event type ([p5, p95] band)
@@ -595,22 +593,22 @@ object MedsQueries {
           graft.functions.Portable.r6(col("wins_mean")).as("wins_mean"),
           graft.functions.Portable.r6(col("lo")).as("lo"),
           graft.functions.Portable.r6(col("hi")).as("hi")),
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x FROM events
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
         |b AS (SELECT event_type, quantile_cont(x, 0.05) AS lo, quantile_cont(x, 0.95) AS hi
         |      FROM v GROUP BY 1),
         |c AS (SELECT v.event_type, x, lo, hi, least(greatest(x, lo), hi) AS w
         |      FROM v JOIN b USING (event_type)),
         |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS s,
-        |        CAST(sum(CAST(floor(w * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sw,
+        |        ${dsum(r6("x"))} AS s,
+        |        ${dsum(r6("w"))} AS sw,
         |        max(lo) AS lo, max(hi) AS hi
         |      FROM c GROUP BY 1)
         |SELECT event_type, n,
-        |  floor(s / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean,
-        |  floor(sw / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS wins_mean,
-        |  floor(lo * 1000000 + 0.5) / 1000000 AS lo,
-        |  floor(hi * 1000000 + 0.5) / 1000000 AS hi
+        |  ${r6("s / CAST(n AS DOUBLE)")} AS mean,
+        |  ${r6("sw / CAST(n AS DOUBLE)")} AS wins_mean,
+        |  ${r6("lo")} AS lo,
+        |  ${r6("hi")} AS hi
         |FROM g""".stripMargin),
 
     // rendezvous-hash rebalance audit: growing 8->10 shards should move

@@ -39,7 +39,7 @@ object QualityQueries {
         ("orders.custkey", Tables.orders(s, dir), "o_custkey", Tables.customer(s, dir), "c_custkey"),
         ("customer.nationkey", Tables.customer(s, dir), "c_nationkey", Tables.nation(s, dir), "n_nationkey")
       )),
-      """WITH a AS (SELECT 'lineitem.orderkey' AS relation, count(*) AS n_rows,
+      s"""WITH a AS (SELECT 'lineitem.orderkey' AS relation, count(*) AS n_rows,
         |    CAST(sum(CASE WHEN l.l_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_fk,
         |    CAST(sum(CASE WHEN l.l_orderkey IS NOT NULL AND o.o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
         |  FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o ON l.l_orderkey = o.o_orderkey),
@@ -52,7 +52,7 @@ object QualityQueries {
         |    CAST(sum(CASE WHEN c.c_nationkey IS NOT NULL AND n.n_nationkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphans
         |  FROM customer c LEFT JOIN (SELECT DISTINCT n_nationkey FROM nation) n ON c.c_nationkey = n.n_nationkey)
         |SELECT relation, n_rows, n_null_fk, n_orphans,
-        |  floor((CAST(n_orphans AS DOUBLE)/CAST(greatest(n_rows,1) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS orphan_frac
+        |  ${r6("CAST(n_orphans AS DOUBLE)/CAST(greatest(n_rows,1) AS DOUBLE)")} AS orphan_frac
         |FROM (SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM cta)""".stripMargin),
 
     // Benford first-digit audit over event values
@@ -72,12 +72,12 @@ object QualityQueries {
          |t AS (SELECT *, sum(n) OVER (PARTITION BY event_type) AS total,
          |    ln(CAST(1 AS DOUBLE) + CAST(1 AS DOUBLE)/CAST(digit AS DOUBLE)) / ln(CAST(10 AS DOUBLE)) AS ef
          |  FROM fu),
-         |h AS (SELECT *, ${graft.functions.Portable.r6Sql(
+         |h AS (SELECT *, ${r6(
                 "(CAST(n AS DOUBLE) - ef * CAST(total AS DOUBLE)) * (CAST(n AS DOUBLE) - ef * CAST(total AS DOUBLE)) / (ef * CAST(total AS DOUBLE))")} AS term FROM t)
          |SELECT event_type, digit, n,
-         |  ${graft.functions.Portable.r6Sql("CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS obs_frac,
-         |  ${graft.functions.Portable.r6Sql("ef")} AS exp_frac,
-         |  ${graft.functions.Portable.r6Sql(
+         |  ${r6("CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS obs_frac,
+         |  ${r6("ef")} AS exp_frac,
+         |  ${r6(
                 "CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (PARTITION BY event_type) AS DOUBLE)")} AS chi2
          |FROM h""".stripMargin),
 
@@ -110,7 +110,7 @@ object QualityQueries {
       expectRulesSql.map { case (name, holds) =>
         s"""SELECT '$name' AS rule, count(*) AS n_rows,
            |  count(CASE WHEN NOT coalesce($holds, FALSE) THEN 1 END) AS n_violations,
-           |  floor((count(CASE WHEN NOT coalesce($holds, FALSE) THEN 1 END) / greatest(count(*), 1)) * 1000000 + 0.5) / 1000000 AS violation_frac
+           |  ${r6(s"count(CASE WHEN NOT coalesce($holds, FALSE) THEN 1 END) / greatest(count(*), 1)")} AS violation_frac
            |FROM events""".stripMargin
       }.mkString("\n", "\nUNION ALL\n", "\nORDER BY rule")),
 
@@ -154,7 +154,7 @@ object QualityQueries {
       HeavyHitters.exactHeavyHitters(
         docs(s, dir).select(explode(graft.text.TextFunctions.wordTokens(col("text"))).as("tok")),
         "tok", k = 4096, threshold = 900L),
-      """WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS tok FROM documents)
+      s"""WITH t AS (SELECT unnest(${wordTokensSql("text")}) AS tok FROM documents)
         |SELECT tok, count(*) AS n FROM t GROUP BY 1 HAVING count(*) >= 900""".stripMargin),
 
     // count-min sketch (4x64) point estimates of per-user event counts
@@ -181,15 +181,14 @@ object QualityQueries {
         .select(col("event_id"), col("code"),
           graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"),
           col("numeric_value/imputed").as("imputed")),
-      """WITH v AS (SELECT event_id, event_type AS code,
+      s"""WITH v AS (SELECT event_id, event_type AS code,
         |  CASE WHEN event_id % 97 = 0 THEN NULL ELSE value END AS value FROM events),
         |m AS (SELECT code,
         |  count(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN 1 END) AS n,
         |  CAST(coalesce(sum(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN CAST(value AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s
         |  FROM v GROUP BY 1)
         |SELECT event_id, v.code AS code,
-        |  floor(CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN value
-        |             WHEN n > 0 THEN s / n END * 1000000 + 0.5) / 1000000 AS numeric_value,
+        |  ${r6("CASE WHEN value IS NOT NULL AND NOT isnan(value) THEN value WHEN n > 0 THEN s / n END")} AS numeric_value,
         |  CAST(CASE WHEN (value IS NULL OR isnan(value)) AND n > 0 THEN 1 ELSE 0 END AS BIGINT) AS imputed
         |FROM v JOIN m ON v.code IS NOT DISTINCT FROM m.code""".stripMargin),
 
@@ -205,7 +204,7 @@ object QualityQueries {
       s"""WITH q AS (SELECT event_type AS code, quantile_cont(value, $ps) AS qs
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1)
          |SELECT code, unnest($ps) AS p,
-         |  floor(unnest(qs) * 1000000 + 0.5) / 1000000 AS q
+         |  ${r6("unnest(qs)")} AS q
          |FROM q""".stripMargin
     }),
 
@@ -228,8 +227,8 @@ object QualityQueries {
          |        greatest(1, least(20, CAST(ceil(pr * 20) AS BIGINT))) AS bin
          |      FROM p)
          |SELECT doc_id, source, value,
-         |  floor(pr * 1000000 + 0.5) / 1000000 AS pr, bin,
-         |  floor(r[CAST(bin AS INT)] * 1000000 + 0.5) / 1000000 AS norm
+         |  ${r6("pr")} AS pr, bin,
+         |  ${r6("r[CAST(bin AS INT)]")} AS norm
          |FROM b, ref""".stripMargin
     }),
 
@@ -242,7 +241,7 @@ object QualityQueries {
         .select(col("k"), col("n_rows"), col("n_classes"), col("n_singletons"),
           col("n_rows_at_risk"), col("min_class_size"),
           graft.functions.Portable.r6(col("frac_at_risk")).as("frac_at_risk")),
-      """WITH c AS (SELECT lang, source, n_chars // 100 AS len_bucket, CAST(count(*) AS BIGINT) AS n
+      s"""WITH c AS (SELECT lang, source, n_chars // 100 AS len_bucket, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY 1, 2, 3),
         |m AS (SELECT CAST(5 AS BIGINT) AS k,
         |        CAST(sum(n) AS BIGINT) AS n_rows,
@@ -252,7 +251,7 @@ object QualityQueries {
         |        CAST(min(n) AS BIGINT) AS min_class_size
         |      FROM c)
         |SELECT k, n_rows, n_classes, n_singletons, n_rows_at_risk, min_class_size,
-        |  floor(CAST(n_rows_at_risk AS DOUBLE) / CAST(n_rows AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_at_risk
+        |  ${r6("CAST(n_rows_at_risk AS DOUBLE) / CAST(n_rows AS DOUBLE)")} AS frac_at_risk
         |FROM m""".stripMargin),
 
     // l-diversity of source within (lang, length-bucket) classes — the
@@ -264,7 +263,7 @@ object QualityQueries {
         .select(col("l"), col("n_rows"), col("n_classes"), col("n_classes_below_l"),
           col("n_rows_at_risk"), col("min_diversity"),
           graft.functions.Portable.r6(col("frac_at_risk")).as("frac_at_risk")),
-      """WITH c AS (SELECT lang, n_chars // 100 AS len_bucket,
+      s"""WITH c AS (SELECT lang, n_chars // 100 AS len_bucket,
         |    CAST(count(*) AS BIGINT) AS n, CAST(count(DISTINCT source) AS BIGINT) AS ndv
         |  FROM documents GROUP BY 1, 2)
         |SELECT CAST(3 AS BIGINT) AS l,
@@ -273,8 +272,7 @@ object QualityQueries {
         |  CAST(count(CASE WHEN ndv < 3 THEN 1 END) AS BIGINT) AS n_classes_below_l,
         |  CAST(coalesce(sum(CASE WHEN ndv < 3 THEN n END), 0) AS BIGINT) AS n_rows_at_risk,
         |  CAST(min(ndv) AS BIGINT) AS min_diversity,
-        |  floor(CAST(coalesce(sum(CASE WHEN ndv < 3 THEN n END), 0) AS DOUBLE)
-        |    / CAST(sum(n) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_at_risk
+        |  ${r6("CAST(coalesce(sum(CASE WHEN ndv < 3 THEN n END), 0) AS DOUBLE) / CAST(sum(n) AS DOUBLE)")} AS frac_at_risk
         |FROM c""".stripMargin),
 
     // order-free per-source content checksum (change detection)
@@ -302,7 +300,7 @@ object QualityQueries {
         .select(col("t"), col("n_rows"), col("n_classes"), col("n_classes_above_t"),
           col("n_rows_at_risk"), col("frac_at_risk"),
           graft.functions.Portable.r6(col("max_distance")).as("max_distance")),
-      """WITH cv AS (SELECT source, n_chars // 100 AS len_bucket,
+      s"""WITH cv AS (SELECT source, n_chars // 100 AS len_bucket,
         |    coalesce(CAST(lang AS VARCHAR), '__NULL__') AS v, CAST(count(*) AS BIGINT) AS n
         |  FROM documents GROUP BY 1, 2, 3),
         |cls AS (SELECT source, len_bucket, v, n,
@@ -310,17 +308,15 @@ object QualityQueries {
         |g AS (SELECT v, CAST(sum(n) AS DOUBLE) / (SELECT CAST(sum(n) AS DOUBLE) FROM cv) AS q
         |  FROM cv GROUP BY 1),
         |pc AS (SELECT source, len_bucket, max(cn) AS cn,
-        |    CAST(sum(CAST(floor((abs(CAST(n AS DOUBLE) / CAST(cn AS DOUBLE) - q) - q)
-        |      * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS s
+        |    ${dsum(r6("abs(CAST(n AS DOUBLE) / CAST(cn AS DOUBLE) - q) - q"))} AS s
         |  FROM cls JOIN g USING (v) GROUP BY 1, 2),
-        |d AS (SELECT cn, floor((1.0 + s) / 2.0 * 1000000 + 0.5) / 1000000 AS dist FROM pc)
+        |d AS (SELECT cn, ${r6("(1.0 + s) / 2.0")} AS dist FROM pc)
         |SELECT 0.2 AS t, CAST(sum(cn) AS BIGINT) AS n_rows,
         |  CAST(count(*) AS BIGINT) AS n_classes,
         |  CAST(count(CASE WHEN dist > 0.2 THEN 1 END) AS BIGINT) AS n_classes_above_t,
         |  CAST(coalesce(sum(CASE WHEN dist > 0.2 THEN cn END), 0) AS BIGINT) AS n_rows_at_risk,
-        |  floor(CAST(coalesce(sum(CASE WHEN dist > 0.2 THEN cn END), 0) AS DOUBLE)
-        |    / CAST(sum(cn) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_at_risk,
-        |  floor(max(dist) * 1000000 + 0.5) / 1000000 AS max_distance
+        |  ${r6("CAST(coalesce(sum(CASE WHEN dist > 0.2 THEN cn END), 0) AS DOUBLE) / CAST(sum(cn) AS DOUBLE)")} AS frac_at_risk,
+        |  ${r6("max(dist)")} AS max_distance
         |FROM d""".stripMargin),
 
     // ε-DP count release: per-(source, lang) doc counts with
@@ -333,9 +329,7 @@ object QualityQueries {
          |h AS (SELECT source, lang, n,
          |    (CAST(${h32(key)} AS DOUBLE) + 0.5) / 4294967296.0 - 0.5 AS u FROM g)
          |SELECT source, lang, CAST(1.0 AS DOUBLE) AS epsilon,
-         |  floor((CAST(n AS DOUBLE)
-         |    - (CASE WHEN u < 0 THEN -1.0 WHEN u > 0 THEN 1.0 ELSE 0.0 END)
-         |      * ln(1.0 - 2.0 * abs(u)) / 1.0) * 1000000 + 0.5) / 1000000 AS noisy_count
+         |  ${r6("CAST(n AS DOUBLE) - (CASE WHEN u < 0 THEN -1.0 WHEN u > 0 THEN 1.0 ELSE 0.0 END) * ln(1.0 - 2.0 * abs(u)) / 1.0")} AS noisy_count
          |FROM h""".stripMargin
     }),
 
@@ -352,14 +346,14 @@ object QualityQueries {
       {
       val k = 256
       s"""WITH t AS (SELECT DISTINCT source, ${h32("tok")} AS h
-         |  FROM (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS tok FROM documents)),
+         |  FROM (SELECT source, unnest(${wordTokensSql("text")}) AS tok FROM documents)),
          |r AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rk FROM t),
          |sk AS (SELECT source, list(h ORDER BY h) AS kmv, CAST(count(*) AS BIGINT) AS sz FROM r WHERE rk <= $k GROUP BY 1),
          |est AS (SELECT source, kmv,
          |    CASE WHEN sz < $k THEN CAST(sz AS DOUBLE)
          |      ELSE ${k - 1}.0 / ((CAST(kmv[$k] AS DOUBLE) + 1.0) / 4294967296.0) END AS e0 FROM sk),
          |pr AS (SELECT a.source AS src_a, b.source AS src_b, a.kmv AS sa, b.kmv AS sb,
-         |    floor(a.e0 * 1000000 + 0.5) / 1000000 AS est_a, floor(b.e0 * 1000000 + 0.5) / 1000000 AS est_b
+         |    ${r6("a.e0")} AS est_a, ${r6("b.e0")} AS est_b
          |  FROM est a JOIN est b ON a.source < b.source),
          |m AS (SELECT *, list_sort(list_distinct(list_concat(sa, sb))) AS un FROM pr),
          |l AS (SELECT *, un[1:$k] AS ll, len(un) AS usz FROM m),
@@ -368,9 +362,9 @@ object QualityQueries {
          |      ELSE ${k - 1}.0 / ((CAST(ll[$k] AS DOUBLE) + 1.0) / 4294967296.0) END AS eu FROM l),
          |g AS (SELECT *, CASE WHEN lsz > 0 THEN CAST(ncom AS DOUBLE) / CAST(lsz AS DOUBLE) END AS jac FROM f)
          |SELECT src_a, src_b, est_a, est_b,
-         |  floor(eu * 1000000 + 0.5) / 1000000 AS est_union,
-         |  floor(jac * 1000000 + 0.5) / 1000000 AS est_jaccard,
-         |  floor(jac * eu * 1000000 + 0.5) / 1000000 AS est_intersection
+         |  ${r6("eu")} AS est_union,
+         |  ${r6("jac")} AS est_jaccard,
+         |  ${r6("jac * eu")} AS est_intersection
          |FROM g""".stripMargin
     }),
 
@@ -417,7 +411,7 @@ object QualityQueries {
       s"""WITH m AS (
          |  SELECT source = 'src0' AS ref, 'n_chars' AS feature, CAST(n_chars AS DOUBLE) AS v FROM documents
          |  UNION ALL
-         |  SELECT source = 'src0', 'n_words', CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS DOUBLE) FROM documents
+         |  SELECT source = 'src0', 'n_words', CAST(len(${wordTokensSql("text")}) AS DOUBLE) FROM documents
          |  UNION ALL
          |  SELECT source = 'src0', 'n_lines', CAST(len(string_split(text, chr(10))) AS DOUBLE) FROM documents),
          |vv AS (SELECT feature, CASE WHEN ref THEN 1 ELSE 0 END AS a, v AS x FROM m
@@ -476,7 +470,7 @@ object QualityQueries {
          |    'n_chars' AS feature, CAST(n_chars AS DOUBLE) AS x FROM documents
          |  UNION ALL
          |  SELECT CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END, 'n_words',
-         |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS DOUBLE) FROM documents
+         |    CAST(len(${wordTokensSql("text")}) AS DOUBLE) FROM documents
          |  UNION ALL
          |  SELECT CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END, 'n_lines',
          |    CAST(len(string_split(text, chr(10))) AS DOUBLE) FROM documents),

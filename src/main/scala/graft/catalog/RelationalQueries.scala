@@ -56,8 +56,8 @@ object RelationalQueries {
           col("l_extendedprice") * (lit(1) - col("l_discount"))).cast("decimal(38,6)"))
           .cast("double").as("revenue"))
     },
-      """SELECT n_name,
-        |  CAST(CAST(sum(CAST(floor((l_extendedprice*(1-l_discount)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS revenue
+      s"""SELECT n_name,
+        |  CAST(CAST(sum(CAST(${r6("l_extendedprice*(1-l_discount)")} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS revenue
         |FROM lineitem, orders, supplier, customer, nation, region
         |WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey AND o_custkey = c_custkey
         |  AND c_nationkey = s_nationkey AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
@@ -74,7 +74,7 @@ object RelationalQueries {
           extraAggs = Seq(max(col("p_retailprice")).as("max_price")))
         .select(col("entity_id"), col("n_members"), col("first_id"), col("canonical_name"),
           graft.functions.Portable.r6(col("max_price")).as("max_price")),
-      """WITH RECURSIVE t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
+      s"""WITH RECURSIVE t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
         |tok AS (SELECT DISTINCT name, unnest(list_filter(string_split_regex(name, '[^a-z]+'), x -> x <> '')) AS tk FROM t),
         |cand AS (SELECT DISTINCT a.name AS a_name, b.name AS b_name
         |  FROM tok a JOIN tok b ON a.tk = b.tk AND a.name < b.name),
@@ -93,7 +93,7 @@ object RelationalQueries {
         |rk AS (SELECT entity_id, name, row_number() OVER (PARTITION BY entity_id ORDER BY len(name) DESC, name DESC) AS rn FROM ent),
         |g AS (SELECT entity_id, count(*) AS n_members, min(id) AS first_id, max(price) AS mp FROM ent GROUP BY 1)
         |SELECT g.entity_id, g.n_members, g.first_id, rk.name AS canonical_name,
-        |  floor((mp) * 1000000 + 0.5) / 1000000 AS max_price
+        |  ${r6("mp")} AS max_price
         |FROM g JOIN (SELECT entity_id, name FROM rk WHERE rn = 1) rk USING (entity_id)""".stripMargin),
 
     // sorted-neighborhood blocking over part names (window 3, dist <= 4)
@@ -133,12 +133,12 @@ object RelationalQueries {
         .withColumn("avg_disc", col("__sum_disc") / col("count_order"))
         .drop("__sum_disc")
     },
-      """WITH a AS (SELECT l_returnflag, l_linestatus,
-        |  CAST(CAST(sum(CAST(floor((l_quantity) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,
-        |  CAST(CAST(sum(CAST(floor((l_extendedprice) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
-        |  CAST(CAST(sum(CAST(floor((l_extendedprice*(1-l_discount)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
-        |  CAST(CAST(sum(CAST(floor(((l_extendedprice*(1-l_discount))*(1+l_tax)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_charge,
-        |  CAST(CAST(sum(CAST(floor((l_discount) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc,
+      s"""WITH a AS (SELECT l_returnflag, l_linestatus,
+        |  CAST(CAST(sum(CAST(${r6("l_quantity")} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_qty,
+        |  CAST(CAST(sum(CAST(${r6("l_extendedprice")} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_base_price,
+        |  CAST(CAST(sum(CAST(${r6("l_extendedprice*(1-l_discount)")} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc_price,
+        |  CAST(CAST(sum(CAST(${r6("(l_extendedprice*(1-l_discount))*(1+l_tax)")} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_charge,
+        |  CAST(CAST(sum(CAST(${r6("l_discount")} AS DECIMAL(38,6))) AS VARCHAR) AS DOUBLE) AS sum_disc,
         |  count(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02' GROUP BY 1, 2)
         |SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price, sum_disc_price, sum_charge, count_order,
@@ -162,8 +162,8 @@ object RelationalQueries {
         .orderBy(col("revenue").desc, col("l_orderkey").asc)
         .limit(20)
     },
-      """SELECT l_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
-        |  CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+      s"""SELECT l_orderkey, epoch_us(o_orderdate) AS o_orderdate_us,
+        |  ${dsum("l_extendedprice*(1-l_discount)")} AS revenue
         |FROM customer, orders, lineitem
         |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
         |  AND o_orderdate < TIMESTAMP '1998-03-15' AND l_shipdate > TIMESTAMP '1998-03-15'
@@ -207,8 +207,8 @@ object RelationalQueries {
         .withColumn("rank",
           row_number().over(Window.orderBy(col("revenue").desc, col("c_custkey").asc)).cast("long"))
     },
-      """WITH r AS (SELECT c.c_custkey, c.c_name,
-        |  CAST(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(38,6))) AS DOUBLE) AS revenue
+      s"""WITH r AS (SELECT c.c_custkey, c.c_name,
+        |  ${dsum("l_extendedprice*(1-l_discount)")} AS revenue
         |  FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey JOIN lineitem l ON o.o_orderkey = l.l_orderkey
         |  GROUP BY 1, 2),
         |rr AS (SELECT c_custkey, c_name, revenue,
@@ -330,12 +330,12 @@ object RelationalQueries {
           minSim = 0.88)
         .select(col("a_name"), col("b_name"),
           graft.functions.Portable.r6(col("sim")).as("sim")),
-      """WITH t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
+      s"""WITH t AS (SELECT DISTINCT lower(p_name) AS name FROM part WHERE lower(p_name) <> ''),
         |tok AS (SELECT DISTINCT name, unnest(list_filter(string_split_regex(name, '[^a-z]+'), x -> x <> '')) AS tk FROM t),
         |cand AS (SELECT DISTINCT a.name AS a_name, b.name AS b_name
         |  FROM tok a JOIN tok b ON a.tk = b.tk AND a.name < b.name)
         |SELECT a_name, b_name,
-        |  floor(jaro_winkler_similarity(a_name, b_name) * 1000000 + 0.5) / 1000000 AS sim
+        |  ${r6("jaro_winkler_similarity(a_name, b_name)")} AS sim
         |FROM cand WHERE jaro_winkler_similarity(a_name, b_name) >= 0.88""".stripMargin),
 
     // salted join must be indistinguishable from the plain join (the
@@ -462,8 +462,8 @@ object RelationalQueries {
           coalesce(sum(col("n_chars").cast("decimal(38,6)")), lit(0).cast("decimal(38,6)"))
             .cast("double").as("chars"),
           grouping_id().as("gid")),
-      """SELECT lang, source, count(*) AS n,
-        |  CAST(coalesce(sum(CAST(n_chars AS DECIMAL(38,6))), 0) AS DOUBLE) AS chars,
+      s"""SELECT lang, source, count(*) AS n,
+        |  ${dsum0("n_chars")} AS chars,
         |  GROUPING_ID(lang, source) AS gid
         |FROM documents GROUP BY CUBE (lang, source)""".stripMargin),
 
@@ -516,8 +516,8 @@ object RelationalQueries {
          |${audit("user_id", "r2")},
          |u AS (SELECT * FROM r1 UNION ALL SELECT * FROM r2)
          |SELECT key_col, "rank", key, n,
-         |  floor(share * 1000000 + 0.5) / 1000000 AS share, n_rows, n_keys,
-         |  floor(skew * 1000000 + 0.5) / 1000000 AS skew, salts
+         |  ${r6("share")} AS share, n_rows, n_keys,
+         |  ${r6("skew")} AS skew, salts
          |FROM u""".stripMargin
     }),
 
@@ -540,7 +540,7 @@ object RelationalQueries {
         .select(col("id_a"), col("id_b"), col("n_agree"),
           graft.functions.Portable.r6(col("weight")).as("weight"))
     },
-      """WITH c AS (SELECT c_custkey AS id, c_mktsegment AS f1, c_nationkey AS f2,
+      s"""WITH c AS (SELECT c_custkey AS id, c_mktsegment AS f1, c_nationkey AS f2,
         |    CAST(floor(c_acctbal / 1000.0) AS BIGINT) AS f3
         |  FROM customer WHERE c_custkey IS NOT NULL),
         |nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM c),
@@ -559,17 +559,7 @@ object RelationalQueries {
         |  CAST((CASE WHEN a1 IS NOT NULL AND b1 IS NOT NULL AND a1 = b1 THEN 1 ELSE 0 END)
         |    + (CASE WHEN a2 IS NOT NULL AND b2 IS NOT NULL AND a2 = b2 THEN 1 ELSE 0 END)
         |    + (CASE WHEN a3 IS NOT NULL AND b3 IS NOT NULL AND a3 = b3 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-        |  floor((
-        |    (CASE WHEN a1 IS NULL OR b1 IS NULL THEN 0.0
-        |      WHEN a1 = b1 THEN ln(0.9 / (u1.s2 / (n * n))) / ln(2.0)
-        |      ELSE ln((1.0 - 0.9) / (1.0 - u1.s2 / (n * n))) / ln(2.0) END)
-        |    + (CASE WHEN a2 IS NULL OR b2 IS NULL THEN 0.0
-        |      WHEN a2 = b2 THEN ln(0.9 / (u2.s2 / (n * n))) / ln(2.0)
-        |      ELSE ln((1.0 - 0.9) / (1.0 - u2.s2 / (n * n))) / ln(2.0) END)
-        |    + (CASE WHEN a3 IS NULL OR b3 IS NULL THEN 0.0
-        |      WHEN a3 = b3 THEN ln(0.9 / (u3.s2 / (n * n))) / ln(2.0)
-        |      ELSE ln((1.0 - 0.9) / (1.0 - u3.s2 / (n * n))) / ln(2.0) END)
-        |  ) * 1000000 + 0.5) / 1000000 AS weight
+        |  ${r6("(CASE WHEN a1 IS NULL OR b1 IS NULL THEN 0.0 WHEN a1 = b1 THEN ln(0.9 / (u1.s2 / (n * n))) / ln(2.0) ELSE ln((1.0 - 0.9) / (1.0 - u1.s2 / (n * n))) / ln(2.0) END) + (CASE WHEN a2 IS NULL OR b2 IS NULL THEN 0.0 WHEN a2 = b2 THEN ln(0.9 / (u2.s2 / (n * n))) / ln(2.0) ELSE ln((1.0 - 0.9) / (1.0 - u2.s2 / (n * n))) / ln(2.0) END) + (CASE WHEN a3 IS NULL OR b3 IS NULL THEN 0.0 WHEN a3 = b3 THEN ln(0.9 / (u3.s2 / (n * n))) / ln(2.0) ELSE ln((1.0 - 0.9) / (1.0 - u3.s2 / (n * n))) / ln(2.0) END)")} AS weight
         |FROM j, nn, u1, u2, u3""".stripMargin),
 
     // as-of join, nearest direction: each event tagged with the CLOSEST

@@ -60,7 +60,7 @@ object StatsQueries {
     * y, x1, x2)` — shared by the logistic-GD oracles and q_stump.
     */
   private def logitDocsCtes(yExpr: String): String = {
-    s"""lw AS (SELECT *, len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nw
+    s"""lw AS (SELECT *, len(${wordTokensSql("text")}) AS nw
        |  FROM documents),
        |ld AS (SELECT doc_id AS id, source, n_chars, CAST(($yExpr) AS INT) AS y,
        |    ${r6("CAST(nw AS DOUBLE) / 100.0")} AS x1,
@@ -137,7 +137,7 @@ object StatsQueries {
       Stats
         .psi(ev(s, dir), Seq("event_type"), "value", isRef = col("event_id") % 2 === 0)
         .select(col("event_type"), graft.functions.Portable.r6(col("psi")).as("psi")),
-      """WITH f AS (SELECT event_type, CAST(value AS DOUBLE) AS v, (event_id % 2 = 0) AS ref
+      s"""WITH f AS (SELECT event_type, CAST(value AS DOUBLE) AS v, (event_id % 2 = 0) AS ref
         |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
         |r AS (SELECT event_type, min(v) AS lo, max(v) AS hi FROM f GROUP BY 1),
         |b AS (SELECT f.event_type, ref,
@@ -157,7 +157,7 @@ object StatsQueries {
         |  LEFT JOIN tt tr ON tr.event_type = grid.event_type AND tr.ref
         |  LEFT JOIN tt tc ON tc.event_type = grid.event_type AND NOT tc.ref)
         |SELECT event_type,
-        |  floor(CAST(sum(CAST((p - q) * ln(p / q) AS DECIMAL(38,12))) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS psi
+        |  ${r6("CAST(sum(CAST((p - q) * ln(p / q) AS DECIMAL(38,12))) AS DOUBLE)")} AS psi
         |FROM j GROUP BY 1""".stripMargin),
 
     // first/last-touch attribution for purchase conversions; both
@@ -207,11 +207,11 @@ object StatsQueries {
          |    END AS se0
          |  FROM m)
          |SELECT event_type, n_a, n_b,
-         |  CASE WHEN n_a > 0 THEN ${graft.functions.Portable.r6Sql("sa / na")} END AS mean_a,
-         |  CASE WHEN n_b > 0 THEN ${graft.functions.Portable.r6Sql("sb / nb")} END AS mean_b,
-         |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${graft.functions.Portable.r6Sql("sb / nb - sa / na")} END AS delta,
-         |  CASE WHEN se0 IS NOT NULL THEN ${graft.functions.Portable.r6Sql("se0")} END AS se,
-         |  CASE WHEN se0 > 0 THEN ${graft.functions.Portable.r6Sql("(sb / nb - sa / na) / se0")} END AS z
+         |  CASE WHEN n_a > 0 THEN ${r6("sa / na")} END AS mean_a,
+         |  CASE WHEN n_b > 0 THEN ${r6("sb / nb")} END AS mean_b,
+         |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${r6("sb / nb - sa / na")} END AS delta,
+         |  CASE WHEN se0 IS NOT NULL THEN ${r6("se0")} END AS se,
+         |  CASE WHEN se0 > 0 THEN ${r6("(sb / nb - sa / na) / se0")} END AS z
          |FROM d""".stripMargin),
 
     // Kaplan–Meier time-to-purchase curve (day granularity; log-survival)
@@ -234,13 +234,13 @@ object StatsQueries {
          |  FROM cv, tot),
          |h AS (SELECT t_day, d_events, c_censored, n_risk,
          |    CASE WHEN d_events > 0 AND d_events < n_risk THEN
-         |      ${graft.functions.Portable.r6Sql("ln(1 - CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE))")}
+         |      ${r6("ln(1 - CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE))")}
          |    ELSE 0.0 END AS term
          |  FROM r)
          |SELECT t_day, CAST(n_risk AS BIGINT) AS n_risk, CAST(d_events AS BIGINT) AS d_events,
          |  CAST(c_censored AS BIGINT) AS c_censored,
          |  CASE WHEN d_events = n_risk THEN NULL ELSE
-         |    ${graft.functions.Portable.r6Sql("CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")}
+         |    ${r6("CAST(sum(CAST(term AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")}
          |  END AS log_s
          |FROM h""".stripMargin),
 
@@ -288,9 +288,9 @@ object StatsQueries {
          |  FROM m)
          |SELECT event_type, n_a_pre, n_a_post, n_b_pre, n_b_post,
          |  CASE WHEN n_a_pre >= 2 AND n_a_post >= 2 AND n_b_pre >= 2 AND n_b_post >= 2
-         |    THEN ${graft.functions.Portable.r6Sql("did0")} END AS did,
-         |  CASE WHEN se0 IS NOT NULL THEN ${graft.functions.Portable.r6Sql("se0")} END AS se,
-         |  CASE WHEN se0 > 0 THEN ${graft.functions.Portable.r6Sql("did0 / se0")} END AS z
+         |    THEN ${r6("did0")} END AS did,
+         |  CASE WHEN se0 IS NOT NULL THEN ${r6("se0")} END AS se,
+         |  CASE WHEN se0 > 0 THEN ${r6("did0 / se0")} END AS z
          |FROM d""".stripMargin),
 
     // per-(returnflag, linestatus) Pearson correlation of quantity vs
@@ -301,17 +301,15 @@ object StatsQueries {
           Seq("l_returnflag", "l_linestatus"), "l_quantity", "l_extendedprice")
         .select(col("l_returnflag"), col("l_linestatus"), col("n"),
           graft.functions.Portable.r6(col("corr")).as("corr")),
-      """WITH m AS (SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(coalesce(sum(CAST(l_quantity AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-        |  CAST(coalesce(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-        |  CAST(coalesce(sum(CAST(l_quantity * l_extendedprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-        |  CAST(coalesce(sum(CAST(l_quantity * l_quantity AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-        |  CAST(coalesce(sum(CAST(l_extendedprice * l_extendedprice AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
+      s"""WITH m AS (SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |  ${dsum0("l_quantity")} AS sx,
+        |  ${dsum0("l_extendedprice")} AS sy,
+        |  ${dsum0("l_quantity * l_extendedprice")} AS sxy,
+        |  ${dsum0("l_quantity * l_quantity")} AS sxx,
+        |  ${dsum0("l_extendedprice * l_extendedprice")} AS syy
         |  FROM lineitem GROUP BY 1, 2)
         |SELECT l_returnflag, l_linestatus, n,
-        |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0))
-        |    * 1000000 + 0.5) / 1000000 AS corr
+        |  ${r6("(CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0)")} AS corr
         |FROM m""".stripMargin),
 
     // per-event-type value-over-time trend (OLS slope/intercept); x is
@@ -327,7 +325,7 @@ object StatsQueries {
         .select(col("event_type"), col("n"),
           graft.functions.Portable.r6(col("slope")).as("slope"),
           graft.functions.Portable.r6(col("intercept")).as("intercept")),
-      """WITH v AS (SELECT event_type,
+      s"""WITH v AS (SELECT event_type,
         |  CAST(epoch_us(ts) AS DOUBLE) / 86400000000.0 - 19700.0 AS x, value AS y
         |  FROM events WHERE ts IS NOT NULL),
         |m AS (SELECT event_type,
@@ -338,8 +336,8 @@ object StatsQueries {
         |  CAST(coalesce(sum(CASE WHEN y IS NOT NULL AND NOT isnan(y) THEN CAST(x * x AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sxx
         |  FROM v GROUP BY 1)
         |SELECT event_type, n,
-        |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)) * 1000000 + 0.5) / 1000000 AS slope,
-        |  floor(((sy - ((CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)) * sx) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS intercept
+        |  ${r6("(CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)")} AS slope,
+        |  ${r6("(sy - ((CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(CAST(n AS DOUBLE) * sxx - sx * sx, 0.0)) * sx) / CAST(n AS DOUBLE)")} AS intercept
         |FROM m""".stripMargin),
 
     // association rules over (user, event_type) co-occurrence
@@ -349,16 +347,16 @@ object StatsQueries {
           graft.functions.Portable.r6(col("support")).as("support"),
           graft.functions.Portable.r6(col("confidence")).as("confidence"),
           graft.functions.Portable.r6(col("lift")).as("lift")),
-      """WITH d AS (SELECT DISTINCT user_id AS e, event_type AS i FROM events WHERE event_type IS NOT NULL),
+      s"""WITH d AS (SELECT DISTINCT user_id AS e, event_type AS i FROM events WHERE event_type IS NOT NULL),
         |n AS (SELECT count(DISTINCT e) AS nu FROM d),
         |s AS (SELECT i, count(*) AS n1 FROM d GROUP BY 1),
         |p AS (SELECT a.i AS a, b.i AS b, count(*) AS n_both
         |      FROM d a JOIN d b ON a.e = b.e AND a.i < b.i GROUP BY 1, 2 HAVING count(*) >= 5),
         |r AS (SELECT a AS ante, b AS cons, n_both FROM p UNION ALL SELECT b, a, n_both FROM p)
         |SELECT ante, cons, n_both,
-        |  floor((CAST(n_both AS DOUBLE) / CAST(nu AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS support,
-        |  floor((CAST(n_both AS DOUBLE) / CAST(sa.n1 AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS confidence,
-        |  floor((CAST(n_both AS DOUBLE) * CAST(nu AS DOUBLE) / (CAST(sa.n1 AS DOUBLE) * CAST(sc.n1 AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS lift
+        |  ${r6("CAST(n_both AS DOUBLE) / CAST(nu AS DOUBLE)")} AS support,
+        |  ${r6("CAST(n_both AS DOUBLE) / CAST(sa.n1 AS DOUBLE)")} AS confidence,
+        |  ${r6("CAST(n_both AS DOUBLE) * CAST(nu AS DOUBLE) / (CAST(sa.n1 AS DOUBLE) * CAST(sc.n1 AS DOUBLE))")} AS lift
         |FROM r JOIN s sa ON sa.i = r.ante JOIN s sc ON sc.i = r.cons, n""".stripMargin),
 
     // per-event-type percentile rank of value (portable percent_rank)
@@ -366,8 +364,8 @@ object StatsQueries {
       Stats.percentileRank(ev(s, dir), Seq("event_type"), "value")
         .select(col("event_id"), col("event_type"), col("value"),
           graft.functions.Portable.r6(col("pct")).as("pct")),
-      """SELECT event_id, event_type, value,
-        |  floor(percent_rank() OVER (PARTITION BY event_type ORDER BY value) * 1000000 + 0.5) / 1000000 AS pct
+      s"""SELECT event_id, event_type, value,
+        |  ${r6("percent_rank() OVER (PARTITION BY event_type ORDER BY value)")} AS pct
         |FROM events WHERE value IS NOT NULL AND NOT isnan(value)""".stripMargin),
 
     // chi-square contingency: is lang independent of source?
@@ -376,14 +374,14 @@ object StatsQueries {
         .select(col("a").as("lang"), col("b").as("source"), col("observed"),
           graft.functions.Portable.r6(col("expected")).as("expected"),
           graft.functions.Portable.r6(col("chi2")).as("chi2")),
-      """WITH c AS (SELECT lang, source, count(*) AS obs FROM documents
+      s"""WITH c AS (SELECT lang, source, count(*) AS obs FROM documents
         |  WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
         |ra AS (SELECT lang, CAST(sum(obs) AS BIGINT) AS na FROM c GROUP BY 1),
         |rb AS (SELECT source, CAST(sum(obs) AS BIGINT) AS nb FROM c GROUP BY 1),
         |t AS (SELECT CAST(sum(obs) AS BIGINT) AS n FROM c)
         |SELECT lang, source, observed,
-        |  floor(e * 1000000 + 0.5) / 1000000 AS expected,
-        |  floor(((CAST(observed AS DOUBLE) - e) * (CAST(observed AS DOUBLE) - e) / e) * 1000000 + 0.5) / 1000000 AS chi2
+        |  ${r6("e")} AS expected,
+        |  ${r6("(CAST(observed AS DOUBLE) - e) * (CAST(observed AS DOUBLE) - e) / e")} AS chi2
         |FROM (SELECT ra.lang, rb.source, CAST(coalesce(obs, 0) AS BIGINT) AS observed,
         |        CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / CAST(n AS DOUBLE) AS e
         |      FROM ra CROSS JOIN rb LEFT JOIN c ON c.lang = ra.lang AND c.source = rb.source, t)""".stripMargin),
@@ -393,14 +391,14 @@ object StatsQueries {
       Stats.gini(docs(s, dir), Seq("lang"), "n_chars")
         .select(col("lang"), col("n"),
           graft.functions.Portable.r6(col("gini")).as("gini")),
-      """WITH v AS (SELECT lang, CAST(n_chars AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT lang, CAST(n_chars AS DOUBLE) AS x,
         |  row_number() OVER (PARTITION BY lang ORDER BY n_chars) AS i
         |  FROM documents WHERE n_chars IS NOT NULL AND n_chars >= 0),
         |a AS (SELECT lang, count(*) AS n,
-        |  CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS s,
-        |  CAST(sum(CAST(i * x AS DECIMAL(38,6))) AS DOUBLE) AS si FROM v GROUP BY 1)
+        |  ${dsum("x")} AS s,
+        |  ${dsum("i * x")} AS si FROM v GROUP BY 1)
         |SELECT lang, n, CASE WHEN s > 0 THEN
-        |  floor((2.0 * si / (CAST(n AS DOUBLE) * s) - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000
+        |  ${r6("2.0 * si / (CAST(n AS DOUBLE) * s) - CAST(n + 1 AS DOUBLE) / CAST(n AS DOUBLE)")}
         |END AS gini FROM a""".stripMargin),
 
     // Spearman rank correlation (average ranks; contrast with q_corr)
@@ -410,7 +408,7 @@ object StatsQueries {
           Seq("l_returnflag", "l_linestatus"), "l_quantity", "l_extendedprice")
         .select(col("l_returnflag"), col("l_linestatus"), col("n"),
           graft.functions.Portable.r6(col("rho")).as("rho")),
-      """WITH v AS (SELECT l_returnflag, l_linestatus,
+      s"""WITH v AS (SELECT l_returnflag, l_linestatus,
         |    CAST(l_quantity AS DOUBLE) AS x, CAST(l_extendedprice AS DOUBLE) AS y
         |  FROM lineitem
         |  WHERE l_quantity IS NOT NULL AND NOT isnan(CAST(l_quantity AS DOUBLE))
@@ -422,16 +420,14 @@ object StatsQueries {
         |      + CAST(count(*) OVER (PARTITION BY l_returnflag, l_linestatus, y) - 1 AS DOUBLE) / 2.0 AS ry
         |  FROM v),
         |m AS (SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  CAST(coalesce(sum(CAST(rx AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-        |  CAST(coalesce(sum(CAST(ry AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-        |  CAST(coalesce(sum(CAST(rx * ry AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-        |  CAST(coalesce(sum(CAST(rx * rx AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-        |  CAST(coalesce(sum(CAST(ry * ry AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
+        |  ${dsum0("rx")} AS sx,
+        |  ${dsum0("ry")} AS sy,
+        |  ${dsum0("rx * ry")} AS sxy,
+        |  ${dsum0("rx * rx")} AS sxx,
+        |  ${dsum0("ry * ry")} AS syy
         |  FROM r GROUP BY 1, 2)
         |SELECT l_returnflag, l_linestatus, n,
-        |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0))
-        |    * 1000000 + 0.5) / 1000000 AS rho
+        |  ${r6("(CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0)")} AS rho
         |FROM m""".stripMargin),
 
     // Poisson bootstrap: per-type mean value with bootstrap SE (16 reps)
@@ -459,7 +455,7 @@ object StatsQueries {
          |             ELSE 7 END AS w
          |      FROM u),
          |c AS (SELECT event_type, b,
-         |        CAST(sum(CAST(w * value AS DECIMAL(38,6))) AS DOUBLE) AS wx,
+         |        ${dsum("w * value")} AS wx,
          |        CAST(sum(w) AS BIGINT) AS wn
          |      FROM w GROUP BY 1, 2),
          |m AS (SELECT event_type, b, CASE WHEN wn > 0 THEN wx / CAST(wn AS DOUBLE) END AS m FROM c),
@@ -470,10 +466,9 @@ object StatsQueries {
          |n AS (SELECT event_type, count(*) AS n FROM events
          |      WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1)
          |SELECT g.event_type AS code, n,
-         |  floor((sm / CAST(bn AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS mean_boot,
+         |  ${r6("sm / CAST(bn AS DOUBLE)")} AS mean_boot,
          |  CASE WHEN bn > 1 THEN
-         |    floor(sqrt(greatest((sm2 - sm * sm / CAST(bn AS DOUBLE)) / CAST(bn - 1 AS DOUBLE),
-         |                        CAST(0 AS DOUBLE))) * 1000000 + 0.5) / 1000000
+         |    ${r6("sqrt(greatest((sm2 - sm * sm / CAST(bn AS DOUBLE)) / CAST(bn - 1 AS DOUBLE), CAST(0 AS DOUBLE)))")}
          |  END AS se_boot
          |FROM g JOIN n ON g.event_type IS NOT DISTINCT FROM n.event_type""".stripMargin),
 
@@ -485,7 +480,7 @@ object StatsQueries {
         .select(col("event_type"), col("n_a"), col("n_b"),
           graft.functions.Portable.r6(col("d")).as("d"),
           graft.functions.Portable.r6(col("ks")).as("ks")),
-      """WITH v AS (SELECT event_type, CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS a,
+      s"""WITH v AS (SELECT event_type, CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS a,
         |    CAST(value AS DOUBLE) AS x
         |  FROM events WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
         |c AS (SELECT event_type, x, CAST(sum(a) AS BIGINT) AS ca, CAST(sum(1 - a) AS BIGINT) AS cb
@@ -501,9 +496,8 @@ object StatsQueries {
         |          abs(CAST(fa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE)) END) AS d0
         |      FROM w GROUP BY 1)
         |SELECT event_type, n_a, n_b,
-        |  floor(d0 * 1000000 + 0.5) / 1000000 AS d,
-        |  floor(sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * d0
-        |    * 1000000 + 0.5) / 1000000 AS ks
+        |  ${r6("d0")} AS d,
+        |  ${r6("sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * d0")} AS ks
         |FROM m""".stripMargin),
 
     // Mann-Whitney U per language: even- vs odd-doc cohorts on doc size
@@ -514,7 +508,7 @@ object StatsQueries {
           graft.functions.Portable.r6(col("u_a")).as("u_a"),
           graft.functions.Portable.r6(col("z")).as("z"),
           graft.functions.Portable.r6(col("delta")).as("delta")),
-      """WITH v AS (SELECT lang, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS a,
+      s"""WITH v AS (SELECT lang, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS a,
         |    CAST(n_chars AS DOUBLE) AS x
         |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
         |r AS (SELECT lang, a,
@@ -525,7 +519,7 @@ object StatsQueries {
         |m AS (SELECT lang,
         |        CAST(sum(a) AS BIGINT) AS n_a, CAST(sum(1 - a) AS BIGINT) AS n_b,
         |        CAST(coalesce(sum(CASE WHEN a = 1 THEN CAST(rk AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS ra,
-        |        CAST(coalesce(sum(CAST(c * c - 1 AS DECIMAL(38,6))), 0) AS DOUBLE) AS ties
+        |        ${dsum0("c * c - 1")} AS ties
         |      FROM r GROUP BY 1),
         |s AS (SELECT lang, n_a, n_b,
         |        ra - CAST(n_a AS DOUBLE) * (CAST(n_a AS DOUBLE) + 1.0) / 2.0 AS u,
@@ -534,13 +528,11 @@ object StatsQueries {
         |            - ties / (CAST(n_a + n_b AS DOUBLE) * (CAST(n_a + n_b AS DOUBLE) - 1.0))) AS s2
         |      FROM m)
         |SELECT lang, n_a, n_b,
-        |  floor(u * 1000000 + 0.5) / 1000000 AS u_a,
+        |  ${r6("u")} AS u_a,
         |  CASE WHEN n_a > 0 AND n_b > 0 AND s2 > 0 THEN
-        |    floor((u - CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 2.0) / sqrt(s2)
-        |      * 1000000 + 0.5) / 1000000 END AS z,
+        |    ${r6("(u - CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / 2.0) / sqrt(s2)")} END AS z,
         |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    floor((2.0 * u / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) - 1.0)
-        |      * 1000000 + 0.5) / 1000000 END AS delta
+        |    ${r6("2.0 * u / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) - 1.0")} END AS delta
         |FROM s""".stripMargin),
 
     // two-proportion z: long-doc rate, even- vs odd-doc cohorts per lang
@@ -551,7 +543,7 @@ object StatsQueries {
           graft.functions.Portable.r6(col("p_a")).as("p_a"),
           graft.functions.Portable.r6(col("p_b")).as("p_b"),
           graft.functions.Portable.r6(col("z")).as("z")),
-      """WITH v AS (SELECT lang, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS a,
+      s"""WITH v AS (SELECT lang, CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS a,
         |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS h
         |  FROM documents),
         |g AS (SELECT lang,
@@ -565,11 +557,10 @@ object StatsQueries {
         |        CAST(k_a + k_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS pp
         |      FROM g)
         |SELECT lang, n_a, n_b, k_a, k_b,
-        |  CASE WHEN n_a > 0 THEN floor(pa * 1000000 + 0.5) / 1000000 END AS p_a,
-        |  CASE WHEN n_b > 0 THEN floor(pb * 1000000 + 0.5) / 1000000 END AS p_b,
+        |  CASE WHEN n_a > 0 THEN ${r6("pa")} END AS p_a,
+        |  CASE WHEN n_b > 0 THEN ${r6("pb")} END AS p_b,
         |  CASE WHEN n_a > 0 AND n_b > 0 AND pp > 0 AND pp < 1 THEN
-        |    floor((pa - pb) / sqrt(pp * (1.0 - pp) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))
-        |      * 1000000 + 0.5) / 1000000 END AS z
+        |    ${r6("(pa - pb) / sqrt(pp * (1.0 - pp) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE)))")} END AS z
         |FROM e""".stripMargin),
 
     // per-user value autocorrelation at lags 1..3 (one key window)
@@ -577,7 +568,7 @@ object StatsQueries {
       Stats.acf(ev(s, dir), Seq("user_id"), "ts", "event_id", "value", maxLag = 3)
         .select(col("user_id"), col("lag"), col("n"),
           graft.functions.Portable.r6(col("acf")).as("acf")),
-      """WITH v AS (SELECT user_id, ts, event_id, CAST(value AS DOUBLE) AS x FROM events
+      s"""WITH v AS (SELECT user_id, ts, event_id, CAST(value AS DOUBLE) AS x FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE)) AND ts IS NOT NULL),
         |l AS (SELECT user_id, x,
         |        lag(x, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l1,
@@ -588,16 +579,14 @@ object StatsQueries {
         |      UNION ALL SELECT user_id, 2, x, l2 FROM l WHERE l2 IS NOT NULL
         |      UNION ALL SELECT user_id, 3, x, l3 FROM l WHERE l3 IS NOT NULL),
         |m AS (SELECT user_id, "lag", count(*) AS n,
-        |        CAST(coalesce(sum(CAST(x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-        |        CAST(coalesce(sum(CAST(y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-        |        CAST(coalesce(sum(CAST(x * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-        |        CAST(coalesce(sum(CAST(x * x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-        |        CAST(coalesce(sum(CAST(y * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
+        |        ${dsum0("x")} AS sx,
+        |        ${dsum0("y")} AS sy,
+        |        ${dsum0("x * y")} AS sxy,
+        |        ${dsum0("x * x")} AS sxx,
+        |        ${dsum0("y * y")} AS syy
         |      FROM p GROUP BY 1, 2)
         |SELECT user_id, "lag", n,
-        |  floor(((CAST(n AS DOUBLE) * sxy - sx * sy) /
-        |    nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy),
-        |      0.0)), 0.0)) * 1000000 + 0.5) / 1000000 AS acf
+        |  ${r6("(CAST(n AS DOUBLE) * sxy - sx * sy) / nullif(sqrt(greatest((CAST(n AS DOUBLE) * sxx - sx * sx) * (CAST(n AS DOUBLE) * syy - sy * sy), 0.0)), 0.0)")} AS acf
         |FROM m""".stripMargin),
 
     // Cohen's kappa per source: declared lang tag vs the lang-ID detector
@@ -626,9 +615,9 @@ object StatsQueries {
          |        coalesce(pen, 0.0) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS pe0
          |      FROM base LEFT JOIN pe ON base.source = pe.source)
          |SELECT source, n,
-         |  floor(po0 * 1000000 + 0.5) / 1000000 AS po,
-         |  floor(pe0 * 1000000 + 0.5) / 1000000 AS pe,
-         |  floor((po0 - pe0) / nullif(1.0 - pe0, 0.0) * 1000000 + 0.5) / 1000000 AS kappa
+         |  ${r6("po0")} AS po,
+         |  ${r6("pe0")} AS pe,
+         |  ${r6("(po0 - pe0) / nullif(1.0 - pe0, 0.0)")} AS kappa
          |FROM r""".stripMargin),
 
     // Wilson 95% interval per source for the share of English docs
@@ -638,7 +627,7 @@ object StatsQueries {
           graft.functions.Portable.r6(col("p")).as("p"),
           graft.functions.Portable.r6(col("lo")).as("lo"),
           graft.functions.Portable.r6(col("hi")).as("hi")),
-      """WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
+      s"""WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n,
         |        CAST(count(CASE WHEN lang = 'en' THEN 1 END) AS BIGINT) AS k
         |      FROM documents GROUP BY 1),
         |e AS (SELECT source, n, k,
@@ -652,9 +641,9 @@ object StatsQueries {
         |          / (1.0 + z2 / nd) AS half
         |      FROM e)
         |SELECT source, n, k,
-        |  floor(p * 1000000 + 0.5) / 1000000 AS p,
-        |  floor((center - half) * 1000000 + 0.5) / 1000000 AS lo,
-        |  floor((center + half) * 1000000 + 0.5) / 1000000 AS hi
+        |  ${r6("p")} AS p,
+        |  ${r6("center - half")} AS lo,
+        |  ${r6("center + half")} AS hi
         |FROM w""".stripMargin),
 
     // ROC AUC per lang: does doc length rank ' the '-bearing docs first?
@@ -664,7 +653,7 @@ object StatsQueries {
           col("text").contains(" the "))
         .select(col("lang"), col("n_pos"), col("n_neg"),
           graft.functions.Portable.r6(col("auc")).as("auc")),
-      """WITH v AS (SELECT lang, CAST(n_chars AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT lang, CAST(n_chars AS DOUBLE) AS x,
         |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
         |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
         |r AS (SELECT lang, p,
@@ -676,8 +665,7 @@ object StatsQueries {
         |      FROM r GROUP BY 1)
         |SELECT lang, n_pos, n_neg,
         |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |    floor((rp - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0)
-        |      / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)) * 1000000 + 0.5) / 1000000 END AS auc
+        |    ${r6("(rp - CAST(n_pos AS DOUBLE) * (CAST(n_pos AS DOUBLE) + 1.0) / 2.0) / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE))")} END AS auc
         |FROM m""".stripMargin),
 
     // calibration of the length-derived [0,1] score against the same
@@ -691,24 +679,24 @@ object StatsQueries {
           graft.functions.Portable.r6(col("conf")).as("conf"),
           graft.functions.Portable.r6(col("acc")).as("acc"),
           graft.functions.Portable.r6(col("ece")).as("ece")),
-      """WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
+      s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
         |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p FROM documents),
         |g AS (SELECT lang, least(9, greatest(0, CAST(floor(x * 10) AS BIGINT))) AS bin,
         |        CAST(count(*) AS BIGINT) AS n,
-        |        CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sx,
+        |        ${dsum("x")} AS sx,
         |        CAST(sum(p) AS BIGINT) AS k
         |      FROM v GROUP BY 1, 2),
         |b AS (SELECT lang, bin, n, sx / CAST(n AS DOUBLE) AS conf0,
         |        CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS acc0 FROM g),
         |e AS (SELECT lang, bin, n, conf0, acc0,
-        |        CAST(sum(CAST(floor(CAST(n AS DOUBLE) * abs(acc0 - conf0) * 1000000 + 0.5) / 1000000
+        |        CAST(sum(CAST(${r6("CAST(n AS DOUBLE) * abs(acc0 - conf0)")}
         |          AS DECIMAL(38,6))) OVER (PARTITION BY lang) AS DOUBLE)
         |          / CAST(sum(n) OVER (PARTITION BY lang) AS DOUBLE) AS ece0
         |      FROM b)
         |SELECT lang, bin, n,
-        |  floor(conf0 * 1000000 + 0.5) / 1000000 AS conf,
-        |  floor(acc0 * 1000000 + 0.5) / 1000000 AS acc,
-        |  floor(ece0 * 1000000 + 0.5) / 1000000 AS ece
+        |  ${r6("conf0")} AS conf,
+        |  ${r6("acc0")} AS acc,
+        |  ${r6("ece0")} AS ece
         |FROM e""".stripMargin),
 
     // Kruskal-Wallis per source: did ANY language arm's doc-size
@@ -717,7 +705,7 @@ object StatsQueries {
       Hypothesis.kruskalWallis(docs(s, dir), Seq("source"), "lang", "n_chars")
         .select(col("source"), col("n"), col("k_arms"),
           graft.functions.Portable.r6(col("h")).as("h")),
-      """WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x FROM documents
+      s"""WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x FROM documents
         |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND lang IS NOT NULL),
         |r AS (SELECT source, arm,
         |        CAST(rank() OVER (PARTITION BY source ORDER BY x) AS DOUBLE)
@@ -725,13 +713,12 @@ object StatsQueries {
         |        CAST(count(*) OVER (PARTITION BY source, x) AS BIGINT) AS c
         |      FROM v),
         |pa AS (SELECT source, arm, CAST(count(*) AS BIGINT) AS na,
-        |        CAST(coalesce(sum(CAST(rk AS DECIMAL(38,6))), 0) AS DOUBLE) AS ra,
-        |        CAST(coalesce(sum(CAST(c * c - 1 AS DECIMAL(38,6))), 0) AS DOUBLE) AS ties
+        |        ${dsum0("rk")} AS ra,
+        |        ${dsum0("c * c - 1")} AS ties
         |      FROM r GROUP BY 1, 2),
         |m AS (SELECT source, CAST(sum(na) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_arms,
-        |        CAST(coalesce(sum(CAST(floor(ra * ra / CAST(na AS DOUBLE) * 1000000 + 0.5) / 1000000
-        |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS rr,
-        |        CAST(coalesce(sum(CAST(ties AS DECIMAL(38,6))), 0) AS DOUBLE) AS t
+        |        ${dsum0(r6("ra * ra / CAST(na AS DOUBLE)"))} AS rr,
+        |        ${dsum0("ties")} AS t
         |      FROM pa GROUP BY 1),
         |s AS (SELECT source, n, k_arms, rr,
         |        CAST(n AS DOUBLE) AS nd,
@@ -739,7 +726,7 @@ object StatsQueries {
         |      FROM m)
         |SELECT source, n, k_arms,
         |  CASE WHEN k_arms >= 2 AND n > 1 AND corr > 0 THEN
-        |    floor((12.0 / (nd * (nd + 1.0)) * rr - 3.0 * (nd + 1.0)) / corr * 1000000 + 0.5) / 1000000
+        |    ${r6("(12.0 / (nd * (nd + 1.0)) * rr - 3.0 * (nd + 1.0)) / corr")}
         |  END AS h
         |FROM s""".stripMargin),
 
@@ -772,15 +759,15 @@ object StatsQueries {
          |    max(a) AS a
          |  FROM u0 GROUP BY 1, 2),
          |f AS (SELECT event_type, a,
-         |    floor(x0 * 1000000 + 0.5) / 1000000 AS ux,
-         |    floor(y0 * 1000000 + 0.5) / 1000000 AS uy
+         |    ${r6("x0")} AS ux,
+         |    ${r6("y0")} AS uy
          |  FROM u WHERE x0 IS NOT NULL AND y0 IS NOT NULL),
          |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_units,
-         |    CAST(coalesce(sum(CAST(ux AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-         |    CAST(coalesce(sum(CAST(uy AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-         |    CAST(coalesce(sum(CAST(ux * uy AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-         |    CAST(coalesce(sum(CAST(ux * ux AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-         |    CAST(coalesce(sum(CAST(uy * uy AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy,
+         |    ${dsum0("ux")} AS sx,
+         |    ${dsum0("uy")} AS sy,
+         |    ${dsum0("ux * uy")} AS sxy,
+         |    ${dsum0("ux * ux")} AS sxx,
+         |    ${dsum0("uy * uy")} AS syy,
          |    CAST(sum(a) AS BIGINT) AS na,
          |    CAST(coalesce(sum(CASE WHEN a = 1 THEN CAST(ux AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sxa,
          |    CAST(coalesce(sum(CASE WHEN a = 1 THEN CAST(uy AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sya
@@ -791,15 +778,13 @@ object StatsQueries {
          |    CAST(n_units AS DOUBLE) * syy - sy * sy AS vy,
          |    sx, sy, sxa, sya FROM m)
          |SELECT event_type, n_units, na AS n_a, nb AS n_b,
-         |  floor(cov / nullif(vx, 0.0) * 1000000 + 0.5) / 1000000 AS theta,
+         |  ${r6("cov / nullif(vx, 0.0)")} AS theta,
          |  CASE WHEN na > 0 AND nb > 0 THEN
-         |    floor((sya / CAST(na AS DOUBLE) - (sy - sya) / CAST(nb AS DOUBLE)) * 1000000 + 0.5) / 1000000 END AS diff_raw,
+         |    ${r6("sya / CAST(na AS DOUBLE) - (sy - sya) / CAST(nb AS DOUBLE)")} END AS diff_raw,
          |  CASE WHEN na > 0 AND nb > 0 THEN
-         |    floor((sya / CAST(na AS DOUBLE) - (sy - sya) / CAST(nb AS DOUBLE)
-         |      - cov / nullif(vx, 0.0) * (sxa / CAST(na AS DOUBLE) - (sx - sxa) / CAST(nb AS DOUBLE)))
-         |      * 1000000 + 0.5) / 1000000 END AS diff_adj,
+         |    ${r6("sya / CAST(na AS DOUBLE) - (sy - sya) / CAST(nb AS DOUBLE) - cov / nullif(vx, 0.0) * (sxa / CAST(na AS DOUBLE) - (sx - sxa) / CAST(nb AS DOUBLE))")} END AS diff_adj,
          |  CASE WHEN vx > 0 AND vy > 0 THEN
-         |    floor(cov * cov / (vx * vy) * 1000000 + 0.5) / 1000000 END AS var_reduction
+         |    ${r6("cov * cov / (vx * vy)")} END AS var_reduction
          |FROM e""".stripMargin
     }),
 
@@ -810,7 +795,7 @@ object StatsQueries {
           col("text").contains(" the "))
         .select(col("lang"), col("n"), col("n_pos"),
           graft.functions.Portable.r6(col("ap")).as("ap")),
-      """WITH v AS (SELECT lang, doc_id, CAST(n_chars AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT lang, doc_id, CAST(n_chars AS DOUBLE) AS x,
         |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
         |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
         |r AS (SELECT lang, p,
@@ -820,12 +805,12 @@ object StatsQueries {
         |      FROM v),
         |m AS (SELECT lang, CAST(count(*) AS BIGINT) AS n, CAST(sum(p) AS BIGINT) AS n_pos,
         |        CAST(coalesce(sum(CASE WHEN p = 1 THEN
-        |          CAST(floor(CAST(cp AS DOUBLE) / CAST(rk AS DOUBLE) * 1000000 + 0.5) / 1000000
+        |          CAST(${r6("CAST(cp AS DOUBLE) / CAST(rk AS DOUBLE)")}
         |            AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sap
         |      FROM r GROUP BY 1)
         |SELECT lang, n, n_pos,
         |  CASE WHEN n_pos > 0 THEN
-        |    floor(sap / CAST(n_pos AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS ap
+        |    ${r6("sap / CAST(n_pos AS DOUBLE)")} END AS ap
         |FROM m""".stripMargin),
 
     // Benjamini-Hochberg FDR over the (lang x source) long-doc-rate
@@ -845,11 +830,6 @@ object StatsQueries {
         .select(col("lang"), col("source"), col("z"), col("p"), col("m"),
           col("rank"), graft.functions.Portable.r6(col("q")).as("q"), col("reject"))
     },
-      {
-      // the SAME A&S 26.2.16 tail as Hypothesis.pFromZ, spelled out
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH v AS (SELECT lang, source,
          |    CASE WHEN ${h32("concat('bh|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a,
          |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS hit
@@ -871,8 +851,8 @@ object StatsQueries {
          |pz AS (SELECT lang, source, z, abs(z) AS az,
          |        1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0),
          |pv AS (SELECT lang, source,
-         |        floor(z * 1000000 + 0.5) / 1000000 AS z,
-         |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
+         |        ${r6("z")} AS z,
+         |        ${r6(pFromZSql)} AS p
          |      FROM pz WHERE z IS NOT NULL),
          |rk AS (SELECT lang, source, z, p,
          |        CAST(count(*) OVER () AS BIGINT) AS m,
@@ -888,10 +868,9 @@ object StatsQueries {
          |        CAST(NULL AS DOUBLE) AS q, CAST(NULL AS BOOLEAN) AS reject
          |      FROM z0 WHERE z IS NULL)
          |SELECT lang, source, z, p, m, "rank",
-         |  floor(q_raw * 1000000 + 0.5) / 1000000 AS q, q_raw <= 0.1 AS reject
+         |  ${r6("q_raw")} AS q, q_raw <= 0.1 AS reject
          |FROM adj
-         |UNION ALL SELECT * FROM nullz""".stripMargin
-    }),
+         |UNION ALL SELECT * FROM nullz""".stripMargin),
 
     // one-way ANOVA F of doc length across languages per source — the
     // parametric complement of q_kruskal (same slicing for contrast)
@@ -901,27 +880,25 @@ object StatsQueries {
           graft.functions.Portable.r6(col("ss_between")).as("ss_between"),
           graft.functions.Portable.r6(col("ss_within")).as("ss_within"),
           graft.functions.Portable.r6(col("f")).as("f")),
-      """WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x
+      s"""WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x
         |  FROM documents
         |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND lang IS NOT NULL),
         |a AS (SELECT source, arm, CAST(count(*) AS BIGINT) AS n_a,
-        |    CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sa,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxxa
+        |    ${dsum("x")} AS sa,
+        |    ${dsum("x * x")} AS sxxa
         |  FROM v GROUP BY 1, 2),
         |m AS (SELECT source, CAST(sum(n_a) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_arms,
-        |    CAST(sum(CAST(sa AS DECIMAL(38,6))) AS DOUBLE) AS s,
-        |    CAST(sum(CAST(sxxa AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(floor(sa * sa / CAST(n_a AS DOUBLE) * 1000000 + 0.5) / 1000000
-        |      AS DECIMAL(38,6))) AS DOUBLE) AS expl
+        |    ${dsum("sa")} AS s,
+        |    ${dsum("sxxa")} AS sxx,
+        |    ${dsum(r6("sa * sa / CAST(n_a AS DOUBLE)"))} AS expl
         |  FROM a GROUP BY 1),
         |e AS (SELECT source, n, k_arms,
         |    expl - s * s / CAST(n AS DOUBLE) AS ssb, sxx - expl AS ssw FROM m)
         |SELECT source, n, k_arms,
-        |  floor(ssb * 1000000 + 0.5) / 1000000 AS ss_between,
-        |  floor(ssw * 1000000 + 0.5) / 1000000 AS ss_within,
+        |  ${r6("ssb")} AS ss_between,
+        |  ${r6("ssw")} AS ss_within,
         |  CASE WHEN k_arms >= 2 AND n > k_arms AND ssw > 0 THEN
-        |    floor((ssb / (CAST(k_arms AS DOUBLE) - 1.0))
-        |      / (ssw / (CAST(n AS DOUBLE) - CAST(k_arms AS DOUBLE))) * 1000000 + 0.5) / 1000000
+        |    ${r6("(ssb / (CAST(k_arms AS DOUBLE) - 1.0)) / (ssw / (CAST(n AS DOUBLE) - CAST(k_arms AS DOUBLE)))")}
         |  END AS f
         |FROM e""".stripMargin),
 
@@ -933,31 +910,29 @@ object StatsQueries {
           graft.functions.Portable.r6(col("ss_between")).as("ss_between"),
           graft.functions.Portable.r6(col("ss_within")).as("ss_within"),
           graft.functions.Portable.r6(col("f")).as("f")),
-      """WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x0
+      s"""WITH v AS (SELECT source, lang AS arm, CAST(n_chars AS DOUBLE) AS x0
         |  FROM documents
         |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND lang IS NOT NULL),
         |md AS (SELECT source, arm, quantile_cont(x0, 0.5) AS med FROM v GROUP BY 1, 2),
         |c AS (SELECT v.source, v.arm,
-        |    floor(abs(x0 - med) * 1000000 + 0.5) / 1000000 AS x
+        |    ${r6("abs(x0 - med)")} AS x
         |  FROM v JOIN md USING (source, arm)),
         |a AS (SELECT source, arm, CAST(count(*) AS BIGINT) AS n_a,
-        |    CAST(sum(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS sa,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS sxxa
+        |    ${dsum("x")} AS sa,
+        |    ${dsum("x * x")} AS sxxa
         |  FROM c GROUP BY 1, 2),
         |m AS (SELECT source, CAST(sum(n_a) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_arms,
-        |    CAST(sum(CAST(sa AS DECIMAL(38,6))) AS DOUBLE) AS s,
-        |    CAST(sum(CAST(sxxa AS DECIMAL(38,6))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(floor(sa * sa / CAST(n_a AS DOUBLE) * 1000000 + 0.5) / 1000000
-        |      AS DECIMAL(38,6))) AS DOUBLE) AS expl
+        |    ${dsum("sa")} AS s,
+        |    ${dsum("sxxa")} AS sxx,
+        |    ${dsum(r6("sa * sa / CAST(n_a AS DOUBLE)"))} AS expl
         |  FROM a GROUP BY 1),
         |e AS (SELECT source, n, k_arms,
         |    expl - s * s / CAST(n AS DOUBLE) AS ssb, sxx - expl AS ssw FROM m)
         |SELECT source, n, k_arms,
-        |  floor(ssb * 1000000 + 0.5) / 1000000 AS ss_between,
-        |  floor(ssw * 1000000 + 0.5) / 1000000 AS ss_within,
+        |  ${r6("ssb")} AS ss_between,
+        |  ${r6("ssw")} AS ss_within,
         |  CASE WHEN k_arms >= 2 AND n > k_arms AND ssw > 0 THEN
-        |    floor((ssb / (CAST(k_arms AS DOUBLE) - 1.0))
-        |      / (ssw / (CAST(n AS DOUBLE) - CAST(k_arms AS DOUBLE))) * 1000000 + 0.5) / 1000000
+        |    ${r6("(ssb / (CAST(k_arms AS DOUBLE) - 1.0)) / (ssw / (CAST(n AS DOUBLE) - CAST(k_arms AS DOUBLE)))")}
         |  END AS f
         |FROM e""".stripMargin),
 
@@ -995,21 +970,21 @@ object StatsQueries {
          |    CAST(nar + nbr AS DOUBLE) AS nn
          |  FROM r),
          |t2 AS (SELECT d_a, ta, tb,
-         |    CASE WHEN d > 0 THEN floor(d * (na / nn) * 1000000 + 0.5) / 1000000 ELSE 0.0 END AS et,
+         |    CASE WHEN d > 0 THEN ${r6("d * (na / nn)")} ELSE 0.0 END AS et,
          |    CASE WHEN d > 0 AND nn > 1 THEN
-         |      floor(d * (na / nn) * (1.0 - na / nn) * (nn - d) / (nn - 1.0) * 1000000 + 0.5) / 1000000
+         |      ${r6("d * (na / nn) * (1.0 - na / nn) * (nn - d) / (nn - 1.0)")}
          |    ELSE 0.0 END AS vt
          |  FROM h),
          |agg AS (SELECT CAST(max(ta) AS BIGINT) AS n_a, CAST(max(tb) AS BIGINT) AS n_b,
          |    CAST(sum(d_a) AS BIGINT) AS o_a,
-         |    CAST(coalesce(sum(CAST(et AS DECIMAL(38,6))), 0) AS DOUBLE) AS ea,
-         |    CAST(coalesce(sum(CAST(vt AS DECIMAL(38,6))), 0) AS DOUBLE) AS vv
+         |    ${dsum0("et")} AS ea,
+         |    ${dsum0("vt")} AS vv
          |  FROM t2)
          |SELECT n_a, n_b, o_a,
-         |  floor(ea * 1000000 + 0.5) / 1000000 AS e_a,
-         |  floor(vv * 1000000 + 0.5) / 1000000 AS v,
+         |  ${r6("ea")} AS e_a,
+         |  ${r6("vv")} AS v,
          |  CASE WHEN n_a > 0 AND n_b > 0 AND vv > 0 THEN
-         |    floor((CAST(o_a AS DOUBLE) - ea) * (CAST(o_a AS DOUBLE) - ea) / vv * 1000000 + 0.5) / 1000000
+         |    ${r6("(CAST(o_a AS DOUBLE) - ea) * (CAST(o_a AS DOUBLE) - ea) / vv")}
          |  END AS chi2
          |FROM agg""".stripMargin),
 
@@ -1020,7 +995,7 @@ object StatsQueries {
         .select(col("n_a_levels"), col("n_b_levels"), col("n"),
           graft.functions.Portable.r6(col("chi2")).as("chi2"),
           graft.functions.Portable.r6(col("v")).as("v")),
-      """WITH cells AS (SELECT lang AS a, source AS b, CAST(count(*) AS BIGINT) AS obs
+      s"""WITH cells AS (SELECT lang AS a, source AS b, CAST(count(*) AS BIGINT) AS obs
         |  FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
         |ra AS (SELECT a, sum(obs) AS na FROM cells GROUP BY 1),
         |rb AS (SELECT b, sum(obs) AS nb FROM cells GROUP BY 1),
@@ -1032,14 +1007,12 @@ object StatsQueries {
         |m AS (SELECT CAST(count(DISTINCT a) AS BIGINT) AS n_a_levels,
         |    CAST(count(DISTINCT b) AS BIGINT) AS n_b_levels,
         |    CAST(sum(o) AS BIGINT) AS n,
-        |    CAST(coalesce(sum(CAST(floor((CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e
-        |      * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE) AS chi2
+        |    ${dsum0(r6("(CAST(o AS DOUBLE) - e) * (CAST(o AS DOUBLE) - e) / e"))} AS chi2
         |  FROM j)
         |SELECT n_a_levels, n_b_levels, n,
-        |  floor(chi2 * 1000000 + 0.5) / 1000000 AS chi2,
+        |  ${r6("chi2")} AS chi2,
         |  CASE WHEN least(n_a_levels, n_b_levels) >= 2 AND n > 0 THEN
-        |    floor(sqrt(chi2 / (CAST(n AS DOUBLE)
-        |      * (CAST(least(n_a_levels, n_b_levels) AS DOUBLE) - 1.0))) * 1000000 + 0.5) / 1000000
+        |    ${r6("sqrt(chi2 / (CAST(n AS DOUBLE) * (CAST(least(n_a_levels, n_b_levels) AS DOUBLE) - 1.0)))")}
         |  END AS v
         |FROM m""".stripMargin),
 
@@ -1084,9 +1057,7 @@ object StatsQueries {
          |  coalesce(concordant, 0) AS concordant,
          |  coalesce(discordant, 0) AS discordant,
          |  CASE WHEN n_pairs - tx > 0 AND n_pairs - ty > 0 THEN
-         |    floor(CAST(concordant - discordant AS DOUBLE)
-         |      / sqrt(CAST(n_pairs - tx AS DOUBLE) * CAST(n_pairs - ty AS DOUBLE))
-         |      * 1000000 + 0.5) / 1000000 END AS tau_b
+         |    ${r6("CAST(concordant - discordant AS DOUBLE) / sqrt(CAST(n_pairs - tx AS DOUBLE) * CAST(n_pairs - ty AS DOUBLE))")} END AS tau_b
          |FROM sz LEFT JOIN a USING (event_type)""".stripMargin),
 
     // Ljung-Box portmanteau "is it white noise" over the same per-user
@@ -1095,7 +1066,7 @@ object StatsQueries {
       Stats.ljungBox(ev(s, dir), Seq("user_id"), "ts", "event_id", "value", maxLag = 3)
         .select(col("user_id"), col("n_obs"), col("n_lags"),
           graft.functions.Portable.r6(col("q")).as("q")),
-      """WITH v AS (SELECT user_id, ts, event_id, CAST(value AS DOUBLE) AS x FROM events
+      s"""WITH v AS (SELECT user_id, ts, event_id, CAST(value AS DOUBLE) AS x FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE)) AND ts IS NOT NULL),
         |l AS (SELECT user_id, x,
         |        lag(x, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS l1,
@@ -1106,11 +1077,11 @@ object StatsQueries {
         |      UNION ALL SELECT user_id, 2, x, l2 FROM l WHERE l2 IS NOT NULL
         |      UNION ALL SELECT user_id, 3, x, l3 FROM l WHERE l3 IS NOT NULL),
         |m AS (SELECT user_id, lg, count(*) AS n,
-        |        CAST(coalesce(sum(CAST(x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-        |        CAST(coalesce(sum(CAST(y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-        |        CAST(coalesce(sum(CAST(x * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-        |        CAST(coalesce(sum(CAST(x * x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx,
-        |        CAST(coalesce(sum(CAST(y * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS syy
+        |        ${dsum0("x")} AS sx,
+        |        ${dsum0("y")} AS sy,
+        |        ${dsum0("x * y")} AS sxy,
+        |        ${dsum0("x * x")} AS sxx,
+        |        ${dsum0("y * y")} AS syy
         |      FROM p GROUP BY 1, 2),
         |rho AS (SELECT user_id, lg,
         |        (CAST(n AS DOUBLE) * sxy - sx * sy) /
@@ -1123,12 +1094,11 @@ object StatsQueries {
         |      FROM rho JOIN ns USING (user_id)),
         |g AS (SELECT user_id, n_obs, CAST(count(*) AS BIGINT) AS n_lags,
         |        count(CASE WHEN tt IS NULL THEN 1 END) AS bad,
-        |        CAST(coalesce(sum(CAST(floor(tt * 1000000 + 0.5) / 1000000
-        |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS s
+        |        ${dsum0(r6("tt"))} AS s
         |      FROM t GROUP BY 1, 2)
         |SELECT user_id, n_obs, n_lags,
         |  CASE WHEN bad = 0 AND n_obs > 3 THEN
-        |    floor(CAST(n_obs AS DOUBLE) * (CAST(n_obs AS DOUBLE) + 2.0) * s * 1000000 + 0.5) / 1000000
+        |    ${r6("CAST(n_obs AS DOUBLE) * (CAST(n_obs AS DOUBLE) + 2.0) * s")}
         |  END AS q
         |FROM g""".stripMargin),
 
@@ -1138,7 +1108,7 @@ object StatsQueries {
       Recommend.itemCosine(ev(s, dir), "user_id", "event_type", minUsers = 2L)
         .select(col("item_a"), col("item_b"), col("n_users"),
           graft.functions.Portable.r6(col("cosine")).as("cosine")),
-      """WITH c AS (SELECT user_id AS u, event_type AS i, CAST(count(*) AS BIGINT) AS c
+      s"""WITH c AS (SELECT user_id AS u, event_type AS i, CAST(count(*) AS BIGINT) AS c
         |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL GROUP BY 1, 2),
         |ok AS (SELECT u FROM (SELECT u, count(*) AS ni FROM c GROUP BY 1) WHERE ni <= 1000),
         |cc AS (SELECT c.* FROM c JOIN ok USING (u)),
@@ -1147,8 +1117,7 @@ object StatsQueries {
         |        CAST(sum(l.c * r.c) AS BIGINT) AS dot
         |      FROM cc l JOIN cc r ON l.u = r.u AND l.i < r.i GROUP BY 1, 2)
         |SELECT item_a, item_b, n_users,
-        |  floor(CAST(dot AS DOUBLE) / (sqrt(CAST(na.ss AS DOUBLE)) * sqrt(CAST(nb.ss AS DOUBLE)))
-        |    * 1000000 + 0.5) / 1000000 AS cosine
+        |  ${r6("CAST(dot AS DOUBLE) / (sqrt(CAST(na.ss AS DOUBLE)) * sqrt(CAST(nb.ss AS DOUBLE)))")} AS cosine
         |FROM p JOIN nr na ON p.item_a = na.i JOIN nr nb ON p.item_b = nb.i
         |WHERE n_users >= 2""".stripMargin),
 
@@ -1158,20 +1127,20 @@ object StatsQueries {
       Stats.hillTailIndex(docs(s, dir), Seq("source"), "n_chars", "doc_id", k = 50)
         .select(col("source"), col("n"), col("x_tail"),
           graft.functions.Portable.r6(col("alpha")).as("alpha")),
-      """WITH v AS (SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS x FROM documents
+      s"""WITH v AS (SELECT source, doc_id, CAST(n_chars AS DOUBLE) AS x FROM documents
         |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE)) AND CAST(n_chars AS DOUBLE) > 0.0),
         |rk AS (SELECT source, x, row_number() OVER (PARTITION BY source ORDER BY x DESC, doc_id) AS r FROM v),
         |top AS (SELECT * FROM rk WHERE r <= 51),
         |g AS (SELECT source, count(*) AS nk, min(CASE WHEN r = 51 THEN x END) AS x_tail FROM top GROUP BY 1),
         |t AS (SELECT top.source, g.nk, g.x_tail,
-        |        floor(ln(top.x / g.x_tail) * 1000000 + 0.5) / 1000000 AS tt
+        |        ${r6("ln(top.x / g.x_tail)")} AS tt
         |      FROM top JOIN g USING (source) WHERE top.r <= 50 AND g.x_tail IS NOT NULL),
         |m AS (SELECT source, nk, x_tail,
-        |        CAST(coalesce(sum(CAST(tt AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mn
+        |        ${dsum0("tt")} / CAST(count(*) AS DOUBLE) AS mn
         |      FROM t GROUP BY 1, 2, 3),
         |sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM v GROUP BY 1)
         |SELECT sz.source, sz.n, m.x_tail,
-        |  CASE WHEN m.nk = 51 AND m.mn > 0.0 THEN floor(1.0 / m.mn * 1000000 + 0.5) / 1000000 END AS alpha
+        |  CASE WHEN m.nk = 51 AND m.mn > 0.0 THEN ${r6("1.0 / m.mn")} END AS alpha
         |FROM sz LEFT JOIN m USING (source)""".stripMargin),
 
     // effective-number diversity of each event stream across users
@@ -1182,18 +1151,17 @@ object StatsQueries {
           graft.functions.Portable.r6(col("simpson")).as("simpson"),
           graft.functions.Portable.r6(col("hill1")).as("hill1"),
           graft.functions.Portable.r6(col("hill2")).as("hill2")),
-      """WITH c AS (SELECT event_type, user_id, count(*) AS k FROM events
+      s"""WITH c AS (SELECT event_type, user_id, count(*) AS k FROM events
         |  WHERE user_id IS NOT NULL GROUP BY 1, 2),
         |g AS (SELECT event_type, CAST(sum(k) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS richness,
         |        CAST(sum(CAST(k AS DECIMAL(38,0)) * k) AS DOUBLE) AS sk2,
-        |        CAST(sum(CAST(floor(CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE)) * 1000000 + 0.5)
-        |          / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS skl
+        |        ${dsum(r6("CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE))"))} AS skl
         |      FROM c GROUP BY 1)
         |SELECT event_type, n, richness,
-        |  floor((ln(CAST(n AS DOUBLE)) - skl / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS shannon,
-        |  floor(sk2 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS simpson,
-        |  floor(exp(ln(CAST(n AS DOUBLE)) - skl / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS hill1,
-        |  floor(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) / sk2 * 1000000 + 0.5) / 1000000 AS hill2
+        |  ${r6("ln(CAST(n AS DOUBLE)) - skl / CAST(n AS DOUBLE)")} AS shannon,
+        |  ${r6("sk2 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))")} AS simpson,
+        |  ${r6("exp(ln(CAST(n AS DOUBLE)) - skl / CAST(n AS DOUBLE))")} AS hill1,
+        |  ${r6("CAST(n AS DOUBLE) * CAST(n AS DOUBLE) / sk2")} AS hill2
         |FROM g""".stripMargin),
 
     // RFM segmentation of customers within market segments
@@ -1206,10 +1174,9 @@ object StatsQueries {
           unix_micros(col("recency").cast("timestamp")).as("recency_us"),
           col("frequency"), col("monetary"), col("r"), col("f"), col("m"), col("rfm"))
     },
-      """WITH b AS (SELECT c_mktsegment AS seg, o_custkey AS entity,
+      s"""WITH b AS (SELECT c_mktsegment AS seg, o_custkey AS entity,
         |    max(o_orderdate) AS recency, CAST(count(*) AS BIGINT) AS frequency,
-        |    CAST(sum(CAST(floor(CAST(o_totalprice AS DOUBLE) * 1000000 + 0.5) / 1000000
-        |      AS DECIMAL(38,6))) AS DOUBLE) AS monetary
+        |    ${dsum(r6("CAST(o_totalprice AS DOUBLE)"))} AS monetary
         |  FROM orders JOIN customer ON o_custkey = c_custkey
         |  WHERE o_custkey IS NOT NULL AND o_orderdate IS NOT NULL
         |  GROUP BY 1, 2)
@@ -1233,12 +1200,12 @@ object StatsQueries {
           graft.functions.Portable.r6(col("conf")).as("conf"),
           graft.functions.Portable.r6(col("acc")).as("acc"),
           graft.functions.Portable.r6(col("iso")).as("iso")),
-      """WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 2000.0) AS x,
+      s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 2000.0) AS x,
         |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
         |  FROM documents WHERE n_chars IS NOT NULL),
         |b AS (SELECT lang, least(19, greatest(0, CAST(floor(x * 20) AS BIGINT))) AS bin,
         |    CAST(count(*) AS BIGINT) AS n, CAST(sum(p) AS BIGINT) AS kk,
-        |    CAST(sum(CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sx
+        |    ${dsum(r6("x"))} AS sx
         |  FROM v GROUP BY 1, 2),
         |c AS (SELECT lang, bin, n, kk, sx,
         |      CAST(sum(n) OVER w AS BIGINT) AS cn, CAST(sum(kk) OVER w AS BIGINT) AS ck,
@@ -1252,9 +1219,9 @@ object StatsQueries {
         |    GROUP BY 1, 2, 3, 4, 5, 6),
         |f AS (SELECT lang, bin, n, kk, sx, max(m) AS iso FROM mn GROUP BY 1, 2, 3, 4, 5)
         |SELECT lang, bin, n,
-        |  floor(sx / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS conf,
-        |  floor(CAST(kk AS DOUBLE) / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS acc,
-        |  floor(iso * 1000000 + 0.5) / 1000000 AS iso
+        |  ${r6("sx / CAST(n AS DOUBLE)")} AS conf,
+        |  ${r6("CAST(kk AS DOUBLE) / CAST(n AS DOUBLE)")} AS acc,
+        |  ${r6("iso")} AS iso
         |FROM f""".stripMargin),
 
     // earth-mover drift of per-event-type value distributions between
@@ -1264,7 +1231,7 @@ object StatsQueries {
           isRef = col("event_id") % 2 === 0, nBins = 20)
         .select(col("event_type"), col("n_ref"), col("n_cur"), col("bin_width"),
           graft.functions.Portable.r6(col("emd")).as("emd")),
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
         |    CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END AS ref FROM events
         |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
         |rng AS (SELECT event_type, min(x) AS lo, max(x) AS hi FROM v GROUP BY 1),
@@ -1291,10 +1258,9 @@ object StatsQueries {
         |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
         |    FROM g)
         |SELECT event_type, CAST(max(t_ref) AS BIGINT) AS n_ref, CAST(max(t_cur) AS BIGINT) AS n_cur,
-        |  floor(max(w) * 1000000 + 0.5) / 1000000 AS bin_width,
+        |  ${r6("max(w)")} AS bin_width,
         |  CASE WHEN max(t_ref) IS NOT NULL AND max(t_cur) IS NOT NULL THEN
-        |    floor(CAST(sum(CAST(floor(abs(c) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-        |      * max(w) * 1000000 + 0.5) / 1000000 END AS emd
+        |    ${r6(s"${dsum(r6("abs(c)"))} * max(w)")} END AS emd
         |FROM cum GROUP BY event_type""".stripMargin),
 
     // Theil's U both ways: does source determine language, or vice versa
@@ -1312,24 +1278,20 @@ object StatsQueries {
       {
       def dir(x: String, y: String, tag: String): String =
         s"""SELECT '$tag' AS direction, n, nx, ny,
-           |  floor((ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS h_y,
-           |  floor((sx - sxy) / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS h_y_given_x,
+           |  ${r6("ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)")} AS h_y,
+           |  ${r6("(sx - sxy) / CAST(n AS DOUBLE)")} AS h_y_given_x,
            |  CASE WHEN ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE) > 0.0 THEN
-           |    floor(((ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) - (sx - sxy) / CAST(n AS DOUBLE))
-           |      / (ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 END AS u
+           |    ${r6("((ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE)) - (sx - sxy) / CAST(n AS DOUBLE)) / (ln(CAST(n AS DOUBLE)) - sy / CAST(n AS DOUBLE))")} END AS u
            |FROM (
            |  WITH jt AS (SELECT $x AS x, $y AS y, count(*) AS k FROM documents
            |      WHERE $x IS NOT NULL AND $y IS NOT NULL GROUP BY 1, 2),
            |  jm AS (SELECT CAST(sum(k) AS BIGINT) AS n,
-           |      CAST(sum(CAST(floor(CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE)) * 1000000 + 0.5)
-           |        / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sxy FROM jt),
+           |      ${dsum(r6("CAST(k AS DOUBLE) * ln(CAST(k AS DOUBLE))"))} AS sxy FROM jt),
            |  xm AS (SELECT CAST(count(*) AS BIGINT) AS nx,
-           |      CAST(sum(CAST(floor(CAST(kx AS DOUBLE) * ln(CAST(kx AS DOUBLE)) * 1000000 + 0.5)
-           |        / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sx
+           |      ${dsum(r6("CAST(kx AS DOUBLE) * ln(CAST(kx AS DOUBLE))"))} AS sx
            |    FROM (SELECT x, sum(k) AS kx FROM jt GROUP BY 1)),
            |  ym AS (SELECT CAST(count(*) AS BIGINT) AS ny,
-           |      CAST(sum(CAST(floor(CAST(ky AS DOUBLE) * ln(CAST(ky AS DOUBLE)) * 1000000 + 0.5)
-           |        / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sy
+           |      ${dsum(r6("CAST(ky AS DOUBLE) * ln(CAST(ky AS DOUBLE))"))} AS sy
            |    FROM (SELECT y, sum(k) AS ky FROM jt GROUP BY 1))
            |  SELECT * FROM jm, xm, ym)""".stripMargin
       dir("source", "lang", "lang_given_source") + "\nUNION ALL\n" +
@@ -1342,19 +1304,18 @@ object StatsQueries {
           smoothing = 10.0)
         .select(col("doc_id"), col("source"),
           graft.functions.Portable.r6(col("enc")).as("enc")),
-      """WITH v AS (SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS y FROM documents),
+      s"""WITH v AS (SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS y FROM documents),
         |ok AS (SELECT * FROM v WHERE source IS NOT NULL AND y IS NOT NULL AND NOT isnan(y)),
         |cat AS (SELECT source,
-        |    CAST(sum(CAST(floor(y * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS s,
+        |    ${dsum(r6("y"))} AS s,
         |    CAST(count(*) AS BIGINT) AS n
         |  FROM ok GROUP BY 1),
-        |g AS (SELECT CAST(sum(CAST(floor(y * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+        |g AS (SELECT ${dsum(r6("y"))}
         |    / CAST(count(*) AS DOUBLE) AS gm FROM ok)
         |SELECT doc_id, v.source,
         |  CASE WHEN v.source IS NOT NULL AND y IS NOT NULL AND NOT isnan(y)
         |      AND CAST(n AS DOUBLE) - 1.0 + 10.0 > 0.0 THEN
-        |    floor((s - floor(y * 1000000 + 0.5) / 1000000 + 10.0 * gm)
-        |      / (CAST(n AS DOUBLE) - 1.0 + 10.0) * 1000000 + 0.5) / 1000000 END AS enc
+        |    ${r6(s"(s - ${r6("y")} + 10.0 * gm) / (CAST(n AS DOUBLE) - 1.0 + 10.0)")} END AS enc
         |FROM v LEFT JOIN cat ON v.source = cat.source, g""".stripMargin),
 
     // quality-score softmax sampling weights per language (T = 0.5)
@@ -1365,16 +1326,16 @@ object StatsQueries {
         .select(col("lang"), col("doc_id"),
           graft.functions.Portable.r6(col("score")).as("score"),
           graft.functions.Portable.r6(col("w")).as("w")),
-      """WITH b AS (SELECT lang, doc_id, CAST(n_chars AS DOUBLE) / 1000.0 AS score
+      s"""WITH b AS (SELECT lang, doc_id, CAST(n_chars AS DOUBLE) / 1000.0 AS score
         |  FROM documents WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE) / 1000.0)),
         |mx AS (SELECT lang, max(score) AS m FROM b GROUP BY 1),
         |t AS (SELECT b.lang, doc_id, score, exp((score - m) / 0.5) AS tt FROM b JOIN mx ON b.lang = mx.lang),
         |tot AS (SELECT lang,
-        |    CAST(sum(CAST(floor(tt * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS z
+        |    ${dsum(r6("tt"))} AS z
         |  FROM t GROUP BY 1)
         |SELECT t.lang, doc_id,
-        |  floor(score * 1000000 + 0.5) / 1000000 AS score,
-        |  floor(tt / z * 1000000 + 0.5) / 1000000 AS w
+        |  ${r6("score")} AS score,
+        |  ${r6("tt / z")} AS w
         |FROM t JOIN tot ON t.lang = tot.lang""".stripMargin),
 
     // Good-Turing unseen vocabulary mass + Chao1 floor per source
@@ -1386,8 +1347,8 @@ object StatsQueries {
         .select(col("source"), col("n"), col("richness"), col("n1"), col("n2"),
           graft.functions.Portable.r6(col("missing_mass")).as("missing_mass"),
           graft.functions.Portable.r6(col("chao1")).as("chao1")),
-      """WITH w AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
+      s"""WITH w AS (SELECT source,
+        |    unnest(${wordTokensSql("text")}) AS word
         |  FROM documents),
         |c AS (SELECT source, word, count(*) AS k FROM w WHERE word IS NOT NULL GROUP BY 1, 2),
         |g AS (SELECT source, CAST(sum(k) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS richness,
@@ -1395,11 +1356,9 @@ object StatsQueries {
         |    CAST(count(CASE WHEN k = 2 THEN 1 END) AS BIGINT) AS n2
         |  FROM c GROUP BY 1)
         |SELECT source, n, richness, n1, n2,
-        |  floor(CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE) * 1000000 + 0.5) / 1000000 AS missing_mass,
+        |  ${r6("CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE)")} AS missing_mass,
         |  CASE WHEN n2 > 0 THEN
-        |    floor((CAST(richness AS DOUBLE)
-        |      + CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) / (2.0 * CAST(n2 AS DOUBLE)))
-        |      * 1000000 + 0.5) / 1000000 END AS chao1
+        |    ${r6("CAST(richness AS DOUBLE) + CAST(n1 AS DOUBLE) * CAST(n1 AS DOUBLE) / (2.0 * CAST(n2 AS DOUBLE))")} END AS chao1
         |FROM g""".stripMargin),
 
     // clustered ratio metric: heavy-event rate per user-cohort with the
@@ -1421,15 +1380,13 @@ object StatsQueries {
     },
       {
       val z = 1.959963984540054
-      def r6m(e: String) =
-        s"CAST(coalesce(sum(CAST(floor(($e) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE)"
       s"""WITH u AS (SELECT user_id % 4 AS cohort, user_id,
          |    CAST(count(CASE WHEN CAST(value AS DOUBLE) > 50.0 THEN 1 END) AS DOUBLE) AS x,
          |    CAST(count(*) AS DOUBLE) AS y
          |  FROM events GROUP BY 1, 2),
          |m AS (SELECT cohort, CAST(count(*) AS BIGINT) AS n,
-         |    ${r6m("x")} AS sx, ${r6m("y")} AS sy,
-         |    ${r6m("x * x")} AS sxx, ${r6m("y * y")} AS syy, ${r6m("x * y")} AS sxy
+         |    ${dsum0(r6("x"))} AS sx, ${dsum0(r6("y"))} AS sy,
+         |    ${dsum0(r6("x * x"))} AS sxx, ${dsum0(r6("y * y"))} AS syy, ${dsum0(r6("x * y"))} AS sxy
          |  FROM u GROUP BY 1),
          |e AS (SELECT cohort, n, sx, sy, sx / sy AS ratio,
          |    sy / CAST(n AS DOUBLE) AS my,
@@ -1446,12 +1403,12 @@ object StatsQueries {
          |        / (CAST(n AS DOUBLE) * my * my), 0.0)) END AS se
          |  FROM e)
          |SELECT cohort, n,
-         |  floor(sx * 1000000 + 0.5) / 1000000 AS sum_x,
-         |  floor(sy * 1000000 + 0.5) / 1000000 AS sum_y,
-         |  CASE WHEN sy <> 0.0 THEN floor(ratio * 1000000 + 0.5) / 1000000 END AS ratio,
-         |  floor(se * 1000000 + 0.5) / 1000000 AS se,
-         |  CASE WHEN se IS NOT NULL THEN floor((ratio - $z * se) * 1000000 + 0.5) / 1000000 END AS ci_lo,
-         |  CASE WHEN se IS NOT NULL THEN floor((ratio + $z * se) * 1000000 + 0.5) / 1000000 END AS ci_hi
+         |  ${r6("sx")} AS sum_x,
+         |  ${r6("sy")} AS sum_y,
+         |  CASE WHEN sy <> 0.0 THEN ${r6("ratio")} END AS ratio,
+         |  ${r6("se")} AS se,
+         |  CASE WHEN se IS NOT NULL THEN ${r6(s"ratio - $z * se")} END AS ci_lo,
+         |  CASE WHEN se IS NOT NULL THEN ${r6(s"ratio + $z * se")} END AS ci_hi
          |FROM f""".stripMargin
     }),
 
@@ -1464,19 +1421,19 @@ object StatsQueries {
           graft.functions.Portable.r6(col("v")).as("v"),
           graft.functions.Portable.r6(col("lambda")).as("lambda"),
           graft.functions.Portable.r6(col("p_always")).as("p_always")),
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
         |    coalesce(event_id % 2 = 0, false) AS b FROM events),
         |m AS (SELECT event_type,
         |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b THEN 1 END) AS BIGINT) AS n_a,
         |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b THEN 1 END) AS BIGINT) AS n_b,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-        |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
+        |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-        |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
+        |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
         |  FROM v GROUP BY 1),
         |e AS (SELECT event_type, n_a, n_b,
         |    sb / CAST(n_b AS DOUBLE) - sa / CAST(n_a AS DOUBLE) AS theta,
@@ -1489,12 +1446,12 @@ object StatsQueries {
         |    sqrt(vv / (vv + 1.0)) * exp(theta * theta * 1.0 / (2.0 * vv * (vv + 1.0))) AS lam
         |  FROM e)
         |SELECT event_type, n_a, n_b,
-        |  CASE WHEN n_a > 0 AND n_b > 0 THEN floor(theta * 1000000 + 0.5) / 1000000 END AS theta,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN floor(vv * 1000000 + 0.5) / 1000000 END AS v,
+        |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${r6("theta")} END AS theta,
+        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN ${r6("vv")} END AS v,
         |  CASE WHEN n_a >= 2 AND n_b >= 2 AND vv > 0.0 THEN
-        |    floor(lam * 1000000 + 0.5) / 1000000 END AS lambda,
+        |    ${r6("lam")} END AS lambda,
         |  CASE WHEN n_a >= 2 AND n_b >= 2 AND vv > 0.0 THEN
-        |    floor(least(1.0, 1.0 / lam) * 1000000 + 0.5) / 1000000 END AS p_always
+        |    ${r6("least(1.0, 1.0 / lam)")} END AS p_always
         |FROM f""".stripMargin),
 
     // purchases per observed user-day, arm B vs arm A
@@ -1510,32 +1467,32 @@ object StatsQueries {
           graft.functions.Portable.r6(col("rate_ratio")).as("rate_ratio"),
           graft.functions.Portable.r6(col("log_rr")).as("log_rr"),
           graft.functions.Portable.r6(col("se_log_rr")).as("se_log_rr")),
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
         |    coalesce(event_id % 2 = 0, false) AS b,
         |    coalesce(CAST(value AS DOUBLE) > 50.0, false) AS e FROM events),
         |m AS (SELECT event_type,
         |    CAST(count(CASE WHEN NOT b AND e THEN 1 END) AS BIGINT) AS k_a,
         |    CAST(count(CASE WHEN b AND e THEN 1 END) AS BIGINT) AS k_b,
         |    CAST(coalesce(sum(CASE WHEN NOT b AND x IS NOT NULL AND NOT isnan(x)
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS t_a0,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS t_a0,
         |    CAST(coalesce(sum(CASE WHEN b AND x IS NOT NULL AND NOT isnan(x)
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS t_b0
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS t_b0
         |  FROM v GROUP BY 1)
         |SELECT event_type, k_a, k_b,
-        |  floor(t_a0 * 1000000 + 0.5) / 1000000 AS t_a,
-        |  floor(t_b0 * 1000000 + 0.5) / 1000000 AS t_b,
+        |  ${r6("t_a0")} AS t_a,
+        |  ${r6("t_b0")} AS t_b,
         |  CASE WHEN t_a0 > 0.0 THEN
-        |    floor(CAST(k_a AS DOUBLE) / t_a0 * 1000000 + 0.5) / 1000000 END AS rate_a,
+        |    ${r6("CAST(k_a AS DOUBLE) / t_a0")} END AS rate_a,
         |  CASE WHEN t_b0 > 0.0 THEN
-        |    floor(CAST(k_b AS DOUBLE) / t_b0 * 1000000 + 0.5) / 1000000 END AS rate_b,
+        |    ${r6("CAST(k_b AS DOUBLE) / t_b0")} END AS rate_b,
         |  CASE WHEN k_a > 0 AND k_b > 0 AND t_a0 > 0.0 AND t_b0 > 0.0 THEN
-        |    floor((CAST(k_b AS DOUBLE) / t_b0) / (CAST(k_a AS DOUBLE) / t_a0) * 1000000 + 0.5) / 1000000
+        |    ${r6("(CAST(k_b AS DOUBLE) / t_b0) / (CAST(k_a AS DOUBLE) / t_a0)")}
         |  END AS rate_ratio,
         |  CASE WHEN k_a > 0 AND k_b > 0 AND t_a0 > 0.0 AND t_b0 > 0.0 THEN
-        |    floor(ln((CAST(k_b AS DOUBLE) / t_b0) / (CAST(k_a AS DOUBLE) / t_a0)) * 1000000 + 0.5) / 1000000
+        |    ${r6("ln((CAST(k_b AS DOUBLE) / t_b0) / (CAST(k_a AS DOUBLE) / t_a0))")}
         |  END AS log_rr,
         |  CASE WHEN k_a > 0 AND k_b > 0 AND t_a0 > 0.0 AND t_b0 > 0.0 THEN
-        |    floor(sqrt(1.0 / CAST(k_a AS DOUBLE) + 1.0 / CAST(k_b AS DOUBLE)) * 1000000 + 0.5) / 1000000
+        |    ${r6("sqrt(1.0 / CAST(k_a AS DOUBLE) + 1.0 / CAST(k_b AS DOUBLE))")}
         |  END AS se_log_rr
         |FROM m""".stripMargin),
 
@@ -1548,19 +1505,19 @@ object StatsQueries {
           graft.functions.Portable.r6(col("s_pooled")).as("s_pooled"),
           graft.functions.Portable.r6(col("d")).as("d"),
           graft.functions.Portable.r6(col("g")).as("g")),
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
         |    coalesce(event_id % 2 = 0, false) AS b FROM events),
         |m AS (SELECT event_type,
         |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b THEN 1 END) AS BIGINT) AS n_a,
         |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b THEN 1 END) AS BIGINT) AS n_b,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-        |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
+        |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-        |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
+        |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
         |  FROM v GROUP BY 1),
         |e AS (SELECT event_type, n_a, n_b,
         |    sb / CAST(n_b AS DOUBLE) - sa / CAST(n_a AS DOUBLE) AS dif,
@@ -1573,13 +1530,12 @@ object StatsQueries {
         |      / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 2.0)) AS sp
         |  FROM m)
         |SELECT event_type, n_a, n_b,
-        |  CASE WHEN n_a > 0 AND n_b > 0 THEN floor(dif * 1000000 + 0.5) / 1000000 END AS diff,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN floor(sp * 1000000 + 0.5) / 1000000 END AS s_pooled,
+        |  CASE WHEN n_a > 0 AND n_b > 0 THEN ${r6("dif")} END AS diff,
+        |  CASE WHEN n_a >= 2 AND n_b >= 2 THEN ${r6("sp")} END AS s_pooled,
         |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0.0 THEN
-        |    floor(dif / sp * 1000000 + 0.5) / 1000000 END AS d,
+        |    ${r6("dif / sp")} END AS d,
         |  CASE WHEN n_a >= 2 AND n_b >= 2 AND sp > 0.0 THEN
-        |    floor(dif / sp * (1.0 - 3.0 / (4.0 * (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) - 9.0))
-        |      * 1000000 + 0.5) / 1000000 END AS g
+        |    ${r6("dif / sp * (1.0 - 3.0 / (4.0 * (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) - 9.0))")} END AS g
         |FROM e""".stripMargin),
 
     // Haldane-corrected odds ratio of the long-doc outcome per lang
@@ -1590,7 +1546,7 @@ object StatsQueries {
           graft.functions.Portable.r6(col("odds_ratio")).as("odds_ratio"),
           graft.functions.Portable.r6(col("log_or")).as("log_or"),
           graft.functions.Portable.r6(col("se_log_or")).as("se_log_or")),
-      """WITH m AS (SELECT lang,
+      s"""WITH m AS (SELECT lang,
         |    CAST(count(CASE WHEN NOT coalesce(doc_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_a,
         |    CAST(count(CASE WHEN coalesce(doc_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_b,
         |    CAST(count(CASE WHEN NOT coalesce(doc_id % 2 = 0, false)
@@ -1604,11 +1560,11 @@ object StatsQueries {
         |  FROM m)
         |SELECT lang, n_a, n_b, k_a, k_b,
         |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    floor(a * d / (c * b) * 1000000 + 0.5) / 1000000 END AS odds_ratio,
+        |    ${r6("a * d / (c * b)")} END AS odds_ratio,
         |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    floor(ln(a * d / (c * b)) * 1000000 + 0.5) / 1000000 END AS log_or,
+        |    ${r6("ln(a * d / (c * b))")} END AS log_or,
         |  CASE WHEN n_a > 0 AND n_b > 0 THEN
-        |    floor(sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d) * 1000000 + 0.5) / 1000000 END AS se_log_or
+        |    ${r6("sqrt(1.0 / a + 1.0 / b + 1.0 / c + 1.0 / d)")} END AS se_log_or
         |FROM e""".stripMargin),
 
     // every event stream Welch-tested against the 'view' control arm
@@ -1621,18 +1577,14 @@ object StatsQueries {
           graft.functions.Portable.r6(col("se")).as("se"),
           graft.functions.Portable.r6(col("z")).as("z"),
           graft.functions.Portable.r6(col("p")).as("p")),
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH v AS (SELECT event_type AS arm, CAST(value AS DOUBLE) AS x FROM events
          |  WHERE event_type IS NOT NULL),
          |m AS (SELECT arm,
          |    CAST(count(CASE WHEN x IS NOT NULL AND NOT isnan(x) THEN 1 END) AS BIGINT) AS n,
          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x)
-         |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s,
+         |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s,
          |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x)
-         |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s2
+         |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s2
          |  FROM v GROUP BY 1),
          |c AS (SELECT n AS nc, s AS cs, s2 AS cs2 FROM m WHERE arm = 'view'),
          |e AS (SELECT arm, n, nc, s, s2, cs, cs2,
@@ -1648,14 +1600,13 @@ object StatsQueries {
          |  FROM e),
          |g AS (SELECT f.*, abs(z) AS az, 1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM f)
          |SELECT arm, n, nc AS n_control,
-         |  CASE WHEN n > 0 THEN floor(mean * 1000000 + 0.5) / 1000000 END AS mean,
-         |  CASE WHEN nc > 0 THEN floor(meanc * 1000000 + 0.5) / 1000000 END AS mean_control,
-         |  CASE WHEN n > 0 AND nc > 0 THEN floor((mean - meanc) * 1000000 + 0.5) / 1000000 END AS diff,
-         |  floor(se * 1000000 + 0.5) / 1000000 AS se,
-         |  floor(z * 1000000 + 0.5) / 1000000 AS z,
-         |  CASE WHEN z IS NOT NULL THEN floor($pSql * 1000000 + 0.5) / 1000000 END AS p
-         |FROM g""".stripMargin
-    }),
+         |  CASE WHEN n > 0 THEN ${r6("mean")} END AS mean,
+         |  CASE WHEN nc > 0 THEN ${r6("meanc")} END AS mean_control,
+         |  CASE WHEN n > 0 AND nc > 0 THEN ${r6("mean - meanc")} END AS diff,
+         |  ${r6("se")} AS se,
+         |  ${r6("z")} AS z,
+         |  CASE WHEN z IS NOT NULL THEN ${r6(pFromZSql)} END AS p
+         |FROM g""".stripMargin),
 
     // A/B health gate: is the even/odd split actually 50/50 per stream
     QueryDef("q_srm", (s, dir) =>
@@ -1664,21 +1615,14 @@ object StatsQueries {
         .select(col("event_type"), col("n_a"), col("n_b"),
           graft.functions.Portable.r6(col("frac_b")).as("frac_b"),
           graft.functions.Portable.r6(col("chi2")).as("chi2")),
-      """WITH m AS (SELECT event_type,
+      s"""WITH m AS (SELECT event_type,
         |    CAST(count(CASE WHEN NOT coalesce(event_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_a,
         |    CAST(count(CASE WHEN coalesce(event_id % 2 = 0, false) THEN 1 END) AS BIGINT) AS n_b
         |  FROM events GROUP BY 1)
         |SELECT event_type, n_a, n_b,
         |  CASE WHEN n_a + n_b > 0 THEN
-        |    floor(CAST(n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS frac_b,
-        |  CASE WHEN n_a + n_b > 0 THEN floor((
-        |    (CAST(n_b AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * 0.5)
-        |      * (CAST(n_b AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * 0.5)
-        |      / (CAST(n_a + n_b AS DOUBLE) * 0.5)
-        |    + (CAST(n_a AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-        |      * (CAST(n_a AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-        |      / (CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))
-        |  ) * 1000000 + 0.5) / 1000000 END AS chi2
+        |    ${r6("CAST(n_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)")} END AS frac_b,
+        |  CASE WHEN n_a + n_b > 0 THEN ${r6("(CAST(n_b AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * 0.5) * (CAST(n_b AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * 0.5) / (CAST(n_a + n_b AS DOUBLE) * 0.5) + (CAST(n_a AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5)) * (CAST(n_a AS DOUBLE) - CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5)) / (CAST(n_a + n_b AS DOUBLE) * (1.0 - 0.5))")} END AS chi2
         |FROM m""".stripMargin),
 
     // distributional A/B: quantile shift of value between event halves
@@ -1699,9 +1643,9 @@ object StatsQueries {
          |    quantile_cont(x, $ps) FILTER (WHERE b) AS qb
          |  FROM v GROUP BY 1)
          |SELECT event_type, unnest($ps) AS p,
-         |  floor(unnest(qa) * 1000000 + 0.5) / 1000000 AS q_a,
-         |  floor(unnest(qb) * 1000000 + 0.5) / 1000000 AS q_b,
-         |  floor((unnest(qb) - unnest(qa)) * 1000000 + 0.5) / 1000000 AS shift
+         |  ${r6("unnest(qa)")} AS q_a,
+         |  ${r6("unnest(qb)")} AS q_b,
+         |  ${r6("unnest(qb) - unnest(qa)")} AS shift
          |FROM q""".stripMargin
     }),
 
@@ -1713,19 +1657,19 @@ object StatsQueries {
           graft.functions.Portable.r6(col("ate")).as("ate"),
           graft.functions.Portable.r6(col("se")).as("se"),
           graft.functions.Portable.r6(col("z")).as("z")),
-      """WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
+      s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x,
         |    coalesce(event_id % 2 = 0, false) AS b FROM events),
         |m AS (SELECT event_type,
         |    count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b THEN 1 END) AS na,
         |    count(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b THEN 1 END) AS nb,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-        |      THEN CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
+        |      THEN CAST(${r6("x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND NOT b
-        |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
+        |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
         |    CAST(coalesce(sum(CASE WHEN x IS NOT NULL AND NOT isnan(x) AND b
-        |      THEN CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
+        |      THEN CAST(${r6("x * x")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
         |  FROM v GROUP BY 1),
         |ps AS (SELECT na + nb AS ns,
         |    CASE WHEN na >= 1 AND nb >= 1 THEN sb / nb - sa / na END AS eff,
@@ -1737,17 +1681,15 @@ object StatsQueries {
         |    CAST(count(CASE WHEN eff IS NULL THEN 1 END) AS BIGINT) AS n_strata_incomplete,
         |    count(CASE WHEN eff IS NOT NULL AND vs IS NULL THEN 1 END) AS novar,
         |    CAST(coalesce(sum(CASE WHEN eff IS NOT NULL THEN ns END), 0) AS BIGINT) AS nc,
-        |    CAST(coalesce(sum(CAST(floor(CAST(ns AS DOUBLE) * eff * 1000000 + 0.5) / 1000000
-        |      AS DECIMAL(38,6))), 0) AS DOUBLE) AS we,
-        |    CAST(coalesce(sum(CAST(floor(CAST(ns AS DOUBLE) * ns * vs * 1000000 + 0.5) / 1000000
-        |      AS DECIMAL(38,6))), 0) AS DOUBLE) AS wv
+        |    ${dsum0(r6("CAST(ns AS DOUBLE) * eff"))} AS we,
+        |    ${dsum0(r6("CAST(ns AS DOUBLE) * ns * vs"))} AS wv
         |  FROM ps)
         |SELECT n, n_strata, n_strata_incomplete,
-        |  CASE WHEN nc > 0 THEN floor(we / CAST(nc AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS ate,
+        |  CASE WHEN nc > 0 THEN ${r6("we / CAST(nc AS DOUBLE)")} END AS ate,
         |  CASE WHEN novar = 0 AND nc > 0 THEN
-        |    floor(sqrt(wv) / CAST(nc AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS se,
+        |    ${r6("sqrt(wv) / CAST(nc AS DOUBLE)")} END AS se,
         |  CASE WHEN novar = 0 AND nc > 0 AND sqrt(wv) / CAST(nc AS DOUBLE) > 0.0 THEN
-        |    floor((we / CAST(nc AS DOUBLE)) / (sqrt(wv) / CAST(nc AS DOUBLE)) * 1000000 + 0.5) / 1000000
+        |    ${r6("(we / CAST(nc AS DOUBLE)) / (sqrt(wv) / CAST(nc AS DOUBLE))")}
         |  END AS z
         |FROM g""".stripMargin),
 
@@ -1771,12 +1713,12 @@ object StatsQueries {
          |    total - coalesce(sum(d_events + c_censored) OVER (ORDER BY t_day ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS n_risk
          |  FROM cv, tot),
          |h AS (SELECT t_day, d_events, c_censored, n_risk,
-         |    ${graft.functions.Portable.r6Sql("CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE)")} AS inc
+         |    ${r6("CAST(d_events AS DOUBLE) / CAST(n_risk AS DOUBLE)")} AS inc
          |  FROM r)
          |SELECT t_day, CAST(n_risk AS BIGINT) AS n_risk, CAST(d_events AS BIGINT) AS d_events,
          |  CAST(c_censored AS BIGINT) AS c_censored,
-         |  ${graft.functions.Portable.r6Sql("inc")} AS hazard,
-         |  ${graft.functions.Portable.r6Sql("CAST(sum(CAST(inc AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cum_hazard
+         |  ${r6("inc")} AS hazard,
+         |  ${r6("CAST(sum(CAST(inc AS DECIMAL(38,6))) OVER (ORDER BY t_day) AS DOUBLE)")} AS cum_hazard
          |FROM h""".stripMargin),
 
     // pre-launch A/B power: arm size needed to detect a 5% shift of
@@ -1794,8 +1736,8 @@ object StatsQueries {
       s"""WITH v AS (SELECT event_type, CAST(value AS DOUBLE) AS x FROM events
          |  WHERE value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
          |m AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CAST(floor(x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-         |    CAST(coalesce(sum(CAST(floor(x * x * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx
+         |    ${dsum0(r6("x"))} AS sx,
+         |    ${dsum0(r6("x * x"))} AS sxx
          |  FROM v GROUP BY 1),
          |f AS (SELECT event_type, n, sx / CAST(n AS DOUBLE) AS mean,
          |    greatest(sxx / CAST(n AS DOUBLE) - (sx / CAST(n AS DOUBLE)) * (sx / CAST(n AS DOUBLE)), 0.0)
@@ -1803,9 +1745,9 @@ object StatsQueries {
          |    0.05 * (sx / CAST(n AS DOUBLE)) AS delta
          |  FROM m)
          |SELECT event_type, n,
-         |  floor(mean * 1000000 + 0.5) / 1000000 AS mean,
-         |  CASE WHEN n >= 2 THEN floor(sqrt(v) * 1000000 + 0.5) / 1000000 END AS sd,
-         |  floor(delta * 1000000 + 0.5) / 1000000 AS delta,
+         |  ${r6("mean")} AS mean,
+         |  CASE WHEN n >= 2 THEN ${r6("sqrt(v)")} END AS sd,
+         |  ${r6("delta")} AS delta,
          |  CASE WHEN n >= 2 AND delta <> 0.0 THEN
          |    CAST(ceil($coef * v / (delta * delta)) AS BIGINT) END AS n_required
          |FROM f""".stripMargin
@@ -1823,7 +1765,7 @@ object StatsQueries {
           graft.functions.Portable.r6(col("precision")).as("precision"),
           graft.functions.Portable.r6(col("recall")).as("recall"),
           graft.functions.Portable.r6(col("f1")).as("f1")),
-      """WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 2000.0) AS x,
+      s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 2000.0) AS x,
         |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS p
         |  FROM documents WHERE n_chars IS NOT NULL),
         |b AS (SELECT lang, least(19, greatest(0, CAST(floor(x * 20) AS BIGINT))) AS bin,
@@ -1834,17 +1776,14 @@ object StatsQueries {
         |    CAST(sum(kk) OVER (PARTITION BY lang) AS BIGINT) AS tot
         |  FROM b WINDOW wd AS (PARTITION BY lang ORDER BY bin DESC
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT lang, floor(CAST(bin AS DOUBLE) / 20.0 * 1000000 + 0.5) / 1000000 AS cutoff,
+        |SELECT lang, ${r6("CAST(bin AS DOUBLE) / 20.0")} AS cutoff,
         |  nge AS n_ge, tp, nge - tp AS fp, tot - tp AS fn,
-        |  floor(CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE) * 1000000 + 0.5) / 1000000 AS "precision",
+        |  ${r6("CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE)")} AS "precision",
         |  CASE WHEN tot > 0 THEN
-        |    floor(CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS recall,
+        |    ${r6("CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE)")} END AS recall,
         |  CASE WHEN tot > 0 AND CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE)
         |      + CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE) > 0.0 THEN
-        |    floor(2.0 * (CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE))
-        |      * (CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE))
-        |      / ((CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE))
-        |        + (CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE))) * 1000000 + 0.5) / 1000000 END AS f1
+        |    ${r6("2.0 * (CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE)) * (CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE)) / ((CAST(tp AS DOUBLE) / CAST(nge AS DOUBLE)) + (CAST(tp AS DOUBLE) / CAST(tot AS DOUBLE)))")} END AS f1
         |FROM c""".stripMargin),
 
     // covariate balance (SMD table) between the event-id halves
@@ -1860,12 +1799,10 @@ object StatsQueries {
       {
       def cov(name: String, vExpr: String): String =
         s"""SELECT '$name' AS covariate, na AS n_a, nb AS n_b,
-           |  floor(mean_a * 1000000 + 0.5) / 1000000 AS mean_a,
-           |  floor(mean_b * 1000000 + 0.5) / 1000000 AS mean_b,
-           |  floor(CASE WHEN (va + vb) / 2.0 > 0.0 THEN (mean_b - mean_a) / sqrt((va + vb) / 2.0)
-           |        WHEN (va + vb) / 2.0 = 0.0 AND mean_b = mean_a THEN 0.0 END
-           |    * 1000000 + 0.5) / 1000000 AS smd,
-           |  floor(CASE WHEN va > 0.0 THEN vb / va END * 1000000 + 0.5) / 1000000 AS variance_ratio
+           |  ${r6("mean_a")} AS mean_a,
+           |  ${r6("mean_b")} AS mean_b,
+           |  ${r6("CASE WHEN (va + vb) / 2.0 > 0.0 THEN (mean_b - mean_a) / sqrt((va + vb) / 2.0) WHEN (va + vb) / 2.0 = 0.0 AND mean_b = mean_a THEN 0.0 END")} AS smd,
+           |  ${r6("CASE WHEN va > 0.0 THEN vb / va END")} AS variance_ratio
            |FROM (SELECT na, nb, mean_a, mean_b,
            |    CASE WHEN na >= 2 THEN (greatest(sa2 / CAST(na AS DOUBLE) - mean_a * mean_a, 0.0)
            |      * CAST(na AS DOUBLE)) / (CAST(na AS DOUBLE) - 1.0) END AS va,
@@ -1877,10 +1814,10 @@ object StatsQueries {
            |    FROM (SELECT
            |        CAST(count(CASE WHEN p AND NOT b THEN 1 END) AS BIGINT) AS na,
            |        CAST(count(CASE WHEN p AND b THEN 1 END) AS BIGINT) AS nb,
-           |        CAST(coalesce(sum(CASE WHEN p AND NOT b THEN CAST(floor(v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-           |        CAST(coalesce(sum(CASE WHEN p AND b THEN CAST(floor(v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
-           |        CAST(coalesce(sum(CASE WHEN p AND NOT b THEN CAST(floor(v * v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
-           |        CAST(coalesce(sum(CASE WHEN p AND b THEN CAST(floor(v * v * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
+           |        CAST(coalesce(sum(CASE WHEN p AND NOT b THEN CAST(${r6("v")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
+           |        CAST(coalesce(sum(CASE WHEN p AND b THEN CAST(${r6("v")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb,
+           |        CAST(coalesce(sum(CASE WHEN p AND NOT b THEN CAST(${r6("v * v")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa2,
+           |        CAST(coalesce(sum(CASE WHEN p AND b THEN CAST(${r6("v * v")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sb2
            |      FROM (SELECT $vExpr AS v,
            |          $vExpr IS NOT NULL AND NOT isnan($vExpr) AS p,
            |          coalesce(event_id % 2 = 0, FALSE) AS b FROM events) t0) t1) t2) t3""".stripMargin
@@ -1906,8 +1843,8 @@ object StatsQueries {
          |    (CAST(n_bad AS DOUBLE) + 0.5) / sum(CAST(n_bad AS DOUBLE) + 0.5) OVER (PARTITION BY feature) AS pb
          |  FROM cells),
          |t AS (SELECT feature, bin, n_good, n_bad,
-         |    floor(ln(pg / pb) * 1000000 + 0.5) / 1000000 AS woe,
-         |    floor((pg - pb) * ln(pg / pb) * 1000000 + 0.5) / 1000000 AS iv_term
+         |    ${r6("ln(pg / pb)")} AS woe,
+         |    ${r6("(pg - pb) * ln(pg / pb)")} AS iv_term
          |  FROM d)
          |SELECT feature, bin, n_good, n_bad, woe, iv_term,
          |  CAST(sum(CAST(iv_term AS DECIMAL(38,6))) OVER (PARTITION BY feature) AS DOUBLE) AS iv
@@ -1924,8 +1861,7 @@ object StatsQueries {
           "doc_id", "text", "bucket"),
         "doc_id", "label", "class", "posterior"),
       s"""WITH $nbScoredCtes,
-         |th AS (SELECT class, floor((CAST(sum(CAST(floor(posterior * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-         |    / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS t
+         |th AS (SELECT class, ${r6(s"${dsum(r6("posterior"))} / CAST(count(*) AS DOUBLE)")} AS t
          |  FROM scored WHERE label = class GROUP BY 1),
          |cand AS (SELECT s.id, s.label, s.class, s.posterior FROM scored s JOIN th ON s.class = th.class
          |  WHERE s.posterior >= th.t),
@@ -1935,7 +1871,7 @@ object StatsQueries {
          |lt AS (SELECT label, count(*) AS n_label FROM (SELECT DISTINCT id, label FROM scored) GROUP BY 1),
          |cj AS (SELECT label, confident_class, CAST(count(*) AS BIGINT) AS n FROM conf GROUP BY 1, 2)
          |SELECT label, confident_class, n,
-         |  floor(CAST(n AS DOUBLE) / CAST(n_label AS DOUBLE) * 1000000 + 0.5) / 1000000 AS frac_of_label,
+         |  ${r6("CAST(n AS DOUBLE) / CAST(n_label AS DOUBLE)")} AS frac_of_label,
          |  n_label, CAST(n_label - sum(n) OVER (PARTITION BY label) AS BIGINT) AS n_unconfident
          |FROM cj JOIN lt USING (label)""".stripMargin),
 
@@ -2050,11 +1986,6 @@ object StatsQueries {
         concat(lit("cmh:"), col("user_id").cast("string"))) % 2 === 1
       Hypothesis.cmh(ev(s, dir), Seq("event_type"), col("value") >= 10.0, arm)
     },
-      {
-      // the SAME A&S 26.2.16 tail as Hypothesis.pFromZ (the q_bh form)
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH e AS (SELECT event_type,
          |    ${h32("concat('cmh:', CAST(user_id AS VARCHAR))")} % 2 = 1 AS a,
          |    value >= 10.0 AS hit FROM events),
@@ -2077,10 +2008,9 @@ object StatsQueries {
          |c2 AS (SELECT *, CASE WHEN v > 0 THEN ${r6("dev * dev / v")} END AS chi2 FROM s),
          |pz AS (SELECT *, sqrt(chi2) AS az, 1.0 / (1.0 + 0.33267 * sqrt(chi2)) AS tt FROM c2)
          |SELECT k_strata, k_dropped, n, chi2,
-         |  CASE WHEN chi2 IS NOT NULL THEN ${r6(pSql)} END AS p_value,
+         |  CASE WHEN chi2 IS NOT NULL THEN ${r6(pFromZSql)} END AS p_value,
          |  CASE WHEN rd > 0 THEN ${r6("rn / rd")} END AS or_mh
-         |FROM pz""".stripMargin
-    }),
+         |FROM pz""".stripMargin),
 
     // decision-stump 1R screen: best Gini split per logitDocs feature
     QueryDef("q_stump", (s, dir) =>
@@ -2353,10 +2283,6 @@ object StatsQueries {
         docs(s, dir).withColumn("score",
           least(lit(1.0), col("n_chars").cast("double") / 1000.0)),
         Seq("lang"), "score", col("text").contains(" the "), nBins = 10),
-      {
-      val pz = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH v AS (SELECT lang, least(1.0, CAST(n_chars AS DOUBLE) / 1000.0) AS x,
          |    CASE WHEN contains(text, ' the ') THEN 1 ELSE 0 END AS y FROM documents),
          |g AS (SELECT lang, least(9, greatest(0, CAST(floor(x * 10) AS BIGINT))) AS bin,
@@ -2376,10 +2302,9 @@ object StatsQueries {
          |d AS (SELECT *, abs(z) AS az, 1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM c)
          |SELECT lang, n, b_tested, b_skipped, chi2, df,
          |  CASE WHEN chi2 IS NOT NULL AND df >= 1 THEN
-         |    CASE WHEN z >= 0 THEN ${r6(s"$pz / 2.0")} ELSE ${r6(s"1.0 - $pz / 2.0")} END
+         |    CASE WHEN z >= 0 THEN ${r6(s"$pFromZSql / 2.0")} ELSE ${r6(s"1.0 - $pFromZSql / 2.0")} END
          |  END AS p_value
-         |FROM d""".stripMargin
-    }),
+         |FROM d""".stripMargin),
 
     // IPW weight diagnostics (Kish ESS + max-weight share) on the
     // q_ipw propensity weights — trust-the-estimate gate
@@ -2643,7 +2568,7 @@ object StatsQueries {
       Evaluation.fleissKappa(votes, "doc_id", "vote")
     },
       s"""WITH lw AS (SELECT doc_id, n_chars,
-         |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nw
+         |    len(${wordTokensSql("text")}) AS nw
          |  FROM documents),
          |votes AS (
          |  SELECT doc_id, CASE WHEN n_chars >= 250 THEN 'long' ELSE 'short' END AS vote FROM lw
@@ -2865,7 +2790,7 @@ object StatsQueries {
            |  END AS corr FROM m""".stripMargin
       }
       s"""WITH b0 AS (SELECT CAST(n_chars AS DOUBLE) AS a,
-         |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS DOUBLE) AS b,
+         |    CAST(len(${wordTokensSql("text")}) AS DOUBLE) AS b,
          |    CAST(len(string_split(text, chr(10))) AS DOUBLE) AS c
          |  FROM documents),
          |bb AS (SELECT * FROM b0 WHERE a IS NOT NULL AND b IS NOT NULL AND c IS NOT NULL),
@@ -2934,10 +2859,6 @@ object StatsQueries {
     QueryDef("q_mcnemar", (s, dir) =>
       Hypothesis.mcnemar(docs(s, dir), Seq("lang"),
         col("text").contains("join"), col("text").contains("merge")),
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
          |    CAST(count(CASE WHEN contains(text, 'join') AND NOT contains(text, 'merge') THEN 1 END) AS BIGINT) AS b,
          |    CAST(count(CASE WHEN NOT contains(text, 'join') AND contains(text, 'merge') THEN 1 END) AS BIGINT) AS c
@@ -2948,9 +2869,8 @@ object StatsQueries {
          |z AS (SELECT lang, n, b, c, chi2, sqrt(chi2) AS az,
          |    1.0 / (1.0 + 0.33267 * sqrt(chi2)) AS tt FROM x)
          |SELECT lang, n, b, c, ${r6("chi2")} AS chi2,
-         |  CASE WHEN chi2 IS NOT NULL THEN ${r6(pSql)} END AS p_value
-         |FROM z""".stripMargin
-    }),
+         |  CASE WHEN chi2 IS NOT NULL THEN ${r6(pFromZSql)} END AS p_value
+         |FROM z""".stripMargin),
 
     // Holm step-down over the same per-slice tests frame as q_bh —
     // FWER where q_bh is FDR
@@ -2967,10 +2887,6 @@ object StatsQueries {
           col("rank"), graft.functions.Portable.r6(col("p_adj")).as("p_adj"),
           col("reject"))
     },
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH v AS (SELECT lang, source,
          |    CASE WHEN ${h32("concat('bh|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a,
          |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS hit
@@ -2992,8 +2908,8 @@ object StatsQueries {
          |pz AS (SELECT lang, source, z, abs(z) AS az,
          |        1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0),
          |pv AS (SELECT lang, source,
-         |        floor(z * 1000000 + 0.5) / 1000000 AS z,
-         |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
+         |        ${r6("z")} AS z,
+         |        ${r6(pFromZSql)} AS p
          |      FROM pz WHERE z IS NOT NULL),
          |rk AS (SELECT lang, source, z, p,
          |        CAST(count(*) OVER () AS BIGINT) AS m,
@@ -3009,10 +2925,9 @@ object StatsQueries {
          |        CAST(NULL AS DOUBLE) AS p_adj, CAST(NULL AS BOOLEAN) AS reject
          |      FROM z0 WHERE z IS NULL)
          |SELECT lang, source, z, p, m, "rank",
-         |  floor(a_raw * 1000000 + 0.5) / 1000000 AS p_adj, a_raw <= 0.1 AS reject
+         |  ${r6("a_raw")} AS p_adj, a_raw <= 0.1 AS reject
          |FROM adj
-         |UNION ALL SELECT * FROM nullz""".stripMargin
-    }),
+         |UNION ALL SELECT * FROM nullz""".stripMargin),
 
     // randomization test: 19 deterministic md5 relabelings of the
     // en-vs-rest mean n_chars difference
@@ -3025,13 +2940,13 @@ object StatsQueries {
          |obs AS (SELECT CAST(count(CASE WHEN a THEN 1 END) AS BIGINT) AS n_a,
          |    CAST(count(CASE WHEN NOT a THEN 1 END) AS BIGINT) AS n_b,
          |    CAST(coalesce(sum(CASE WHEN a THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS sa,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS st
+         |    ${dsum0(r6("v"))} AS st
          |  FROM b),
          |reps AS (SELECT i,
          |    CAST(count(CASE WHEN f THEN 1 END) AS BIGINT) AS ka,
          |    CAST(count(CASE WHEN NOT f THEN 1 END) AS BIGINT) AS kb,
          |    CAST(coalesce(sum(CASE WHEN f THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS ksa,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS ks
+         |    ${dsum0(r6("v"))} AS ks
          |  FROM (SELECT v, i.i AS i, ${h32("concat('rt:', CAST(i.i AS VARCHAR), ':', id)")} % 2 = 0 AS f
          |        FROM b, range(1, 20) i(i))
          |  GROUP BY 1),
@@ -3061,9 +2976,9 @@ object StatsQueries {
          |j AS (SELECT cells.feature, cells.x, cells.y, nxy, nx, ny, n, CAST(n AS DOUBLE) AS nd
          |  FROM cells JOIN xm USING (feature, x) JOIN ym USING (feature, y) JOIN tot USING (feature)),
          |agg AS (SELECT feature, n,
-         |    CAST(coalesce(sum(CAST(${r6("CAST(nx AS DOUBLE) / nd * ln(nd / CAST(nx AS DOUBLE)) * CAST(nxy AS DOUBLE) / CAST(nx AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS hx,
-         |    CAST(coalesce(sum(CAST(${r6("CAST(ny AS DOUBLE) / nd * ln(nd / CAST(ny AS DOUBLE)) * CAST(nxy AS DOUBLE) / CAST(ny AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS hy,
-         |    CAST(coalesce(sum(CAST(${r6("CAST(nxy AS DOUBLE) / nd * ln(nd * CAST(nxy AS DOUBLE) / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS mi
+         |    ${dsum0(r6("CAST(nx AS DOUBLE) / nd * ln(nd / CAST(nx AS DOUBLE)) * CAST(nxy AS DOUBLE) / CAST(nx AS DOUBLE)"))} AS hx,
+         |    ${dsum0(r6("CAST(ny AS DOUBLE) / nd * ln(nd / CAST(ny AS DOUBLE)) * CAST(nxy AS DOUBLE) / CAST(ny AS DOUBLE)"))} AS hy,
+         |    ${dsum0(r6("CAST(nxy AS DOUBLE) / nd * ln(nd * CAST(nxy AS DOUBLE) / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE)))"))} AS mi
          |  FROM j GROUP BY 1, 2)
          |SELECT feature, n, ${r6("hx")} AS h_x, ${r6("hy")} AS h_y, ${r6("mi")} AS mi,
          |  CASE WHEN least(hx, hy) > 0 THEN ${r6("mi / least(hx, hy)")} END AS nmi
@@ -3079,7 +2994,7 @@ object StatsQueries {
       Stats.kendallW(cells, "event_type", "bucket", "total")
     },
       s"""WITH cells AS (SELECT event_type AS r, user_id % 10 AS it,
-         |    ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS v
+         |    ${r6(dsum0("value"))} AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
          |  GROUP BY 1, 2),
          |rk AS (SELECT r, it, v,
@@ -3088,11 +3003,11 @@ object StatsQueries {
          |    CAST(count(*) OVER (PARTITION BY r, v) AS BIGINT) AS t
          |  FROM cells),
          |shape AS (SELECT CAST(count(DISTINCT r) AS BIGINT) AS m, CAST(count(DISTINCT it) AS BIGINT) AS ni FROM rk),
-         |ties AS (SELECT CAST(coalesce(sum(CAST(CAST(t * t - 1 AS DOUBLE) AS DECIMAL(38,6))), 0) AS DOUBLE) AS tsum FROM rk),
-         |isum AS (SELECT it, CAST(coalesce(sum(CAST(ark AS DECIMAL(38,6))), 0) AS DOUBLE) AS ri FROM rk GROUP BY 1),
+         |ties AS (SELECT ${dsum0("CAST(t * t - 1 AS DOUBLE)")} AS tsum FROM rk),
+         |isum AS (SELECT it, ${dsum0("ark")} AS ri FROM rk GROUP BY 1),
          |dev AS (SELECT it, ri, (SELECT m FROM shape) AS m, (SELECT ni FROM shape) AS ni, (SELECT tsum FROM ties) AS tsum FROM isum),
          |sagg AS (SELECT m, ni, tsum,
-         |    CAST(coalesce(sum(CAST(${r6("(ri - CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) + 1.0) / 2.0) * (ri - CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) + 1.0) / 2.0)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s
+         |    ${dsum0(r6("(ri - CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) + 1.0) / 2.0) * (ri - CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) + 1.0) / 2.0)"))} AS s
          |  FROM dev GROUP BY 1, 2, 3)
          |SELECT ni AS n_items, m AS n_raters, ${r6("s")} AS s,
          |  CASE WHEN CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * (CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) * CAST(ni AS DOUBLE) - CAST(ni AS DOUBLE)) - CAST(m AS DOUBLE) * tsum > 0
@@ -3250,7 +3165,7 @@ object StatsQueries {
          |          (CAST(fa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(fb AS DOUBLE) / CAST(nb AS DOUBLE)) AS term
          |      FROM w WHERE na > 0 AND nb > 0),
          |m AS (SELECT source, first(na) AS n_a, first(nb) AS n_b,
-         |        CAST(coalesce(sum(CAST(${r6("term")} AS DECIMAL(38,6))), 0) AS DOUBLE) *
+         |        ${dsum0(r6("term"))} *
          |          CAST(first(na) AS DOUBLE) * CAST(first(nb) AS DOUBLE) /
          |          (CAST(first(na) + first(nb) AS DOUBLE) * CAST(first(na) + first(nb) AS DOUBLE)) AS t0
          |      FROM t GROUP BY 1)
@@ -3264,7 +3179,7 @@ object StatsQueries {
           size(TextFunctions.wordTokens(col("text"))).cast("double")),
         Seq("lang"), "n_chars", "n_words", Seq(0.5, 0.9, 0.99)),
       s"""WITH b AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v,
-         |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS DOUBLE) AS w
+         |    CAST(len(${wordTokensSql("text")}) AS DOUBLE) AS w
          |  FROM documents WHERE n_chars IS NOT NULL),
          |pv AS (SELECT lang, v, sum(CAST(w AS DECIMAL(38,6))) AS wd FROM b GROUP BY 1, 2),
          |cum AS (SELECT lang, v,
@@ -3297,9 +3212,9 @@ object StatsQueries {
          |nc AS (SELECT g, c, CAST(sum(o) AS BIGINT) AS nc FROM cells GROUP BY 1, 2),
          |ds AS (SELECT g, CAST(count(DISTINCT u) AS BIGINT) AS n_units,
          |    CAST(sum(o) AS BIGINT) AS n_pairable,
-         |    CAST(coalesce(sum(CAST(${r6("CAST(o AS DOUBLE) * CAST(m - o AS DOUBLE) / (CAST(m AS DOUBLE) - 1.0)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS dnum
+         |    ${dsum0(r6("CAST(o AS DOUBLE) * CAST(m - o AS DOUBLE) / (CAST(m AS DOUBLE) - 1.0)"))} AS dnum
          |  FROM cells GROUP BY 1),
-         |de AS (SELECT nc.g, CAST(coalesce(sum(CAST(CAST(nc.nc * (ds.n_pairable - nc.nc) AS DOUBLE) AS DECIMAL(38,6))), 0) AS DOUBLE) AS enum
+         |de AS (SELECT nc.g, ${dsum0("CAST(nc.nc * (ds.n_pairable - nc.nc) AS DOUBLE)")} AS enum
          |  FROM nc JOIN ds USING (g) GROUP BY 1),
          |f AS (SELECT ds.g AS event_type, n_units, n_pairable,
          |    CASE WHEN n_pairable > 0 THEN dnum / CAST(n_pairable AS DOUBLE) END AS d_o0,
@@ -3317,8 +3232,8 @@ object StatsQueries {
     },
       s"""WITH k AS (SELECT user_id, event_type, CAST(count(*) AS DOUBLE) AS k FROM events GROUP BY 1, 2),
          |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CAST(${r6("k")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s,
-         |    CAST(coalesce(sum(CAST(${r6("k * k")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
+         |    ${dsum0(r6("k"))} AS s,
+         |    ${dsum0(r6("k * k"))} AS s2
          |  FROM k GROUP BY 1),
          |m AS (SELECT event_type, n, s / CAST(n AS DOUBLE) AS mn,
          |    greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0) AS vr
@@ -3407,10 +3322,6 @@ object StatsQueries {
           col("m"), col("rank"),
           graft.functions.Portable.r6(col("q")).as("q"), col("reject"))
     },
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH v AS (SELECT source,
          |    CASE WHEN ${h32("concat('srm|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS b
          |  FROM documents),
@@ -3424,10 +3335,10 @@ object StatsQueries {
          |          (CAST(n_b AS DOUBLE) - nd * 0.5) * (CAST(n_b AS DOUBLE) - nd * 0.5) / (nd * 0.5) +
          |          (CAST(n_a AS DOUBLE) - nd * 0.5) * (CAST(n_a AS DOUBLE) - nd * 0.5) / (nd * 0.5)
          |        END AS chi2 FROM c),
-         |pz AS (SELECT source, n_a, n_b, floor(chi2 * 1000000 + 0.5) / 1000000 AS chi2,
+         |pz AS (SELECT source, n_a, n_b, ${r6("chi2")} AS chi2,
          |        sqrt(chi2) AS az, 1.0 / (1.0 + 0.33267 * sqrt(chi2)) AS tt FROM x),
          |pv AS (SELECT source, n_a, n_b, chi2,
-         |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
+         |        ${r6(pFromZSql)} AS p
          |      FROM pz WHERE chi2 IS NOT NULL),
          |rk AS (SELECT source, n_a, n_b, chi2, p,
          |        CAST(count(*) OVER () AS BIGINT) AS m,
@@ -3439,9 +3350,8 @@ object StatsQueries {
          |                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) AS q_raw
          |      FROM rk)
          |SELECT source, n_a, n_b, chi2, p, m, "rank",
-         |  floor(q_raw * 1000000 + 0.5) / 1000000 AS q, q_raw <= 0.05 AS reject
-         |FROM adj""".stripMargin
-    }),
+         |  ${r6("q_raw")} AS q, q_raw <= 0.05 AS reject
+         |FROM adj""".stripMargin),
 
     // Gumbel fit over daily value maxima per event type + fitted p99
     QueryDef("q_gumbel", (s, dir) =>
@@ -3452,8 +3362,8 @@ object StatsQueries {
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))
          |  GROUP BY 1, 2),
          |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_blocks,
-         |    CAST(coalesce(sum(CAST(${r6("mx")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s,
-         |    CAST(coalesce(sum(CAST(${r6("mx * mx")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
+         |    ${dsum0(r6("mx"))} AS s,
+         |    ${dsum0(r6("mx * mx"))} AS s2
          |  FROM b GROUP BY 1),
          |m AS (SELECT event_type, n_blocks, s / CAST(n_blocks AS DOUBLE) AS mn,
          |    sqrt(greatest(s2 / CAST(n_blocks AS DOUBLE) - (s / CAST(n_blocks AS DOUBLE)) * (s / CAST(n_blocks AS DOUBLE)), 0.0)) AS sd
@@ -3474,9 +3384,9 @@ object StatsQueries {
          |  WHERE n_chars IS NOT NULL AND NOT isnan(CAST(n_chars AS DOUBLE))),
          |rk AS (SELECT lang, v, CAST(row_number() OVER (PARTITION BY lang ORDER BY v) AS BIGINT) AS r FROM b),
          |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS b0s,
-         |    CAST(coalesce(sum(CAST(${r6("CAST(r - 1 AS DOUBLE) * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS b1s,
-         |    CAST(coalesce(sum(CAST(${r6("CAST((r - 1) * (r - 2) AS DOUBLE) * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS b2s
+         |    ${dsum0(r6("v"))} AS b0s,
+         |    ${dsum0(r6("CAST(r - 1 AS DOUBLE) * v"))} AS b1s,
+         |    ${dsum0(r6("CAST((r - 1) * (r - 2) AS DOUBLE) * v"))} AS b2s
          |  FROM rk GROUP BY 1),
          |m AS (SELECT lang, n, b0s / CAST(n AS DOUBLE) AS b0,
          |    CASE WHEN n >= 2 THEN b1s / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) END AS b1,
@@ -3500,8 +3410,8 @@ object StatsQueries {
          |    CAST(coalesce(sum(CASE WHEN v > 0 THEN CAST(${r6("v")} AS DECIMAL(38,6)) ELSE CAST(0 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS s
          |  FROM base),
          |rows0 AS (SELECT g, CAST(count(*) AS BIGINT) AS ng,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sg,
-         |    CAST(coalesce(sum(CAST(${r6("v / (tot.s / CAST(tot.n AS DOUBLE)) * ln(v / (tot.s / CAST(tot.n AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS tsum,
+         |    ${dsum0(r6("v"))} AS sg,
+         |    ${dsum0(r6("v / (tot.s / CAST(tot.n AS DOUBLE)) * ln(v / (tot.s / CAST(tot.n AS DOUBLE)))"))} AS tsum,
          |    first(tot.n) AS n, first(tot.nd) AS nd, first(tot.s) AS s
          |  FROM base, tot WHERE v > 0 GROUP BY 1),
          |terms AS (SELECT n, nd,
@@ -3509,9 +3419,9 @@ object StatsQueries {
          |    (sg / s) * ln((sg / CAST(ng AS DOUBLE)) / (s / CAST(n AS DOUBLE))) AS btw
          |  FROM rows0)
          |SELECT first(n) AS n, first(nd) AS n_dropped, CAST(count(*) AS BIGINT) AS k_groups,
-         |  ${r6("CAST(coalesce(sum(CAST(" + r6("tg") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_total,
-         |  ${r6("CAST(coalesce(sum(CAST(" + r6("btw") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_between,
-         |  ${r6("CAST(coalesce(sum(CAST(" + r6("tg") + " AS DECIMAL(38,6))), 0) AS DOUBLE) - CAST(coalesce(sum(CAST(" + r6("btw") + " AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS theil_within
+         |  ${r6(dsum0(r6("tg")))} AS theil_total,
+         |  ${r6(dsum0(r6("btw")))} AS theil_between,
+         |  ${r6(s"${dsum0(r6("tg"))} - ${dsum0(r6("btw"))}")} AS theil_within
          |FROM terms GROUP BY n, nd""".stripMargin),
 
     // Cochran-Armitage: does the " the " rate climb with the doc-length
@@ -3521,10 +3431,6 @@ object StatsQueries {
         docs(s, dir).withColumn("dose",
           least(lit(9L), floor(col("n_chars") / 150L)).cast("double")),
         Seq("lang"), "dose", col("text").contains(" the ")),
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH d AS (SELECT lang, CAST(least(9, n_chars // 150) AS DOUBLE) AS s,
          |    contains(text, ' the ') AS hit
          |  FROM documents WHERE n_chars IS NOT NULL),
@@ -3532,9 +3438,9 @@ object StatsQueries {
          |  FROM d GROUP BY 1, 2),
          |g AS (SELECT lang, CAST(sum(n) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS k_levels,
          |    CAST(sum(k) AS BIGINT) AS ktot,
-         |    CAST(coalesce(sum(CAST(${r6("s * CAST(n AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sn,
-         |    CAST(coalesce(sum(CAST(${r6("s * s * CAST(n AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2n,
-         |    CAST(coalesce(sum(CAST(${r6("s * CAST(k AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sk
+         |    ${dsum0(r6("s * CAST(n AS DOUBLE)"))} AS sn,
+         |    ${dsum0(r6("s * s * CAST(n AS DOUBLE)"))} AS s2n,
+         |    ${dsum0(r6("s * CAST(k AS DOUBLE)"))} AS sk
          |  FROM lv GROUP BY 1),
          |x AS (SELECT lang, n, k_levels,
          |    CAST(ktot AS DOUBLE) / CAST(n AS DOUBLE) AS pbar,
@@ -3547,9 +3453,8 @@ object StatsQueries {
          |pz AS (SELECT lang, n, k_levels, z, abs(z) AS az,
          |    1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0)
          |SELECT lang, n, k_levels, ${r6("z")} AS z,
-         |  CASE WHEN z IS NOT NULL THEN ${r6(pSql)} END AS p_value
-         |FROM pz""".stripMargin
-    }),
+         |  CASE WHEN z IS NOT NULL THEN ${r6(pFromZSql)} END AS p_value
+         |FROM pz""".stripMargin),
 
     // Storey pi0 + q-values over the q_bh tests frame
     QueryDef("q_storey", { (s, dir) =>
@@ -3565,10 +3470,6 @@ object StatsQueries {
           col("rank"), col("pi0"),
           graft.functions.Portable.r6(col("q_storey")).as("q_storey"), col("reject"))
     },
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH v AS (SELECT lang, source,
          |    CASE WHEN ${h32("concat('bh|', CAST(doc_id AS VARCHAR))")} % 2 = 0 THEN 1 ELSE 0 END AS a,
          |    CASE WHEN n_chars > 300 THEN 1 ELSE 0 END AS hit
@@ -3590,8 +3491,8 @@ object StatsQueries {
          |pz AS (SELECT lang, source, z, abs(z) AS az,
          |        1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM z0),
          |pv AS (SELECT lang, source,
-         |        floor(z * 1000000 + 0.5) / 1000000 AS z,
-         |        floor($pSql * 1000000 + 0.5) / 1000000 AS p
+         |        ${r6("z")} AS z,
+         |        ${r6(pFromZSql)} AS p
          |      FROM pz WHERE z IS NOT NULL),
          |rk AS (SELECT lang, source, z, p,
          |        CAST(count(*) OVER () AS BIGINT) AS m,
@@ -3610,11 +3511,10 @@ object StatsQueries {
          |        CAST(NULL AS BOOLEAN) AS reject
          |      FROM z0 WHERE z IS NULL)
          |SELECT lang, source, z, p, m, "rank",
-         |  floor(pi0_raw * 1000000 + 0.5) / 1000000 AS pi0,
-         |  floor(q_raw * 1000000 + 0.5) / 1000000 AS q_storey, q_raw <= 0.1 AS reject
+         |  ${r6("pi0_raw")} AS pi0,
+         |  ${r6("q_raw")} AS q_storey, q_raw <= 0.1 AS reject
          |FROM adj
-         |UNION ALL SELECT * FROM nullz""".stripMargin
-    }),
+         |UNION ALL SELECT * FROM nullz""".stripMargin),
 
     // does length still track word count once line count is held fixed
     QueryDef("q_partial_corr", { (s, dir) =>
@@ -3625,15 +3525,15 @@ object StatsQueries {
       Stats.partialCorrelation(feats, "n_chars", "n_words", "n_lines")
     },
       s"""WITH f AS (SELECT CAST(n_chars AS DOUBLE) AS x,
-         |    CAST(len(list_filter(string_split_regex(lower(text),'[^a-z]+'), t -> t <> '')) AS DOUBLE) AS y,
+         |    CAST(len(${wordTokensSql("text")}) AS DOUBLE) AS y,
          |    CAST(len(string_split(text, chr(10))) AS DOUBLE) AS z
          |  FROM documents),
          |g AS (SELECT * FROM f WHERE x IS NOT NULL AND NOT isnan(x)
          |  AND y IS NOT NULL AND NOT isnan(y) AND z IS NOT NULL AND NOT isnan(z)),
          |m AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |    ${ds("x")} AS sx, ${ds("y")} AS sy, ${ds("z")} AS sz,
-         |    ${ds("x * x")} AS qx, ${ds("y * y")} AS qy, ${ds("z * z")} AS qz,
-         |    ${ds("x * y")} AS pxy, ${ds("x * z")} AS pxz, ${ds("y * z")} AS pyz
+         |    ${dsum0(r6("x"))} AS sx, ${dsum0(r6("y"))} AS sy, ${dsum0(r6("z"))} AS sz,
+         |    ${dsum0(r6("x * x"))} AS qx, ${dsum0(r6("y * y"))} AS qy, ${dsum0(r6("z * z"))} AS qz,
+         |    ${dsum0(r6("x * y"))} AS pxy, ${dsum0(r6("x * z"))} AS pxz, ${dsum0(r6("y * z"))} AS pyz
          |  FROM g),
          |r AS (SELECT n,
          |    CASE WHEN n > 1 AND CAST(n AS DOUBLE) * qx - sx * sx > 0 AND CAST(n AS DOUBLE) * qy - sy * sy > 0
@@ -3651,10 +3551,6 @@ object StatsQueries {
     // Wald-Wolfowitz runs test: do per-type value sequences streak
     QueryDef("q_runs", (s, dir) =>
       Hypothesis.runsTest(ev(s, dir), Seq("event_type"), "ts", "event_id", "value"),
-      {
-      val pSql = "least(1.0, 2.0 * exp(-az * az / 2.0) / " +
-        s"${math.sqrt(2.0 * math.Pi)} * " +
-        "(0.4361836 * tt - 0.1201676 * tt * tt + 0.9372980 * tt * tt * tt))"
       s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(CAST(value AS DOUBLE))),
          |pv AS (SELECT g, v, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY 1, 2),
@@ -3688,9 +3584,8 @@ object StatsQueries {
          |    1.0 / (1.0 + 0.33267 * abs(z)) AS tt FROM zc)
          |SELECT g AS event_type, n, n_above, n_below, n_ties AS n_ties_dropped, runs,
          |  ${r6("z")} AS z,
-         |  CASE WHEN z IS NOT NULL THEN ${r6(pSql)} END AS p_value
-         |FROM pz""".stripMargin
-    }),
+         |  CASE WHEN z IS NOT NULL THEN ${r6(pFromZSql)} END AS p_value
+         |FROM pz""".stripMargin),
 
     // cumulative gains/lift of the length score against the " the "
     // label, per lang
@@ -3731,16 +3626,16 @@ object StatsQueries {
       Hypothesis.friedman(cells, Seq("g"), "bucket", "event_type", "total")
     },
       s"""WITH cells AS (SELECT event_type AS tr, user_id % 10 AS blk,
-         |    ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} AS v
+         |    ${r6(dsum0("value"))} AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
          |  GROUP BY 1, 2),
          |rk AS (SELECT tr, blk, v,
          |    CAST(rank() OVER (PARTITION BY blk ORDER BY v) AS DOUBLE) +
          |      (CAST(count(*) OVER (PARTITION BY blk, v) AS DOUBLE) - 1.0) / 2.0 AS ark
          |  FROM cells),
-         |rj AS (SELECT tr, CAST(coalesce(sum(CAST(ark AS DECIMAL(38,6))), 0) AS DOUBLE) AS rjs FROM rk GROUP BY 1),
+         |rj AS (SELECT tr, ${dsum0("ark")} AS rjs FROM rk GROUP BY 1),
          |shape AS (SELECT CAST(count(DISTINCT blk) AS BIGINT) AS nb, CAST(count(DISTINCT tr) AS BIGINT) AS k FROM cells),
-         |agg AS (SELECT ${ds("rjs * rjs")} AS sr2 FROM rj)
+         |agg AS (SELECT ${dsum0(r6("rjs * rjs"))} AS sr2 FROM rj)
          |SELECT 'all' AS g, nb AS n_blocks, k AS k_treatments,
          |  CASE WHEN k >= 2 AND nb >= 2 THEN ${r6("12.0 / (CAST(nb AS DOUBLE) * CAST(k AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)) * sr2 - 3.0 * CAST(nb AS DOUBLE) * (CAST(k AS DOUBLE) + 1.0)")} END AS q,
          |  k - 1 AS df
@@ -3758,13 +3653,13 @@ object StatsQueries {
       Hypothesis.cochranQ(cells, Seq("g"), "bucket", "event_type", col("mv") > 50.0)
     },
       s"""WITH cells AS (SELECT event_type AS tr, user_id % 10 AS s,
-         |    CASE WHEN ${r6("CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE)")} / CAST(count(*) AS DOUBLE) > 50.0 THEN 1 ELSE 0 END AS h
+         |    CASE WHEN ${r6(dsum0("value"))} / CAST(count(*) AS DOUBLE) > 50.0 THEN 1 ELSE 0 END AS h
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value)
          |  GROUP BY 1, 2),
          |cj AS (SELECT tr, CAST(sum(h) AS BIGINT) AS cj FROM cells GROUP BY 1),
          |ri AS (SELECT s, CAST(sum(h) AS BIGINT) AS ri FROM cells GROUP BY 1),
-         |cs AS (SELECT CAST(sum(cj) AS BIGINT) AS t, ${ds("CAST(cj AS DOUBLE) * CAST(cj AS DOUBLE)")} AS sc2 FROM cj),
-         |rr AS (SELECT ${ds("CAST(ri AS DOUBLE) * CAST(ri AS DOUBLE)")} AS sr2 FROM ri),
+         |cs AS (SELECT CAST(sum(cj) AS BIGINT) AS t, ${dsum0(r6("CAST(cj AS DOUBLE) * CAST(cj AS DOUBLE)"))} AS sc2 FROM cj),
+         |rr AS (SELECT ${dsum0(r6("CAST(ri AS DOUBLE) * CAST(ri AS DOUBLE)"))} AS sr2 FROM ri),
          |shape AS (SELECT CAST(count(DISTINCT s) AS BIGINT) AS ns, CAST(count(DISTINCT tr) AS BIGINT) AS k FROM cells)
          |SELECT 'all' AS g, ns AS n_subjects, k AS k_treatments,
          |  CASE WHEN CAST(k AS DOUBLE) * CAST(t AS DOUBLE) - sr2 > 0

@@ -18,7 +18,7 @@ object TemporalQueries {
     * phase, seasonal).
     */
   private val decomposeCtesSql: String =
-    """b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS DOUBLE) AS v
+    s"""b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS DOUBLE) AS v
       |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
       |t AS (SELECT event_type, bk, v,
       |        (epoch_us(bk) // 3600000000) % 24 AS phase,
@@ -35,12 +35,12 @@ object TemporalQueries {
       |de AS (SELECT *, v - trend AS detr FROM dd),
       |pm AS (SELECT event_type, phase,
       |        CASE WHEN count(detr) > 0 THEN
-      |          CAST(sum(CAST(floor(detr * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+      |          ${dsum(r6("detr"))}
       |            / CAST(count(detr) AS DOUBLE) END AS sp
       |      FROM de GROUP BY 1, 2),
       |ctr AS (SELECT event_type,
       |        CASE WHEN count(sp) > 0 THEN
-      |          CAST(sum(CAST(floor(sp * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+      |          ${dsum(r6("sp"))}
       |            / CAST(count(sp) AS DOUBLE) END AS c
       |      FROM pm GROUP BY 1),
       |se AS (SELECT pm.event_type, phase, sp - c AS seasonal FROM pm JOIN ctr USING (event_type))""".stripMargin
@@ -70,9 +70,9 @@ object TemporalQueries {
          |        + (CAST(1 AS DOUBLE) - CAST(0.3 AS DOUBLE))*acc[2]]) AS st
          |  FROM s)
          |SELECT user_id, n,
-         |  ${graft.functions.Portable.r6Sql("st[1]")} AS level,
-         |  ${graft.functions.Portable.r6Sql("st[2]")} AS trend,
-         |  ${graft.functions.Portable.r6Sql("st[1] + st[2]")} AS forecast
+         |  ${r6("st[1]")} AS level,
+         |  ${r6("st[2]")} AS trend,
+         |  ${r6("st[1] + st[2]")} AS forecast
          |FROM f""".stripMargin),
 
     // hopping windows: 10-minute windows sliding every 5 minutes
@@ -97,7 +97,7 @@ object TemporalQueries {
           col("cusum_at")),
       s"""WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs,
          |    count(*) AS n,
-         |    CAST(coalesce(sum(CAST(value AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS mn
+         |    ${dsum0("value")} / CAST(count(*) AS DOUBLE) AS mn
          |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
          |  GROUP BY 1),
          |f AS (SELECT user_id, CAST(n AS BIGINT) AS n, mn,
@@ -112,8 +112,8 @@ object TemporalQueries {
          |           THEN acc[4] + CAST(1 AS DOUBLE) ELSE acc[3] END,
          |      acc[4] + CAST(1 AS DOUBLE)]) AS st
          |  FROM s)
-         |SELECT user_id, n, ${graft.functions.Portable.r6Sql("mn")} AS mean,
-         |  ${graft.functions.Portable.r6Sql("st[2]")} AS cusum_max,
+         |SELECT user_id, n, ${r6("mn")} AS mean,
+         |  ${r6("st[2]")} AS cusum_max,
          |  CAST(st[3] AS BIGINT) AS cusum_at
          |FROM f""".stripMargin),
 
@@ -138,15 +138,15 @@ object TemporalQueries {
       s"""WITH e AS (SELECT user_id, epoch_us(ts) AS us, value, event_id FROM events
          |  WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)),
          |t AS (SELECT user_id, us,
-         |    CAST(floor((value * (CAST(lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) - us AS DOUBLE) / 1e6)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6)) AS term
+         |    CAST(${r6("value * (CAST(lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id) - us AS DOUBLE) / 1e6)")} AS DECIMAL(38,6)) AS term
          |  FROM e),
          |g AS (SELECT user_id, count(*) AS n,
          |    CAST(max(us) - min(us) AS DOUBLE) / 1e6 AS span_raw,
          |    CAST(coalesce(sum(term), 0) AS DOUBLE) AS num
          |  FROM t GROUP BY 1)
          |SELECT user_id, n,
-         |  ${graft.functions.Portable.r6Sql("span_raw")} AS span_s,
-         |  CASE WHEN span_raw > 0 THEN ${graft.functions.Portable.r6Sql("num / span_raw")} END AS twa
+         |  ${r6("span_raw")} AS span_s,
+         |  CASE WHEN span_raw > 0 THEN ${r6("num / span_raw")} END AS twa
          |FROM g""".stripMargin),
 
     // gaps-and-islands activity coverage (5-minute activity intervals)
@@ -312,13 +312,13 @@ object TemporalQueries {
       Transitions.transitionCounts(ev(s, dir), "user_id", "ts", "event_type", "event_id")
         .select(col("prev"), col("next"), col("n"),
           graft.functions.Portable.r6(col("p")).as("p")),
-      """WITH s AS (SELECT event_type AS prev,
+      s"""WITH s AS (SELECT event_type AS prev,
         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next
         |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
         |c AS (SELECT prev, next, count(*) AS n FROM s WHERE next IS NOT NULL GROUP BY 1, 2),
         |t AS (SELECT prev, CAST(sum(n) AS BIGINT) AS nt FROM c GROUP BY 1)
         |SELECT prev, next, n,
-        |  floor((CAST(n AS DOUBLE) / CAST(nt AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS p
+        |  ${r6("CAST(n AS DOUBLE) / CAST(nt AS DOUBLE)")} AS p
         |FROM c JOIN t USING (prev)""".stripMargin),
 
     // self-calibrating anomaly signal: z vs trailing 10 PRIOR events
@@ -336,9 +336,7 @@ object TemporalQueries {
          |SELECT event_id,
          |  CASE WHEN 3 <= CAST(n AS DOUBLE) AND $hasValueSql
          |        AND sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0)) > 0
-         |  THEN floor(((value - s / CAST(n AS DOUBLE)) /
-         |    sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0)))
-         |    * 1000000 + 0.5) / 1000000
+         |  THEN ${r6("(value - s / CAST(n AS DOUBLE)) / sqrt(greatest(s2 / CAST(n AS DOUBLE) - (s / CAST(n AS DOUBLE)) * (s / CAST(n AS DOUBLE)), 0.0))")}
          |  END AS z_trail
          |FROM b""".stripMargin),
 
@@ -348,11 +346,11 @@ object TemporalQueries {
         .select(col("user_id"), col("n_gaps"),
           graft.functions.Portable.r6(col("mean_gap_s")).as("mean_gap_s"),
           col("max_gap_us")),
-      """WITH g AS (SELECT user_id,
+      s"""WITH g AS (SELECT user_id,
         |    epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
         |  FROM events WHERE ts IS NOT NULL)
         |SELECT user_id, count(*) AS n_gaps,
-        |  floor((CAST(sum(gap) AS DOUBLE) / CAST(count(*) AS DOUBLE) / CAST(1000000 AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS mean_gap_s,
+        |  ${r6("CAST(sum(gap) AS DOUBLE) / CAST(count(*) AS DOUBLE) / CAST(1000000 AS DOUBLE)")} AS mean_gap_s,
         |  max(gap) AS max_gap_us
         |FROM g WHERE gap IS NOT NULL GROUP BY 1""".stripMargin),
 
@@ -361,12 +359,11 @@ object TemporalQueries {
       Ewma.ewmaLast(ev(s, dir), "user_id", "ts", "value", "event_id", 0.3)
         .select(col("key").as("user_id"), col("n"),
           graft.functions.Portable.r6(col("ewma")).as("ewma")),
-      """WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs
+      s"""WITH s AS (SELECT user_id, list(value ORDER BY ts, event_id) AS vs
         |  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
         |  GROUP BY 1)
         |SELECT user_id, CAST(len(vs) AS BIGINT) AS n,
-        |  floor(list_reduce(vs, (acc, x) -> CAST(0.3 AS DOUBLE) * x +
-        |    (CAST(1 AS DOUBLE) - CAST(0.3 AS DOUBLE)) * acc) * 1000000 + 0.5) / 1000000 AS ewma
+        |  ${r6("list_reduce(vs, (acc, x) -> CAST(0.3 AS DOUBLE) * x + (CAST(1 AS DOUBLE) - CAST(0.3 AS DOUBLE)) * acc)")} AS ewma
         |FROM s""".stripMargin),
 
     // week-over-week active users with relative change
@@ -379,7 +376,7 @@ object TemporalQueries {
          |w AS (SELECT bucket, count(DISTINCT user_id) AS n_active FROM b GROUP BY 1)
          |SELECT w.bucket, w.n_active, p.n_active AS prev_active,
          |  CASE WHEN p.n_active IS NOT NULL THEN
-         |    floor(((CAST(w.n_active AS DOUBLE) - CAST(p.n_active AS DOUBLE)) / CAST(p.n_active AS DOUBLE)) * 1000000 + 0.5) / 1000000
+         |    ${r6("(CAST(w.n_active AS DOUBLE) - CAST(p.n_active AS DOUBLE)) / CAST(p.n_active AS DOUBLE)")}
          |  END AS pct_change
          |FROM w LEFT JOIN w p ON p.bucket = w.bucket - 1""".stripMargin),
 
@@ -399,11 +396,11 @@ object TemporalQueries {
          |m AS (SELECT event_type, max(n) AS n,
          |        max(CASE WHEN rk = 1 THEN hr END) AS peak_hour,
          |        max(CASE WHEN rk = 1 THEN sh END) AS ps,
-         |        CAST(sum(CAST(floor(-sh * ln(sh) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS hsum
+         |        ${dsum(r6("-sh * ln(sh)"))} AS hsum
          |      FROM t GROUP BY 1)
          |SELECT event_type, n, peak_hour,
-         |  floor(ps * 1000000 + 0.5) / 1000000 AS peak_share,
-         |  floor(hsum / ${math.log(24.0)} * 1000000 + 0.5) / 1000000 AS entropy_norm
+         |  ${r6("ps")} AS peak_share,
+         |  ${r6(s"hsum / ${math.log(24.0)}")} AS entropy_norm
          |FROM m""".stripMargin),
 
     // Holt-Winters additive seasonal smoothing (period-4 slots;
@@ -439,9 +436,9 @@ object TemporalQueries {
          |    (acc, x) -> [acc[1] + $one, $nl, $nt, $sSlots]) AS st
          |  FROM s)
          |SELECT user_id, n,
-         |  ${graft.functions.Portable.r6Sql("st[2]")} AS level,
-         |  ${graft.functions.Portable.r6Sql("st[3]")} AS trend,
-         |  ${graft.functions.Portable.r6Sql("st[2] + st[3] + st[CAST(st[1] AS BIGINT) % 4 + 4]")} AS forecast
+         |  ${r6("st[2]")} AS level,
+         |  ${r6("st[3]")} AS trend,
+         |  ${r6("st[2] + st[3] + st[CAST(st[1] AS BIGINT) % 4 + 4]")} AS forecast
          |FROM f""".stripMargin
     }),
 
@@ -452,7 +449,7 @@ object TemporalQueries {
         .select(col("key").as("event_type"), col("n_events"), col("n_buckets"),
           graft.functions.Portable.r6(col("mean_per_bucket")).as("mean_per_bucket"),
           graft.functions.Portable.r6(col("fano")).as("fano")),
-      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS BIGINT) AS c
+      s"""WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS BIGINT) AS c
         |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
         |g AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n_events,
         |        CAST(count(*) AS BIGINT) AS n_buckets, CAST(sum(c * c) AS BIGINT) AS s2
@@ -460,8 +457,8 @@ object TemporalQueries {
         |m AS (SELECT event_type, n_events, n_buckets, s2,
         |        CAST(n_events AS DOUBLE) / CAST(n_buckets AS DOUBLE) AS mu FROM g)
         |SELECT event_type, n_events, n_buckets,
-        |  floor(mu * 1000000 + 0.5) / 1000000 AS mean_per_bucket,
-        |  floor((CAST(s2 AS DOUBLE) / CAST(n_buckets AS DOUBLE) - mu * mu) / mu * 1000000 + 0.5) / 1000000 AS fano
+        |  ${r6("mu")} AS mean_per_bucket,
+        |  ${r6("(CAST(s2 AS DOUBLE) / CAST(n_buckets AS DOUBLE) - mu * mu) / mu")} AS fano
         |FROM m""".stripMargin),
 
     // seasonal-naive skill (MASE-style) of hourly volumes per event
@@ -472,7 +469,7 @@ object TemporalQueries {
           graft.functions.Portable.r6(col("mae_naive")).as("mae_naive"),
           graft.functions.Portable.r6(col("mae_seasonal")).as("mae_seasonal"),
           graft.functions.Portable.r6(col("skill")).as("skill")),
-      """WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS DOUBLE) AS v
+      s"""WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bk, CAST(count(*) AS DOUBLE) AS v
         |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
         |l AS (SELECT event_type, v,
         |        lag(v, 1) OVER (PARTITION BY event_type ORDER BY bk) AS l1,
@@ -480,19 +477,17 @@ object TemporalQueries {
         |      FROM b),
         |g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_buckets,
         |        count(l1) AS c1, count(lp) AS cp,
-        |        CAST(coalesce(sum(CAST(floor(abs(v - l1) * 1000000 + 0.5) / 1000000
-        |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS s1,
-        |        CAST(coalesce(sum(CAST(floor(abs(v - lp) * 1000000 + 0.5) / 1000000
-        |          AS DECIMAL(38,6))), 0) AS DOUBLE) AS sp
+        |        ${dsum0(r6("abs(v - l1)"))} AS s1,
+        |        ${dsum0(r6("abs(v - lp)"))} AS sp
         |      FROM l GROUP BY 1),
         |e AS (SELECT event_type, n_buckets,
         |        CASE WHEN c1 > 0 THEN s1 / CAST(c1 AS DOUBLE) END AS m1,
         |        CASE WHEN cp > 0 THEN sp / CAST(cp AS DOUBLE) END AS mp
         |      FROM g)
         |SELECT event_type, n_buckets,
-        |  floor(m1 * 1000000 + 0.5) / 1000000 AS mae_naive,
-        |  floor(mp * 1000000 + 0.5) / 1000000 AS mae_seasonal,
-        |  CASE WHEN m1 > 0 THEN floor(mp / m1 * 1000000 + 0.5) / 1000000 END AS skill
+        |  ${r6("m1")} AS mae_naive,
+        |  ${r6("mp")} AS mae_seasonal,
+        |  CASE WHEN m1 > 0 THEN ${r6("mp / m1")} END AS skill
         |FROM e""".stripMargin),
 
     // Theil-Sen robust slope of value-vs-time (per day) per user series
@@ -521,7 +516,7 @@ object TemporalQueries {
          |      FROM rk WHERE rk = (m + 1) // 2 OR rk = (m + 2) // 2 GROUP BY 1),
          |sz AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM sm GROUP BY 1)
          |SELECT sz.user_id, sz.n, CAST(coalesce(mid.n_slopes, 0) AS BIGINT) AS n_slopes,
-         |  floor(mid.slope * 1000000 + 0.5) / 1000000 AS slope
+         |  ${r6("mid.slope")} AS slope
          |FROM sz LEFT JOIN mid USING (user_id)""".stripMargin),
 
     // Mann-Kendall "is the drift real" companion on the same series
@@ -550,10 +545,9 @@ object TemporalQueries {
          |f AS (SELECT ties.user_id, n, CAST(coalesce(s, 0) AS BIGINT) AS s,
          |    CAST(n * (n - 1) * (2 * n + 5) - tsum AS DOUBLE) / 18.0 AS var_s
          |  FROM ties LEFT JOIN sagg USING (user_id))
-         |SELECT user_id, n, s, floor(var_s * 1000000 + 0.5) / 1000000 AS var_s,
+         |SELECT user_id, n, s, ${r6("var_s")} AS var_s,
          |  CASE WHEN var_s > 0.0 THEN
-         |    floor((CAST(s AS DOUBLE) - CASE WHEN s > 0 THEN 1.0 WHEN s < 0 THEN -1.0 ELSE 0.0 END)
-         |      / sqrt(var_s) * 1000000 + 0.5) / 1000000 END AS z
+         |    ${r6("(CAST(s AS DOUBLE) - CASE WHEN s > 0 THEN 1.0 WHEN s < 0 THEN -1.0 ELSE 0.0 END) / sqrt(var_s)")} END AS z
          |FROM f""".stripMargin),
 
     // classical additive decomposition of hourly volumes per event type
@@ -566,9 +560,9 @@ object TemporalQueries {
           graft.functions.Portable.r6(col("residual")).as("residual")),
       s"""WITH $decomposeCtesSql
          |SELECT de.event_type, epoch_us(bk) AS bucket_us, CAST(de.phase AS BIGINT) AS phase, v,
-         |  floor(trend * 1000000 + 0.5) / 1000000 AS trend,
-         |  floor(seasonal * 1000000 + 0.5) / 1000000 AS seasonal,
-         |  floor((detr - seasonal) * 1000000 + 0.5) / 1000000 AS residual
+         |  ${r6("trend")} AS trend,
+         |  ${r6("seasonal")} AS seasonal,
+         |  ${r6("detr - seasonal")} AS residual
          |FROM de LEFT JOIN se ON de.event_type = se.event_type AND de.phase = se.phase""".stripMargin),
 
     // DFT periodogram over hourly event counts: which periods (2..26h)
@@ -578,7 +572,7 @@ object TemporalQueries {
           minPeriod = 2, maxPeriod = 26)
         .select(col("key").as("event_type"), col("period").cast("long").as("period"),
           col("n_buckets"), col("power"), col("rk").cast("long").as("rk")),
-      """WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
+      s"""WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
         |    CAST(count(*) AS DOUBLE) AS v
         |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
         |w AS (SELECT key, v,
@@ -588,13 +582,11 @@ object TemporalQueries {
         |tm AS (SELECT key, t, v - mean AS dv, p.period
         |  FROM w, (SELECT unnest(range(2, 27)) AS period) p),
         |a AS (SELECT key, period, CAST(count(*) AS BIGINT) AS n_buckets,
-        |    CAST(sum(CAST(floor(dv * cos(2 * pi() * CAST(t % period AS DOUBLE)
-        |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sc,
-        |    CAST(sum(CAST(floor(dv * sin(2 * pi() * CAST(t % period AS DOUBLE)
-        |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
+        |    ${dsum(r6("dv * cos(2 * pi() * CAST(t % period AS DOUBLE) / CAST(period AS DOUBLE))"))} AS sc,
+        |    ${dsum(r6("dv * sin(2 * pi() * CAST(t % period AS DOUBLE) / CAST(period AS DOUBLE))"))} AS ss
         |  FROM tm GROUP BY 1, 2),
         |pw AS (SELECT key, period, n_buckets,
-        |    floor((sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE) * 1000000 + 0.5) / 1000000 AS power
+        |    ${r6("(sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE)")} AS power
         |  FROM a)
         |SELECT key AS event_type, CAST(period AS BIGINT) AS period, n_buckets, power,
         |  CAST(row_number() OVER (PARTITION BY key ORDER BY power DESC, period) AS BIGINT) AS rk
@@ -607,7 +599,7 @@ object TemporalQueries {
         .select(col("key").as("event_type"), col("n_buckets"),
           col("dominant_period").cast("long").as("dominant_period"),
           col("power_share"), col("spectral_entropy")),
-      """WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
+      s"""WITH b AS (SELECT event_type AS key, date_trunc('hour', ts) AS bk,
         |    CAST(count(*) AS DOUBLE) AS v
         |  FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
         |w AS (SELECT key, v,
@@ -617,28 +609,25 @@ object TemporalQueries {
         |tm AS (SELECT key, t, v - mean AS dv, p.period
         |  FROM w, (SELECT unnest(range(2, 27)) AS period) p),
         |a AS (SELECT key, period, CAST(count(*) AS BIGINT) AS n_buckets,
-        |    CAST(sum(CAST(floor(dv * cos(2 * pi() * CAST(t % period AS DOUBLE)
-        |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sc,
-        |    CAST(sum(CAST(floor(dv * sin(2 * pi() * CAST(t % period AS DOUBLE)
-        |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
+        |    ${dsum(r6("dv * cos(2 * pi() * CAST(t % period AS DOUBLE) / CAST(period AS DOUBLE))"))} AS sc,
+        |    ${dsum(r6("dv * sin(2 * pi() * CAST(t % period AS DOUBLE) / CAST(period AS DOUBLE))"))} AS ss
         |  FROM tm GROUP BY 1, 2),
         |pw AS (SELECT key, period, n_buckets,
-        |    floor((sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE) * 1000000 + 0.5) / 1000000 AS power
+        |    ${r6("(sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE)")} AS power
         |  FROM a),
         |rk AS (SELECT *, row_number() OVER (PARTITION BY key ORDER BY power DESC, period) AS rn
         |  FROM pw),
         |gg AS (SELECT key, max(n_buckets) AS n_buckets,
         |    CAST(max(CASE WHEN rn = 1 THEN period END) AS BIGINT) AS dominant_period,
         |    max(CASE WHEN rn = 1 THEN power END) AS pmax,
-        |    CAST(sum(CAST(power AS DECIMAL(38,6))) AS DOUBLE) AS tot
+        |    ${dsum("power")} AS tot
         |  FROM rk GROUP BY 1),
         |e AS (SELECT rk.key,
-        |    CAST(sum(CAST(floor((-(power / tot)) * ln(power / tot) * 1000000 + 0.5) / 1000000
-        |      AS DECIMAL(38,6))) AS DOUBLE) AS h
+        |    ${dsum(r6("(-(power / tot)) * ln(power / tot)"))} AS h
         |  FROM rk JOIN gg ON gg.key = rk.key WHERE tot > 0 AND power > 0 GROUP BY 1)
         |SELECT gg.key AS event_type, n_buckets, dominant_period,
-        |  floor(CASE WHEN tot > 0 THEN pmax / tot END * 1000000 + 0.5) / 1000000 AS power_share,
-        |  floor(coalesce(h, 0) / ln(25.0) * 1000000 + 0.5) / 1000000 AS spectral_entropy
+        |  ${r6("CASE WHEN tot > 0 THEN pmax / tot END")} AS power_share,
+        |  ${r6("coalesce(h, 0) / ln(25.0)")} AS spectral_entropy
         |FROM gg LEFT JOIN e ON e.key = gg.key""".stripMargin),
 
     // composed seasonality stack: measure each event stream's dominant
@@ -672,19 +661,19 @@ object TemporalQueries {
            |de_$p AS (SELECT *, v - trend AS detr FROM dd_$p),
            |pm_$p AS (SELECT event_type, phase,
            |    CASE WHEN count(detr) > 0 THEN
-           |      CAST(sum(CAST(floor(detr * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+           |      ${dsum(r6("detr"))}
            |        / CAST(count(detr) AS DOUBLE) END AS sp FROM de_$p GROUP BY 1, 2),
            |ctr_$p AS (SELECT event_type,
            |    CASE WHEN count(sp) > 0 THEN
-           |      CAST(sum(CAST(floor(sp * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
+           |      ${dsum(r6("sp"))}
            |        / CAST(count(sp) AS DOUBLE) END AS c FROM pm_$p GROUP BY 1),
            |se_$p AS (SELECT pm.event_type, phase, sp - c AS seasonal
            |  FROM pm_$p pm JOIN ctr_$p ctr USING (event_type)),
            |out_$p AS (SELECT de.event_type, epoch_us(bk) AS bucket_us,
            |    CAST(de.phase AS BIGINT) AS phase, CAST($p AS BIGINT) AS period, v,
-           |    floor(trend * 1000000 + 0.5) / 1000000 AS trend,
-           |    floor(seasonal * 1000000 + 0.5) / 1000000 AS seasonal,
-           |    floor((detr - seasonal) * 1000000 + 0.5) / 1000000 AS residual
+           |    ${r6("trend")} AS trend,
+           |    ${r6("seasonal")} AS seasonal,
+           |    ${r6("detr - seasonal")} AS residual
            |  FROM de_$p de LEFT JOIN se_$p se
            |    ON de.event_type = se.event_type AND de.phase = se.phase)""".stripMargin
       }
@@ -698,13 +687,11 @@ object TemporalQueries {
          |tm AS (SELECT key, t, v - mean AS dv, p.period
          |  FROM w, (SELECT unnest(${periods.mkString("[", ", ", "]")}) AS period) p),
          |a AS (SELECT key, period, CAST(count(*) AS BIGINT) AS n_buckets,
-         |    CAST(sum(CAST(floor(dv * cos(2 * pi() * CAST(t % period AS DOUBLE)
-         |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS sc,
-         |    CAST(sum(CAST(floor(dv * sin(2 * pi() * CAST(t % period AS DOUBLE)
-         |      / CAST(period AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
+         |    ${dsum(r6("dv * cos(2 * pi() * CAST(t % period AS DOUBLE) / CAST(period AS DOUBLE))"))} AS sc,
+         |    ${dsum(r6("dv * sin(2 * pi() * CAST(t % period AS DOUBLE) / CAST(period AS DOUBLE))"))} AS ss
          |  FROM tm GROUP BY 1, 2),
          |pw AS (SELECT key, period, n_buckets,
-         |    floor((sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE) * 1000000 + 0.5) / 1000000 AS power
+         |    ${r6("(sc * sc + ss * ss) / CAST(n_buckets AS DOUBLE)")} AS power
          |  FROM a),
          |win AS (SELECT key, period FROM (SELECT key, period,
          |    row_number() OVER (PARTITION BY key ORDER BY power DESC, period) AS rk,
@@ -833,7 +820,7 @@ object TemporalQueries {
          |sz AS (SELECT cw, CAST(count(*) AS BIGINT) AS n_users FROM coh GROUP BY 1),
          |cells AS (SELECT coh.cw, (bf.wk - coh.cw) // 604800000000 AS age_weeks,
          |    CAST(count(DISTINCT bf.u) AS BIGINT) AS n_active,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS rev
+         |    ${dsum0(r6("v"))} AS rev
          |  FROM bf JOIN coh USING (u) GROUP BY 1, 2),
          |cum AS (SELECT cw, age_weeks, n_active, rev,
          |    CAST(sum(CAST(rev AS DECIMAL(38,6))) OVER (PARTITION BY cw ORDER BY age_weeks
@@ -851,8 +838,8 @@ object TemporalQueries {
       s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
          |mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sm,
-         |    CAST(coalesce(sum(CAST(${r6("v * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
+         |    ${dsum0(r6("v"))} AS sm,
+         |    ${dsum0(r6("v * v"))} AS s2
          |  FROM b GROUP BY 1),
          |rk AS (SELECT g, v,
          |    row_number() OVER (PARTITION BY g ORDER BY ts, event_id) - 1 AS rn FROM b),
@@ -862,7 +849,7 @@ object TemporalQueries {
          |      ELSE 0.0 END AS z
          |  FROM rk JOIN mom USING (g)),
          |paa AS (SELECT g, seg,
-         |    CAST(coalesce(sum(CAST(${r6("z")} AS DECIMAL(38,6))), 0) AS DOUBLE) /
+         |    ${dsum0(r6("z"))} /
          |      CAST(count(*) AS DOUBLE) AS pm
          |  FROM zz GROUP BY 1, 2),
          |sym AS (SELECT g, seg,
@@ -905,8 +892,8 @@ object TemporalQueries {
       s"""WITH b AS (SELECT event_type AS g, ts, event_id, CAST(value AS DOUBLE) AS v
          |  FROM events WHERE value IS NOT NULL AND NOT isnan(value) AND ts IS NOT NULL),
          |mom AS (SELECT g, CAST(count(*) AS BIGINT) AS n,
-         |    CAST(coalesce(sum(CAST(${r6("v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS sm,
-         |    CAST(coalesce(sum(CAST(${r6("v * v")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS s2
+         |    ${dsum0(r6("v"))} AS sm,
+         |    ${dsum0(r6("v * v"))} AS s2
          |  FROM b GROUP BY 1),
          |rk AS (SELECT g, v,
          |    row_number() OVER (PARTITION BY g ORDER BY ts, event_id) - 1 AS rn FROM b),
@@ -916,7 +903,7 @@ object TemporalQueries {
          |      ELSE 0.0 END AS z
          |  FROM rk JOIN mom USING (g)),
          |paa AS (SELECT g, seg,
-         |    ${r6("CAST(coalesce(sum(CAST(" + r6("z") + " AS DECIMAL(38,6))), 0) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS pm
+         |    ${r6(s"${dsum0(r6("z"))} / CAST(count(*) AS DOUBLE)")} AS pm
          |  FROM zz GROUP BY 1, 2),
          |vecs AS (SELECT g, list(pm ORDER BY seg) AS paa FROM paa GROUP BY 1),
          |pairs AS (SELECT a.g AS type_a, b.g AS type_b, a.paa AS pa, b.paa AS pb
@@ -997,13 +984,13 @@ object TemporalQueries {
          |    OVER (PARTITION BY g, m, blk ORDER BY ts, event_id
          |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cumv FROM wm),
          |pb AS (SELECT g, m, blk, max(cumv) - min(cumv) AS r,
-         |    sqrt(greatest(${ds("(v - mn) * (v - mn)")} / CAST(first(m) AS DOUBLE), 0.0)) AS sd
+         |    sqrt(greatest(${dsum0(r6("(v - mn) * (v - mn)"))} / CAST(first(m) AS DOUBLE), 0.0)) AS sd
          |  FROM cum GROUP BY 1, 2, 3),
          |rs AS (SELECT g, m, r / sd AS rsv FROM pb WHERE sd > 0),
-         |ps AS (SELECT g, m, ${ds("rsv")} / CAST(count(*) AS DOUBLE) AS mrs FROM rs GROUP BY 1, 2),
+         |ps AS (SELECT g, m, ${dsum0(r6("rsv"))} / CAST(count(*) AS DOUBLE) AS mrs FROM rs GROUP BY 1, 2),
          |pts AS (SELECT g, ln(CAST(m AS DOUBLE)) AS x, ln(mrs) AS y FROM ps WHERE mrs > 0),
          |fit AS (SELECT g, CAST(count(*) AS BIGINT) AS k_sizes,
-         |    ${ds("x")} AS sx, ${ds("y")} AS sy, ${ds("x * x")} AS qx, ${ds("x * y")} AS pxy
+         |    ${dsum0(r6("x"))} AS sx, ${dsum0(r6("y"))} AS sy, ${dsum0(r6("x * x"))} AS qx, ${dsum0(r6("x * y"))} AS pxy
          |  FROM pts GROUP BY 1),
          |tot AS (SELECT g, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1)
          |SELECT tot.g AS event_type, n, k_sizes,

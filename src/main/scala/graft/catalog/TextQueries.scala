@@ -16,6 +16,45 @@ object TextQueries {
     */
   private val normSuffix = " Café FILE"
 
+  /** The three probe queries, (query id, terms), of the retrieval
+    * queries; their oracles read them as [[bm25ProbesSql]].
+    */
+  private val bm25Probes: Seq[(String, Seq[String])] = Seq(
+    "q_joins"  -> Seq("join", "hash", "merge"),
+    "q_scan"   -> Seq("scan", "filter", "column"),
+    "q_stream" -> Seq("stream", "window", "batch"))
+
+  /** [[bm25Probes]] as the oracle CTE `qt(query_id, term)`. */
+  private val bm25ProbesSql: String = bm25Probes
+    .flatMap { case (q, ts) => ts.map(t => s"('$q','$t')") }
+    .mkString("qt(query_id, term) AS (VALUES ", ", ", ")")
+
+  /** BM25 oracle CTEs (mirror [[Bm25]], k1 = 1.2, b = 0.75): `tok(id, toks)`,
+    * `t(id, term)`, `dl(id, dl)`, `st(n_docs, avgdl)`, `tf(id, term, tf)`
+    * over the terms `term IN termFilter` admits, and `idf(term, df)`.
+    */
+  private def bm25StatsSql(termFilter: String): String =
+    s"""tok AS (SELECT doc_id AS id, ${wordTokensSql("text")} AS toks FROM documents),
+       |t AS (SELECT id, unnest(toks) AS term FROM tok),
+       |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
+       |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
+       |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN $termFilter GROUP BY 1, 2),
+       |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)""".stripMargin
+
+  /** A document's BM25 score over the [[bm25StatsSql]] CTEs, grouped by document. */
+  private val bm25Sum =
+    "sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))"
+
+  /** [[bm25ProbesSql]], the [[bm25StatsSql]] chain over the probe terms
+    * and `sc(query_id, id, bm25)`: each probe's r6-pinned score per document.
+    */
+  private val bm25ProbeScoresSql: String =
+    s"""$bm25ProbesSql,
+       |${bm25StatsSql("(SELECT term FROM qt)")},
+       |sc AS (SELECT qt.query_id, tf.id,
+       |    ${r6(bm25Sum)} AS bm25
+       |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2)""".stripMargin
+
   /** Unrolled BPE-merge oracle (round-10 verdict item: the former
     * rows-only check now hash-verifies every merge round). Symbol
     * arrays ride as "(s)(s)…" strings so DuckDB's left-to-right
@@ -38,7 +77,7 @@ object TextQueries {
       .map(r => s"SELECT CAST(${r - 1} AS BIGINT) AS rank, a, b FROM m$r")
       .mkString("\nUNION ALL ")
     s"""WITH wc AS (SELECT word, count(*) AS cnt FROM (
-       |    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
+       |    SELECT unnest(${wordTokensSql("text")}) AS word
        |    FROM documents) GROUP BY 1),
        |w0 AS MATERIALIZED (SELECT regexp_replace(word, '(.)', '(\\1)', 'g') AS s, cnt FROM wc),
        |$rounds
@@ -51,7 +90,7 @@ object TextQueries {
     QueryDef("q_chunk", (s, dir) =>
       Chunker.chunkByTokens(docs(s, dir), "doc_id", "text", chunkTokens = 30, overlapTokens = 10),
       // stride = 30 - 10 = 20; chunk k covers ts[k*20+1 .. k*20+30]
-      """WITH d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
+      s"""WITH d AS (SELECT doc_id, ${wordTokensSql("text")} AS ts FROM documents),
         |n AS (SELECT doc_id, ts, CAST(len(ts) AS BIGINT) AS L FROM d WHERE len(ts) > 0),
         |c AS (SELECT doc_id, ts, L,
         |    unnest(range(0, CASE WHEN L <= 30 THEN 1 ELSE (L - 30 + 19) // 20 + 1 END)) AS chunk_seq
@@ -79,18 +118,16 @@ object TextQueries {
     },
       {
       val allStop = TextFunctions.Stopwords.flatMap(_._2).distinct.map(w => s"'$w'").mkString("[", ",", "]")
-      s"""WITH t AS (SELECT doc_id, text, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id, text, ${wordTokensSql("text")} AS toks FROM documents),
          |f AS (SELECT doc_id,
          |  CAST(len(text) AS BIGINT) AS n_chars,
          |  CAST(len(toks) AS BIGINT) AS n_words,
-         |  floor((CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 AS mean_word_len,
-         |  floor((CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)) * 1000000 + 0.5) / 1000000 AS punct_ratio,
-         |  floor((CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)) * 1000000 + 0.5) / 1000000 AS stopword_ratio
+         |  ${r6("CAST(len(regexp_replace(lower(text),'[^a-z]','','g')) AS DOUBLE)/greatest(len(toks),1)")} AS mean_word_len,
+         |  ${r6("CAST(len(regexp_replace(text,'[^.!?,;:]','','g')) AS DOUBLE)/greatest(len(text),1)")} AS punct_ratio,
+         |  ${r6(s"CAST(len(list_filter(toks, x -> list_contains($allStop, x))) AS DOUBLE)/greatest(len(toks),1)")} AS stopword_ratio
          |FROM t)
          |SELECT doc_id, n_chars, n_words, mean_word_len, punct_ratio, stopword_ratio,
-         |  floor((0.4*least(CAST(n_words AS DOUBLE)/100.0, 1.0) + 0.3*least(stopword_ratio*5.0, 1.0)
-         |    + 0.2*(CASE WHEN mean_word_len BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END)
-         |    + 0.1*(1.0 - least(punct_ratio*5.0, 1.0))) * 1000000 + 0.5) / 1000000 AS quality_score
+         |  ${r6("0.4*least(CAST(n_words AS DOUBLE)/100.0, 1.0) + 0.3*least(stopword_ratio*5.0, 1.0) + 0.2*(CASE WHEN mean_word_len BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) + 0.1*(1.0 - least(punct_ratio*5.0, 1.0))")} AS quality_score
          |FROM f""".stripMargin
     }),
 
@@ -113,7 +150,7 @@ object TextQueries {
       s"""WITH t AS (SELECT doc_id, text,
          |  list_filter(string_split_regex(text, '\\s+'), x -> x<>'') AS words,
          |  list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)), l -> l<>'') AS lines,
-         |  list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks
+         |  ${wordTokensSql("text")} AS toks
          |  FROM documents),
          |f AS (SELECT doc_id,
          |  CAST(len(words) AS BIGINT) AS n_words,
@@ -146,16 +183,16 @@ object TextQueries {
         c.getField("passes").as("passes")
       )
     },
-      """WITH t AS (SELECT doc_id, text,
-        |  list_filter(list_transform(string_split(regexp_replace(text, '\r', '', 'g'), chr(10)), l -> trim(l)), l -> l<>'') AS lines
+      s"""WITH t AS (SELECT doc_id, text,
+        |  list_filter(list_transform(string_split(regexp_replace(text, '\\r', '', 'g'), chr(10)), l -> trim(l)), l -> l<>'') AS lines
         |  FROM documents),
         |f AS (SELECT doc_id, text,
         |  CAST(len(lines) AS BIGINT) AS n_lines,
-        |  CAST(len(list_filter(lines, l -> regexp_matches(l, '[.!?"]$')
-        |    AND len(list_filter(string_split_regex(l, '\s+'), w -> w<>'')) >= 3)) AS BIGINT) AS n_kept
+        |  CAST(len(list_filter(lines, l -> regexp_matches(l, '[.!?"]$$')
+        |    AND len(list_filter(string_split_regex(l, '\\s+'), w -> w<>'')) >= 3)) AS BIGINT) AS n_kept
         |  FROM t)
         |SELECT doc_id, n_lines, n_kept,
-        |  floor((CAST(n_kept AS DOUBLE)/CAST(greatest(n_lines,1) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS kept_frac,
+        |  ${r6("CAST(n_kept AS DOUBLE)/CAST(greatest(n_lines,1) AS DOUBLE)")} AS kept_frac,
         |  contains(lower(text), 'lorem ipsum') AS has_lorem,
         |  contains(text, '{') AS has_brace,
         |  (n_kept >= 5 AND NOT contains(lower(text), 'lorem ipsum') AND NOT contains(text, '{')) AS passes
@@ -193,13 +230,13 @@ object TextQueries {
         a.getField("is_clean").as("is_clean")
       )
     },
-      """WITH f AS (SELECT doc_id, len(text) AS n_chars,
+      s"""WITH f AS (SELECT doc_id, len(text) AS n_chars,
         |  CAST(len(regexp_extract_all(text, '�')) AS BIGINT) AS n_replacement,
-        |  CAST(len(regexp_extract_all(text, '[\x00-\x08\x0b\x0c\x0e-\x1f]')) AS BIGINT) AS n_ctrl,
+        |  CAST(len(regexp_extract_all(text, '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]')) AS BIGINT) AS n_ctrl,
         |  CAST(len(regexp_extract_all(text, 'Ã[©¨¤¶¼±‰]|â€|Â[«»]')) AS BIGINT) AS n_mojibake
         |  FROM documents)
         |SELECT doc_id, n_replacement, n_ctrl, n_mojibake,
-        |  floor((CAST(n_replacement + n_ctrl + n_mojibake AS DOUBLE)/CAST(greatest(n_chars,1) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS artifact_frac,
+        |  ${r6("CAST(n_replacement + n_ctrl + n_mojibake AS DOUBLE)/CAST(greatest(n_chars,1) AS DOUBLE)")} AS artifact_frac,
         |  (n_replacement + n_ctrl + n_mojibake = 0) AS is_clean
         |FROM f""".stripMargin),
 
@@ -229,11 +266,11 @@ object TextQueries {
       Tfidf
         .tfidf(docs(s, dir))
         .select(col("id"), col("term"), col("tf"), graft.functions.Portable.r6(col("tfidf")).as("tfidf")),
-      """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |tf AS (SELECT id, term, count(*) AS tf FROM t GROUP BY 1, 2),
         |n AS (SELECT count(*) AS n_docs FROM documents),
         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT id, term, tf, floor((tf * (ln((n_docs + 1.0)/(df + 1.0)) + 1)) * 1000000 + 0.5) / 1000000 AS tfidf
+        |SELECT id, term, tf, ${r6("tf * (ln((n_docs + 1.0)/(df + 1.0)) + 1)")} AS tfidf
         |FROM tf JOIN idf USING (term), n""".stripMargin),
 
     QueryDef("q_repetition", { (s, dir) =>
@@ -242,22 +279,22 @@ object TextQueries {
         r.getField("dup_line_frac").as("dup_line_frac"),
         r.getField("dup_token_frac").as("dup_token_frac"))
     },
-      """WITH t AS (SELECT doc_id,
+      s"""WITH t AS (SELECT doc_id,
         |  list_filter(string_split(text, chr(10)), x -> trim(x) <> '') AS lines,
-        |  list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks
+        |  ${wordTokensSql("text")} AS toks
         |FROM documents)
         |SELECT doc_id,
-        |  floor((CASE WHEN len(lines) > 0 THEN 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE)/len(lines) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS dup_line_frac,
-        |  floor((CASE WHEN len(toks) > 0 THEN 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE)/len(toks) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS dup_token_frac
+        |  ${r6("CASE WHEN len(lines) > 0 THEN 1.0 - CAST(len(list_distinct(lines)) AS DOUBLE)/len(lines) ELSE 0.0 END")} AS dup_line_frac,
+        |  ${r6("CASE WHEN len(toks) > 0 THEN 1.0 - CAST(len(list_distinct(toks)) AS DOUBLE)/len(toks) ELSE 0.0 END")} AS dup_token_frac
         |FROM t""".stripMargin),
 
     QueryDef("q_top_bigram", (s, dir) =>
       TextFunctions.topBigramFraction(docs(s, dir)),
-      """WITH t AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, ${wordTokensSql("text")} AS toks FROM documents),
         |bg AS (SELECT id, unnest(CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)), i -> array_to_string(toks[i:i+1], ' ')) ELSE [] END) AS bg FROM t),
         |c AS (SELECT id, bg, count(*) AS c FROM bg GROUP BY 1, 2),
         |a AS (SELECT t.id, c.c FROM t LEFT JOIN c ON t.id = c.id)
-        |SELECT id, floor((CASE WHEN sum(c) > 0 THEN CAST(max(c) AS DOUBLE)/sum(c) ELSE 0.0 END) * 1000000 + 0.5) / 1000000 AS top_bigram_frac
+        |SELECT id, ${r6("CASE WHEN sum(c) > 0 THEN CAST(max(c) AS DOUBLE)/sum(c) ELSE 0.0 END")} AS top_bigram_frac
         |FROM a GROUP BY 1""".stripMargin),
 
     // deflate compression ratio — no SQL-expressible oracle (DuckDB has no
@@ -285,38 +322,33 @@ object TextQueries {
       Tfidf
         .unigramLogProb(docs(s, dir))
         .select(col("id"), graft.functions.Portable.r6(col("mean_log_prob")).as("mean_log_prob")),
-      """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |tf AS (SELECT id, term, count(*) AS tf FROM t GROUP BY 1, 2),
         |tc AS (SELECT id, term, tf, sum(tf) OVER (PARTITION BY term) AS ct FROM tf),
         |ds AS (SELECT id, sum(tf*ln(CAST(ct AS DOUBLE))) AS a, sum(tf) AS tt FROM tc GROUP BY 1),
         |n AS (SELECT sum(tt) AS n_tokens FROM ds)
-        |SELECT id, floor((a/tt - ln(CAST(n_tokens AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS mean_log_prob FROM ds, n""".stripMargin),
+        |SELECT id, ${r6("a/tt - ln(CAST(n_tokens AS DOUBLE))")} AS mean_log_prob FROM ds, n""".stripMargin),
 
     QueryDef("q_bigram_lm", (s, dir) =>
       Tfidf
         .bigramLogProb(docs(s, dir))
         .select(col("id"), graft.functions.Portable.r6(col("mean_log_prob")).as("mean_log_prob")),
-      """WITH t AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, ${wordTokensSql("text")} AS toks FROM documents),
         |b AS (SELECT id, unnest(CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)), i ->
         |        struct_pack(prefix := toks[i], bg := array_to_string(toks[i:i+1], ' '))) ELSE [] END) AS s FROM t),
         |tf AS (SELECT id, s.bg AS bg, any_value(s.prefix) AS prefix, count(*) AS tf FROM b GROUP BY 1, 2),
         |w AS (SELECT id, tf,
         |        sum(tf) OVER (PARTITION BY bg) AS ct_bg,
         |        sum(tf) OVER (PARTITION BY prefix) AS ct_prefix FROM tf)
-        |SELECT id, floor((sum(tf*ln(CAST(ct_bg AS DOUBLE)/ct_prefix))/sum(tf)) * 1000000 + 0.5) / 1000000 AS mean_log_prob
+        |SELECT id, ${r6("sum(tf*ln(CAST(ct_bg AS DOUBLE)/ct_prefix))/sum(tf)")} AS mean_log_prob
         |FROM w GROUP BY 1""".stripMargin),
 
     QueryDef("q_bm25", (s, dir) =>
       Bm25
         .score(docs(s, dir), Seq("spark", "hash", "merge"))
         .select(col("id"), graft.functions.Portable.r6(col("bm25")).as("bm25")),
-      """WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-        |t AS (SELECT id, unnest(toks) AS term FROM tok),
-        |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-        |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-        |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN ('spark','hash','merge') GROUP BY 1, 2),
-        |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1)
-        |SELECT id, floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
+      s"""WITH ${bm25StatsSql("('spark','hash','merge')")}
+        |SELECT id, ${r6(bm25Sum)} AS bm25
         |FROM tf JOIN idf USING (term) JOIN dl USING (id), st GROUP BY id""".stripMargin),
 
     // batch retrieval: 3 probe queries, one corpus pass, top-10 each
@@ -324,26 +356,11 @@ object TextQueries {
       Bm25
         .retrieveTopK(
           docs(s, dir),
-          Seq(
-            "q_joins"  -> Seq("join", "hash", "merge"),
-            "q_scan"   -> Seq("scan", "filter", "column"),
-            "q_stream" -> Seq("stream", "window", "batch")),
+          bm25Probes,
           k = 10)
         .select(col("query_id"), col("id").as("doc_id"), col("rank"), col("bm25")),
       // rank over the r6-rounded score (ties by id) — mirrors retrieveTopK
-      """WITH qt(query_id, term) AS (VALUES
-        |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-        |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-        |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-        |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-        |t AS (SELECT id, unnest(toks) AS term FROM tok),
-        |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-        |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-        |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-        |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT qt.query_id, tf.id,
-        |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-        |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
+      s"""WITH $bm25ProbeScoresSql,
         |r AS (SELECT query_id, id AS doc_id, bm25,
         |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc)
         |SELECT query_id, doc_id, CAST(rank AS BIGINT) AS rank, bm25 FROM r WHERE rank <= 10""".stripMargin),
@@ -357,14 +374,14 @@ object TextQueries {
           graft.functions.Portable.r6(col("r.flesch")).as("flesch")),
       s"""WITH s AS (SELECT doc_id,
          |    list_filter(list_transform(string_split_regex(text, '[.!?]+'), x -> trim(x)), x -> x <> '') AS sents,
-         |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks,
+         |    ${wordTokensSql("text")} AS toks,
          |    regexp_extract_all(lower(text), '[aeiouy]+') AS syl
          |  FROM documents),
          |w AS (SELECT doc_id, CAST(len(sents) AS BIGINT) AS n_sentences,
          |    CAST(len(toks) AS BIGINT) AS n_words, CAST(len(syl) AS BIGINT) AS n_syllables FROM s)
          |SELECT doc_id, n_sentences, n_words, n_syllables,
          |  CASE WHEN n_sentences > 0 AND n_words > 0 THEN
-         |    ${graft.functions.Portable.r6Sql(
+         |    ${r6(
                   "206.835 - 1.015 * (CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) " +
                     "- 84.6 * (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE))")}
          |  END AS flesch
@@ -379,16 +396,16 @@ object TextQueries {
           graft.functions.Portable.r6(col("l.ttr")).as("ttr"),
           col("l.n_bigram_types").as("n_bigram_types"),
           graft.functions.Portable.r6(col("l.bigram_ttr")).as("bigram_ttr")),
-      s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${wordTokensSql("text")} AS toks FROM documents),
          |b AS (SELECT doc_id, toks,
          |    CASE WHEN len(toks) >= 2 THEN list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1]) ELSE [] END AS bgs
          |  FROM tk)
          |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
          |  CAST(len(list_distinct(toks)) AS BIGINT) AS n_types,
-         |  CASE WHEN len(toks) > 0 THEN ${graft.functions.Portable.r6Sql(
+         |  CASE WHEN len(toks) > 0 THEN ${r6(
                 "CAST(len(list_distinct(toks)) AS DOUBLE) / CAST(len(toks) AS DOUBLE)")} END AS ttr,
          |  CAST(len(list_distinct(bgs)) AS BIGINT) AS n_bigram_types,
-         |  CASE WHEN len(toks) >= 2 THEN ${graft.functions.Portable.r6Sql(
+         |  CASE WHEN len(toks) >= 2 THEN ${r6(
                 "CAST(len(list_distinct(bgs)) AS DOUBLE) / CAST(len(toks) - 1 AS DOUBLE)")} END AS bigram_ttr
          |FROM b""".stripMargin),
 
@@ -397,14 +414,14 @@ object TextQueries {
       graft.text.Winnow.fingerprintStats(docs(s, dir), k = 5, w = 4)
         .select(col("id").as("doc_id"), col("n_shingles"), col("n_fingerprints"),
           graft.functions.Portable.r6(col("density")).as("density")),
-      s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${wordTokensSql("text")} AS toks FROM documents),
          |hs AS (SELECT doc_id, CASE WHEN len(toks) >= 5 THEN list_transform(range(1, len(toks)-3), i -> ${h32("array_to_string(toks[i:i+4],' ')")}) ELSE [] END AS h FROM tk),
          |wm AS (SELECT doc_id, len(h) AS n_sh,
          |    CASE WHEN len(h) = 0 THEN [] ELSE list_transform(range(1, greatest(len(h)-3, 1)+1), i -> list_min(h[i:i+3])) END AS wmins
          |  FROM hs)
          |SELECT doc_id, CAST(n_sh AS BIGINT) AS n_shingles,
          |  CAST(len(list_distinct(wmins)) AS BIGINT) AS n_fingerprints,
-         |  CASE WHEN n_sh > 0 THEN ${graft.functions.Portable.r6Sql(
+         |  CASE WHEN n_sh > 0 THEN ${r6(
                 "CAST(len(list_distinct(wmins)) AS DOUBLE) / CAST(n_sh AS DOUBLE)")} END AS density
          |FROM wm""".stripMargin),
 
@@ -423,7 +440,7 @@ object TextQueries {
       val pick = langs.map(l => s"WHEN h_$l = $best THEN '$l'").mkString(" ")
       s"""WITH lx AS (SELECT doc_id, regexp_replace(text, '\\. ', '.' || chr(10), 'g') AS text FROM documents),
          |ln0 AS (SELECT doc_id, unnest(list_filter(string_split(text, chr(10)), x -> trim(x) <> '')) AS line FROM lx),
-         |t AS (SELECT doc_id, list_filter(string_split_regex(lower(line),'[^a-z]+'), x -> x<>'') AS toks FROM ln0),
+         |t AS (SELECT doc_id, ${wordTokensSql("line")} AS toks FROM ln0),
          |h AS (SELECT doc_id, $hitCols FROM t),
          |lg AS (SELECT doc_id, CASE WHEN $best = 0 THEN 'und' $pick ELSE 'und' END AS lang FROM h),
          |c AS (SELECT doc_id, lang, count(*) AS c FROM lg GROUP BY 1, 2),
@@ -433,7 +450,7 @@ object TextQueries {
          |    row_number() OVER (PARTITION BY doc_id ORDER BY c DESC, lang) AS rn FROM c)
          |SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines, CAST(n_langs AS BIGINT) AS n_langs,
          |  lang AS main_lang,
-         |  ${graft.functions.Portable.r6Sql("CAST(c AS DOUBLE) / CAST(n_lines AS DOUBLE)")} AS main_frac
+         |  ${r6("CAST(c AS DOUBLE) / CAST(n_lines AS DOUBLE)")} AS main_frac
          |FROM r WHERE rn = 1""".stripMargin
     }),
 
@@ -442,7 +459,7 @@ object TextQueries {
       graft.text.ContentChunks.chunkDupStats(docs(s, dir), k = 5, divisor = 8)
         .select(col("id").as("doc_id"), col("n_chunks"), col("n_dup_chunks"),
           graft.functions.Portable.r6(col("dup_frac")).as("dup_frac")),
-      s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${wordTokensSql("text")} AS toks FROM documents),
          |hs AS (SELECT doc_id, toks, CASE WHEN len(toks) >= 5 THEN list_transform(range(1, len(toks)-3), i -> ${h32("array_to_string(toks[i:i+4],' ')")}) ELSE [] END AS h FROM tk),
          |ct AS (SELECT doc_id, toks, list_transform(list_filter(range(1, len(h)+1), i -> h[i] % 8 = 0), i -> i + 4) AS cutt FROM hs),
          |bd AS (SELECT doc_id, toks, list_concat(list_concat([0], cutt), [len(toks)]) AS bounds FROM ct),
@@ -452,7 +469,7 @@ object TextQueries {
          |dfc AS (SELECT chash, count(*) AS nd FROM pr GROUP BY 1)
          |SELECT doc_id, count(*) AS n_chunks,
          |  count(CASE WHEN nd > 1 THEN 1 END) AS n_dup_chunks,
-         |  ${graft.functions.Portable.r6Sql(
+         |  ${r6(
                 "CAST(count(CASE WHEN nd > 1 THEN 1 END) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS dup_frac
          |FROM pr JOIN dfc USING (chash) GROUP BY 1""".stripMargin),
 
@@ -462,10 +479,7 @@ object TextQueries {
       val bm = Bm25
         .retrieveTopK(
           docs(s, dir),
-          Seq(
-            "q_joins"  -> Seq("join", "hash", "merge"),
-            "q_scan"   -> Seq("scan", "filter", "column"),
-            "q_stream" -> Seq("stream", "window", "batch")),
+          bm25Probes,
           k = 50)
         .select(col("query_id"), col("id").as("doc_id"), col("rank"))
       // query-independent length prior; the limit bounds the rank window
@@ -476,32 +490,19 @@ object TextQueries {
       val prior = top
         .withColumn("rank",
           row_number().over(Window.orderBy(col("n_chars").desc, col("doc_id"))).cast("long"))
-        .select(explode(array(lit("q_joins"), lit("q_scan"), lit("q_stream"))).as("query_id"),
+        .select(explode(array(bm25Probes.map(p => lit(p._1)): _*)).as("query_id"),
           col("doc_id"), col("rank"))
       graft.pipeline.Fusion.reciprocalRankFusion(Seq(bm, prior), k = 60, topK = 10)
     },
-      """WITH qt(query_id, term) AS (VALUES
-        |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-        |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-        |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-        |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-        |t AS (SELECT id, unnest(toks) AS term FROM tok),
-        |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-        |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-        |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-        |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |sc AS (SELECT qt.query_id, tf.id,
-        |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-        |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
+      s"""WITH $bm25ProbeScoresSql,
         |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
         |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 50),
         |lp AS (SELECT doc_id, rank FROM (SELECT doc_id,
         |    row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rank FROM documents) WHERE rank <= 50),
         |pq AS (SELECT q.query_id, lp.doc_id, lp.rank
-        |  FROM (SELECT unnest(['q_joins','q_scan','q_stream']) AS query_id) q, lp),
+        |  FROM (SELECT unnest(${bm25Probes.map(p => s"'${p._1}'").mkString("[", ",", "]")}) AS query_id) q, lp),
         |fu AS (SELECT coalesce(b.query_id, p.query_id) AS query_id, coalesce(b.doc_id, p.doc_id) AS doc_id,
-        |    floor((coalesce(CAST(1 AS DOUBLE)/(CAST(60 AS DOUBLE) + CAST(b.rank AS DOUBLE)), CAST(0 AS DOUBLE))
-        |      + coalesce(CAST(1 AS DOUBLE)/(CAST(60 AS DOUBLE) + CAST(p.rank AS DOUBLE)), CAST(0 AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS rrf
+        |    ${r6("coalesce(CAST(1 AS DOUBLE)/(CAST(60 AS DOUBLE) + CAST(b.rank AS DOUBLE)), CAST(0 AS DOUBLE)) + coalesce(CAST(1 AS DOUBLE)/(CAST(60 AS DOUBLE) + CAST(p.rank AS DOUBLE)), CAST(0 AS DOUBLE))")} AS rrf
         |  FROM b FULL OUTER JOIN pq p ON b.query_id = p.query_id AND b.doc_id = p.doc_id),
         |r AS (SELECT query_id, doc_id, rrf,
         |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS BIGINT) AS rank FROM fu)
@@ -510,7 +511,7 @@ object TextQueries {
     // skip-gram co-occurrence counts (window 2, symmetric, minCount 3)
     QueryDef("q_cooc", (s, dir) =>
       graft.text.Cooccurrence.skipgramCounts(docs(s, dir), window = 2, minCount = 3),
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT ${wordTokensSql("text")} AS toks FROM documents),
         |p AS (SELECT unnest(flatten(list_transform(range(1, len(toks)), i ->
         |    list_transform(range(1, least(2, len(toks)-i)+1), d ->
         |      {'a': least(toks[i], toks[i+d]), 'b': greatest(toks[i], toks[i+d])})))) AS p
@@ -522,7 +523,7 @@ object TextQueries {
       graft.text.SpanCorrupt.corruptionStats(docs(s, dir), spanLen = 3, rate = 8)
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_masked"),
           col("n_spans"), col("corrupt_fp")),
-      s"""WITH tk AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '') AS toks FROM documents),
+      s"""WITH tk AS (SELECT doc_id, ${wordTokensSql("text")} AS toks FROM documents),
          |st AS (SELECT doc_id, toks, CASE WHEN len(toks) = 0 THEN [] ELSE
          |    list_transform(range(1, len(toks)+1), i -> ${h32("CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)")} % 8 = 0) END AS s FROM tk),
          |mk AS (SELECT doc_id, toks, CASE WHEN len(toks) = 0 THEN [] ELSE
@@ -540,32 +541,16 @@ object TextQueries {
     // retrieval eval: MRR / recall@10 / nDCG@10 of BM25 against
     // contains-all-terms relevance
     QueryDef("q_retrieval_eval", { (s, dir) =>
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val ranking = Bm25.retrieveTopK(docs(s, dir), qs, k = 10)
+      val ranking = Bm25.retrieveTopK(docs(s, dir), bm25Probes, k = 10)
         .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      val rel = graft.text.RetrievalEval.containsAllRelevance(docs(s, dir), qs)
+      val rel = graft.text.RetrievalEval.containsAllRelevance(docs(s, dir), bm25Probes)
       graft.text.RetrievalEval.evaluate(ranking, rel, k = 10)
         .select(col("query_id"), col("n_relevant"),
           graft.functions.Portable.r6(col("mrr")).as("mrr"),
           graft.functions.Portable.r6(col("recall_at_k")).as("recall_at_10"),
           graft.functions.Portable.r6(col("ndcg_at_k")).as("ndcg_at_10"))
     },
-      s"""WITH qt(query_id, term) AS (VALUES
-         |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-         |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-         |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-         |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-         |t AS (SELECT id, unnest(toks) AS term FROM tok),
-         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-         |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |sc AS (SELECT qt.query_id, tf.id,
-         |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-         |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
+      s"""WITH $bm25ProbeScoresSql,
          |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
          |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 10),
          |rel AS (SELECT q.query_id, t2.id FROM tok t2, qt q WHERE list_contains(t2.toks, q.term)
@@ -576,49 +561,33 @@ object TextQueries {
          |pq AS (SELECT query_id,
          |    min(CASE WHEN isrel THEN rank END) AS frel,
          |    count(CASE WHEN isrel THEN 1 END) AS hits,
-         |    CAST(coalesce(sum(CASE WHEN isrel THEN CAST(floor((CAST(1 AS DOUBLE)/(ln(CAST(rank AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))) * 1000000 + 0.5)/1000000 AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS dcg
+         |    CAST(coalesce(sum(CASE WHEN isrel THEN CAST(${r6("CAST(1 AS DOUBLE)/(ln(CAST(rank AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))")} AS DECIMAL(38,6)) END), 0) AS DOUBLE) AS dcg
          |  FROM j GROUP BY 1),
          |f AS (SELECT pq.query_id, coalesce(n_relevant, 0) AS n_relevant, frel, hits, dcg,
          |    CASE WHEN coalesce(n_relevant, 0) > 0 THEN
          |      list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, least(n_relevant, 10)+1), i ->
-         |        floor((CAST(1 AS DOUBLE)/(ln(CAST(i AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))) * 1000000 + 0.5)/1000000)), (a, x) -> a + x)
+         |        ${r6("CAST(1 AS DOUBLE)/(ln(CAST(i AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))")})), (a, x) -> a + x)
          |    ELSE 0.0 END AS idcg
          |  FROM pq LEFT JOIN nrel USING (query_id))
          |SELECT query_id, CAST(n_relevant AS BIGINT) AS n_relevant,
-         |  ${graft.functions.Portable.r6Sql("coalesce(CASE WHEN frel IS NOT NULL THEN CAST(1 AS DOUBLE)/CAST(frel AS DOUBLE) END, 0)")} AS mrr,
-         |  ${graft.functions.Portable.r6Sql("CASE WHEN n_relevant > 0 THEN CAST(hits AS DOUBLE)/CAST(n_relevant AS DOUBLE) ELSE 0.0 END")} AS recall_at_10,
-         |  ${graft.functions.Portable.r6Sql("CASE WHEN idcg > 0 THEN dcg/idcg ELSE 0.0 END")} AS ndcg_at_10
+         |  ${r6("coalesce(CASE WHEN frel IS NOT NULL THEN CAST(1 AS DOUBLE)/CAST(frel AS DOUBLE) END, 0)")} AS mrr,
+         |  ${r6("CASE WHEN n_relevant > 0 THEN CAST(hits AS DOUBLE)/CAST(n_relevant AS DOUBLE) ELSE 0.0 END")} AS recall_at_10,
+         |  ${r6("CASE WHEN idcg > 0 THEN dcg/idcg ELSE 0.0 END")} AS ndcg_at_10
          |FROM f""".stripMargin),
 
     // judged-qrels (graded) variant: grade = matched-term count (1..3),
     // graded nDCG (gain 2^g−1) + cascade ERR (R = (2^g−1)/2^3) —
     // RetrievalEval.evaluateGraded over the same BM25 top-10 ranking
     QueryDef("q_retrieval_eval_graded", { (s, dir) =>
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val ranking = Bm25.retrieveTopK(docs(s, dir), qs, k = 10)
+      val ranking = Bm25.retrieveTopK(docs(s, dir), bm25Probes, k = 10)
         .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      val qrels = graft.text.RetrievalEval.gradedTermRelevance(docs(s, dir), qs)
+      val qrels = graft.text.RetrievalEval.gradedTermRelevance(docs(s, dir), bm25Probes)
       graft.text.RetrievalEval.evaluateGraded(ranking, qrels, k = 10, maxGrade = 3)
         .select(col("query_id"), col("n_judged"),
           col("ndcg_graded_at_k").as("ndcg_graded_at_10"),
           col("err_graded_at_k").as("err_graded_at_10"))
     },
-      s"""WITH qt(query_id, term) AS (VALUES
-         |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-         |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-         |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-         |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-         |t AS (SELECT id, unnest(toks) AS term FROM tok),
-         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-         |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |sc AS (SELECT qt.query_id, tf.id,
-         |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-         |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
+      s"""WITH $bm25ProbeScoresSql,
          |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
          |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 10),
          |grel AS (SELECT q.query_id, t2.id, count(*) AS grade
@@ -631,17 +600,17 @@ object TextQueries {
          |    exp(coalesce(sum(ln(1 - rr)) OVER (PARTITION BY query_id ORDER BY rank
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)) AS cont FROM j),
          |pq AS (SELECT query_id,
-         |    CAST(coalesce(sum(CAST(${graft.functions.Portable.r6Sql("(pow(2, grade) - 1) / (ln(CAST(rank AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS dcg,
-         |    CAST(coalesce(sum(CAST(${graft.functions.Portable.r6Sql("rr / CAST(rank AS DOUBLE) * cont")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS err
+         |    ${dsum0(r6("(pow(2, grade) - 1) / (ln(CAST(rank AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))"))} AS dcg,
+         |    ${dsum0(r6("rr / CAST(rank AS DOUBLE) * cont"))} AS err
          |  FROM jc GROUP BY 1),
          |ideal AS (SELECT query_id,
-         |    CAST(coalesce(sum(CAST(${graft.functions.Portable.r6Sql("(pow(2, grade) - 1) / (ln(CAST(ir AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS idcg
+         |    ${dsum0(r6("(pow(2, grade) - 1) / (ln(CAST(ir AS DOUBLE) + 1.0)/ln(CAST(2 AS DOUBLE)))"))} AS idcg
          |  FROM (SELECT query_id, grade,
          |      row_number() OVER (PARTITION BY query_id ORDER BY grade DESC, id) AS ir FROM grel)
          |  WHERE ir <= 10 GROUP BY 1)
          |SELECT pq.query_id, CAST(coalesce(n_judged, 0) AS BIGINT) AS n_judged,
-         |  ${graft.functions.Portable.r6Sql("CASE WHEN idcg > 0 THEN dcg/idcg ELSE 0.0 END")} AS ndcg_graded_at_10,
-         |  ${graft.functions.Portable.r6Sql("coalesce(err, 0)")} AS err_graded_at_10
+         |  ${r6("CASE WHEN idcg > 0 THEN dcg/idcg ELSE 0.0 END")} AS ndcg_graded_at_10,
+         |  ${r6("coalesce(err, 0)")} AS err_graded_at_10
          |FROM pq LEFT JOIN nrel USING (query_id) LEFT JOIN ideal USING (query_id)""".stripMargin),
 
     // RBO over the graded qrels (round-12 pull): rank-biased overlap of
@@ -653,16 +622,12 @@ object TextQueries {
     // judgments, composed entirely from existing operators.
     QueryDef("q_rbo_graded", { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
       val d = docs(s, dir)
-      val ranking = Bm25.retrieveTopK(d, qs, k = 10)
+      val ranking = Bm25.retrieveTopK(d, bm25Probes, k = 10)
         .select(col("query_id"), col("id"), col("rank"))
       val wIdeal = Window.partitionBy(col("query_id"))
         .orderBy(col("grade").desc, col("id").asc)
-      val ideal = graft.text.RetrievalEval.gradedTermRelevance(d, qs)
+      val ideal = graft.text.RetrievalEval.gradedTermRelevance(d, bm25Probes)
         .select(col("query_id"), col("id"), row_number().over(wIdeal).as("rank"))
         .filter(col("rank") <= 10)
       graft.text.RetrievalEval.rbo(ranking, ideal, "query_id", "id", "rank", k = 10, p = 0.9)
@@ -676,19 +641,7 @@ object TextQueries {
       val wts = (1 to 10).map(d => s"($d, CAST(${math.pow(0.9, d)} AS DOUBLE))")
         .mkString(", ")
       s"""WITH wts(d, w) AS (VALUES $wts),
-         |qt(query_id, term) AS (VALUES
-         |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-         |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-         |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-         |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-         |t AS (SELECT id, unnest(toks) AS term FROM tok),
-         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-         |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |sc AS (SELECT qt.query_id, tf.id,
-         |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-         |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
+         |$bm25ProbeScoresSql,
          |a AS (SELECT query_id, id, rk FROM (SELECT query_id, id,
          |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rk FROM sc) WHERE rk <= 10),
          |grel AS (SELECT q.query_id, t2.id, count(*) AS grade
@@ -709,11 +662,11 @@ object TextQueries {
          |tt AS (SELECT tg.query_id, tg.d, tg.x, w * CAST(x AS DOUBLE) / CAST(tg.d AS DOUBLE) AS term
          |  FROM tg JOIN wts ON wts.d = tg.d),
          |f AS (SELECT query_id, CAST(max(CASE WHEN d = 10 THEN x END) AS BIGINT) AS xk,
-         |    CAST(sum(CAST(floor(term * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
+         |    ${dsum(r6("term"))} AS ss
          |  FROM tt GROUP BY 1)
          |SELECT sz.query_id, n_a, n_b,
-         |  floor(CAST(xk AS DOUBLE) / 10.0 * 1000000 + 0.5) / 1000000 AS overlap_k,
-         |  floor((1.0 - 0.9) / 0.9 * ss * 1000000 + 0.5) / 1000000 AS rbo
+         |  ${r6("CAST(xk AS DOUBLE) / 10.0")} AS overlap_k,
+         |  ${r6("(1.0 - 0.9) / 0.9 * ss")} AS rbo
          |FROM f JOIN sz ON f.query_id = sz.query_id""".stripMargin
     }),
 
@@ -722,7 +675,7 @@ object TextQueries {
       InvertedIndex
         .postings(docs(s, dir), "doc_id", "text", k = 5, minDf = 2L, maxDf = 400L)
         .select(col("term"), col("df"), col("doc_id"), col("tf"), col("rk")),
-      """WITH tk AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH tk AS (SELECT doc_id, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |tf AS (SELECT term, doc_id, count(*) AS tf FROM tk GROUP BY 1, 2),
         |d AS (SELECT *, count(*) OVER (PARTITION BY term) AS df FROM tf),
         |r AS (SELECT term, df, doc_id, tf,
@@ -744,7 +697,7 @@ object TextQueries {
     // bigram PMI collocations over the corpus
     QueryDef("q_pmi", (s, dir) =>
       Collocations.bigramPmi(docs(s, dir), "text", minCount = 30L),
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
+      s"""WITH tk AS (SELECT ${wordTokensSql("text")} AS ts FROM documents),
         |u AS (SELECT unnest(ts) AS t FROM tk),
         |uni AS (SELECT t, count(*) AS c FROM u GROUP BY 1),
         |bgl AS (SELECT unnest(list_transform(range(1, len(ts)), i -> {'a': ts[i], 'b': ts[i+1]})) AS bg
@@ -752,7 +705,7 @@ object TextQueries {
         |bi AS (SELECT bg.a AS a, bg.b AS b, count(*) AS c_ab FROM bgl GROUP BY 1, 2),
         |tot AS (SELECT (SELECT sum(c) FROM uni) AS n_uni, (SELECT sum(c_ab) FROM bi) AS n_bi)
         |SELECT bi.a, bi.b, bi.c_ab,
-        |  floor((ln((CAST(bi.c_ab AS DOUBLE) * n_uni * n_uni) / (CAST(ua.c AS DOUBLE) * ub.c * n_bi))) * 1000000 + 0.5) / 1000000 AS pmi
+        |  ${r6("ln((CAST(bi.c_ab AS DOUBLE) * n_uni * n_uni) / (CAST(ua.c AS DOUBLE) * ub.c * n_bi))")} AS pmi
         |FROM bi
         |JOIN uni ua ON bi.a = ua.t
         |JOIN uni ub ON bi.b = ub.t
@@ -762,7 +715,7 @@ object TextQueries {
     // word-vocabulary fit: top-N words by count with deterministic ids
     QueryDef("q_vocab_words", (s, dir) =>
       WordVocab.fit(docs(s, dir), "text", maxSize = 1000, minCount = 2L),
-      """WITH tk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word FROM documents),
+      s"""WITH tk AS (SELECT unnest(${wordTokensSql("text")}) AS word FROM documents),
         |c AS (SELECT word, count(*) AS n FROM tk GROUP BY 1),
         |top AS (SELECT word, n FROM c WHERE n >= 2 ORDER BY n DESC, word LIMIT 1000)
         |SELECT word, n, CAST(row_number() OVER (ORDER BY n DESC, word) AS BIGINT) AS word_id FROM top""".stripMargin),
@@ -776,7 +729,7 @@ object TextQueries {
           WordVocab.fit(d, "text", maxSize = 20, minCount = 2L))
         .select(col("id").as("doc_id"), col("pos"), col("word_id"))
     },
-      """WITH d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
+      s"""WITH d AS (SELECT doc_id, ${wordTokensSql("text")} AS ts FROM documents),
         |tk AS (SELECT unnest(ts) AS word FROM d),
         |c AS (SELECT word, count(*) AS n FROM tk GROUP BY 1),
         |top AS (SELECT word, n FROM c WHERE n >= 2 ORDER BY n DESC, word LIMIT 20),
@@ -802,12 +755,12 @@ object TextQueries {
       graft.text.Keywords.termLift(docs(s, dir), "lang", minCount = 25L)
         .select(col("group").as("lang"), col("term"), col("n"),
           graft.functions.Portable.r6(col("lift")).as("lift")),
-      """WITH t AS (SELECT lang, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT lang, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |lt AS (SELECT lang, term, count(*) AS n FROM t GROUP BY 1, 2),
         |pg AS (SELECT lang, sum(n) AS ng FROM lt GROUP BY 1),
         |pt AS (SELECT term, sum(n) AS nt FROM lt GROUP BY 1),
         |tot AS (SELECT sum(n) AS nn FROM lt)
-        |SELECT lang, term, n, floor(((CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) / (CAST(nt AS DOUBLE)/CAST(nn AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS lift
+        |SELECT lang, term, n, ${r6("(CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) / (CAST(nt AS DOUBLE)/CAST(nn AS DOUBLE))")} AS lift
         |FROM lt JOIN pg USING (lang) JOIN pt USING (term), tot WHERE n >= 25""".stripMargin),
 
     // per-source KL divergence from the corpus unigram distribution
@@ -815,15 +768,12 @@ object TextQueries {
     QueryDef("q_kl", (s, dir) =>
       graft.text.Keywords.groupDivergence(docs(s, dir), "source")
         .select(col("group").as("source"), graft.functions.Portable.r6(col("kl")).as("kl")),
-      """WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT source, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |lt AS (SELECT source, term, count(*) AS n FROM t GROUP BY 1, 2),
         |pg AS (SELECT source, sum(n) AS ng FROM lt GROUP BY 1),
         |pt AS (SELECT term, sum(n) AS nt FROM lt GROUP BY 1),
         |tot AS (SELECT sum(n) AS nn FROM lt)
-        |SELECT source, floor(CAST(sum(CAST(
-        |  (CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) *
-        |  ln((CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) / (CAST(nt AS DOUBLE)/CAST(nn AS DOUBLE)))
-        |  AS DECIMAL(38,12))) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS kl
+        |SELECT source, ${r6("CAST(sum(CAST( (CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) * ln((CAST(n AS DOUBLE)/CAST(ng AS DOUBLE)) / (CAST(nt AS DOUBLE)/CAST(nn AS DOUBLE))) AS DECIMAL(38,12))) AS DOUBLE)")} AS kl
         |FROM lt JOIN pg USING (source) JOIN pt USING (term), tot GROUP BY source""".stripMargin),
 
     // per-doc n-gram novelty: fraction of a doc's distinct shingles
@@ -836,7 +786,7 @@ object TextQueries {
          |dft AS (SELECT sh, count(*) AS df FROM shh GROUP BY 1)
          |SELECT id AS doc_id, count(*) AS n_shingles,
          |  count(CASE WHEN df = 1 THEN 1 END) AS n_unique,
-         |  floor((CAST(count(CASE WHEN df = 1 THEN 1 END) AS DOUBLE) / count(*)) * 1000000 + 0.5) / 1000000 AS novelty
+         |  ${r6("CAST(count(CASE WHEN df = 1 THEN 1 END) AS DOUBLE) / count(*)")} AS novelty
          |FROM shh JOIN dft USING (sh) GROUP BY id""".stripMargin),
 
     // per-doc word-distribution entropy (repetitiveness signal)
@@ -844,13 +794,13 @@ object TextQueries {
       graft.text.Importance.wordEntropy(docs(s, dir), "doc_id", "text")
         .select(col("id").as("doc_id"), col("n_tokens"),
           graft.functions.Portable.r6(col("entropy")).as("entropy")),
-      """WITH t AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |c AS (SELECT doc_id, term, count(*) AS n FROM t GROUP BY 1, 2),
         |a AS (SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_tokens,
         |  CAST(sum(CAST(n * ln(CAST(n AS DOUBLE)) AS DECIMAL(38,12))) AS DOUBLE) AS snln
         |  FROM c GROUP BY 1)
         |SELECT doc_id, n_tokens,
-        |  floor((ln(CAST(n_tokens AS DOUBLE)) - snln / CAST(n_tokens AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS entropy
+        |  ${r6("ln(CAST(n_tokens AS DOUBLE)) - snln / CAST(n_tokens AS DOUBLE)")} AS entropy
         |FROM a""".stripMargin),
 
     // DSIR-style importance weights: target slice = lang 'en'
@@ -859,21 +809,21 @@ object TextQueries {
         .importanceScore(docs(s, dir), "doc_id", "text", col("lang") === "en")
         .select(col("id").as("doc_id"), col("n_tokens"),
           graft.functions.Portable.r6(col("llr")).as("llr")),
-      """WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id, (lang = 'en') AS tgt, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |c AS (SELECT term, count(*) AS nc, count(CASE WHEN tgt THEN 1 END) AS nt FROM t GROUP BY 1),
         |tot AS (SELECT sum(nc) AS tc, sum(nt) AS tt, count(*) AS v FROM c),
         |r AS (SELECT term,
         |  ln(CAST(nt + 1 AS DOUBLE) / CAST(tt + v AS DOUBLE)) -
         |  ln(CAST(nc + 1 AS DOUBLE) / CAST(tc + v AS DOUBLE)) AS lr FROM c, tot)
         |SELECT doc_id, count(*) AS n_tokens,
-        |  floor((CAST(sum(CAST(lr AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS llr
+        |  ${r6("CAST(sum(CAST(lr AS DECIMAL(38,12))) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS llr
         |FROM t JOIN r USING (term) GROUP BY 1""".stripMargin),
 
     // hashing-trick features: 64-dim signed hashed bag of words
     QueryDef("q_feature_hash", (s, dir) =>
       graft.text.FeatureHash.hashedFeatures(docs(s, dir), "doc_id", "text", 64)
         .select(col("id").as("doc_id"), col("bucket"), col("w")),
-      s"""WITH t AS (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id, unnest(${wordTokensSql("text")}) AS term FROM documents),
          |h AS (SELECT doc_id, ${h32("term")} AS h FROM t)
          |SELECT doc_id, h % 64 AS bucket, CAST(sum((h // 64) % 2 * 2 - 1) AS BIGINT) AS w
          |FROM h GROUP BY 1, 2""".stripMargin),
@@ -885,16 +835,16 @@ object TextQueries {
         .select(col("doc_id"), col("st.n_sentences").as("n_sentences"),
           col("st.n_words").as("n_words"),
           graft.functions.Portable.r6(col("st.avg_sentence_len")).as("avg_sentence_len")),
-      """WITH s AS (SELECT doc_id,
+      s"""WITH s AS (SELECT doc_id,
         |    list_filter(list_transform(string_split_regex(text, '[.!?]+'), x -> trim(x)), x -> x <> '') AS sents
         |  FROM documents),
         |w AS (SELECT doc_id, CAST(len(sents) AS BIGINT) AS n_sentences,
         |    CAST(coalesce(list_sum(list_transform(sents,
-        |      x -> len(list_filter(string_split_regex(lower(x), '[^a-z]+'), t -> t <> '')))), 0) AS BIGINT) AS n_words
+        |      x -> len(${wordTokensSql("x")}))), 0) AS BIGINT) AS n_words
         |  FROM s)
         |SELECT doc_id, n_sentences, n_words,
         |  CASE WHEN n_sentences > 0 THEN
-        |    floor((CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)) * 1000000 + 0.5) / 1000000
+        |    ${r6("CAST(n_words AS DOUBLE) / CAST(n_sentences AS DOUBLE)")}
         |  END AS avg_sentence_len
         |FROM w""".stripMargin),
 
@@ -906,7 +856,7 @@ object TextQueries {
         .select(col("id").as("doc_id"), col("n_tokens"), col("n_oov"),
           graft.functions.Portable.r6(col("oov_rate")).as("oov_rate"))
     },
-      """WITH d AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts FROM documents),
+      s"""WITH d AS (SELECT doc_id, ${wordTokensSql("text")} AS ts FROM documents),
         |tk AS (SELECT unnest(ts) AS word FROM d),
         |c AS (SELECT word, count(*) AS n FROM tk GROUP BY 1),
         |v AS (SELECT word FROM c WHERE n >= 2 ORDER BY n DESC, word LIMIT 1000),
@@ -914,7 +864,7 @@ object TextQueries {
         |j AS (SELECT p.doc_id, CASE WHEN v.word IS NULL THEN 1 ELSE 0 END AS oov
         |      FROM p LEFT JOIN v USING (word))
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens, CAST(sum(oov) AS BIGINT) AS n_oov,
-        |  floor(CAST(sum(oov) AS DOUBLE) / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS oov_rate
+        |  ${r6("CAST(sum(oov) AS DOUBLE) / CAST(count(*) AS DOUBLE)")} AS oov_rate
         |FROM j GROUP BY 1""".stripMargin),
 
     // Jensen-Shannon divergence per source vs the rest of the corpus
@@ -923,7 +873,7 @@ object TextQueries {
       graft.text.Keywords.jsDivergence(docs(s, dir), "source")
         .select(col("group").as("source"),
           graft.functions.Portable.r6(col("js")).as("js")),
-      """WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT source, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |lt AS (SELECT source, term, count(*) AS n FROM t GROUP BY 1, 2),
         |pg AS (SELECT source, sum(n) AS ng FROM lt GROUP BY 1),
         |pt AS (SELECT term, sum(n) AS nt FROM lt GROUP BY 1),
@@ -943,7 +893,7 @@ object TextQueries {
         |      FROM terms GROUP BY 1)
         |SELECT source,
         |  CASE WHEN nr > 0 THEN
-        |    floor((s + ln(2.0) / 2.0 * (1.0 - qi)) * 1000000 + 0.5) / 1000000 END AS js
+        |    ${r6("s + ln(2.0) / 2.0 * (1.0 - qi)")} END AS js
         |FROM m""".stripMargin),
 
     // per-lang tokenizer fertility: subword tokens per word, bytes/token
@@ -953,9 +903,9 @@ object TextQueries {
           col("n_tokens"), col("n_bytes"),
           graft.functions.Portable.r6(col("fertility")).as("fertility"),
           graft.functions.Portable.r6(col("bytes_per_token")).as("bytes_per_token")),
-      """WITH v AS (SELECT lang,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS BIGINT) AS w,
-        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS t,
+      s"""WITH v AS (SELECT lang,
+        |    CAST(len(${wordTokensSql("text")}) AS BIGINT) AS w,
+        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]')) AS BIGINT) AS t,
         |    CAST(strlen(text) AS BIGINT) AS b
         |  FROM documents),
         |g AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(w) AS BIGINT) AS n_words,
@@ -963,9 +913,9 @@ object TextQueries {
         |      FROM v GROUP BY 1)
         |SELECT lang, n_docs, n_words, n_tokens, n_bytes,
         |  CASE WHEN n_words > 0 THEN
-        |    floor(CAST(n_tokens AS DOUBLE) / CAST(n_words AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS fertility,
+        |    ${r6("CAST(n_tokens AS DOUBLE) / CAST(n_words AS DOUBLE)")} END AS fertility,
         |  CASE WHEN n_tokens > 0 THEN
-        |    floor(CAST(n_bytes AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS bytes_per_token
+        |    ${r6("CAST(n_bytes AS DOUBLE) / CAST(n_tokens AS DOUBLE)")} END AS bytes_per_token
         |FROM g""".stripMargin),
 
     // Zipf slope of the top-200 term frequencies per source
@@ -975,29 +925,29 @@ object TextQueries {
         .select(col("group").as("source"), col("n_terms"),
           graft.functions.Portable.r6(col("slope")).as("slope"),
           graft.functions.Portable.r6(col("intercept")).as("intercept")),
-      """WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS term FROM documents),
+      s"""WITH t AS (SELECT source, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |lt AS (SELECT source, term, count(*) AS n FROM t GROUP BY 1, 2),
         |rk AS (SELECT source, n,
         |        row_number() OVER (PARTITION BY source ORDER BY n DESC, term) AS r
         |      FROM lt QUALIFY r <= 200),
         |xy AS (SELECT source,
-        |        floor(ln(CAST(r AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS x,
-        |        floor(ln(CAST(n AS DOUBLE)) * 1000000 + 0.5) / 1000000 AS y
+        |        ${r6("ln(CAST(r AS DOUBLE))")} AS x,
+        |        ${r6("ln(CAST(n AS DOUBLE))")} AS y
         |      FROM rk),
         |m AS (SELECT source, CAST(count(*) AS BIGINT) AS n_terms,
-        |        CAST(coalesce(sum(CAST(x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sx,
-        |        CAST(coalesce(sum(CAST(y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sy,
-        |        CAST(coalesce(sum(CAST(x * y AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxy,
-        |        CAST(coalesce(sum(CAST(x * x AS DECIMAL(38,6))), 0) AS DOUBLE) AS sxx
+        |        ${dsum0("x")} AS sx,
+        |        ${dsum0("y")} AS sy,
+        |        ${dsum0("x * y")} AS sxy,
+        |        ${dsum0("x * x")} AS sxx
         |      FROM xy GROUP BY 1),
         |f AS (SELECT source, n_terms,
         |        (CAST(n_terms AS DOUBLE) * sxy - sx * sy)
         |          / nullif(CAST(n_terms AS DOUBLE) * sxx - sx * sx, 0.0) AS slope, sx, sy
         |      FROM m)
         |SELECT source, n_terms,
-        |  CASE WHEN n_terms >= 3 THEN floor(slope * 1000000 + 0.5) / 1000000 END AS slope,
+        |  CASE WHEN n_terms >= 3 THEN ${r6("slope")} END AS slope,
         |  CASE WHEN n_terms >= 3 THEN
-        |    floor((sy - slope * sx) / CAST(n_terms AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS intercept
+        |    ${r6("(sy - slope * sx) / CAST(n_terms AS DOUBLE)")} END AS intercept
         |FROM f""".stripMargin),
 
     // markup density + strip stats over deterministically HTML-wrapped
@@ -1013,18 +963,17 @@ object TextQueries {
           col("m.n_links").as("n_links"), col("m.markup_chars").as("markup_chars"),
           col("m.stripped_len").as("stripped_len"),
           graft.functions.Portable.r6(col("m.text_ratio")).as("text_ratio")),
-      """WITH w AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0
+      s"""WITH w AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0
         |    THEN concat('<p class="x">', text, '</p><a href="y">l</a>') ELSE text END AS t
         |  FROM documents),
         |s AS (SELECT doc_id, t, regexp_extract_all(t, '<[^>]*>') AS tags FROM w)
         |SELECT doc_id,
         |  CAST(len(tags) AS BIGINT) AS n_tags,
-        |  CAST(len(regexp_extract_all(t, '<[aA][\s>]')) AS BIGINT) AS n_links,
+        |  CAST(len(regexp_extract_all(t, '<[aA][\\s>]')) AS BIGINT) AS n_links,
         |  CAST(coalesce(length(array_to_string(tags, '')), 0) AS BIGINT) AS markup_chars,
         |  CAST(length(regexp_replace(t, '<[^>]*>', '', 'g')) AS BIGINT) AS stripped_len,
         |  CASE WHEN length(t) > 0 THEN
-        |    floor(CAST(length(regexp_replace(t, '<[^>]*>', '', 'g')) AS DOUBLE)
-        |      / CAST(length(t) AS DOUBLE) * 1000000 + 0.5) / 1000000 END AS text_ratio
+        |    ${r6("CAST(length(regexp_replace(t, '<[^>]*>', '', 'g')) AS DOUBLE) / CAST(length(t) AS DOUBLE)")} END AS text_ratio
         |FROM s""".stripMargin),
 
     // CCNet-style per-language LM terciles (head/middle/tail summary)
@@ -1034,7 +983,7 @@ object TextQueries {
           graft.functions.Portable.r6(col("mean_lp")).as("mean_lp"),
           graft.functions.Portable.r6(col("min_lp")).as("min_lp"),
           graft.functions.Portable.r6(col("max_lp")).as("max_lp")),
-      """WITH t AS (SELECT doc_id AS id, unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
+      s"""WITH t AS (SELECT doc_id AS id, unnest(${wordTokensSql("text")}) AS term FROM documents),
         |tf AS (SELECT id, term, count(*) AS tf FROM t GROUP BY 1, 2),
         |tc AS (SELECT id, term, tf, sum(tf) OVER (PARTITION BY term) AS ct FROM tf),
         |ds AS (SELECT id, sum(tf*ln(CAST(ct AS DOUBLE))) AS a, sum(tf) AS tt FROM tc GROUP BY 1),
@@ -1045,10 +994,9 @@ object TextQueries {
         |        CAST(ntile(3) OVER (PARTITION BY lang ORDER BY lp DESC, id) AS BIGINT) AS bucket
         |      FROM wg)
         |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  floor(CAST(sum(CAST(floor(lp * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE)
-        |    / CAST(count(*) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS mean_lp,
-        |  floor(min(lp) * 1000000 + 0.5) / 1000000 AS min_lp,
-        |  floor(max(lp) * 1000000 + 0.5) / 1000000 AS max_lp
+        |  ${r6(s"${dsum(r6("lp"))} / CAST(count(*) AS DOUBLE)")} AS mean_lp,
+        |  ${r6("min(lp)")} AS min_lp,
+        |  ${r6("max(lp)")} AS max_lp
         |FROM bk GROUP BY 1, 2""".stripMargin),
 
     // URL canonicalization over synthesized messy URLs (case, userinfo,
@@ -1131,11 +1079,11 @@ object TextQueries {
          |tt AS (SELECT t.lang, t.d, t.x, w * CAST(x AS DOUBLE) / CAST(t.d AS DOUBLE) AS term
          |  FROM t JOIN wts ON wts.d = t.d),
          |f AS (SELECT lang, CAST(max(CASE WHEN d = 10 THEN x END) AS BIGINT) AS xk,
-         |    CAST(sum(CAST(floor(term * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS ss
+         |    ${dsum(r6("term"))} AS ss
          |  FROM tt GROUP BY 1)
          |SELECT sz.lang, n_a, n_b,
-         |  floor(CAST(xk AS DOUBLE) / 10.0 * 1000000 + 0.5) / 1000000 AS overlap_k,
-         |  floor((1.0 - 0.9) / 0.9 * ss * 1000000 + 0.5) / 1000000 AS rbo
+         |  ${r6("CAST(xk AS DOUBLE) / 10.0")} AS overlap_k,
+         |  ${r6("(1.0 - 0.9) / 0.9 * ss")} AS rbo
          |FROM f JOIN sz ON f.lang = sz.lang""".stripMargin
     }),
 
@@ -1208,7 +1156,7 @@ object TextQueries {
       val allStop = TextFunctions.Stopwords.flatMap(_._2).distinct
         .map(w => s"'$w'").mkString("[", ",", "]")
       s"""WITH tk AS (SELECT source, doc_id,
-         |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS toks
+         |    ${wordTokensSql("text")} AS toks
          |  FROM documents),
          |ex AS (SELECT source, doc_id, unnest(toks) AS w,
          |    unnest(range(1, len(toks) + 1)) AS pos FROM tk),
@@ -1228,8 +1176,7 @@ object TextQueries {
          |    unnest(string_split(phrase, ' ')) AS w FROM pd),
          |sc AS (SELECT pw.source, pw.phrase, max(pw.n_occ) AS n_occurrences,
          |    CAST(max(pw.len) AS BIGINT) AS n_words,
-         |    floor(CAST(sum(CAST(floor(CAST(deg AS DOUBLE) / CAST(freq AS DOUBLE)
-         |      * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) * 1000000 + 0.5) / 1000000 AS score
+         |    ${r6(s"${dsum(r6("CAST(deg AS DOUBLE) / CAST(freq AS DOUBLE)"))}")} AS score
          |  FROM pw JOIN st ON st.source = pw.source AND st.w = pw.w GROUP BY 1, 2)
          |SELECT source, phrase, n_words, n_occurrences, score, rk FROM (
          |  SELECT source, phrase, n_words, n_occurrences, score,
@@ -1262,7 +1209,7 @@ object TextQueries {
       val rSides = (1 to 4).map(grams("rt", "", _)).mkString(" UNION ALL ")
       val dropHash = h32("concat(CAST(id AS VARCHAR), '|', CAST(i AS VARCHAR))")
       s"""WITH tk AS (SELECT source, doc_id AS id,
-         |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS rt FROM documents),
+         |    ${wordTokensSql("text")} AS rt FROM documents),
          |base AS (SELECT source, id, rt,
          |    list_filter(rt, (x, i) -> $dropHash % 7 <> 0) AS ct FROM tk),
          |cg AS (SELECT source, id, n, gram, count(*) AS cc FROM ($cSides) GROUP BY 1, 2, 3, 4),
@@ -1285,14 +1232,12 @@ object TextQueries {
          |    CASE WHEN t3 > 0 THEN CAST(coalesce(c3, 0) AS DOUBLE) / CAST(t3 AS DOUBLE) END AS p3,
          |    CASE WHEN t4 > 0 THEN CAST(coalesce(c4, 0) AS DOUBLE) / CAST(t4 AS DOUBLE) END AS p4
          |  FROM tots t LEFT JOIN cw USING (source)),
-         |b AS (SELECT *, floor((CASE WHEN cand_tokens >= ref_tokens THEN 1.0
-         |    WHEN cand_tokens > 0 THEN exp(1.0 - CAST(ref_tokens AS DOUBLE) / CAST(cand_tokens AS DOUBLE)) END)
-         |    * 1000000 + 0.5) / 1000000 AS bp FROM p)
+         |b AS (SELECT *, ${r6("CASE WHEN cand_tokens >= ref_tokens THEN 1.0 WHEN cand_tokens > 0 THEN exp(1.0 - CAST(ref_tokens AS DOUBLE) / CAST(cand_tokens AS DOUBLE)) END")} AS bp FROM p)
          |SELECT source, n_pairs, cand_tokens, ref_tokens, bp,
-         |  floor(p1 * 1000000 + 0.5) / 1000000 AS p1, floor(p2 * 1000000 + 0.5) / 1000000 AS p2,
-         |  floor(p3 * 1000000 + 0.5) / 1000000 AS p3, floor(p4 * 1000000 + 0.5) / 1000000 AS p4,
+         |  ${r6("p1")} AS p1, ${r6("p2")} AS p2,
+         |  ${r6("p3")} AS p3, ${r6("p4")} AS p4,
          |  CASE WHEN (p1 = 0.0 OR p2 = 0.0 OR p3 = 0.0 OR p4 = 0.0) THEN 0.0
-         |    ELSE floor(bp * exp((((ln(p1) + ln(p2)) + ln(p3)) + ln(p4)) / 4) * 1000000 + 0.5) / 1000000 END AS bleu
+         |    ELSE ${r6("bp * exp((((ln(p1) + ln(p2)) + ln(p3)) + ln(p4)) / 4)")} END AS bleu
          |FROM b""".stripMargin
     }),
 
@@ -1302,17 +1247,11 @@ object TextQueries {
       graft.text.QueryLikelihood
         .retrieveTopK(
           docs(s, dir),
-          Seq(
-            "q_joins"  -> Seq("join", "hash", "merge"),
-            "q_scan"   -> Seq("scan", "filter", "column"),
-            "q_stream" -> Seq("stream", "window", "batch")),
+          bm25Probes,
           k = 10, mu = 1000.0)
         .select(col("query_id"), col("id").as("doc_id"), col("rank"), col("qlm")),
-      """WITH qt(query_id, term) AS (VALUES
-        |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-        |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-        |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-        |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+      s"""WITH $bm25ProbesSql,
+        |tok AS (SELECT doc_id AS id, ${wordTokensSql("text")} AS toks FROM documents),
         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
         |coll AS (SELECT CAST(CAST(sum(len(toks)) AS BIGINT) AS DOUBLE) AS c FROM tok),
         |tf AS (SELECT id, term, count(*) AS tf FROM (SELECT id, unnest(toks) AS term FROM tok)
@@ -1320,10 +1259,10 @@ object TextQueries {
         |cf AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tf GROUP BY 1),
         |ql AS (SELECT query_id, CAST(count(*) AS DOUBLE) AS qlen FROM qt JOIN cf USING (term) GROUP BY 1),
         |m AS (SELECT query_id, id,
-        |    CAST(sum(CAST(floor(ln(1.0 + CAST(tf AS DOUBLE) * c / (CAST(1000 AS DOUBLE) * CAST(cf AS DOUBLE))) * 1000000 + 0.5) / 1000000 AS DECIMAL(38,6))) AS DOUBLE) AS mt
+        |    ${dsum(r6("ln(1.0 + CAST(tf AS DOUBLE) * c / (CAST(1000 AS DOUBLE) * CAST(cf AS DOUBLE)))"))} AS mt
         |  FROM tf JOIN cf USING (term) JOIN qt USING (term), coll GROUP BY 1, 2),
         |s AS (SELECT query_id, m.id AS doc_id,
-        |    floor((mt + qlen * ln(CAST(1000 AS DOUBLE) / (dl + CAST(1000 AS DOUBLE)))) * 1000000 + 0.5) / 1000000 AS qlm
+        |    ${r6("mt + qlen * ln(CAST(1000 AS DOUBLE) / (dl + CAST(1000 AS DOUBLE)))")} AS qlm
         |  FROM m JOIN dl ON m.id = dl.id JOIN ql USING (query_id)),
         |r AS (SELECT query_id, doc_id, qlm,
         |    row_number() OVER (PARTITION BY query_id ORDER BY qlm DESC, doc_id) AS rank FROM s)
@@ -1344,11 +1283,11 @@ object TextQueries {
     // word2vec negative-sampling table: prob ~ count^0.75 + cumulative
     // sampling ranges over the vocabulary rank
     QueryDef("q_sampling_table", (s, dir) => WordVocab.samplingTable(docs(s, dir), "text"),
-      s"""WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS word
+      s"""WITH t AS (SELECT unnest(${wordTokensSql("text")}) AS word
          |  FROM documents),
          |c AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1),
          |wt AS (SELECT word, n, ${r6("pow(CAST(n AS DOUBLE), 0.75)")} AS weight FROM c),
-         |tot AS (SELECT CAST(sum(CAST(weight AS DECIMAL(38,6))) AS DOUBLE) AS tw FROM wt),
+         |tot AS (SELECT ${dsum("weight")} AS tw FROM wt),
          |pr AS (SELECT word, n, weight, ${r6("weight / t.tw")} AS prob FROM wt, tot t),
          |cm AS (SELECT *, CAST(sum(CAST(prob AS DECIMAL(38,6)))
          |    OVER (ORDER BY n DESC, word) AS DOUBLE) AS cum_hi FROM pr)
@@ -1358,8 +1297,8 @@ object TextQueries {
     // context, sliced row-locally from the carried token array
     QueryDef("q_kwic", (s, dir) =>
       graft.text.Concordance.kwic(docs(s, dir), "doc_id", "text", "spark", k = 3),
-      """WITH tok AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '') AS ts
+      s"""WITH tok AS (SELECT doc_id,
+        |    ${wordTokensSql("text")} AS ts
         |  FROM documents),
         |h AS (SELECT doc_id, ts, unnest(ts) AS w, unnest(range(0, len(ts))) AS pos FROM tok)
         |SELECT doc_id, CAST(pos AS BIGINT) AS pos,
@@ -1374,7 +1313,7 @@ object TextQueries {
       graft.text.LmEval.heldoutUnigramPerplexity(docs(s, dir), "doc_id", "text",
         smoothing = 1.0, trainPct = 70, seed = "lm42"),
       s"""WITH tk AS (SELECT ${h32("concat('lm42', '|', CAST(doc_id AS VARCHAR))")} % 100 < 70 AS train,
-         |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
+         |    unnest(${wordTokensSql("text")}) AS w
          |  FROM documents),
          |c AS (SELECT w, count(*) AS c FROM tk WHERE train GROUP BY 1),
          |ks AS (SELECT CAST(coalesce(sum(c), 0) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS v FROM c),
@@ -1399,11 +1338,11 @@ object TextQueries {
         s"SELECT (SELECT coalesce(sum(CASE WHEN id < $c THEN nt END), 0) FROM dt) AS nn, " +
           s"(SELECT count(CASE WHEN fd < $c THEN 1 END) FROM fw) AS vv").mkString("\nUNION ALL ")
       s"""WITH tk AS (SELECT doc_id AS id,
-         |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
+         |    unnest(${wordTokensSql("text")}) AS w
          |  FROM documents),
          |fw AS (SELECT w, min(id) AS fd FROM tk GROUP BY 1),
          |dt AS (SELECT doc_id AS id,
-         |    len(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS nt
+         |    len(${wordTokensSql("text")}) AS nt
          |  FROM documents),
          |mp AS ($melt),
          |pt AS (SELECT ${r6("ln(CAST(nn AS DOUBLE))")} AS x, ${r6("ln(CAST(vv AS DOUBLE))")} AS y
@@ -1427,7 +1366,7 @@ object TextQueries {
     QueryDef("q_term_burstiness", (s, dir) =>
       graft.text.Keywords.termBurstiness(docs(s, dir), "doc_id", "text", minDf = 25L),
       s"""WITH tk AS (SELECT doc_id,
-         |    unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w
+         |    unnest(${wordTokensSql("text")}) AS w
          |  FROM documents),
          |tf AS (SELECT doc_id, w, count(*) AS tf FROM tk GROUP BY 1, 2),
          |tm AS (SELECT w AS term, CAST(sum(tf) AS BIGINT) AS cf, count(*) AS df,
@@ -1445,13 +1384,8 @@ object TextQueries {
     QueryDef("q_bm25_prox", (s, dir) =>
       Bm25.scoreWithProximity(docs(s, dir), Seq("spark", "hash", "merge"),
         lambda = 2.0),
-      s"""WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-         |t AS (SELECT id, unnest(toks) AS term FROM tok),
-         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-         |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN ('spark','hash','merge') GROUP BY 1, 2),
-         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |bs AS (SELECT id, sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl))) AS raw
+      s"""WITH ${bm25StatsSql("('spark','hash','merge')")},
+         |bs AS (SELECT id, $bm25Sum AS raw
          |  FROM tf JOIN idf USING (term) JOIN dl USING (id), st GROUP BY id),
          |pos AS (SELECT id, p, term FROM (
          |    SELECT id, unnest(toks) AS term, generate_subscripts(toks, 1) AS p FROM tok)
@@ -1474,7 +1408,7 @@ object TextQueries {
         .withColumn("stem", TextFunctions.sStem(col("term")))
         .groupBy(col("stem"))
         .agg(countDistinct(col("term")).as("n_forms"), count(lit(1)).as("n_tokens")),
-      """WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'')) AS term FROM documents),
+      s"""WITH t AS (SELECT unnest(${wordTokensSql("text")}) AS term FROM documents),
         |s AS (SELECT term, CASE
         |  WHEN ends_with(term,'ies') THEN
         |    CASE WHEN ends_with(term,'eies') OR ends_with(term,'aies') THEN term
@@ -1531,7 +1465,7 @@ object TextQueries {
         .map(l => s"len(list_filter(toks, x -> list_contains(${stopwordSqlLists(l)}, x))) AS h_$l")
         .mkString(", ")
       s"""WITH pred AS ($langIdSelectSql),
-         |t AS (SELECT doc_id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
+         |t AS (SELECT doc_id, ${wordTokensSql("text")} AS toks FROM documents),
          |h AS (SELECT doc_id, $hitCols FROM t),
          |s AS (SELECT doc_id, list_reverse(list_sort([${langs.map(l => s"h_$l").mkString(", ")}])) AS hs FROM h)
          |SELECT pred.doc_id, pred.lang_pred,
@@ -1543,13 +1477,8 @@ object TextQueries {
     // RM1 pseudo-relevance expansion terms off the spark/hash/merge probe
     QueryDef("q_prf_terms", (s, dir) =>
       Bm25.expansionTerms(docs(s, dir), Seq("spark", "hash", "merge")),
-      s"""WITH tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-         |t AS (SELECT id, unnest(toks) AS term FROM tok),
-         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-         |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN ('spark','hash','merge') GROUP BY 1, 2),
-         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |bs AS (SELECT id, sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl))) AS raw
+      s"""WITH ${bm25StatsSql("('spark','hash','merge')")},
+         |bs AS (SELECT id, $bm25Sum AS raw
          |  FROM tf JOIN idf USING (term) JOIN dl USING (id), st GROUP BY id),
          |top AS (SELECT id FROM (SELECT id, ${r6("raw")} AS s0 FROM bs)
          |  ORDER BY s0 DESC, id LIMIT 10),
@@ -1565,7 +1494,7 @@ object TextQueries {
     // Yule's K repetitiveness constant per source
     QueryDef("q_yule_k", (s, dir) =>
       graft.text.Lexical.yuleK(docs(s, dir), Seq("source")),
-      s"""WITH t AS (SELECT source, unnest(list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')) AS w FROM documents),
+      s"""WITH t AS (SELECT source, unnest(${wordTokensSql("text")}) AS w FROM documents),
          |vocab AS (SELECT source, w, CAST(count(*) AS BIGINT) AS m FROM t GROUP BY 1, 2),
          |spec AS (SELECT source, m, CAST(count(*) AS BIGINT) AS vm FROM vocab GROUP BY 1, 2),
          |agg AS (SELECT source, CAST(sum(m * vm) AS BIGINT) AS n_tokens,
@@ -1607,29 +1536,13 @@ object TextQueries {
     // ERR@10 of the BM25 ranking — the cascade-model metric next to
     // q_retrieval_eval's nDCG
     QueryDef("q_err", { (s, dir) =>
-      val qs = Seq(
-        "q_joins"  -> Seq("join", "hash", "merge"),
-        "q_scan"   -> Seq("scan", "filter", "column"),
-        "q_stream" -> Seq("stream", "window", "batch"))
-      val ranking = Bm25.retrieveTopK(docs(s, dir), qs, k = 10)
+      val ranking = Bm25.retrieveTopK(docs(s, dir), bm25Probes, k = 10)
         .select(col("query_id"), col("id").as("doc_id"), col("rank"))
-      val rel = graft.text.RetrievalEval.containsAllRelevance(docs(s, dir), qs)
+      val rel = graft.text.RetrievalEval.containsAllRelevance(docs(s, dir), bm25Probes)
       graft.text.RetrievalEval.errAtK(ranking, rel, k = 10)
         .select(col("query_id"), col("n_relevant"), col("err_at_k").as("err_at_10"))
     },
-      s"""WITH qt(query_id, term) AS (VALUES
-         |  ('q_joins','join'), ('q_joins','hash'), ('q_joins','merge'),
-         |  ('q_scan','scan'), ('q_scan','filter'), ('q_scan','column'),
-         |  ('q_stream','stream'), ('q_stream','window'), ('q_stream','batch')),
-         |tok AS (SELECT doc_id AS id, list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x<>'') AS toks FROM documents),
-         |t AS (SELECT id, unnest(toks) AS term FROM tok),
-         |dl AS (SELECT id, CAST(len(toks) AS DOUBLE) AS dl FROM tok),
-         |st AS (SELECT (SELECT count(*) FROM documents) AS n_docs, (SELECT avg(dl) FROM dl) AS avgdl),
-         |tf AS (SELECT id, term, count(*) AS tf FROM t WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-         |idf AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |sc AS (SELECT qt.query_id, tf.id,
-         |    floor((sum(ln(1 + (n_docs - df + 0.5)/(df + 0.5)) * tf/(tf + 1.2*(1 - 0.75 + 0.75*dl/avgdl)))) * 1000000 + 0.5) / 1000000 AS bm25
-         |  FROM tf JOIN qt USING (term) JOIN idf USING (term) JOIN dl USING (id), st GROUP BY 1, 2),
+      s"""WITH $bm25ProbeScoresSql,
          |b AS (SELECT query_id, id AS doc_id, rank FROM (SELECT query_id, id, bm25,
          |    row_number() OVER (PARTITION BY query_id ORDER BY bm25 DESC, id) AS rank FROM sc) WHERE rank <= 10),
          |rel AS (SELECT q.query_id, t2.id FROM tok t2, qt q WHERE list_contains(t2.toks, q.term)
@@ -1677,7 +1590,7 @@ object TextQueries {
       {
       val wts = (1 to 20).map(d => s"($d, CAST(${math.pow(0.9, d)} AS DOUBLE))")
       s"""WITH t AS (SELECT doc_id % 2 = 0 AS h,
-         |    unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS term
+         |    unnest(${wordTokensSql("text")}) AS term
          |  FROM documents),
          |tc AS (SELECT h, term, CAST(count(*) AS BIGINT) AS n FROM t GROUP BY 1, 2),
          |rk AS (SELECT h, term,
@@ -1693,7 +1606,7 @@ object TextQueries {
          |    CAST(sum(coalesce(common.c, 0)) OVER (ORDER BY grid.d
          |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS x
          |  FROM grid LEFT JOIN common ON common.m = grid.d),
-         |rbo0 AS (SELECT CAST(coalesce(sum(CAST(${r6("w * CAST(x AS DOUBLE) / CAST(d AS DOUBLE)")} AS DECIMAL(38,6))), 0) AS DOUBLE) AS srb,
+         |rbo0 AS (SELECT ${dsum0(r6("w * CAST(x AS DOUBLE) / CAST(d AS DOUBLE)"))} AS srb,
          |    max(CASE WHEN d = 20 THEN x END) AS x20
          |  FROM terms),
          |sz AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM a) AS n_a,
@@ -1710,7 +1623,7 @@ object TextQueries {
     QueryDef("q_burrows", (s, dir) =>
       graft.text.Lexical.burrowsDelta(docs(s, dir), "source", nWords = 50),
       s"""WITH toks AS (SELECT source AS s,
-         |    unnest(list_filter(string_split_regex(lower(text),'[^a-z]+'), x -> x <> '')) AS w
+         |    unnest(${wordTokensSql("text")}) AS w
          |  FROM documents),
          |counts AS (SELECT s, w, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1, 2),
          |totals AS (SELECT s, CAST(sum(c) AS BIGINT) AS tot FROM counts GROUP BY 1),
@@ -1720,7 +1633,7 @@ object TextQueries {
          |    CAST(coalesce(counts.c, 0) AS DOUBLE) / CAST(totals.tot AS DOUBLE) AS f
          |  FROM totals CROSS JOIN top
          |  LEFT JOIN counts ON counts.s = totals.s AND counts.w = top.w),
-         |st AS (SELECT w, CAST(count(*) AS BIGINT) AS k, ${ds("f")} AS sf, ${ds("f * f")} AS qf
+         |st AS (SELECT w, CAST(count(*) AS BIGINT) AS k, ${dsum0(r6("f"))} AS sf, ${dsum0(r6("f * f"))} AS qf
          |  FROM grid GROUP BY 1),
          |z AS (SELECT grid.s, grid.w,
          |    CASE WHEN sqrt(greatest(qf / CAST(k AS DOUBLE) - (sf / CAST(k AS DOUBLE)) * (sf / CAST(k AS DOUBLE)), 0.0)) > 0
@@ -1728,7 +1641,7 @@ object TextQueries {
          |      ELSE 0.0 END AS z
          |  FROM grid JOIN st USING (w))
          |SELECT a.s AS source_a, b.s AS source_b, CAST(count(*) AS BIGINT) AS n_words,
-         |  ${r6(s"(${ds("abs(a.z - b.z)")}) / CAST(count(*) AS DOUBLE)")} AS delta
+         |  ${r6(s"(${dsum0(r6("abs(a.z - b.z)"))}) / CAST(count(*) AS DOUBLE)")} AS delta
          |FROM z a JOIN z b ON a.w = b.w AND a.s < b.s
          |GROUP BY 1, 2""".stripMargin)
   )

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 /** Cross-engine-portable numeric helpers for oracle-compared outputs.
   *
   * This is the one home of the convention: Spark code imports
-  * `Portable.{dsum, r6}`, oracle SQL uses [[graft.catalog.Shared]]'s
-  * `dsum`/`r6` (which forward to [[dsumSql]]/[[r6Sql]]), and no other
-  * file spells the convention out. `PortableSpec` fails on a local copy.
+  * `Portable.{dsum, dsum0, r6}`, oracle SQL uses [[graft.catalog.Shared]]'s
+  * `dsum`/`dsum0`/`r6` (which forward to [[dsumSql]]/[[dsum0Sql]]/[[r6Sql]]),
+  * and no other file spells the convention out. `PortableSpec` fails on a
+  * local copy.
   */
 object Portable {
 
@@ -48,4 +49,7 @@ object Portable {
 
   /** The DuckDB rendering of [[dsum]] — keep the two in lockstep. */
   def dsumSql(e: String): String = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"
+
+  /** The DuckDB rendering of [[dsum0]] — keep the two in lockstep. */
+  def dsum0Sql(e: String): String = s"CAST(coalesce(sum(CAST(($e) AS DECIMAL(38,6))), 0) AS DOUBLE)"
 }

@@ -133,14 +133,17 @@ object CodeMetadata {
     * Codes with NO numeric values (n = 0, e.g. generated categorical
     * events like time_of_day) get null mean/std instead of an ANSI
     * divide-by-zero — their rows then normalize/occlude to null values,
-    * matching the reference's null-propagating arithmetic.
+    * matching the reference's null-propagating arithmetic. A frame that
+    * already has both `values/mean` and `values/std` is returned as is.
     */
-  def withMeanStd(codeMetadata: DataFrame): DataFrame = {
-    val n = col(ValuesNOccurrences).cast("double")
-    val mean = when(n > 0, col(ValuesSum) / n)
-    val variance = when(n > 0, col(ValuesSumSqd) / n - mean * mean)
-    codeMetadata
-      .withColumn("values/mean", mean)
-      .withColumn("values/std", sqrt(greatest(variance, lit(0.0))))
-  }
+  def withMeanStd(codeMetadata: DataFrame): DataFrame =
+    if (Seq("values/mean", "values/std").forall(codeMetadata.columns.contains)) codeMetadata
+    else {
+      val n = col(ValuesNOccurrences).cast("double")
+      val mean = when(n > 0, col(ValuesSum) / n)
+      val variance = when(n > 0, col(ValuesSumSqd) / n - mean * mean)
+      codeMetadata
+        .withColumn("values/mean", mean)
+        .withColumn("values/std", sqrt(greatest(variance, lit(0.0))))
+    }
 }

@@ -108,7 +108,7 @@ object Evaluation {
       .withColumn("__N", sum(col("n")).over(wg))
       .withColumn(
         "ece",
-        sum((floor(term * 1000000.0 + 0.5) / 1000000.0).cast("decimal(38,6)"))
+        sum(r6(term).cast("decimal(38,6)"))
           .over(wg).cast("double") / col("__N").cast("double"))
       .drop("__sx", "__k", "__N")
   }
@@ -429,7 +429,7 @@ object Evaluation {
         sum(col("__p")).as("n_pos"),
         coalesce(
           sum(when(col("__p") === 1L,
-            (floor(prec * 1000000.0 + 0.5) / 1000000.0).cast("decimal(38,6)"))),
+            r6(prec).cast("decimal(38,6)"))),
           lit(0).cast("decimal(38,6)")).cast("double").as("__ap"))
       .withColumn(
         "ap",

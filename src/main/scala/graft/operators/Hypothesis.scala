@@ -207,7 +207,7 @@ object Hypothesis {
       .agg(
         sum(col("__na")).as("n"),
         count(lit(1)).as("k_arms"),
-        dsum0(floor(rr * 1000000.0 + 0.5) / 1000000.0).as("__rr"),
+        dsum0(r6(rr)).as("__rr"),
         dsum0(col("__ties")).as("__t"))
     val nD = col("n").cast("double")
     val h0 = lit(12.0) / (nD * (nD + 1.0)) * col("__rr") - lit(3.0) * (nD + 1.0)

@@ -26,11 +26,7 @@ object Normalize {
       codeModifiers: Seq[String] = Nil
   ): DataFrame = {
     val joinCols = Meds.Code +: codeModifiers
-    val withStats =
-      if (codeMetadata.columns.contains("values/mean") && codeMetadata.columns.contains("values/std"))
-        codeMetadata
-      else CodeMetadata.withMeanStd(codeMetadata)
-    val meta = withStats.select(
+    val meta = CodeMetadata.withMeanStd(codeMetadata).select(
       (joinCols.map(col) :+ col("code/vocab_index") :+ col("values/mean") :+ col("values/std")): _*
     )
     df.join(broadcast(meta), joinCols, "inner")

@@ -1,8 +1,8 @@
 package graft.operators
 
-import graft.functions.Portable.dsum
+import graft.functions.Portable.{dsum, r6}
 import graft.meds.Meds
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Outlier occlusion: null-out numeric values beyond a standard-deviation
@@ -27,11 +27,7 @@ object Outliers {
       codeModifiers: Seq[String] = Nil
   ): DataFrame = {
     val joinCols = Meds.Code +: codeModifiers
-    val withStats =
-      if (codeMetadata.columns.contains("values/mean") && codeMetadata.columns.contains("values/std"))
-        codeMetadata
-      else CodeMetadata.withMeanStd(codeMetadata)
-    val stats = withStats.select((joinCols :+ "values/mean" :+ "values/std").map(col): _*)
+    val stats = CodeMetadata.withMeanStd(codeMetadata).select((joinCols :+ "values/mean" :+ "values/std").map(col): _*)
 
     val v = col(Meds.NumericValue)
     val inlier = abs(v - col("values/mean")) <= lit(stddevCutoff) * col("values/std")
@@ -176,15 +172,13 @@ object Outliers {
         Quantiles.q(col("__v"), lit(pLo), ex).as("lo"),
         Quantiles.q(col("__v"), lit(pHi), ex).as("hi"))
     val clamped = least(greatest(col("__v"), col("lo")), col("hi"))
-    def rsum(e: Column): Column =
-      dsum(floor(e * 1000000.0 + 0.5) / 1000000.0)
     base
       .join(broadcast(bounds), by)
       .groupBy(by.map(col): _*)
       .agg(
         count(lit(1)).as("n"),
-        rsum(col("__v")).as("__s"),
-        rsum(clamped).as("__sw"),
+        dsum(r6(col("__v"))).as("__s"),
+        dsum(r6(clamped)).as("__sw"),
         max(col("lo")).as("lo"),
         max(col("hi")).as("hi"))
       .select(

@@ -26,6 +26,10 @@ import org.apache.spark.sql.functions._
   */
 object Seasonal {
 
+  /** Mean of the r6-pinned non-null values of `e`; NULL when there are none. */
+  private def dmean(e: Column): Column =
+    when(count(e) > 0, dsum(r6(e)) / count(e).cast("double"))
+
   /** `df(keyCol, tsCol)` → (key, n, peak_hour, peak_share, entropy_norm).
     * NULL timestamps are dropped.
     */
@@ -46,7 +50,7 @@ object Seasonal {
         max(col("n")).as("n"),
         max(when(col("__rk") === 1, col("hour"))).as("peak_hour"),
         max(when(col("__rk") === 1, share)).as("peak_share"),
-        dsum(floor(col("__h") * 1000000.0 + 0.5) / 1000000.0).as("__hsum"))
+        dsum(r6(col("__h"))).as("__hsum"))
       .withColumn("entropy_norm", col("__hsum") / math.log(24.0))
       .drop("__hsum")
   }
@@ -117,10 +121,6 @@ object Seasonal {
       col("__v"),
       lag(col("__v"), 1).over(w).as("__l1"),
       lag(col("__v"), period).over(w).as("__lp"))
-    def dmean(e: Column): Column =
-      when(count(e) > 0,
-        dsum(r6(e)) /
-          count(e).cast("double"))
     withLags
       .groupBy("key")
       .agg(
@@ -198,10 +198,6 @@ object Seasonal {
       }
     val withTrend = b.withColumn("trend", trend)
       .withColumn("__detr", col("v") - col("trend"))
-    def dmean(e: Column): Column =
-      when(count(e) > 0,
-        dsum(r6(e)) /
-          count(e).cast("double"))
     val phaseMeans = withTrend.groupBy(col("key"), col("phase"))
       .agg(dmean(col("__detr")).as("__sp"))
     val centers = phaseMeans.groupBy(col("key"))

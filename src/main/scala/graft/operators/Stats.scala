@@ -30,6 +30,12 @@ object Stats {
   private def dsumIf(p: Column, e: Column): Column =
     coalesce(sum(when(p, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)")).cast("double")
 
+  /** Sample variance from the raw moments, (s2 / n − mean²) · n/(n−1),
+    * clamped at 0 against cancellation.
+    */
+  private def svar(s2: Column, mean: Column, n: Column): Column =
+    greatest(s2 / n - mean * mean, lit(0.0)) * n / (n - 1.0)
+
   /** The shared moment-sum aggregate: by..., n, sx, sy, sxy, sxx, syy
     * (sums as DOUBLE, exact through DECIMAL(38,6)).
     */
@@ -397,9 +403,6 @@ object Stats {
     val nb = col("n_b").cast("double")
     val meanA = col("__sa") / na
     val meanB = col("__sb") / nb
-    // sample variance from the raw moments: (Σx² / n − mean²) · n/(n−1)
-    def svar(s2: Column, mean: Column, n: Column): Column =
-      greatest(s2 / n - mean * mean, lit(0.0)) * n / (n - 1.0)
     val se = when(col("n_a") >= 2 && col("n_b") >= 2,
       sqrt(svar(col("__sa2"), meanA, na) / na + svar(col("__sb2"), meanB, nb) / nb))
     m.select((by.map(col) ++ Seq(
@@ -624,8 +627,8 @@ object Stats {
       .filter(col("__x0").isNotNull && col("__y0").isNotNull)
       .select(
         (byCols :+ col("__a") :+
-          (floor(col("__x0") * 1000000.0 + 0.5) / 1000000.0).as("__x") :+
-          (floor(col("__y0") * 1000000.0 + 0.5) / 1000000.0).as("__y")): _*)
+          r6(col("__x0")).as("__x") :+
+          r6(col("__y0")).as("__y")): _*)
     val m = units
       .groupBy(byCols: _*)
       .agg(
@@ -863,8 +866,6 @@ object Stats {
     val nbD = col("n_b").cast("double")
     val meanA = col("__sa") / naD
     val meanB = col("__sb") / nbD
-    def svar(s2: Column, mu: Column, n: Column): Column =
-      greatest(s2 / n - mu * mu, lit(0.0)) * n / (n - 1.0)
     val pooled = sqrt(((naD - 1.0) * svar(col("__sa2"), meanA, naD) +
       (nbD - 1.0) * svar(col("__sb2"), meanB, nbD)) / (naD + nbD - 2.0))
     val okArms = col("n_a") >= 2 && col("n_b") >= 2
@@ -943,8 +944,6 @@ object Stats {
     val ncD = col("n_control").cast("double")
     val mean = col("__s") / nD
     val meanC = col("__cs") / ncD
-    def svar(s2: Column, mu: Column, n: Column): Column =
-      greatest(s2 / n - mu * mu, lit(0.0)) * n / (n - 1.0)
     val se = when(col("n") >= 2 && col("n_control") >= 2,
       sqrt(svar(col("__s2"), mean, nD) / nD + svar(col("__cs2"), meanC, ncD) / ncD))
     val z = when(se > 0.0, (mean - meanC) / se)
@@ -1076,8 +1075,6 @@ object Stats {
     val nbD = col("n_b").cast("double")
     val meanA = col("__sa") / naD
     val meanB = col("__sb") / nbD
-    def svar(s2: Column, mu: Column, n: Column): Column =
-      greatest(s2 / n - mu * mu, lit(0.0)) * n / (n - 1.0)
     val theta = meanB - meanA
     val vv = svar(col("__sa2"), meanA, naD) / naD + svar(col("__sb2"), meanB, nbD) / nbD
     val okArms = col("n_a") >= 2 && col("n_b") >= 2
@@ -1243,8 +1240,6 @@ object Stats {
       val naD = na.cast("double"); val nbD = nb.cast("double")
       val meanA = when(na >= 1, col(s"__sa_$cv") / naD)
       val meanB = when(nb >= 1, col(s"__sb_$cv") / nbD)
-      def svar(s2: Column, mean: Column, n: Column): Column =
-        greatest(s2 / n - mean * mean, lit(0.0)) * n / (n - 1.0)
       val va = when(na >= 2, svar(col(s"__sa2_$cv"), meanA, naD))
       val vb = when(nb >= 2, svar(col(s"__sb2_$cv"), meanB, nbD))
       val pooled = (va + vb) / 2.0
@@ -1292,8 +1287,6 @@ object Stats {
     val nbD = col("nb").cast("double")
     val meanA = col("sa") / naD
     val meanB = col("sb") / nbD
-    def svar(s2: Column, mean: Column, n: Column): Column =
-      greatest(s2 / n - mean * mean, lit(0.0)) * n / (n - 1.0)
     val complete = col("na") >= 1 && col("nb") >= 1
     val varOk = col("na") >= 2 && col("nb") >= 2
     // per-stratum rows carry n_s and the effect; the weighted combine is

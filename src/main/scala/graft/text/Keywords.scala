@@ -3,7 +3,7 @@ package graft.text
 import graft.functions.Portable.{dsum, r6}
 import graft.plans.Materialize.PinOps
 import graft.text.TextFunctions.wordTokens
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distinctive-term extraction: which terms are over-represented in a
@@ -179,12 +179,11 @@ object Keywords {
       .agg(count(lit(1)).as("n"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("group")).orderBy(col("n").desc, col("term"))
-    def r6d(c: Column): Column = floor(c * 1000000.0 + 0.5) / 1000000.0
     val ranked = lt
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topN)
-      .withColumn("__x", r6d(log(col("rank").cast("double"))))
-      .withColumn("__y", r6d(log(col("n").cast("double"))))
+      .withColumn("__x", r6(log(col("rank").cast("double"))))
+      .withColumn("__y", r6(log(col("n").cast("double"))))
     val fit = graft.operators.Stats.groupedLinReg(ranked, Seq("group"), "__x", "__y")
     fit.select(
       col("group"), col("n").as("n_terms"),
