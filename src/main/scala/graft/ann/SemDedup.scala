@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: assignment is [[KMeans.assign]]'s broadcast-argmin (the
   * corpus never shuffles for it); pruning is ONE groupBy(cid) with a
-  * bounded in-group vector collect and in-cluster pair explosion — no
+  * bounded in-group vector collect and in-cluster pair explosion
+  * ([[graft.functions.Pairs.bucketPairs]]) — no
   * cluster self-join, no all-pairs. Clusters larger than
   * `maxClusterSize` are dropped from PRUNING whole (their members all
   * survive): at proper k sizing (k ≈ √N) an over-cap cluster means a
@@ -43,15 +44,7 @@ object SemDedup {
       vecCol: String = "embedding",
       maxClusterSize: Int = 10000
   ): DataFrame = {
-    val clusters = assigned
-      .groupBy("cid")
-      .agg(graft.functions.BoundedCollectVectors
-        .boundedCollectVectors(col(idCol), col(vecCol), maxClusterSize).as("items"))
-      .filter(col("items").isNotNull && size(col("items")) >= 2)
-    // streaming pair generator: O(cluster) working memory (the one-shot
-    // pair array is a memory cliff with vector payloads), zero per-pair
-    // slice/struct allocation (see Pairs.pairs)
-    graft.functions.Pairs.pairs(clusters, col("items"), "a", "b")
+    graft.functions.Pairs.bucketPairs(assigned, Seq("cid"), col(idCol), col(vecCol), maxClusterSize, "a", "b")
       .filter(r6(cosine(col("a.vec"), col("b.vec"))) >= threshold)
       .select(col("b.id").as(idCol))
       .distinct()

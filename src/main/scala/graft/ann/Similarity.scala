@@ -203,11 +203,11 @@ object Similarity {
     * within a cell; probabilistic recall across cells, standard LSH
     * trade). Pass `cell = None` for exact all-pairs (test scale only).
     *
-    * Single-pass like the id-only dedup pipelines: each cell's (id,
-    * vector) members are gathered with a bounded in-group collect
-    * ([[graft.functions.BoundedCollectVectors]]) and pairs explode
-    * in-bucket — no cell self-join (which would evaluate the corpus
-    * twice) and no O(cell²) blowup: cells larger than `maxCellSize` are
+    * Single-pass like the id-only dedup pipelines: cells go through
+    * the vector form of [[graft.functions.Pairs.bucketPairs]] (each
+    * cell's (id, vector) members gathered by a bounded in-group collect,
+    * pairs exploded in-bucket) — no cell self-join (which would evaluate
+    * the corpus twice) and no O(cell²) blowup: cells larger than `maxCellSize` are
     * dropped whole (a cell should hold ~√N vectors by the nBits sizing
     * rule; one vastly over-sized cell means degenerate embeddings).
     * Buffer memory per cell ≤ maxCellSize × dim × 4 B.
@@ -233,16 +233,8 @@ object Similarity {
         )
         .filter(col("cosine") >= threshold)
     case Some(f) =>
-      val cells = vectors
-        .withColumn("__cell", f(col(vecCol)))
-        .groupBy("__cell")
-        .agg(graft.functions.BoundedCollectVectors
-          .boundedCollectVectors(col(idCol), col(vecCol), maxCellSize).as("items"))
-        .filter(col("items").isNotNull && size(col("items")) >= 2)
-      // streaming pair generator: O(cell) working memory (the one-shot
-      // pair array is a memory cliff with vector payloads), zero per-pair
-      // slice/struct allocation (see Pairs.pairs)
-      graft.functions.Pairs.pairs(cells, col("items"), "a", "b")
+      graft.functions.Pairs.bucketPairs(vectors.withColumn("__cell", f(col(vecCol))), Seq("__cell"),
+        col(idCol), col(vecCol), maxCellSize, "a", "b")
         .select(
           col("a.id").as("id_a"),
           col("b.id").as("id_b"),

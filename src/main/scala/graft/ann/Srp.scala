@@ -73,16 +73,20 @@ object Srp {
   ): DataFrame = {
     val sigs = vectors.select(
       col(idCol).as("id") +: srpSignatureCols(col(vecCol), nPlanes, dim, seed): _*)
-    val cand = graft.dedup.Dedup.minhashCandidatePairs(sigs, nPlanes, numBands, maxBucketSize)
-    cand
+    verifiedPairs(sigs, vectors, idCol, vecCol, threshold, nPlanes, numBands, maxBucketSize)
+  }
+
+  /** The verify step of [[srpLshPairs]] and each [[captureRecapture]]
+    * pass: banded candidates of `sigs`, both vectors joined back by id,
+    * (id_a, id_b, cosine) kept at r6 cosine ≥ threshold.
+    */
+  private def verifiedPairs(sigs: DataFrame, vectors: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, nPlanes: Int, numBands: Int, maxBucketSize: Int): DataFrame =
+    graft.dedup.Dedup.minhashCandidatePairs(sigs, nPlanes, numBands, maxBucketSize)
       .join(vectors.select(col(idCol).as("id_a"), col(vecCol).as("__va")), "id_a")
       .join(vectors.select(col(idCol).as("id_b"), col(vecCol).as("__vb")), "id_b")
-      .select(
-        col("id_a"),
-        col("id_b"),
-        r6(Similarity.cosine(col("__va"), col("__vb"))).as("cosine"))
+      .select(col("id_a"), col("id_b"), r6(Similarity.cosine(col("__va"), col("__vb"))).as("cosine"))
       .filter(col("cosine") >= threshold)
-  }
 
   /** Capture–recapture estimate of the TRUE near-duplicate pair count —
     * the scale-native answer to "how many near-dups is our LSH pass
@@ -145,12 +149,7 @@ object Srp {
       val sigs = sigsBoth.select(
         col("id") +:
           (0 until nPlanes).map(p => col(s"__${tag}_$p").as(s"minhash_$p")): _*)
-      graft.dedup.Dedup.minhashCandidatePairs(sigs, nPlanes, numBands, maxBucketSize)
-        .join(pinned.select(col("id").as("id_a"), col("__v").as("__va")), "id_a")
-        .join(pinned.select(col("id").as("id_b"), col("__v").as("__vb")), "id_b")
-        .select(col("id_a"), col("id_b"),
-          r6(Similarity.cosine(col("__va"), col("__vb"))).as("cosine"))
-        .filter(col("cosine") >= threshold)
+      verifiedPairs(sigs, pinned, "id", "__v", threshold, nPlanes, numBands, maxBucketSize)
         .select(col("id_a"), col("id_b"), lit(1).as(flag))
     }
     val joined = pass("a", "__ina")

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.functions.Pairs
 import graft.functions.Portable.r6
 import graft.plans.Materialize.PinOps
 import graft.text.TextFunctions._
@@ -26,26 +27,6 @@ object Dedup {
       .select(col(idCol), fingerprint(col(textCol)).as("fp"))
       .groupBy("fp")
       .agg(min(col(idCol)).as("canonical_id"), count(lit(1)).as("n_copies"))
-
-  /** `n`-token shingles from a pre-materialized token-array column.
-    *
-    * Tokenization is projected into its OWN column first: higher-order
-    * functions are interpreted (no codegen), and inlining `wordTokens`
-    * into the lambda would re-run the regex split once per shingle
-    * position instead of once per document — measured 4-10x slower.
-    */
-  private def shingleExpr(toks: Column, n: Int): Column =
-    when(
-      size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n), i => concat_ws(" ", slice(toks, i + 1, lit(n))))
-    ).otherwise(array().cast("array<string>"))
-
-  /** Distinct (id, shingle) pairs for `n`-token shingles. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs
-      .select(col(idCol).as("id"), wordTokens(col(textCol)).as("__toks"))
-      .select(col("id"), explode(shingleExpr(col("__toks"), n)).as("shingle"))
-      .distinct()
 
   /** Distinct (id, sh) pairs where sh = md5-derived 32-bit hash of the
     * shingle (requires `idCol` unique per row, which every corpus frame
@@ -151,7 +132,7 @@ object Dedup {
     * keys), and hot shingles (appearing in > maxDocFreq docs) are
     * dropped — they generate O(df²) candidate pairs while carrying no
     * discriminative signal. The cap is enforced INSIDE the aggregation
-    * by [[graft.functions.BoundedCollectLongs]], so a boilerplate
+    * of [[graft.functions.Pairs.bucketPairs]], so a boilerplate
     * shingle in millions of docs costs O(1) buffer memory, not O(df).
     *
     * The shingle pipeline (scan + tokenize + explode + md5 + distinct) is
@@ -192,15 +173,8 @@ object Dedup {
           .otherwise(shiftleft(col("id"), PackShift) + col("__n"))
           .as("pid")
       )
-    val buckets = packed
-      .groupBy("sh")
-      .agg(graft.functions.BoundedCollectLongs.boundedCollect(col("pid"), maxDocFreq.toInt).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
     val mask = (1L << PackShift) - 1
-    // in-bucket pair explosion through the streaming generator: the
-    // interpreted orderedPairs HOF materialized the O(m²) pair array per
-    // bucket and its allocation churn WAS the dedup family's GC bill
-    val rawPairs = graft.functions.Pairs.pairs(buckets, col("ids"), "pa", "pb")
+    val rawPairs = Pairs.bucketPairs(packed, Seq("sh"), col("pid"), maxDocFreq.toInt, "pa", "pb")
     // size-ratio prune BEFORE the pair-count exchange: jaccard(a,b) <=
     // n_min/n_max, so when the caller only keeps jaccard >= t, any pair
     // with n_min < t*n_max can never pass — dropping it here (map-side,
@@ -628,7 +602,9 @@ object Dedup {
     * Pairs come from a (j, sig-value) equi-join on the groups×k long
     * frame — never a cross join — so only hash positions that AGREE
     * generate join rows; group pairs sharing no position (est 0) are
-    * absent from the output by construction.
+    * absent from the output by construction. A join, not
+    * [[graft.functions.Pairs.bucketPairs]]: the members are group keys
+    * of any type, and the bounded collects hold longs only.
     */
   def groupMinhashSimilarity(
       docs: DataFrame,
@@ -662,8 +638,9 @@ object Dedup {
     * columns: interpreted higher-order functions re-evaluate their
     * lambda bodies per element, so inlining the shingle subtree into
     * the `numHashes` min-lambdas would re-tokenize the document
-    * numHashes × positions times (the measured 4-10× trap
-    * [[shingleExpr]]'s contract warns about).
+    * numHashes × positions times (the measured 4-10× trap of the
+    * interpreted shingle form that `ShingleHashesSpec` keeps inline as
+    * its reference).
     */
   def withMinhashSig(df: DataFrame, text: Column, outCol: String, numHashes: Int, n: Int): DataFrame = {
     require(numHashes <= MinhashParams.length, s"at most ${MinhashParams.length} hashes supported")
@@ -721,11 +698,7 @@ object Dedup {
       explode(array((0 until numBands).map(b => struct(lit(b).as("band"), col(s"band_$b").as("sig"))): _*))
         .as("bk")
     ).select(col("id"), col("bk.band"), col("bk.sig"))
-    val capped = buckets
-      .groupBy("band", "sig")
-      .agg(graft.functions.BoundedCollectLongs.boundedCollect(col("id"), maxBucketSize).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-    graft.functions.Pairs.pairs(capped, col("ids"), "id_a", "id_b")
+    Pairs.bucketPairs(buckets, Seq("band", "sig"), col("id"), maxBucketSize, "id_a", "id_b")
       .distinct()
   }
 
@@ -762,10 +735,37 @@ object Dedup {
           graft.functions.ShingleHashes.shingleHashes(col("__toks"), 1), bits).as("simhash"))
   }
 
+  /** Pigeonhole buckets for a Hamming radius: the low `bits` bits of
+    * `sig` cut into maxHamming+1 contiguous blocks, as an array of
+    * (blk, v) structs to explode. Any two signatures within the radius
+    * agree exactly on at least one block.
+    *
+    * Block i covers bits [i·bits/k, (i+1)·bits/k) of k = maxHamming+1 —
+    * an even floor/ceil split, so every block gets ≥ 1 bit. (A
+    * ceil(bits/k)-wide cut leaves trailing blocks of width ≤ 0 for most
+    * radii — e.g. 32 bits at radius 8 — and every row then shares one
+    * degenerate bucket that the size cap drops whole, losing pairs
+    * within the radius.) The arithmetic shift is exact because each
+    * mask keeps only bits below 64.
+    */
+  def hammingBlocks(sig: Column, bits: Int, maxHamming: Int): Column = {
+    require(bits >= 1 && bits <= 64, s"bits must be in [1,64], got $bits")
+    require(maxHamming >= 0 && maxHamming < bits,
+      s"need maxHamming in [0, bits-1] so each of the maxHamming+1 blocks gets >= 1 of $bits bits, " +
+        s"got $maxHamming")
+    val nBlocks = maxHamming + 1
+    array((0 until nBlocks).map { i =>
+      val lo = i * bits / nBlocks
+      val width = (i + 1) * bits / nBlocks - lo
+      val mask = if (width == 64) -1L else (1L << width) - 1
+      struct(lit(i).as("blk"), shiftright(sig, lo).bitwiseAND(mask).as("v"))
+    }: _*)
+  }
+
   /** Near-dup pairs among simhash signatures with hamming distance <=
-    * `maxHamming`, using block-permutation candidate buckets: the signature
-    * is split into maxHamming+1 blocks; by pigeonhole, any pair within
-    * distance shares at least one exact block — so candidates come from
+    * `maxHamming`, using block-permutation candidate buckets
+    * ([[hammingBlocks]]): by pigeonhole, any pair within distance
+    * shares at least one exact block — so candidates come from
     * per-(block_idx, block_value) buckets, never all-pairs.
     *
     * Single-pass like [[ngramJaccardPairs]]: each bucket element packs
@@ -782,11 +782,6 @@ object Dedup {
       maxBucketSize: Int = 1000
   ): DataFrame = {
     require(bits >= 1 && bits <= 32, "bits must be in [1,32]")
-    require(maxHamming >= 0 && maxHamming + 1 <= bits,
-      s"need maxHamming in [0, bits-1]: maxHamming+1=${maxHamming + 1} blocks must each get >=1 of $bits bits, " +
-        "else trailing blocks degenerate to a single all-rows bucket")
-    val nBlocks = maxHamming + 1
-    val blockSize = math.ceil(bits.toDouble / nBlocks).toInt
     val idCap = 1L << (63 - bits)
     val sigMask = if (bits == 32) 0xffffffffL else (1L << bits) - 1
     val packed = signatures.select(
@@ -795,22 +790,11 @@ object Dedup {
         .otherwise(shiftleft(col("id"), bits) + col("simhash").bitwiseAND(sigMask))
         .as("pid"),
       col("simhash"),
-      explode(array((0 until nBlocks).map { i =>
-        val width = math.min(blockSize, bits - i * blockSize)
-        val mask = if (width <= 0) 0L else (1L << width) - 1
-        struct(
-          lit(i).as("blk"),
-          shiftright(col("simhash"), i * blockSize).bitwiseAND(mask).as("v")
-        )
-      }: _*)).as("b")
+      explode(hammingBlocks(col("simhash"), bits, maxHamming)).as("b")
     ).select(col("pid"), col("b.blk"), col("b.v"))
     val sigA = col("pa").bitwiseAND(sigMask)
     val sigB = col("pb").bitwiseAND(sigMask)
-    val capped = packed
-      .groupBy("blk", "v")
-      .agg(graft.functions.BoundedCollectLongs.boundedCollect(col("pid"), maxBucketSize).as("ids"))
-      .filter(col("ids").isNotNull && size(col("ids")) >= 2)
-    graft.functions.Pairs.pairs(capped, col("ids"), "pa", "pb")
+    Pairs.bucketPairs(packed, Seq("blk", "v"), col("pid"), maxBucketSize, "pa", "pb")
       .select(
         shiftright(col("pa"), bits).as("id_a"),
         shiftright(col("pb"), bits).as("id_b"),

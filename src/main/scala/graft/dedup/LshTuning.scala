@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: everything is sample-bounded — the sample is a
   * TakeOrderedAndProject (`ORDER BY id LIMIT n`, deterministic), exact
-  * Jaccard comes from the sample's shingle self-join, and the report is
+  * Jaccard comes from the sample's in-bucket shingle pairs
+  * ([[Dedup.commonShinglePairs]], uncapped on a sample), and the report is
   * nBins rows. Pairs sharing zero shingles never appear (there is
   * nothing to enumerate them by — documented; the sub-threshold bins
   * measure the near-miss region, which is what matters for tuning).
@@ -45,18 +46,11 @@ object LshTuning {
       .select(col(idCol).as("id"), col(textCol).as("text"))
       .orderBy(col("id")).limit(sampleN)
       .pin(true)
-    val shh = Dedup.shingleHashTable(sample, "id", "text", shingleN)
-    val cnt = shh.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val com = shh.as("a")
-      .join(shh.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("ia"), col("b.id").as("ib"))
-      .agg(count(lit(1)).as("nc"))
-    val jac = com
-      .join(cnt.select(col("id").as("ia"), col("n_sh").as("na")), "ia")
-      .join(cnt.select(col("id").as("ib"), col("n_sh").as("nb")), "ib")
-      .select(col("ia"), col("ib"),
-        (col("nc").cast("double") /
-          (col("na") + col("nb") - col("nc")).cast("double")).as("jac"))
+    // no shingle is in more than sampleN sample docs, so this cap never binds
+    val jac = Dedup.commonShinglePairs(sample, shingleN, "id", "text", maxDocFreq = sampleN)
+      .select(col("id_a").as("ia"), col("id_b").as("ib"),
+        (col("n_common").cast("double") /
+          (col("n_a") + col("n_b") - col("n_common")).cast("double")).as("jac"))
     val sig = Dedup.minhashSignatures(sample, numHashes, shingleN, "id", "text")
     def side(tag: String, idAs: String) =
       sig.select(col("id").as(idAs) +:

@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Bit-identical to the composable form
   * `transform(sequence(...), i -> md5Hash32(concat_ws(" ", slice(toks,
-  * i, n))))` (reference semantics: Dedup.shingleExpr + md5Hash32 —
+  * i, n))))` (reference semantics: the interpreted shingle form that
+  * `ShingleHashesSpec` keeps inline, + md5Hash32 —
   * first 8 hex chars of md5 as an unsigned 32-bit value; concat_ws
   * skips NULL elements), but evaluated as one digest loop over reused
   * byte buffers instead of an interpreted lambda per position with
@@ -25,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * lambda/array plumbing than in md5 itself.
   *
   * Returns NULL for a NULL array, an empty array when there are fewer
-  * than `n` tokens (matching shingleExpr's `when(size >= n)` guard).
+  * than `n` tokens (matching that reference's `when(size >= n)` guard).
   */
 case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 

@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -441,18 +442,19 @@ object Multimodal {
   }
 
   /** Near-duplicate image pairs from 64-bit dHashes by pigeonhole
-    * banding: split the hash into `maxHamming + 1` blocks — any pair
-    * within the radius agrees EXACTLY on at least one block — bucket by
-    * (block, value), and equi-join within buckets. Same candidate shape
-    * as text simhash ([[graft.dedup.Dedup.simhashNearDupPairs]]) but
-    * join-based rather than packed-collect, because 64-bit signatures
-    * don't fit the (id | sig) single-long packing.
+    * banding: split the hash into `maxHamming + 1` blocks
+    * ([[graft.dedup.Dedup.hammingBlocks]], the text simhash split) — any
+    * pair within the radius agrees EXACTLY on at least one block — and
+    * pair the media ids within each (block, value) bucket through
+    * [[graft.functions.Pairs.bucketPairs]]. Unlike text simhash, a
+    * 64-bit signature does not fit the (id | sig) single-long packing,
+    * so the candidates join their hashes back by id, twice.
     *
-    * Scale: candidates come only from the banded equi-join (never an
+    * Scale: candidates come only from in-bucket pairs (never an
     * all-pairs cross), and degenerate buckets (e.g. millions of
     * identical flat-color thumbnails) are dropped WHOLE once they pass
     * `maxBucketSize` — the honest recall trade the text pipelines make,
-    * applied to images.
+    * applied to images. Media ids are unique BIGINTs.
     */
   def dhashNearDupPairs(
       signatures: DataFrame,
@@ -460,29 +462,18 @@ object Multimodal {
       maxBucketSize: Int = 1000,
       idCol: String = "media_id"
   ): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 63]")
-    val nBlocks = maxHamming + 1
-    val blockSize = math.ceil(64.0 / nBlocks).toInt
-    val banded = signatures
+    // the buckets and both hash joins read the hashes: pin them, so an
+    // upstream image decode runs once, not three times
+    val sigs = signatures
       .filter(col("dhash").isNotNull)
-      .select(
-        col(idCol).as("id"),
-        col("dhash"),
-        explode(array((0 until nBlocks).map { i =>
-          val width = math.min(blockSize, 64 - i * blockSize)
-          val mask = if (width >= 64) -1L else (1L << width) - 1
-          struct(
-            lit(i).as("blk"),
-            shiftrightunsigned(col("dhash"), i * blockSize).bitwiseAND(mask).as("v"))
-        }: _*)).as("b"))
-      .select(col("id"), col("dhash"), col("b.blk"), col("b.v"))
-      .withColumn("__bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("blk", "v")))
-      .filter(col("__bsz") <= maxBucketSize)
-    val a = banded.select(col("blk"), col("v"), col("id").as("id_a"), col("dhash").as("__ha"))
-    val b = banded.select(col("blk"), col("v"), col("id").as("id_b"), col("dhash").as("__hb"))
-    a.join(b, Seq("blk", "v"))
-      .filter(col("id_a") < col("id_b"))
+      .select(col(idCol).as("id"), col("dhash"))
+      .pin(true)
+    val banded = sigs
+      .select(col("id"), explode(graft.dedup.Dedup.hammingBlocks(col("dhash"), 64, maxHamming)).as("b"))
+      .select(col("id"), col("b.blk"), col("b.v"))
+    graft.functions.Pairs.bucketPairs(banded, Seq("blk", "v"), col("id"), maxBucketSize, "id_a", "id_b")
+      .join(sigs.select(col("id").as("id_a"), col("dhash").as("__ha")), "id_a")
+      .join(sigs.select(col("id").as("id_b"), col("dhash").as("__hb")), "id_b")
       .select(
         col("id_a"), col("id_b"),
         bit_count(col("__ha").bitwiseXOR(col("__hb"))).as("hamming"))

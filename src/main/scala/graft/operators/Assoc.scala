@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * set-union partial agg, no separate distinct pass). Each entity's
   * item set is vocabulary-bounded (≤ distinct items, NOT event count),
   * so the in-group pair explosion via [[Pairs.pairs]] is
-  * |vocab|² worst-case per entity and typically tiny; pair counts then
+  * |vocab|² worst-case per entity and typically tiny — uncapped on
+  * purpose, not [[Pairs.bucketPairs]]: a capped entity would drop its
+  * pairs from the support counts and skew every rule; pair counts then
   * partial-aggregate to a ≤ vocab² frame. Item marginals and the
   * entity total derive from the materialized entity-set frame — the
   * facts are scanned once and never shuffle again.

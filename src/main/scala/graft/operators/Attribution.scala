@@ -147,8 +147,9 @@ object Attribution {
     val collisions = events
       .filter(col(typeCol).isin(StartState, ConvState, DropState) &&
         col(typeCol) =!= conversionType)
-      .limit(1).count()
-    require(collisions == 0L,
+    // isEmpty, not limit(1).count(): its limit is the collect at the
+    // plan's root, outside codegen, so repeated calls compile nothing new
+    require(collisions.isEmpty,
       s"markovRemoval: an event type collides with a chain sentinel " +
         s"($StartState/$ConvState/$DropState); rename it upstream")
     val channels = mat.flatMap(t => Seq(t._1, t._2)).distinct

@@ -34,7 +34,8 @@ object FuzzyJoin {
     * (bucket size == token df, since names are distinct), over-cap
     * buckets drop whole, and [[graft.functions.Pairs.pairs]] streams the
     * in-bucket pairs — no self-join, no double evaluation of
-    * the tokenizer.
+    * the tokenizer. Not [[graft.functions.Pairs.bucketPairs]]: these
+    * buckets hold strings, and there is no string bounded collect.
     */
   def candidatePairs(df: DataFrame, nameCol: String, maxTokenDf: Long): DataFrame = {
     require(maxTokenDf > 0, "maxTokenDf must be positive")
@@ -127,8 +128,9 @@ object FuzzyJoin {
     * fuzzy-match — INCLUDING rows with identical values (distance 0,
     * the most common linkage case), which the distinct dictionary
     * collapses and the a_name < b_name candidate shape would otherwise
-    * never pair. Same-name row pairs come from a per-name groupBy (one
-    * shuffle on the value, in-bucket pair explosion — no self-join);
+    * never pair. Same-name row pairs come from
+    * [[graft.functions.Pairs.bucketPairs]] on the value (one shuffle,
+    * in-bucket pair explosion — no self-join), so ids are BIGINT;
     * cross-name pairs from the dictionary-level fuzzy table joined back
     * to the id mapping twice, each a fact⋈small join that AQE
     * broadcasts when the pair table fits. Within a pair a_id < b_id for
@@ -157,12 +159,8 @@ object FuzzyJoin {
       .join(ids.withColumnRenamed("id", "b_id"), col("b_name") === col("name"))
       .drop("name")
       .select(col("a_id"), col("b_id"), col("a_name"), col("b_name"), col("dist"))
-    val sameNameGroups = ids
-      .filter(col("name").isNotNull && col("name") =!= "")
-      .groupBy("name")
-      .agg(sort_array(collect_list(col("id"))).as("is"))
-      .filter(size(col("is")).between(2, maxSameNameRows))
-    val sameName = Pairs.pairs(sameNameGroups, col("is"), "a_id", "b_id", keep = Seq(col("name")))
+    val sameName = Pairs.bucketPairs(ids.filter(col("name").isNotNull && col("name") =!= ""),
+      Seq("name"), col("id"), maxSameNameRows, "a_id", "b_id", keep = Seq(col("name")))
       .select(col("a_id"), col("b_id"), col("name").as("a_name"),
         col("name").as("b_name"), lit(0L).as("dist"))
     crossName.unionByName(sameName)

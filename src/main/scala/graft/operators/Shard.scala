@@ -60,12 +60,14 @@ object Shard {
     // signed 64-bit hash -> uniform double in [0,1)
     val u = xxhash64(col(Meds.PatientId), lit(seed)).cast("double") / lit(2.0 * Long.MaxValue) + lit(0.5)
     val shard = pmod(xxhash64(col(Meds.PatientId), lit(seed + 1)), lit(nShardsPerSplit))
-    val nCapped = distinctPatients.limit(exactBelow + 1).count()
+    // a plain count of the pinned frame costs what limit(k).count() would,
+    // and compiles once per session: a codegen'd limit's counter is named
+    // by a JVM-wide serial, so each call of a limit compiles anew
+    val n = distinctPatients.count()
     val assigned =
-      if (nCapped <= exactBelow) {
+      if (n <= exactBelow) {
         // exact path: seeded-hash rank = the reference's shuffled order;
         // slice at cumulative round(frac * n). Window is global but bounded.
-        val n = nCapped
         val bounds = fractions.scanLeft(0.0)(_ + _._2).tail.map(f => math.round(f * n))
         val r = row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy(u, col(Meds.PatientId)))

@@ -131,8 +131,8 @@ object TextFunctions {
   def topBigramFraction(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // tokens projected into their OWN column first: higher-order functions
     // are interpreted, and inlining wordTokens into the lambda would re-run
-    // the regex split once per bigram position (same pitfall as
-    // Dedup.shingleExpr — measured ~4x slower inline)
+    // the regex split once per bigram position (the same pitfall as the
+    // interpreted shingle form — measured ~4x slower inline)
     val toks = col("__toks")
     val bigrams = when(size(toks) >= 2,
       transform(sequence(lit(0), size(toks) - 2), i => concat_ws(" ", slice(toks, i + 1, lit(2)))))

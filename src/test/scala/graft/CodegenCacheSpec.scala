@@ -37,4 +37,25 @@ class CodegenCacheSpec extends SparkSpec {
     info(s"compiles: first pass $first, second pass $second")
     assert(second == 0, s"the second pass recompiled $second classes (the first compiled $first)")
   }
+
+  test("a second call of the operators that run an eager check job compiles nothing") {
+    import spark.implicits._
+    val patients = (0L until 50L).toDF("patient_id")
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "Shard.splitAndShardPatients" -> (() =>
+        graft.operators.Shard.splitAndShardPatients(patients, Seq("train" -> 0.8, "held_out" -> 0.2), 2)),
+      // over scanned events: on a local Seq the optimizer folds the
+      // collision probe into a local relation and nothing is compiled
+      "Attribution.markovRemoval (q_markov_attr)" -> (() => SparkEntry.queries("q_markov_attr")(spark, sf)))
+    val recompiled = calls.map { case (name, call) =>
+      def run(): Long = {
+        val before = compiles
+        call().write.format("noop").mode("overwrite").save()
+        compiles - before
+      }
+      run()
+      name -> run()
+    }
+    assert(recompiled.forall(_._2 == 0), s"classes compiled by the second call: $recompiled")
+  }
 }

@@ -82,16 +82,25 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("simhash near-dup pairs via pigeonhole blocks match brute-force hamming") {
-    val sigs = Dedup.simhash(corpus, bits = 32)
-    val maxH = 6
-    val viaBlocks = Dedup.simhashNearDupPairs(sigs, bits = 32, maxHamming = maxH)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val raw = sigs.collect().map(r => r.getLong(0) -> r.getLong(1))
-    val brute = (for {
-      (ia, sa) <- raw; (ib, sb) <- raw if ia < ib
-      if java.lang.Long.bitCount(sa ^ sb) <= maxH
-    } yield (ia, ib)).toSet
-    assert(viaBlocks == brute)
+    // 1 and 2 differ once in each 4-bit block 0-7 (hamming 8) and 3 is 1's
+    // complement: a ceil-width split at radius 8 leaves block 8 zero bits
+    // wide, all three rows share it and the cap of 2 drops the pair
+    val a = 0x5a3c96e1L
+    val handBuilt = Seq(
+      (1L, a), (2L, a ^ 0x11111111L), (3L, ~a & 0xffffffffL)).toDF("id", "simhash")
+    val inputs = Seq(
+      ("corpus", Dedup.simhash(corpus, bits = 32), 6, 1000),
+      ("hand-built radius 8", handBuilt, 8, 2))
+    for ((name, sigs, maxH, cap) <- inputs) {
+      val viaBlocks = Dedup.simhashNearDupPairs(sigs, bits = 32, maxHamming = maxH, maxBucketSize = cap)
+        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val raw = sigs.collect().map(r => r.getLong(0) -> r.getLong(1))
+      val brute = (for {
+        (ia, sa) <- raw; (ib, sb) <- raw if ia < ib
+        if java.lang.Long.bitCount(sa ^ sb) <= maxH
+      } yield (ia, ib)).toSet
+      assert(viaBlocks == brute, name)
+    }
   }
 
   test("simhash near-dup pairs reject maxHamming too large for the bit width") {

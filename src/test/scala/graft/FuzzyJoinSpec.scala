@@ -58,10 +58,13 @@ class FuzzyJoinSpec extends SparkSpec {
   }
 
   test("hot identical values past the cap are dropped from same-name pairing whole") {
-    val recs = ((1L to 5L).map(i => (i, "unknown")) :+ (9L -> "rare") :+ (10L -> "rare"))
+    val recs = ((1L to 5L).map(i => (i, "unknown")) ++ (21L to 24L).map(i => (i, "edge")) :+
+      (9L -> "rare") :+ (10L -> "rare"))
       .toDF("id", "nm")
     val out = FuzzyJoin.linkRecords(recs, "id", "nm", maxDist = 0, maxSameNameRows = 4)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(out == Set((9L, 10L))) // "unknown" x5 exceeds the cap of 4
+    // "unknown" x5 is one past the cap of 4; "edge" x4 sits exactly at it
+    val edge = for (a <- 21L to 24L; b <- a + 1 to 24L) yield (a, b)
+    assert(out == Set((9L, 10L)) ++ edge)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.Pairs
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Parity pins for the streaming [[Pairs.pairs]] generator against the
@@ -61,6 +62,26 @@ class PairsGenSpec extends SparkSpec {
     val m = 60
     val n = Pairs.pairs(longArrays.filter(col("id") === 5L), col("ids"), "a", "b").count()
     assert(n == m.toLong * (m - 1) / 2)
+  }
+
+  test("bucketPairs: cap is inclusive, over-cap buckets drop whole, pairs ascending") {
+    val cap = 3
+    // bucket k: exactly cap members (kept); o: cap + 1 (dropped whole);
+    // s: a singleton; n: only NULL ids. Members arrive unsorted.
+    val rows = Seq(
+      "k" -> 30L, "k" -> 10L, "k" -> 20L,
+      "o" -> 4L, "o" -> 1L, "o" -> 3L, "o" -> 2L,
+      "s" -> 7L).map { case (k, id) => (k, Option(id)) } ++
+      Seq(("n", None), ("n", None))
+    val df = rows.toDF("k", "id").withColumn("vec", array(col("id").cast("float")))
+    val collects = Seq[(String, DataFrame => DataFrame)](
+      "longs" -> (d => Pairs.bucketPairs(d, Seq("k"), col("id"), cap, "a", "b")),
+      "vectors" -> (d => Pairs.bucketPairs(d, Seq("k"), col("id"), col("vec"), cap, "a", "b")
+        .select(col("a.id").as("a"), col("b.id").as("b"))))
+    for ((name, run) <- collects) {
+      val out = run(df).as[(Long, Long)].collect().toSeq
+      assert(out == Seq((10L, 20L), (10L, 30L), (20L, 30L)), name)
+    }
   }
 
   test("jaccard size-ratio prune changes nothing: pruned == unpruned+filter") {

@@ -162,4 +162,15 @@ class Round5OpsSpec extends SparkSpec {
     val uncapped = Multimodal.dhashNearDupPairs(sigs, maxHamming = 3, maxBucketSize = 100)
     assert(uncapped.count() == 20L * 19 / 2)
   }
+
+  test("dhashNearDupPairs: every radius gets non-empty blocks (no degenerate bucket)") {
+    // 1 and 2 differ once in each 8-bit block 0-7 (hamming 8) and 3 is 1's
+    // complement: a ceil-width split at radius 8 leaves block 8 zero bits
+    // wide, all three rows share it and the cap of 2 drops the pair
+    val a = 0x5a3c96e1f00dbeefL
+    val sigs = Seq((1L, a), (2L, a ^ 0x0101010101010101L), (3L, ~a)).toDF("media_id", "dhash")
+    val pairs = Multimodal.dhashNearDupPairs(sigs, maxHamming = 8, maxBucketSize = 2)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(pairs == Set((1L, 2L, 8)), s"got $pairs")
+  }
 }
