@@ -16,8 +16,14 @@ object MedsQueries {
   /** events viewed as a MEDS measurement table. */
   private def meds(s: SparkSession, dir: String): DataFrame = Meds.fromEvents(ev(s, dir))
 
+  /** The codes of [[meds]] with their occurrence counts: code metadata for
+    * a caller that reads no patient count.
+    */
+  private def codeCounts(s: SparkSession, dir: String): DataFrame =
+    CodeMetadata.aggregate(meds(s, dir), Seq(CodeMetadata.CodeNOccurrences))
+
   /** The nine code-metadata aggregations (DuckDB dialect), matching
-    * [[CodeMetadata.aggregations]] alias-for-alias.
+    * [[CodeMetadata.aggregationNames]] alias-for-alias.
     */
   private val aggColsSql: String =
     s"""count(DISTINCT user_id) AS "code/n_patients",
@@ -218,7 +224,7 @@ object MedsQueries {
     QueryDef("q_pipeline_config", medsPipeline(_, _), medsPipelineOracleSql),
 
     QueryDef("q_occlude_outliers", { (s, dir) =>
-      val meta = CodeMetadata.aggregate(meds(s, dir))
+      val meta = CodeMetadata.aggregate(meds(s, dir), CodeMetadata.meanStdAggregations)
       Outliers
         .occludeOutliers(medsE(s, dir), meta, stddevCutoff = 1.5)
         .select(col("event_id"), col("patient_id"), timeUs(), col("code"),
@@ -242,7 +248,8 @@ object MedsQueries {
         |FROM events e LEFT JOIN b ON e.event_type = b.event_type""".stripMargin),
 
     QueryDef("q_normalize", { (s, dir) =>
-      val meta = Vocabulary.lexicographicIndices(CodeMetadata.aggregate(meds(s, dir)))
+      val meta = Vocabulary.lexicographicIndices(
+        CodeMetadata.aggregate(meds(s, dir), CodeMetadata.meanStdAggregations))
       Normalize
         .normalize(meds(s, dir), meta)
         .select(col("patient_id"), timeUs(), col("code"), graft.functions.Portable.r6(col("numeric_value")).as("numeric_value"))
@@ -255,7 +262,7 @@ object MedsQueries {
 
     QueryDef("q_fit_vocab", (s, dir) =>
       Vocabulary
-        .lexicographicIndices(CodeMetadata.aggregate(meds(s, dir)))
+        .lexicographicIndices(codeCounts(s, dir))
         .select(col("code"), col("code/vocab_index")),
       // NULLS FIRST everywhere a vocab rank is replayed: DuckDB's default
       // ORDER BY is NULLS LAST while the Spark leg (Vocabulary.
@@ -269,7 +276,7 @@ object MedsQueries {
 
     QueryDef("q_fit_vocab_scalable", (s, dir) =>
       Vocabulary
-        .lexicographicIndicesScalable(CodeMetadata.aggregate(meds(s, dir)))
+        .lexicographicIndicesScalable(codeCounts(s, dir))
         .select(col("code"), col("code/vocab_index")),
       """SELECT event_type AS code, row_number() OVER (ORDER BY event_type NULLS FIRST) AS "code/vocab_index"
         |FROM (SELECT DISTINCT event_type FROM events)""".stripMargin),
@@ -333,7 +340,7 @@ object MedsQueries {
     QueryDef("q_tensorize", { (s, dir) =>
       val m = meds(s, dir)
       val vocab = Vocabulary
-        .lexicographicIndices(CodeMetadata.aggregate(m))
+        .lexicographicIndices(CodeMetadata.aggregate(m, Seq(CodeMetadata.CodeNOccurrences)))
         .select(col("code"), col("code/vocab_index"))
       val indexed = m.join(vocab, Seq("code"))
         .select(col("patient_id"), col("time"),
@@ -471,8 +478,7 @@ object MedsQueries {
 
     QueryDef("q_code_metadata_join", { (s, dir) =>
       import s.implicits._
-      val codes = CodeMetadata
-        .aggregate(meds(s, dir))
+      val codes = codeCounts(s, dir)
         .select(col("code"), col(CodeMetadata.CodeNOccurrences).as("n_occurrences"))
       val metadata = Seq(
         ("click", "Click event"), ("view", "View event"),
@@ -489,7 +495,7 @@ object MedsQueries {
     // (emitted here as a joined string for engine-portable comparison).
     QueryDef("q_extract_metadata_multi", { (s, dir) =>
       import s.implicits._
-      val codes = CodeMetadata.aggregate(meds(s, dir)).select(col("code"))
+      val codes = codeCounts(s, dir).select(col("code"))
       val m1 = Seq(("click", "Click event", 1), ("view", "View event", 2), ("purchase", "Purchase v1", 3))
         .toDF("code", "description", "priority")
       val m2 = Seq(("purchase", "Completed checkout"), ("signup", "Account created"))

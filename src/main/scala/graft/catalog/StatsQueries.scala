@@ -1024,8 +1024,7 @@ object StatsQueries {
         .groupBy(col("event_type"), col("user_id"))
         .agg(
           count(lit(1)).as("n_events"),
-          coalesce(sum(when(okv, col("value").cast("decimal(38,6)"))),
-            lit(0).cast("decimal(38,6)")).cast("double").as("v"))
+          graft.functions.Portable.dsumIf(okv, col("value")).as("v"))
       Stats.kendallTau(units, Seq("event_type"), "user_id", "n_events", "v",
           sampleN = 150)
         .select(col("event_type"), col("n"), col("n_pairs"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Cross-engine-portable numeric helpers for oracle-compared outputs.
   *
   * This is the one home of the convention: Spark code imports
-  * `Portable.{dsum, dsum0, r6}`, oracle SQL uses [[graft.catalog.Shared]]'s
+  * `Portable.{dsum, dsum0, dsumIf, r6}`, oracle SQL uses [[graft.catalog.Shared]]'s
   * `dsum`/`dsum0`/`r6` (which forward to [[dsumSql]]/[[dsum0Sql]]/[[r6Sql]]),
   * and no other file spells the convention out. `PortableSpec` fails on a
   * local copy.
@@ -46,6 +46,10 @@ object Portable {
   /** [[dsum]] that gives 0.0 instead of NULL when no row contributes. */
   def dsum0(c: Column): Column =
     coalesce(sum(c.cast("decimal(38,6)")), lit(0).cast("decimal(38,6)")).cast("double")
+
+  /** [[dsum0]] over the rows where `p` holds (0.0 when none do). */
+  def dsumIf(p: Column, e: Column): Column =
+    coalesce(sum(when(p, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)")).cast("double")
 
   /** The DuckDB rendering of [[dsum]] — keep the two in lockstep. */
   def dsumSql(e: String): String = s"CAST(sum(CAST(($e) AS DECIMAL(38,6))) AS DOUBLE)"

@@ -233,14 +233,14 @@ object ConfigPipeline {
     val mods = cfg.codeModifiers
 
     /** The stage's data and code metadata: the fitted metadata, or, when
-      * no fit ran before, an aggregate of the data, which the stage then
-      * reads twice.
+      * no fit ran before, an aggregate of the data with the `aggs` the
+      * stage reads, which the stage then reads twice.
       */
-    def withMeta(st: State): (DataFrame, DataFrame) = st.meta match {
+    def withMeta(st: State, aggs: Seq[String]): (DataFrame, DataFrame) = st.meta match {
       case Some(meta) => (st.data, meta)
       case None =>
         val data = pinned(st.data)
-        (data, Materialize.local(CodeMetadata.aggregate(data, codeModifiers = mods)))
+        (data, Materialize.local(CodeMetadata.aggregate(data, aggs, mods)))
     }
 
     /** A fit stage: its collect and the rest of the chain both read the data. */
@@ -272,10 +272,16 @@ object ConfigPipeline {
           fit(st)(CodeMetadata.aggregate(_, aggs, mods, overAll))
 
         case "filter_measurements" =>
-          val (data, meta) = withMeta(st)
-          st.copy(data = Filters.filterMeasurements(data, meta,
-            optLong(c, "min_patients_per_code"),
-            optLong(c, "min_occurrences_per_code"), mods))
+          val minPatients = optLong(c, "min_patients_per_code")
+          val minOccurrences = optLong(c, "min_occurrences_per_code")
+          // with no threshold set the stage keeps every row
+          if (minPatients.isEmpty && minOccurrences.isEmpty) st
+          else {
+            val aggs = minPatients.map(_ => CodeMetadata.CodeNPatients).toSeq ++
+              minOccurrences.map(_ => CodeMetadata.CodeNOccurrences)
+            val (data, meta) = withMeta(st, aggs)
+            st.copy(data = Filters.filterMeasurements(data, meta, minPatients, minOccurrences, mods))
+          }
 
         case "fit_outlier_detection" | "fit_normalization" =>
           val aggs = optSeq(c, "aggregations").map(_.map(_.asText()))
@@ -284,22 +290,23 @@ object ConfigPipeline {
 
         case "occlude_outliers" =>
           val cutoff = optDouble(c, "stddev_cutoff").getOrElse(4.5)
-          val (data, meta) = withMeta(st)
+          val (data, meta) = withMeta(st, CodeMetadata.meanStdAggregations)
           val occluded = Outliers.occludeOutliers(data, meta, cutoff, mods)
           val dropFlag = Option(c.get("drop_is_inlier")).exists(_.asBoolean(false))
           st.copy(data = if (dropFlag) occluded.drop("numeric_value/is_inlier") else occluded)
 
         case "fit_vocabulary_indices" =>
-          val (data, meta) = withMeta(st)
+          // the indexed metadata becomes the state's, which later stages read
+          val (data, meta) = withMeta(st, CodeMetadata.aggregationNames)
           st.copy(data = data, meta = Some(Materialize.local(Vocabulary.lexicographicIndices(meta, mods))))
 
         case "normalization" =>
-          val (data, meta) = withMeta(st)
+          val (data, meta) = withMeta(st, CodeMetadata.meanStdAggregations)
           st.copy(data = Normalize.normalize(data, meta, mods))
 
         case "reorder_measurements" =>
           val patterns = optSeq(c, "ordered_code_patterns").map(_.map(_.asText())).getOrElse(Nil)
-          val (data, meta) = withMeta(st)
+          val (data, meta) = withMeta(st, Seq(CodeMetadata.CodeNOccurrences))
           st.copy(data = Reorder.reorderMeasurements(data, meta, patterns, mods))
 
         case "tokenization" =>

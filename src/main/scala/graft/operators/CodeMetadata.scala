@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable
 import graft.meds.Meds
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -10,10 +11,13 @@ import org.apache.spark.sql.types.DecimalType
   *
   * Reference: src/MEDS_transforms/aggregate_code_metadata.py:104-116
   * defines nine aggregations as (per-shard mapper, cross-shard reducer)
-  * pairs. In Spark the shard map IS partial aggregation and the reduce IS
-  * the final aggregation after the exchange, so a single
-  * `groupBy(code).agg(...)` expresses the whole map-reduce; Catalyst emits
-  * map-side combine automatically and no manual sharding is needed.
+  * pairs, and so does [[table]]. [[aggregate]] runs the mappers over
+  * level-1 groups (code, modifiers and, when a patient count is asked
+  * for, the patient) and folds them with the reducers per (code,
+  * modifiers); [[mergePartials]] folds other runs' outputs with the same
+  * reducers. A patient count is thus a sum of per-patient flags, not a
+  * `count(DISTINCT)`, whose rewrite plans an `Expand` numbered in
+  * expression-id hash order.
   *
   * Sums are computed over DECIMAL(38,6)-cast inputs: decimal addition is
   * associative, so results are bit-identical regardless of partitioning —
@@ -26,6 +30,7 @@ object CodeMetadata {
   private val valPresent: Column = v.isNotNull && !isnan(v)
   /** Whole-number check (aggregate_code_metadata.py:102). */
   private val isInt: Column = round(v) === v
+  private def present(c: Column): Column = when(valPresent, c)
   private def dec(c: Column): Column = c.cast(DecimalType(38, 6))
 
   val CodeNPatients = "code/n_patients"
@@ -38,32 +43,55 @@ object CodeMetadata {
   val ValuesMin = "values/min"
   val ValuesMax = "values/max"
 
-  /** All supported aggregations, keyed by their reference names
-    * (aggregate_code_metadata.py:65-73).
+  /** One aggregation: `mapper` aggregates a level-1 group, `reducer`
+    * folds a column of partials; `perPatient` mappers need the patient in
+    * the level-1 key.
     */
-  val aggregations: Seq[(String, Column)] = Seq(
-    CodeNPatients -> countDistinct(col(Meds.PatientId)),
-    CodeNOccurrences -> count(lit(1)),
-    ValuesNPatients -> countDistinct(when(valPresent, col(Meds.PatientId))),
-    ValuesNOccurrences -> count(when(valPresent, lit(1))),
-    ValuesNInts -> count(when(valPresent && isInt, lit(1))),
-    ValuesSum -> coalesce(sum(when(valPresent, dec(v))), lit(0)).cast("double"),
-    ValuesSumSqd -> coalesce(sum(when(valPresent, dec(v * v))), lit(0)).cast("double"),
-    ValuesMin -> min(when(valPresent, v)),
-    ValuesMax -> max(when(valPresent, v))
-  )
+  private final case class Agg(name: String, mapper: Column, reducer: Column => Column,
+      perPatient: Boolean = false)
 
-  val aggregationNames: Seq[String] = aggregations.map(_._1)
+  /** 1 for a level-1 group of a (non-null) patient with a row where `p` holds. */
+  private def patientIf(p: Column): Column =
+    max(when(col(Meds.PatientId).isNotNull && p, 1).otherwise(0))
+  private def countSum(c: Column): Column = sum(c).cast("long")
 
-  /** Aggregate `df` by code (+ modifiers).
+  /** All supported aggregations, in output order, keyed by their reference
+    * names (aggregate_code_metadata.py:65-73). Sums stay DECIMAL(38,6)
+    * between the levels; a double partial re-casts to the same decimal.
+    */
+  private val table: Seq[Agg] = Seq(
+    Agg(CodeNPatients, patientIf(lit(true)), countSum, perPatient = true),
+    Agg(CodeNOccurrences, count(lit(1)), countSum),
+    Agg(ValuesNPatients, patientIf(valPresent), countSum, perPatient = true),
+    Agg(ValuesNOccurrences, count(present(lit(1))), countSum),
+    Agg(ValuesNInts, count(when(valPresent && isInt, lit(1))), countSum),
+    Agg(ValuesSum, sum(present(dec(v))), Portable.dsum0),
+    Agg(ValuesSumSqd, sum(present(dec(v * v))), Portable.dsum0),
+    Agg(ValuesMin, min(present(v)), min(_)),
+    Agg(ValuesMax, max(present(v)), max(_)))
+
+  val aggregationNames: Seq[String] = table.map(_.name)
+
+  /** The aggregations [[withMeanStd]] derives mean and std from. */
+  val meanStdAggregations: Seq[String] = Seq(ValuesNOccurrences, ValuesSum, ValuesSumSqd)
+
+  /** Fold `partials` per `keys` with the reducers of `aggs`. */
+  private def reduce(partials: DataFrame, keys: Seq[Column], aggs: Seq[Agg]): DataFrame = {
+    val reduced = aggs.map(a => a.reducer(col(a.name)).as(a.name))
+    partials.groupBy(keys: _*).agg(reduced.head, reduced.tail: _*)
+  }
+
+  /** Aggregate `df` by code (+ modifiers). Ask only for the aggregations
+    * you read: a patient count puts the patient into the level-1 key, and
+    * Catalyst can prune an unread aggregation but not a grouping key.
     *
     * @param summarizeOverAllCodes when true, also emit a single summary row
     *   aggregating across ALL codes, with null group keys — the
     *   `do_summarize_over_all_codes` behavior
-    *   (aggregate_code_metadata.py:364-374). Implemented with `rollup` so
-    *   per-code and grand-total rows come from ONE scan (the reference needs two
-    *   passes); intermediate rollup levels are filtered out via
-    *   `grouping_id` when there are modifier columns.
+    *   (aggregate_code_metadata.py:364-374). Level 1 adds the grouping set
+    *   without code and modifiers, so per-code and grand-total rows come
+    *   from ONE scan and the total counts each patient once; its grouping
+    *   id stays in the level-2 key, apart from a real null code.
     */
   def aggregate(
       df: DataFrame,
@@ -71,33 +99,23 @@ object CodeMetadata {
       codeModifiers: Seq[String] = Nil,
       summarizeOverAllCodes: Boolean = false
   ): DataFrame = {
-    val keys = (Meds.Code +: codeModifiers).map(col)
-    val sel = aggregations.filter { case (n, _) => aggs.contains(n) }
+    val sel = table.filter(a => aggs.contains(a.name))
     require(sel.nonEmpty, s"No valid aggregations among $aggs")
-    val aggCols = sel.map { case (n, c) => c.as(n) }
-    if (!summarizeOverAllCodes) {
-      df.groupBy(keys: _*).agg(aggCols.head, aggCols.tail: _*)
-    } else {
-      // rollup(code, m1, ..., mk): keep only grouping_id == 0 (full key)
-      // and grouping_id == 2^(k+1)-1 (grand total). grouping_id() must be
-      // computed inside the agg select list.
-      val full = 0L
-      val total = (1L << keys.length) - 1
-      val withGid = aggCols :+ grouping_id().as("__gid")
-      df.rollup(keys: _*)
-        .agg(withGid.head, withGid.tail: _*)
-        .filter(col("__gid") === full || col("__gid") === total)
-        .drop("__gid")
-    }
+    val keys = (Meds.Code +: codeModifiers).map(col)
+    val patient = if (sel.exists(_.perPatient)) Seq(col(Meds.PatientId)) else Nil
+    val level1 = patient ++ keys
+    val mapped = sel.map(a => a.mapper.as(a.name))
+    if (!summarizeOverAllCodes) reduce(df.groupBy(level1: _*).agg(mapped.head, mapped.tail: _*), keys, sel)
+    else reduce(df.groupingSets(Seq(level1, patient), level1: _*)
+      .agg(grouping_id().as("__gid"), mapped: _*), keys :+ col("__gid"), sel).drop("__gid")
   }
 
   /** Cross-shard REDUCE over pre-aggregated code-metadata partials — the
-    * reference's explicit reducer stage (aggregate_code_metadata.py maps
-    * each shard, then folds shard outputs with sum/min/max reducers).
-    * One `groupBy(code).agg` normally replaces both stages, but the
-    * explicit reduce matters operationally: INCREMENTAL ingest (merge
-    * yesterday's metadata with today's new shard without rescanning
-    * history) and federated aggregation (per-site partials).
+    * reference's explicit reducer stage, with the reducers [[aggregate]]
+    * folds its own level-1 groups with. It matters operationally:
+    * INCREMENTAL ingest (merge yesterday's metadata with today's new shard
+    * without rescanning history) and federated aggregation (per-site
+    * partials).
     *
     * CONTRACT: partials must come from PATIENT-DISJOINT inputs — the
     * MEDS sharding invariant. The patient-count aggregations reduce by
@@ -114,18 +132,9 @@ object CodeMetadata {
   def mergePartials(partials: Seq[DataFrame], codeModifiers: Seq[String] = Nil): DataFrame = {
     require(partials.nonEmpty, "nothing to merge")
     val merged = partials.reduce(_.unionByName(_))
-    val keys = (Meds.Code +: codeModifiers).map(col)
-    val counts = Set(CodeNPatients, CodeNOccurrences, ValuesNPatients, ValuesNOccurrences, ValuesNInts)
-    val present = merged.columns.filter(aggregationNames.contains)
-    require(present.nonEmpty, "partials carry none of the known aggregation columns")
-    val aggCols = present.map {
-      case n if counts(n)                    => sum(col(n)).cast("long").as(n)
-      case n @ (ValuesSum | ValuesSumSqd)    => sum(dec(col(n))).cast("double").as(n)
-      case n @ ValuesMin                     => min(col(n)).as(n)
-      case n @ ValuesMax                     => max(col(n)).as(n)
-      case n => throw new IllegalStateException(s"no reducer for $n")
-    }
-    merged.groupBy(keys: _*).agg(aggCols.head, aggCols.tail: _*)
+    val known = merged.columns.toSeq.flatMap(n => table.find(_.name == n))
+    require(known.nonEmpty, "partials carry none of the known aggregation columns")
+    reduce(merged, (Meds.Code +: codeModifiers).map(col), known)
   }
 
   /** Derived per-code mean/std from sum, sum_sqd and n_occurrences

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable.{dsum, r6}
+import graft.functions.Portable.{dsum, dsumIf, r6}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import graft.plans.Materialize.PinOps
@@ -56,9 +56,7 @@ object Evaluation {
       .agg(
         sum(col("__p")).as("n_pos"),
         sum(lit(1L) - col("__p")).as("n_neg"),
-        coalesce(
-          sum(when(col("__p") === 1L, col("__rk").cast("decimal(38,6)"))),
-          lit(0).cast("decimal(38,6)")).cast("double").as("__rp"))
+        dsumIf(col("__p") === 1L, col("__rk")).as("__rp"))
     val npD = col("n_pos").cast("double")
     val nnD = col("n_neg").cast("double")
     m.withColumn(
@@ -427,10 +425,7 @@ object Evaluation {
       .agg(
         count(lit(1)).as("n"),
         sum(col("__p")).as("n_pos"),
-        coalesce(
-          sum(when(col("__p") === 1L,
-            r6(prec).cast("decimal(38,6)"))),
-          lit(0).cast("decimal(38,6)")).cast("double").as("__ap"))
+        dsumIf(col("__p") === 1L, r6(prec)).as("__ap"))
       .withColumn(
         "ap",
         when(col("n_pos") > 0, col("__ap") / col("n_pos").cast("double")))

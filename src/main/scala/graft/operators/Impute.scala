@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.Portable.dsumIf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,8 +27,7 @@ object Impute {
       .groupBy(by.map(col): _*)
       .agg(
         count(when(valid, lit(1))).as("__n"),
-        coalesce(sum(when(valid, v.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)"))
-          .cast("double").as("__s"))
+        dsumIf(valid, v).as("__s"))
       .select((by.map(c => col(c).as(s"__k_$c")) :+
         when(col("__n") > 0, col("__s") / col("__n")).as("__mean")): _*)
     // null-SAFE key match: a NULL group is a real group with a real mean

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable.r6
+import graft.functions.Portable.{dsumIf, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -231,8 +231,7 @@ object Rolling {
           .as("__w")): _*)
       .agg(
         count(lit(1)).as("n"),
-        coalesce(sum(when(v.isNotNull && !isnan(v), v.cast("decimal(38,6)"))),
-          lit(0).cast("decimal(38,6)")).cast("double").as("sum_value"))
+        dsumIf(v.isNotNull && !isnan(v), v).as("sum_value"))
       .select((by.map(col) ++ Seq(
         unix_micros(col("__w.start")).as("win_start_us"),
         col("n"), col("sum_value"))): _*)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Mergeable distinct-count sketches (Apache DataSketches HLL, built
-  * into Spark): the approximate, O(1)-state twin of
-  * [[CodeMetadata.mergePartials]]'s exact reducers — for the counts a
+  * into Spark): the approximate, O(1)-state twin of the exact patient
+  * counts that [[CodeMetadata]]'s reducers sum over patient-disjoint
+  * partials — for the counts a
   * 100 TB pipeline cannot afford exactly (distinct patients per code
   * across federated sites, distinct documents per shingle across
   * ingest increments).

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.Portable.{dsum, dsum0, r6}
+import graft.functions.Portable.{dsum, dsum0, dsumIf, r6}
 import graft.plans.Materialize.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -25,10 +25,6 @@ import org.apache.spark.sql.functions._
 object Stats {
 
   private def ok(c: Column): Column = c.isNotNull && !isnan(c)
-
-  /** `Portable.dsum0` over the rows where `p` holds (0.0 when none do). */
-  private def dsumIf(p: Column, e: Column): Column =
-    coalesce(sum(when(p, e.cast("decimal(38,6)"))), lit(0).cast("decimal(38,6)")).cast("double")
 
   /** Sample variance from the raw moments, (s2 / n − mean²) · n/(n−1),
     * clamped at 0 against cancellation.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.Portable.dsumIf
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -116,8 +117,8 @@ object Streaming {
         approx_count_distinct("patient_id").as("code/n_patients~"),
         count(lit(1)).as("code/n_occurrences"),
         count(when(present, lit(1))).as("values/n_occurrences"),
-        coalesce(sum(when(present, v.cast("decimal(38,6)"))), lit(0)).cast("double").as("values/sum"),
-        coalesce(sum(when(present, (v * v).cast("decimal(38,6)"))), lit(0)).cast("double").as("values/sum_sqd"),
+        dsumIf(present, v).as("values/sum"),
+        dsumIf(present, v * v).as("values/sum_sqd"),
         min(when(present, v)).as("values/min"),
         max(when(present, v)).as("values/max")
       )

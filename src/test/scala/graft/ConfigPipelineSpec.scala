@@ -311,6 +311,43 @@ class ConfigPipelineSpec extends SparkSpec {
     assert(state.data.count() == meds.count())
   }
 
+  test("top-level code_modifiers key every code-keyed stage, the metadata fallback included") {
+    import graft.operators.{Filters, Normalize, Outliers}
+    val mods = Seq("unit")
+    // a modifier that splits every code in two
+    val input = meds.withColumn("unit", when(col("numeric_value") > 50, lit("high")).otherwise(lit("low")))
+    val state = ConfigPipeline.run(input,
+      """code_modifiers: [unit]
+        |stages:
+        |  - filter_measurements
+        |  - fit_outlier_detection
+        |  - occlude_outliers
+        |  - fit_normalization
+        |  - fit_vocabulary_indices
+        |  - normalization
+        |stage_configs:
+        |  filter_measurements: {min_patients_per_code: 5}
+        |  occlude_outliers: {stddev_cutoff: 3.0}
+        |""".stripMargin)
+    // the same stages composed by hand; filter_measurements has no fitted
+    // metadata before it, so the run aggregates the data itself
+    val filtered = Filters.filterMeasurements(input,
+      CodeMetadata.aggregate(input, codeModifiers = mods), minPatientsPerCode = Some(5), codeModifiers = mods)
+    val meanStd = Seq(CodeMetadata.ValuesNOccurrences, CodeMetadata.ValuesSum, CodeMetadata.ValuesSumSqd)
+    val occluded = Outliers.occludeOutliers(filtered, CodeMetadata.aggregate(filtered, meanStd, mods), 3.0, mods)
+    val normAggs = Seq(CodeMetadata.CodeNOccurrences, CodeMetadata.CodeNPatients) ++ meanStd
+    val meta = Vocabulary.lexicographicIndices(CodeMetadata.aggregate(occluded, normAggs, mods), mods)
+    val expected = Normalize.normalize(occluded, meta, mods)
+
+    val fitted = state.meta.get
+    assert(fitted.columns.toSeq.take(2) == Seq("code", "unit"))
+    val split = fitted.groupBy("code").agg(count(lit(1)).as("n")).filter(col("n") === 2)
+    assert(split.count() > 0, "no code split by its modifier")
+    assert(fitted.exceptAll(meta).isEmpty && meta.exceptAll(fitted).isEmpty)
+    assert(state.data.count() > 0)
+    assert(state.data.exceptAll(expected).isEmpty && expected.exceptAll(state.data).isEmpty)
+  }
+
   test("each fitted metadata frame equals its lazy aggregate row for row") {
     val emptyMeds = Seq.empty[(Long, Option[java.sql.Timestamp], String, Option[Double])]
       .toDF("patient_id", "time", "code", "numeric_value")

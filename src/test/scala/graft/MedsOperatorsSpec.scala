@@ -85,6 +85,41 @@ class MedsOperatorsSpec extends SparkSpec {
     assert(total(0).getLong(1) == 2) // n_patients over all codes
   }
 
+  test("aggregate and mergePartials key on a nullable code modifier") {
+    // patient 1: HR/bpm 70, 82.5 and a null-code row; patient 2: HR/bpm
+    // without a value, HR/null 90; patient 3: HR/null 60, DOB/null; and
+    // an HR/bpm 40 row without a patient, which counts for no patient
+    val df = Seq[(Option[Long], Option[String], Option[String], Option[Double])](
+      (Some(1L), Some("HR"), Some("bpm"), Some(70.0)),
+      (Some(1L), Some("HR"), Some("bpm"), Some(82.5)),
+      (Some(1L), None, None, Some(5.0)),
+      (Some(2L), Some("HR"), Some("bpm"), None),
+      (Some(2L), Some("HR"), None, Some(90.0)),
+      (Some(3L), Some("HR"), None, Some(60.0)),
+      (Some(3L), Some("DOB"), None, None),
+      (None, Some("HR"), Some("bpm"), Some(40.0))
+    ).toDF("patient_id", "code", "unit", "numeric_value")
+    // code, unit, then the nine aggregations in aggregationNames order
+    val perCode = Set(
+      Row("DOB", null, 1L, 1L, 0L, 0L, 0L, 0.0, 0.0, null, null),
+      Row("HR", "bpm", 2L, 4L, 1L, 3L, 2L, 192.5, 13306.25, 40.0, 82.5),
+      Row("HR", null, 2L, 2L, 2L, 2L, 2L, 150.0, 11700.0, 60.0, 90.0),
+      Row(null, null, 1L, 1L, 1L, 1L, 1L, 5.0, 25.0, 5.0, 5.0))
+    // the all-codes row counts each patient once, and stays apart from
+    // the real (null, null) group
+    val total = Row(null, null, 3L, 8L, 3L, 6L, 5L, 347.5, 25031.25, 5.0, 90.0)
+    val mods = Seq("unit")
+    val direct = CodeMetadata.aggregate(df, codeModifiers = mods)
+    assert(direct.columns.toSeq == Seq("code", "unit") ++ CodeMetadata.aggregationNames)
+    assert(direct.collect().toSet == perCode)
+    assert(CodeMetadata.aggregate(df, codeModifiers = mods, summarizeOverAllCodes = true)
+      .collect().toSet == perCode + total)
+    val shards = Seq(col("patient_id") === 2L, !(col("patient_id") <=> 2L)).map(p => df.filter(p))
+    val merged = CodeMetadata.mergePartials(shards.map(CodeMetadata.aggregate(_, codeModifiers = mods)), mods)
+    assert(merged.schema.map(f => f.name -> f.dataType) == direct.schema.map(f => f.name -> f.dataType))
+    assert(merged.collect().toSet == perCode)
+  }
+
   test("filterMeasurements keeps codes passing thresholds via metadata join") {
     val meta = CodeMetadata.aggregate(fixture)
     val out = Filters.filterMeasurements(fixture, meta, minOccurrencesPerCode = Some(2))

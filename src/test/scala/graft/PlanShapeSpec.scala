@@ -287,14 +287,31 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("metadata-joined operators add no fact-side shuffle") {
-    val meta = graft.operators.CodeMetadata.aggregate(cohort)
-    val out = graft.operators.Outliers.occludeOutliers(cohort, meta, 2.0)
-    // The only shuffle is the per-code stats aggregation on the (tiny)
-    // broadcast side — and column pruning drops meta's countDistinct aggs
-    // (2 exchanges standalone -> 1 here). The fact side reaches the
-    // broadcast join unshuffled.
+    import graft.operators.{CodeMetadata, Outliers}
+    val meta = CodeMetadata.aggregate(cohort)
+    val out = Outliers.occludeOutliers(cohort, meta, 2.0)
+    val outMeanStd = Outliers.occludeOutliers(cohort,
+      CodeMetadata.aggregate(cohort, CodeMetadata.meanStdAggregations), 2.0)
+    // The only shuffles are the per-code stats aggregation's on the (tiny)
+    // broadcast side; the fact side reaches the broadcast join unshuffled.
+    // The nine aggregations group by (code, patient) for their patient
+    // counts first (2 exchanges standalone). Column pruning drops the
+    // patient counts occlusion does not read but not the patient in the
+    // first level's grouping key, so occlusion over all nine keeps both
+    // exchanges; over the three it reads, it groups by code alone (1).
     assert(countShuffles(meta) == 2)
-    assert(countShuffles(out) == 1)
+    assert(countShuffles(out) == 2)
+    assert(countShuffles(outMeanStd) == 1)
+  }
+
+  test("code metadata shuffles once without a patient count and twice with one") {
+    import graft.operators.CodeMetadata._
+    // the default aggregations of fit_outlier_detection group by code
+    // alone; fit_normalization's code/n_patients first groups by (code,
+    // patient), then by code
+    val outliers = Seq(ValuesNOccurrences, ValuesSum, ValuesSumSqd)
+    assert(countShuffles(aggregate(cohort, outliers)) == 1)
+    assert(countShuffles(aggregate(cohort, Seq(CodeNOccurrences, CodeNPatients) ++ outliers)) == 2)
   }
 
   test("diversity indices reduce in exactly two exchanges") {

@@ -51,6 +51,7 @@ class PortableSpec extends SparkSpec {
     // pattern -> the only files allowed to contain it
     val homes: Seq[(scala.util.matching.Regex, Set[java.nio.file.Path])] = Seq(
       """def dsum\(|def r6\(|val r6 =""".r -> Set(portable, shared),
+      """def dsumIf\(""".r -> Set(portable),
       """\* 1000000(\.0)? \+ 0\.5\)""".r -> Set(portable),
       """CAST\(sum\(CAST\([^()]* AS DECIMAL\(38,6\)\)\) AS DOUBLE\)""".r -> Set(portable),
       """CAST\(coalesce\(sum\(CAST\([^()]* AS DECIMAL\(38,6\)\)\), 0\) AS DOUBLE\)""".r -> Set(portable),
